@@ -1,12 +1,12 @@
 #!/usr/bin/env python3
-"""Chip-pipeline benchmark: one command, four workloads.
+"""Chip-pipeline benchmark: one command, two workloads.
 
-    python3 perfbench/run.py --workload records --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload ingest_stream --seed 1 --seconds 10 --trace 0
 
 Run from the repository root. The run writes its seeded inputs (timed as
 `setup_s`, median of three set-ups), starts a local Spark session sized
 from `nproc` and MemTotal, runs one untimed reference pass that is checked
-against an independent numpy computation, then repeats passes for
+against an independent numpy computation, then repeats timed passes for
 `--seconds` and checks each pass's output digest against the reference.
 
 --trace 0 prints the end-to-end metrics; --trace 1 alternates untraced and
@@ -315,6 +315,7 @@ def main(argv=None) -> int:
             t, metrics, spans = traced(w, spark, seconds)
             if metrics:
                 metrics["session.start_s"] = start_s
+                metrics["session.peak_rss_mb"] = tree_peak_rss_mb(os.getpid())
             out_dir = os.path.join(ROOT, ".bench_out")
             os.makedirs(out_dir, exist_ok=True)
             with open(os.path.join(out_dir, f"spans_{args.workload}_{args.seed}.json"), "w") as fh:
@@ -323,7 +324,6 @@ def main(argv=None) -> int:
             t, metrics = measure(w, spark, seconds)
             if metrics:
                 metrics["setup_s"] = q(setups)
-                metrics["peak_rss_mb"] = tree_peak_rss_mb(os.getpid())
     finally:
         if spark is not None:
             stop_session(spark)

@@ -20,6 +20,21 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
     SPEC = json.load(fh)
 
+# per-layer counters each workload's traced pass must move off zero, and
+# counters of layers it does not run, which must stay zero
+LAYER_WORK = {
+    "ingest_stream": (
+        ["density.jobs", "spatial_join.jobs", "asof.jobs", "validity.jobs", "chips.jobs",
+         "checkpoint.jobs", "chips.decodes", "checkpoint.bytes_written", "chips.cpu_s"],
+        ["knn.jobs", "knn.candidate_pairs"],
+    ),
+    "point_joins": (
+        ["spatial_join.jobs", "spatial_join.rows_out", "knn.jobs", "knn.candidate_pairs",
+         "knn.cpu_s"],
+        ["density.jobs", "asof.jobs", "chips.decodes", "checkpoint.jobs"],
+    ),
+}
+
 
 def run(*args, cwd=ROOT, timeout=300):
     return subprocess.run(
@@ -44,13 +59,17 @@ def test_smoke_emits_every_metric(workload, trace):
         assert isinstance(got["value"], (int, float))
     if not trace:
         assert all(out["metrics"][m["name"]]["value"] > 0 for m in want)
+    else:
+        busy, idle = LAYER_WORK[workload]
+        assert [k for k in busy if not out["metrics"][k]["value"] > 0] == []
+        assert [k for k in idle if out["metrics"][k]["value"] != 0] == []
 
 
 def test_refuses_to_run_without_the_package(tmp_path):
     shutil.copytree(os.path.join(ROOT, "perfbench"), tmp_path / "perfbench",
                     ignore=shutil.ignore_patterns("__pycache__"))
     shutil.copy(os.path.join(ROOT, "BENCHMARK.json"), tmp_path)
-    p = run("--workload", "records", "--seed", "1", "--seconds", "1", "--trace", "0",
+    p = run("--workload", SPEC["workloads"][0]["name"], "--seed", "1", "--seconds", "1", "--trace", "0",
             cwd=tmp_path, timeout=60)
     assert p.returncode != 0
     assert p.stdout.strip() == ""
