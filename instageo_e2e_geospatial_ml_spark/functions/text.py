@@ -7,7 +7,7 @@ oracle (see plans/driver_queries.py).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 
@@ -18,18 +18,92 @@ def tokens(text: Column | str) -> Column:
 
 
 def spread_input(df):
-    """Spread rows across the cluster before an explode-heavy stage
-    (operators/dedup._ensure_parallelism twin — guide §2.5 'input skew':
-    a small one-file parquet table scans as ONE task, but tokenize +
-    explode multiplies per-row work ~100×, making that task the whole
-    job's critical path). No-op when the scan already has enough
-    partitions — the 100 TB case, where an extra shuffle would be waste."""
+    """Spread rows across the cluster before an explode-heavy or
+    compute-heavy stage (guide §2.5 'input skew': a small one-file
+    parquet table scans as ONE task, but tokenize + explode multiplies
+    per-row work ~100×, making that task the whole job's critical path).
+    No-op when the scan already has enough partitions — the 100 TB case,
+    where an extra shuffle would be waste. Sizing uses inputFiles() (cheap
+    plan metadata) for file-backed frames; a non-file-backed frame
+    (createDataFrame, a post-join intermediate) has an empty inputFiles()
+    list, so those fall back to df.rdd.getNumPartitions()."""
     target = df.sparkSession.sparkContext.defaultParallelism
     files = df.inputFiles()
     current = len(files) if files else df.rdd.getNumPartitions()
     if current < target:
         return df.repartition(target)
     return df
+
+
+def ranged_prefix(
+    df,
+    order_cols,
+    out_col: str,
+    weight: str | None = None,
+    group_cols=(),
+    n_buckets: int | None = None,
+):
+    """Add `out_col`: the inclusive running row count (weight=None) or
+    running sum of the integer column `weight`, within `group_cols`, in
+    `order_cols` order — `row_number()` / `sum(weight) over (partition by
+    group_cols order by order_cols rows unbounded preceding)` WITHOUT a
+    single-task sort of a whole group:
+    (1) range-repartition by (group_cols, order_cols) into `n_buckets`
+    contiguous key ranges and tag each row with its bucket; (2) ONE tiny
+    per-(group, bucket) totals job (≤ n_buckets rows per group to the
+    driver); (3) broadcast the cumulative offsets back and run the prefix
+    as a window PARTITIONED by (group_cols, bucket), so every task sorts
+    ≤ N/n_buckets rows. The exclusive forms are the result minus the
+    row's weight (minus 1 for a 0-based row number).
+
+    Identical values to the global window whenever the ordering is total
+    (ties may land in either of two adjacent buckets otherwise — pass a
+    tie-breaking id column to make it total). The bucketed frame is a
+    lazy localCheckpoint, so both phases read ONE bucket assignment (two
+    independently planned range exchanges may sample different bounds)
+    and its cache lives exactly as long as the returned frame."""
+    sess = df.sparkSession
+    if n_buckets is None:
+        n_buckets = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
+    groups = list(group_cols)
+    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
+    ranged = (
+        df.repartitionByRange(n_buckets, *[F.col(g).asc() for g in groups], *cols)
+        .withColumn("_b", F.spark_partition_id())
+        .localCheckpoint(eager=False)
+    )
+    step = F.count(F.lit(1)) if weight is None else F.sum(weight)
+    totals = ranged.groupBy(*groups, "_b").agg(step.alias("_t")).collect()
+    # buckets are range-ordered by (groups, order), so within one group
+    # bucket-id order IS key order
+    acc: dict = {}
+    offsets = []
+    for r in sorted(totals, key=lambda r: r["_b"]):
+        g = tuple(r[c] for c in groups)
+        offsets.append((*g, r["_b"], acc.get(g, 0)))
+        acc[g] = acc.get(g, 0) + (r["_t"] or 0)
+    off_names = [f"_g{i}" for i in range(len(groups))]
+    off_ddl = [
+        f"{n} {ranged.schema[g].dataType.simpleString()}"
+        for n, g in zip(off_names, groups)
+    ]
+    off_ddl += ["_ob int", "_off long"]
+    off_df = sess.createDataFrame(offsets, ", ".join(off_ddl))
+    on = F.col("_b") == F.col("_ob")
+    for n, g in zip(off_names, groups):
+        on = on & F.col(g).eqNullSafe(F.col(n))
+    w = Window.partitionBy(*groups, "_b").orderBy(*cols)
+    if weight is None:
+        running = F.row_number().over(w)
+    else:
+        running = F.sum(weight).over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
+        )
+    return (
+        ranged.join(F.broadcast(off_df), on)
+        .withColumn(out_col, F.col("_off") + running)
+        .drop("_b", "_ob", "_off", *off_names)
+    )
 
 
 def token_count(text: Column | str) -> Column:
@@ -222,43 +296,6 @@ def repetition_scores(
     )
 
 
-def ranged_row_number(df, order_cols, out_col: str = "_rn", n_buckets: int | None = None):
-    """Global row_number() by `order_cols` WITHOUT a single-task global
-    sort — the pack_token_shards two-phase machinery in reusable form:
-    (1) range-repartition into `n_buckets` contiguous key ranges, (2) ONE
-    tiny per-bucket count job (≤ n_buckets rows to the driver), (3)
-    broadcast the cumulative bucket offsets back and number rows with a
-    window PARTITIONED by bucket, so every task sorts ≤ N/n_buckets rows.
-    Identical values to `row_number() over (order by order_cols)` whenever
-    the ordering is total (ties may land in either of two adjacent buckets
-    otherwise — pass a tie-breaking id column to make it total)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    sess = df.sparkSession
-    if n_buckets is None:
-        n_buckets = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    ranged = (
-        df.repartitionByRange(n_buckets, *cols)
-        .withColumn("_b", F.spark_partition_id())
-        .persist()
-    )
-    counts = ranged.groupBy("_b").agg(F.count(F.lit(1)).alias("_n")).collect()
-    acc = 0
-    offsets = []
-    for r in sorted(counts, key=lambda r: r["_b"]):
-        offsets.append((r["_b"], acc))
-        acc += r["_n"]
-    off_df = sess.createDataFrame(offsets or [(0, 0)], "_b int, _off long")
-    w = Window.partitionBy("_b").orderBy(*cols)
-    return (
-        ranged.join(F.broadcast(off_df), "_b")
-        .withColumn(out_col, (F.row_number().over(w) + F.col("_off")).cast("long"))
-        .drop("_b", "_off")
-    )
-
-
 def pack_token_shards(
     docs,
     budget_tokens: int,
@@ -272,48 +309,20 @@ def pack_token_shards(
     shard holds ≥ budget tokens except the last (greedy packing, the A8
     pattern applied to token budgets).
 
-    Hierarchical (two-phase) prefix sum — NO global single-partition
-    window: (1) range-repartition by id into `n_buckets` contiguous
-    ranges and take ONE tiny per-bucket token-sum job (≤ n_buckets rows
-    to the driver); (2) broadcast the cumulative bucket offsets back and
-    run the running sum as a window PARTITIONED by bucket, so every task
-    sorts ≤ N/n_buckets rows. Exactly the same global semantics as the
-    textbook `sum() over (order by id)` (the q48 oracle pins the hash);
-    the compact (id, n_tokens, bucket) projection is persisted so both
-    phases see one consistent bucket assignment."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    sess = docs.sparkSession
-    if n_buckets is None:
-        n_buckets = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
+    The running total is ranged_prefix — NO global single-partition
+    window, every task sorts ≤ N/n_buckets rows — with exactly the same
+    global semantics as the textbook `sum() over (order by id)` (the q48
+    oracle pins the hash)."""
     out = spread_input(docs).select(id_col, token_count(text_col).alias("n_tokens"))
-    ranged = (
-        out.repartitionByRange(n_buckets, F.col(id_col).asc())
-        .withColumn("_b", F.spark_partition_id())
-        .persist()
+    cum = ranged_prefix(
+        out, [F.col(id_col).asc()], "_cum", weight="n_tokens", n_buckets=n_buckets
     )
-    totals = ranged.groupBy("_b").agg(F.sum("n_tokens").alias("_t")).collect()
-    acc = 0
-    offsets = []
-    for r in sorted(totals, key=lambda r: r["_b"]):
-        offsets.append((r["_b"], acc))
-        acc += r["_t"]
-    off_df = sess.createDataFrame(offsets or [(0, 0)], "_b int, _off long")
-    w = Window.partitionBy("_b").orderBy(F.col(id_col).asc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return (
-        ranged.join(F.broadcast(off_df), "_b")
-        .withColumn(
-            "shard_id",
-            F.floor(
-                (F.col("_off") + F.sum("n_tokens").over(w) - F.col("n_tokens"))
-                / F.lit(float(budget_tokens))
-            ).cast("long"),
-        )
-        .drop("_b", "_off")
-    )
+    return cum.withColumn(
+        "shard_id",
+        F.floor(
+            (F.col("_cum") - F.col("n_tokens")) / F.lit(float(budget_tokens))
+        ).cast("long"),
+    ).drop("_cum")
 
 
 def chunk_documents(
@@ -605,7 +614,7 @@ def build_vocab_encode(
     (id, pos, tok_id) with pos the 1-based token position.
 
     Plan: token count (one shuffle); the id ranking is the range-
-    partitioned two-phase row number (ranged_row_number — per-bucket
+    partitioned two-phase row number (ranged_prefix — per-bucket
     window + broadcast offsets), so a web-scale vocabulary (10^7-8
     distinct tokens) never funnels through one sort task (round-8
     conversion of the documented vocab-rank watch item); then a
@@ -619,8 +628,8 @@ def build_vocab_encode(
     ).filter(F.col("tok") != "")
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     kept = counts.filter(F.col("cnt") >= min_count)
-    vocab = ranged_row_number(
-        kept, [F.col("cnt").desc(), F.col("tok").asc()], out_col="tok_id"
+    vocab = ranged_prefix(
+        kept, [F.col("cnt").desc(), F.col("tok").asc()], "tok_id"
     )
     encoded = (
         toks.join(vocab.select("tok", "tok_id"), "tok", "left")
@@ -682,52 +691,24 @@ def mix_by_token_budget(
 
     Emits (source, doc_id, n_tokens, cum_before) for the selected docs.
 
-    Scale: the per-source running sum uses the pack_token_shards
-    two-phase form generalized to (source, rank-range) buckets — ONE
-    tiny per-bucket totals job, broadcast cumulative offsets, then a
-    window partitioned by (source, bucket): no task ever sorts a whole
-    source, even when one source dominates the corpus. The budget spec
-    broadcasts.
+    Scale: the per-source running sum is ranged_prefix grouped by
+    source — ONE tiny per-(source, range) totals job, broadcast
+    cumulative offsets, then a window partitioned by (source, range): no
+    task ever sorts a whole source, even when one source dominates the
+    corpus. The budget spec broadcasts.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    sess = docs.sparkSession
-    if n_buckets is None:
-        n_buckets = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
     d = docs.select(
         F.col(source_col).alias("source"),
         F.col(id_col).alias("doc_id"),
         token_count(text_col).alias("n_tokens"),
         F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":mix"))).alias("_r"),
     )
-    ranged = (
-        d.repartitionByRange(
-            n_buckets, F.col("source").asc(), F.col("_r").asc(), F.col("doc_id").asc()
-        )
-        .withColumn("_b", F.spark_partition_id())
-        .persist()
-    )
-    totals = ranged.groupBy("source", "_b").agg(
-        F.sum("n_tokens").alias("_t")
-    ).collect()
-    acc: dict = {}
-    offsets = []
-    for r in sorted(totals, key=lambda r: (r["source"], r["_b"])):
-        offsets.append((r["source"], r["_b"], acc.get(r["source"], 0)))
-        acc[r["source"]] = acc.get(r["source"], 0) + r["_t"]
-    off_df = sess.createDataFrame(
-        offsets or [("", 0, 0)], "source string, _b int, _off long"
-    )
-    w = Window.partitionBy("source", "_b").orderBy(
-        F.col("_r").asc(), F.col("doc_id").asc()
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    cum_before = (
-        F.col("_off") + F.sum("n_tokens").over(w) - F.col("n_tokens")
+    cum = ranged_prefix(
+        d, [F.col("_r").asc(), F.col("doc_id").asc()], "_cum",
+        weight="n_tokens", group_cols=["source"], n_buckets=n_buckets,
     )
     return (
-        ranged.join(F.broadcast(off_df), ["source", "_b"])
-        .withColumn("cum_before", cum_before.cast("long"))
+        cum.withColumn("cum_before", F.col("_cum") - F.col("n_tokens"))
         .join(F.broadcast(budgets), "source")
         .filter(F.col("cum_before") < F.col("budget_tokens"))
         .select("source", "doc_id", "n_tokens", "cum_before")
@@ -751,19 +732,11 @@ def length_grouped_batches(
     batching exists to save. Emits (bucket, batch_id, n_docs,
     max_tokens, sum_tokens, pad_waste).
 
-    Scale: the in-band row number uses the same two-phase form as
-    mix_by_token_budget — range-bucket, count the tiny per-range
-    totals, broadcast cumulative offsets, window per (band, range) —
-    so no task ever sorts a whole length band (bands are few and fat
-    by construction, the worst window-skew shape). Final rollup is a
+    Scale: the in-band row number is ranged_prefix grouped by band, so
+    no task ever sorts a whole length band (bands are few and fat by
+    construction, the worst window-skew shape). Final rollup is a
     map-side-combinable groupBy.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    sess = docs.sparkSession
-    if n_buckets is None:
-        n_buckets = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
     d = docs.select(
         F.col(id_col).alias("doc_id"),
         token_count(text_col).alias("n_tokens"),
@@ -771,33 +744,10 @@ def length_grouped_batches(
     ).withColumn(
         "bucket", F.expr(f"n_tokens div {bucket_width}").cast("long")
     )
-    ranged = (
-        d.repartitionByRange(
-            n_buckets, F.col("bucket").asc(), F.col("_r").asc(), F.col("doc_id").asc()
-        )
-        .withColumn("_b", F.spark_partition_id())
-        .persist()
-    )
-    counts = ranged.groupBy("bucket", "_b").agg(
-        F.count(F.lit(1)).alias("_c")
-    ).collect()
-    acc: dict = {}
-    offsets = []
-    for r in sorted(counts, key=lambda r: (r["bucket"], r["_b"])):
-        offsets.append((r["bucket"], r["_b"], acc.get(r["bucket"], 0)))
-        acc[r["bucket"]] = acc.get(r["bucket"], 0) + r["_c"]
-    off_df = sess.createDataFrame(
-        offsets or [(0, 0, 0)], "bucket long, _b int, _off long"
-    )
-    w = Window.partitionBy("bucket", "_b").orderBy(
-        F.col("_r").asc(), F.col("doc_id").asc()
-    )
-    rn = F.col("_off") + F.row_number().over(w) - 1
-    batched = (
-        ranged.join(F.broadcast(off_df), ["bucket", "_b"])
-        .withColumn("_rn", rn.cast("long"))
-        .withColumn("batch_id", F.expr(f"_rn div {batch_size}"))
-    )
+    batched = ranged_prefix(
+        d, [F.col("_r").asc(), F.col("doc_id").asc()], "_rn",
+        group_cols=["bucket"], n_buckets=n_buckets,
+    ).withColumn("batch_id", F.expr(f"(_rn - 1) div {batch_size}"))
     return batched.groupBy("bucket", "batch_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.max("n_tokens").alias("max_tokens"),

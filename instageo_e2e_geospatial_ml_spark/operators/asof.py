@@ -147,7 +147,8 @@ def asof_pick_keyed(
 
     Scale notes: the rank window partitions by `key` (candidate-key
     granularity, the operator's contract); a pathologically hot key can
-    be range-split with the pack_token_shards two-phase machinery. The
+    be range-split with functions/text.ranged_prefix (range buckets +
+    broadcast offsets). The
     summary join is an equi-join on (key, bucket) — AQE broadcasts the
     summary side when it is genuinely small."""
     tol_us = (tolerance_days * 24 * 60 + tolerance_minutes) * 60 * 1_000_000

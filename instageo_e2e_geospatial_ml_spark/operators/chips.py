@@ -25,10 +25,7 @@ Scale properties:
     cells naturally — no explicit salting needed (a single cell's work is
     bounded by chip_size² × bands regardless of observation count; only
     the collect_list of a pathologically popular cell can skew, which a
-    pre-aggregation cap would bound);
-  * the (granule → cells) map is broadcast when small (default); set
-    broadcast_cells=False to shuffle-join instead at extreme catalog
-    sizes.
+    pre-aggregation cap would bound).
 """
 
 from __future__ import annotations
@@ -246,13 +243,11 @@ def extract_chips(
     band_order: tuple[str, ...] = ("B02", "B03", "B04", "B8A", "B11", "B12"),
     mask_band: str = "Fmask",
     no_data_value: int = HLS_NDV,
-    broadcast_cells: bool = True,
     transform_overrides: dict | None = None,
     label_band: str | None = None,
     data_source: str = "HLS",
     payload_source: str = "rows",
     n_salt: int = 0,  # obsolete (kept for API compat): cell grouping bounds skew structurally
-    max_wants_granules: int = 200_000,
     decode_counter=None,
 ) -> DataFrame:
     """records(stac_items_str, granules, x, y, date, label) × images
@@ -274,12 +269,6 @@ def extract_chips(
     payloads directly with pyarrow (vectorized-reader pattern — pixels
     never cross the JVM↔Python socket; requires a file-backed table).
     Both produce identical output.
-
-    max_wants_granules is obsolete (kept for API compat): the 'files'
-    path no longer driver-collects its wants map — it materializes
-    `wants` as a granule-sorted scratch parquet and each task does a
-    pyarrow filtered read for only the granules its files contain, so
-    both paths scale to any granule count.
     """
     mask_types = list(mask_types)
     overrides = dict(transform_overrides or {})
@@ -348,11 +337,9 @@ def extract_chips(
         F.col("cy").alias("w_cy"),
         F.posexplode("granules").alias("t", "granule_id"),
     )
-    wants = cells_small.groupBy("granule_id").agg(
+    wants = F.broadcast(cells_small.groupBy("granule_id").agg(
         F.collect_list(F.struct("w_sis", "w_cx", "w_cy", "t")).alias("wants")
-    )
-    if broadcast_cells:
-        wants = F.broadcast(wants)
+    ))
 
     def _slice_one(rows_out: list, image_id: str, buf: bytes, w: int, h: int,
                    fmt: str, wants_list) -> None:

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint, tokens
+from ..functions.text import fingerprint, spread_input, tokens
 
 
 def exact_dedup(
@@ -47,30 +47,9 @@ def keep_min_per_key(df: DataFrame, key_col: str, id_col: str = "doc_id") -> Dat
     return df.join(keepers, [key_col, id_col], "left_semi")
 
 
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Spread rows across the cluster before an explode-heavy stage.
-
-    A small input (one parquet file) scans as ONE task, but the shingle /
-    hash explode multiplies per-row work ~100×, so that one task becomes
-    the whole job's critical path. No-op when the scan already has enough
-    partitions — the 100 TB case, where adding a shuffle here would be
-    pure waste. Sizing uses inputFiles() (cheap plan metadata) for
-    file-backed frames; a non-file-backed frame (createDataFrame, a
-    post-join intermediate) has an empty inputFiles() list, so for those
-    we fall back to df.rdd.getNumPartitions() — the RDD-conversion cost
-    only hits the in-memory path, and it avoids an unconditional shuffle
-    of frames that are already well spread."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    current = len(files) if files else df.rdd.getNumPartitions()
-    if current < target:
-        return df.repartition(target)
-    return df
-
-
 def shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Word n-gram shingles, exploded to (doc, shingle) rows."""
-    docs = _ensure_parallelism(docs)
+    docs = spread_input(docs)
     t = tokens(text_col)
     parts = [F.element_at(F.col("_toks"), F.col("_i") + i) for i in range(n)]
     return (
@@ -201,7 +180,7 @@ def simhash(
     """SimHash over whitespace tokens: per-bit ±1 votes from a 16-bit md5
     prefix per token → (doc_id, simhash)."""
     tok = (
-        _ensure_parallelism(docs).select(id_col, F.explode(tokens(text_col)).alias("tok"))
+        spread_input(docs).select(id_col, F.explode(tokens(text_col)).alias("tok"))
         .withColumn("th", F.conv(F.substring(F.md5("tok"), 1, 4), 16, 10).cast("long"))
     )
     votes = (
@@ -429,7 +408,7 @@ def winnow_fingerprints(
 
 def shingles_with_pos(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Word n-gram shingles keeping the 1-based start position `_i`."""
-    docs = _ensure_parallelism(docs)
+    docs = spread_input(docs)
     t = tokens(text_col)
     parts = [F.element_at(F.col("_toks"), F.col("_i") + i) for i in range(n)]
     return (

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import spread_input
+
 
 def _quant(col: Column) -> Column:
     """element → round(double(element)*1000) as int64 (engine-portable)."""
@@ -53,15 +55,6 @@ def _exact_matmul(a, b):
     if ma * mb * a.shape[1] < (1 << 53):
         return (a.astype(np.float64) @ b.astype(np.float64)).astype(np.int64)
     return a @ b
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread a small single-file scan across the cluster before a
-    compute-heavy kernel (a 1-row-group parquet file scans as ONE task).
-    No-op when the scan already has enough partitions — the 100 TB case."""
-    from ..functions.text import spread_input
-
-    return spread_input(df)
 
 
 def _collect_id_matrix(df: DataFrame, id_col: str, vec_col: str, cap: int | None):
@@ -180,7 +173,7 @@ def brute_force_topk(
                 out_d.extend(col[sel])
             yield pd.DataFrame({qid: out_q, pid: out_p, "dot": out_d})
 
-    cand = _spread(corpus.select(pid, pvec)).mapInPandas(
+    cand = spread_input(corpus.select(pid, pvec)).mapInPandas(
         score, f"{qid} long, {pid} long, dot long"
     )
     w = Window.partitionBy(qid).orderBy(F.col("dot").desc(), F.col(pid).asc())
@@ -270,7 +263,7 @@ def lsh_buckets(
             )
 
     id_type = dict(vecs.dtypes)[id_col]
-    return _spread(vecs.select(id_col, vec_col)).mapInPandas(
+    return spread_input(vecs.select(id_col, vec_col)).mapInPandas(
         kernel, f"{id_col} {id_type}, bucket long"
     )
 
@@ -357,7 +350,7 @@ def lsh_topk(
         yield _emit_topk(acc, q_ids, qid, pid, k)
 
     return _topk_scored_candidates(
-        _spread(corpus.select(pid, pvec)), kernel, qid, pid, k
+        spread_input(corpus.select(pid, pvec)), kernel, qid, pid, k
     )
 
 
@@ -546,7 +539,7 @@ def ivf_topk(
             yield _emit_topk(acc, q_ids, qid, pid, k)
 
         return _topk_scored_candidates(
-            _spread(corpus.select(pid, pvec)), kernel, qid, pid, k
+            spread_input(corpus.select(pid, pvec)), kernel, qid, pid, k
         )
 
     # corpus side: top-1 centroid by (cdot desc, cid asc) via max(struct)
@@ -607,7 +600,7 @@ def train_centroids(
         (TakeOrderedAndProject), not a global sort;
       * assign + update, fused (guide §4.2): the ≤ k centroid rows are
         collected each round (bounded-scalar driver contract, the
-        pack_token_shards precedent) and broadcast as an int64 matrix;
+        ranged_prefix totals precedent) and broadcast as an int64 matrix;
         ONE numpy pass over the corpus computes argmax(2·v·c − |c|²)
         per batch with an exact matmul (ties → smallest cid, identical
         to max(struct(score, −cid))) AND accumulates the per-(cluster,
@@ -650,7 +643,7 @@ def train_centroids(
     sc = vecs.sparkSession.sparkContext
     for _ in range(n_iters):
         # ≤ k tiny rows per round — the bounded-scalar driver contract
-        # (the pack_token_shards precedent). Collecting them lets the
+        # (the ranged_prefix totals precedent). Collecting them lets the
         # assign+partial-update run as ONE numpy pass over the corpus
         # (guide §4.2) instead of a crossJoin of per-row HOF expressions:
         # score = 2·v·c − |c|² via one exact matmul per batch, partial

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import ranged_prefix
+
 
 def salted_join(
     fact: DataFrame,
@@ -87,50 +89,27 @@ def range_split_points(
     table-maintenance job wants for write_clustered file boundaries).
 
     No global-order window: (1) compress to (value, cnt); (2)
-    range-repartition the compressed values, ONE tiny per-partition
-    total job to the driver (hierarchical prefix sum — the
-    pack_token_shards pattern, ≤ n_buckets rows collected); (3)
-    per-partition cumulative window + broadcast offsets give every
-    value its exact global cumulative count; (4) broadcast the
-    n_parts-1 target ranks, keep each target's smallest qualifying
-    value. Ties and duplicate-heavy columns are handled by the
+    functions/text.ranged_prefix gives every value its exact global
+    cumulative count (ONE tiny per-bucket totals job, ≤ n_buckets rows
+    collected, then a per-bucket window + broadcast offsets); (3)
+    broadcast the n_parts-1 target ranks, keep each target's smallest
+    qualifying value. Ties and duplicate-heavy columns are handled by the
     compression — ranks are of the sorted multiset, deterministic.
 
     Returns (split_idx, target_rank, split_value, cum_at_split):
     cum_at_split is the cumulative count through the boundary value
     (== target_rank only when the boundary value is not repeated past
     the target). The result is materialized eagerly (n_parts-1 rows —
-    it exists to be collected into a partitioner/DDL anyway), which
-    also lets the intermediate cache be released before returning."""
+    it exists to be collected into a partitioner/DDL anyway), so the
+    returned frame holds no reference to the bucketed intermediate."""
     sess = df.sparkSession
-    if n_buckets is None:
-        n_buckets = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
-    from pyspark.sql import Window
-
     vals = df.groupBy(F.col(value_col).alias("v")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    ranged = (
-        vals.repartitionByRange(n_buckets, F.col("v").asc())
-        .withColumn("_b", F.spark_partition_id())
-        .persist()
+    cum = ranged_prefix(
+        vals, [F.col("v").asc()], "cum", weight="cnt", n_buckets=n_buckets
     )
-    totals = ranged.groupBy("_b").agg(F.sum("cnt").alias("_t")).collect()
-    acc = 0
-    offsets = []
-    for r in sorted(totals, key=lambda r: r["_b"]):
-        offsets.append((r["_b"], acc))
-        acc += r["_t"]
-    n_total = acc
-    off_df = sess.createDataFrame(offsets or [(0, 0)], "_b int, _off long")
-    w = (
-        Window.partitionBy("_b")
-        .orderBy(F.col("v").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = ranged.join(F.broadcast(off_df), "_b").withColumn(
-        "cum", F.col("_off") + F.sum("cnt").over(w)
-    )
+    n_total = cum.agg(F.max("cum")).first()[0] or 0
     targets = sess.createDataFrame(
         [
             (i, (i * n_total + n_parts - 1) // n_parts)
@@ -138,16 +117,15 @@ def range_split_points(
         ],
         "split_idx long, target_rank long",
     )
-    out = (
+    rows = (
         cum.join(F.broadcast(targets), F.col("cum") >= F.col("target_rank"))
         .groupBy("split_idx", "target_rank")
         .agg(
             F.min("v").alias("split_value"),
             F.min("cum").alias("cum_at_split"),
         )
+        .collect()
     )
-    rows = out.collect()
-    ranged.unpersist()
     return sess.createDataFrame(
         rows or [],
         "split_idx long, target_rank long, split_value long, "

@@ -15153,7 +15153,7 @@ def q316_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel plants the near-dups.
 
     Positions come from the range-partitioned two-phase row number
-    (functions/text.ranged_row_number — the pack_token_shards machinery),
+    (functions/text.ranged_prefix),
     NOT a global Window.orderBy: SNM's defining sort no longer runs as
     one data-sized task (VERDICT r7 #1). Cross-bucket ±d pairs need no
     special casing — positions are global and the neighborhood joins are
@@ -15174,9 +15174,9 @@ def q316_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
             "skey"
         ),
     )
-    from ..functions.text import ranged_row_number
+    from ..functions.text import ranged_prefix
 
-    ordered = ranged_row_number(keyed, ["skey", "id"], out_col="pos")
+    ordered = ranged_prefix(keyed, ["skey", "id"], "pos")
     pairs = None
     for d in (1, 2):
         nxt = ordered.select(

@@ -52,25 +52,29 @@ class ChipPipelineConfig:
 
 
 def build_records(
-    obs: DataFrame, catalog: DataFrame, cfg: ChipPipelineConfig, persist_obs: bool = True
+    obs: DataFrame, catalog: DataFrame, cfg: ChipPipelineConfig
 ) -> DataFrame:
     """observations × granule catalog → valid records with granule sets.
 
     The prepared obs table feeds three branches (temporal expansion, the
-    PIP join, the final re-join); persist_obs caches it once instead of
-    re-running the MGRS UDF + density filter per branch (at warehouse
-    scale this would be a checkpointed table instead of an in-session
-    cache). The as-of pick runs without the null-preserving join-back
-    (validity_filter drops incomplete sequences anyway) and with its
-    shuffle aligned on obs_id so the rank window and the per-obs
-    regroup share one exchange.
+    PIP join, the final re-join); a localCheckpoint materializes it once
+    instead of re-running the MGRS UDF + density filter per branch. It is
+    eager because the branches' stages run concurrently and would race a
+    lazy checkpoint's lineage truncation. The checkpoint lives exactly as
+    long as the returned frame (no cache entry outlives a micro-batch of
+    run_chip_pipeline_streaming), and its truncated lineage pins obs_id:
+    a monotonically_increasing_id can never be recomputed differently for
+    one branch. The as-of pick runs
+    without the null-preserving join-back (validity_filter drops
+    incomplete sequences anyway) and with its shuffle aligned on obs_id
+    so the rank window and the per-obs regroup share one exchange.
     """
     o = normalize_dates(obs, shift_to_month_start=cfg.shift_to_month_start)
     o = assign_tiles(o)
     o = density_filter(o, cfg.min_count, keep_counts=False)
-    o = o.withColumn("obs_id", F.monotonically_increasing_id())
-    if persist_obs:
-        o = o.persist()
+    o = o.withColumn("obs_id", F.monotonically_increasing_id()).localCheckpoint(
+        eager=True
+    )
 
     steps = expand_temporal_steps(
         o, num_steps=cfg.num_steps, temporal_step=cfg.temporal_step
@@ -134,7 +138,8 @@ def run_chip_pipeline(
     )
     if checkpoint is not None:
         checkpoint.append(chips, metrics_cols=["valid_px", "n_label_px"])
-        return checkpoint.read()
+        if checkpoint.exists():  # else nothing committed yet: chips is empty
+            return checkpoint.read()
     return chips
 
 

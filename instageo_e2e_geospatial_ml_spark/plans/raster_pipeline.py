@@ -41,7 +41,13 @@ def run_raster_pipeline(
         F.col(date_col).alias("date"),
         F.lit(0).alias("label"),
     )
-    o = assign_tiles(obs).withColumn("obs_id", F.monotonically_increasing_id()).persist()
+    # eager localCheckpoint, as in pipeline.build_records: one obs_id per
+    # cell across all three branches, released with the returned frame
+    o = (
+        assign_tiles(obs)
+        .withColumn("obs_id", F.monotonically_increasing_id())
+        .localCheckpoint(eager=True)
+    )
     steps = expand_temporal_steps(
         o, num_steps=cfg.num_steps, temporal_step=cfg.temporal_step
     ).select("obs_id", "step", "query_date")

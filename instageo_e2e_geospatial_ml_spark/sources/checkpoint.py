@@ -104,7 +104,9 @@ class CheckpointTable:
 
     def append(self, df: DataFrame, metrics_cols: list[str] | None = None) -> dict:
         """Idempotent append: anti-join on key, write data + per-partition
-        lineage manifest, log the snapshot. Returns the snapshot record."""
+        lineage manifest, log the snapshot. Returns the snapshot record.
+        A batch with no new rows commits nothing (no manifest, no log
+        entry) and returns a record with snapshot_id None."""
         batch = self.filter_uncommitted(df)
         snapshot_id = uuid.uuid4().hex[:16]
         batch = batch.withColumn("_snapshot_id", F.lit(snapshot_id))
@@ -113,10 +115,18 @@ class CheckpointTable:
             writer = writer.partitionBy(self.partition_by)
         writer.parquet(self.data_path)
 
-        # per-partition lineage + metrics from what was just committed
-        committed = self.spark.read.parquet(self.data_path).filter(
-            F.col("_snapshot_id") == snapshot_id
+        # the batch's own schema: an empty batch leaves a fresh table with
+        # no data file to infer one from
+        committed = (
+            self.spark.read.schema(batch.schema)
+            .parquet(self.data_path)
+            .filter(F.col("_snapshot_id") == snapshot_id)
         )
+        n_rows = committed.count()
+        if n_rows == 0:
+            return {"snapshot_id": None, "ts": time.time(), "n_rows": 0}
+
+        # per-partition lineage + metrics from what was just committed
         group = [self.partition_by] if self.partition_by else []
         aggs = [F.count(F.lit(1)).alias("n_rows")]
         for m in metrics_cols or []:
@@ -128,7 +138,6 @@ class CheckpointTable:
             os.path.join(self.manifest_path, snapshot_id)
         )
 
-        n_rows = committed.count()
         rec = {"snapshot_id": snapshot_id, "ts": time.time(), "n_rows": n_rows}
         log = self._log()
         log.append(rec)

@@ -351,36 +351,85 @@ def test_plans_md_sweep_covers_whole_registry():
     assert missing == [], missing
 
 
-def test_ranged_row_number_matches_global_window(spark):
-    """The two-phase row number (q316's position machinery) must equal the
-    global-window row_number for a total ordering, including across range-
-    bucket boundaries, and must not plan a partition-less window."""
-    import pandas as pd
+@pytest.mark.parametrize(
+    "weight, group_cols, exclusive",
+    [
+        pytest.param(None, (), False, id="count"),
+        pytest.param("w", (), False, id="weighted"),
+        pytest.param(None, ("g",), False, id="grouped"),
+        pytest.param("w", ("g",), True, id="exclusive"),
+    ],
+)
+def test_ranged_row_number_matches_global_window(spark, weight, group_cols, exclusive):
+    """The two-phase ranged prefix (q316's positions, q48's shard
+    offsets, q140/q141's per-group prefixes) must equal the global-window
+    value for a total ordering, including across range-bucket boundaries,
+    on input read from a shuffle output. Its plan must hold no
+    partition-less window and no range exchange (both phases read ONE
+    bucket assignment), and consuming it must leave the CacheManager as
+    it was."""
+    from instageo_e2e_geospatial_ml_spark.functions.text import ranged_prefix
 
-    from instageo_e2e_geospatial_ml_spark.functions.text import ranged_row_number
-
-    rows = [(i, f"k{(i * 7) % 50:03d}") for i in range(500)]
-    df = spark.createDataFrame(rows, "id long, skey string")
-    out = ranged_row_number(df, ["skey", "id"], out_col="pos", n_buckets=8)
-    got = out.toPandas().sort_values(["skey", "id"]).reset_index(drop=True)
-    # reference: global rank by (skey, id)
+    rows = [(i, f"k{(i * 7) % 50:03d}", i % 3, (i * 13) % 11) for i in range(500)]
+    df = spark.createDataFrame(rows, "id long, skey string, g long, w long")
+    df = df.repartition(5, "id")  # a shuffle output: row order not fixed
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache.numCachedEntries()
+    out = ranged_prefix(
+        df, ["skey", "id"], "pos", weight=weight, group_cols=group_cols, n_buckets=8
+    )
+    if exclusive:
+        out = out.withColumn("pos", F.col("pos") - F.col(weight))
+    keys = [*group_cols, "skey", "id"]
+    got = out.toPandas().sort_values(keys).reset_index(drop=True)
+    # reference: pandas cumsum in (group, skey, id) order
     want = (
-        pd.DataFrame(rows, columns=["id", "skey"])
-        .sort_values(["skey", "id"])
+        pd.DataFrame(rows, columns=["id", "skey", "g", "w"])
+        .sort_values(keys)
         .reset_index(drop=True)
     )
-    want["pos"] = range(1, len(want) + 1)
-    assert (got["pos"].to_numpy() == want["pos"].to_numpy()).all()
-    # ±1 neighbor pairs are preserved across bucket boundaries: every pos
-    # from 1..n appears exactly once, so each consecutive pair exists
-    assert sorted(got["pos"]) == list(range(1, 501))
+    step = want[weight] if weight else pd.Series(1, index=want.index)
+    by = [want[c] for c in group_cols] or [0] * len(want)
+    run = step.groupby(by).cumsum()
+    want["pos"] = run - step if exclusive else run
+    assert got["id"].tolist() == want["id"].tolist()  # every row exactly once
+    assert got["pos"].tolist() == want["pos"].tolist()
     plan = _plan(out)
+    assert "rangepartitioning" not in plan.lower(), plan
     for line in plan.splitlines():
         s = line.strip()
         if "windowspecdefinition(" not in s:
             continue
         first_arg = s.split("windowspecdefinition(", 1)[1].split(",", 1)[0]
         assert "ASC" not in first_arg and "DESC" not in first_arg, s
+    assert cache.numCachedEntries() == n_cached
+
+
+def test_every_persist_is_released_in_its_function():
+    """Lifetime rule: a .persist()/.cache() in the package must be paired
+    with an .unpersist() in the same function. A cache that has to live
+    as long as a returned lazy frame is a localCheckpoint instead (its
+    blocks go when the frame does); a persist() that is never released
+    pins a CacheManager entry for the rest of the session."""
+    import ast
+    import pathlib
+
+    import instageo_e2e_geospatial_ml_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    leaks = []
+    for path in sorted(root.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            called = {
+                n.func.attr
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            }
+            if called & {"persist", "cache"} and "unpersist" not in called:
+                leaks.append(f"{path.relative_to(root)}:{fn.name}")
+    assert leaks == [], leaks
 
 
 def test_registrable_domain_psl_table_wins(spark):

@@ -1153,3 +1153,94 @@ def test_sensor_stream_datasource_drains_exactly_once(spark, tmp_path):
         for seq in range(20):
             want = _reading(sid, seq)
             assert seen[(want[0], want[1])] == want[2]
+
+
+def _chip_stream_source(spark, tmp_path, frames):
+    """One parquet file per observation frame, in arrival order, flat in
+    a stream-source dir; returns (dir, schema)."""
+    import glob
+    import os
+
+    src = tmp_path / "obs_in"
+    src.mkdir()
+    for i, pdf in enumerate(frames):
+        part_dir = tmp_path / f"_obs_{i}"
+        spark.createDataFrame(pdf).coalesce(1).write.parquet(str(part_dir))
+        dst = src / f"{i}.parquet"
+        shutil.move(glob.glob(str(part_dir / "part-*.parquet"))[0], dst)
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))  # file-source order
+    return str(src), spark.read.parquet(str(src / "0.parquet")).schema
+
+
+def _chip_stream_inputs(spark, tiles):
+    from instageo_e2e_geospatial_ml_spark import synth
+    from instageo_e2e_geospatial_ml_spark.plans.pipeline import ChipPipelineConfig
+
+    obs = synth.gen_observations_pdf(n_extra_per_tile=8, tiles=tiles, spread=0.2)
+    obs = obs[obs["mgrs_tile_id"].isin(tiles)]
+    cat = synth.gen_granule_catalog_pdf(tiles=tiles, days=60, every=5)
+    imgs = synth.gen_images_pdf(cat, w=128, h=128, fmt="raw")
+    cfg = ChipPipelineConfig(
+        min_count=2, num_steps=1, temporal_tolerance=10, chip_size=32,
+        mask_types=("cloud",), masking_strategy="each",
+    )
+    return obs, spark.createDataFrame(cat), spark.createDataFrame(imgs), cfg
+
+
+def test_chip_stream_releases_obs_cache_per_batch(spark, tmp_path):
+    # build_records' obs table must not outlive its micro-batch: after a
+    # 3-batch stream the session's CacheManager holds no new entry
+    from instageo_e2e_geospatial_ml_spark.plans.pipeline import (
+        run_chip_pipeline_streaming,
+    )
+    from instageo_e2e_geospatial_ml_spark.sources.checkpoint import CheckpointTable
+
+    tiles = ["38PMB", "30RYS", "38PPB"]
+    obs, cat_df, img_df, cfg = _chip_stream_inputs(spark, tiles)
+    frames = [
+        obs[obs["mgrs_tile_id"] == t].drop(columns=["mgrs_tile_id"]) for t in tiles
+    ]
+    src, schema = _chip_stream_source(spark, tmp_path, frames)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache.numCachedEntries()
+    ckpt = CheckpointTable(
+        spark, str(tmp_path / "chips"), key="stac_items_str", partition_by="tile_key"
+    )
+    got = run_chip_pipeline_streaming(
+        spark, src, schema, cat_df, img_df, cfg, checkpoint=ckpt,
+        stream_checkpoint_dir=str(tmp_path / "ck"), max_files=1,
+    )
+    assert got.count() > 0
+    assert len(ckpt.committed_snapshot_ids()) == 3
+    assert cache.numCachedEntries() == n_cached
+
+
+def test_chip_stream_survives_empty_first_batch(spark, tmp_path):
+    # a first micro-batch whose observations all fail the density filter
+    # yields no chips: it must commit nothing and not kill the stream, and
+    # the next file's chips still commit exactly as a batch run makes them
+    from instageo_e2e_geospatial_ml_spark.plans.pipeline import (
+        run_chip_pipeline,
+        run_chip_pipeline_streaming,
+    )
+    from instageo_e2e_geospatial_ml_spark.sources.checkpoint import CheckpointTable
+
+    obs, cat_df, img_df, cfg = _chip_stream_inputs(spark, ["38PMB", "30RYS"])
+    lone = obs[obs["mgrs_tile_id"] == "30RYS"].head(1)  # < min_count=2
+    rest = obs[obs["mgrs_tile_id"] == "38PMB"]
+    frames = [f.drop(columns=["mgrs_tile_id"]) for f in (lone, rest)]
+    src, schema = _chip_stream_source(spark, tmp_path, frames)
+    ckpt = CheckpointTable(
+        spark, str(tmp_path / "chips"), key="stac_items_str", partition_by="tile_key"
+    )
+    got = run_chip_pipeline_streaming(
+        spark, src, schema, cat_df, img_df, cfg, checkpoint=ckpt,
+        stream_checkpoint_dir=str(tmp_path / "ck"), max_files=1,
+    )
+    assert len(ckpt.committed_snapshot_ids()) == 1
+    want = run_chip_pipeline(spark.createDataFrame(frames[1]), cat_df, img_df, cfg)
+    cols = ["chip_id", "tile_key", "valid_px", F.md5("chip"), F.md5("seg")]
+    assert want.count() > 0
+    assert sorted(map(tuple, got.select(*cols).collect())) == sorted(
+        map(tuple, want.select(*cols).collect())
+    )
