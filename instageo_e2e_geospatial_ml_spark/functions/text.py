@@ -449,8 +449,8 @@ def hashed_quality_score(
     weights, and `keep` is score + bias >= 0.
 
     Weights default to a deterministic md5-derived table in
-    [-1000, 1000] (the lsh _proj_weight idiom) so the operator is
-    self-contained and bit-identical in any engine (DuckDB twin: q65).
+    [-1000, 1000] (the similarity._np_lsh_weights idiom) so the operator
+    is self-contained and bit-identical in any engine (DuckDB twin: q65).
     Pass `weights` — a (bucket long, w long) DataFrame from real
     training — and it broadcast-joins by bucket instead (missing
     buckets weigh 0); the plan shape is one explode + one k-row

@@ -17,7 +17,7 @@ E.1.1 rule) — plus per-component QCC overrides (lossy; RGB
 thumbnails / S2 previews), 1..255 components (shared depth) WITH
 XRsiz/YRsiz subsampling (per-component band/precinct grids, ceil-div
 tile boxes, replicate-upsampled output; position-major progressions
-with mixed grids raise — use LRCP/RLCP), the
+step the union of every component's precinct lattice), the
 Annex G multiple-component transforms (RCT with 5/3, ICT with 9/7),
 MQ arithmetic coding with the ENTIRE defined code-block style byte —
 termall (per-pass codeword termination), selective bypass (raw SPP/MRP
@@ -38,9 +38,7 @@ supported: every partition (sub-bands, precincts, code-blocks, tiles)
 anchors on absolute reference-grid coordinates and the DWT lifting is
 origin-parity-aware (odd origins start on a high-pass position, T.800
 B.5/F; validated against an independent scalar implementation of the
-absolute-index lifting formulas). The single remaining raise is
-position-major progressions (RPCL/PCRL/CPRL) over MIXED subsampling
-grids, where per-component precinct grids do not coincide.
+absolute-index lifting formulas).
 
   * jp2_encode(img, levels, cblk, irreversible, quant_step) -> bytes
   * jp2_decode(buf) -> np.ndarray   ((h, w) or (h, w, C); codestream or
@@ -63,12 +61,11 @@ packet headers (B.10), the MQ coder (Annex C — the 47-state Qe table
 shared with JBIG2), and the Annex F lifting with whole-sample symmetric
 extension.
 
-Tier-1 ships in THREE bit-exact implementations (BENCH/jp2.json):
-the readable reference above (MQEncoder/MQDecoder/_T1 — source of
-truth), a vectorized pure-Python fast path (tier1_decode_fast, ~4×),
-and an optional compiled kernel (jp2_t1.c via jp2_native, ~120×,
-lazily built with the system C compiler and silently skipped when none
-exists). jp2_encode/jp2_decode dispatch to the fastest available.
+Tier-1 ships in TWO bit-exact implementations: the readable reference
+above (MQEncoder/MQDecoder/_T1 — source of truth) and a compiled kernel
+(jp2_t1.c via jp2_native, two orders of magnitude faster, lazily built
+with the system C compiler). jp2_encode/jp2_decode use the kernel when
+it builds and fall back to the reference when no C compiler exists.
 """
 
 from __future__ import annotations
@@ -769,19 +766,6 @@ def _inv53_rows(s: np.ndarray, d: np.ndarray, n: int) -> np.ndarray:
     return x
 
 
-def _fwd53_2d(a: np.ndarray):
-    lo, hi = _fwd53_rows(np.asarray(a))
-    ll, lh = (m.T for m in _fwd53_rows(lo.T))
-    hl, hh = (m.T for m in _fwd53_rows(hi.T))
-    return ll, hl, lh, hh
-
-
-def _inv53_2d(ll, hl, lh, hh, h: int, w: int) -> np.ndarray:
-    lo = _inv53_rows(ll.T, lh.T, h).T
-    hi = _inv53_rows(hl.T, hh.T, h).T
-    return _inv53_rows(lo, hi, w)
-
-
 # --- origin-parity variants (nonzero XOsiz/XTOsiz: T.800 B.5/F) -------------
 # A signal occupying absolute coordinates [u0, u1) splits with LOW-pass
 # coefficients at EVEN absolute positions; when u0 is odd the first local
@@ -898,19 +882,6 @@ def _inv97_rows(s: np.ndarray, d: np.ndarray, n: int) -> np.ndarray:
         else:
             e[:, 2:-1:2] -= coef * (e[:, 1:-2:2] + e[:, 3::2])
     return e[:, 4 : 4 + n]
-
-
-def _fwd97_2d(a: np.ndarray):
-    lo, hi = _fwd97_rows(a)
-    ll, lh = (m.T for m in _fwd97_rows(lo.T))
-    hl, hh = (m.T for m in _fwd97_rows(hi.T))
-    return ll, hl, lh, hh
-
-
-def _inv97_2d(ll, hl, lh, hh, h: int, w: int) -> np.ndarray:
-    lo = _inv97_rows(ll.T, lh.T, h).T
-    hi = _inv97_rows(hl.T, hh.T, h).T
-    return _inv97_rows(lo, hi, w)
 
 
 def _fwd97_rows_p(a: np.ndarray, p: int):
@@ -1231,39 +1202,9 @@ def _npasses_read(br: _HdrReader) -> int:
 # ---------------------------------------------------------------------------
 
 
-def _subband_dims(w: int, h: int, levels: int):
-    """Per resolution r in 0..levels: [(band, bw, bh), ...] using the
-    offset-0 size recurrence (LL ceil, high-pass floor)."""
-    chain = []
-    cw, ch = w, h
-    for _ in range(levels):
-        lw, lh = (cw + 1) // 2, (ch + 1) // 2
-        chain.append((cw, ch, lw, lh))
-        cw, ch = lw, lh
-    out = [[("LL", cw, ch)]]
-    for cw0, ch0, lw, lh in reversed(chain):
-        out.append(
-            [("HL", cw0 - lw, lh), ("LH", lw, ch0 - lh), ("HH", cw0 - lw, ch0 - lh)]
-        )
-    return out
-
-
-def _blocks_of(bw: int, bh: int, cb: int):
-    if bw == 0 or bh == 0:
-        return [], 0, 0
-    nx = (bw + cb - 1) // cb
-    ny = (bh + cb - 1) // cb
-    blocks = []
-    for by in range(ny):
-        for bx in range(nx):
-            x0, y0 = bx * cb, by * cb
-            blocks.append((bx, by, x0, y0, min(cb, bw - x0), min(cb, bh - y0)))
-    return blocks, nx, ny
-
-
 def _qcd_index(band_res, r: int, band: str) -> int:
-    """Band order index into QCD/QCC (works over both the dims 3-tuples
-    and the absolute-box 5-tuples — only the band name is read)."""
+    """Band order index into QCD/QCC over _subband_boxes' per-resolution
+    (band, x0, y0, x1, y1) lists (only the band name is read)."""
     i = 0
     for rr, bands in enumerate(band_res):
         for entry in bands:
@@ -1276,21 +1217,11 @@ def _qcd_index(band_res, r: int, band: str) -> int:
 _GUARD = 2
 
 
-def _resolution_dims(w: int, h: int, levels: int):
-    """Resolution-domain dims per r in 0..levels: ceil(size / 2^(levels-r))."""
-    out = []
-    for r in range(levels + 1):
-        s = levels - r
-        out.append(((w + (1 << s) - 1) >> s, (h + (1 << s) - 1) >> s))
-    return out
-
-
 # --- absolute-box geometry (nonzero XOsiz/YOsiz/XTOsiz/YTOsiz) --------------
 # All partitions in T.800 anchor at the reference-grid origin, so with
 # offsets the tile-component box [tcx0, tcx1) x [tcy0, tcy1) no longer
-# starts at 0 and every dimension formula becomes a box formula. The
-# *_dims forms above are the zero-origin specializations (kept: they
-# also index the tile-independent QCD band order).
+# starts at 0 and every dimension formula becomes a box formula (a
+# zero-offset image is the special case box = (0, 0, w, h)).
 
 
 def _ceildiv(a: int, b: int) -> int:
@@ -1333,15 +1264,18 @@ def _resolution_boxes(box, levels: int):
 
 
 def _precinct_layout_box(r, band_boxes, ppx, ppy, cblk, res_box):
-    """_precinct_layout over absolute boxes: precincts partition the
-    resolution grid anchored at 0 (2^ppx x 2^ppy); only those meeting
-    the resolution box exist (B-16: count = ceil(tr1/2^pp) -
+    """Precincts of resolution r in raster order; each precinct is a
+    per-band list of (band, nbx, nby, blocks), blocks being
+    (bx, by, x0, y0, cw, ch). Precincts partition the resolution grid
+    anchored at the reference-grid origin (2^ppx x 2^ppy); only those
+    meeting the resolution box exist (B-16: count = ceil(tr1/2^pp) -
     floor(tr0/2^pp)). For r > 0 the band grid is the resolution grid
     halved and precinct boundaries map exactly (powers of two). Code
-    blocks anchor at absolute multiples of the effective block size on
-    the BAND grid and clip to precinct-intersect-band; returned block
-    coords are LOCAL to the band box (array indexing), while (bx, by)
-    index blocks within the precinct (tag trees)."""
+    blocks clamp to the band-domain precinct size, anchor at absolute
+    multiples of that size on the BAND grid and clip to
+    precinct-intersect-band, so no block straddles a precinct. Block
+    coords (x0, y0) are LOCAL to the band box (array indexing), while
+    (bx, by) index blocks within the precinct (tag trees)."""
     shift = 0 if r == 0 else 1
     bpw, bph = 1 << (ppx - shift), 1 << (ppy - shift)
     cbw0, cbh0 = (cblk, cblk) if isinstance(cblk, int) else cblk
@@ -1382,11 +1316,14 @@ def _packet_order_box(
     prog: int, levels: int, pp, res_boxes_c, tile_box, ncomp: int = 1,
     nlayers: int = 1, rs: list | None = None,
 ):
-    """_packet_order over absolute boxes (T.800 B.12 with offsets).
-    Position-major orders emit a precinct either at span-aligned
-    reference positions or at the tile edge when the first precinct is
-    unaligned (the `y == ty0 && try0 % 2^PPy != 0` clause of
-    B.12.1.3-5)."""
+    """Packet sequence as (layer, r, c, precinct_index) tuples (T.800
+    B.12, absolute reference-grid boxes). Layer placement per order:
+    LRCP(0) layer→res→comp→precinct; RLCP(1) res→layer→comp→precinct;
+    RPCL(2) res→position→comp→layer; PCRL(3) position→comp→res→layer;
+    CPRL(4) comp→position→res→layer. Position-major orders emit a
+    precinct either at span-aligned reference positions or at the tile
+    edge when the first precinct is unaligned (the
+    `y == ty0 && try0 % 2^PPy != 0` clause of B.12.1.3-5)."""
     L = nlayers
     rb_c = res_boxes_c if isinstance(res_boxes_c[0], list) else [res_boxes_c] * ncomp
     n_prec = []  # [c][r] -> (npx, npy)
@@ -1492,129 +1429,6 @@ def _packet_order_box(
                 for r in range(levels + 1):
                     k = _emit(c, r, x, y)
                     if k is not None:
-                        out.extend((l, r, c, k) for l in range(L))
-    return out
-
-
-def _precinct_layout(r, bands, ppx, ppy, cblk, rw, rh):
-    """Precincts of resolution r in raster order; each precinct = per-band
-    (band, nbx, nby, blocks) where blocks are (relative bx, by, absolute
-    x0, y0, cw, ch) in band coordinates. Precincts partition the
-    RESOLUTION grid (2^ppx × 2^ppy, anchored 0); for r > 0 the band-domain
-    precinct is half that. Code blocks clamp to the precinct size, so no
-    block straddles a precinct (both are power-of-two, anchored grids)."""
-    shift = 0 if r == 0 else 1
-    bpw, bph = 1 << (ppx - shift), 1 << (ppy - shift)
-    cbw0, cbh0 = (cblk, cblk) if isinstance(cblk, int) else cblk
-    cbw, cbh = min(cbw0, bpw), min(cbh0, bph)
-    npx = (rw + (1 << ppx) - 1) >> ppx
-    npy = (rh + (1 << ppy) - 1) >> ppy
-    out = []
-    for py in range(npy):
-        for px in range(npx):
-            per_band = []
-            for band, bwd, bhd in bands:
-                rx0, ry0 = px * bpw, py * bph
-                rx1, ry1 = min(rx0 + bpw, bwd), min(ry0 + bph, bhd)
-                blocks = []
-                nbx = nby = 0
-                if rx0 < rx1 and ry0 < ry1:
-                    nbx = (rx1 - rx0 + cbw - 1) // cbw  # rx0 is cbw-aligned
-                    nby = (ry1 - ry0 + cbh - 1) // cbh
-                    for by in range(nby):
-                        for bx in range(nbx):
-                            x0, y0 = rx0 + bx * cbw, ry0 + by * cbh
-                            blocks.append(
-                                (bx, by, x0, y0, min(cbw, bwd - x0), min(cbh, bhd - y0))
-                            )
-                per_band.append((band, nbx, nby, blocks))
-            out.append(per_band)
-    return out
-
-
-def _packet_order(
-    prog: int, levels: int, pp, res_dims, w: int, h: int, ncomp: int = 1,
-    nlayers: int = 1,
-):
-    """Packet sequence as (layer, r, c, precinct_index) tuples (T.800
-    B.12). Layer placement per order name: LRCP(0) layer-outermost;
-    RLCP(1) res→layer→comp→precinct; RPCL(2) res→position→comp→layer;
-    PCRL(3) position→comp→res→layer; CPRL(4) comp→position→res→layer.
-    Position-major orders step tile positions by the finest precinct
-    span, emitting the precinct whose top-left tile-coordinate is the
-    current position (B.12.1.3-5 with zero offsets; components share
-    XRsiz=YRsiz=1 so their precinct grids coincide)."""
-    L = nlayers
-    # res_dims: one shared [(rw, rh)] list, or per-component list-of-lists
-    # (subsampled components have their own precinct grids)
-    by_c = isinstance(res_dims[0], list)
-    rd_c = res_dims if by_c else [res_dims] * ncomp
-    n_prec = []  # [c][r] -> (npx, npy)
-    for c in range(ncomp):
-        row = []
-        for r in range(levels + 1):
-            rw, rh = rd_c[c][r]
-            ppx, ppy = pp[r]
-            row.append(((rw + (1 << ppx) - 1) >> ppx, (rh + (1 << ppy) - 1) >> ppy))
-        n_prec.append(row)
-    if prog == 0:  # LRCP: layer → res → comp → precinct
-        return [
-            (l, r, c, k)
-            for l in range(L)
-            for r in range(levels + 1)
-            for c in range(ncomp)
-            for k in range(n_prec[c][r][0] * n_prec[c][r][1])
-        ]
-    if prog == 1:  # RLCP: res → layer → comp → precinct
-        return [
-            (l, r, c, k)
-            for r in range(levels + 1)
-            for l in range(L)
-            for c in range(ncomp)
-            for k in range(n_prec[c][r][0] * n_prec[c][r][1])
-        ]
-    if any(n_prec[c] != n_prec[0] for c in range(ncomp)):
-        raise NotImplementedError(
-            "position-major progression (RPCL/PCRL/CPRL) with subsampled "
-            "components — use LRCP/RLCP"
-        )
-    n_prec = n_prec[0]
-    if prog == 2:  # RPCL: res → precinct → comp → layer
-        return [
-            (l, r, c, k)
-            for r in range(levels + 1)
-            for k in range(n_prec[r][0] * n_prec[r][1])
-            for c in range(ncomp)
-            for l in range(L)
-        ]
-    # position-major: precinct span in TILE coordinates at resolution r is
-    # 2^(pp + levels - r) (the resolution grid is the tile grid >> (levels-r))
-    span = [
-        (1 << (pp[r][0] + levels - r), 1 << (pp[r][1] + levels - r))
-        for r in range(levels + 1)
-    ]
-    step_x = min(s[0] for s in span)
-    step_y = min(s[1] for s in span)
-    out = []
-    if prog == 3:  # PCRL: position → comp → res → layer
-        for y in range(0, max(h, 1), step_y):
-            for x in range(0, max(w, 1), step_x):
-                for c in range(ncomp):
-                    for r in range(levels + 1):
-                        sx, sy = span[r]
-                        if x % sx == 0 and y % sy == 0:
-                            npx, _ = n_prec[r]
-                            k = (y // sy) * npx + (x // sx)
-                            out.extend((l, r, c, k) for l in range(L))
-        return out
-    for c in range(ncomp):  # CPRL: comp → position → res → layer
-        for y in range(0, max(h, 1), step_y):
-            for x in range(0, max(w, 1), step_x):
-                for r in range(levels + 1):
-                    sx, sy = span[r]
-                    if x % sx == 0 and y % sy == 0:
-                        npx, _ = n_prec[r]
-                        k = (y // sy) * npx + (x // sx)
                         out.extend((l, r, c, k) for l in range(L))
     return out
 
@@ -2549,500 +2363,11 @@ def _decode_tile(
 
 
 # ---------------------------------------------------------------------------
-# Vectorized tier-1 (fast path). Bit-exact twin of _T1/tier1_* above (the
-# readable reference implementations, kept for parity tests — see
-# tests/test_jp2.py). Techniques:
-#   * packed MQ state: (state_index << 1) | MPS fused into ONE int per
-#     context, with precomputed packed NMPS/NLPS transition tables (the
-#     SWITCH flip is baked into _NLPS_P), so a decision is two flat list
-#     lookups instead of a nested-list read plus 4-tuple unpack;
-#   * per-sample neighborhood state in flat bytearrays maintained
-#     INCREMENTALLY on each significance event (16 byte increments per
-#     event instead of 8 numpy scalar reads per visit);
-#   * pass candidates precomputed with numpy from live frombuffer views —
-#     per stripe for SPP/CP, whole-block for MRP (whose candidate set and
-#     contexts are static within the pass, letting the MQ loop run over a
-#     precomputed context list with the state machine fully inlined and
-#     same-context runs hoisting the packed state into a local);
-#   * in-pass significance changes fall back to an event-chain scalar scan
-#     of the affected columns (a new significant sample can only change
-#     candidacy/contexts in its own and the next column of the scan).
-# ---------------------------------------------------------------------------
-
-_QEV = tuple(_QE[p >> 1][0] for p in range(94))
-_NMPS_P = tuple((_QE[p >> 1][1] << 1) | (p & 1) for p in range(94))
-_NLPS_P = tuple((_QE[p >> 1][2] << 1) | ((p & 1) ^ _QE[p >> 1][3]) for p in range(94))
-
-_ZC_TAB_CACHE: dict[str, tuple] = {}
-_SCAN_CACHE: dict[tuple, np.ndarray] = {}
-
-
-def _zc_tab(band: str) -> tuple:
-    t = _ZC_TAB_CACHE.get(band)
-    if t is None:
-        t = tuple(
-            _zc_context(hh, vv, dd, band)
-            for hh in range(3)
-            for vv in range(3)
-            for dd in range(5)
-        )
-        _ZC_TAB_CACHE[band] = t
-    return t
-
-
-def _sc_tabs() -> tuple[tuple, tuple]:
-    ctxs, xors = [], []
-    for hs in range(5):
-        for vs in range(5):
-            cc, xo = _SC_TABLE[(max(-1, min(1, hs - 2)), max(-1, min(1, vs - 2)))]
-            ctxs.append(cc)
-            xors.append(xo)
-    return tuple(ctxs), tuple(xors)
-
-
-_SCC, _SCX = _sc_tabs()
-
-
-def _init_packed() -> list[int]:
-    return [(st_i << 1) | st_m for st_i, st_m in _init_states()]
-
-
-def _scan_order(h: int, w: int) -> np.ndarray:
-    key = (h, w)
-    s = _SCAN_CACHE.get(key)
-    if s is None:
-        parts = []
-        for y0 in range(0, h, 4):
-            sh = min(4, h - y0)
-            rows = np.arange(y0, y0 + sh, dtype=np.int64)
-            cols = np.arange(w, dtype=np.int64)
-            parts.append((rows[None, :] * w + cols[:, None]).ravel())
-        s = np.concatenate(parts) if parts else np.empty(0, np.int64)
-        _SCAN_CACHE[key] = s
-    return s
-
-
-def _seg_starts(cxarr: np.ndarray) -> list[int]:
-    """Boundaries of same-context runs: [0, ...changes..., len]."""
-    bnd = np.flatnonzero(cxarr[1:] != cxarr[:-1]) + 1
-    return [0] + bnd.tolist() + [len(cxarr)]
-
-
-def tier1_decode_fast(
-    data: bytes, h: int, w: int, band: str, nplanes: int, npasses: int
-) -> np.ndarray:
-    """Bit-exact fast twin of tier1_decode (see block comment above)."""
-    if npasses == 0 or nplanes <= 0:
-        return np.zeros((h, w), np.int64)
-    zc = _zc_tab(band)
-    SCC, SCX = _SCC, _SCX
-    QEV, NMPS, NLPS = _QEV, _NMPS_P, _NLPS_P
-    n = len(data)
-
-    # ---- MQ decoder state (Annex C), packed, plain locals ------------------
-    cst = _init_packed()
-    b0 = data[0] if n else 0xFF
-    c = b0 << 16
-    bp = 0
-    if (data[bp] if bp < n else 0xFF) == 0xFF:
-        if (data[bp + 1] if bp + 1 < n else 0xFF) > 0x8F:
-            c += 0xFF00
-            ct = 8
-        else:
-            bp += 1
-            c += (data[bp] if bp < n else 0xFF) << 9
-            ct = 7
-    else:
-        bp += 1
-        c += (data[bp] if bp < n else 0xFF) << 8
-        ct = 8
-    c <<= 7
-    ct -= 7
-    a = 0x8000
-
-    def dec(cx: int) -> int:
-        nonlocal a, c, ct, bp
-        st = cst[cx]
-        qe = QEV[st]
-        a -= qe
-        if (c >> 16) < qe:
-            if a < qe:
-                d = st & 1
-                cst[cx] = NMPS[st]
-            else:
-                d = 1 ^ (st & 1)
-                cst[cx] = NLPS[st]
-            a = qe
-        else:
-            c -= qe << 16
-            if a & 0x8000:
-                return st & 1
-            if a < qe:
-                d = 1 ^ (st & 1)
-                cst[cx] = NLPS[st]
-            else:
-                d = st & 1
-                cst[cx] = NMPS[st]
-        while True:
-            if ct == 0:
-                if (data[bp] if bp < n else 0xFF) == 0xFF:
-                    if (data[bp + 1] if bp + 1 < n else 0xFF) > 0x8F:
-                        c += 0xFF00
-                        ct = 8
-                    else:
-                        bp += 1
-                        c += (data[bp] if bp < n else 0xFF) << 9
-                        ct = 7
-                else:
-                    bp += 1
-                    c += (data[bp] if bp < n else 0xFF) << 8
-                    ct = 8
-            a = (a << 1) & 0xFFFF
-            c = (c << 1) & 0xFFFFFFFF
-            ct -= 1
-            if a & 0x8000:
-                break
-        return d
-
-    # ---- per-sample state grids -------------------------------------------
-    W2 = w + 2
-    P = (h + 2) * W2
-    sig = bytearray(P)    # significance, padded ring
-    sgnb = bytearray(P)   # 1 = negative
-    nbt = bytearray(P)    # 8-neighbor significance count
-    hcb = bytearray(P)    # horizontal significant-neighbor count (0..2)
-    vcb = bytearray(P)    # vertical (0..2)
-    dcb = bytearray(P)    # diagonal (0..4)
-    hsb = bytearray(b"\x02" * P)  # horizontal signed sum + 2 (0..4)
-    vsb = bytearray(b"\x02" * P)
-    pi = bytearray(h * w)
-    ref = bytearray(h * w)
-    mag = np.zeros(h * w, np.int64)
-
-    SIG = np.frombuffer(sig, np.uint8).reshape(h + 2, W2)[1:-1, 1:-1]
-    NBT = np.frombuffer(nbt, np.uint8).reshape(h + 2, W2)[1:-1, 1:-1]
-    PI2 = np.frombuffer(pi, np.uint8).reshape(h, w)
-    PIF = np.frombuffer(pi, np.uint8)
-    REFF = np.frombuffer(ref, np.uint8)
-    SCAN = _scan_order(h, w)
-
-    def set_sig(i: int, neg: int) -> None:
-        sig[i] = 1
-        if neg:
-            sgnb[i] = 1
-        im = i - W2
-        ip = i + W2
-        nbt[i - 1] += 1
-        nbt[i + 1] += 1
-        nbt[im] += 1
-        nbt[ip] += 1
-        nbt[im - 1] += 1
-        nbt[im + 1] += 1
-        nbt[ip - 1] += 1
-        nbt[ip + 1] += 1
-        hcb[i - 1] += 1
-        hcb[i + 1] += 1
-        vcb[im] += 1
-        vcb[ip] += 1
-        dcb[im - 1] += 1
-        dcb[im + 1] += 1
-        dcb[ip - 1] += 1
-        dcb[ip + 1] += 1
-        if neg:
-            hsb[i - 1] -= 1
-            hsb[i + 1] -= 1
-            vsb[im] -= 1
-            vsb[ip] -= 1
-        else:
-            hsb[i - 1] += 1
-            hsb[i + 1] += 1
-            vsb[im] += 1
-            vsb[ip] += 1
-
-    def code_sig(i: int, j: int, one_p: int) -> bool:
-        if dec(zc[(hcb[i] * 3 + vcb[i]) * 5 + dcb[i]]):
-            kk = hsb[i] * 5 + vsb[i]
-            s = dec(SCC[kk]) ^ SCX[kk]
-            mag[j] = one_p
-            set_sig(i, s)
-            return True
-        return False
-
-    def spp_col_scalar(x: int, y0: int, sh: int, ystart: int, one_p: int) -> bool:
-        ev = False
-        base = (y0 + 1) * W2 + x + 1
-        jbase = y0 * w + x
-        for dy in range(ystart, sh):
-            i = base + dy * W2
-            if sig[i] or nbt[i] == 0:
-                continue
-            j = jbase + dy * w
-            if code_sig(i, j, one_p):
-                ev = True
-            pi[j] = 1
-        return ev
-
-    def spp(p: int) -> None:
-        one_p = 1 << p
-        for y0 in range(0, h, 4):
-            sh = 4 if y0 + 4 <= h else h - y0
-            if w * sh < 64:
-                for x in range(w):
-                    spp_col_scalar(x, y0, sh, 0, one_p)
-                continue
-            subS = SIG[y0 : y0 + sh]
-            subN = NBT[y0 : y0 + sh]
-            xs_a, ys_a = np.nonzero(((subS == 0) & (subN > 0)).T)
-            if xs_a.size == 0:
-                continue
-            xs = xs_a.tolist()
-            ys = ys_a.tolist()
-            K = len(xs)
-            k = 0
-            while k < K:
-                x = xs[k]
-                base = (y0 + 1) * W2 + x + 1
-                jbase = y0 * w + x
-                ev_row = -1
-                while k < K and xs[k] == x:
-                    y = ys[k]
-                    k += 1
-                    i = base + y * W2
-                    if sig[i] or nbt[i] == 0:
-                        continue
-                    j = jbase + y * w
-                    hit = code_sig(i, j, one_p)
-                    pi[j] = 1
-                    if hit:
-                        ev_row = y
-                        break
-                if ev_row < 0:
-                    continue
-                while k < K and xs[k] == x:
-                    k += 1
-                spp_col_scalar(x, y0, sh, ev_row + 1, one_p)
-                nxt = x + 1
-                pending = True
-                while pending and nxt < w:
-                    pending = spp_col_scalar(nxt, y0, sh, 0, one_p)
-                    while k < K and xs[k] <= nxt:
-                        k += 1
-                    nxt += 1
-
-    def mrp(p: int) -> None:
-        nonlocal a, c, ct, bp
-        one_p = 1 << p
-        if h * w < 256:
-            for y0 in range(0, h, 4):
-                sh = 4 if y0 + 4 <= h else h - y0
-                for x in range(w):
-                    base = (y0 + 1) * W2 + x + 1
-                    jbase = y0 * w + x
-                    for dy in range(sh):
-                        i = base + dy * W2
-                        j = jbase + dy * w
-                        if not sig[i] or pi[j]:
-                            continue
-                        if ref[j]:
-                            cx = 16
-                        elif nbt[i]:
-                            cx = 15
-                        else:
-                            cx = 14
-                        if dec(cx):
-                            mag[j] |= one_p
-                        ref[j] = 1
-                        pi[j] = 1
-            return
-        cand = (SIG != 0) & (PI2 == 0)
-        sel = cand.ravel()[SCAN]
-        take = SCAN[sel]
-        if take.size == 0:
-            return
-        nb = NBT.ravel()[take]
-        rf = REFF[take]
-        cxarr = np.where(rf != 0, 16, np.where(nb > 0, 15, 14))
-        starts = _seg_starts(cxarr)
-        bits = []
-        bapp = bits.append
-        cxl = cxarr.tolist()
-        # fully inlined MQ decode over same-context runs: THE hot loop at
-        # low bitplanes; the packed state is hoisted into a local for the
-        # duration of a run
-        for si in range(len(starts) - 1):
-            s0 = starts[si]
-            cx = cxl[s0]
-            st = cst[cx]
-            for _ in range(starts[si + 1] - s0):
-                qe = QEV[st]
-                a -= qe
-                if (c >> 16) < qe:
-                    if a < qe:
-                        d = st & 1
-                        st = NMPS[st]
-                    else:
-                        d = 1 ^ (st & 1)
-                        st = NLPS[st]
-                    a = qe
-                else:
-                    c -= qe << 16
-                    if a & 0x8000:
-                        bapp(st & 1)
-                        continue
-                    if a < qe:
-                        d = 1 ^ (st & 1)
-                        st = NLPS[st]
-                    else:
-                        d = st & 1
-                        st = NMPS[st]
-                while True:
-                    if ct == 0:
-                        if (data[bp] if bp < n else 0xFF) == 0xFF:
-                            if (data[bp + 1] if bp + 1 < n else 0xFF) > 0x8F:
-                                c += 0xFF00
-                                ct = 8
-                            else:
-                                bp += 1
-                                c += (data[bp] if bp < n else 0xFF) << 9
-                                ct = 7
-                        else:
-                            bp += 1
-                            c += (data[bp] if bp < n else 0xFF) << 8
-                            ct = 8
-                    a = (a << 1) & 0xFFFF
-                    c = (c << 1) & 0xFFFFFFFF
-                    ct -= 1
-                    if a & 0x8000:
-                        break
-                bapp(d)
-            cst[cx] = st
-        barr = np.asarray(bits, np.int64)
-        mag[take] |= barr << p
-        REFF[take] = 1
-        PIF[take] = 1
-
-    def cp_col_scalar(x: int, y0: int, sh: int, ystart: int, one_p: int) -> bool:
-        ev = False
-        base = (y0 + 1) * W2 + x + 1
-        jbase = y0 * w + x
-        y = ystart
-        if ystart == 0 and sh == 4:
-            rl = True
-            for dy in range(4):
-                i = base + dy * W2
-                if sig[i] or nbt[i] or pi[jbase + dy * w]:
-                    rl = False
-                    break
-            if rl:
-                if dec(_CTX_RL) == 0:
-                    return False
-                r = (dec(_CTX_UNI) << 1) | dec(_CTX_UNI)
-                i = base + r * W2
-                j = jbase + r * w
-                kk = hsb[i] * 5 + vsb[i]
-                s = dec(SCC[kk]) ^ SCX[kk]
-                mag[j] = one_p
-                set_sig(i, s)
-                ev = True
-                y = r + 1
-        for dy in range(y, sh):
-            i = base + dy * W2
-            j = jbase + dy * w
-            if sig[i] or pi[j]:
-                continue
-            if code_sig(i, j, one_p):
-                ev = True
-        return ev
-
-    def cp(p: int) -> None:
-        one_p = 1 << p
-        for y0 in range(0, h, 4):
-            sh = 4 if y0 + 4 <= h else h - y0
-            if w * sh < 64:
-                for x in range(w):
-                    cp_col_scalar(x, y0, sh, 0, one_p)
-                continue
-            subS = SIG[y0 : y0 + sh]
-            subN = NBT[y0 : y0 + sh]
-            subP = PI2[y0 : y0 + sh]
-            candT = ((subS == 0) & (subP == 0)).T
-            if sh == 4:
-                rl_flags = (
-                    (~subS.any(0)) & (~(subN != 0).any(0)) & (~subP.any(0))
-                ).tolist()
-            else:
-                rl_flags = None
-            xs_a, ys_a = np.nonzero(candT)
-            if xs_a.size == 0:
-                continue
-            xs = xs_a.tolist()
-            ys = ys_a.tolist()
-            K = len(xs)
-            k = 0
-            while k < K:
-                x = xs[k]
-                ev = False
-                if rl_flags is not None and rl_flags[x]:
-                    ev = cp_col_scalar(x, y0, sh, 0, one_p)
-                    while k < K and xs[k] == x:
-                        k += 1
-                else:
-                    base = (y0 + 1) * W2 + x + 1
-                    jbase = y0 * w + x
-                    ev_row = -1
-                    while k < K and xs[k] == x:
-                        yv = ys[k]
-                        k += 1
-                        i = base + yv * W2
-                        if sig[i]:
-                            continue
-                        j = jbase + yv * w
-                        if code_sig(i, j, one_p):
-                            ev_row = yv
-                            break
-                    if ev_row >= 0:
-                        ev = True
-                        while k < K and xs[k] == x:
-                            k += 1
-                        cp_col_scalar(x, y0, sh, ev_row + 1, one_p)
-                if ev:
-                    nxt = x + 1
-                    pending = True
-                    while pending and nxt < w:
-                        pending = cp_col_scalar(nxt, y0, sh, 0, one_p)
-                        while k < K and xs[k] <= nxt:
-                            k += 1
-                        nxt += 1
-
-    left = npasses
-    p = nplanes - 1
-    first = True
-    while left > 0 and p >= 0:
-        if not first:
-            spp(p)
-            left -= 1
-            if left == 0:
-                break
-            mrp(p)
-            left -= 1
-            if left == 0:
-                break
-        cp(p)
-        left -= 1
-        PIF[:] = 0
-        p -= 1
-        first = False
-
-    negv = np.frombuffer(sgnb, np.uint8).reshape(h + 2, W2)[1:-1, 1:-1].ravel()
-    return np.where(negv != 0, -mag, mag).reshape(h, w)
-
-
-# ---------------------------------------------------------------------------
-# tier-1 dispatch: compiled kernel (jp2_t1.c via jp2_native, ~500× the
-# reference loop) when a C compiler is present, else the vectorized
-# pure-Python path above (~4-5×), else the readable reference. All three
-# are bit-exact twins (tests/test_jp2.py pins parity on randomized blocks,
-# truncated streams and encoder byte output included).
+# tier-1 dispatch: the compiled kernel (jp2_t1.c via jp2_native, 70-150×
+# the reference loop) when a C compiler is present, else the readable
+# reference above. The two are bit-exact twins (tests/test_jp2.py pins
+# parity on randomized blocks, truncated streams and encoder byte output
+# included, and covers the reference fallback of this dispatch).
 # ---------------------------------------------------------------------------
 
 
@@ -3053,7 +2378,7 @@ def _t1_decode(
 
     if jp2_native.available():
         return jp2_native.tier1_decode_c(data, h, w, band, nplanes, npasses)
-    return tier1_decode_fast(data, h, w, band, nplanes, npasses)
+    return tier1_decode(data, h, w, band, nplanes, npasses)
 
 
 def _t1_encode(coefs: np.ndarray, band: str) -> tuple[bytes, int, int]:

@@ -4,19 +4,22 @@ jp2_t1.c — a line-for-line port of jp2.py's reference MQ coder + coding
 passes — is compiled once per machine with the system C compiler into a
 content-hash-keyed shared object under the user cache dir and loaded via
 ctypes. Nothing is installed: if no compiler is present (or the build
-fails for any reason) `available()` is False and jp2.py silently keeps
-its pure-Python vectorized path, which is the behavioral source of truth
-(tests pin bit-exact parity between the two, truncated streams included).
+fails for any reason) `available()` is False and jp2.py silently falls
+back to its readable reference tier-1 (MQDecoder/_T1), which is the
+behavioral source of truth (tests pin bit-exact parity between the two,
+truncated streams included).
 
 Why this exists: tier-1 is a bit-serial arithmetic coder — the one
 workload numpy cannot vectorize (every MQ decision depends on the coder
-state left by the previous one). The pure-Python rewrite buys ~4-5×;
-the compiled kernel buys ~120× measured end-to-end on tier-1 decode
-(BENCH/jp2.json; isolated coder microbenchmarks run higher still),
-which is what makes JP2-heavy scans
-(Sentinel-2 band rasters at 100 TB) a scan-cost problem instead of a
-cluster-sizing problem. Executor-side use is fine: the .so is compiled
-on first use per machine and cached; pandas-UDF workers share it.
+state left by the previous one). Decoding one 64×64 HL block with 60%
+non-zero coefficients takes 126-326 ms in the reference and 1.8-2.2 ms
+in this kernel (70-150×, 4-core Xeon, run-to-run spread), which is what
+makes JP2-heavy scans (Sentinel-2 band rasters at 100 TB) a scan-cost
+problem instead of a cluster-sizing problem. Without a C compiler,
+tier-1 decoding runs at the reference's speed: there is no intermediate
+pure-Python path, since every supported host builds this kernel.
+Executor-side use is fine: the .so is compiled on first use per machine
+and cached; pandas-UDF workers share it.
 """
 
 from __future__ import annotations

@@ -210,12 +210,6 @@ def hls_tile_key(granule_id: str) -> str:
     return f"{parts[1]}_{parts[2]}_{parts[3]}"
 
 
-def tile_transform(tile_id: str, w: int, h: int) -> tuple[float, float, float, float]:
-    """Affine (a, c, e, f) of a 100 km MGRS square rasterized to w×h px."""
-    _zone, _south, e0, n0 = mgrs_tile_utm_square(tile_id)
-    return (100000.0 / w, e0, -100000.0 / h, n0 + 100000.0)
-
-
 # ---------------------------------------------------------------------------
 # Spark operator
 # ---------------------------------------------------------------------------

@@ -937,10 +937,10 @@ def bloom_decontaminate(
     — bounded by the parameter m (8 KB words for the default 2^16
     bits), NOT by build-set size — and broadcast into a JVM-side
     array-literal bit test on the probe scan: no join, no shuffle on
-    the probe side at all. Positions are md5-derived (the _proj_weight
-    idiom) so the whole operator, false positives included, is
-    bit-reproducible in any engine — the DuckDB twin (q71) replicates
-    position membership exactly.
+    the probe side at all. Positions are md5-derived (the
+    similarity._np_lsh_weights idiom) so the whole operator, false
+    positives included, is bit-reproducible in any engine — the DuckDB
+    twin (q71) replicates position membership exactly.
     """
     from functools import reduce as _reduce
 

@@ -184,23 +184,10 @@ def brute_force_topk(
     )
 
 
-def _proj_weight(j: Column | int, i: Column, seed: str = "lsh") -> Column:
-    """Deterministic pseudo-random integer weight in [-1000, 1000] from
-    md5(seed:j:i) — identical in any engine with md5 + hex→int."""
-    jj = F.lit(j) if isinstance(j, int) else j
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.lit(seed), jj.cast("string"), i.cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
-    return h % 2001 - 1000
-
-
 def _np_lsh_weights(dim: int, n_bits: int, seed: str):
-    """numpy twin of _proj_weight: W[i, j] = md5('<seed>:<j>:<i>')-derived
-    integer in [-1000, 1000] (identical md5 → hex → %2001 − 1000 chain)."""
+    """Deterministic LSH projection weights: W[i, j] = int(first 8 hex
+    digits of md5('<seed>:<j>:<i>')) % 2001 − 1000, an integer in
+    [-1000, 1000] that any engine with md5 + hex→int reproduces."""
     import hashlib
 
     import numpy as np

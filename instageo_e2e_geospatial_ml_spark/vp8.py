@@ -123,10 +123,6 @@ class BoolDecoder:
                 return -i
 
 
-def _clip127(v: int) -> int:
-    return -128 if v < -128 else (127 if v > 127 else v)
-
-
 # ---------------------------------------------------------------------------
 # exact integer transforms (RFC 6386 §14.3-14.4)
 # ---------------------------------------------------------------------------
