@@ -2,15 +2,24 @@
 
 The engine's image table (BASELINE.json input_hint) carries encoded pixels as
 a binary column with a `fmt` tag. The container has no PIL/opencv/rasterio,
-so the codecs are self-contained:
+so the codecs are self-contained. `encode` / `decode` are the one format
+dispatch; every payload the pipeline and the registry read goes through
+`decode(buf, w, h, bands, fmt)`, which returns (bands, h, w):
 
   fmt='raw'   lossless uint16 little-endian, C-order (bands, h, w)
-  fmt='raw8'  lossless uint8
+  fmt='raw8'  lossless uint8 (also rawf4 / rawf8 / rawi2 for float and
+              signed rasters)
   fmt='png'   a genuine minimal PNG: 16-bit grayscale, filter 0, one IDAT;
               multi-band images are stacked vertically (h*bands rows)
   fmt='qdct'  deterministic lossy 8x8 block-DCT quantization codec (the
               "lossy" format exercising the PSNR >= 40 dB per-row invariant
               from BASELINE.json)
+  fmt='jpeg'  baseline JPEG (jpeg.py), 1 or 3 bands, 8-bit lossy
+  fmt='jp2'   JPEG-2000 codestream (jp2.py), one grayscale band
+
+`decode` checks a payload's own dimensions against the row's metadata for
+the self-describing formats (jpeg, jp2). The TIFF LZW and PackBits
+primitives below back sources/tiff.read_geotiff_bytes.
 
 These replace the reference's GeoTIFF read/write path
 (instageo/data/hls_utils.py:89-122 open_mfdataset,
@@ -236,10 +245,6 @@ def decode(buf: bytes, w: int, h: int, bands: int, fmt: str) -> np.ndarray:
     raise NotImplementedError(f"fmt={fmt!r}")
 
 
-def is_lossless(fmt: str) -> bool:
-    return fmt in ("raw", "raw8", "png", "jp2")
-
-
 # --------------------------------------------------------------------------
 # metrics
 # --------------------------------------------------------------------------
@@ -437,653 +442,4 @@ def packbits_decode(buf: bytes) -> bytes:
             out += bytes([buf[i]]) * (257 - h)
             i += 1
         # h == 128: no-op per spec
-    return bytes(out)
-
-
-def _png_unfilter(
-    raw: bytes, off: int, height: int, stride: int, bpp: int
-) -> tuple[np.ndarray, int]:
-    """Undo the five PNG scanline filters over ``height`` rows of ``stride``
-    bytes starting at ``raw[off]``; returns ((height, stride) uint8, new off).
-
-    Shared by the sequential path (one image) and Adam7 (seven sub-images,
-    each filtered independently with its own zeroed prior row)."""
-    if len(raw) < off + height * (1 + stride):
-        raise ValueError("truncated PNG data")
-    out = np.zeros((height, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.int32)
-    for y in range(height):
-        ftype = raw[off]
-        line = np.frombuffer(raw[off + 1 : off + 1 + stride], dtype=np.uint8).astype(
-            np.int32
-        )
-        off += 1 + stride
-        if ftype == 0:  # None
-            cur = line
-        elif ftype == 1:  # Sub — per-byte-lane cumsum mod 256 (vectorized)
-            cur = (
-                np.cumsum(line.reshape(-1, bpp), axis=0, dtype=np.int64) & 0xFF
-            ).astype(np.int32).reshape(-1)
-        elif ftype == 2:  # Up
-            cur = (line + prev) & 0xFF
-        elif ftype == 3:  # Average
-            cur = line.copy()
-            for i in range(stride):
-                left = cur[i - bpp] if i >= bpp else 0
-                cur[i] = (cur[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            cur = line.copy()
-            for i in range(stride):
-                a = cur[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                c = prev[i - bpp] if i >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                cur[i] = (cur[i] + pred) & 0xFF
-        else:
-            raise ValueError(f"bad filter {ftype}")
-        out[y] = cur.astype(np.uint8)
-        prev = cur
-    return out, off
-
-
-def decode_png_any(buf: bytes) -> np.ndarray:
-    """General PNG decoder (real-world files, not just this module's
-    minimal writer): bit depths 1/2/4/8/16 (sub-byte for gray/palette,
-    values returned as stored), color types gray / RGB / palette /
-    gray+alpha / RGBA, all five scanline filters (None/Sub/Up/Average/
-    Paeth), sequential AND Adam7-interlaced row order. Returns (h, w)
-    for gray or (h, w, channels) uint8/uint16 — lossless, so tests pin
-    BIT-EXACT equality against javax.imageio's PNG writer.
-
-    Throughput: None/Up/Sub unfilter vectorized; Average/Paeth are
-    inherently left-recursive and loop per scanline byte — fine for
-    QA/thumbnail payloads; bulk ingest would plug a native decoder into
-    the same dispatch."""
-    assert buf[:8] == _PNG_SIG, "not a PNG"
-    pos = 8
-    idat = b""
-    plte = None
-    width = height = bitdepth = color = interlace = None
-    while pos < len(buf):
-        (length,) = struct.unpack(">I", buf[pos : pos + 4])
-        tag = buf[pos + 4 : pos + 8]
-        data = buf[pos + 8 : pos + 8 + length]
-        if tag == b"IHDR":
-            width, height, bitdepth, color, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", data[:13]
-            )
-        elif tag == b"PLTE":
-            plte = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3)
-        elif tag == b"IDAT":
-            idat += data
-        elif tag == b"IEND":
-            break
-        pos += 12 + length
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color]
-    if bitdepth not in (1, 2, 4, 8, 16):
-        raise NotImplementedError(f"bit depth {bitdepth}")
-    if bitdepth < 8 and color not in (0, 3):
-        raise ValueError("sub-byte depth is only legal for gray/palette PNG")
-    raw = zlib.decompress(idat)
-
-    if bitdepth < 8:
-        # 1/2/4-bit gray or palette: the filter unit is ONE byte and
-        # scanlines pack ceil(w*d/8) bytes; unpack after unfiltering.
-        # Sample values are returned as stored (0..2^d-1 gray levels or
-        # palette indices), matching javax's raster samples.
-        def _unpack(rows2d, wpx):
-            b = np.unpackbits(rows2d, axis=1)
-            if bitdepth == 1:
-                return b[:, :wpx]
-            g = b[:, : (b.shape[1] // bitdepth) * bitdepth].reshape(
-                rows2d.shape[0], -1, bitdepth
-            )
-            vals = np.zeros(g.shape[:2], np.uint8)
-            for i in range(bitdepth):
-                vals = (vals << 1) | g[:, :, i]
-            return vals[:, :wpx]
-
-        if interlace:
-            passes = (
-                (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-                (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-            )
-            vals = np.zeros((height, width), np.uint8)
-            off = 0
-            for x0, y0, dx, dy in passes:
-                wp = (width - x0 + dx - 1) // dx
-                hp = (height - y0 + dy - 1) // dy
-                if wp <= 0 or hp <= 0:
-                    continue
-                sub, off = _png_unfilter(raw, off, hp, (wp * bitdepth + 7) // 8, 1)
-                vals[y0::dy, x0::dx] = _unpack(sub, wp)
-        else:
-            sbytes = (width * bitdepth + 7) // 8
-            rows2d, _ = _png_unfilter(raw, 0, height, sbytes, 1)
-            vals = _unpack(rows2d, width)
-        if color == 3:
-            assert plte is not None, "palette PNG without PLTE"
-            return plte[vals]
-        return vals
-
-    sample_bytes = bitdepth // 8
-    bpp = channels * sample_bytes  # filter unit
-    stride = width * bpp
-
-    if interlace:
-        # Adam7 (PNG spec 8.2): seven independently filtered sub-images,
-        # scattered onto the pixel grid by per-pass (x0, y0, dx, dy)
-        passes = (
-            (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-            (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-        )
-        px = np.zeros((height, width, bpp), dtype=np.uint8)
-        off = 0
-        for x0, y0, dx, dy in passes:
-            wp = (width - x0 + dx - 1) // dx
-            hp = (height - y0 + dy - 1) // dy
-            if wp <= 0 or hp <= 0:
-                continue  # empty pass contributes zero bytes
-            sub, off = _png_unfilter(raw, off, hp, wp * bpp, bpp)
-            px[y0::dy, x0::dx] = sub.reshape(hp, wp, bpp)
-        out = px.reshape(height, stride)
-    else:
-        assert len(raw) >= height * (1 + stride), "truncated PNG data"
-        out, _ = _png_unfilter(raw, 0, height, stride, bpp)
-
-    if bitdepth == 16:
-        img = out.reshape(height, width, channels, 2).astype(np.uint16)
-        img = (img[..., 0] << 8) | img[..., 1]  # network byte order
-    else:
-        img = out.reshape(height, width, channels).astype(np.uint8)
-    if color == 3:  # palette lookup → RGB
-        assert plte is not None, "palette PNG without PLTE"
-        img = plte[img[..., 0]]
-    if img.shape[-1] == 1:
-        img = img[..., 0]
-    return img
-
-
-# --- GIF decode (87a/89a) ----------------------------------------------------
-
-def _gif_lzw_decode(min_code_size: int, data: bytes, n_pixels: int) -> bytes:
-    """GIF-variant LZW: LSB-first packing, CLEAR=2^N, EOI=CLEAR+1, width
-    grows at next_code == 2^width (no early change), 12-bit cap."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    table: list[bytes] = []
-    width = min_code_size + 1
-    acc = 0
-    nbits = 0
-    prev: bytes | None = None
-
-    def reset() -> list[bytes]:
-        return [bytes([i]) for i in range(clear)] + [b"", b""]
-
-    table = reset()
-    for byte in data:
-        acc |= byte << nbits
-        nbits += 8
-        while nbits >= width:
-            code = acc & ((1 << width) - 1)
-            acc >>= width
-            nbits -= width
-            if code == clear:
-                table = reset()
-                width = min_code_size + 1
-                prev = None
-                continue
-            if code == eoi:
-                return bytes(out)
-            if prev is None:
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                table.append(prev + entry[:1])
-            else:
-                entry = prev + prev[:1]
-                table.append(entry)
-            out += entry
-            prev = entry
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-            if len(out) >= n_pixels:
-                return bytes(out[:n_pixels])
-    return bytes(out)
-
-
-def decode_gif(buf: bytes) -> np.ndarray:
-    """GIF87a/89a → (n_frames, h, w, 3) uint8. Full LZW + palette +
-    interlace + frame compositing onto the previous canvas (disposal
-    'restore to background' approximated as keep — the common
-    browser-compatible interpretation for opaque frames); transparent
-    pixels keep the underlying canvas."""
-    assert buf[:6] in (b"GIF87a", b"GIF89a"), "not a GIF"
-    w, h, flags, _bg, _ar = struct.unpack("<HHBBB", buf[6:13])
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 0x07)
-        gct = np.frombuffer(buf[pos : pos + 3 * n], dtype=np.uint8).reshape(n, 3)
-        pos += 3 * n
-
-    frames = []
-    canvas = np.zeros((h, w, 3), dtype=np.uint8)
-    transparent = None
-    while pos < len(buf):
-        b0 = buf[pos]
-        if b0 == 0x3B:  # trailer
-            break
-        if b0 == 0x21:  # extension
-            label = buf[pos + 1]
-            pos += 2
-            if label == 0xF9:  # graphics control
-                sz = buf[pos]
-                gflags = buf[pos + 1]
-                transparent = buf[pos + 4] if (gflags & 1) else None
-                pos += 1 + sz
-            while buf[pos] != 0:  # skip sub-blocks
-                pos += 1 + buf[pos]
-            pos += 1
-        elif b0 == 0x2C:  # image descriptor
-            ix, iy, iw, ih, iflags = struct.unpack("<HHHHB", buf[pos + 1 : pos + 10])
-            pos += 10
-            ct = gct
-            if iflags & 0x80:
-                n = 2 << (iflags & 0x07)
-                ct = np.frombuffer(buf[pos : pos + 3 * n], dtype=np.uint8).reshape(n, 3)
-                pos += 3 * n
-            assert ct is not None, "GIF image without a color table"
-            min_code = buf[pos]
-            pos += 1
-            data = bytearray()
-            while buf[pos] != 0:
-                ln = buf[pos]
-                data += buf[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            pos += 1
-            idx = np.frombuffer(
-                _gif_lzw_decode(min_code, bytes(data), iw * ih), dtype=np.uint8
-            ).reshape(ih, iw)
-            if iflags & 0x40:  # interlaced: 4-pass row order
-                deinter = np.zeros_like(idx)
-                rows = (
-                    list(range(0, ih, 8))
-                    + list(range(4, ih, 8))
-                    + list(range(2, ih, 4))
-                    + list(range(1, ih, 2))
-                )
-                deinter[rows] = idx
-                idx = deinter
-            region = ct[np.minimum(idx, len(ct) - 1)]
-            target = canvas.copy()
-            if transparent is not None:
-                mask = idx != transparent
-                sub = target[iy : iy + ih, ix : ix + iw]
-                sub[mask] = region[mask]
-                target[iy : iy + ih, ix : ix + iw] = sub
-            else:
-                target[iy : iy + ih, ix : ix + iw] = region
-            frames.append(target)
-            canvas = target
-            transparent = None
-        else:
-            raise ValueError(f"unknown GIF block 0x{b0:02x}")
-    return np.stack(frames) if frames else np.zeros((0, h, w, 3), dtype=np.uint8)
-
-
-# --- BMP decode (Windows DIB) ------------------------------------------------
-
-def decode_bmp(buf: bytes, keep_alpha: bool = False) -> np.ndarray:
-    """Windows BMP → (h, w, 3) RGB or (h, w) gray uint8 (gray when a
-    palette maps every index to r==g==b, the javax TYPE_BYTE_GRAY shape).
-    `keep_alpha=True` returns (h, w, 4) RGBA for 32-bit DIBs (the 4th
-    channel verbatim) — ICO entries carry real per-pixel alpha there.
-
-    Wild-crawl coverage: BITMAPCOREHEADER (12-byte OS/2 v1, 3-byte
-    palette entries), BITMAPINFOHEADER (and the larger V4/V5 headers,
-    which extend it compatibly), bit depths 8 (palette) / 16 / 24 / 32,
-    uncompressed (BI_RGB, incl. 16-bit 555), BI_BITFIELDS (16/32-bit,
-    e.g. 565 — channels scaled to 8 bits with the DirectColorModel
-    round-half-up javax uses), RLE8, bottom-up and top-down rows, 4-byte
-    row padding. 1/4-bit still raises descriptively."""
-    if buf[:2] != b"BM":
-        raise ValueError("not a BMP (missing BM signature)")
-    (data_off,) = struct.unpack("<I", buf[10:14])
-    (hdr_size,) = struct.unpack("<I", buf[14:18])
-    if hdr_size == 12:  # BITMAPCOREHEADER: u16 dims, bottom-up, BI_RGB
-        w, h = struct.unpack("<HH", buf[18:22])
-        planes, bits = struct.unpack("<HH", buf[22:26])
-        comp, top_down, core = 0, False, True
-    elif hdr_size >= 40:
-        w, h_signed = struct.unpack("<ii", buf[18:26])
-        planes, bits = struct.unpack("<HH", buf[26:30])
-        (comp,) = struct.unpack("<I", buf[30:34])
-        top_down = h_signed < 0
-        h = -h_signed if top_down else h_signed
-        core = False
-    else:
-        raise NotImplementedError(f"BMP header size {hdr_size}")
-    if bits not in (1, 4, 8, 16, 24, 32):
-        raise NotImplementedError(f"BMP bit depth {bits}")
-    if comp not in (0, 1, 2, 3):
-        raise NotImplementedError(f"BMP compression {comp} (PNG/JPEG)")
-    if comp == 1 and bits != 8:
-        raise ValueError("RLE8 requires 8-bit samples")
-    if comp == 2 and bits != 4:
-        raise ValueError("RLE4 requires 4-bit samples")
-    if comp == 3 and bits not in (16, 32):
-        raise ValueError("BI_BITFIELDS requires 16- or 32-bit samples")
-
-    masks = None
-    if bits in (16, 32):
-        if comp == 3:
-            # BITMAPINFOHEADER: three DWORD masks follow the header;
-            # V4/V5 keep them at the same file offset inside the header
-            rmask, gmask, bmask = struct.unpack("<III", buf[54:66])
-            amask = (
-                struct.unpack("<I", buf[66:70])[0] if hdr_size >= 108 else 0
-            )
-        elif bits == 16:
-            rmask, gmask, bmask, amask = 0x7C00, 0x03E0, 0x001F, 0  # 555
-        else:
-            rmask, gmask, bmask, amask = 0xFF0000, 0xFF00, 0xFF, 0xFF000000
-        masks = (rmask, gmask, bmask, amask)
-
-    palette = None
-    if bits <= 8:
-        full = 1 << bits
-        if core:
-            entry_sz, pal_off = 3, 14 + 12
-            n_colors = (
-                min(full, (data_off - pal_off) // 3) if data_off > pal_off else full
-            )
-        else:
-            n_colors = struct.unpack("<I", buf[46:50])[0] or full
-            entry_sz, pal_off = 4, 14 + hdr_size
-        pal = np.frombuffer(
-            buf[pal_off : pal_off + entry_sz * n_colors], dtype=np.uint8
-        ).reshape(-1, entry_sz)
-        palette = pal[:, [2, 1, 0]].copy()  # BGR(A) -> RGB
-
-    if comp == 1:  # RLE8 (bottom-up only, per spec)
-        img = np.zeros((h, w), np.uint8)
-        x = y = 0
-        p = data_off
-        while p + 1 < len(buf):
-            n, v = buf[p], buf[p + 1]
-            p += 2
-            if n:  # encoded run
-                img[y, x : min(x + n, w)] = v
-                x += n
-            elif v == 0:  # end of line
-                x, y = 0, y + 1
-            elif v == 1:  # end of bitmap
-                break
-            elif v == 2:  # delta
-                x += buf[p]
-                y += buf[p + 1]
-                p += 2
-            else:  # absolute mode, padded to 2 bytes
-                img[y, x : min(x + v, w)] = np.frombuffer(
-                    buf[p : p + v], np.uint8
-                )[: max(0, min(v, w - x))]
-                x += v
-                p += v + (v & 1)
-        idx = img if top_down else img[::-1]
-    elif comp == 2:  # RLE4 (bottom-up; runs alternate the byte's nibbles)
-        img = np.zeros((h, w), np.uint8)
-        x = y = 0
-        p = data_off
-        while p + 1 < len(buf):
-            n, v = buf[p], buf[p + 1]
-            p += 2
-            if n:  # encoded run: hi, lo, hi, lo, ...
-                run = np.empty(n, np.uint8)
-                run[0::2] = v >> 4
-                run[1::2] = v & 0xF
-                m = min(n, w - x)
-                img[y, x : x + m] = run[:m]
-                x += n
-            elif v == 0:  # end of line
-                x, y = 0, y + 1
-            elif v == 1:  # end of bitmap
-                break
-            elif v == 2:  # delta
-                x += buf[p]
-                y += buf[p + 1]
-                p += 2
-            else:  # absolute: v nibbles packed, padded to a 2-byte boundary
-                nb = (v + 1) // 2
-                packed = np.frombuffer(buf[p : p + nb], np.uint8)
-                nibs = np.empty(2 * nb, np.uint8)
-                nibs[0::2] = packed >> 4
-                nibs[1::2] = packed & 0xF
-                m = max(0, min(v, w - x))
-                img[y, x : x + m] = nibs[:m]
-                x += v
-                p += nb + (nb & 1)
-        idx = img if top_down else img[::-1]
-    else:
-        stride = (w * max(bits, 8) // 8 + 3) & ~3 if bits >= 8 else ((w * bits + 31) // 32) * 4
-        raw = np.frombuffer(
-            buf[data_off : data_off + stride * h], np.uint8
-        ).reshape(h, stride)
-        rows = raw if top_down else raw[::-1]
-        if bits == 8:
-            idx = rows[:, :w]
-        elif bits == 1:
-            idx = np.unpackbits(rows, axis=1)[:, :w]
-        elif bits == 4:
-            nibs = np.empty((h, rows.shape[1] * 2), np.uint8)
-            nibs[:, 0::2] = rows >> 4
-            nibs[:, 1::2] = rows & 0xF
-            idx = nibs[:, :w]
-        elif bits == 16 or (bits == 32 and comp == 3):
-            word = "<u2" if bits == 16 else "<u4"
-            vals = (
-                np.ascontiguousarray(rows[:, : w * bits // 8])
-                .view(word)
-                .reshape(h, w)
-                .astype(np.uint32)
-            )
-
-            def _chan(mask):
-                shift = (mask & -mask).bit_length() - 1
-                m = mask >> shift
-                c = (vals >> shift) & m
-                if m == 0xFF:
-                    return c.astype(np.uint8)
-                # DirectColorModel scaling: round(c/max*255), half up —
-                # bit-exact with javax's getRGB on the same file
-                return ((c * 510 + m) // (2 * m)).astype(np.uint8)
-
-            rmask, gmask, bmask, amask = masks
-            chans = [_chan(rmask), _chan(gmask), _chan(bmask)]
-            if keep_alpha and amask:
-                chans.append(_chan(amask))
-            return np.dstack(chans)
-        else:
-            ch = bits // 8
-            px = rows[:, : w * ch].reshape(h, w, ch)
-            if keep_alpha and ch == 4:
-                return px[:, :, [2, 1, 0, 3]].copy()  # BGRA -> RGBA
-            return px[:, :, [2, 1, 0]].copy()  # BGR(A) -> RGB, alpha dropped
-    rgb = palette[idx]
-    if (rgb[..., 0] == rgb[..., 1]).all() and (rgb[..., 1] == rgb[..., 2]).all():
-        return rgb[..., 0].copy()
-    return rgb
-
-
-def decode_ico(buf: bytes) -> np.ndarray:
-    """ICO (favicon) container → the LARGEST icon's pixels, (h, w, 3/4)
-    or (h, w) uint8. Each directory entry is either a full PNG (modern
-    favicons) or a headerless DIB whose header height is DOUBLED (the
-    AND transparency mask follows the color data; applied as alpha for
-    32-bit entries, ignored for lower depths). The payload decoders are
-    the independently validated decode_png_any / decode_bmp machinery."""
-    if len(buf) < 6 or buf[:4] != b"\x00\x00\x01\x00":
-        raise ValueError("not an ICO (bad ICONDIR)")
-    (n,) = struct.unpack("<H", buf[4:6])
-    if n == 0:
-        raise ValueError("empty ICO")
-    best = None
-    for i in range(n):
-        e = buf[6 + 16 * i : 22 + 16 * i]
-        w, h = e[0] or 256, e[1] or 256
-        size, off = struct.unpack("<II", e[8:16])
-        if best is None or w * h > best[0]:
-            best = (w * h, w, h, off, size)
-    _, w, h, off, size = best
-    body = buf[off : off + size]
-    if body[:8] == _PNG_SIG:
-        return decode_png_any(body)
-    # headerless DIB: synthesize the BMP file header, halve the height
-    (hdr_size,) = struct.unpack("<I", body[0:4])
-    dib = bytearray(body)
-    (h2,) = struct.unpack("<i", body[8:12])
-    dib[8:12] = struct.pack("<i", h2 // 2)
-    bits = struct.unpack("<H", body[14:16])[0]
-    # biClrUsed (DIB offset 32): an 8-bit entry may store FEWER than 256
-    # palette entries, and pixel data starts right after the short
-    # palette — assuming 256 would point the data offset past it.
-    clr_used = struct.unpack("<I", body[32:36])[0] if hdr_size >= 36 else 0
-    pal_bytes = 4 * (clr_used or 256) if bits == 8 else 0
-    fh = b"BM" + (14 + len(dib)).to_bytes(4, "little") + b"\x00" * 4 + (
-        14 + hdr_size + pal_bytes
-    ).to_bytes(4, "little")
-    rgb = decode_bmp(bytes(fh) + bytes(dib), keep_alpha=(bits == 32))
-    if bits == 32:
-        # modern favicons carry real 8-bit alpha in the 4th DIB channel
-        # (often with a zeroed AND mask); an all-zero alpha plane means
-        # the channel is unused (legacy XRGB) -> fall back to AND mask
-        px_alpha = rgb[..., 3]
-        if px_alpha.any():
-            return rgb
-        rgb = rgb[..., :3]
-        # AND mask after the color rows: 1 bit/px, 4-byte-aligned rows,
-        # bottom-up; set bit = transparent
-        stride_px = w * 4
-        mrow = ((w + 31) // 32) * 4
-        mask = np.frombuffer(
-            bytes(dib[hdr_size + (h2 // 2) * stride_px :][: mrow * (h2 // 2)]),
-            np.uint8,
-        )
-        if mask.size == mrow * (h2 // 2):
-            bitsarr = np.unpackbits(mask.reshape(h2 // 2, mrow), axis=1)[:, :w]
-            alpha = np.where(bitsarr[::-1] == 1, 0, 255).astype(np.uint8)
-            out = np.dstack([rgb, alpha])
-            return out
-    return rgb
-
-
-# --- GIF encode (89a) --------------------------------------------------------
-
-def _gif_lzw_encode(indices: bytes, min_code_size: int) -> bytes:
-    """GIF-variant LZW encoder (the inverse of _gif_lzw_decode): LSB-first
-    packing, leading CLEAR, trailing EOI, width grows when next_code
-    reaches 2^width (matching the decoder's no-early-change rule), CLEAR
-    + table reset at the 4096-entry cap. Interop-validated BOTH ways
-    (javax.imageio reads our streams bit-exact, we read javax's) across
-    the 512/1024/2048/4096 code-width boundaries — the paired-off-by-one
-    bug class self-round-trips cannot catch (round-6 TIFF-LZW lesson)."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    width = min_code_size + 1
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    def fresh() -> dict[bytes, int]:
-        return {bytes([i]): i for i in range(clear)}
-
-    table = fresh()
-    next_code = eoi + 1
-    emit(clear)
-    w = b""
-    for b in indices:
-        wc = w + bytes([b])
-        if wc in table:
-            w = wc
-            continue
-        emit(table[w])
-        # the decoder appends OUR entry only on the NEXT code it reads,
-        # so its width bump lands one code later than our add: widen
-        # when next_code EXCEEDS 2^width (next_code == 2^width + 1)
-        table[wc] = next_code
-        next_code += 1
-        if next_code == (1 << width) + 1 and width < 12:
-            width += 1
-        elif next_code == 4097:  # table full: reset mid-stream
-            emit(clear)
-            table = fresh()
-            next_code = eoi + 1
-            width = min_code_size + 1
-        w = bytes([b])
-    if w:
-        emit(table[w])
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def encode_gif(
-    frames: "np.ndarray",
-    palette: "np.ndarray",
-    delay_cs: int = 10,
-    loop: bool = True,
-) -> bytes:
-    """(h, w) or (n, h, w) uint8 palette indices + (<=256, 3) palette →
-    GIF89a bytes. Multi-frame inputs become an animation (full-frame
-    keyframes, 'do not dispose', Netscape loop extension). Lossless:
-    decode_gif and javax.imageio recover the exact palette[indices]
-    pixels."""
-    frames = np.asarray(frames, dtype=np.uint8)
-    if frames.ndim == 2:
-        frames = frames[None]
-    n, h, w = frames.shape
-    palette = np.asarray(palette, dtype=np.uint8)
-    if palette.ndim != 2 or palette.shape[1] != 3 or len(palette) > 256:
-        raise ValueError("palette must be (<=256, 3) uint8")
-    if frames.max(initial=0) >= len(palette):
-        raise ValueError("index exceeds palette size")
-    # global color table size: power of two >= len(palette), min 2
-    gct_bits = max(1, int(np.ceil(np.log2(max(2, len(palette))))))
-    gct = np.zeros((1 << gct_bits, 3), np.uint8)
-    gct[: len(palette)] = palette
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", w, h)
-    out.append(0x80 | ((gct_bits - 1) << 4) | (gct_bits - 1))
-    out += b"\x00\x00"  # background index, aspect
-    out += gct.tobytes()
-    if n > 1 and loop:
-        out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
-    mcs = max(2, gct_bits)
-    for f in frames:
-        if n > 1:
-            # graphic control: delay, no transparency, keep previous
-            out += b"\x21\xf9\x04\x04" + struct.pack("<H", delay_cs)
-            out += b"\x00\x00"
-        out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
-        out.append(mcs)
-        lzw = _gif_lzw_encode(f.tobytes(), mcs)
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i : i + 255]
-            out.append(len(chunk))
-            out += chunk
-        out.append(0)  # block terminator
-    out.append(0x3B)  # trailer
     return bytes(out)

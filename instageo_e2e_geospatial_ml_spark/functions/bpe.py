@@ -111,35 +111,3 @@ def train_bpe(
     return spark.createDataFrame(
         merges, "rank int, left string, right string, merged string, pair_count long"
     )
-
-
-def apply_bpe(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Tokenize documents with a learned merge list (applied in rank
-    order, the same greedy fold as training): (id, tokens array,
-    n_tokens). Merge application is data-parallel column work — the
-    merge table is a plan constant, nothing shuffles."""
-    # One flattened symbol stream per doc is equivalent to per-word
-    # application: any symbol containing the end marker is word-final,
-    # and no learned pair's LEFT contains the marker (it was counted as
-    # word-internal during training), so merges cannot jump a boundary.
-    out = docs.select(
-        F.col(id_col),
-        F.expr(
-            f"flatten(transform(filter(split(lower({text_col}), '[^a-z]+'), "
-            "w -> w <> ''), "
-            "w -> concat(filter(split(w, ''), s -> s <> ''), "
-            f"array('{END}'))))"
-        ).alias("syms"),
-    )
-    for left, right in merges:
-        out = out.withColumn("syms", _merge_expr(left, right))
-    return out.select(
-        F.col(id_col),
-        F.col("syms").alias("tokens"),
-        F.size("syms").alias("n_tokens"),
-    )

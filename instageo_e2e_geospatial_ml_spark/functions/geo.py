@@ -117,21 +117,3 @@ def reproject_to_4326_udf(x: pd.Series, y: pd.Series, epsg: pd.Series) -> pd.Dat
             f"3857, UTM 326xx/327xx, {sorted(_proj.EPSG_INVERSE)})"
         )
     return pd.DataFrame({"x_4326": lon, "y_4326": lat})
-
-
-def cell_bounds_cols(cell: Column | str) -> list[Column]:
-    """lon/lat bounds of a cell id as pure column expressions."""
-    cell = F.col(cell) if isinstance(cell, str) else cell
-    res = F.shiftright(cell, _RES_SHIFT).cast("int")
-    n = F.shiftleft(F.lit(1).cast("long"), res).cast("double")
-    size = F.lit(180.0) / n
-    cx = (cell % F.lit(1 << _Y_SHIFT)).cast("double")
-    cy = (F.shiftright(cell, _Y_SHIFT) % F.lit(1 << 29)).cast("double")
-    lon_min = cx * size - F.lit(180.0)
-    lat_min = cy * size - F.lit(90.0)
-    return [
-        lon_min.alias("cell_lon_min"),
-        lat_min.alias("cell_lat_min"),
-        (lon_min + size).alias("cell_lon_max"),
-        (lat_min + size).alias("cell_lat_max"),
-    ]

@@ -514,10 +514,8 @@ def heavy_hitter_tokens(
     """Exact heavy hitters over the token stream: tokens whose total
     occurrence count is at least a 1/k share of ALL token occurrences
     (count · k >= total, integer cross-multiplied — no float share).
-    The batch ground truth for the streaming Misra-Gries summary
-    (streaming/heavy.py); one token-keyed count shuffle plus a scalar
-    total broadcast-joined as a literal-free cross join of one row.
-    Exact DuckDB twin: q66."""
+    One token-keyed count shuffle plus a scalar total broadcast-joined
+    as a literal-free cross join of one row. Exact DuckDB twin: q66."""
     toks = docs.select(
         F.explode(
             F.split(F.lower(F.trim(F.col(text_col))), r"\s+")

@@ -44,15 +44,14 @@ absolute-index lifting formulas).
   * jp2_decode(buf) -> np.ndarray   ((h, w) or (h, w, C); codestream or
     JP2 container)
 
-Validation note: unlike the JPEG/PNG/GIF/WebP codecs (validated against
-javax.imageio / the system libwebp), this container ships NO independent
-JPEG-2000 implementation — so tests pin (a) exhaustive encode→decode
+Validation note: unlike the JPEG codec (validated against javax.imageio),
+this container ships NO independent JPEG-2000 implementation — so tests pin (a) exhaustive encode→decode
 bit-exact round-trips across sizes / level counts / block sizes / value
 ranges, (b) the 5/3 lifting against an independently written direct-form
 implementation inside the test, (c) the MQ coder against a hand-traced
 spec example and its own statistical sanity, and (d) codestream structure
 via parse_jp2_header. The encoder exists for tests and fixtures; the
-decoder is the product surface (sources/images.decode_external('jp2')).
+decoder is the product surface (codecs.decode(..., 'jp2')).
 
 Implemented from the public spec text: EBCOT tier-1 coding passes
 (significance propagation / magnitude refinement / cleanup with the

@@ -1,5 +1,5 @@
 """CDC (change-data-capture) log compaction: upsert/delete event streams
-→ SCD2 history intervals and latest-state snapshots — the MERGE INTO /
+→ SCD2 history intervals, upsert merges and table diffs — the MERGE INTO /
 table-maintenance pattern a lakehouse ingest pipeline runs on every
 sync, composed here from one window pass.
 
@@ -11,9 +11,8 @@ their own. A key's last change being an upsert makes that row current
 the same lead() — no special cases.
 
 Scale: one window partitioned by key (the natural CDC shuffle — same key
-volume MERGE INTO would shuffle); latest_state is the same window keyed
-take-last, no join. History output ≈ #upserts rows, independent of
-partitioning.
+volume MERGE INTO would shuffle). History output ≈ #upserts rows,
+independent of partitioning.
 """
 
 from __future__ import annotations
@@ -49,27 +48,6 @@ def scd2_history(
             F.col("_next_us").isNull().alias("is_current"),
         )
         .drop("_tus", "_next_us")
-    )
-
-
-def latest_state(
-    changes: DataFrame,
-    key_col: str = "key",
-    ts_col: str = "ts",
-    op_col: str = "op",
-    tiebreak_col: str | None = None,
-    delete_op: str = "delete",
-) -> DataFrame:
-    """The compacted table: one row per key whose LAST change is an
-    upsert (deleted keys vanish) — exactly MERGE INTO replay order."""
-    order = [F.col(ts_col).desc()] + (
-        [F.col(tiebreak_col).desc()] if tiebreak_col else []
-    )
-    w = Window.partitionBy(key_col).orderBy(*order)
-    return (
-        changes.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (F.col(op_col) != delete_op))
-        .drop("_rn")
     )
 
 

@@ -678,55 +678,6 @@ def substring_duplicate_spans(
     return runs
 
 
-def remove_duplicate_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Strip each doc's LATER-occurrence duplicated token ranges (keep the
-    first occurrence corpus-wide, the ExactSubstr removal policy): spans'
-    (doc_b, b_start, n_tokens) rows mark tokens to delete from doc_b.
-
-    Pure JVM: spans collapse to one array per doc (collect_list after an
-    aggregation — bounded by spans per doc, not corpus size), then one
-    higher-order filter drops tokens whose position falls in any span.
-    Docs without spans pass through unchanged (left join). Returns the
-    docs frame with `text` rewritten and `n_removed_tokens`."""
-    per_doc = spans.groupBy(F.col("doc_b").alias(id_col)).agg(
-        F.collect_list(
-            F.struct(
-                F.col("b_start").alias("s"),
-                (F.col("b_start") + F.col("n_tokens") - 1).alias("e"),
-            )
-        ).alias("_spans")
-    )
-    t = tokens(text_col)
-    keep = F.filter(
-        F.arrays_zip(
-            F.col("_toks").alias("tok"),
-            F.sequence(F.lit(1), F.size("_toks")).alias("pos"),
-        ),
-        lambda z: ~F.exists(
-            F.col("_spans"), lambda s: (s["s"] <= z["pos"]) & (z["pos"] <= s["e"])
-        ),
-    )
-    out = (
-        docs.join(per_doc, id_col, "left")
-        .withColumn("_toks", t)
-        .withColumn(
-            "_kept",
-            F.when(F.col("_spans").isNull(), F.col("_toks")).otherwise(
-                F.transform(keep, lambda z: z["tok"])
-            ),
-        )
-        .withColumn("n_removed_tokens", F.size("_toks") - F.size("_kept"))
-        .withColumn(text_col, F.concat_ws(" ", F.col("_kept")))
-        .drop("_toks", "_kept", "_spans")
-    )
-    return out
-
-
 def dedup_lines(
     docs: DataFrame,
     line_words: int = 10,

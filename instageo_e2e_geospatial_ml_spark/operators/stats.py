@@ -416,10 +416,8 @@ def hll_registers(
     """HyperLogLog register table (Flajolet et al. 2007): md5-derived
     60-bit hash, low p bits pick the register, rho = leading-zero count
     of the remaining w = 60 - p bits + 1, one max per register. The
-    sketch CONTENT is engine-exact (unlike the float estimate), so an
-    oracle can pin every register; estimate_from_registers derives the
-    cardinality with integer-only aggregation (sum of 2^(R - rho) under
-    the global max R) so the only float op is one final division.
+    sketch CONTENT is engine-exact (unlike a float estimate), so an
+    oracle can pin every register.
 
     Plan: hash + register/rho are pure JVM column ops; one groupBy
     (register[, groups]) max — a single shuffle on a uniformly-hashed
@@ -457,61 +455,6 @@ def hll_sql(
         f"ELSE {w + 1} - length(bin(({h}) >> {p})) END) AS BIGINT) AS rho_max "
         f"FROM ({table_sql}) "
         f"GROUP BY {'ALL' if group_exprs else 'reg'}"
-    )
-
-
-def hll_estimate(registers: DataFrame, p: int = 9) -> DataFrame:
-    """Cardinality estimate from a register table (single row). Integer
-    mass sum: S = sum over ALL m = 2^p registers of 2^(R - rho), where R
-    is the observed max (missing registers carry rho = 0 -> 2^R each);
-    estimate = alpha_m * m^2 * 2^R / S with the Flajolet small-range
-    linear-counting correction. R <= 52 and m <= 2^14 keep S < 2^63."""
-    m = 1 << p
-    alpha = 0.7213 / (1.0 + 1.079 / m)  # standard alpha_m for m >= 128
-    # two-pass: R first (tiny), then the exact integer mass under R
-    r_big = registers.agg(
-        F.max("rho_max").alias("r_big"),
-        F.count(F.lit(1)).alias("m_hit"),
-    )
-    reg2 = registers.crossJoin(F.broadcast(r_big))
-    mass = reg2.groupBy("r_big", "m_hit").agg(
-        F.sum(
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(r_big - rho_max AS INT))"
-            )
-        ).alias("s_hit")
-    )
-    out = mass.select(
-        "r_big",
-        "m_hit",
-        (
-            F.col("s_hit")
-            + (F.lit(m) - F.col("m_hit"))
-            * F.expr("shiftleft(CAST(1 AS BIGINT), CAST(r_big AS INT))")
-        ).alias("s_total"),
-    )
-    est = out.select(
-        "r_big",
-        "m_hit",
-        "s_total",
-        (
-            F.lit(alpha * float(m) * float(m))
-            * F.pow(F.lit(2.0), F.col("r_big").cast("double"))
-            / F.col("s_total").cast("double")
-        ).alias("est_raw"),
-    )
-    # linear counting when est_raw <= 2.5 m and empty registers exist
-    return est.select(
-        "r_big",
-        "m_hit",
-        "s_total",
-        F.when(
-            (F.col("est_raw") <= F.lit(2.5 * m)) & (F.col("m_hit") < m),
-            F.lit(float(m))
-            * F.log(F.lit(float(m)) / (F.lit(m) - F.col("m_hit")).cast("double")),
-        )
-        .otherwise(F.col("est_raw"))
-        .alias("estimate"),
     )
 
 
@@ -567,42 +510,6 @@ def cms_sql(table_sql: str, key_expr: str, depth: int = 4, width: int = 256) -> 
     return (
         f"SELECT row, bucket, CAST(count(*) AS BIGINT) AS cnt "
         f"FROM ({rows}) GROUP BY row, bucket"
-    )
-
-
-def cms_estimate(
-    sketch: DataFrame,
-    probes: DataFrame,
-    key_col: str,
-    depth: int = 4,
-    width: int = 256,
-) -> DataFrame:
-    """Point-frequency estimates for `probes[key_col]` against a built
-    sketch: min over the key's depth cells (missing cell -> 0). The
-    sketch is depth*width rows — broadcast to the probe side, so the
-    probe scan never shuffles."""
-    h = F.array(
-        *[
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"cms{d}:"), F.col(key_col).cast("string"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            )
-            .cast("long")
-            .bitwiseAND(F.lit(width - 1))
-            for d in range(depth)
-        ]
-    )
-    cells = probes.select(
-        F.col(key_col), F.posexplode(h).alias("row", "bucket")
-    )
-    joined = cells.join(F.broadcast(sketch), ["row", "bucket"], "left")
-    return joined.groupBy(key_col).agg(
-        F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("est")
     )
 
 

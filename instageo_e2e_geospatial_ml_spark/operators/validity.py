@@ -1,9 +1,11 @@
-"""P9 validity filter + A4 granule-set dedup.
+"""P9 validity filter.
 
 Reference semantics (instageo/data/stac_utils.py:53-69 `is_valid_entry` +
 hls_utils.py:275-291): an observation's granule sequence is valid iff every
 timestep matched (no nulls) AND all matched granules are pairwise distinct.
-A4 (stac_utils.py:310): distinct granule-sets keyed by stac_items_str.
+A4 (stac_utils.py:310, distinct granule-sets) is not a separate operator:
+operators/chips.extract_chips regroups chip work by granule, and the
+registry's q09_granule_sets builds the stac_items_str sets inline.
 
 Pure array column expressions — no Python.
 """
@@ -24,9 +26,3 @@ def validity_filter(
     if num_steps is not None:
         cond = cond & (F.size(g) == F.lit(num_steps))
     return records.filter(cond)
-
-
-def distinct_granule_sets(records: DataFrame, key: str = "stac_items_str") -> DataFrame:
-    """A4: one row per unique granule sequence (the unit of chip-extraction
-    work — reference stac_utils.py:296-317 builds the dataset dict this way)."""
-    return records.select(key, "granules").dropDuplicates([key])

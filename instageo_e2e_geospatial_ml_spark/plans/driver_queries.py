@@ -1636,9 +1636,9 @@ GROUP BY 1, 2
 def q19_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-dup pairs over the north-star `(image_id, …, phash:int64)`
     table shape (BASELINE.json input_hint): the exact pigeonhole block
-    join + JVM bit_count(xor) refine (sources/images.hamming_neardup_pairs
-    — the same machinery phash_neardup_pairs drives from decoded pixels;
-    pixel→hash parity is pinned by the brute-force-hamming pytest golden).
+    join + JVM bit_count(xor) refine (sources/images.hamming_neardup_pairs;
+    over codecs.phash64 hashes of decoded pixels it is pinned by the
+    brute-force-hamming pytest golden).
     The hash column here is an md5-derived 60-bit int with planted
     near-dups (≤ 2 bit flips per doc_id % 7 == 0), so the DuckDB twin is
     the brute-force O(n²) pair scan over identical values."""

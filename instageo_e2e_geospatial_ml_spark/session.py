@@ -44,22 +44,3 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-TESTDATA_TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables=TESTDATA_TABLES) -> list[str]:
-    """Register the standard parquet tables under `sf_dir` as temp views so
-    users can drive the engine with plain spark.sql(...). Missing files are
-    skipped; returns the views actually registered."""
-    done = []
-    for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            spark.read.parquet(p).createOrReplaceTempView(t)
-            done.append(t)
-    return done

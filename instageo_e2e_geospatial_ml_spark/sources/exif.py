@@ -278,38 +278,3 @@ def exif_from_jpeg(buf: bytes) -> dict | None:
                 return parse_exif_tiff(payload[6:])
         pos += 2 + seg_len
     return None
-
-
-def apply_exif_orientation(arr, orientation: int):
-    """Normalize pixels to orientation 1 (top-left) — the mandatory
-    pre-augmentation step for camera imagery (training on un-rotated
-    phone photos silently feeds 90°-rotated content). EXIF orientation
-    values (CIPA DC-008 §4.6.4 table 9, 1-8):
-
-      1 normal                 5 transpose (flip + 90° CW)
-      2 mirror horizontal      6 rotate 90° CW
-      3 rotate 180°            7 transverse (flip + 90° CCW)
-      4 mirror vertical        8 rotate 90° CCW
-
-    Pure numpy views where possible (no copy until the caller needs
-    contiguity); works on (h, w) and (h, w, c)."""
-    import numpy as np
-
-    a = np.asarray(arr)
-    if orientation == 1 or orientation is None:
-        return a
-    if orientation == 2:
-        return a[:, ::-1]
-    if orientation == 3:
-        return a[::-1, ::-1]
-    if orientation == 4:
-        return a[::-1, :]
-    if orientation == 5:
-        return np.swapaxes(a, 0, 1)
-    if orientation == 6:
-        return np.swapaxes(a, 0, 1)[:, ::-1]
-    if orientation == 7:
-        return np.swapaxes(a, 0, 1)[::-1, ::-1]
-    if orientation == 8:
-        return np.swapaxes(a, 0, 1)[::-1, :]
-    raise ValueError(f"EXIF orientation {orientation} out of range 1-8")

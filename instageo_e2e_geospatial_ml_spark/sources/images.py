@@ -1,134 +1,24 @@
-"""Multimodal binary-column operators (image / audio / video payloads).
+"""Binary-payload operators over the images table, plus PCM helpers.
 
 The images table (input_hint schema) treats payloads as opaque binary +
-typed metadata. These operators run Arrow-batched over `mapInPandas` —
-schema, partitioning, UDF signature and batch shape are real and tested.
-JPEG (baseline, jpeg.py) and TIFF-LZW (codecs.lzw_decode) decode for REAL
-with no external libraries; audio/video codecs (MP3/MP4/webp) are STUBBED
-behind NotImplementedError because the container ships no such libraries
-(plug a decoder into codecs.decode / _SAMPLERS to enable them).
+typed metadata. Pixel operators run Arrow-batched over `mapInPandas` and
+decode through codecs.decode, the one format dispatch. Here:
+
+  * parse_jp2_header: JPEG-2000 SIZ metadata without a pixel decode;
+  * hamming_neardup_pairs: exact near-duplicate pairs over a 64-bit
+    perceptual-hash column (codecs.phash64 computes one from pixels);
+  * build_overviews: COG-style integer overview pyramid;
+  * wav_encode / wav_decode, audio_frame_energy, silence_runs: 16-bit PCM
+    containers and the silence-trim primitive.
 """
 
 from __future__ import annotations
-
-import hashlib
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import codecs
-
-IMAGE_FEATURES_SCHEMA = (
-    "image_id string, w int, h int, mean double, std double, p05 double, "
-    "p95 double, nonzero_frac double, phash long"
-)
-
-
-def image_features(images: DataFrame, batch_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Decode → per-image statistics + perceptual hash (one Arrow pass)."""
-
-    def feats(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode(bytes(r.bytes), int(r.w), int(r.h), 1, r.fmt)
-                a = arr.astype(np.float64)
-                rows.append(
-                    {
-                        "image_id": r.image_id,
-                        "w": int(r.w),
-                        "h": int(r.h),
-                        "mean": round(float(a.mean()), 6),
-                        "std": round(float(a.std()), 6),
-                        "p05": float(np.percentile(a, 5)),
-                        "p95": float(np.percentile(a, 95)),
-                        "nonzero_frac": round(float((a != 0).mean()), 6),
-                        "phash": codecs.phash64(arr),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "w", "h", "mean", "std", "p05", "p95",
-                    "nonzero_frac", "phash",
-                ],
-            )
-
-    return images.mapInPandas(feats, IMAGE_FEATURES_SCHEMA)
-
-
-def image_embeddings(
-    images: DataFrame, grid: int = 4, id_col: str = "image_id"
-) -> DataFrame:
-    """Deterministic visual embeddings WITHOUT any model dependency:
-    decode → grid×grid mean-pooled patches → per-image z-normalization →
-    flat array<float> of dim grid². This is the real Spark plumbing for a
-    model-backed encoder (swap the pooling for an ONNX/torch call inside
-    the same mapInPandas) and produces vectors directly consumable by the
-    similarity/dedup operators (lsh_buckets, *_topk,
-    embedding_neardup_pairs) — the multimodal → embedding → ANN path end
-    to end, no stubs."""
-
-    def emb(it):
-        for pdf in it:
-            ids, vecs = [], []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode(bytes(r.bytes), int(r.w), int(r.h), 1, r.fmt)
-                _b, h, w = arr.shape
-                fy, fx = max(1, h // grid), max(1, w // grid)
-                pooled = (
-                    arr[:, : grid * fy, : grid * fx]
-                    .reshape(grid, fy, grid, fx)
-                    .mean(axis=(1, 3))
-                    .astype(np.float64)
-                    .ravel()
-                )
-                std = pooled.std()
-                v = (pooled - pooled.mean()) / (std if std > 0 else 1.0)
-                ids.append(getattr(r, id_col))
-                vecs.append(v.astype(np.float32).tolist())
-            yield pd.DataFrame({id_col: ids, "embedding": vecs})
-
-    return images.mapInPandas(emb, f"{id_col} string, embedding array<float>")
-
-
-def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Mean-pool resize (integer factors; general resampling would need an
-    image lib). Output keeps the input schema with recomputed bytes/dims."""
-
-    def rs(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode(bytes(r.bytes), int(r.w), int(r.h), 1, r.fmt)
-                _b, h, w = arr.shape
-                fy, fx = max(1, h // out_h), max(1, w // out_w)
-                pooled = (
-                    arr[:, : out_h * fy, : out_w * fx]
-                    .reshape(1, out_h, fy, out_w, fx)
-                    .mean(axis=(2, 4))
-                )
-                out = pooled.astype(arr.dtype)
-                rows.append(
-                    {
-                        "image_id": r.image_id,
-                        "bytes": codecs.encode(out, r.fmt if r.fmt.startswith("raw") else "raw"),
-                        "w": out_w,
-                        "h": out_h,
-                        "fmt": r.fmt if r.fmt.startswith("raw") else "raw",
-                        "caption": r.caption,
-                        "phash": codecs.phash64(out),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
-            )
-
-    from ..synth import IMAGES_SCHEMA
-
-    return images.mapInPandas(rs, IMAGES_SCHEMA)
-
 
 # --- JPEG-2000 header parsing (S5, reference s2_utils.py:360-407) -----------
 
@@ -142,9 +32,8 @@ def parse_jp2_header(buf: bytes) -> dict:
     metadata the catalog/validation path needs from S2 JP2 assets, parsed
     directly from the SIZ marker (ISO 15444-1 A.5.1), no image library.
     Accepts both a raw codestream (SOC..SIZ) and a JP2 container (the
-    codestream lives in the 'jp2c' box). Pixel DECODE for the S2-shaped
-    subset (reversible 5/3, single tile, grayscale, LRCP) is REAL —
-    jp2.jp2_decode via decode_external('jp2'); other styles raise there.
+    codestream lives in the 'jp2c' box). Pixels decode through
+    codecs.decode(..., 'jp2'), which calls jp2.jp2_decode.
     """
     cs = buf
     if buf[:12] == _JP2_SIG:
@@ -193,201 +82,6 @@ def parse_jp2_header(buf: bytes) -> dict:
     }
 
 
-# --- stubbed external-format decoders --------------------------------------
-
-def decode_external(fmt: str, payload: bytes) -> np.ndarray:
-    """Dispatch for formats beyond the core raw/png/qdct set. tiff_lzw,
-    jpeg, gif, png_any and webp (lossless VP8L AND lossy VP8) are REAL
-    pure-Python decoders validated against independent implementations
-    (javax.imageio for JPEG/PNG/GIF, the system libwebp for both WebP
-    flavors); only mp3/mp4 remain documented stubs."""
-    if fmt == "tiff_lzw":
-        from .tiff import read_geotiff_bytes
-
-        arr, _ = read_geotiff_bytes(payload)
-        return arr[None, ...] if arr.ndim == 2 else np.moveaxis(arr, -1, 0)
-    if fmt in ("jpeg", "jpg"):
-        from ..jpeg import jpeg_decode
-
-        a = jpeg_decode(payload)
-        return a[None, ...] if a.ndim == 2 else np.moveaxis(a, -1, 0)
-    if fmt == "gif":
-        a = codecs.decode_gif(payload)  # (frames, h, w, 3)
-        return np.moveaxis(a[0], -1, 0)
-    if fmt == "bmp":
-        a = codecs.decode_bmp(payload)
-        return a[None, ...] if a.ndim == 2 else np.moveaxis(a, -1, 0)
-    if fmt == "ico":
-        a = codecs.decode_ico(payload)
-        return a[None, ...] if a.ndim == 2 else np.moveaxis(a, -1, 0)
-    if fmt == "png_any":
-        a = codecs.decode_png_any(payload)
-        return a[None, ...] if a.ndim == 2 else np.moveaxis(a, -1, 0)
-    if fmt == "webp":
-        # BOTH WebP flavors decode for real: lossless VP8L (RFC 9649,
-        # bit-exact vs system libwebp) and lossy VP8 key frames (RFC 6386,
-        # vp8.py — bit-exact YUV vs libwebp, non-normative RGB conversion)
-        from ..webp import webp_decode
-
-        return np.moveaxis(webp_decode(payload), -1, 0)
-    if fmt in ("jp2", "j2k"):
-        # real from-scratch T.800 codec (jp2.py): 5/3 and 9/7, single- or
-        # multi-tile, 1..255 components; remaining coding styles raise a
-        # descriptive NotImplementedError inside
-        from ..jp2 import jp2_decode
-
-        return jp2_decode(payload)[None, ...]
-    if fmt in ("mp3", "wav", "flac"):
-        raise NotImplementedError(
-            f"audio fmt={fmt!r}: sample decode needs a codec library this "
-            "container lacks (and ships no validator to pin a from-scratch "
-            "decoder against — see COVERAGE.md round-6 note); container/"
-            "frame METADATA extraction is real — "
-            "sources/media.parse_mp3_metadata / media_metadata()"
-        )
-    if fmt in ("mp4", "webm"):
-        raise NotImplementedError(
-            f"video fmt={fmt!r}: sample decode needs a codec library this "
-            "container lacks; ISO-BMFF box METADATA extraction is real — "
-            "sources/media.parse_mp4_metadata / media_metadata()"
-        )
-    raise NotImplementedError(fmt)
-
-
-def _deterministic_frames(video_id: str, n_frames: int, w: int, h: int) -> np.ndarray:
-    """Deterministic fake video frames (stand-in for a real mp4 decoder) so
-    the frame-sampling plumbing is testable end to end."""
-    seed = int.from_bytes(hashlib.md5(video_id.encode()).digest()[:8], "little")
-    rng = np.random.default_rng(seed)
-    base = rng.integers(0, 255, (1, h, w), dtype=np.uint16)
-    drift = np.arange(n_frames, dtype=np.uint16)[:, None, None] * 3
-    return ((base + drift) % 256).astype(np.uint16)
-
-
-FRAME_SCHEMA = "video_id string, frame_idx int, bytes binary, w int, h int, fmt string"
-
-
-def sample_video_frames(
-    videos: DataFrame, every_n: int = 10, fake_decode: bool = True,
-    n_frames: int = 100, w: int = 64, h: int = 64,
-) -> DataFrame:
-    """Frame sampling: one output row per sampled frame. With
-    fake_decode=True (default in this container) frames come from the
-    deterministic stand-in generator; otherwise decode_external raises
-    until a real decoder is registered."""
-
-    def sample(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.fmt == "gif":
-                    # REAL multi-frame decode (codecs.decode_gif): animated
-                    # GIF frames -> luminance uint16
-                    rgb = codecs.decode_gif(bytes(r.bytes))
-                    frames = rgb.mean(axis=3).astype(np.uint16)
-                elif fake_decode:
-                    frames = _deterministic_frames(r.video_id, n_frames, w, h)
-                else:
-                    frames = decode_external(r.fmt, bytes(r.bytes))
-                for i in range(0, frames.shape[0], every_n):
-                    rows.append(
-                        {
-                            "video_id": r.video_id,
-                            "frame_idx": i,
-                            "bytes": codecs.encode(frames[i : i + 1], "raw"),
-                            "w": frames.shape[2],
-                            "h": frames.shape[1],
-                            "fmt": "raw",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["video_id", "frame_idx", "bytes", "w", "h", "fmt"]
-            )
-
-    return videos.mapInPandas(sample, FRAME_SCHEMA)
-
-
-AUG_SCHEMA = "image_id string, aug string, bytes binary, w int, h int, fmt string"
-
-_AUGS = ("identity", "hflip", "vflip", "rot90", "rot180", "rot270")
-
-
-def augment_images(
-    images: DataFrame, augs: tuple[str, ...] = ("hflip", "rot90")
-) -> DataFrame:
-    """Deterministic geometric augmentation: one output row per (image,
-    aug) with REAL pixel transforms (numpy flips/rotations over the
-    decoded array — no external libs needed). The standard train-time
-    augmentation set; deterministic so augmented datasets are
-    reproducible and resumable (same keys on re-run)."""
-    bad = set(augs) - set(_AUGS)
-    if bad:
-        raise ValueError(f"unknown augs {bad}; available: {_AUGS}")
-
-    def apply(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode(bytes(r.bytes), r.w, r.h, 1, r.fmt)
-                for a in augs:
-                    if a == "identity":
-                        out = arr
-                    elif a == "hflip":
-                        out = arr[:, :, ::-1]
-                    elif a == "vflip":
-                        out = arr[:, ::-1, :]
-                    elif a == "rot90":
-                        out = np.rot90(arr, 1, axes=(1, 2))
-                    elif a == "rot180":
-                        out = np.rot90(arr, 2, axes=(1, 2))
-                    else:  # rot270
-                        out = np.rot90(arr, 3, axes=(1, 2))
-                    rows.append(
-                        {
-                            "image_id": f"{r.image_id}#{a}",
-                            "aug": a,
-                            "bytes": codecs.encode(np.ascontiguousarray(out), "raw"),
-                            "w": out.shape[2],
-                            "h": out.shape[1],
-                            "fmt": "raw",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "aug", "bytes", "w", "h", "fmt"]
-            )
-
-    return images.mapInPandas(apply, AUG_SCHEMA)
-
-
-def phash_table(images: DataFrame) -> DataFrame:
-    """(image_id, phash): 64-bit perceptual hash per image (decode +
-    DCT-free mean-hash in codecs.phash64) — one mapInPandas pass; the
-    downstream near-dup join is pure JVM."""
-
-    def hashes(it):
-        for pdf in it:
-            ids, hs = [], []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode(bytes(r.bytes), r.w, r.h, 1, r.fmt)
-                ids.append(r.image_id)
-                # int64 view: Spark has no unsigned 64-bit
-                hs.append(np.int64(np.uint64(codecs.phash64(arr))))
-            yield pd.DataFrame({"image_id": ids, "phash": hs})
-
-    return images.mapInPandas(hashes, "image_id string, phash long")
-
-
-def phash_neardup_pairs(
-    images: DataFrame, max_hamming: int = 8, max_bucket: int = 10_000
-) -> DataFrame:
-    """Image near-duplicate pairs by perceptual-hash Hamming distance:
-    one decode+hash pass (phash_table), then the exact pigeonhole
-    block join over the hash column (hamming_neardup_pairs).
-    Returns (id_a, id_b, hamming)."""
-    ph = phash_table(images).localCheckpoint(eager=False)
-    return hamming_neardup_pairs(ph, max_hamming=max_hamming, max_bucket=max_bucket)
-
-
 def hamming_neardup_pairs(
     ph: DataFrame,
     max_hamming: int = 8,
@@ -402,8 +96,9 @@ def hamming_neardup_pairs(
     candidates and bit_count(a XOR b) refines — all JVM. max_bucket
     drops degenerate blocks (e.g. all-black thumbnails), the LSH
     skew-guard pattern. This is the north-star per-row `phash:int64`
-    column join (the table shape in BASELINE.json input_hint); feed it
-    phash_table(images) to go from pixels. Returns (id_a, id_b, hamming)."""
+    column join (the table shape in BASELINE.json input_hint); hash
+    decoded pixels with codecs.phash64 to go from pixels. Returns
+    (id_a, id_b, hamming)."""
     from pyspark.sql import functions as F
 
     ph = ph.select(F.col(id_col).alias("image_id"), F.col(hash_col).alias("phash"))
@@ -449,93 +144,6 @@ def hamming_neardup_pairs(
     return pairs
 
 
-# --- audio plumbing (PCM payloads; real numpy compute, no external libs) ----
-
-AUDIO_FEATURES_SCHEMA = (
-    "audio_id string, n_samples long, rms double, peak long, zcr double"
-)
-
-
-def synth_audio_pdf(audio_ids: list[str], n_samples: int = 16000) -> pd.DataFrame:
-    """Deterministic 16-bit mono PCM stand-ins (seeded per id): a few
-    summed sinusoids + noise — enough structure that features are
-    meaningful and reproducible."""
-    rows = []
-    for aid in audio_ids:
-        seed = int.from_bytes(hashlib.md5(aid.encode()).digest()[:8], "little")
-        rng = np.random.default_rng(seed)
-        t = np.arange(n_samples, dtype=np.float64)
-        f1, f2 = rng.uniform(50, 400), rng.uniform(400, 3000)
-        wave = (
-            0.6 * np.sin(2 * np.pi * f1 * t / 16000.0)
-            + 0.3 * np.sin(2 * np.pi * f2 * t / 16000.0)
-            + 0.1 * rng.standard_normal(n_samples)
-        )
-        pcm = np.clip(wave * 20000.0, -32768, 32767).astype("<i2")
-        rows.append(
-            {"audio_id": aid, "bytes": pcm.tobytes(), "sr": 16000, "fmt": "pcm16"}
-        )
-    return pd.DataFrame(rows, columns=["audio_id", "bytes", "sr", "fmt"])
-
-
-def audio_features(audio: DataFrame) -> DataFrame:
-    """Per-clip features straight off the PCM bytes (RMS energy, integer
-    peak, zero-crossing rate) — the cheap audio quality/VAD gates a
-    training pipeline applies before any model. Encoded formats (mp3/flac)
-    raise via decode_external until a decoder is registered."""
-
-    def feats(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.fmt != "pcm16":
-                    decode_external(r.fmt, bytes(r.bytes))  # raises (stub)
-                x = np.frombuffer(bytes(r.bytes), dtype="<i2").astype(np.float64)
-                zc = int(np.count_nonzero(np.signbit(x[1:]) != np.signbit(x[:-1])))
-                rows.append(
-                    {
-                        "audio_id": r.audio_id,
-                        "n_samples": len(x),
-                        "rms": round(float(np.sqrt((x * x).mean())), 6),
-                        "peak": int(np.abs(x).max()),
-                        "zcr": round(zc / max(len(x) - 1, 1), 6),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["audio_id", "n_samples", "rms", "peak", "zcr"]
-            )
-
-    return audio.mapInPandas(feats, AUDIO_FEATURES_SCHEMA)
-
-
-def audio_windows(
-    audio: DataFrame, window_samples: int = 4000, hop_samples: int = 4000
-) -> DataFrame:
-    """Split clips into fixed windows (the frame-sampling analogue for the
-    audio modality): one row per window with its own PCM payload."""
-
-    def wins(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                x = np.frombuffer(bytes(r.bytes), dtype="<i2")
-                for i, s in enumerate(range(0, len(x) - window_samples + 1, hop_samples)):
-                    rows.append(
-                        {
-                            "audio_id": r.audio_id,
-                            "win_idx": i,
-                            "bytes": x[s : s + window_samples].tobytes(),
-                            "sr": int(r.sr),
-                            "fmt": "pcm16",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["audio_id", "win_idx", "bytes", "sr", "fmt"]
-            )
-
-    return audio.mapInPandas(wins, "audio_id string, win_idx int, bytes binary, sr int, fmt string")
-
-
 def wav_encode(pcm: np.ndarray, sample_rate: int = 16000) -> bytes:
     """16-bit PCM mono/stereo → RIFF/WAVE container ((n,) or (n, ch)
     int16). The standard uncompressed audio interchange format."""
@@ -576,57 +184,6 @@ def wav_decode(buf: bytes) -> tuple[np.ndarray, int]:
     if ch > 1:
         x = x.reshape(-1, ch)
     return x, sr
-
-
-# --- G.711 companding (mu-law / A-law) — real telephony PCM ------------------
-
-def mulaw_encode(pcm: np.ndarray) -> bytes:
-    """16-bit linear PCM → G.711 μ-law bytes (ITU-T G.711 segmented
-    approximation, the exact table javax.sound implements)."""
-    x = np.asarray(pcm, dtype=np.int64)
-    BIAS, CLIP = 0x84, 32635
-    sign = np.where(x < 0, 0x80, 0)
-    mag = np.minimum(np.abs(x), CLIP) + BIAS
-    exp = (np.floor(np.log2(mag)) - 7).astype(np.int64)
-    mant = (mag >> (exp + 3)) & 0x0F
-    return ((~(sign | (exp << 4) | mant)) & 0xFF).astype(np.uint8).tobytes()
-
-
-def mulaw_decode(buf: bytes) -> np.ndarray:
-    u = ~np.frombuffer(buf, dtype=np.uint8).astype(np.int64) & 0xFF
-    sign = u & 0x80
-    exp = (u >> 4) & 0x07
-    mant = u & 0x0F
-    mag = ((mant << 3) + 0x84 << exp) - 0x84
-    return np.where(sign, -mag, mag).astype(np.int16)
-
-
-def alaw_encode(pcm: np.ndarray) -> bytes:
-    """16-bit linear PCM → G.711 A-law bytes (the classic segmented
-    algorithm on 13-bit magnitudes, even-bit inversion mask)."""
-    x = np.asarray(pcm, dtype=np.int64) >> 3  # 13-bit domain
-    mask = np.where(x >= 0, 0xD5, 0x55)
-    m = np.where(x >= 0, x, -x - 1)
-    # segment = index of the first boundary >= m over
-    # {0x1F, 0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF}
-    seg = np.searchsorted(
-        np.array([0x1F, 0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF]), m, "left"
-    )
-    seg = np.minimum(seg, 7)
-    shift = np.where(seg < 2, 1, seg)
-    aval = (seg << 4) | ((m >> shift) & 0x0F)
-    return ((aval ^ mask) & 0xFF).astype(np.uint8).tobytes()
-
-
-def alaw_decode(buf: bytes) -> np.ndarray:
-    a = np.frombuffer(buf, dtype=np.uint8).astype(np.int64) ^ 0x55
-    seg = (a >> 4) & 0x07
-    # the <<4 plus segment offsets bake the 13->16-bit scaling in (g711
-    # convention) — no further shift
-    t = ((a & 0x0F) << 4) + 8
-    t = np.where(seg >= 1, t + 0x100, t)
-    t = np.where(seg > 1, t << np.maximum(seg - 1, 0), t)
-    return np.where(a & 0x80, t, -t).astype(np.int16)
 
 
 def build_overviews(

@@ -8,7 +8,7 @@ row_number window — it needs a persistent per-key counter: the first
 everything after is dropped. State per key is ONE integer (arrival-count
 mode), so the state store is bounded by the number of distinct keys
 regardless of volume — the same bounded-state discipline as
-streaming/sessions.py and streaming/neardup.py.
+streaming/sessions.py.
 
 Determinism: within a micro-batch, ALL of a key's arrivals are gathered
 across Arrow chunks and ordered by `order_col` before admission

@@ -108,31 +108,24 @@ def test_observations_have_golden_mgrs():
 
 def test_decoders_robust_to_corruption():
     # crawl-scale ingest sees truncated/flipped payloads in every format:
-    # each decoder must raise cleanly or return data — never hang.
-    # (JP2 has its own sweep in test_jp2.py.)
+    # codecs.decode must raise cleanly or return data — never hang.
+    # (JP2 also has its own sweep in test_jp2.py.)
     import struct as _struct
 
     import numpy as np
 
     from instageo_e2e_geospatial_ml_spark import codecs
-    from instageo_e2e_geospatial_ml_spark.jpeg import jpeg_decode, jpeg_encode
-    from instageo_e2e_geospatial_ml_spark.webp import webp_decode
 
     rng = np.random.default_rng(21)
-    g = rng.integers(0, 256, (32, 40)).astype(np.uint8)
-    fixtures = [
-        (jpeg_decode, jpeg_encode(g, quality=85)),
-        (codecs.decode_png_any, codecs.encode_png(g.astype(np.uint16)[None])),
-        (codecs.decode_gif, None),  # gif fixture below if encoder exists
-    ]
-    fixtures = [(d, b) for d, b in fixtures if b is not None]
+    g = rng.integers(0, 256, (1, 32, 40)).astype(np.uint16)
+    fixtures = [(fmt, codecs.encode(g, fmt)) for fmt in ("jpeg", "png", "jp2")]
     allowed = (
         ValueError, NotImplementedError, IndexError, KeyError,
         EOFError, AssertionError, _struct.error, Exception,
     )
     # Exception is deliberately broad: ANY clean raise is acceptable —
     # the assertion this test makes is termination, not error taxonomy
-    for dec, buf in fixtures:
+    for fmt, buf in fixtures:
         for trial in range(25):
             b = bytearray(buf)
             kind = trial % 3
@@ -145,147 +138,8 @@ def test_decoders_robust_to_corruption():
                 i = int(rng.integers(0, max(1, len(b) - 6)))
                 b[i : i + 4] = rng.integers(0, 256, 4, dtype=np.uint8).tobytes()
             try:
-                dec(bytes(b))
+                codecs.decode(bytes(b), 40, 32, 1, fmt)
             except allowed:
                 pass
 
-    # webp: flip bytes inside a hand-rolled minimal container too
-    hdr = b"RIFF" + (20).to_bytes(4, "little") + b"WEBPVP8L" + (4).to_bytes(4, "little") + b"\x2f\x00\x00\x00"
-    for trial in range(10):
-        b = bytearray(hdr)
-        i = int(rng.integers(0, len(b)))
-        b[i] ^= int(rng.integers(1, 256))
-        try:
-            webp_decode(bytes(b))
-        except allowed:
-            pass
 
-
-def test_ico_favicon_decode():
-    # ICO container walk: PNG entries (modern favicons) and headerless
-    # doubled-height DIB entries, largest-icon selection; payloads ride
-    # the independently validated PNG/BMP decoders
-    import struct
-
-    import numpy as np
-
-    from instageo_e2e_geospatial_ml_spark.codecs import (
-        decode_ico,
-        decode_png_any,
-        encode_png,
-    )
-
-    rng = np.random.default_rng(19)
-
-    def _entry(w, h, bpp, size, off):
-        return (
-            bytes([w % 256, h % 256, 0, 0])
-            + (1).to_bytes(2, "little") + bpp.to_bytes(2, "little")
-            + size.to_bytes(4, "little") + off.to_bytes(4, "little")
-        )
-
-    # PNG entry
-    g = rng.integers(0, 65536, (1, 16, 16)).astype(np.uint16)
-    png = encode_png(g)
-    ico = b"\x00\x00\x01\x00" + (1).to_bytes(2, "little") + _entry(16, 16, 32, len(png), 22) + png
-    np.testing.assert_array_equal(decode_ico(ico), decode_png_any(png))
-
-    # DIB entry: 24-bit, doubled header height, AND mask trailing
-    h, w = 8, 8
-    img = rng.integers(0, 256, (h, w, 3)).astype(np.uint8)
-    rows = np.zeros((h, (w * 3 + 3) & ~3), np.uint8)
-    rows[:, : w * 3] = img[::-1, :, ::-1].reshape(h, w * 3)
-    mask = b"\x00" * (((w + 31) // 32) * 4 * h)
-    dib = struct.pack("<IiiHHIIiiII", 40, w, 2 * h, 1, 24, 0, 0, 0, 0, 0, 0) + rows.tobytes() + mask
-    ico2 = b"\x00\x00\x01\x00" + (1).to_bytes(2, "little") + _entry(w, h, 24, len(dib), 22) + dib
-    np.testing.assert_array_equal(decode_ico(ico2), img)
-
-    # largest-entry selection: tiny DIB + big PNG → PNG wins
-    ico3 = (
-        b"\x00\x00\x01\x00" + (2).to_bytes(2, "little")
-        + _entry(w, h, 24, len(dib), 38)
-        + _entry(16, 16, 32, len(png), 38 + len(dib))
-        + dib + png
-    )
-    np.testing.assert_array_equal(decode_ico(ico3), decode_png_any(png))
-
-    import pytest
-
-    with pytest.raises(ValueError, match="ICO"):
-        decode_ico(b"\x00\x00\x02\x00junk")
-
-
-def test_ico_clr_used_and_32bit_alpha():
-    """ADVICE r6 fixes: (a) 8-bit ICO DIB with biClrUsed < 256 stores
-    pixels right after the short palette — the synthesized data offset
-    must honour it; (b) 32-bit entries with real per-pixel alpha (and a
-    zeroed AND mask) keep that alpha; (c) an all-zero alpha plane means
-    legacy XRGB → AND-mask fallback."""
-    import struct
-
-    import numpy as np
-
-    from instageo_e2e_geospatial_ml_spark.codecs import decode_ico
-
-    rng = np.random.default_rng(23)
-
-    def _entry(w, h, bpp, size, off):
-        return (
-            bytes([w % 256, h % 256, 0, 0])
-            + (1).to_bytes(2, "little") + bpp.to_bytes(2, "little")
-            + size.to_bytes(4, "little") + off.to_bytes(4, "little")
-        )
-
-    def _ico(dib, w, h, bpp):
-        return (
-            b"\x00\x00\x01\x00" + (1).to_bytes(2, "little")
-            + _entry(w, h, bpp, len(dib), 22) + dib
-        )
-
-    h = w = 8
-    mrow = ((w + 31) // 32) * 4
-
-    # (a) 8-bit, 16-entry palette (biClrUsed=16)
-    n_colors = 16
-    pal = rng.integers(0, 256, (n_colors, 4)).astype(np.uint8)
-    pal[:, 3] = 0
-    idx = rng.integers(0, n_colors, (h, w)).astype(np.uint8)
-    rows = np.zeros((h, (w + 3) & ~3), np.uint8)
-    rows[:, :w] = idx[::-1]
-    dib8 = (
-        struct.pack("<IiiHHIIiiII", 40, w, 2 * h, 1, 8, 0, 0, 0, 0, n_colors, 0)
-        + pal.tobytes() + rows.tobytes() + b"\x00" * (mrow * h)
-    )
-    got = decode_ico(_ico(dib8, w, h, 8))
-    want = pal[idx][:, :, [2, 1, 0]]  # BGRX palette -> RGB
-    if want.ndim == 3 and (want[..., 0] == want[..., 1]).all() and (
-        want[..., 1] == want[..., 2]
-    ).all():
-        want = want[..., 0]
-    np.testing.assert_array_equal(got, want)
-
-    # (b) 32-bit with real alpha, zeroed AND mask
-    img = rng.integers(0, 256, (h, w, 4)).astype(np.uint8)
-    img[..., 3] = rng.integers(1, 256, (h, w))  # non-trivial alpha
-    rows32 = img[::-1][:, :, [2, 1, 0, 3]].reshape(h, w * 4)  # RGBA->BGRA
-    dib32 = (
-        struct.pack("<IiiHHIIiiII", 40, w, 2 * h, 1, 32, 0, 0, 0, 0, 0, 0)
-        + rows32.tobytes() + b"\x00" * (mrow * h)
-    )
-    np.testing.assert_array_equal(decode_ico(_ico(dib32, w, h, 32)), img)
-
-    # (c) zero alpha channel -> AND mask supplies transparency
-    img0 = img.copy()
-    img0[..., 3] = 0
-    rows0 = img0[::-1][:, :, [2, 1, 0, 3]].reshape(h, w * 4)
-    # mask: top-left pixel transparent (bit set), bottom-up rows
-    mask = np.zeros((h, mrow), np.uint8)
-    mask[h - 1, 0] = 0x80
-    dib0 = (
-        struct.pack("<IiiHHIIiiII", 40, w, 2 * h, 1, 32, 0, 0, 0, 0, 0, 0)
-        + rows0.tobytes() + mask.tobytes()
-    )
-    got0 = decode_ico(_ico(dib0, w, h, 32))
-    assert got0.shape == (h, w, 4)
-    np.testing.assert_array_equal(got0[..., :3], img0[..., :3])
-    assert got0[0, 0, 3] == 0 and got0[0, 1, 3] == 255

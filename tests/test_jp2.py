@@ -206,15 +206,6 @@ def test_jp2_structure_and_unsupported_styles():
         jp2_decode(b"\x00" * 16)
 
 
-def test_decode_external_jp2_wired():
-    from instageo_e2e_geospatial_ml_spark.sources.images import decode_external
-
-    img = (np.arange(24 * 24).reshape(24, 24) * 7 % 3000).astype(np.uint16)
-    arr = decode_external("jp2", jp2_encode(img, levels=1))
-    assert arr.shape == (1, 24, 24)
-    assert (arr[0] == img).all()
-
-
 def test_header_bit_io_duality_and_align():
     """_HdrWriter/_HdrReader round-trip with FF stuffing: after align()
     the reader must land exactly on the first body byte, including when

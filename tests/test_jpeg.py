@@ -106,18 +106,13 @@ def test_jpeg_interop_with_javax_imageio(spark):
 
 
 def test_image_pipeline_over_real_jpeg_payloads(spark):
-    # the multimodal path (features -> embeddings -> ANN near-dup) now
-    # runs over REAL JPEG payloads end to end — no stub anywhere
+    # JPEG payloads decode through codecs.decode, and a near-duplicate
+    # pair survives compression into the ANN near-dup operator
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from instageo_e2e_geospatial_ml_spark import codecs
     from instageo_e2e_geospatial_ml_spark.operators.dedup import (
         embedding_neardup_pairs,
-    )
-    from instageo_e2e_geospatial_ml_spark.sources.images import (
-        image_embeddings,
-        image_features,
     )
 
     rng = np.random.default_rng(9)
@@ -130,75 +125,22 @@ def test_image_pipeline_over_real_jpeg_payloads(spark):
             img = np.clip(base + 2, 0, 255)  # near-duplicate of j0
         else:
             img = rng.integers(0, 256, (1, 48, 48)).astype(np.uint16)
-        rows.append(
-            {
-                "image_id": f"j{i}",
-                "bytes": codecs.encode(img, "jpeg"),
-                "w": 48,
-                "h": 48,
-                "fmt": "jpeg",
-            }
-        )
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    feats = image_features(df).toPandas()
-    assert len(feats) == 6 and (feats["std"] > 0).all()
-
-    emb = image_embeddings(df, grid=4)
-    # embedding_neardup_pairs keys on a LONG id: map jN -> N
-    e = emb.select(
-        F.substring("image_id", 2, 10).cast("long").alias("vec_id"), "embedding"
-    )
+        arr = codecs.decode(codecs.encode(img, "jpeg"), 48, 48, 1, "jpeg")
+        assert arr.shape == (1, 48, 48) and arr.std() > 0
+        # 4x4 mean-pooled, z-normalized pixels as the embedding
+        pooled = arr[0].reshape(4, 12, 4, 12).mean(axis=(1, 3)).ravel()
+        v = (pooled - pooled.mean()) / pooled.std()
+        rows.append({"vec_id": i, "embedding": v.astype(np.float32).tolist()})
+    e = spark.createDataFrame(pd.DataFrame(rows))
     pairs = embedding_neardup_pairs(e, threshold=0.98, exact=True).toPandas()
     got = set(zip(pairs["vec_a"], pairs["vec_b"]))
     assert (0, 1) in got  # the near-dup pair survives JPEG compression
-
-
-def test_decode_png_any_bit_exact_vs_javax(spark):
-    # PNG is lossless: decoding Java's adaptively-filtered output must be
-    # BIT-EXACT (exercises Sub/Up/Average/Paeth unfiltering paths)
-    from instageo_e2e_geospatial_ml_spark.codecs import decode_png_any, encode_png
-
-    jvm = spark._jvm
-    h, w = 37, 53
-    rng = np.random.default_rng(2)
-    # half random, half smooth so the encoder picks varied filters
-    rgb = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    rgb[: h // 2] = np.arange(w, dtype=np.uint8)[None, :, None] * 4
-
-    bimg = jvm.java.awt.image.BufferedImage(
-        w, h, jvm.java.awt.image.BufferedImage.TYPE_INT_RGB
-    )
-    for y in range(h):
-        for x in range(w):
-            r, g, b = map(int, rgb[y, x])
-            bimg.setRGB(x, y, (r << 16) | (g << 8) | b)
-    baos = jvm.java.io.ByteArrayOutputStream()
-    jvm.javax.imageio.ImageIO.write(bimg, "png", baos)
-    ours = decode_png_any(bytes(baos.toByteArray()))
-    assert ours.shape == (h, w, 3) and (ours == rgb).all()
-
-    gimg = jvm.java.awt.image.BufferedImage(
-        w, h, jvm.java.awt.image.BufferedImage.TYPE_BYTE_GRAY
-    )
-    g = rng.integers(0, 256, (h, w), dtype=np.uint8)
-    for y in range(h):
-        for x in range(w):
-            gimg.getRaster().setSample(x, y, 0, int(g[y, x]))
-    baos2 = jvm.java.io.ByteArrayOutputStream()
-    jvm.javax.imageio.ImageIO.write(gimg, "png", baos2)
-    assert (decode_png_any(bytes(baos2.toByteArray())) == g).all()
-
-    # our own minimal 16-bit gray writer parses through the general path
-    arr16 = rng.integers(0, 10000, (1, 20, 24), dtype=np.uint16)
-    got16 = decode_png_any(encode_png(arr16))
-    assert got16.dtype == np.uint16 and (got16 == arr16[0]).all()
 
 
 def test_wav_container_interop(spark):
     # WAV is a raw container: decoding a javax.sound-written file must be
     # sample-exact, and javax.sound must parse our writer's metadata
     from instageo_e2e_geospatial_ml_spark.sources.images import (
-        audio_features,
         wav_decode,
         wav_encode,
     )
@@ -224,96 +166,6 @@ def test_wav_container_interop(spark):
     st = np.stack([pcm, -pcm], axis=1)
     got2, sr2 = wav_decode(wav_encode(st, 8000))
     assert sr2 == 8000 and got2.shape == st.shape and (got2 == st).all()
-
-
-def _lsb_pack(codes, width_seq):
-    acc = 0
-    n = 0
-    out = bytearray()
-    for c, wd in zip(codes, width_seq):
-        acc |= c << n
-        n += wd
-        while n >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            n -= 8
-    if n:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _gif_frame_block(ix, iy, iw, ih, pixels):
-    # literal-only LZW stream (CLEAR before the table can force a width
-    # bump) — valid GIF data any decoder must accept
-    import struct as st
-
-    min_code = 7
-    clear, eoi = 128, 129
-    codes, widths = [clear], [8]
-    for i, p in enumerate(pixels):
-        if i and i % 100 == 0:
-            codes.append(clear)
-            widths.append(8)
-        codes.append(int(p))
-        widths.append(8)
-    codes.append(eoi)
-    widths.append(8)
-    data = _lsb_pack(codes, widths)
-    out = b"\x2c" + st.pack("<HHHHB", ix, iy, iw, ih, 0) + bytes([min_code])
-    for i in range(0, len(data), 255):
-        chunk = data[i : i + 255]
-        out += bytes([len(chunk)]) + chunk
-    return out + b"\x00"
-
-
-def test_gif_decode_interop_and_animation(spark):
-    import struct as st
-
-    from instageo_e2e_geospatial_ml_spark.codecs import decode_gif
-
-    # 1) javax.imageio-written gray GIF decodes BIT-EXACT
-    jvm = spark._jvm
-    h, w = 33, 47
-    rng = np.random.default_rng(4)
-    g = rng.integers(0, 256, (h, w), dtype=np.uint8)
-    gimg = jvm.java.awt.image.BufferedImage(
-        w, h, jvm.java.awt.image.BufferedImage.TYPE_BYTE_GRAY
-    )
-    for y in range(h):
-        for x in range(w):
-            gimg.getRaster().setSample(x, y, 0, int(g[y, x]))
-    baos = jvm.java.io.ByteArrayOutputStream()
-    jvm.javax.imageio.ImageIO.write(gimg, "gif", baos)
-    frames = decode_gif(bytes(baos.toByteArray()))
-    assert frames.shape == (1, h, w, 3)
-    assert (frames[0][..., 0] == g).all()
-
-    # 2) hand-built 2-frame animation: frame 2 overwrites a sub-rect and
-    # composites onto frame 1's canvas
-    W, H = 10, 6
-    gct = bytes(v for i in range(128) for v in (2 * i, 2 * i, 2 * i))
-    hdr = b"GIF89a" + st.pack("<HHBBB", W, H, 0x80 | 0x06, 0, 0) + gct
-    f1 = np.full(W * H, 10, dtype=np.uint8)
-    f2 = np.full(4 * 2, 99, dtype=np.uint8)  # 4x2 patch at (3,2)
-    gif = hdr + _gif_frame_block(0, 0, W, H, f1) + _gif_frame_block(3, 2, 4, 2, f2) + b"\x3b"
-    out = decode_gif(gif)
-    assert out.shape == (2, H, W, 3)
-    assert (out[0] == 20).all()  # palette doubles the index
-    assert (out[1][2:4, 3:7, 0] == 198).all()
-    assert (out[1][0, 0] == 20).all()  # rest composited from frame 1
-
-    # 3) the frame-sampling operator over a REAL animated gif
-    import pandas as pd
-
-    from instageo_e2e_geospatial_ml_spark.sources.images import sample_video_frames
-
-    vids = spark.createDataFrame(
-        pd.DataFrame({"video_id": ["g"], "bytes": [gif], "fmt": ["gif"]})
-    )
-    fr = sample_video_frames(vids, every_n=1).toPandas()
-    assert list(fr["frame_idx"]) == [0, 1]
-    a0 = np.frombuffer(fr.iloc[0]["bytes"], dtype="<u2").reshape(H, W)
-    assert (a0 == 20).all()
 
 
 def test_lzw_hand_vector_and_roundtrips():
@@ -371,56 +223,6 @@ def test_codec_roundtrip_properties():
 
     lzw_rt()
     pb_rt()
-
-
-def test_g711_companding_vs_javax(spark):
-    from instageo_e2e_geospatial_ml_spark.sources.images import (
-        alaw_decode,
-        alaw_encode,
-        mulaw_decode,
-        mulaw_encode,
-    )
-
-    jvm = spark._jvm
-    pcm = np.arange(-32768, 32768, 7).astype(np.int16)
-
-    def java_compand(pcm, enc_name):
-        src_fmt = jvm.javax.sound.sampled.AudioFormat(8000.0, 16, 1, True, False)
-        enc = getattr(jvm.javax.sound.sampled.AudioFormat.Encoding, enc_name)
-        dst = jvm.javax.sound.sampled.AudioFormat(enc, 8000.0, 8, 1, 1, 8000.0, False)
-        bais = jvm.java.io.ByteArrayInputStream(bytearray(pcm.tobytes()))
-        ais = jvm.javax.sound.sampled.AudioInputStream(bais, src_fmt, len(pcm))
-        conv = jvm.javax.sound.sampled.AudioSystem.getAudioInputStream(dst, ais)
-        baos = jvm.java.io.ByteArrayOutputStream()
-        t = jvm.javax.sound.sampled.AudioFileFormat.Type.WAVE
-        jvm.javax.sound.sampled.AudioSystem.write(conv, t, baos)
-        raw = bytes(baos.toByteArray())
-        i = raw.find(b"data")
-        return np.frombuffer(raw[i + 8 : i + 8 + len(pcm)], dtype=np.uint8)
-
-    # byte agreement with the JVM's converters; the residual percent is
-    # Java's historic conventions (mu-law negation overflow at the int16
-    # floor, A-law "-sample-8" rounding bias), not G.711 divergence
-    ju = java_compand(pcm, "ULAW")
-    ours_u = np.frombuffer(mulaw_encode(pcm), dtype=np.uint8)
-    assert (ju == ours_u).mean() > 0.99
-    mism = pcm[ju != ours_u]
-    assert (np.abs(mism.astype(int)) > 31000).all()  # only at the extremes
-
-    ja = java_compand(pcm, "ALAW")
-    ours_a = np.frombuffer(alaw_encode(pcm), dtype=np.uint8)
-    assert (ja == ours_a).mean() > 0.97
-
-    # our own round trips hold the G.711 error bounds
-    du = mulaw_decode(mulaw_encode(pcm)).astype(int)
-    assert np.abs(du - pcm).max() <= 1024
-    da = alaw_decode(alaw_encode(pcm)).astype(int)
-    assert np.abs(da - pcm).max() <= 1024
-    # decoding JAVA's bytes also reconstructs the signal (no sign flips) —
-    # outside the int16 floor where Java's own negation overflow corrupts
-    # ITS bytes before we ever see them
-    ok = np.abs(pcm.astype(int)) <= 31000
-    assert np.abs(mulaw_decode(ju.tobytes()).astype(int)[ok] - pcm[ok]).max() <= 1024
 
 
 def test_jpeg_truncated_entropy_and_shape_mismatch():
@@ -534,134 +336,6 @@ def test_progressive_jpeg_random_luma_stress(spark):
     assert np.abs(ours.astype(int) - theirs.astype(int)).max() <= 1
 
 
-def test_adam7_interlaced_png_bit_exact_vs_javax(spark):
-    # Adam7 fixtures from javax.imageio's PNG writer (progressive mode =
-    # interlace); lossless, so decode must be BIT-EXACT
-    from instageo_e2e_geospatial_ml_spark.codecs import decode_png_any
-
-    jvm = spark._jvm
-    rng = np.random.default_rng(11)
-
-    def _java_png_interlaced(arr):
-        gray = arr.ndim == 2
-        h, w = arr.shape[:2]
-        t = (
-            jvm.java.awt.image.BufferedImage.TYPE_BYTE_GRAY
-            if gray
-            else jvm.java.awt.image.BufferedImage.TYPE_INT_RGB
-        )
-        bimg = jvm.java.awt.image.BufferedImage(w, h, t)
-        if gray:
-            raster = bimg.getRaster()
-            for y in range(h):
-                for x in range(w):
-                    raster.setSample(x, y, 0, int(arr[y, x]))
-        else:
-            for y in range(h):
-                for x in range(w):
-                    r, g, b = (int(v) for v in arr[y, x])
-                    bimg.setRGB(x, y, (r << 16) | (g << 8) | b)
-        writer = jvm.javax.imageio.ImageIO.getImageWritersByFormatName("png").next()
-        param = writer.getDefaultWriteParam()
-        param.setProgressiveMode(jvm.javax.imageio.ImageWriteParam.MODE_DEFAULT)
-        baos = jvm.java.io.ByteArrayOutputStream()
-        ios = jvm.javax.imageio.ImageIO.createImageOutputStream(baos)
-        writer.setOutput(ios)
-        writer.write(None, jvm.javax.imageio.IIOImage(bimg, None, None), param)
-        ios.flush()
-        writer.dispose()
-        return bytes(baos.toByteArray())
-
-    # odd dims exercise the empty/ragged tail passes; 1x1..9x9 corner
-    # cases hit passes that are entirely absent
-    for h, w in ((21, 37), (8, 8), (1, 1), (3, 9), (9, 3)):
-        g = rng.integers(0, 256, (h, w)).astype(np.uint8)
-        buf = _java_png_interlaced(g)
-        assert buf[28] == 1, "fixture is not interlaced"  # IHDR interlace byte
-        np.testing.assert_array_equal(decode_png_any(buf), g)
-
-    rgb = rng.integers(0, 256, (21, 37, 3)).astype(np.uint8)
-    buf = _java_png_interlaced(rgb)
-    assert buf[28] == 1
-    np.testing.assert_array_equal(decode_png_any(buf), rgb)
-
-
-def test_bmp_decode_bit_exact_vs_javax(spark):
-    # BMP is lossless: decoding javax.imageio's writer output must be
-    # BIT-EXACT (24-bit RGB and 8-bit gray-palette shapes), plus
-    # hand-built top-down and RLE8 fixtures per the DIB spec
-    from instageo_e2e_geospatial_ml_spark.codecs import decode_bmp
-
-    jvm = spark._jvm
-    rng = np.random.default_rng(17)
-
-    def _java_bmp(arr):
-        gray = arr.ndim == 2
-        h, w = arr.shape[:2]
-        t = (
-            jvm.java.awt.image.BufferedImage.TYPE_BYTE_GRAY
-            if gray
-            else jvm.java.awt.image.BufferedImage.TYPE_INT_RGB
-        )
-        bimg = jvm.java.awt.image.BufferedImage(w, h, t)
-        if gray:
-            raster = bimg.getRaster()
-            for y in range(h):
-                for x in range(w):
-                    raster.setSample(x, y, 0, int(arr[y, x]))
-        else:
-            for y in range(h):
-                for x in range(w):
-                    r, g, b = (int(v) for v in arr[y, x])
-                    bimg.setRGB(x, y, (r << 16) | (g << 8) | b)
-        baos = jvm.java.io.ByteArrayOutputStream()
-        jvm.javax.imageio.ImageIO.write(bimg, "bmp", baos)
-        return bytes(baos.toByteArray())
-
-    rgb = rng.integers(0, 256, (21, 37, 3)).astype(np.uint8)  # odd width: padding
-    np.testing.assert_array_equal(decode_bmp(_java_bmp(rgb)), rgb)
-    g = rng.integers(0, 256, (19, 30)).astype(np.uint8)
-    np.testing.assert_array_equal(decode_bmp(_java_bmp(g)), g)
-
-    # hand-built: top-down 24-bit (negative height)
-    h, w = 5, 3
-    img = rng.integers(0, 256, (h, w, 3)).astype(np.uint8)
-    stride = (w * 3 + 3) & ~3
-    rows = np.zeros((h, stride), np.uint8)
-    rows[:, : w * 3] = img[:, :, ::-1].reshape(h, w * 3)  # BGR
-    pix = rows.tobytes()
-    hdr = (
-        b"BM" + (54 + len(pix)).to_bytes(4, "little") + b"\x00" * 4
-        + (54).to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little") + (-h).to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little") + len(pix).to_bytes(4, "little")
-        + b"\x00" * 16
-    )
-    np.testing.assert_array_equal(decode_bmp(hdr + pix), img)
-
-    # hand-built RLE8 with a gray palette: runs + EOL + absolute mode
-    pal = b"".join(bytes([i, i, i, 0]) for i in range(256))
-    rle = bytes(
-        [4, 7,  0, 0,            # row0 (bottom): run of 4 x 7, EOL
-         0, 3, 1, 2, 3, 0,  1, 9,  0, 0,  # row1: absolute [1,2,3] (padded), run 1x9, EOL
-         0, 1]                   # end of bitmap
-    )
-    data_off = 54 + len(pal)
-    hdr2 = (
-        b"BM" + (data_off + len(rle)).to_bytes(4, "little") + b"\x00" * 4
-        + data_off.to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + (4).to_bytes(4, "little") + (2).to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little") + (8).to_bytes(2, "little")
-        + (1).to_bytes(4, "little") + len(rle).to_bytes(4, "little")
-        + b"\x00" * 16
-    )
-    out = decode_bmp(hdr2 + pal + rle)
-    np.testing.assert_array_equal(out, np.array([[1, 2, 3, 9], [7, 7, 7, 7]], np.uint8))
-
-
 def test_jpeg_odd_fill_byte_run_before_marker():
     """T.81 B.1.1.2: any number of 0xFF fill bytes may precede a marker.
     An ODD run used to land the scanner mid-marker (ADVICE r6). Inject
@@ -673,230 +347,6 @@ def test_jpeg_odd_fill_byte_run_before_marker():
     for pad in (b"\xff", b"\xff\xff\xff"):
         padded = buf[:dqt] + pad + buf[dqt:]
         assert np.array_equal(jpeg_decode(padded), jpeg_decode(buf))
-
-
-def test_bmp_bitfields_and_coreheader_vs_javax(spark):
-    """VERDICT r6 #7: 16-bit BI_BITFIELDS (565), 16-bit BI_RGB (555
-    default masks) and 12-byte BITMAPCOREHEADER BMPs — hand-built per
-    the DIB spec, then OUR decode vs javax.imageio reading the SAME
-    bytes must be bit-exact (javax's BMPImageReader handles all
-    three)."""
-    import struct
-
-    from instageo_e2e_geospatial_ml_spark.codecs import decode_bmp
-
-    jvm = spark._jvm
-    rng = np.random.default_rng(41)
-    h, w = 11, 13  # odd width exercises row padding
-
-    def _file(hdr, body):
-        return (
-            b"BM" + (14 + len(hdr) + len(body)).to_bytes(4, "little")
-            + b"\x00" * 4 + (14 + len(hdr)).to_bytes(4, "little") + hdr + body
-        )
-
-    def _assert_match(buf, has_gray_possible=False):
-        ours = decode_bmp(buf)
-        jv = _java_decode(jvm, buf, gray=False)
-        if ours.ndim == 2:  # gray-collapsed palette
-            ours = np.stack([ours] * 3, axis=-1)
-        np.testing.assert_array_equal(ours, jv)
-
-    # --- 16-bit BI_BITFIELDS 565 ---
-    vals = rng.integers(0, 1 << 16, (h, w)).astype("<u2")
-    stride = (w * 2 + 3) & ~3
-    rows = np.zeros((h, stride), np.uint8)
-    rows[:, : w * 2] = vals[::-1].view(np.uint8).reshape(h, w * 2)
-    hdr565 = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 16, 3, len(rows.tobytes()), 0, 0, 0, 0
-    ) + struct.pack("<III", 0xF800, 0x07E0, 0x001F)
-    _assert_match(_file(hdr565, rows.tobytes()))
-
-    # --- 16-bit BI_RGB (implicit 555) ---
-    hdr555 = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 16, 0, len(rows.tobytes()), 0, 0, 0, 0
-    )
-    _assert_match(_file(hdr555, rows.tobytes()))
-
-    # --- BITMAPCOREHEADER: 24-bit ---
-    img = rng.integers(0, 256, (h, w, 3)).astype(np.uint8)
-    stride24 = (w * 3 + 3) & ~3
-    rows24 = np.zeros((h, stride24), np.uint8)
-    rows24[:, : w * 3] = img[::-1, :, ::-1].reshape(h, w * 3)
-    hdr_core = struct.pack("<IHHHH", 12, w, h, 1, 24)
-    buf = _file(hdr_core, rows24.tobytes())
-    np.testing.assert_array_equal(decode_bmp(buf), img)
-    _assert_match(buf)
-
-    # --- BITMAPCOREHEADER: 8-bit with 3-byte palette entries ---
-    n_colors = 64
-    pal = rng.integers(0, 256, (n_colors, 3)).astype(np.uint8)  # BGR
-    idx = rng.integers(0, n_colors, (h, w)).astype(np.uint8)
-    stride8 = (w + 3) & ~3
-    rows8 = np.zeros((h, stride8), np.uint8)
-    rows8[:, :w] = idx[::-1]
-    hdr8 = struct.pack("<IHHHH", 12, w, h, 1, 8)
-    buf8 = _file(hdr8 + pal.tobytes(), rows8.tobytes())
-    ours8 = decode_bmp(buf8)
-    want8 = pal[idx][:, :, ::-1]  # BGR -> RGB
-    if ours8.ndim == 2:
-        want8 = want8[..., 0]
-    np.testing.assert_array_equal(ours8, want8)
-    _assert_match(buf8)
-
-
-def test_bmp_1bit_4bit_rle4_vs_javax(spark):
-    """The low-bit-depth BMP family (legacy web/favicon coverage):
-    1-bit and 4-bit palette files and RLE4 compression, hand-built per
-    the DIB spec, our decode vs javax.imageio on the same bytes."""
-    import struct
-
-    from instageo_e2e_geospatial_ml_spark.codecs import decode_bmp
-
-    jvm = spark._jvm
-    rng = np.random.default_rng(43)
-    h, w = 9, 13
-
-    def _file(bits, comp, pal_colors, pix):
-        pal = b"".join(bytes([b_, g_, r_, 0]) for r_, g_, b_ in pal_colors)
-        hdr = struct.pack(
-            "<IiiHHIIiiII", 40, w, h, 1, bits, comp, len(pix), 0, 0,
-            len(pal_colors), 0,
-        )
-        off = 14 + 40 + len(pal)
-        return (
-            b"BM" + (off + len(pix)).to_bytes(4, "little") + b"\x00" * 4
-            + off.to_bytes(4, "little") + hdr + pal + pix
-        )
-
-    def _javax_rgb(buf):
-        bi = jvm.javax.imageio.ImageIO.read(
-            jvm.java.io.ByteArrayInputStream(bytearray(buf))
-        )
-        assert bi is not None
-        out = np.zeros((bi.getHeight(), bi.getWidth(), 3), np.uint8)
-        for y in range(bi.getHeight()):
-            for x in range(bi.getWidth()):
-                p = bi.getRGB(x, y)
-                out[y, x] = [(p >> 16) & 0xFF, (p >> 8) & 0xFF, p & 0xFF]
-        return out
-
-    def _norm(ours):
-        return np.stack([ours] * 3, axis=-1) if ours.ndim == 2 else ours
-
-    # 1-bit: two-color palette, padded 4-byte rows
-    colors1 = [(250, 10, 30), (20, 200, 90)]
-    bits1 = rng.integers(0, 2, (h, w)).astype(np.uint8)
-    rows = np.zeros((h, ((w + 31) // 32) * 4 * 8), np.uint8)
-    rows[:, :w] = bits1[::-1]
-    pix1 = np.packbits(rows, axis=1).tobytes()
-    f1 = _file(1, 0, colors1, pix1)
-    np.testing.assert_array_equal(_norm(decode_bmp(f1)), _javax_rgb(f1))
-
-    # 4-bit: 16-color palette
-    colors4 = [tuple(int(v) for v in rng.integers(0, 256, 3)) for _ in range(16)]
-    idx4 = rng.integers(0, 16, (h, w)).astype(np.uint8)
-    stride_nib = ((w * 4 + 31) // 32) * 8
-    nibs = np.zeros((h, stride_nib), np.uint8)
-    nibs[:, :w] = idx4[::-1]
-    packed = (nibs[:, 0::2] << 4) | nibs[:, 1::2]
-    f4 = _file(4, 0, colors4, packed.tobytes())
-    np.testing.assert_array_equal(_norm(decode_bmp(f4)), _javax_rgb(f4))
-
-    # RLE4: runs (alternating nibbles), absolute mode, EOL, delta, EOB
-    rle = bytes(
-        [5, 0x12,            # row0: 1,2,1,2,1
-         0, 4, 0x34, 0x50, 0, 0,  # absolute 3,4,5,0 (pad to even)
-         0, 0,               # EOL
-         8, 0x77,            # row1: eight 7s
-         0, 2, 3, 1,         # delta: x+=3, y+=1 -> row2
-         4, 0xA0,            # A,0,A,0
-         0, 1]               # end of bitmap
-    )
-    frle = _file(4, 2, colors4, rle)
-    np.testing.assert_array_equal(_norm(decode_bmp(frle)), _javax_rgb(frle))
-
-
-def test_png_sub_byte_depths_vs_javax(spark):
-    """1/2/4-bit PNGs (legacy web graphics): gray and palette, sequential
-    and Adam7-interlaced, hand-built per the PNG spec; our decode vs
-    javax.imageio reading the same bytes (raster samples for gray,
-    palette-resolved RGB for color type 3)."""
-    import struct
-    import zlib
-
-    from instageo_e2e_geospatial_ml_spark.codecs import _PNG_SIG, _chunk, decode_png_any
-
-    jvm = spark._jvm
-    rng = np.random.default_rng(47)
-    h, w = 11, 21  # widths not byte-aligned at any sub-byte depth
-
-    def _pack_row(vals, depth):
-        bits = np.zeros((len(vals), depth), np.uint8)
-        for i in range(depth):
-            bits[:, i] = (vals >> (depth - 1 - i)) & 1
-        return np.packbits(bits.reshape(-1)).tobytes()
-
-    def _png(vals, depth, color, plte=None, interlace=0):
-        ihdr = struct.pack(">IIBBBBB", vals.shape[1], vals.shape[0], depth,
-                           color, 0, 0, interlace)
-        body = b""
-        if interlace:
-            passes = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-                      (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-            for x0, y0, dx, dy in passes:
-                sub = vals[y0::dy, x0::dx]
-                if sub.size == 0:
-                    continue
-                for r in sub:
-                    body += b"\x00" + _pack_row(r, depth)
-        else:
-            for r in vals:
-                body += b"\x00" + _pack_row(r, depth)
-        chunks = _chunk(b"IHDR", ihdr)
-        if plte is not None:
-            chunks += _chunk(b"PLTE", plte.astype(np.uint8).tobytes())
-        chunks += _chunk(b"IDAT", zlib.compress(body)) + _chunk(b"IEND", b"")
-        return _PNG_SIG + chunks
-
-    def _javax_gray(buf):
-        bi = jvm.javax.imageio.ImageIO.read(
-            jvm.java.io.ByteArrayInputStream(bytearray(buf)))
-        assert bi is not None
-        raster = bi.getRaster()
-        return np.array(
-            [[raster.getSample(x, y, 0) for x in range(bi.getWidth())]
-             for y in range(bi.getHeight())], np.uint8)
-
-    def _javax_rgb(buf):
-        bi = jvm.javax.imageio.ImageIO.read(
-            jvm.java.io.ByteArrayInputStream(bytearray(buf)))
-        assert bi is not None
-        out = np.zeros((bi.getHeight(), bi.getWidth(), 3), np.uint8)
-        for y in range(bi.getHeight()):
-            for x in range(bi.getWidth()):
-                p = bi.getRGB(x, y)
-                out[y, x] = [(p >> 16) & 0xFF, (p >> 8) & 0xFF, p & 0xFF]
-        return out
-
-    for depth in (1, 2, 4):
-        vals = rng.integers(0, 1 << depth, (h, w)).astype(np.uint8)
-        buf = _png(vals, depth, 0)
-        np.testing.assert_array_equal(decode_png_any(buf), vals, err_msg=f"d={depth}")
-        np.testing.assert_array_equal(decode_png_any(buf), _javax_gray(buf))
-        # Adam7
-        bufi = _png(vals, depth, 0, interlace=1)
-        np.testing.assert_array_equal(decode_png_any(bufi), vals, err_msg=f"i d={depth}")
-        np.testing.assert_array_equal(decode_png_any(bufi), _javax_gray(bufi))
-
-    # 4-bit palette (sequential + interlaced)
-    plte = rng.integers(0, 256, (16, 3)).astype(np.uint8)
-    idx = rng.integers(0, 16, (h, w)).astype(np.uint8)
-    for inter in (0, 1):
-        buf = _png(idx, 4, 3, plte=plte, interlace=inter)
-        ours = decode_png_any(buf)
-        np.testing.assert_array_equal(ours, plte[idx], err_msg=f"pal i={inter}")
-        np.testing.assert_array_equal(ours, _javax_rgb(buf))
 
 
 def test_jpeg_16bit_quant_tables(spark):
@@ -934,76 +384,6 @@ def test_jpeg_16bit_quant_tables(spark):
     # (the same tolerance the baseline/progressive interop tests use)
     jv = _java_decode(spark._jvm, wide, gray=True)
     assert np.abs(jpeg_decode(wide).astype(int) - jv.astype(int)).max() <= 1
-
-
-def test_encode_gif_javax_reads_bit_exact(spark):
-    """Our GIF writer vs the JDK's independent GIF reader: pixels must be
-    BIT-EXACT across inputs sized to cross the LZW code-width boundaries
-    (512/1024/2048) and the 4096-entry table reset — the cross-
-    implementation check paired off-by-ones survive round-trips without
-    (the TIFF-LZW lesson)."""
-    import numpy as np
-
-    from instageo_e2e_geospatial_ml_spark.codecs import decode_gif, encode_gif
-
-    jvm = spark._jvm
-    rng = np.random.default_rng(29)
-    palette = rng.integers(0, 256, (256, 3)).astype(np.uint8)
-    # three sizes: tiny (no width bump), medium (a few bumps), large
-    # (random 256-symbol data grows ~1 entry/px -> 128x64=8192 px crosses
-    # every width boundary AND the 4096 reset)
-    for h, w in [(5, 7), (40, 40), (64, 128)]:
-        idx = rng.integers(0, 256, (h, w)).astype(np.uint8)
-        gif = encode_gif(idx, palette)
-        # our own decoder first
-        ours = decode_gif(gif)
-        np.testing.assert_array_equal(ours[0], palette[idx])
-        # javax.imageio
-        bais = jvm.java.io.ByteArrayInputStream(gif)
-        bimg = jvm.javax.imageio.ImageIO.read(bais)
-        assert bimg is not None, "javax could not read our GIF"
-        assert bimg.getWidth() == w and bimg.getHeight() == h
-        flat = bimg.getRGB(0, 0, w, h, None, 0, w)
-        got = np.array(flat, dtype=np.int64).reshape(h, w)
-        rgb = np.stack(
-            [(got >> 16) & 0xFF, (got >> 8) & 0xFF, got & 0xFF], axis=-1
-        ).astype(np.uint8)
-        np.testing.assert_array_equal(rgb, palette[idx]), (h, w)
-
-
-def test_encode_gif_small_palette_and_animation(spark):
-    """Sub-256 palettes round the color table up to a power of two with a
-    correct min-code-size; animated multi-frame GIFs decode frame-exact
-    through decode_gif and javax sees every frame."""
-    import numpy as np
-
-    from instageo_e2e_geospatial_ml_spark.codecs import decode_gif, encode_gif
-
-    palette = np.array(
-        [[0, 0, 0], [255, 0, 0], [0, 255, 0], [0, 0, 255], [255, 255, 0]],
-        np.uint8,
-    )
-    rng = np.random.default_rng(31)
-    frames = rng.integers(0, 5, (3, 9, 11)).astype(np.uint8)
-    gif = encode_gif(frames, palette, delay_cs=7)
-    ours = decode_gif(gif)
-    assert ours.shape == (3, 9, 11, 3)
-    for i in range(3):
-        np.testing.assert_array_equal(ours[i], palette[frames[i]])
-
-    jvm = spark._jvm
-    bais = jvm.java.io.ByteArrayInputStream(gif)
-    iis = jvm.javax.imageio.ImageIO.createImageInputStream(bais)
-    reader = jvm.javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-    reader.setInput(iis)
-    assert reader.getNumImages(True) == 3
-    b0 = reader.read(0)
-    flat = b0.getRGB(0, 0, 11, 9, None, 0, 11)
-    got = np.array(flat, dtype=np.int64).reshape(9, 11)
-    rgb = np.stack(
-        [(got >> 16) & 0xFF, (got >> 8) & 0xFF, got & 0xFF], axis=-1
-    ).astype(np.uint8)
-    np.testing.assert_array_equal(rgb, palette[frames[0]])
 
 
 def test_jpeg_quality_estimate_inverts_encoder_grid():

@@ -1,119 +1,10 @@
-"""MP4 box / MP3 frame-header metadata parsers (sources/media.py).
+"""Image-container metadata parsers: EXIF (sources/exif.py) and USTAR
+(sources/tar.py).
 
-Fixtures are hand-constructed from the public specs (ISO/IEC 14496-12
-box grammar; the MPEG audio frame-header bit layout) — this container
-ships no mp4/mp3 encoder to produce interop fixtures, so the tests pin
-the parsers against spec-derived byte layouts, including 64-bit largesize
-boxes, ID3 skip, resync, VBR detection, and truncation handling.
+EXIF is pinned both through the writer and against a hand-built
+spec-derived byte layout; tar is pinned against the stdlib tarfile in
+both directions.
 """
-
-import numpy as np
-import pandas as pd
-import pytest
-
-from instageo_e2e_geospatial_ml_spark.sources.media import (
-    media_metadata,
-    parse_mp3_metadata,
-    parse_mp4_metadata,
-)
-
-
-def _box(btype: bytes, body: bytes, large: bool = False) -> bytes:
-    if large:
-        return (1).to_bytes(4, "big") + btype + (16 + len(body)).to_bytes(8, "big") + body
-    return (8 + len(body)).to_bytes(4, "big") + btype + body
-
-
-def _full(version: int, flags: int, body: bytes) -> bytes:
-    return bytes([version]) + flags.to_bytes(3, "big") + body
-
-
-def _make_mp4(w=640, h=360, timescale=1000, dur_ms=5500, n_samples=132):
-    ftyp = _box(b"ftyp", b"isom" + (0).to_bytes(4, "big") + b"isommp42")
-    mvhd = _box(b"mvhd", _full(0, 0, b"\x00" * 8 + timescale.to_bytes(4, "big")
-                               + dur_ms.to_bytes(4, "big") + b"\x00" * 80))
-    mdhd = _box(b"mdhd", _full(0, 0, b"\x00" * 8 + (30000).to_bytes(4, "big")
-                               + (165000).to_bytes(4, "big") + b"\x00" * 4))
-    hdlr = _box(b"hdlr", _full(0, 0, b"\x00" * 4 + b"vide" + b"\x00" * 12 + b"\x00"))
-    avc1_body = b"\x00" * 6 + (1).to_bytes(2, "big") + b"\x00" * 16 \
-        + w.to_bytes(2, "big") + h.to_bytes(2, "big") + b"\x00" * 46 + b"\x18" + b"\xff\xff"
-    stsd = _box(b"stsd", _full(0, 0, (1).to_bytes(4, "big") + _box(b"avc1", avc1_body)))
-    stsz = _box(b"stsz", _full(0, 0, (512).to_bytes(4, "big") + n_samples.to_bytes(4, "big")))
-    stbl = _box(b"stbl", stsd + stsz)
-    minf = _box(b"minf", stbl)
-    mdia = _box(b"mdia", mdhd + hdlr + minf)
-    trak = _box(b"trak", mdia)
-    moov = _box(b"moov", mvhd + trak)
-    mdat = _box(b"mdat", b"\x00" * 64, large=True)  # exercise largesize
-    return ftyp + moov + mdat
-
-
-def test_mp4_box_parse():
-    m = parse_mp4_metadata(_make_mp4())
-    assert m["major_brand"] == "isom"
-    assert "mp42" in m["compatible_brands"]
-    assert m["duration_s"] == 5.5
-    assert m["top_boxes"] == ["ftyp", "moov", "mdat"]
-    (t,) = m["tracks"]
-    assert t["kind"] == "video" and t["codec"] == "avc1"
-    assert (t["width"], t["height"]) == (640, 360)
-    assert t["duration_s"] == 5.5
-    assert t["n_samples"] == 132 and t["sample_bytes"] == 512 * 132
-    with pytest.raises(ValueError, match="ISO-BMFF"):
-        parse_mp4_metadata(b"\x00" * 64)
-    # truncated payload parses the intact prefix, no crash
-    buf = _make_mp4()
-    m2 = parse_mp4_metadata(buf[: len(buf) - 40])
-    assert m2["major_brand"] == "isom"
-
-
-def _mp3_frame(kbps_idx=9, sr_idx=0, pad=0, mode=3):
-    # MPEG-1 Layer III: sync 11 bits, version 3, layer 1(=III), no-crc 1
-    hdr = (0x7FF << 21) | (3 << 19) | (1 << 17) | (1 << 16) \
-        | (kbps_idx << 12) | (sr_idx << 10) | (pad << 9) | (mode << 6)
-    from instageo_e2e_geospatial_ml_spark.sources.media import _BITRATES_V1, _SAMPLE_RATES
-    kbps = _BITRATES_V1[3][kbps_idx]
-    sr = _SAMPLE_RATES[3][sr_idx]
-    flen = 144 * 1000 * kbps // sr + pad
-    return hdr.to_bytes(4, "big") + b"\x55" * (flen - 4)
-
-
-def test_mp3_frame_walk():
-    # CBR: 40 frames of 128 kbps 44.1 kHz mono, behind an ID3v2 tag and
-    # 3 bytes of junk (resync)
-    tag = b"ID3\x04\x00\x00" + bytes([0, 0, 0, 20]) + b"\x00" * 20
-    stream = tag + b"\xab\xcd\xef" + b"".join(_mp3_frame() for _ in range(40))
-    m = parse_mp3_metadata(stream)
-    assert m["version"] == "MPEG-1" and m["layer"] == 3
-    assert m["sample_rate"] == 44100 and m["channel_mode"] == "mono"
-    assert m["n_frames"] == 40 and not m["is_vbr"]
-    assert m["avg_kbps"] == 128.0
-    assert abs(m["duration_s"] - 40 * 1152 / 44100) < 0.01
-    # VBR: alternate bitrates
-    vbr = b"".join(_mp3_frame(kbps_idx=9 if i % 2 else 12) for i in range(10))
-    mv = parse_mp3_metadata(vbr)
-    assert mv["is_vbr"] and mv["n_frames"] == 10
-    with pytest.raises(ValueError, match="no MPEG audio frames"):
-        parse_mp3_metadata(b"\x00" * 100)
-
-
-def test_media_metadata_spark(spark):
-    rows = pd.DataFrame(
-        {
-            "media_id": ["v1", "a1", "bad"],
-            "bytes": [_make_mp4(), b"".join(_mp3_frame() for _ in range(8)), b"junk" * 10],
-            "fmt": ["mp4", "mp3", "mp4"],
-        }
-    )
-    out = media_metadata(spark.createDataFrame(rows)).toPandas().set_index("media_id")
-    v = out.loc["v1"]
-    assert v["ok"] and v["kind"] == "video" and v["codec"] == "avc1"
-    assert (v["width"], v["height"]) == (640, 360) and v["duration_s"] == 5.5
-    a = out.loc["a1"]
-    assert a["ok"] and a["kind"] == "audio" and a["codec"] == "mp3-L3"
-    assert a["sample_rate"] == 44100 and a["channels"] == 1
-    b = out.loc["bad"]
-    assert not b["ok"] and "ISO-BMFF" in b["err"]
 
 
 def test_exif_round_trip_through_jpeg():
@@ -180,42 +71,6 @@ def test_exif_parser_hand_built_golden_big_endian():
     assert got["orientation"] == 8
     assert got["iso"] == 1600
     assert got["make"] is None and got["gps_lat_e7"] is None
-
-
-def test_apply_exif_orientation_all_eight():
-    """Each orientation maps the spec's reference corner back to top-left:
-    undoing orientation k must place the pixel the CAMERA stored first
-    at its true scene position. Verified by the standard inverse pairs
-    (6 undoes an 8-rotation and vice versa) and involutions (2,3,4 are
-    self-inverse; 5 and 7 are transposes)."""
-    import numpy as np
-
-    from instageo_e2e_geospatial_ml_spark.sources.exif import (
-        apply_exif_orientation as fix,
-    )
-
-    a = np.arange(6).reshape(2, 3)
-    np.testing.assert_array_equal(fix(a, 1), a)
-    np.testing.assert_array_equal(fix(a, 2), a[:, ::-1])
-    np.testing.assert_array_equal(fix(a, 3), a[::-1, ::-1])
-    np.testing.assert_array_equal(fix(a, 4), a[::-1])
-    assert fix(a, 5).shape == (3, 2) and fix(a, 6).shape == (3, 2)
-    # involutions / inverses
-    np.testing.assert_array_equal(fix(fix(a, 2), 2), a)
-    np.testing.assert_array_equal(fix(fix(a, 3), 3), a)
-    np.testing.assert_array_equal(fix(fix(a, 4), 4), a)
-    np.testing.assert_array_equal(fix(fix(a, 5), 5), a)
-    np.testing.assert_array_equal(fix(fix(a, 7), 7), a)
-    np.testing.assert_array_equal(fix(fix(a, 6), 8), a)
-    np.testing.assert_array_equal(fix(fix(a, 8), 6), a)
-    # rotate-90-CW spec vector: stored [[1,2],[3,4]] with orientation 6
-    # displays as 90° CW of scene -> undo = rotate CCW? the table's
-    # view-normalization: fix(stored, 6) = scene
-    s = np.array([[1, 2], [3, 4]])
-    np.testing.assert_array_equal(fix(s, 6), np.array([[3, 1], [4, 2]]))
-    # channels preserved
-    c = np.arange(24).reshape(2, 3, 4)
-    assert fix(c, 6).shape == (3, 2, 4)
 
 
 def test_tar_interop_with_stdlib_tarfile():

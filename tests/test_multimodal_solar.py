@@ -1,4 +1,4 @@
-"""Multimodal binary-column ops, embedding near-dup, and the solar filter."""
+"""Image-table ops, embedding near-dup, and the solar filter."""
 
 import numpy as np
 import pandas as pd
@@ -11,61 +11,12 @@ from instageo_e2e_geospatial_ml_spark.functions.solar import (
     sunrise_sunset_utc_minutes,
 )
 from instageo_e2e_geospatial_ml_spark.operators.dedup import embedding_neardup_pairs
-from instageo_e2e_geospatial_ml_spark.sources.images import (
-    decode_external,
-    image_features,
-    resize_images,
-    sample_video_frames,
-)
 
 
 @pytest.fixture(scope="module")
 def images_df(spark):
     cat = synth.gen_granule_catalog_pdf(tiles=["38PMB"], days=10, every=5)
     return spark.createDataFrame(synth.gen_images_pdf(cat, w=64, h=64, fmt="png"))
-
-
-def test_image_features(spark, images_df):
-    out = image_features(images_df).toPandas()
-    assert len(out) == images_df.count()
-    band_rows = out[~out["image_id"].str.endswith(":Fmask")]
-    assert (band_rows["mean"] > 1000).all()  # gradient base ~2000..9000
-    assert (band_rows["std"] > 0).all()
-    assert band_rows["phash"].nunique() > 1
-
-
-def test_resize_images(spark, images_df):
-    out = resize_images(images_df, 16, 16).toPandas()
-    r = out.iloc[0]
-    assert (r["w"], r["h"]) == (16, 16)
-    arr = codecs.decode(r["bytes"], 16, 16, 1, r["fmt"])
-    assert arr.shape == (1, 16, 16)
-    # mean-pool preserves the global mean approximately
-    src = images_df.filter(F.col("image_id") == r["image_id"]).toPandas().iloc[0]
-    src_arr = codecs.decode(src["bytes"], int(src["w"]), int(src["h"]), 1, src["fmt"])
-    assert abs(float(arr.mean()) - float(src_arr.mean())) < 200
-
-
-def test_video_frame_sampling(spark):
-    videos = spark.createDataFrame(
-        pd.DataFrame({"video_id": ["v1", "v2"], "bytes": [b"", b""], "fmt": ["fake", "fake"]})
-    )
-    frames = sample_video_frames(videos, every_n=25, n_frames=100).toPandas()
-    assert len(frames) == 2 * 4  # 100/25 per video
-    assert set(frames["frame_idx"].unique()) == {0, 25, 50, 75}
-    # deterministic: same video_id → same bytes
-    again = sample_video_frames(videos, every_n=25, n_frames=100).toPandas()
-    assert frames.iloc[0]["bytes"] == again.iloc[0]["bytes"]
-
-
-def test_external_decoders_stubbed():
-    # jpeg/tiff_lzw/webp-lossless/jp2-5x3 are REAL now; mp3/mp4 stay
-    # env-limited stubs
-    for fmt in ("mp3", "mp4"):
-        with pytest.raises(NotImplementedError):
-            decode_external(fmt, b"")
-    with pytest.raises(ValueError):  # webp is real: bad container errors
-        decode_external("webp", b"")
 
 
 def test_embedding_neardup_exact_vs_lsh(spark):
@@ -235,34 +186,6 @@ def test_winnow_fingerprints_guarantee(spark):
     # digest is sublinear: fewer fingerprints than shingles
     n_shingles_1 = len(docs.loc[0, "text"].split()) - 2
     assert len(out[out["doc_id"] == 1]) < n_shingles_1
-
-
-def test_image_embeddings_to_ann_end_to_end(spark, images_df):
-    # multimodal → embedding → ANN, no stubs: decode, pool, bucket, score
-    from instageo_e2e_geospatial_ml_spark.operators.similarity import lsh_topk
-    from instageo_e2e_geospatial_ml_spark.sources.images import image_embeddings
-
-    emb = image_embeddings(images_df, grid=4)
-    pdf = emb.toPandas()
-    assert len(pdf) == images_df.count()
-    assert all(len(v) == 16 for v in pdf["embedding"])
-    # z-normalized: per-image mean ~0 (float32 tolerance)
-    assert all(abs(float(np.mean(v))) < 1e-3 for v in pdf["embedding"])
-    # deterministic
-    again = image_embeddings(images_df, grid=4).toPandas()
-    a0 = dict(zip(pdf["image_id"], pdf["embedding"]))
-    a1 = dict(zip(again["image_id"], again["embedding"]))
-    assert all((np.asarray(a0[k]) == np.asarray(a1[k])).all() for k in a0)
-
-    # feed straight into the ANN operator (string ids → hash to long keys)
-    keyed = emb.select(
-        F.abs(F.xxhash64("image_id")).alias("vid"), "embedding"
-    )
-    q = keyed.limit(4).select(F.col("vid").alias("qid"), F.col("embedding").alias("qvec"))
-    p = keyed.select(F.col("vid").alias("pid"), F.col("embedding").alias("pvec"))
-    out = lsh_topk(q, p, k=3, n_bits=4).toPandas()
-    assert len(out) > 0
-    assert (out.groupby("qid").size() <= 3).all()
 
 
 def test_clean_corpus_pipeline(spark):
@@ -519,138 +442,58 @@ def test_retrieval_and_sampling_units(spark):
     assert sorted(st["doc_id"]) == [1, 2]  # all of 'a', none of 'b'
 
 
-def test_augment_images_real_transforms(spark):
-    import numpy as np
+def _phash_frame(spark, imgs):
+    """(image_id, phash) with codecs.phash64 over each decoded image."""
+    rows = [
+        (r.image_id, codecs.phash64(codecs.decode(bytes(r.bytes), r.w, r.h, 1, r.fmt)))
+        for r in imgs.collect()
+    ]
+    return spark.createDataFrame(rows, "image_id string, phash long")
 
-    from instageo_e2e_geospatial_ml_spark import codecs, synth
-    from instageo_e2e_geospatial_ml_spark.sources.images import augment_images
 
-    imgs = synth.gen_images_df(spark, ["g1", "g2"], w=64, h=32, fmt="raw")
-    out = augment_images(imgs, augs=("identity", "hflip", "rot90")).toPandas()
-    assert len(out) == imgs.count() * 3
-    src = {r["image_id"]: r for _, r in imgs.toPandas().iterrows()}
-    for _, r in out.iterrows():
-        base = src[r["image_id"].split("#")[0]]
-        orig = codecs.decode(bytes(base["bytes"]), base["w"], base["h"], 1, base["fmt"])
-        got = codecs.decode(bytes(r["bytes"]), r["w"], r["h"], 1, "raw")
-        if r["aug"] == "identity":
-            assert (got == orig).all()
-        elif r["aug"] == "hflip":
-            assert (got == orig[:, :, ::-1]).all()
-        else:  # rot90 swaps dims
-            assert (r["w"], r["h"]) == (base["h"], base["w"])
-            assert (got == np.rot90(orig, 1, axes=(1, 2))).all()
-    with pytest.raises(ValueError):
-        augment_images(imgs, augs=("zoom",))
+def _brute_force_pairs(ph, max_hamming):
+    rows = ph.collect()
+    return {
+        (a.image_id, b.image_id)
+        for a in rows
+        for b in rows
+        if a.image_id < b.image_id
+        and bin((a.phash ^ b.phash) & ((1 << 64) - 1)).count("1") <= max_hamming
+    }
 
 
 def test_phash_neardup_exact_for_threshold(spark):
-    from instageo_e2e_geospatial_ml_spark import synth
-    from instageo_e2e_geospatial_ml_spark.sources.images import (
-        augment_images,
-        phash_neardup_pairs,
-        phash_table,
-    )
+    from instageo_e2e_geospatial_ml_spark.sources.images import hamming_neardup_pairs
 
     base = synth.gen_images_df(spark, [f"g{i}" for i in range(12)], w=64, h=64, fmt="raw")
-    # identity augs are byte-identical -> hamming 0 against their source
-    dups = augment_images(base, augs=("identity",)).select(
-        "image_id", "bytes", "w", "h", "fmt"
-    )
-    all_imgs = base.select("image_id", "bytes", "w", "h", "fmt").unionByName(dups)
+    base = base.select("image_id", "bytes", "w", "h", "fmt")
+    # byte-identical copies -> hamming 0 against their source
+    dups = base.withColumn("image_id", F.concat("image_id", F.lit("#identity")))
+    ph = _phash_frame(spark, base.unionByName(dups))
 
-    got = phash_neardup_pairs(all_imgs, max_hamming=4).toPandas()
+    got = hamming_neardup_pairs(ph, max_hamming=4).toPandas()
     got_pairs = set(zip(got["id_a"], got["id_b"]))
-
-    # brute-force oracle over the phash table
-    ph = phash_table(all_imgs).toPandas()
-    want = set()
-    rows = list(ph.itertuples(index=False))
-    for i in range(len(rows)):
-        for j in range(len(rows)):
-            a, b = rows[i], rows[j]
-            if a.image_id < b.image_id:
-                d = bin((a.phash ^ b.phash) & ((1 << 64) - 1)).count("1")
-                if d <= 4:
-                    want.add((a.image_id, b.image_id))
-    assert got_pairs == want
-    # every image matches its identity duplicate at hamming 0
-    for i in range(12):
-        assert (f"g{i}:im", f"g{i}:im#identity") in got_pairs or any(
-            f"g{i}" in p[0] and "#identity" in p[1] for p in got_pairs
-        )
-
-
-def test_audio_plumbing(spark):
-    from instageo_e2e_geospatial_ml_spark.sources.images import (
-        audio_features,
-        audio_windows,
-        synth_audio_pdf,
-    )
-
-    clips = spark.createDataFrame(synth_audio_pdf(["a1", "a2", "a3"], n_samples=16000))
-    feats = audio_features(clips).toPandas().set_index("audio_id").sort_index()
-    assert (feats["n_samples"] == 16000).all()
-    assert (feats["rms"] > 1000).all()  # sinusoids at ~0.6*20000 amplitude
-    assert (feats["peak"] <= 32767).all()
-    assert (feats["zcr"] > 0).all() and (feats["zcr"] < 1).all()
-    # deterministic across runs
-    again = audio_features(clips).toPandas().set_index("audio_id").sort_index()
-    assert (feats == again).all().all()
-
-    wins = audio_windows(clips, window_samples=4000, hop_samples=4000).toPandas()
-    assert len(wins) == 3 * 4
-    assert set(wins["win_idx"]) == {0, 1, 2, 3}
-    assert all(len(b) == 8000 for b in wins["bytes"])  # 4000 × int16
-
-    # encoded formats stay stubbed
-    import pandas as pd
-
-    mp3 = spark.createDataFrame(
-        pd.DataFrame({"audio_id": ["x"], "bytes": [b""], "sr": [16000], "fmt": ["mp3"]})
-    )
-    with pytest.raises(Exception, match="audio"):
-        audio_features(mp3).collect()
-
-
-def test_register_views_sql(spark):
-    from instageo_e2e_geospatial_ml_spark.session import register_views
-
-    done = register_views(spark, "/root/testdata/sf0.001")
-    assert "documents" in done and "lineitem" in done
-    n = spark.sql("SELECT count(*) AS n FROM documents").collect()[0]["n"]
-    assert n > 0
+    assert got_pairs == _brute_force_pairs(ph, 4)
+    # every image matches its identical copy
+    for r in base.select("image_id").collect():
+        assert (r.image_id, f"{r.image_id}#identity") in got_pairs
 
 
 def test_phash_neardup_high_threshold_no_degenerate_block(spark):
     # max_hamming=8 -> 9 blocks: a fixed ceil-width split would leave the
     # last block EMPTY (constant key = one all-pairs bucket); the even
     # boundary split must keep exactness without that blowup
-    from instageo_e2e_geospatial_ml_spark import synth
-    from instageo_e2e_geospatial_ml_spark.sources.images import (
-        phash_neardup_pairs,
-        phash_table,
-    )
+    from instageo_e2e_geospatial_ml_spark.sources.images import hamming_neardup_pairs
 
-    imgs = synth.gen_images_df(spark, [f"h{i}" for i in range(8)], w=64, h=64, fmt="raw").select(
-        "image_id", "bytes", "w", "h", "fmt"
-    )
+    imgs = synth.gen_images_df(spark, [f"h{i}" for i in range(8)], w=64, h=64, fmt="raw")
+    ph = _phash_frame(spark, imgs.select("image_id", "bytes", "w", "h", "fmt"))
     got = set(
         map(
             tuple,
-            phash_neardup_pairs(imgs, max_hamming=8).select("id_a", "id_b").collect(),
+            hamming_neardup_pairs(ph, max_hamming=8).select("id_a", "id_b").collect(),
         )
     )
-    ph = phash_table(imgs).toPandas()
-    rows = list(ph.itertuples(index=False))
-    want = {
-        (a.image_id, b.image_id)
-        for a in rows
-        for b in rows
-        if a.image_id < b.image_id
-        and bin((a.phash ^ b.phash) & ((1 << 64) - 1)).count("1") <= 8
-    }
-    assert got == want
+    assert got == _brute_force_pairs(ph, 8)
 
 
 def test_chunking_pii_decontamination_units(spark):

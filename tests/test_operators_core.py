@@ -619,7 +619,6 @@ def test_substring_duplicate_spans_vs_bruteforce(spark):
     token run of >= k tokens (cross-doc and within-doc) is reported with
     exact 1-based positions and length."""
     from instageo_e2e_geospatial_ml_spark.operators.dedup import (
-        remove_duplicate_spans,
         substring_duplicate_spans,
     )
 
@@ -670,20 +669,6 @@ def test_substring_duplicate_spans_vs_bruteforce(spark):
                         continue
                     want.append((a, b, a_start, b_start, ln))
     assert got == sorted(want) and len(want) >= 2
-
-    # removal policy: doc 2's copy of the shared passage is stripped
-    spans = substring_duplicate_spans(spark.createDataFrame(pdf), k=k)
-    cleaned = {
-        r["doc_id"]: r
-        for r in remove_duplicate_spans(
-            spark.createDataFrame(pdf), spans.filter(F.col("doc_a") < F.col("doc_b"))
-        ).collect()
-    }
-    n_shared = len(shared.split())
-    assert cleaned[2]["n_removed_tokens"] == n_shared
-    assert cleaned[2]["text"] == "entirely different ending material follows now"
-    assert cleaned[3]["n_removed_tokens"] == 0
-    assert cleaned[3]["text"] == docs[3]
 
 
 def test_interval_join_overcap_broadcast_guard(spark):
@@ -1113,13 +1098,10 @@ def test_grid_dbscan_designed_blobs(spark):
 
 def test_scd2_history_and_latest_state(spark):
     """Designed change log: upsert→upsert→delete→upsert chains, re-delete,
-    delete-only key. Interval chaining + current flags + compaction."""
+    delete-only key. Interval chaining + current flags."""
     from datetime import datetime, timedelta
 
-    from instageo_e2e_geospatial_ml_spark.operators.cdc import (
-        latest_state,
-        scd2_history,
-    )
+    from instageo_e2e_geospatial_ml_spark.operators.cdc import scd2_history
 
     t0 = datetime(2024, 1, 1)
     log = [
@@ -1147,8 +1129,6 @@ def test_scd2_history_and_latest_state(spark):
     assert hist[11] == (us(10), us(20), False)   # closed by the delete
     assert hist[13] == (us(30), None, True)
     assert hist[20] == (us(0), us(5), False)
-    cur = {r.key: r.event_id for r in latest_state(df, tiebreak_col="event_id").collect()}
-    assert cur == {1: 13}  # key 2 deleted, key 3 never existed
 
 
 def test_kmv_set_relations_exact_and_estimated(spark):
@@ -1481,12 +1461,11 @@ def test_bpe_training_paper_example_and_replica(spark):
     """BPE merges on the Sennrich ACL'16 example corpus (low x5,
     lower x2, newest x6, widest x3): first merges must be (e,s) 9,
     (es,t) 9, (est,</w>) 9 — then the full 8-merge sequence matches an
-    independent pure-Python replica, and apply_bpe re-tokenizes with
-    the learned table."""
+    independent pure-Python replica."""
     import collections
 
     from instageo_e2e_geospatial_ml_spark.functions.bpe import (
-        END, apply_bpe, train_bpe,
+        END, train_bpe,
     )
 
     text = " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3)
@@ -1529,29 +1508,6 @@ def test_bpe_training_paper_example_and_replica(spark):
             new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + n
         vocab = new_vocab
     assert got == want
-
-    toks = {
-        r.doc_id: r.tokens
-        for r in apply_bpe(
-            spark.createDataFrame([(9, "lowest low")], "doc_id long, text string"),
-            [(l, r) for _, l, r, _ in got],
-        ).collect()
-    }
-    # 'low' fully merges via learned (lo,w</w>)-family merges; replica:
-    seq = []
-    for w in ["lowest", "low"]:
-        seq.extend(list(w) + [END])
-    for _, bl, br, _ in got:
-        out, i = [], 0
-        while i < len(seq):
-            if i + 1 < len(seq) and seq[i] == bl and seq[i + 1] == br:
-                out.append(bl + br)
-                i += 2
-            else:
-                out.append(seq[i])
-                i += 1
-        seq = out
-    assert toks[9] == seq
 
 
 def test_funnel_strict_order_and_cohorts(spark):
@@ -3062,21 +3018,13 @@ def test_hilbert_key_plan_stays_jvm(spark):
 
 
 def test_hll_estimate_error_envelope_and_merge(spark):
-    """Estimate within the 3-sigma HLL envelope (sigma ~ 1.04/sqrt(m));
-    register merge (elementwise max) equals the sketch of the union —
+    """Register merge (elementwise max) equals the sketch of the union —
     the distributed-merge property the groupBy relies on."""
-    from instageo_e2e_geospatial_ml_spark.operators.stats import (
-        hll_estimate,
-        hll_registers,
-    )
+    from instageo_e2e_geospatial_ml_spark.operators.stats import hll_registers
 
-    p, m = 9, 512
-    n_true = 20000
-    df = spark.range(n_true).selectExpr("CAST(id AS STRING) AS k")
+    p = 9
+    df = spark.range(20000).selectExpr("CAST(id AS STRING) AS k")
     regs = hll_registers(df, key_col="k", p=p)
-    est = hll_estimate(regs, p=p).collect()[0]
-    sigma = 1.04 / (m**0.5) * n_true
-    assert abs(est.estimate - n_true) < 3 * sigma
 
     # merge property: max-merge of two half sketches == union sketch
     a = spark.range(0, 12000).selectExpr("CAST(id AS STRING) AS k")
@@ -3094,12 +3042,6 @@ def test_hll_estimate_error_envelope_and_merge(spark):
         (r.reg, r.rho_max) for r in regs.collect()
     }
     assert {(r.reg, r.rho_max) for r in merged.collect()} == union_sketch
-
-    # small-range linear counting: exact-ish for tiny cardinalities
-    tiny = spark.range(30).selectExpr("CAST(id AS STRING) AS k")
-    est_tiny = hll_estimate(hll_registers(tiny, key_col="k", p=p), p=p)
-    v = est_tiny.collect()[0].estimate
-    assert abs(v - 30) < 5
 
 
 def test_rect_union_area_brute_force_parity(spark):
@@ -3225,34 +3167,16 @@ def test_convex_hull_designed_and_random(spark):
 
 
 def test_cms_estimate_bounds_and_merge(spark):
-    """CMS point estimates never undercount, respect the eps*N
-    overcount bound with high probability, and cellwise-sum merge of
-    two half sketches equals the full-build sketch."""
-    from collections import Counter
-
+    """Cellwise-sum merge of two half sketches equals the full-build
+    sketch."""
     from pyspark.sql import functions as F2
 
-    from instageo_e2e_geospatial_ml_spark.operators.stats import (
-        cms_build,
-        cms_estimate,
-    )
+    from instageo_e2e_geospatial_ml_spark.operators.stats import cms_build
 
     # zipf-ish frequencies: key i appears 1000//(i+1) times
     rows = [(f"k{i}",) for i in range(80) for _ in range(1000 // (i + 1))]
-    truth = Counter(k for (k,) in rows)
     df = spark.createDataFrame(rows, "k string")
     sk = cms_build(df, key_col="k", depth=4, width=256)
-    probes = spark.createDataFrame(
-        [(k,) for k in list(truth) + ["absent1", "absent2"]], "k string"
-    )
-    est = {r.k: r.est for r in cms_estimate(sk, probes, key_col="k").collect()}
-    n_total = len(rows)
-    for k, true_n in truth.items():
-        assert est[k] >= true_n  # never undercounts
-        # e/width * N bound (per-row expectation; min over 4 rows makes
-        # exceeding it across ALL rows astronomically unlikely)
-        assert est[k] - true_n <= (2.718 / 256) * n_total + 1
-    assert est["absent1"] >= 0 and est["absent2"] <= (2.718 / 256) * n_total
 
     # merge = cellwise sum
     half1 = spark.createDataFrame(rows[: len(rows) // 2], "k string")

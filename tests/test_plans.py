@@ -432,11 +432,13 @@ def test_every_persist_is_released_in_its_function():
     assert leaks == [], leaks
 
 
-def test_every_private_helper_is_referenced():
-    """Dead-code rule: every top-level `def _x` / `class _x` in the
-    package must be named somewhere in the repository's Python (a Name,
-    an attribute access or an import alias). ast parses f-string
-    expressions, so helpers spliced into oracle_sql text count."""
+def _package_defs_and_names():
+    """(top-level defs, names used anywhere, names used outside tests/).
+
+    The defs are `(where, name)` for every top-level def or class in the
+    package. A name counts as used where some repository .py file names it
+    as a Name, an attribute access or an import alias; ast parses
+    f-string expressions, so helpers spliced into oracle_sql text count."""
     import ast
     import pathlib
 
@@ -444,28 +446,152 @@ def test_every_private_helper_is_referenced():
 
     root = pathlib.Path(pkg.__file__).parent
     repo = root.parent
-    defined, used = [], set()
+    defined, used, used_outside_tests = [], set(), set()
     for path in sorted(repo.rglob("*.py")):
-        if any(p.startswith(".") for p in path.relative_to(repo).parts):
+        parts = path.relative_to(repo).parts
+        if any(p.startswith(".") for p in parts):
             continue
         tree = ast.parse(path.read_text())
+        names = set()
         for n in ast.walk(tree):
             if isinstance(n, ast.Name):
-                used.add(n.id)
+                names.add(n.id)
             elif isinstance(n, ast.Attribute):
-                used.add(n.attr)
+                names.add(n.attr)
             elif isinstance(n, ast.alias):
-                used.add(n.name)
+                names.add(n.name)
+        used |= names
+        if parts[0] != "tests":
+            used_outside_tests |= names
         if root in path.parents:
             defined += [
                 (f"{path.relative_to(root)}:{n.name}", n.name)
                 for n in tree.body
                 if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                and n.name.startswith("_")
-                and not n.name.startswith("__")
             ]
-    dead = [where for where, name in defined if name not in used]
+    return defined, used, used_outside_tests
+
+
+def test_every_private_helper_is_referenced():
+    """Dead-code rule: every top-level `def _x` / `class _x` in the
+    package must be named somewhere in the repository's Python."""
+    defined, used, _ = _package_defs_and_names()
+    dead = [
+        where
+        for where, name in defined
+        if name.startswith("_") and not name.startswith("__") and name not in used
+    ]
     assert not dead, "unreferenced private helpers: " + ", ".join(dead)
+
+
+# Public names that only tests call, kept because the reference-parity map
+# (SURVEY.md §2 ids, as credited in COVERAGE.md) or BASELINE.json's north
+# rule names them.
+REFERENCE_PARITY = {
+    "read_observations": "S1/S2 CSV and parquet observation scan",
+    "read_geotiff": "S4 multi-file GeoTIFF reader",
+    "lzw_encode": "S4 TIFF LZW, the writer half of lzw_decode",
+    "packbits_encode": "S4 TIFF PackBits, the writer half of packbits_decode",
+    "parse_jp2_header": "S5 JP2 header parse",
+    "jp2_wrap": "S5 JP2 container writer",
+    "search_granules": "S7 STAC metadata search",
+    "daytime_filter": "P7 daytime filter",
+    "common_band_name": "P8 asset rename",
+    "extract_mgrs_tile": "P11 regex field extraction",
+    "extract_year": "P11 regex field extraction",
+    "candidate_lists": "A3 candidate-list aggregation",
+    "chip_coords": "A5/R6 unique chip coords",
+    "crop_to_bounds": "R9 geometry crop",
+    "run_raster_pipeline": "R9 raster-label pipeline",
+    "bbox_tile_ids": "R10 tiles covering a bbox",
+    "limit_labels_to_observations": "R14 limit labels to observations",
+    "split_dataset": "§3.3 dataset splitter",
+    "register_udtfs": "§2.10 chip-grid UDTF registration",
+    "psnr": "north rule: per-row PSNR >= 40 dB invariant",
+    "cell_bounds": "north rule: cell index geometry",
+    "covering_cells": "north rule: cell index cover",
+    "write_clustered": "north rule: range-partitioned writes by cell prefix",
+    "hilbert_ranges": "north rule: cell-prefix range planning",
+}
+
+# Structured Streaming twins of batch operators that only tests call. They
+# are dead surface too; ROADMAP's open item 3b deletes them with their
+# parity tests in a change of their own.
+STREAM_TWINS = {
+    "sessionize_stream": "twin of sessionize_batch",
+    "streaming_dedup": "twin of dropDuplicates over the batch events",
+    "token_bucket_stream": "twin of token_bucket",
+    "register_stream": "streaming form of the sensor data source",
+    "cap_per_key_stream": "twin of cap_per_domain",
+    "hll_distinct_stream": "twin of hll_registers",
+    "decayed_counts_stream": "twin of decayed_counts",
+    "temporal_enrich_stream": "twin of temporal_dim_join",
+}
+
+
+def test_every_public_def_has_a_non_test_caller():
+    """Dead-surface rule: every public top-level def or class in the
+    package must be named by some .py file outside tests/ (the registry,
+    the pipeline, bench, scripts, perfbench or another module). The only
+    exceptions are the REFERENCE_PARITY and STREAM_TWINS names, and each
+    of those must still be defined and still lack such a caller."""
+    defined, _, used = _package_defs_and_names()
+    unreached = {
+        name: where
+        for where, name in defined
+        if not name.startswith("_") and name not in used
+    }
+    allowed = {**REFERENCE_PARITY, **STREAM_TWINS}
+    dead = [w for name, w in unreached.items() if name not in allowed]
+    assert not dead, "public defs only tests reach: " + ", ".join(dead)
+    stale = sorted(set(allowed) - set(unreached))
+    assert not stale, "allowlisted names that are gone or have callers: " + ", ".join(stale)
+
+
+def test_every_package_import_resolves():
+    """Every `from .x import y` / `from instageo_e2e_geospatial_ml_spark.x
+    import y` in the package, including the lazy ones inside function
+    bodies, names a module that imports and a `y` that exists there (an
+    attribute or a submodule). A lazy import of a deleted module only
+    fails when its function runs; this catches it without running it."""
+    import ast
+    import importlib
+    import pathlib
+
+    import instageo_e2e_geospatial_ml_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    top = pkg.__name__
+    broken, n_imports = [], 0
+    for path in sorted(root.rglob("*.py")):
+        # the package a module (or an __init__) resolves `.` against
+        package = list(path.relative_to(root.parent).parts[:-1])
+        for n in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(n, ast.ImportFrom):
+                continue
+            if n.level:
+                base = package[: len(package) - (n.level - 1)]
+                target = ".".join(base + ([n.module] if n.module else []))
+            elif n.module and (n.module == top or n.module.startswith(top + ".")):
+                target = n.module
+            else:
+                continue
+            n_imports += 1
+            where = f"{path.relative_to(root)}:{n.lineno}"
+            try:
+                mod = importlib.import_module(target)
+            except ImportError as e:
+                broken.append(f"{where} {target}: {e}")
+                continue
+            for a in n.names:
+                if a.name == "*" or hasattr(mod, a.name):
+                    continue
+                try:
+                    importlib.import_module(f"{target}.{a.name}")
+                except ImportError:
+                    broken.append(f"{where} {target}.{a.name}")
+    assert n_imports > 0
+    assert not broken, "unresolved package imports: " + "; ".join(broken)
 
 
 def test_registrable_domain_psl_table_wins(spark):

@@ -170,39 +170,6 @@ def test_mq_coder_roundtrip_property(seed):
     assert [dec.decode(int(c)) for c in ctxs] == bits
 
 
-@settings(max_examples=25, deadline=None)
-@given(st.integers(min_value=0, max_value=2**32 - 1))
-def test_vp8l_interop_property(seed):
-    """Random small RGBA images: libwebp lossless encode → our decoder
-    must match libwebp's own decode bit-exactly (skips if libwebp absent)."""
-    import pytest as _pt
-
-    from tests.test_webp import _LIB, _encode_lossless, _libwebp_decode
-    from instageo_e2e_geospatial_ml_spark.webp import webp_decode
-
-    if _LIB is None:
-        _pt.skip("libwebp not available")
-    rng = np.random.default_rng(seed)
-    h, w = int(rng.integers(1, 40)), int(rng.integers(1, 40))
-    kind = int(rng.integers(0, 3))
-    if kind == 0:
-        img = rng.integers(0, 256, (h, w, 4), dtype=np.uint8)
-        img[..., 3] = np.maximum(img[..., 3], 1)
-    elif kind == 1:
-        pal = rng.integers(1, 255, (int(rng.integers(2, 17)), 4), dtype=np.uint8)
-        img = pal[rng.integers(0, len(pal), (h, w))]
-    else:
-        yy, xx = np.mgrid[0:h, 0:w]
-        img = np.stack(
-            [(xx * 7) % 256, (yy * 11) % 256, (xx + yy) % 256, np.full_like(xx, 255)],
-            -1,
-        ).astype(np.uint8)
-    buf = _encode_lossless(img)
-    ref = _libwebp_decode(buf)
-    got = webp_decode(buf)
-    assert got.shape == ref.shape and (got == ref).all()
-
-
 # --- round-7 pure-python kernels ------------------------------------------
 
 

@@ -304,8 +304,10 @@ def test_read_geotiff_lzw_with_predictor(tmp_path):
     import numpy as np
 
     from instageo_e2e_geospatial_ml_spark.codecs import lzw_decode, lzw_encode
-    from instageo_e2e_geospatial_ml_spark.sources.images import decode_external
-    from instageo_e2e_geospatial_ml_spark.sources.tiff import read_geotiff
+    from instageo_e2e_geospatial_ml_spark.sources.tiff import (
+        read_geotiff,
+        read_geotiff_bytes,
+    )
 
     rng = np.random.default_rng(5)
     # smooth-ish field: predictor-2 deltas actually compress
@@ -324,9 +326,9 @@ def test_read_geotiff_lzw_with_predictor(tmp_path):
     deltas = img.copy(); deltas[:, 1:] = img[:, 1:] - img[:, :-1]
     assert len(lzw_encode(deltas.tobytes())) < len(lzw_encode(img.tobytes()))
 
-    # the former tiff_lzw stub now decodes for real
-    out = decode_external("tiff_lzw", _make_strip_tiff(img, lzw_encode, 5, 2))
-    assert out.shape == (1, 40, 60) and (out[0] == img).all()
+    # in-memory payloads decode the same way
+    out, _ = read_geotiff_bytes(_make_strip_tiff(img, lzw_encode, 5, 2))
+    assert out.shape == (40, 60) and (out == img).all()
 
 
 def test_read_geotiff_packbits(tmp_path):

@@ -1,4 +1,5 @@
-"""Structured Streaming: batch parity of windowed counts + streaming dedup."""
+"""Structured Streaming: batch parity of windowed counts, dedup and the
+stateful stream twins, and the chip pipeline run as micro-batches."""
 
 import shutil
 
@@ -271,74 +272,6 @@ def test_sessionize_stream_cross_batch_replay_parity(spark, tmp_path):
     assert got.iloc[0]["n_events"] == 2
 
 
-def test_streaming_lsh_neardup_matches_batch_clusters(spark, tmp_path):
-    """Online LSH near-dup: signatures are bit-identical to the batch
-    minhash, and connected components over the streamed star edges equal
-    components over the batch within-bucket pair join — replayed across
-    many micro-batches with buckets straddling batch boundaries."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    from instageo_e2e_geospatial_ml_spark.operators.dedup import (
-        dedup_clusters,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        shingles,
-    )
-    from instageo_e2e_geospatial_ml_spark.streaming.neardup import (
-        minhash_signature_rows,
-        neardup_pairs_stream,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").select(
-        "doc_id", "text"
-    )
-    # 1) per-row signatures == aggregated batch signatures, bit for bit
-    batch_sig = {
-        r["doc_id"]: list(r["sig"])
-        for r in minhash_signatures(shingles(docs, "text", 3), "doc_id").collect()
-    }
-    row_sig = {
-        r["doc_id"]: list(r["sig"]) for r in minhash_signature_rows(docs).collect()
-    }
-    assert row_sig == batch_sig
-
-    # 2) stream in 6 deterministic micro-batches
-    d = tmp_path / "docs_stream"
-    d.mkdir()
-    now = time.time()
-    pdf = docs.toPandas().sort_values("doc_id").reset_index(drop=True)
-    n_files = 6
-    for i in range(n_files):
-        part = pdf.iloc[i::n_files]
-        tmp = tmp_path / f"_w{i}"
-        spark.createDataFrame(part).coalesce(1).write.parquet(str(tmp))
-        src = glob.glob(str(tmp / "part-*.parquet"))[0]
-        dest = d / f"{i}.parquet"
-        shutil.move(src, dest)
-        os.utime(dest, (now - 100 + i, now - 100 + i))
-    schema = spark.read.parquet(str(d / "0.parquet")).schema
-    stream = read_event_stream(spark, str(d), schema, max_files=1)
-    got = run_available_now(
-        neardup_pairs_stream(stream), "neardup_s", str(tmp_path / "ck_nd")
-    ).toPandas()
-    assert len(got) > 0
-
-    want_pairs = lsh_candidate_pairs(
-        minhash_signatures(shingles(docs, "text", 3), "doc_id")
-    )
-    stream_edges = spark.createDataFrame(got[["doc_a", "doc_b"]].drop_duplicates())
-    c_batch = {
-        r["doc_id"]: r["cluster_id"] for r in dedup_clusters(want_pairs).collect()
-    }
-    c_stream = {
-        r["doc_id"]: r["cluster_id"] for r in dedup_clusters(stream_edges).collect()
-    }
-    assert c_stream == c_batch and len(c_batch) > 0
-
-
 def _drain_to_parquet(spark, stream_df, out, ck):
     """availableNow-drain into a parquet sink (memory sinks can't resume
     from a checkpoint); returns the CUMULATIVE sink contents."""
@@ -362,103 +295,6 @@ def _write_stream_file(spark, tmp_path, d, name, pdf):
     spark.createDataFrame(pdf).coalesce(1).write.parquet(str(tmp))
     src = glob.glob(str(tmp / "part-*.parquet"))[0]
     _sh.move(src, d / f"{name}.parquet")
-
-
-def test_streaming_neardup_max_bucket_cap(spark, tmp_path):
-    """With max_bucket=N, a degenerate bucket stops emitting edges once
-    cumulative membership exceeds N — the online mirror of the batch
-    skew-cap anti-join (which the parity docstring now scopes to)."""
-    from instageo_e2e_geospatial_ml_spark.streaming.neardup import (
-        neardup_pairs_stream,
-    )
-
-    d = tmp_path / "in"
-    d.mkdir()
-    text = "the same boilerplate text repeated for every document here"
-    _write_stream_file(
-        spark, tmp_path, d, "0",
-        pd.DataFrame({"doc_id": [1, 2, 3, 4, 5], "text": [text] * 5}),
-    )
-    schema = "doc_id long, text string"
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(d))
-        )
-        return _drain_to_parquet(
-            spark,
-            neardup_pairs_stream(stream, max_bucket=3),
-            str(tmp_path / "out"),
-            str(tmp_path / "ck1"),
-        )
-
-    got = run()
-    # per band: keeper=1, members 2 and 3 fit under the cap, 4/5 dropped
-    assert set(map(tuple, got[["doc_a", "doc_b"]].drop_duplicates().values)) == {
-        (1, 2),
-        (1, 3),
-    }
-    # a later batch in the same bucket stays capped (cumulative, in state)
-    _write_stream_file(
-        spark, tmp_path, d, "1", pd.DataFrame({"doc_id": [6], "text": [text]})
-    )
-    got2 = run()
-    assert len(got2) == len(got)  # no new edges past the cap
-
-
-def test_streaming_neardup_state_ttl_reelects_keeper(spark, tmp_path):
-    """A bucket whose last event time is older than state_ttl_minutes is
-    evicted once the watermark passes, and its next arrival re-elects a
-    keeper: post-eviction edges link to the NEW keeper, not the old one
-    (the documented recall trade-off). Event-time TTL (not processing
-    time) so the drain terminates and eviction is replay-deterministic."""
-    import pandas as pd
-
-    from instageo_e2e_geospatial_ml_spark.streaming.neardup import (
-        neardup_pairs_stream,
-    )
-
-    d = tmp_path / "in"
-    d.mkdir()
-    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    other = "completely different words nothing shared with the others at all"
-    T = pd.Timestamp
-    # file order == micro-batch order (maxFilesPerTrigger=1):
-    #  b0: bucket A at 10:00 -> keeper 1, edge (1,2); timeout at 10:05
-    #  b1: other bucket at 10:30 -> watermark -> 10:29
-    #  b2: other bucket at 10:31 -> A has no data, watermark 10:29 > 10:05
-    #      -> A evicted this batch
-    #  b3: bucket A again at 11:00 -> fresh state, keeper 5, edge (5,6)
-    batches = [
-        pd.DataFrame({"doc_id": [1, 2], "text": [text] * 2,
-                      "ts": [T("2024-01-01 10:00:00")] * 2}),
-        pd.DataFrame({"doc_id": [3], "text": [other],
-                      "ts": [T("2024-01-01 10:30:00")]}),
-        pd.DataFrame({"doc_id": [4], "text": ["quick brown fox jumps over lazy dog tonight"],
-                      "ts": [T("2024-01-01 10:31:00")]}),
-        pd.DataFrame({"doc_id": [5, 6], "text": [text] * 2,
-                      "ts": [T("2024-01-01 11:00:00")] * 2}),
-    ]
-    for i, b in enumerate(batches):
-        _write_stream_file(spark, tmp_path, d, str(i), b)
-    schema = "doc_id long, text string, ts timestamp"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    got = _drain_to_parquet(
-        spark,
-        neardup_pairs_stream(stream, state_ttl_minutes=5, watermark="1 minute"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ck"),
-    )
-    pairs = set(map(tuple, got[["doc_a", "doc_b"]].drop_duplicates().values))
-    # the re-elected keeper's edge, and crucially NO (1,5)/(1,6) edges to
-    # the evicted keeper
-    assert pairs == {(1, 2), (5, 6)}, pairs
 
 
 def test_cap_per_key_stream_matches_batch(spark, tmp_path):
@@ -579,122 +415,6 @@ def test_cap_per_key_stream_chunk_spanning_key(spark, tmp_path):
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert list(got["doc_id"]) == [1, 2, 3]
     assert list(got["rank_in_key"]) == [1, 2, 3]
-
-
-def test_heavy_hitters_stream_mg_bound(spark, tmp_path):
-    """Sharded Misra-Gries vs the exact batch heavy hitters: every token
-    above the per-shard 1/(capacity+1) share bound is present in the
-    final snapshot, estimates never overcount, and the undercount stays
-    within n_shard/(capacity+1)."""
-    from instageo_e2e_geospatial_ml_spark.streaming.heavy import heavy_hitters_stream
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    toks = docs.select(
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok")
-    )
-    src = str(tmp_path / "in")
-    toks.repartition(4).write.mode("overwrite").parquet(src)
-
-    capacity, n_shards = 8, 4
-    stream = spark.readStream.schema("tok string").parquet(src)
-    q = (
-        heavy_hitters_stream(stream, capacity=capacity, tok_col="tok", n_shards=n_shards)
-        .writeStream.format("memory")
-        .queryName("mg_hh")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    snap = spark.table("mg_hh").toPandas()
-    # final snapshot per shard = rows at that shard's max n_seen
-    final = snap[snap.groupby("shard")["n_seen"].transform("max") == snap["n_seen"]]
-    assert (final.groupby("shard").size() <= capacity).all()
-
-    truth = (
-        toks.withColumn("shard", F.pmod(F.hash("tok"), F.lit(n_shards)))
-        .groupBy("shard", "tok").count().toPandas()
-    )
-    shard_n = truth.groupby("shard")["count"].sum()
-    est = {(r.shard, r.tok): r.est for r in final.itertuples()}
-    for r in truth.itertuples():
-        bound = shard_n[r.shard] / (capacity + 1)
-        if r.count > bound:
-            assert (r.shard, r.tok) in est, f"missing heavy hitter {r.tok}"
-        if (r.shard, r.tok) in est:
-            e = est[(r.shard, r.tok)]
-            assert e <= r.count <= e + bound
-    # snapshot n_seen equals the true shard volume (nothing lost)
-    got_n = final.groupby("shard")["n_seen"].max()
-    for s, n in shard_n.items():
-        assert got_n.get(s, 0) == n
-
-
-def test_stream_stream_attribution_matches_batch(spark, tmp_path):
-    """Watermarked stream-stream interval join == the same logical join
-    on static frames, for in-watermark data: conversions inside the
-    horizon attribute to every qualifying impression, outside-horizon
-    and wrong-user conversions don't."""
-    import pandas as pd
-
-    from instageo_e2e_geospatial_ml_spark.streaming.attribution import (
-        attribute_batch, attribute_stream,
-    )
-
-    t0 = pd.Timestamp("2024-03-01 10:00:00")
-    imp_rows = [
-        (1, "i1", t0),
-        (1, "i2", t0 + pd.Timedelta(minutes=30)),
-        (2, "i3", t0),
-        (3, "i4", t0),  # user with no conversion
-    ]
-    conv_rows = [
-        (1, "c1", t0 + pd.Timedelta(minutes=45)),   # hits i1 and i2
-        (1, "c2", t0 + pd.Timedelta(minutes=85)),   # hits i2 only (i1 beyond 1h)
-        (2, "c3", t0 + pd.Timedelta(minutes=59)),   # hits i3 (inside)
-        (2, "c4", t0 - pd.Timedelta(minutes=1)),    # before any impression
-        (9, "c5", t0 + pd.Timedelta(minutes=5)),    # unknown user
-    ]
-    imp_pdf = pd.DataFrame(imp_rows, columns=["user_id", "imp_id", "imp_ts"])
-    conv_pdf = pd.DataFrame(conv_rows, columns=["user_id", "conv_id", "conv_ts"])
-
-    imp_dir, conv_dir = str(tmp_path / "imp"), str(tmp_path / "conv")
-    imp_b = spark.createDataFrame(imp_pdf)
-    conv_b = spark.createDataFrame(conv_pdf)
-    imp_b.repartition(2).write.parquet(imp_dir)
-    conv_b.repartition(2).write.parquet(conv_dir)
-
-    imp_s = (
-        spark.readStream.schema(imp_b.schema)
-        .option("maxFilesPerTrigger", 1).parquet(imp_dir)
-    )
-    conv_s = (
-        spark.readStream.schema(conv_b.schema)
-        .option("maxFilesPerTrigger", 1).parquet(conv_dir)
-    )
-    out = attribute_stream(imp_s, conv_s, horizon="1 hour")
-    q = (
-        out.writeStream.format("memory").queryName("attr_out")
-        .option("checkpointLocation", str(tmp_path / "ck_attr"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, r.imp_id, r.conv_id, r.lag_us)
-        for r in spark.sql("select * from attr_out").collect()
-    }
-    want = {
-        (r.user_id, r.imp_id, r.conv_id, r.lag_us)
-        for r in attribute_batch(imp_b, conv_b, horizon="1 hour").collect()
-    }
-    assert got == want
-    assert ("1", "i1", "c1", 45 * 60 * 1000000) in {
-        (str(u), i, c, l) for u, i, c, l in got
-    } or (1, "i1", "c1", 45 * 60 * 1000000) in got
-    assert all(c != "c4" and c != "c5" for _, _, c, _ in got)
-    assert len(got) == 4  # (i1,c1) (i2,c1) (i2,c2) (i3,c3)
 
 
 def test_hll_distinct_stream_register_exact_batch_parity(spark, tmp_path):
@@ -877,118 +597,6 @@ def test_temporal_enrich_stream_matches_batch(spark, tmp_path):
     assert by[5] == "v2" and by[6] == "w1" and by[7] is None
 
 
-def test_windowed_funnel_stream_matches_batch(spark, tmp_path):
-    """The streaming funnel's LAST emitted row per user equals the batch
-    windowed_funnel result when events arrive in event-time order across
-    batches, and every intermediate emission is a strict stage advance."""
-    from instageo_e2e_geospatial_ml_spark.operators.funnel import (
-        windowed_funnel,
-    )
-    from instageo_e2e_geospatial_ml_spark.streaming.funnel import (
-        windowed_funnel_stream,
-    )
-
-    t = lambda m: pd.Timestamp("2024-01-01") + pd.Timedelta(minutes=m)
-    rows = []
-    eid = 0
-    for u in range(1, 21):
-        # u converts to depth (u % 4): view at u min, click +2, purchase +4
-        rows.append((eid, t(u), u, "view")); eid += 1
-        if u % 4 >= 1:
-            rows.append((eid, t(u + 2), u, "click")); eid += 1
-        if u % 4 >= 2:
-            rows.append((eid, t(u + 4), u, "purchase")); eid += 1
-        # noise the funnel must ignore
-        rows.append((eid, t(u + 5), u, "error")); eid += 1
-    pdf = pd.DataFrame(
-        rows, columns=["event_id", "ts", "user_id", "event_type"]
-    )
-    ev = spark.createDataFrame(pdf)
-
-    # ordered multi-file source: split by time so files arrive in order
-    d = tmp_path / "in"
-    for i, chunk in enumerate(
-        [pdf[pdf.ts < t(10)], pdf[(pdf.ts >= t(10)) & (pdf.ts < t(18))],
-         pdf[pdf.ts >= t(18)]]
-    ):
-        spark.createDataFrame(chunk).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(d))
-    stream = read_event_stream(spark, str(d), ev.schema, max_files=1)
-    out = windowed_funnel_stream(
-        stream, ["view", "click", "purchase"],
-        horizon_us=10 * 60 * 1000000, watermark="1 minute",
-    )
-    got = run_available_now(out, "wfun", str(tmp_path / "ck")).toPandas()
-
-    want = {
-        r.u: (r.stage, r.anchor_us, r.last_us)
-        for r in windowed_funnel(
-            ev, ["view", "click", "purchase"],
-            horizon_us=10 * 60 * 1000000,
-        ).collect()
-    }
-    assert len(got) > 0
-    # every emission is a valid (user, stage<=final) advance
-    last = {}
-    for _, r in got.sort_values(["u", "stage"]).iterrows():
-        assert r["stage"] == last.get(r["u"], 0) + 1
-        last[r["u"]] = r["stage"]
-    # final emitted row per user == batch result
-    fin = got.sort_values("stage").groupby("u").last()
-    assert set(fin.index) == set(want)
-    for u, row in fin.iterrows():
-        assert (row["stage"], row["anchor_us"], row["last_us"]) == want[u]
-
-
-def test_cusum_monitor_stream_matches_reference(spark, tmp_path):
-    """Online CUSUM streaming monitor vs the single-pass reference, fed
-    across 3 ordered micro-batches: identical alarm sequence (times,
-    sides, statistics), state carrying S across batch boundaries."""
-    import numpy as np
-
-    from instageo_e2e_geospatial_ml_spark.streaming.cusum import (
-        cusum_alarms_reference,
-        cusum_monitor_stream,
-    )
-
-    rng = np.random.default_rng(41)
-    t0 = pd.Timestamp("2024-01-01")
-    rows = []
-    vals = []
-    for i in range(300):
-        # regime shift at 150: mean 100 -> 160
-        base = 100 if i < 150 else 160
-        v = int(base + rng.integers(-20, 21))
-        ts = t0 + pd.Timedelta(minutes=i)
-        rows.append((i, ts, "m1", v))
-        vals.append((int(ts.value // 1000), v))
-    pdf = pd.DataFrame(rows, columns=["event_id", "ts", "event_type",
-                                      "value_int"])
-    d = tmp_path / "in"
-    for chunk in np.array_split(pdf.index, 3):
-        spark.createDataFrame(pdf.loc[chunk]).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(d))
-    ev = spark.createDataFrame(pdf)
-    stream = read_event_stream(spark, str(d), ev.schema, max_files=1)
-    out = cusum_monitor_stream(
-        stream, mu0=100, slack=10, h=200, watermark="1 minute"
-    )
-    got = run_available_now(out, "cusum", str(tmp_path / "ck")).toPandas()
-    got = got.sort_values("alarm_us").reset_index(drop=True)
-
-    want = cusum_alarms_reference(vals, mu0=100, slack=10, h=200)
-    assert len(want) > 0, "test setup: the shift must trigger alarms"
-    assert len(got) == len(want)
-    for (_, g), w in zip(got.iterrows(), want):
-        assert (g["alarm_us"], g["side"], g["s_at_alarm"],
-                g["n_since_reset"]) == w
-    # first alarm fires after the regime shift, not before
-    shift_us = int((t0 + pd.Timedelta(minutes=150)).value // 1000)
-    assert want[0][0] >= shift_us
-
-
 def test_token_bucket_stream_matches_batch(spark, tmp_path):
     """token_bucket_stream throttle events across 3 ordered batches
     equal the batch replay's per-key throttle counts + first-throttle
@@ -1046,62 +654,6 @@ def test_token_bucket_stream_matches_batch(spark, tmp_path):
     assert per_key.get("b", 0) == 0
     assert int(got[got.k == "a"]["arrival_us"].min()) == \
         want["a"].first_throttled_us
-
-
-def test_ewma_monitor_stream_matches_batch(spark, tmp_path):
-    """ewma_monitor_stream anomaly emissions across 3 ordered
-    micro-batches equal the batch replay (ewma_anomaly): same per-key
-    anomaly count and max deviation; the fixed-point level survives
-    batch boundaries."""
-    import numpy as np
-
-    from instageo_e2e_geospatial_ml_spark.operators.timeseries import (
-        ewma_anomaly,
-    )
-    from instageo_e2e_geospatial_ml_spark.streaming.ewma import (
-        ewma_monitor_stream,
-    )
-
-    rng = np.random.default_rng(17)
-    t0 = pd.Timestamp("2024-01-01")
-    rows = []
-    for i in range(240):
-        for k in ("m1", "m2"):
-            base = 100 if k == "m1" else 500
-            v = int(base + rng.integers(-2, 3))
-            if i % 37 == 0:  # periodic spikes -> anomalies
-                v += 40
-            rows.append((i * 2 + (k == "m2"),
-                         t0 + pd.Timedelta(minutes=i), k, v))
-    pdf = pd.DataFrame(rows, columns=["event_id", "ts", "event_type",
-                                      "value_int"])
-    d = tmp_path / "in"
-    for chunk in np.array_split(pdf.index, 3):
-        spark.createDataFrame(pdf.loc[chunk]).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(d))
-    ev = spark.createDataFrame(pdf)
-    stream = read_event_stream(spark, str(d), ev.schema, max_files=1)
-    out = ewma_monitor_stream(stream, shift_pow=4, band=8,
-                              watermark="1 minute")
-    got = run_available_now(out, "ewma", str(tmp_path / "ck")).toPandas()
-    assert len(got) > 0
-
-    batch_in = spark.createDataFrame(pdf).selectExpr(
-        "event_type AS k",
-        "CAST(unix_micros(CAST(ts AS TIMESTAMP)) AS LONG) AS tus",
-        "CAST(value_int AS LONG) AS v",
-    )
-    want = {
-        r.k: (r.n_anomalies, r.max_abs_dev)
-        for r in ewma_anomaly(batch_in, shift_pow=4, band=8).collect()
-    }
-    counts = got.groupby("key").size().to_dict()
-    maxdev = got.groupby("key")["abs_dev"].max().to_dict()
-    for k, (n_anom, mx) in want.items():
-        assert counts.get(k, 0) == n_anom
-        if n_anom:
-            assert maxdev[k] == mx
 
 
 def test_sensor_stream_datasource_drains_exactly_once(spark, tmp_path):
