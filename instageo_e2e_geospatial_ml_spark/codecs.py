@@ -100,6 +100,11 @@ def decode_png(buf: bytes, w: int, h: int, bands: int) -> np.ndarray:
         elif tag == b"IEND":
             break
         pos += 12 + length
+    if (width, height) != (w, bands * h):
+        raise ValueError(
+            f"png payload is {width}x{height}, but metadata declares "
+            f"(bands={bands}, h={h}, w={w})"
+        )
     raw = np.frombuffer(zlib.decompress(idat), dtype=np.uint8).reshape(height, 1 + 2 * width)
     assert (raw[:, 0] == 0).all(), "only filter 0 supported"
     img = raw[:, 1:].reshape(height, width, 2).copy().view(">u2").reshape(height, width)
@@ -145,8 +150,13 @@ def encode_qdct(arr: np.ndarray) -> bytes:
     return header + zlib.compress(b"".join(outs), 6)
 
 
-def decode_qdct(buf: bytes, w: int | None = None, h: int | None = None, bands: int | None = None) -> np.ndarray:
+def decode_qdct(buf: bytes, w: int, h: int, bands: int) -> np.ndarray:
     bands_, h_, w_, qstep = struct.unpack("<IIII", buf[:16])
+    if (bands_, h_, w_) != (bands, h, w):
+        raise ValueError(
+            f"qdct payload is {(bands_, h_, w_)}, but metadata declares "
+            f"(bands={bands}, h={h}, w={w})"
+        )
     H, W = h_ + (-h_) % _B, w_ + (-w_) % _B
     per_band = (H // _B) * (W // _B) * _B * _B
     q = np.frombuffer(zlib.decompress(buf[16:]), dtype=np.int16)

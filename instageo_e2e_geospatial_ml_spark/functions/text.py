@@ -505,12 +505,7 @@ def hashed_quality_score(
     )
 
 
-def heavy_hitter_tokens(
-    docs,
-    k: int = 100,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def heavy_hitter_tokens(docs, k: int = 100, text_col: str = "text"):
     """Exact heavy hitters over the token stream: tokens whose total
     occurrence count is at least a 1/k share of ALL token occurrences
     (count · k >= total, integer cross-multiplied — no float share).

@@ -631,12 +631,13 @@ def tier1_encode_segmented(
 
 def tier1_decode_segmented(
     segs: list, h: int, w: int, band: str, nplanes: int, npasses: int,
-    termall: bool, bypass: bool,
-    reset: bool = False, causal: bool = False, segsym: bool = False,
+    bypass: bool, reset: bool = False, causal: bool = False, segsym: bool = False,
 ) -> np.ndarray:
     """Decode a code-block delivered as terminated segments
     [(bytes, npasses)] (must partition `npasses` at the rule's
-    boundaries — _segment_pass_counts produces exactly that)."""
+    boundaries — _segment_pass_counts produces exactly that). The
+    segments carry their own termination points; `bypass` marks which
+    passes are raw."""
     mag = np.zeros((h, w), np.int64)
     if npasses == 0 or nplanes <= 0:
         return mag
@@ -2297,7 +2298,7 @@ def _decode_tile(
         if use_termall or use_bypass or use_reset or use_causal or use_segsym:
             dec = tier1_decode_segmented(
                 s["chunks"], s["ch"], s["cw"], band, mb - s["zbp"], s["npass"],
-                use_termall, use_bypass, use_reset, use_causal, use_segsym,
+                use_bypass, use_reset, use_causal, use_segsym,
             )
         else:
             dec = _t1_decode(

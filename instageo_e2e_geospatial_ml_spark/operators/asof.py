@@ -20,6 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# asof_pick_keyed's fine time buckets per tolerance width
+FINE_BUCKETS_PER_TOL = 16
+
 
 def asof_pick(
     steps: DataFrame,
@@ -100,9 +103,7 @@ def asof_pick_keyed(
     tolerance_minutes: int = 0,
     obs_id: str = "obs_id",
     key: str = "k",
-    order: str = "cloud_cover",
     keep_unmatched: bool = True,
-    fine_buckets_per_tol: int = 16,
 ) -> DataFrame:
     """As-of pick where the candidate set is 'every granule sharing `key`'
     — the J2 semantics of asof_pick(steps, obs ⋈ granules ON key, granules)
@@ -114,8 +115,8 @@ def asof_pick_keyed(
     cloud_cover) → one row per (obs_id, step) with the picked granule
     (null when nothing within tolerance).
 
-    order='cloud_cover' (query-independent ordering) runs the two-level
-    decomposition:
+    The pick order (cloud cover, then ts, then granule_id) does not depend
+    on the query date, which allows a two-level decomposition:
 
       1. granules are ranked once per key by (coalesce(cloud, 100), ts,
          granule_id) — rank is then ONE LONG that totally orders the
@@ -124,13 +125,13 @@ def asof_pick_keyed(
          — 57 s over the 51M-pair q05 feed at sf1.0 vs ~2 s for the
          min(long) form.)
       2. each granule lands in one FINE time bucket of width tol /
-         fine_buckets_per_tol; per-(key, bucket) minimum ranks form a
+         FINE_BUCKETS_PER_TOL; per-(key, bucket) minimum ranks form a
          small summary table.
       3. a step's window [qd − tol, qd + tol] decomposes into fully-
          covered fine buckets (joined against the bucket-min summary — no
          per-granule rows at all) plus ≤ 2 partial edge buckets (joined
          against ranked granules with the exact µs bounds filter). The
-         union is ~(fine_buckets_per_tol·2 + 2·granules-per-bucket) rows
+         union is ~(FINE_BUCKETS_PER_TOL·2 + 2·granules-per-bucket) rows
          per step instead of every in-window granule — 8× fewer rows on
          the q05 sf1.0 shape — and collapses with min(rank).
       4. the winning rank joins back to its granule payload (two
@@ -141,10 +142,6 @@ def asof_pick_keyed(
     lo ≤ ts_us ≤ hi exactly, and each granule reaches a step's candidate
     set exactly once (full and edge bucket ranges are disjoint).
 
-    order='closest' (query-DEPENDENT ordering — rank cannot be
-    precomputed) falls back to single-level bucketing with a
-    min(struct) pick over the true candidate pairs.
-
     Scale notes: the rank window partitions by `key` (candidate-key
     granularity, the operator's contract); a pathologically hot key can
     be range-split with functions/text.ranged_prefix (range buckets +
@@ -154,45 +151,7 @@ def asof_pick_keyed(
     tol_us = (tolerance_days * 24 * 60 + tolerance_minutes) * 60 * 1_000_000
     g_us = F.unix_micros(F.col("ts").cast("timestamp"))
     q_us = F.unix_micros(F.col("query_date").cast("timestamp"))
-
-    if order == "closest":
-        g = granules.withColumn("_b", F.floor(g_us / F.lit(tol_us)))
-        s = steps.withColumn(
-            "_b", F.explode(F.sequence(F.floor(q_us / F.lit(tol_us)) - 1,
-                                       F.floor(q_us / F.lit(tol_us)) + 1))
-        )
-        cand = s.join(g, [key, "_b"], "inner")
-        dt_us = F.abs(
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            - F.unix_micros(F.col("query_date").cast("timestamp"))
-        )
-        cand = cand.filter(dt_us <= F.lit(tol_us))
-        picked = (
-            cand.groupBy(obs_id, "step")
-            .agg(
-                F.min(
-                    F.struct(
-                        (dt_us / F.lit(60e6)).alias("_o"),
-                        F.col("ts").alias("ts"),
-                        F.col("granule_id").alias("picked_granule"),
-                        F.col("cloud_cover").alias("cloud_cover"),
-                    )
-                ).alias("_m")
-            )
-            .select(
-                obs_id, "step",
-                F.col("_m.picked_granule").alias("picked_granule"),
-                F.col("_m.ts").alias("ts"),
-                F.col("_m.cloud_cover").alias("cloud_cover"),
-            )
-        )
-        if not keep_unmatched:
-            return picked
-        return steps.drop(key).join(picked, [obs_id, "step"], "left")
-    if order != "cloud_cover":
-        raise ValueError(order)
-
-    w_us = max(1, tol_us // max(1, fine_buckets_per_tol))
+    w_us = max(1, tol_us // FINE_BUCKETS_PER_TOL)
     # missing cloud cover sorts WORST (reference get('eo:cloud_cover', 100))
     sort_key = F.coalesce(F.col("cloud_cover"), F.lit(100.0))
     ranked = granules.withColumn("_g_us", g_us).withColumn(
@@ -249,9 +208,7 @@ def asof_pick_keyed(
     return steps.drop(key).join(picked, [obs_id, "step"], "left")
 
 
-def granule_sequence(
-    picked: DataFrame, obs_id: str = "obs_id", num_steps: int | None = None
-) -> DataFrame:
+def granule_sequence(picked: DataFrame, obs_id: str = "obs_id") -> DataFrame:
     """Collapse per-step picks back to one row per observation with the
     step-ordered granule array + the `stac_items_str` grouping key
     (reference stac_utils.py:296-317: '_'.join of granule ids)."""

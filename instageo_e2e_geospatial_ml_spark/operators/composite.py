@@ -61,7 +61,7 @@ def median_composite(stack: DataFrame) -> DataFrame:
     composite summary. Pixels with zero valid observations emit
     COMPOSITE_NODATA and are excluded from the moments."""
 
-    def compose(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def compose(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tile = int(key[0])
         pdf = pdf.sort_values("t")
         hh, ww = int(pdf.iloc[0]["h"]), int(pdf.iloc[0]["w"])

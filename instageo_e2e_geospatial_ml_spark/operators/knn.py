@@ -64,8 +64,6 @@ def _radius_pairs(
     points: DataFrame,
     radius_deg: float,
     res: int | None,
-    qid: str,
-    pid: str,
     qx: str,
     qy: str,
     px: str,
@@ -124,7 +122,7 @@ def distance_join(
     arithmetic. No window, so nothing ranks: output size is the true
     match count, and the plan is scan → broadcast/equi-join → filter."""
     return _radius_pairs(
-        queries, points, radius_deg, res, qid, pid, qx, qy, px, py,
+        queries, points, radius_deg, res, qx, qy, px, py,
         metric, broadcast_queries,
     ).select(qid, pid, "dist")
 
@@ -150,7 +148,7 @@ def knn_join(
     (dist asc, pid asc). res is auto-picked so one ring covers the radius.
     """
     j = _radius_pairs(
-        queries, points, radius_deg, res, qid, pid, qx, qy, px, py,
+        queries, points, radius_deg, res, qx, qy, px, py,
         metric, broadcast_queries,
     )
     w = Window.partitionBy(qid).orderBy(F.col("dist").asc(), F.col(pid).asc())
@@ -200,8 +198,7 @@ def knn_label_audit(
     # _radius_pairs preserves input columns, so both labels ride along
     # the candidate pairs — no label re-join needed
     pairs = _radius_pairs(
-        q, p, radius_deg, res, "qid", "nid", "qx", "qy", "nx", "ny",
-        "sq_euclid", True,
+        q, p, radius_deg, res, "qx", "qy", "nx", "ny", "sq_euclid", True,
     ).filter(F.col("qid") != F.col("nid"))
     w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nid").asc())
     top = pairs.withColumn("rank", F.row_number().over(w)).filter(

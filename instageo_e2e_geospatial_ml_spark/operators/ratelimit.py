@@ -1,4 +1,4 @@
-"""Token-bucket rate limiting — batch replay + the exact admission
+"""Token-bucket rate limiting — batch replay of the exact admission
 decision, all integer.
 
 The token bucket (capacity B tokens, refill r tokens/second) is THE
@@ -15,9 +15,7 @@ division at all. The recurrence is order-dependent state — not a
 window/aggregate shape — so the batch form runs as a per-key
 applyInPandas fold (numpy-backed, the sessionize contract: per-key
 history is the parallelism unit) and the oracle is a DuckDB RECURSIVE
-CTE stepping the identical recurrence. The streaming twin
-(token_bucket_stream) carries (tokens, last_ts) per key in GroupState —
-O(1) state — and matches the batch fold on in-order feeds.
+CTE stepping the identical recurrence (registry query q209).
 """
 
 from __future__ import annotations
@@ -113,65 +111,3 @@ SELECT k, CAST(count(*) AS BIGINT) AS n_arrivals,
 FROM walk GROUP BY k
 """
 
-
-def token_bucket_stream(
-    events: DataFrame,
-    rate_per_s: int,
-    burst: int,
-    key_col: str = "k",
-    ts_col: str = "ts",
-    id_col: str = "eid",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming twin: emits one row per THROTTLED arrival (k,
-    arrival_us, tokens_short) as it happens; GroupState carries
-    (tokens_µ, last_us). In-order parity with token_bucket_admit; the
-    usual append-mode cross-batch-disorder caveat applies."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import (
-        GroupState,
-        GroupStateTimeout,
-    )
-
-    cap = burst * 1_000_000
-    cost = 1_000_000
-    out_schema = "k string, arrival_us long, tokens_short long"
-    state_schema = "tokens long, last long"
-
-    def proc(key, pdfs, state: GroupState):
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values([ts_col, id_col], kind="mergesort")
-        ts_us = (
-            rows[ts_col].astype("datetime64[us]").astype("int64")
-        ).to_numpy()
-        if state.exists:
-            tokens, last = state.get
-        else:
-            tokens, last = cap, -1
-        throttled = []
-        for t in ts_us:
-            t = int(t)
-            if last >= 0:
-                tokens = min(cap, tokens + (t - last) * rate_per_s)
-            last = t
-            if tokens >= cost:
-                tokens -= cost
-            else:
-                throttled.append((key[0], t, cost - tokens))
-        state.update((int(tokens), int(last)))
-        if throttled:
-            yield pd.DataFrame(
-                throttled, columns=["k", "arrival_us", "tokens_short"]
-            )
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            proc,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )

@@ -1077,8 +1077,8 @@ def q54_chip_cleaning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q31_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization of the events stream (batch twin of the
-    applyInPandasWithState streaming operator): 30-minute gap per event_type."""
+    """Gap-based sessionization of the events table
+    (streaming/sessions.sessionize_batch): 30-minute gap per event_type."""
     from ..streaming.sessions import sessionize_batch
 
     return sessionize_batch(
@@ -12016,23 +12016,7 @@ def q272_symspell_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("freq"))
         .filter(F.length("w") >= 3)
     )
-    variants = vocab.select(
-        "w",
-        F.explode(
-            F.concat(
-                F.array(F.col("w")),
-                F.transform(
-                    F.sequence(F.lit(1), F.length("w")),
-                    lambda i: F.concat(
-                        F.expr("substring(w, 1, CAST(i - 1 AS INT))""")
-                        if False
-                        else F.substring(F.col("w"), 1, 0),
-                    ),
-                ),
-            )
-        ).alias("v"),
-    )
-    # substring with column args needs expr; build delete-1 variants
+    # delete-1 variants (substring with column args needs expr)
     variants = vocab.select(
         "w",
         F.explode(
@@ -15401,8 +15385,7 @@ def q319_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q319_sql(sf_dir: str = "") -> str:
-    return """
+Q319_SQL = """
 WITH toks AS (
   SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
   FROM documents
@@ -15427,9 +15410,6 @@ SELECT w, df, s,
        (nd.n * ss - s * s) * 1000000 // (s * nd.n) AS vmr_ppm
 FROM top CROSS JOIN nd
 """
-
-
-Q319_SQL = _q319_sql()
 
 QUERIES["q319_term_burstiness"] = q319_term_burstiness
 ORACLES["q319_term_burstiness"] = Q319_SQL

@@ -20,7 +20,7 @@ join is a broadcast hash join, the as-of pick is one shuffle keyed by
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -48,7 +48,6 @@ class ChipPipelineConfig:
     band_order: tuple = ("B02", "B03", "B04", "B8A", "B11", "B12")
     n_salt: int = 4
     shift_to_month_start: bool = False
-    extra: dict = field(default_factory=dict)
 
 
 def build_records(
@@ -152,7 +151,6 @@ def run_chip_pipeline_streaming(
     cfg: ChipPipelineConfig,
     checkpoint: CheckpointTable,
     stream_checkpoint_dir: str,
-    payload_source: str = "rows",
     max_files: int = 16,
 ) -> DataFrame:
     """Incremental chip ingestion: J8 resumability upgraded to continuous
@@ -185,13 +183,9 @@ def run_chip_pipeline_streaming(
     )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # appends to the checkpoint inside (atomic snapshot commit)
-        run_chip_pipeline(
-            batch_df, catalog, images, cfg,
-            checkpoint=checkpoint, payload_source=payload_source,
-        )
+        # appends to the checkpoint inside (atomic snapshot commit); an
+        # empty batch commits nothing, like any batch with no new chips
+        run_chip_pipeline(batch_df, catalog, images, cfg, checkpoint=checkpoint)
 
     q = (
         stream.writeStream.foreachBatch(_process)

@@ -12,7 +12,8 @@ The reference source here is a deterministic synthetic "sensor fleet"
 byte-reproducible and an oracle can pin the aggregate of what the
 connector emits: the CONTRACT under test is the partition math
 (boundaries, no dup/no gap) and the schema, which is exactly what a
-real connector gets wrong first.
+real connector gets wrong first. The connector is a batch reader
+(`spark.read.format("sensors")`, registry query q262).
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 
@@ -99,62 +99,3 @@ SELECT sensor_id,
 FROM grid
 """
 
-
-class SensorStreamReader(SimpleDataSourceStreamReader):
-    """SimpleDataSourceStreamReader for the same sensor feed: offsets
-    are reading sequence numbers, each micro-batch covers
-    [start_seq, start_seq + batch) across all sensors — replayable
-    (read2 from a stored offset re-emits identical rows, the
-    exactly-once contract checkpoint recovery depends on). The feed is
-    bounded by `maxseq` so availableNow drains terminate."""
-
-    def __init__(self, options):
-        self.n_sensors = int(options.get("nsensors", 8))
-        self.batch = int(options.get("batchseqs", 10))
-        self.max_seq = int(options.get("maxseq", 50))
-
-    def initialOffset(self):
-        return {"seq": 0}
-
-    def latestOffset(self):
-        return {"seq": self.max_seq}
-
-    def partitions(self, start, end):
-        # one logical slice; Spark parallelizes across micro-batches
-        return [_SensorPartition(start["seq"], end["seq"])]
-
-    def read(self, start):
-        lo = start["seq"]
-        hi = min(lo + self.batch, self.max_seq)
-        return (iter(self._rows(lo, hi)), {"seq": hi})
-
-    def readBetweenOffsets(self, start, end):
-        return iter(self._rows(start["seq"], end["seq"]))
-
-    def _rows(self, lo, hi):
-        # a LIST ITERATOR, not a generator: the prefetch cache both
-        # next()s and copy.copy()s what read() returns — list_iterator
-        # supports both, generators support neither
-        return [
-            _reading(sid, seq)
-            for seq in range(lo, hi)
-            for sid in range(self.n_sensors)
-        ]
-
-
-class SensorStreamDataSource(DataSource):
-    """spark.readStream.format("sensorstream")...load()"""
-
-    @classmethod
-    def name(cls):
-        return "sensorstream"
-
-    def schema(self):
-        return "sensor_id INT, tus LONG, temp_milli LONG"
-
-    def simpleStreamReader(self, schema):
-        return SensorStreamReader(self.options)
-
-
-def register_stream(spark) -> None:
-    spark.dataSource.register(SensorStreamDataSource)

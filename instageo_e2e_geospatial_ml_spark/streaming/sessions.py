@@ -1,34 +1,16 @@
-"""Event sessionization: batch twin + custom stateful streaming operator.
+"""Event sessionization: gap-based sessions as DataFrame algebra.
 
 A session is a maximal run of events for one key where consecutive events
 are ≤ `gap` apart (the classic gap-based sessionization the reference's RQ
 job queue has no analogue for; a web-scale ingest pipeline needs it to
 group observation bursts per tile).
 
-Two implementations, identical on in-order input (and any input where
-cross-batch disorder stays within one micro-batch — batches are sorted
-before folding). For cross-batch late events the streaming twin is
-best-effort append-mode: an in-gap event older than the open session
-extends session_start backward; an out-of-gap older event becomes its own
-immediately-emitted session; but an event that would MERGE two
-already-emitted sessions cannot retract emitted rows (Spark's append mode
-has no retractions — the exact twin would need full event buffering until
-the watermark).
+`sessionize_batch` is pure DataFrame algebra: lag() gap flags → running
+sum over the key window = session ordinal → one groupBy. Exactly
+SQL-expressible (DuckDB oracle, registry query q31).
 
-  * `sessionize_batch` — pure DataFrame algebra: lag() gap flags → running
-    sum over the key window = session ordinal → one groupBy. Exactly
-    SQL-expressible (DuckDB oracle, driver query q31).
-  * `sessionize_stream` — Structured Streaming `applyInPandasWithState`:
-    per-key GroupState carries the open session (start, last_ts, n, sum);
-    closed sessions are emitted as soon as a later event breaks the gap,
-    and event-time timeout flushes sessions whose gap elapsed past the
-    watermark. This is the custom-stateful-operator path (the one shape
-    Spark's built-in windowed aggregations can't express).
-
-Scale notes (batch): the window and the groupBy share one hash exchange on
-the key; state per key in streaming is O(1) (a single open session), so
-the state store stays bounded by the number of live keys regardless of
-event volume.
+Scale notes: the window and the groupBy share one hash exchange on the
+key.
 """
 
 from __future__ import annotations
@@ -68,95 +50,3 @@ def sessionize_batch(
         .withColumnRenamed("_sid", "session_id")
     )
 
-
-def sessionize_stream(
-    events: DataFrame,
-    key: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    gap_minutes: int = 360,
-    watermark: str = "1 hour",
-    emit_open_on_timeout: bool = True,
-) -> DataFrame:
-    """Streaming gap sessionization via applyInPandasWithState.
-
-    Emits a row per CLOSED session: closed by a subsequent out-of-gap
-    event in any batch, or (when `emit_open_on_timeout`) by event-time
-    timeout once the watermark passes session_end + gap. Late rows older
-    than an emitted session are dropped by the watermark upstream.
-
-    Cross-batch late events (older than the OPEN session but within the
-    watermark): an in-gap one extends session_start backward; an
-    out-of-gap one is emitted as its own immediate session (two such
-    events within a gap of each other emit separately — append mode
-    cannot retract; see the module docstring for the exact-twin caveat).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_us = int(gap_minutes) * 60 * 1_000_000
-    out_schema = (
-        f"{key} string, session_start string, session_end string, "
-        "n_events long, sum_value double"
-    )
-    state_schema = "start long, last long, n long, s double"
-
-    def fmt(us: int) -> str:
-        return pd.Timestamp(us, unit="us").strftime("%Y-%m-%dT%H:%M:%S")
-
-    def proc(k, pdfs, state: GroupState):
-        closed = []
-        if state.hasTimedOut:
-            if state.exists and emit_open_on_timeout:
-                st, last, n, s = state.get
-                closed.append((k[0], fmt(st), fmt(last), n, round(s, 6)))
-            state.remove()
-        else:
-            rows = pd.concat(list(pdfs), ignore_index=True)
-            rows = rows.sort_values(ts_col, kind="mergesort")
-            ts_us = (rows[ts_col].astype("datetime64[us]").astype("int64")).to_numpy()
-            vals = rows[value_col].to_numpy()
-            if state.exists:
-                st, last, n, s = state.get
-            else:
-                # fresh state: open an empty session at the first event
-                # (n=0 — the first event itself is added in the loop)
-                st, last, n, s = int(ts_us[0]), int(ts_us[0]), 0, 0.0
-            for t, v in zip(ts_us, vals):
-                t = int(t)
-                if n > 0 and t - last > gap_us:
-                    closed.append((k[0], fmt(st), fmt(last), n, round(s, 6)))
-                    st, last, n, s = t, t, 0, 0.0
-                elif n > 0 and st - t > gap_us:
-                    # late event more than a gap OLDER than the open
-                    # session: its own session, emitted immediately
-                    # (append-mode best effort — see docstring)
-                    closed.append((k[0], fmt(t), fmt(t), 1, round(float(v), 6)))
-                    continue
-                st = min(st, t)
-                last = max(last, t)
-                n += 1
-                s += float(v)
-            state.update((st, last, n, s))
-            # a key whose newest event is already behind the advanced
-            # watermark (late batch arrival) must still get a FUTURE
-            # timeout — Spark rejects timestamps ≤ the current watermark
-            want_ms = last // 1000 + gap_minutes * 60 * 1000
-            state.setTimeoutTimestamp(max(want_ms, state.getCurrentWatermarkMs() + 1))
-        yield pd.DataFrame(
-            closed,
-            columns=[key, "session_start", "session_end", "n_events", "sum_value"],
-        )
-
-    return (
-        events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, watermark)
-        .groupBy(key)
-        .applyInPandasWithState(
-            proc,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )

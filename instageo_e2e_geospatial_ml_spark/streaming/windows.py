@@ -4,13 +4,12 @@ The reference has no streaming engine (its job queue is RQ — SURVEY.md
 §2.5), but a web-scale ingest pipeline needs one: new observations /
 granules arrive continuously and the chip pipeline's upstream aggregations
 must tolerate late data. These operators run the same logical plans as
-their batch twins under `readStream`:
+their batch twins under `readStream` (registry query q26):
 
+  * read_event_stream: the events parquet as a file stream;
   * windowed_event_counts: tumbling event-time windows + watermark;
-  * streaming_dedup: dropDuplicates within the watermark (exact-once obs
-    ingest);
   * run_available_now: drains all currently-available input with
-    Trigger.AvailableNow into a memory sink — the batch-parity test path.
+    Trigger.AvailableNow into a memory sink — the batch-parity path.
 """
 
 from __future__ import annotations
@@ -54,25 +53,13 @@ def windowed_event_counts(
     )
 
 
-def streaming_dedup(
-    events: DataFrame, key_cols: list[str], watermark: str = "2 hours", ts_col: str = "ts"
-) -> DataFrame:
-    """Exactly-once ingest: drop duplicate keys within the watermark
-    horizon (state bounded by the watermark)."""
-    return (
-        events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(key_cols)
-    )
-
-
 def run_available_now(
     stream_df: DataFrame, name: str, checkpoint: str, output_mode: str = "append"
 ) -> DataFrame:
     """Drain all available input (Trigger.AvailableNow) into a memory sink;
     returns the sink table. Used for batch-parity tests.
 
-    output_mode: 'append' for row streams / dedup; 'complete' for windowed
+    output_mode: 'append' for row streams; 'complete' for windowed
     aggregations (append would hold back windows newer than the final
     watermark).
     """

@@ -32,6 +32,20 @@ def test_qdct_psnr_above_40():
     assert not np.array_equal(a, b)  # genuinely lossy
 
 
+def test_declared_dims_mismatch_raises():
+    # a row whose metadata disagrees with its payload must fail loudly in
+    # every format, never decode into the declared shape with scrambled
+    # pixels or come back in the payload's own shape
+    import pytest
+
+    a = _img()  # (3, 96, 80)
+    for fmt in ("png", "qdct"):
+        buf = codecs.encode(a, fmt)
+        for w, h, bands in ((96, 80, 3), (80, 96, 2), (40, 192, 3)):
+            with pytest.raises(ValueError, match="metadata declares"):
+                codecs.decode(buf, w, h, bands, fmt)
+
+
 def test_phash_deterministic_and_robust():
     a = _img(1, 224, 224)
     h1 = codecs.phash64(a)

@@ -586,7 +586,7 @@ def test_jp2_termall_and_bypass_coder_styles():
         band = str(rng.choice(["LL", "HL", "LH", "HH"]))
         for termall, bypass in ((True, False), (False, True), (True, True)):
             segs, npass, npl = tier1_encode_segmented(coefs, band, termall, bypass)
-            out = tier1_decode_segmented(segs, h, w, band, npl, npass, termall, bypass)
+            out = tier1_decode_segmented(segs, h, w, band, npl, npass, bypass)
             np.testing.assert_array_equal(out, coefs)
 
     # full codestreams: every style bit combination decodes bit-exact

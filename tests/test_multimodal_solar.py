@@ -792,7 +792,7 @@ def test_build_overviews_round_half_up():
     arr = np.array([[[1, 2], [2, 2]]], dtype=np.uint16)
     f = 2
     s = arr.astype(np.uint64).reshape(1, 1, f, 1, f).sum(axis=(2, 4))
-    assert int((s + 2) // 4) == 2
+    assert ((s + 2) // 4)[0, 0] == 2
 
 
 def test_segment_intersect_join_cases_and_parity(spark):

@@ -2854,6 +2854,21 @@ def test_median_composite_scalar_replica(spark):
     assert med[0, 2] == sorted(px[:4, 0, 2].tolist())[1]  # lower of 4
 
 
+def test_median_composite_builds_without_warnings(spark):
+    """compose hints every parameter, so applyInPandas infers its eval
+    type instead of warning TYPE_HINT_SHOULD_BE_SPECIFIED on each call."""
+    import warnings
+
+    from instageo_e2e_geospatial_ml_spark.operators.composite import (
+        STACK_SCHEMA, median_composite,
+    )
+
+    stack = spark.createDataFrame([], STACK_SCHEMA)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        median_composite(stack)
+
+
 def test_ols_trend_and_mad_outliers_designed(spark):
     """OLS: exact fit on a designed line y=3x+7 (slope_q6 == 3.0,
     intercept 7.0, residual-free), degenerate single-x group -> NULL

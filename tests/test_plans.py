@@ -405,6 +405,19 @@ def test_ranged_row_number_matches_global_window(spark, weight, group_cols, excl
     assert cache.numCachedEntries() == n_cached
 
 
+def _package_modules():
+    """(path relative to the package root, parsed module) for every
+    package .py file: the walk the package lints share."""
+    import ast
+    import pathlib
+
+    import instageo_e2e_geospatial_ml_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        yield path.relative_to(root), ast.parse(path.read_text())
+
+
 def test_every_persist_is_released_in_its_function():
     """Lifetime rule: a .persist()/.cache() in the package must be paired
     with an .unpersist() in the same function. A cache that has to live
@@ -412,14 +425,10 @@ def test_every_persist_is_released_in_its_function():
     blocks go when the frame does); a persist() that is never released
     pins a CacheManager entry for the rest of the session."""
     import ast
-    import pathlib
 
-    import instageo_e2e_geospatial_ml_spark as pkg
-
-    root = pathlib.Path(pkg.__file__).parent
     leaks = []
-    for path in sorted(root.rglob("*.py")):
-        for fn in ast.walk(ast.parse(path.read_text())):
+    for rel, tree in _package_modules():
+        for fn in ast.walk(tree):
             if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
             called = {
@@ -428,7 +437,7 @@ def test_every_persist_is_released_in_its_function():
                 if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
             }
             if called & {"persist", "cache"} and "unpersist" not in called:
-                leaks.append(f"{path.relative_to(root)}:{fn.name}")
+                leaks.append(f"{rel}:{fn.name}")
     assert leaks == [], leaks
 
 
@@ -514,37 +523,21 @@ REFERENCE_PARITY = {
     "hilbert_ranges": "north rule: cell-prefix range planning",
 }
 
-# Structured Streaming twins of batch operators that only tests call. They
-# are dead surface too; ROADMAP's open item 3b deletes them with their
-# parity tests in a change of their own.
-STREAM_TWINS = {
-    "sessionize_stream": "twin of sessionize_batch",
-    "streaming_dedup": "twin of dropDuplicates over the batch events",
-    "token_bucket_stream": "twin of token_bucket",
-    "register_stream": "streaming form of the sensor data source",
-    "cap_per_key_stream": "twin of cap_per_domain",
-    "hll_distinct_stream": "twin of hll_registers",
-    "decayed_counts_stream": "twin of decayed_counts",
-    "temporal_enrich_stream": "twin of temporal_dim_join",
-}
-
-
 def test_every_public_def_has_a_non_test_caller():
     """Dead-surface rule: every public top-level def or class in the
     package must be named by some .py file outside tests/ (the registry,
     the pipeline, bench, scripts, perfbench or another module). The only
-    exceptions are the REFERENCE_PARITY and STREAM_TWINS names, and each
-    of those must still be defined and still lack such a caller."""
+    exceptions are the REFERENCE_PARITY names, and each of those must
+    still be defined and still lack such a caller."""
     defined, _, used = _package_defs_and_names()
     unreached = {
         name: where
         for where, name in defined
         if not name.startswith("_") and name not in used
     }
-    allowed = {**REFERENCE_PARITY, **STREAM_TWINS}
-    dead = [w for name, w in unreached.items() if name not in allowed]
+    dead = [w for name, w in unreached.items() if name not in REFERENCE_PARITY]
     assert not dead, "public defs only tests reach: " + ", ".join(dead)
-    stale = sorted(set(allowed) - set(unreached))
+    stale = sorted(set(REFERENCE_PARITY) - set(unreached))
     assert not stale, "allowlisted names that are gone or have callers: " + ", ".join(stale)
 
 
@@ -556,17 +549,15 @@ def test_every_package_import_resolves():
     fails when its function runs; this catches it without running it."""
     import ast
     import importlib
-    import pathlib
 
     import instageo_e2e_geospatial_ml_spark as pkg
 
-    root = pathlib.Path(pkg.__file__).parent
     top = pkg.__name__
     broken, n_imports = [], 0
-    for path in sorted(root.rglob("*.py")):
+    for rel, tree in _package_modules():
         # the package a module (or an __init__) resolves `.` against
-        package = list(path.relative_to(root.parent).parts[:-1])
-        for n in ast.walk(ast.parse(path.read_text())):
+        package = [top, *rel.parts[:-1]]
+        for n in ast.walk(tree):
             if not isinstance(n, ast.ImportFrom):
                 continue
             if n.level:
@@ -577,7 +568,7 @@ def test_every_package_import_resolves():
             else:
                 continue
             n_imports += 1
-            where = f"{path.relative_to(root)}:{n.lineno}"
+            where = f"{rel}:{n.lineno}"
             try:
                 mod = importlib.import_module(target)
             except ImportError as e:
@@ -592,6 +583,58 @@ def test_every_package_import_resolves():
                     broken.append(f"{where} {target}.{a.name}")
     assert n_imports > 0
     assert not broken, "unresolved package imports: " + "; ".join(broken)
+
+
+# Parameters a package function may leave unread, each with the reason
+# its signature is fixed from outside the function. Registry queries
+# (`q<N>_<name>(spark, sf_dir)` in plans/driver_queries.py) are exempt as a
+# family: the registry calls every query with both arguments.
+UNREAD_PARAMS = {
+    "plans/pipeline.py:_process(batch_id)": "foreachBatch calls it with (batch_df, batch_id)",
+    "sources/pydatasource.py:reader(schema)": "Python Data Source API: DataSource.reader(schema)",
+    "operators/chips.py:extract_chips(n_salt)": "bench.py and perfbench/ still pass it",
+}
+
+
+def test_every_parameter_is_read():
+    """Dead-parameter rule: every parameter of every package function or
+    lambda (self and cls aside) is read somewhere in that function's
+    body. A parameter nothing reads is a knob that silently does nothing
+    (a declared shape a decoder never checks, a mode flag the code has
+    stopped honouring). The only exceptions are the registry's
+    `q*(spark, sf_dir)` contract and UNREAD_PARAMS, and each listed entry
+    must still exist and still be unread."""
+    import ast
+    import re
+
+    unread = []
+    for rel, tree in _package_modules():
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                continue
+            name = getattr(fn, "name", f"<lambda@{fn.lineno}>")
+            a = fn.args
+            params = [*a.posonlyargs, *a.args, *a.kwonlyargs, a.vararg, a.kwarg]
+            body = fn.body if isinstance(fn.body, list) else [fn.body]
+            read = {
+                n.id
+                for stmt in body
+                for n in ast.walk(stmt)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+            }
+            registry = rel.as_posix() == "plans/driver_queries.py" and re.fullmatch(
+                r"q\d+_\w+", name
+            )
+            for p in params:
+                if p is None or p.arg in ("self", "cls") or p.arg in read:
+                    continue
+                if registry and p.arg in ("spark", "sf_dir"):
+                    continue
+                unread.append(f"{rel}:{name}({p.arg})")
+    dead = [u for u in unread if u not in UNREAD_PARAMS]
+    assert not dead, "parameters their function never reads: " + ", ".join(dead)
+    stale = sorted(set(UNREAD_PARAMS) - set(unread))
+    assert not stale, "allowlisted parameters that are gone or now read: " + ", ".join(stale)
 
 
 def test_registrable_domain_psl_table_wins(spark):
