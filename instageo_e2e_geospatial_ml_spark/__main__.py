@@ -45,7 +45,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--temporal-step", type=int, default=5)
     p.add_argument("--temporal-tolerance", type=int, default=10)
     p.add_argument("--min-count", type=int, default=1)
-    p.add_argument("--n-salt", type=int, default=4)
     p.add_argument("--strategy", default="kmeans")
     args = p.parse_args(argv)
 
@@ -63,7 +62,6 @@ def main(argv: list[str] | None = None) -> int:
         temporal_tolerance=args.temporal_tolerance,
         chip_size=args.chip_size,
         window_size=args.window_size,
-        n_salt=args.n_salt,
     )
 
     if args.mode == "synth":

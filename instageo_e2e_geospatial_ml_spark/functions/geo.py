@@ -1,12 +1,13 @@
 """Vectorized geospatial column functions (Arrow-batched pandas UDFs + pure
 column expressions).
 
-The hot-path cell index (`cell_of`) is a pure Catalyst column expression —
-whole-stage-codegen'd, no Python — identical to grid.sql_cell_expr so the
-DuckDB oracle can verify it. The MGRS encoder (string tile ids, needed for
-reference parity) and CRS reprojection run as scalar pandas UDFs over numpy
-(replacing the reference's row-at-a-time `df.apply(mgrs.MGRS().toMGRS)`,
-data_pipeline.py:374-377 — a ~100× vectorization win).
+The hot-path cell index (`cell_of`, its ids packed by `cell_id`) is a pure
+Catalyst column expression — whole-stage-codegen'd, no Python — identical
+to grid.sql_cell_expr so the DuckDB oracle can verify it. The MGRS encoder
+(string tile ids, needed for reference parity) and CRS reprojection run as
+scalar pandas UDFs over numpy (replacing the reference's row-at-a-time
+`df.apply(mgrs.MGRS().toMGRS)`, data_pipeline.py:374-377 — a ~100×
+vectorization win).
 """
 
 from __future__ import annotations
@@ -15,21 +16,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 from pyspark.sql.functions import pandas_udf
 
-from .. import grid as _grid
 from .. import mgrs as _mgrs
+from ..grid import RES_SHIFT, Y_SHIFT
 
-_RES_SHIFT = 58
-_Y_SHIFT = 29
+
+def cell_id(res: int, cy: Column, cx: Column) -> Column:
+    """Packed int64 cell id from grid coordinates (the grid.py layout:
+    res << 58 | cy << 29 | cx) as a column expression."""
+    return F.lit(res).cast("long") * F.lit(1 << RES_SHIFT) + cy * F.lit(1 << Y_SHIFT) + cx
 
 
 def cell_of(lon: Column | str, lat: Column | str, res: int) -> Column:
@@ -50,18 +47,7 @@ def cell_of(lon: Column | str, lat: Column | str, res: int) -> Column:
         F.greatest(F.floor((lat + F.lit(90.0)) * n / F.lit(180.0)).cast("long"), F.lit(0)),
         F.lit(n - 1),
     )
-    return (
-        F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT)
-        + cy * F.lit(1 << _Y_SHIFT)
-        + cx
-    )
-
-
-@pandas_udf(LongType())
-def cell_udf(lon: pd.Series, lat: pd.Series, res: pd.Series) -> pd.Series:
-    """Pandas-UDF variant (for API parity / dynamic res); prefer cell_of."""
-    r = int(res.iloc[0])
-    return pd.Series(_grid.cell_encode(lon.to_numpy(), lat.to_numpy(), r))
+    return cell_id(res, cy, cx)
 
 
 @pandas_udf(StringType())
@@ -69,17 +55,6 @@ def mgrs_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
     """MGRS precision-0 tile id (vectorized numpy UTM + lettering)."""
     out = _mgrs.mgrs_precision0(lat.to_numpy(), lon.to_numpy())
     return pd.Series(out)
-
-
-@pandas_udf(ArrayType(LongType()))
-def knn_cell_udf(cell: pd.Series, k: pd.Series) -> pd.Series:
-    """k-ring cell expansion (array of candidate cells per row).
-
-    Equivalent closed form exists in SQL (nested generate_series); this UDF
-    keeps the hot path vectorized when rings are small.
-    """
-    kk = int(k.iloc[0])
-    return pd.Series([_grid.k_ring(int(c), kk).tolist() for c in cell])
 
 
 @pandas_udf(

@@ -91,7 +91,6 @@ def bigram_surprisal_scores(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """Count-based bigram surprisal per document →
     (id, n_bigrams, surprisal_sum, surprisal_mean).
@@ -104,8 +103,8 @@ def bigram_surprisal_scores(
     pattern). High mean ⇒ improbable transitions ⇒ likely noise.
 
     Plan: the bigram table feeds three subtrees (c12, c1, and the scored
-    join); Catalyst does not reuse the exchange across them, so by default
-    it is materialized once with a lazy localCheckpoint (the q15 lesson),
+    join); Catalyst does not reuse the exchange across them, so it is
+    materialized once with a lazy localCheckpoint (the q15 lesson),
     then two token-keyed joins back (AQE sizes them) and one doc-keyed
     aggregation.
     """
@@ -124,8 +123,7 @@ def bigram_surprisal_scores(
             F.element_at("_toks", F.col("_i") + 1).alias("w2"),
         )
     )
-    if materialize:
-        big = big.localCheckpoint(eager=False)
+    big = big.localCheckpoint(eager=False)
     c12 = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = big.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     v = c1.agg(F.count(F.lit(1)).alias("v"))
@@ -288,7 +286,7 @@ def rrf_fuse(
     score_cols: list[str],
     k: int = 60,
     scale: int = 1_000_000,
-    top_n: int | None = None,
+    top_n: int = 5,
 ):
     """Reciprocal-rank fusion (Cormack et al. SIGIR'09) — the standard
     way to combine heterogeneous retrieval signals (BM25 + vector
@@ -300,8 +298,8 @@ def rrf_fuse(
     sensitive). Ranks are dense per (group, signal), descending score
     with ascending id tie-break — fully deterministic.
 
-    Emits (group, id, rank_<sig>..., rrf_score[, rrf_rank]) with
-    rrf_rank present when top_n is set (ties broken by id).
+    Emits (group, id, rank_<sig>..., rrf_score, rrf_rank) for the top_n
+    fused ranks per group (ties broken by id).
 
     Plan: one window per signal over the same (group) partitioning —
     Catalyst shares the Exchange; a group's candidate list is the unit
@@ -325,8 +323,6 @@ def rrf_fuse(
     cols = [group_col, id_col] + [f"rank_{sc}" for sc in score_cols] + [
         "rrf_score"
     ]
-    if top_n is None:
-        return out.select(*cols)
     wf = Window.partitionBy(group_col).orderBy(
         F.col("rrf_score").desc(), F.col(id_col).asc()
     )
@@ -344,7 +340,7 @@ def rrf_fuse_sql(
     score_cols: list[str],
     k: int = 60,
     scale: int = 1_000_000,
-    top_n: int | None = None,
+    top_n: int = 5,
 ) -> str:
     """DuckDB twin of rrf_fuse (identical ranks, integer-div terms)."""
     g, i = group_col, id_col
@@ -355,16 +351,13 @@ def rrf_fuse_sql(
     )
     fused = " + ".join(f"({scale} // ({k} + rank_{sc}))" for sc in score_cols)
     rank_cols = ", ".join(f"rank_{sc}" for sc in score_cols)
-    base = f"""
+    return f"""
 WITH r AS (
   SELECT {g}, {i}, {ranks} FROM ({table_sql})
 ),
 f AS (
   SELECT {g}, {i}, {rank_cols}, CAST({fused} AS BIGINT) AS rrf_score FROM r
-)"""
-    if top_n is None:
-        return base + f"\nSELECT {g}, {i}, {rank_cols}, rrf_score FROM f"
-    return base + f""",
+),
 t AS (
   SELECT *, row_number() OVER (PARTITION BY {g}
     ORDER BY rrf_score DESC, {i} ASC) AS rrf_rank

@@ -191,7 +191,6 @@ def token_rarity_scores(
     docs,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_vocab: bool = False,
 ):
     """Zipf-bucket commonness score per document (the CCNet-style
     perplexity-filter shape without a language model): every token joins
@@ -205,8 +204,7 @@ def token_rarity_scores(
     one doc-keyed aggregation. The vocabulary of a web corpus is unbounded
     (every typo/URL is a distinct token), so the token join defaults to a
     shuffle hash/sort-merge join — AQE converts it to broadcast at runtime
-    when the vocab side is actually small. Pass broadcast_vocab=True only
-    when the vocabulary is known-bounded (e.g. a fixed tokenizer model).
+    when the vocab side is actually small.
     """
     from pyspark.sql import DataFrame, functions as F  # noqa: F811
 
@@ -216,10 +214,7 @@ def token_rarity_scores(
     tok = docs.select(id_col, F.explode(tokens(text_col)).alias("tok"))
     freq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     b = freq.withColumn("bucket", F.floor(F.log2("df")).cast("long"))
-    vocab = b.select("tok", "bucket")
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
-    joined = tok.join(vocab, "tok")
+    joined = tok.join(b.select("tok", "bucket"), "tok")
     return joined.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum("bucket").alias("bucket_sum"),
@@ -437,7 +432,6 @@ def hashed_quality_score(
     n_buckets: int = 1024,
     bias: int = 0,
     seed: str = "qlr",
-    weights=None,
     text_col: str = "text",
     id_col: str = "doc_id",
 ):
@@ -448,14 +442,11 @@ def hashed_quality_score(
     features; the document score is the exact integer sum of per-feature
     weights, and `keep` is score + bias >= 0.
 
-    Weights default to a deterministic md5-derived table in
-    [-1000, 1000] (the similarity._np_lsh_weights idiom) so the operator
-    is self-contained and bit-identical in any engine (DuckDB twin: q65).
-    Pass `weights` — a (bucket long, w long) DataFrame from real
-    training — and it broadcast-joins by bucket instead (missing
-    buckets weigh 0); the plan shape is one explode + one k-row
-    broadcast join + one doc-keyed sum either way, so the 100 TB
-    profile is a single hash shuffle on doc_id.
+    The weights are a deterministic md5-derived table in [-1000, 1000]
+    (the similarity._np_lsh_weights idiom), so the operator is
+    self-contained and bit-identical in any engine (DuckDB twin: q65).
+    The plan is one explode + one doc-keyed sum, so the 100 TB profile
+    is a single hash shuffle on doc_id.
     """
     b = (
         docs.select(
@@ -473,27 +464,22 @@ def hashed_quality_score(
             % n_buckets,
         )
     )
-    if weights is not None:
-        b = b.join(F.broadcast(weights), "bucket", "left").withColumn(
-            "w", F.coalesce(F.col("w"), F.lit(0)).cast("long")
-        )
-    else:
-        b = b.withColumn(
-            "w",
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            ":", F.lit("w"), F.lit(seed), F.col("bucket").cast("string")
-                        )
-                    ),
-                    1, 8,
+    b = b.withColumn(
+        "w",
+        F.conv(
+            F.substring(
+                F.md5(
+                    F.concat_ws(
+                        ":", F.lit("w"), F.lit(seed), F.col("bucket").cast("string")
+                    )
                 ),
-                16, 10,
-            ).cast("long")
-            % 2001
-            - 1000,
-        )
+                1, 8,
+            ),
+            16, 10,
+        ).cast("long")
+        % 2001
+        - 1000,
+    )
     return (
         b.groupBy(id_col)
         .agg(F.sum("w").cast("long").alias("score"))

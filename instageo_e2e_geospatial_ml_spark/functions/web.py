@@ -9,11 +9,12 @@ single site dominating the corpus). Everything here is built from JVM
 codegen, no Python in the hot path) and has exact DuckDB twins in the
 driver registry (q56/q57).
 
-The registrable-domain logic is a documented HEURISTIC: last two host
-labels, or last three when the second-level label sits under a known
-two-part public suffix (co.uk, com.au, ...). A production system would
-broadcast-join the full public-suffix list — same plan shape, bigger
-dimension table; the heuristic keeps the oracle twin exact.
+The registrable domain is a longest match against a broadcast
+public-suffix table; hosts under no listed suffix fall back to a
+documented HEURISTIC: last two host labels, or last three when the
+second-level label sits under a known two-part public suffix (co.uk,
+com.au, ...). A production system loads the full public-suffix list:
+same plan shape, bigger dimension table.
 """
 
 from __future__ import annotations
@@ -129,20 +130,14 @@ def public_suffix_table(spark) -> DataFrame:
     return spark.createDataFrame(rows, "suffix string, n_labels int")
 
 
-def registrable_domain(
-    df: DataFrame, host_col: str = "host", use_psl_table: bool = False
-) -> DataFrame:
-    """eTLD+1 column. Default: the pure-column heuristic (exact DuckDB
-    twin). `use_psl_table=True`: longest-match against the broadcast
-    public-suffix dimension table — three broadcast LEFT joins on the
-    host's last 1/2/3 labels (no shuffle of the fact side; the dim is
-    tiny even for the full PSL), registrable = suffix + one label,
-    falling back to the heuristic for hosts matching no listed suffix.
-    Where both paths know the suffix they agree; where they disagree
+def registrable_domain(df: DataFrame, host_col: str = "host") -> DataFrame:
+    """eTLD+1 column: longest match against the broadcast public-suffix
+    dimension table — three broadcast LEFT joins on the host's last
+    1/2/3 labels (no shuffle of the fact side; the dim is tiny even for
+    the full PSL), registrable = suffix + one label, falling back to the
+    heuristic `registrable_domain_col` for hosts matching no listed
+    suffix. Where both know the suffix they agree; where they disagree
     (e.g. gov.uk, k12.ak.us) the table wins."""
-    if not use_psl_table:
-        return df.withColumn("domain", registrable_domain_col(F.col(host_col)))
-
     spark = df.sparkSession
     psl = public_suffix_table(spark)
     host = F.col(host_col)

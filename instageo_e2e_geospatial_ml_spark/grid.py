@@ -19,9 +19,14 @@ from __future__ import annotations
 
 import numpy as np
 
-_RES_SHIFT = 58
-_Y_SHIFT = 29
-_XY_MASK = (1 << 29) - 1
+# the id layout above; functions/geo.cell_id builds the same id as a column
+RES_SHIFT = 58
+Y_SHIFT = 29
+XY_MASK = (1 << 29) - 1
+
+
+def _pack(res: int, cy: np.ndarray, cx: np.ndarray) -> np.ndarray:
+    return (np.int64(res) << RES_SHIFT) | (cy << Y_SHIFT) | cx
 
 
 def cell_size_deg(res: int) -> float:
@@ -36,15 +41,15 @@ def cell_encode(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
     # same FP expression as sql_cell_expr so numpy/Spark/DuckDB agree bit-for-bit
     cx = np.clip(np.floor((lon + 180.0) * n / 180.0), 0, 2 * n - 1).astype(np.int64)
     cy = np.clip(np.floor((lat + 90.0) * n / 180.0), 0, n - 1).astype(np.int64)
-    return (np.int64(res) << _RES_SHIFT) | (cy << _Y_SHIFT) | cx
+    return _pack(res, cy, cx)
 
 
 def cell_decode(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """cell id → (res, cx, cy)."""
     cell = np.asarray(cell, dtype=np.int64)
-    res = cell >> _RES_SHIFT
-    cy = (cell >> _Y_SHIFT) & _XY_MASK
-    cx = cell & _XY_MASK
+    res = cell >> RES_SHIFT
+    cy = (cell >> Y_SHIFT) & XY_MASK
+    cx = cell & XY_MASK
     return res, cx, cy
 
 
@@ -67,7 +72,7 @@ def k_ring(cell: int, k: int) -> np.ndarray:
     xs = np.arange(max(0, cx - k), min(nx - 1, cx + k) + 1, dtype=np.int64)
     ys = np.arange(max(0, cy - k), min(ny - 1, cy + k) + 1, dtype=np.int64)
     gx, gy = np.meshgrid(xs, ys)
-    return (np.int64(res) << _RES_SHIFT) | (gy.ravel() << _Y_SHIFT) | gx.ravel()
+    return _pack(res, gy.ravel(), gx.ravel())
 
 
 def covering_cells(
@@ -82,7 +87,7 @@ def covering_cells(
     xs = np.arange(x0, x1 + 1, dtype=np.int64)
     ys = np.arange(y0, y1 + 1, dtype=np.int64)
     gx, gy = np.meshgrid(xs, ys)
-    return (np.int64(res) << _RES_SHIFT) | (gy.ravel() << _Y_SHIFT) | gx.ravel()
+    return _pack(res, gy.ravel(), gx.ravel())
 
 
 # ---- SQL fragments (identical semantics in Spark SQL and DuckDB) -----------
@@ -103,7 +108,7 @@ def sql_cell_expr(lon_expr: str, lat_expr: str, res: int) -> str:
         f"CAST(0 AS BIGINT)), CAST({2 * n - 1} AS BIGINT))"
     )
     return (
-        f"(CAST({res} AS BIGINT) * {1 << _RES_SHIFT} "
-        f"+ {cy} * {1 << _Y_SHIFT} "
+        f"(CAST({res} AS BIGINT) * {1 << RES_SHIFT} "
+        f"+ {cy} * {1 << Y_SHIFT} "
         f"+ {cx})"
     )

@@ -103,7 +103,6 @@ def asof_pick_keyed(
     tolerance_minutes: int = 0,
     obs_id: str = "obs_id",
     key: str = "k",
-    keep_unmatched: bool = True,
 ) -> DataFrame:
     """As-of pick where the candidate set is 'every granule sharing `key`'
     — the J2 semantics of asof_pick(steps, obs ⋈ granules ON key, granules)
@@ -113,7 +112,8 @@ def asof_pick_keyed(
 
     steps(obs_id, key, step, query_date) × granules(key, granule_id, ts,
     cloud_cover) → one row per (obs_id, step) with the picked granule
-    (null when nothing within tolerance).
+    (null when nothing within tolerance: a null-preserving join back to
+    the steps, the reference's [None]*len(dates) shape).
 
     The pick order (cloud cover, then ts, then granule_id) does not depend
     on the query date, which allows a two-level decomposition:
@@ -203,8 +203,6 @@ def asof_pick_keyed(
         obs_id, "step", F.col("granule_id").alias("picked_granule"),
         "ts", "cloud_cover",
     )
-    if not keep_unmatched:
-        return picked
     return steps.drop(key).join(picked, [obs_id, "step"], "left")
 
 

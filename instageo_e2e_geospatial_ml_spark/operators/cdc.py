@@ -23,19 +23,19 @@ from pyspark.sql import functions as F
 
 def scd2_history(
     changes: DataFrame,
+    tiebreak_col: str,
     key_col: str = "key",
     ts_col: str = "ts",
     op_col: str = "op",
-    tiebreak_col: str | None = None,
     delete_op: str = "delete",
 ) -> DataFrame:
     """changes (+op column: delete_op or any upsert marker) → SCD2 rows:
     input columns + valid_from_us / valid_to_us (NULL = open) +
-    is_current. Delete rows close intervals but are not emitted."""
-    order = [F.col(ts_col).asc()] + (
-        [F.col(tiebreak_col).asc()] if tiebreak_col else []
+    is_current. Delete rows close intervals but are not emitted; rows
+    order by (ts, tiebreak_col)."""
+    w = Window.partitionBy(key_col).orderBy(
+        F.col(ts_col).asc(), F.col(tiebreak_col).asc()
     )
-    w = Window.partitionBy(key_col).orderBy(*order)
     tus = F.unix_micros(F.col(ts_col).cast("timestamp"))
     return (
         changes.withColumn("_tus", tus)
@@ -54,10 +54,10 @@ def scd2_history(
 def merge_upsert(
     target: DataFrame,
     changes: DataFrame,
+    tiebreak_col: str,
     key_col: str = "key",
     ts_col: str = "ts",
     op_col: str = "op",
-    tiebreak_col: str | None = None,
     delete_op: str = "delete",
 ) -> DataFrame:
     """MERGE INTO apply — one change batch folded into a target table
@@ -82,10 +82,9 @@ def merge_upsert(
     so the big side is one broadcast-hash anti join probed in place —
     zero shuffle of the target — and only the deduped batch moves.
     """
-    order = [F.col(ts_col).desc()] + (
-        [F.col(tiebreak_col).desc()] if tiebreak_col else []
+    w = Window.partitionBy(key_col).orderBy(
+        F.col(ts_col).desc(), F.col(tiebreak_col).desc()
     )
-    w = Window.partitionBy(key_col).orderBy(*order)
     latest = (
         changes.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

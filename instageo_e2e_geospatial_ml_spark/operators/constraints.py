@@ -130,9 +130,9 @@ def check_constraints_sql(table_sql: str, constraints: list[tuple]) -> str:
 
 def embedding_audit(
     vectors: DataFrame,
+    expected_dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    expected_dim: int | None = None,
     scale: int = 100,
 ) -> DataFrame:
     """Vector-column quality audit — the gate an ANN/retrieval
@@ -177,26 +177,16 @@ def embedding_audit(
         "degenerate",
         ((F.col("norm2_q") == 0) | (F.col("n_nan") > 0)).cast("int"),
     )
-    if expected_dim is not None:
-        out = out.withColumn(
-            "dim_ok", (F.col("dim") == expected_dim).cast("int")
-        )
-    return out
+    return out.withColumn("dim_ok", (F.col("dim") == expected_dim).cast("int"))
 
 
 def embedding_audit_sql(
-    vectors_sql: str, expected_dim: int | None = None, scale: int = 100
+    vectors_sql: str, expected_dim: int, scale: int = 100
 ) -> str:
     """DuckDB twin of embedding_audit over (vec_id, embedding)."""
     q = (
         f"CASE WHEN isnan(CAST(x AS DOUBLE)) THEN CAST(0 AS BIGINT) "
         f"ELSE CAST(round(CAST(x AS DOUBLE) * {scale}, 0) AS BIGINT) END"
-    )
-    dim_col = (
-        f", CAST(CASE WHEN dim = {expected_dim} "
-        f"THEN 1 ELSE 0 END AS INTEGER) AS dim_ok"
-        if expected_dim is not None
-        else ""
     )
     return f"""
 WITH v AS ({vectors_sql}),
@@ -213,7 +203,7 @@ a AS (
 )
 SELECT vec_id, dim, n_nan, n_zero, norm2_q,
        CAST(CASE WHEN norm2_q = 0 OR n_nan > 0 THEN 1 ELSE 0 END AS INTEGER)
-         AS degenerate{dim_col}
+         AS degenerate, CAST(CASE WHEN dim = {expected_dim} THEN 1 ELSE 0 END AS INTEGER) AS dim_ok
 FROM a
 """
 

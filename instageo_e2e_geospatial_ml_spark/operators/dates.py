@@ -54,23 +54,20 @@ def expand_temporal_steps(
     date_col: str = "date",
     num_steps: int = 3,
     temporal_step: int = 5,
-    explode: bool = True,
 ) -> DataFrame:
-    """W1: per-row array of query dates [date - i*step for i in 0..num_steps).
-
-    explode=True → long form with (step, query_date) via posexplode, the
-    join-ready shape for the as-of granule pick (J2).
+    """W1: query dates date - i*step for i in 0..num_steps, in long form
+    with (step, query_date) via posexplode, the join-ready shape for the
+    as-of granule pick (J2).
     """
     steps = F.transform(
         F.sequence(F.lit(0), F.lit(num_steps - 1)),
         lambda i: F.timestamp_add("DAY", (i * -temporal_step).cast("int"), F.col(date_col)),
     )
-    out = obs.withColumn("query_dates", steps)
-    if explode:
-        out = out.select(
-            "*", F.posexplode("query_dates").alias("step", "query_date")
-        ).drop("query_dates")
-    return out
+    return (
+        obs.withColumn("query_dates", steps)
+        .select("*", F.posexplode("query_dates").alias("step", "query_date"))
+        .drop("query_dates")
+    )
 
 
 def widen_tolerance(
@@ -79,17 +76,13 @@ def widen_tolerance(
     max_col: str = "max_date",
     tolerance_days: int = 5,
     tolerance_minutes: int = 0,
-    push_end_of_day: bool = True,
 ) -> DataFrame:
-    """W2: min_date − tol, max_date + tol; max pushed to 23:59:59 when the
-    observations carry no time-of-day (reference data_pipeline.py:319-326)."""
+    """W2: min_date − tol, max_date + tol; max pushed to 23:59:59, as for
+    observations with no time-of-day (reference data_pipeline.py:319-326)."""
     total_min = tolerance_days * 24 * 60 + tolerance_minutes
     lo = F.timestamp_add("MINUTE", F.lit(-total_min), F.col(min_col))
     hi = F.timestamp_add("MINUTE", F.lit(total_min), F.col(max_col))
-    if push_end_of_day:
-        hi = F.timestamp_add(
-            "SECOND", F.lit(24 * 3600 - 1), F.date_trunc("day", hi)
-        )
+    hi = F.timestamp_add("SECOND", F.lit(24 * 3600 - 1), F.date_trunc("day", hi))
     return df.withColumn(min_col, lo).withColumn(max_col, hi)
 
 

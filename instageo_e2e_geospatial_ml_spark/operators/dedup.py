@@ -2,8 +2,11 @@
 
 All md5-keyed so every stage is engine-portable (identical lowercase hex in
 Spark and any ANSI engine → exact DuckDB oracles). No Python UDFs — every
-operator is a composition of built-in functions, so the whole pipeline stays
-inside whole-stage codegen.
+text operator is a composition of built-in functions, so the whole pipeline
+stays inside whole-stage codegen. The one numpy stage is the embedding
+near-dup scan: an exact all-pairs int64 matmul, capped by row count.
+Tables that several subtrees consume (LSH bands, n-gram shingles) are
+materialized once with lazy localCheckpoints.
 
 Scale notes: exact dedup is one hash-shuffle on the digest; MinHash-LSH is
 (explode shingles → 2 hash-aggregations → band self-join). The band
@@ -14,6 +17,8 @@ docs) explodes quadratically, so callers should cap bucket sizes with
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -21,13 +26,12 @@ from ..functions.text import fingerprint, spread_input, tokens
 
 
 def exact_dedup(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", normalized: bool = False
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Hash-groupBy exact dedup: one row per distinct text with the keeper
-    (min id) and the duplicate count."""
-    key = fingerprint(text_col) if normalized else F.md5(F.col(text_col))
+    """Hash-groupBy exact dedup: one row per distinct text (md5 of the raw
+    text) with the keeper (min id) and the duplicate count."""
     return (
-        docs.withColumn("text_hash", key)
+        docs.withColumn("text_hash", F.md5(F.col(text_col)))
         .groupBy("text_hash")
         .agg(F.min(id_col).alias("keeper_id"), F.count(F.lit(1)).alias("n_copies"))
     )
@@ -104,7 +108,6 @@ def lsh_candidate_pairs(
     rows_per_band: int = 2,
     max_bucket: int = 1000,
     num_hashes: int = 8,
-    materialize: bool = True,
 ) -> DataFrame:
     """Band the signature array, self-join on (band_id, band_key) →
     candidate near-duplicate pairs (doc_a < doc_b), deduplicated.
@@ -116,10 +119,9 @@ def lsh_candidate_pairs(
 
     The band table is consumed four times (bucket-size count, skew
     anti-join, both self-join sides); Catalyst does not reuse the exchange
-    across these subtrees, so by default it is materialized once with a
-    lazy localCheckpoint — otherwise the whole shingle→minhash pipeline
-    re-executes 4× (and the source scan 8×). Pass materialize=False for
-    pure-lineage plans (e.g. streaming or explain-only use)."""
+    across these subtrees, so it is materialized once with a lazy
+    localCheckpoint — otherwise the whole shingle→minhash pipeline
+    re-executes 4× (and the source scan 8×)."""
     n_bands = -(-num_hashes // rows_per_band)  # ceil: last band may be partial
     band_structs = F.array(
         *[
@@ -139,9 +141,9 @@ def lsh_candidate_pairs(
             for b in range(n_bands)
         ]
     )
-    bands = signatures.select(id_col, F.inline(band_structs))
-    if materialize:
-        bands = bands.localCheckpoint(eager=False)
+    bands = signatures.select(id_col, F.inline(band_structs)).localCheckpoint(
+        eager=False
+    )
     sizes = bands.groupBy("band_id", "band_key").agg(F.count(F.lit(1)).alias("_bn"))
     bands = bands.join(
         F.broadcast(sizes.filter(F.col("_bn") > max_bucket)),
@@ -204,8 +206,6 @@ def embedding_neardup_pairs(
     threshold: float = 0.3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact: bool = False,
-    n_bits: int = 8,
     max_exact_rows: int = 200_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (vec_a < vec_b, cos ≥ t).
@@ -214,15 +214,11 @@ def embedding_neardup_pairs(
     rational) ⇔ dot > 0 ∧ q²·dot² ≥ p²·|a|²·|b|² — evaluated in exact
     int64 arithmetic, bit-identical in any engine.
 
-    The DEFAULT path is LSH-bucketed (sign-random-projection): candidates
-    are pruned to shared buckets before exact scoring — fully distributed,
-    no driver materialization, the plan you'd run on a cluster (recall < 1
-    by design, standard for near-dup mining).
-
-    exact=True scores ALL pairs via a broadcast int64 matmul over corpus
-    partitions — the oracle/baseline path. O(N²) compute and O(N·dim)
-    broadcast, so it is opt-in and guarded by max_exact_rows: above the cap
-    it raises rather than silently OOM-ing the driver.
+    Scores ALL pairs via a broadcast int64 matmul over corpus partitions
+    (recall 1, the oracle path). O(N²) compute and O(N·dim) broadcast, so
+    it is guarded by max_exact_rows: above the cap it raises rather than
+    silently OOM-ing the driver. For recall < 1 at cluster scale, prune
+    candidates first with similarity.lsh_buckets.
     """
     import numpy as np
     import pandas as pd
@@ -232,51 +228,13 @@ def embedding_neardup_pairs(
     p = int(round(threshold * 1000))
     p2, q2 = p * p, 1000 * 1000
 
-    def _dot100(a, b):
-        return F.aggregate(
-            F.zip_with(
-                a, b,
-                lambda x, y: F.round(x.cast("double") * 100).cast("long")
-                * F.round(y.cast("double") * 100).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
-    if not exact:
-        from .similarity import lsh_buckets
-
-        b = lsh_buckets(vecs, vec_col, id_col, n_bits)
-        v = vecs.join(b, id_col)
-        a_side = v.select(
-            F.col(id_col).alias("vec_a"), F.col(vec_col).alias("_va"), "bucket"
-        )
-        b_side = v.select(
-            F.col(id_col).alias("vec_b"), F.col(vec_col).alias("_vb"), "bucket"
-        )
-        j = a_side.join(b_side, "bucket").filter(F.col("vec_a") < F.col("vec_b"))
-        dot = _dot100(F.col("_va"), F.col("_vb"))
-        na = _dot100(F.col("_va"), F.col("_va"))
-        nb = _dot100(F.col("_vb"), F.col("_vb"))
-        return (
-            j.withColumn("dot", dot)
-            .withColumn("_na", na)
-            .withColumn("_nb", nb)
-            .filter(
-                (F.col("dot") > 0)
-                & (F.lit(q2) * F.col("dot") * F.col("dot")
-                   >= F.lit(p2) * F.col("_na") * F.col("_nb"))
-            )
-            .select("vec_a", "vec_b", "dot")
-        )
-
-    # exact opt-in path: guard, then broadcast the quantized matrix once
+    # guard, then broadcast the quantized matrix once
     # (sc.broadcast — NOT closure capture, which re-serializes per task)
     rows = vecs.select(id_col, vec_col).limit(max_exact_rows + 1).collect()
     if len(rows) > max_exact_rows:
         raise ValueError(
-            f"embedding_neardup_pairs(exact=True) capped at {max_exact_rows} "
-            "rows; use the default LSH path for larger corpora"
+            f"embedding_neardup_pairs capped at {max_exact_rows} rows; "
+            "prune larger corpora with similarity.lsh_buckets first"
         )
 
     def _q(m):
@@ -315,7 +273,7 @@ def clean_corpus(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_quality: float = 0.5,
-    lang: str | None = None,
+    lang: str = "en",
     shingle_n: int = 3,
     num_hashes: int = 8,
     rows_per_band: int = 2,
@@ -331,17 +289,16 @@ def clean_corpus(
     a broadcast anti-join against the non-keeper set. Every stage is the
     scale path of its family.
     """
-    from ..functions.text import fingerprint as _fp
     from ..functions.text import predict_lang, quality_score
 
-    gated = docs.withColumn("quality", quality_score(text_col)).filter(
-        F.col("quality") >= F.lit(min_quality)
+    gated = (
+        docs.withColumn("quality", quality_score(text_col))
+        .filter(F.col("quality") >= F.lit(min_quality))
+        .filter(predict_lang(text_col) == F.lit(lang))
     )
-    if lang is not None:
-        gated = gated.filter(predict_lang(text_col) == F.lit(lang))
 
     # exact: keep min id per normalized fingerprint
-    keyed = gated.withColumn("_fh", _fp(text_col))
+    keyed = gated.withColumn("_fh", fingerprint(text_col))
     exact_kept = keep_min_per_key(keyed, "_fh", id_col).drop("_fh")
 
     # near-dup: cluster candidates, drop every non-minimal member
@@ -506,7 +463,6 @@ def ngram_jaccard_pairs(
     shingle_n: int = 3,
     threshold: float = 0.5,
     max_shingle_freq: int = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity join: explode distinct shingles,
     self-join on shingle, |A∩B| / (|A|+|B|−|A∩B|) ≥ threshold.
@@ -516,10 +472,10 @@ def ngram_jaccard_pairs(
 
     The distinct-shingle table feeds five subtrees (stop-shingle counts,
     the anti-join probe, doc sizes, both self-join sides); Catalyst does
-    not reuse exchanges across them, so by default both the pre- and
-    post-cap tables are materialized once with lazy localCheckpoints —
-    otherwise the explode+distinct pipeline re-executes per consumer
-    (the q15 lesson). materialize=False for explain-only plans.
+    not reuse exchanges across them, so both the pre- and post-cap
+    tables are materialized once with lazy localCheckpoints — otherwise
+    the explode+distinct pipeline re-executes per consumer (the q15
+    lesson).
 
     Round-8 optimization note (kept deliberately minimal): the only added
     step is an EXACT n_common pre-filter evaluated inside the pair-count
@@ -538,13 +494,12 @@ def ngram_jaccard_pairs(
         shingles(docs.select(id_col, text_col), text_col, shingle_n)
         .select(id_col, "shingle")
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    if materialize:
-        sh = sh.localCheckpoint(eager=False)
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    sh = sh.join(F.broadcast(freq.filter(F.col("_df") > max_shingle_freq)), "shingle", "left_anti")
-    if materialize:
-        sh = sh.localCheckpoint(eager=False)
+    sh = sh.join(
+        F.broadcast(freq.filter(F.col("_df") > max_shingle_freq)), "shingle", "left_anti"
+    ).localCheckpoint(eager=False)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("_sz"))
     a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
     b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
@@ -554,14 +509,11 @@ def ngram_jaccard_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    if materialize:
-        import math
-
-        min_sz_row = sizes.agg(F.min("_sz")).collect()[0][0]
-        if min_sz_row:
-            t_eff = max(0.0, threshold - 1e-6)
-            c_min = max(1, math.floor(2 * t_eff * min_sz_row / (1 + t_eff)))
-            inter = inter.filter(F.col("n_common") >= F.lit(int(c_min)))
+    min_sz_row = sizes.agg(F.min("_sz")).collect()[0][0]
+    if min_sz_row:
+        t_eff = max(0.0, threshold - 1e-6)
+        c_min = max(1, math.floor(2 * t_eff * min_sz_row / (1 + t_eff)))
+        inter = inter.filter(F.col("n_common") >= F.lit(int(c_min)))
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("_sz").alias("sz_a"))
     sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("_sz").alias("sz_b"))
     return (
@@ -617,9 +569,7 @@ def substring_duplicate_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 10,
-    min_tokens: int | None = None,
     max_shingle_freq: int = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact duplicated-substring spans across (and within) documents —
     the ExactSubstr method of "Deduplicating Training Data Makes Language
@@ -635,7 +585,7 @@ def substring_duplicate_spans(
          pos_a − row_number() island trick — one window + one aggregation.
 
     Returns (doc_a, doc_b, a_start, b_start, n_tokens): maximal shared
-    runs of ≥ max(k, min_tokens) tokens, 1-based token positions; same-doc
+    runs of ≥ k tokens, 1-based token positions; same-doc
     internal repeats appear as doc_a == doc_b with a_start < b_start.
 
     Scale: shuffles on shingle then on (doc_a, doc_b, diag) — both
@@ -644,9 +594,7 @@ def substring_duplicate_spans(
     """
     sh = shingles_with_pos(docs.select(id_col, text_col), text_col, k).select(
         F.col(id_col).alias("_id"), F.col("_i").alias("pos"), "shingle"
-    )
-    if materialize:
-        sh = sh.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     freq = sh.select("_id", "shingle").distinct().groupBy("shingle").agg(
         F.count(F.lit(1)).alias("_df")
     )
@@ -662,7 +610,7 @@ def substring_duplicate_spans(
         | ((F.col("doc_a") == F.col("doc_b")) & (F.col("pos_a") < F.col("pos_b")))
     )
     w = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")
-    runs = (
+    return (
         matches.withColumn("diag", F.col("pos_a") - F.col("pos_b"))
         .withColumn("_island", F.col("pos_a") - F.row_number().over(w))
         .groupBy("doc_a", "doc_b", "diag", "_island")
@@ -673,9 +621,6 @@ def substring_duplicate_spans(
         .withColumn("b_start", F.col("a_start") - F.col("diag"))
         .select("doc_a", "doc_b", "a_start", "b_start", "n_tokens")
     )
-    if min_tokens and min_tokens > k:
-        runs = runs.filter(F.col("n_tokens") >= min_tokens)
-    return runs
 
 
 def dedup_lines(

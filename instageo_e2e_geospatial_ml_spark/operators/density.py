@@ -19,12 +19,12 @@ from pyspark.sql import functions as F
 from ..functions.geo import mgrs_udf
 
 
-def assign_tiles(obs: DataFrame, x: str = "x", y: str = "y",
-                 out: str = "mgrs_tile_id") -> DataFrame:
-    """Add the MGRS precision-0 tile id column (vectorized UDF)."""
-    if out in obs.columns:
+def assign_tiles(obs: DataFrame, x: str = "x", y: str = "y") -> DataFrame:
+    """Add the MGRS precision-0 tile id column `mgrs_tile_id` (vectorized
+    UDF), unless obs already carries it."""
+    if "mgrs_tile_id" in obs.columns:
         return obs
-    return obs.withColumn(out, mgrs_udf(F.col(x), F.col(y)))
+    return obs.withColumn("mgrs_tile_id", mgrs_udf(F.col(x), F.col(y)))
 
 
 def density_filter(

@@ -6,13 +6,12 @@ points bucketed by cell, filter by radius, rank by distance.
 
 Correctness guarantee: with ring k and cell size s, every point within
 radius r ≤ k·s of the query is covered — so "k nearest within radius r"
-is EXACT (verified against a brute-force oracle). Distances use squared
-euclidean degrees by default (pure +,* arithmetic → bit-identical across
-engines); haversine_km available for geographic ranking.
+is EXACT (verified against a brute-force oracle). Distances are squared
+euclidean degrees (pure +,* arithmetic → bit-identical across engines).
 
 Scale: the ring explode multiplies the query side by (2k+1)² — keep k small
-and res matched to the radius; candidate side is shuffled once on cell id,
-queries are typically the small side → broadcast.
+and res matched to the radius; queries are the small side by contract and
+broadcast to the point scan, so the point side never shuffles.
 """
 
 from __future__ import annotations
@@ -20,15 +19,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.geo import cell_of
+from ..functions.geo import cell_id, cell_of
+from ..grid import Y_SHIFT
 
 
 def _ring_cells(cell: Column, k: int, res: int) -> Column:
     """All cells within Chebyshev distance k, as a pure column expression."""
     n = 1 << res
-    base = F.lit(res).cast("long") * F.lit(1 << 58)
-    cx = cell % F.lit(1 << 29)
-    cy = F.shiftright(cell, 29) % F.lit(1 << 29)
+    cx = cell % F.lit(1 << Y_SHIFT)
+    cy = F.shiftright(cell, Y_SHIFT) % F.lit(1 << Y_SHIFT)
     dxs = F.sequence(F.lit(-k), F.lit(k))
     dys = F.sequence(F.lit(-k), F.lit(k))
     return F.flatten(
@@ -36,7 +35,7 @@ def _ring_cells(cell: Column, k: int, res: int) -> Column:
             F.filter(dys, lambda dy: (cy + dy >= 0) & (cy + dy < n)),
             lambda dy: F.transform(
                 F.filter(dxs, lambda dx: (cx + dx >= 0) & (cx + dx < 2 * n)),
-                lambda dx: base + (cy + dy) * F.lit(1 << 29) + (cx + dx),
+                lambda dx: cell_id(res, cy + dy, cx + dx),
             ),
         )
     )
@@ -48,17 +47,6 @@ def sq_euclid_deg(qx: Column, qy: Column, px: Column, py: Column) -> Column:
     return dx * dx + dy * dy
 
 
-def haversine_km(qx: Column, qy: Column, px: Column, py: Column) -> Column:
-    """Great-circle distance (km) — the metric the reference's splitter uses
-    (data_splitter.py:181-260 haversine ≤ 400 km components)."""
-    r = 6371.0
-    lat1, lat2 = F.radians(qy), F.radians(py)
-    dlat = lat2 - lat1
-    dlon = F.radians(px) - F.radians(qx)
-    a = F.sin(dlat / 2) ** 2 + F.cos(lat1) * F.cos(lat2) * F.sin(dlon / 2) ** 2
-    return F.lit(2.0 * r) * F.asin(F.sqrt(a))
-
-
 def _radius_pairs(
     queries: DataFrame,
     points: DataFrame,
@@ -68,22 +56,21 @@ def _radius_pairs(
     qy: str,
     px: str,
     py: str,
-    metric: str,
-    broadcast_queries: bool,
 ) -> DataFrame:
-    """Shared candidate machinery: ring-covered cell equi-join + exact
-    radius refine → (qid, pid, dist) pairs within radius."""
+    """Shared candidate machinery: ring-covered cell equi-join against the
+    broadcast query side + exact radius refine → (qid, pid, dist) pairs
+    within radius, dist the squared euclidean distance in degrees."""
     if res is None:
         res = 0
         while 180.0 / (1 << (res + 1)) >= radius_deg and res < 15:
             res += 1
     ring = 1  # cell size ≥ radius ⇒ ring-1 covers every point within radius
 
-    q = queries.withColumn("_qcell", cell_of(qx, qy, res)).withColumn(
-        "cell", F.explode(_ring_cells(F.col("_qcell"), ring, res))
+    q = F.broadcast(
+        queries.withColumn("_qcell", cell_of(qx, qy, res)).withColumn(
+            "cell", F.explode(_ring_cells(F.col("_qcell"), ring, res))
+        )
     )
-    if broadcast_queries:
-        q = F.broadcast(q)
     # the candidate join + exact refine is compute-heavy per point row; a
     # few-row-group local scan would otherwise run it in 1-6 tasks
     # (guide §2.5 input skew — no-op when the scan is already spread)
@@ -91,15 +78,8 @@ def _radius_pairs(
 
     p = spread_input(points).withColumn("cell", cell_of(px, py, res))
     j = q.join(p, "cell", "inner")
-    if metric == "sq_euclid":
-        dist = sq_euclid_deg(F.col(qx), F.col(qy), F.col(px), F.col(py))
-        rfilter = dist <= F.lit(radius_deg * radius_deg)
-    elif metric == "haversine":
-        dist = haversine_km(F.col(qx), F.col(qy), F.col(px), F.col(py))
-        rfilter = dist <= F.lit(radius_deg)  # here radius is km
-    else:
-        raise ValueError(metric)
-    return j.withColumn("dist", dist).filter(rfilter)
+    dist = sq_euclid_deg(F.col(qx), F.col(qy), F.col(px), F.col(py))
+    return j.withColumn("dist", dist).filter(dist <= F.lit(radius_deg * radius_deg))
 
 
 def distance_join(
@@ -113,18 +93,16 @@ def distance_join(
     qy: str = "qy",
     px: str = "x",
     py: str = "y",
-    metric: str = "sq_euclid",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Spatial range join (the ST_DWithin shape): ALL (query, point)
-    pairs within radius → (qid, pid, dist). Exact — the ring-covered cell
-    bucketing is a superset prefilter, the distance refine is exact
-    arithmetic. No window, so nothing ranks: output size is the true
-    match count, and the plan is scan → broadcast/equi-join → filter."""
-    return _radius_pairs(
-        queries, points, radius_deg, res, qx, qy, px, py,
-        metric, broadcast_queries,
-    ).select(qid, pid, "dist")
+    pairs within radius → (qid, pid, dist), dist squared degrees. Exact —
+    the ring-covered cell bucketing is a superset prefilter, the distance
+    refine is exact arithmetic. No window, so nothing ranks: output size
+    is the true match count, and the plan is scan → broadcast/equi-join →
+    filter."""
+    return _radius_pairs(queries, points, radius_deg, res, qx, qy, px, py).select(
+        qid, pid, "dist"
+    )
 
 
 def knn_join(
@@ -139,18 +117,14 @@ def knn_join(
     qy: str = "qy",
     px: str = "x",
     py: str = "y",
-    metric: str = "sq_euclid",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Exact k-nearest-within-radius join.
 
     Returns (qid, pid, dist, rank) with rank ∈ [1, k_neighbors] ordered by
-    (dist asc, pid asc). res is auto-picked so one ring covers the radius.
+    (dist asc, pid asc), dist squared degrees. res is auto-picked so one
+    ring covers the radius.
     """
-    j = _radius_pairs(
-        queries, points, radius_deg, res, qx, qy, px, py,
-        metric, broadcast_queries,
-    )
+    j = _radius_pairs(queries, points, radius_deg, res, qx, qy, px, py)
     w = Window.partitionBy(qid).orderBy(F.col("dist").asc(), F.col(pid).asc())
     return (
         j.withColumn("rank", F.row_number().over(w))
@@ -198,7 +172,7 @@ def knn_label_audit(
     # _radius_pairs preserves input columns, so both labels ride along
     # the candidate pairs — no label re-join needed
     pairs = _radius_pairs(
-        q, p, radius_deg, res, "qx", "qy", "nx", "ny", "sq_euclid", True,
+        q, p, radius_deg, res, "qx", "qy", "nx", "ny"
     ).filter(F.col("qid") != F.col("nid"))
     w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nid").asc())
     top = pairs.withColumn("rank", F.row_number().over(w)).filter(

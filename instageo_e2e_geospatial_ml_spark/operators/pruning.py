@@ -109,7 +109,6 @@ def compaction_plan(
     partition_col: str = "partition_id",
     file_col: str = "file_id",
     size_col: str = "size_bytes",
-    small_file_bytes: int | None = None,
 ) -> DataFrame:
     """Small-file compaction planning (the Delta OPTIMIZE / Iceberg
     rewrite_data_files planner): within each table partition, group
@@ -117,8 +116,8 @@ def compaction_plan(
     NEXT-FIT-DECREASING — sort by (size desc, file_id), running sum,
     bin = floor((run − size) / target): the q48 shard rule applied to
     file sizes, fully relational and deterministic where first-fit's
-    per-bin backtracking is not. Files already ≥ small_file_bytes
-    (default target/2) are left alone (bin −1, the keep marker):
+    per-bin backtracking is not. Files already ≥ target/2 are left
+    alone (bin −1, the keep marker):
     rewriting a right-sized file wastes IO.
 
     Emits (partition, file, size, bin_id, bin_bytes, n_files_in_bin).
@@ -133,8 +132,7 @@ def compaction_plan(
     """
     from pyspark.sql import Window
 
-    if small_file_bytes is None:
-        small_file_bytes = target_bytes // 2
+    small_file_bytes = target_bytes // 2
     f = files.select(
         F.col(partition_col).alias("partition_id"),
         F.col(file_col).alias("file_id"),
@@ -176,13 +174,10 @@ def compaction_plan(
     )
 
 
-def compaction_plan_sql(
-    files_sql: str, target_bytes: int, small_file_bytes: int | None = None
-) -> str:
+def compaction_plan_sql(files_sql: str, target_bytes: int) -> str:
     """DuckDB twin of compaction_plan over (partition_id, file_id,
     size_bytes)."""
-    if small_file_bytes is None:
-        small_file_bytes = target_bytes // 2
+    small_file_bytes = target_bytes // 2
     return f"""
 WITH f AS (
   SELECT partition_id, file_id, CAST(size_bytes AS BIGINT) AS size_bytes

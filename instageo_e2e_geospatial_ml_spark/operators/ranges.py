@@ -8,8 +8,8 @@ event) on bucket id, then refine with the exact predicate. Each event
 lives in exactly one bucket, so a matching pair joins exactly once — no
 dedup needed.
 
-Scale notes: the equi-join shuffles on bucket id (or broadcasts the
-interval side); cost scales with interval_length / bucket_length, so pick
+Scale notes: the equi-join broadcasts the bucketed interval side; cost
+scales with interval_length / bucket_length, so pick
 bucket_minutes near the typical interval length. A pathological interval
 covering the whole axis would explode to every bucket —
 max_buckets_per_interval is a ROUTING threshold, not a data filter:
@@ -34,33 +34,25 @@ def interval_join(
     end_col: str = "end",
     bucket_minutes: int = 60,
     max_buckets_per_interval: int = 1000,
-    broadcast_intervals: bool = False,
-    oversize_intervals: str = "broadcast",
     max_broadcast_intervals: int = 100_000,
 ) -> DataFrame:
     """events × intervals where start ≤ ts < end (half-open), exactly once
     per matching pair. Returns events' columns + intervals' columns.
 
-    Intervals spanning ≥ max_buckets_per_interval buckets are routed per
-    `oversize_intervals`:
-      * "broadcast" (default) — a broadcast theta-join branch unioned with
-        the bucketed branch. Correct for any width; costs one extra
-        map-side pass over events (no shuffle — the over-cap side is
-        broadcast, and an empty over-cap side produces nothing). The
-        branch assumes over-cap intervals are pathological-FEW; a mis-set
-        bucket_minutes (tiny buckets vs long-lived intervals) would
-        silently route the whole interval table into the broadcast, so
-        the over-cap side is counted first (one capped count job on the
-        intervals table — the one eager step in this builder) and more
-        than max_broadcast_intervals of them raises a descriptive error
-        telling the caller to coarsen bucket_minutes / raise the cap
-        instead of OOMing the driver at collect-broadcast time.
-      * "drop" — excluded from the result (the pre-round-4 behavior; an
-        explicit opt-in for callers that treat over-wide intervals as
-        malformed and want the single-scan plan).
+    The bucketed interval side is broadcast to the event scan. Intervals
+    spanning ≥ max_buckets_per_interval buckets join through a broadcast
+    theta-join branch unioned with the bucketed branch. Correct for any
+    width; costs one extra map-side pass over events (no shuffle — the
+    over-cap side is broadcast, and an empty over-cap side produces
+    nothing). The branch assumes over-cap intervals are pathological-FEW;
+    a mis-set bucket_minutes (tiny buckets vs long-lived intervals) would
+    silently route the whole interval table into the broadcast, so the
+    over-cap side is counted first (one capped count job on the intervals
+    table — the one eager step in this builder) and more than
+    max_broadcast_intervals of them raises a descriptive error telling
+    the caller to coarsen bucket_minutes / raise the cap instead of
+    OOMing the driver at collect-broadcast time.
     """
-    if oversize_intervals not in ("broadcast", "drop"):
-        raise ValueError("oversize_intervals must be 'broadcast' or 'drop'")
     b_us = int(bucket_minutes) * 60 * 1_000_000
     ev_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     st_us = F.unix_micros(F.col(start_col).cast("timestamp"))
@@ -74,13 +66,11 @@ def interval_join(
     )
     wide = (F.col("_b1") - F.col("_b0")) >= F.lit(max_buckets_per_interval)
 
-    iv_b = (
+    iv_b = F.broadcast(
         iv.filter(~wide)
         .withColumn("_bucket", F.explode(F.sequence("_b0", "_b1")))
         .drop("_b0", "_b1")
     )
-    if broadcast_intervals:
-        iv_b = F.broadcast(iv_b)
     # spread a few-row-group local scan before the bucket join: the join +
     # refine fan-out is per-event compute the single scan task would
     # otherwise serialize (no-op when the scan is already spread)
@@ -89,8 +79,6 @@ def interval_join(
     ev = spread_input(events).withColumn("_bucket", F.floor(ev_us / F.lit(b_us)))
     out = ev.join(iv_b, "_bucket").filter(refine).drop("_bucket")
 
-    if oversize_intervals == "drop":
-        return out
     iv_w = iv.filter(wide).drop("_b0", "_b1")
     n_wide = iv_w.limit(max_broadcast_intervals + 1).count()
     if n_wide > max_broadcast_intervals:

@@ -13,6 +13,9 @@ digits of precision is unchanged for normalized embeddings.
     path (candidate set shrinks by ~2^bits).
   * ivf_topk: IVF-style two-stage — coarse centroid assign (provided
     centroids table) + search only the best nprobe inverted lists.
+
+lsh_topk and ivf_topk broadcast the query side (capped by max_queries) and
+score the corpus in one fused numpy pass per partition.
 """
 
 from __future__ import annotations
@@ -93,22 +96,6 @@ def _topk_scored_candidates(
     )
 
 
-def int_dot(a: Column, b: Column) -> Column:
-    """Exact integer dot product of two array<float> columns.
-
-    Measured note: the zip_with/aggregate shape beats an unrolled
-    element_at chain (the HOF scans the array storage contiguously;
-    per-index element_at re-derives offsets and defeats JIT inlining at
-    dim 64) — keep this shape. Parallelism, not expression form, is the
-    lever on cross scores: callers must ensure the fact side has enough
-    partitions (a single-file parquet scan otherwise runs one task)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: _quant(x) * _quant(y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -117,10 +104,10 @@ def brute_force_topk(
     pid: str = "pid",
     qvec: str = "qvec",
     pvec: str = "pvec",
-    exclude_self: bool = True,
     max_queries: int = 100_000,
 ) -> DataFrame:
-    """Exact top-k by quantized dot product: (qid, pid, dot, rank).
+    """Exact top-k by quantized dot product: (qid, pid, dot, rank); a
+    query never ranks the corpus row with its own id.
 
     Fast path: the (small by contract) query set is collected into an int64
     numpy matrix, sc.broadcast once (NOT closure-captured — closures are
@@ -161,8 +148,7 @@ def brute_force_topk(
             out_q, out_p, out_d = [], [], []
             for j in range(qm.shape[0]):
                 col = dots[:, j]
-                mask = pids != q_ids[j] if exclude_self else np.ones(len(pids), bool)
-                idx = np.nonzero(mask)[0]
+                idx = np.nonzero(pids != q_ids[j])[0]
                 if len(idx) == 0:
                     continue
                 # partial top-k by (dot desc, pid asc)
@@ -265,7 +251,6 @@ def lsh_topk(
     pvec: str = "pvec",
     n_bits: int = 8,
     multi_probe: bool = False,
-    broadcast_queries: bool = True,
     max_queries: int = 100_000,
 ) -> DataFrame:
     """Approximate top-k: only candidates sharing the LSH bucket are scored.
@@ -275,43 +260,14 @@ def lsh_topk(
     multi-probe recall knob) — a (query, candidate) pair still matches at
     most once (each corpus row lives in exactly one bucket).
 
-    broadcast_queries=True fits the interactive-lookup shape (query set
-    small by contract) and runs FUSED: the query matrix + probe table are
-    computed once on the driver (bounded by max_queries, the
-    brute_force_topk contract), broadcast, and a single numpy pass over
-    the corpus buckets each row, scores it against the probing queries
-    with one exact int64 matmul per (batch, bucket) group, and keeps a
-    per-partition top-k — so only ≤ k rows per (query, partition) reach
-    the final rank exchange (guide §2.3 'aggregate before you shuffle',
-    §4.2 batch kernels). For the corpus-scale shape — a full kNN graph
-    where queries == corpus (LLM-dedup's canonical use) — pass False: the
-    candidate join then shuffles both sides on the bucket key instead of
-    broadcasting a corpus-sized query table to every executor (AQE still
-    picks a broadcast at runtime when the query side is genuinely small);
-    values are identical between the two paths."""
-    if not broadcast_queries:
-        qb = lsh_buckets(queries.select(F.col(qid).alias("_id"), F.col(qvec).alias("v")), "v", "_id", n_bits)
-        pb = lsh_buckets(corpus.select(F.col(pid).alias("_id"), F.col(pvec).alias("v")), "v", "_id", n_bits)
-        q = queries.join(qb.select(F.col("_id").alias(qid), "bucket"), qid)
-        p = corpus.join(pb.select(F.col("_id").alias(pid), "bucket"), pid)
-        if multi_probe:
-            probes = F.array(
-                F.col("bucket"),
-                *[F.col("bucket").bitwiseXOR(F.lit(1 << b)) for b in range(n_bits)],
-            )
-            q = q.withColumn("bucket", F.explode(probes))
-        j = (
-            q.join(p, "bucket")
-            .filter(F.col(qid) != F.col(pid))
-            .withColumn("dot", int_dot(F.col(qvec), F.col(pvec)))
-        )
-        w = Window.partitionBy(qid).orderBy(F.col("dot").desc(), F.col(pid).asc())
-        return (
-            j.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(qid, pid, "dot", "rank")
-        )
-
+    The query set is small by contract (bounded by max_queries, the
+    brute_force_topk contract), so the scan runs FUSED: the query matrix +
+    probe table are computed once on the driver, broadcast, and a single
+    numpy pass over the corpus buckets each row, scores it against the
+    probing queries with one exact int64 matmul per (batch, bucket) group,
+    and keeps a per-partition top-k — so only ≤ k rows per (query,
+    partition) reach the final rank exchange (guide §2.3 'aggregate
+    before you shuffle', §4.2 batch kernels)."""
     import numpy as np
 
     q_ids, qm = _collect_id_matrix(queries, qid, qvec, max_queries)
@@ -443,126 +399,74 @@ def ivf_topk(
     pvec: str = "pvec",
     cid: str = "cid",
     cvec: str = "cvec",
-    broadcast_queries: bool = True,
     max_queries: int = 100_000,
 ) -> DataFrame:
     """IVF: assign corpus rows to their nearest centroid (inverted lists),
     probe the nprobe closest lists per query, exact-score within them.
 
-    broadcast_queries=True runs FUSED (guide §4.2): centroid and query
-    matrices are collected once (both bounded-small by contract — the
-    centroid table is k rows, the query side capped by max_queries like
-    brute_force_topk), probe lists computed driver-side with the same
-    exact integer ordering, and ONE numpy pass over the corpus both
-    assigns each row's list (argmax over centroids, ties → smallest cid)
-    and scores it against the queries probing that list, keeping a
-    per-partition top-k so only ≤ k rows per (query, partition) reach the
-    final rank exchange. Values are identical to the expression path
-    (the broadcast_queries=False branch below), which remains the
-    corpus-scale-query shape.
-
-    Scale notes: the corpus→centroid assignment is a broadcast cross score
-    + map-side `max(struct(cdot, -cid))` aggregation — partial aggregation
-    combines the C candidate rows per vector inside each task, so the one
-    shuffle moves N rows, not N×C (a window rank would shuffle the full
-    cross product). At real scale the assignment is computed once and
-    persisted with the list id as a partition key → partition pruning per
-    query batch. The centroid table (k rows) is always broadcast; the
-    QUERY side is broadcast only when broadcast_queries=True (the
-    interactive-lookup contract) — for corpus-scale query sets (full
-    kNN-graph builds where queries == corpus) pass False and the probe
-    join shuffles both sides on the list id instead (AQE still broadcasts
-    a genuinely small side at runtime).
+    The scan runs FUSED (guide §4.2): centroid and query matrices are
+    collected once (both bounded-small by contract — the centroid table is
+    k rows, the query side capped by max_queries like brute_force_topk),
+    probe lists computed driver-side by (cdot desc, cid asc), and ONE
+    numpy pass over the corpus both assigns each row's list (argmax over
+    centroids, ties → smallest cid) and scores it against the queries
+    probing that list, keeping a per-partition top-k so only ≤ k rows per
+    (query, partition) reach the final rank exchange. At real scale the
+    corpus assignment is computed once and persisted with the list id as
+    a partition key → partition pruning per query batch.
     """
-    if broadcast_queries:
-        import numpy as np
+    import numpy as np
 
-        c_ids, cm = _collect_id_matrix(centroids, cid, cvec, None)
-        order = np.argsort(c_ids, kind="stable")
-        c_ids, cm = c_ids[order], cm[order]  # cid-ascending → argmax ties
-        q_ids, qm = _collect_id_matrix(queries, qid, qvec, max_queries)
-        qc = _exact_matmul(qm, cm.T)
-        probe_map: dict[int, list[int]] = {}
-        for i in range(len(q_ids)):
-            # top-nprobe centroids by (cdot desc, cid asc); cm is sorted
-            # by cid so index order == cid order
-            top = np.lexsort((np.arange(len(c_ids)), -qc[i]))[:nprobe]
-            for ci in top.tolist():
-                probe_map.setdefault(ci, []).append(i)
-        probe_map_np = {
-            b: np.array(v, dtype=np.int64) for b, v in probe_map.items()
-        }
-        bc = queries.sparkSession.sparkContext.broadcast(
-            (q_ids, qm, cm, probe_map_np)
-        )
+    c_ids, cm = _collect_id_matrix(centroids, cid, cvec, None)
+    order = np.argsort(c_ids, kind="stable")
+    c_ids, cm = c_ids[order], cm[order]  # cid-ascending → argmax ties
+    q_ids, qm = _collect_id_matrix(queries, qid, qvec, max_queries)
+    qc = _exact_matmul(qm, cm.T)
+    probe_map: dict[int, list[int]] = {}
+    for i in range(len(q_ids)):
+        # top-nprobe centroids by (cdot desc, cid asc); cm is sorted
+        # by cid so index order == cid order
+        top = np.lexsort((np.arange(len(c_ids)), -qc[i]))[:nprobe]
+        for ci in top.tolist():
+            probe_map.setdefault(ci, []).append(i)
+    probe_map_np = {
+        b: np.array(v, dtype=np.int64) for b, v in probe_map.items()
+    }
+    bc = queries.sparkSession.sparkContext.broadcast(
+        (q_ids, qm, cm, probe_map_np)
+    )
 
-        def kernel(it):
-            q_ids, qm, cm, probe_map = bc.value
-            acc: dict[int, list] = {}
-            if cm.shape[0] == 0 or not probe_map:
-                yield _emit_topk(acc, q_ids, qid, pid, k)
-                return
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                pm = _np_quant(
-                    np.stack(
-                        pdf[pvec].map(lambda v: np.asarray(v, dtype=np.float64))
-                    )
-                )
-                pids = pdf[pid].to_numpy(np.int64)
-                assigned = np.argmax(_exact_matmul(pm, cm.T), axis=1)
-                row_order = np.argsort(assigned, kind="stable")
-                ua, starts = np.unique(assigned[row_order], return_index=True)
-                bounds = np.append(starts, len(row_order))
-                for gi, ci in enumerate(ua.tolist()):
-                    qidx = probe_map.get(ci)
-                    if qidx is None:
-                        continue
-                    sel = row_order[bounds[gi]:bounds[gi + 1]]
-                    dots = _exact_matmul(qm[qidx], pm[sel].T)
-                    for row, qi in enumerate(qidx.tolist()):
-                        acc.setdefault(qi, []).append((dots[row], pids[sel]))
+    def kernel(it):
+        q_ids, qm, cm, probe_map = bc.value
+        acc: dict[int, list] = {}
+        if cm.shape[0] == 0 or not probe_map:
             yield _emit_topk(acc, q_ids, qid, pid, k)
+            return
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            pm = _np_quant(
+                np.stack(
+                    pdf[pvec].map(lambda v: np.asarray(v, dtype=np.float64))
+                )
+            )
+            pids = pdf[pid].to_numpy(np.int64)
+            assigned = np.argmax(_exact_matmul(pm, cm.T), axis=1)
+            row_order = np.argsort(assigned, kind="stable")
+            ua, starts = np.unique(assigned[row_order], return_index=True)
+            bounds = np.append(starts, len(row_order))
+            for gi, ci in enumerate(ua.tolist()):
+                qidx = probe_map.get(ci)
+                if qidx is None:
+                    continue
+                sel = row_order[bounds[gi]:bounds[gi + 1]]
+                dots = _exact_matmul(qm[qidx], pm[sel].T)
+                for row, qi in enumerate(qidx.tolist()):
+                    acc.setdefault(qi, []).append((dots[row], pids[sel]))
+        yield _emit_topk(acc, q_ids, qid, pid, k)
 
-        return _topk_scored_candidates(
-            spread_input(corpus.select(pid, pvec)), kernel, qid, pid, k
-        )
-
-    # corpus side: top-1 centroid by (cdot desc, cid asc) via max(struct)
-    pj = corpus.crossJoin(F.broadcast(centroids)).withColumn(
-        "cdot", int_dot(F.col(pvec), F.col(cvec))
-    )
-    p = (
-        pj.groupBy(pid)
-        .agg(
-            F.max(F.struct(F.col("cdot"), (-F.col(cid)).alias("_nc"))).alias("_m"),
-            F.first(pvec).alias(pvec),
-        )
-        .withColumn(cid, -F.col("_m._nc"))
-        .drop("_m")
-    )
-
-    # query side: nprobe lists per query (small side — window rank is fine)
-    qj = queries.crossJoin(F.broadcast(centroids)).withColumn(
-        "cdot", int_dot(F.col(qvec), F.col(cvec))
-    )
-    wq = Window.partitionBy(qid).orderBy(F.col("cdot").desc(), F.col(cid).asc())
-    q = (
-        qj.withColumn("crank", F.row_number().over(wq))
-        .filter(F.col("crank") <= nprobe)
-        .drop("cdot", "crank", cvec)
-    )
-    j = (
-        q.join(p, cid)
-        .filter(F.col(qid) != F.col(pid))
-        .withColumn("dot", int_dot(F.col(qvec), F.col(pvec)))
-    )
-    w = Window.partitionBy(qid).orderBy(F.col("dot").desc(), F.col(pid).asc())
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid, pid, "dot", "rank")
+    return _topk_scored_candidates(
+        spread_input(corpus.select(pid, pvec)), kernel, qid, pid, k
     )
 
 
@@ -572,7 +476,6 @@ def train_centroids(
     n_iters: int = 3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """Distributed k-means (Lloyd) over an embedding column → (cid,
     c: array<long>) centroids in the ×1000-quantized integer domain —
@@ -608,9 +511,7 @@ def train_centroids(
     """
     q = vecs.select(
         id_col, F.transform(F.col(vec_col), lambda e: _quant(e)).alias("v")
-    )
-    if materialize:
-        q = q.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
 
     # deterministic seeding: distributed top-k by hash order
     seeds = (

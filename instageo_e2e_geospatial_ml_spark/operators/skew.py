@@ -7,9 +7,9 @@ the north star calls out explicitly:
 
   * salted_join — a shuffle join whose key has pathological hot values
     (a mega-city grid cell with 10^9 points): the dim side replicates
-    ×n_salt, the fact side picks a deterministic salt from a row hash, so
-    one hot key spreads over n_salt reducers. Row-identical to the
-    unsalted join.
+    ×n_salt, the fact side picks a deterministic salt from a column hash,
+    so one hot key spreads over n_salt reducers. Row-identical to the
+    unsalted inner join.
   * write_clustered — range-partition by a clustering column (packed cell
     id: its integer order IS the spatial prefix order) and sort within
     partitions before writing, so every output file covers a tight cell
@@ -28,31 +28,21 @@ def salted_join(
     fact: DataFrame,
     dim: DataFrame,
     key: str,
+    salt_by: str,
     n_salt: int = 8,
-    how: str = "inner",
-    salt_by: str | None = None,
 ) -> DataFrame:
-    """fact ⋈ dim on `key`, with the shuffle spread over (key, salt).
+    """fact ⋈ dim (inner) on `key`, with the shuffle spread over (key, salt).
 
     The dim side explodes ×n_salt (dims are small relative to facts by
     definition — a big-big skew join wants AQE's skew split instead);
-    the fact side derives its salt deterministically from `salt_by`
-    (default: every fact column via xxhash64, so re-runs place rows
-    identically). Output rows are exactly the unsalted join's for the
-    fact-preserving join types; right/full outer are rejected because the
-    ×n_salt dim replication would surface unmatched dim rows n_salt times.
+    the fact side derives its salt deterministically from xxhash64 of
+    `salt_by`, so re-runs place rows identically. Output rows are exactly
+    the unsalted inner join's.
     """
-    if how not in ("inner", "left", "left_outer", "left_semi", "semi", "left_anti", "anti", "leftouter", "leftsemi", "leftanti"):
-        raise ValueError(
-            f"salted_join: how={how!r} not supported — the dim side is "
-            "replicated ×n_salt, so only fact-preserving joins (inner/"
-            "left/left_semi/left_anti) keep unsalted-join semantics"
-        )
     salts = F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
     d = dim.withColumn("_salt", salts)
-    basis = [F.col(salt_by)] if salt_by else [F.col(c) for c in fact.columns]
-    f = fact.withColumn("_salt", F.pmod(F.xxhash64(*basis), F.lit(n_salt)))
-    return f.join(d, [key, "_salt"], how).drop("_salt")
+    f = fact.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_by)), F.lit(n_salt)))
+    return f.join(d, [key, "_salt"], "inner").drop("_salt")
 
 
 def write_clustered(

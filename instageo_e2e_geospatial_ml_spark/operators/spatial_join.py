@@ -8,10 +8,13 @@ no match get an empty list.
 Spark-first design (replaces geopandas STRtree sjoin):
   1. bucket each footprint by the grid cells its bbox covers (explode —
      distributed, no driver loop);
-  2. equi-join observations to buckets on cell id — this is the coarse
-     index; with a broadcast hint the fact table never shuffles;
-  3. exact ray-cast point-in-polygon refine in an Arrow-batched pandas UDF
-     (numpy per unique polygon within each batch);
+  2. equi-join observations to the broadcast buckets on cell id — this is
+     the coarse index, and the fact table never shuffles; a bbox test
+     prunes the candidates;
+  3. exact refine: a pure-JVM convex sign test for convex footprints, and
+     an Arrow-batched ray-cast pandas UDF (numpy per unique polygon within
+     each batch) only for concave ones (pip_join(exact=False) stops at the
+     bbox test);
   4. group matches back per observation (array_sort for deterministic
      candidate order — J2's tie-break depends on it).
 
@@ -30,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
-from ..functions.geo import cell_of
+from ..functions.geo import cell_id, cell_of
 
 DEFAULT_PIP_RES = 7  # cell size 180/2^7 = 1.40625° ≥ one MGRS tile footprint
 
@@ -116,8 +119,8 @@ def convex_inside(px, py, xs, ys):
 def ring_is_convex(xs, ys):
     """Column expression: True iff the ring's consecutive edge turns are
     sign-consistent (convex). Zero turns (duplicated/collinear vertices)
-    don't vote. Used by pip_join's 'auto' mode to route each footprint to
-    the JVM convex test or the general ray-cast UDF."""
+    don't vote. pip_join's exact refine uses it to route each footprint
+    to the JVM convex test or the general ray-cast UDF."""
     n = F.size(xs)
     closed = (F.element_at(xs, n) == F.element_at(xs, F.lit(1))) & (
         F.element_at(ys, n) == F.element_at(ys, F.lit(1))
@@ -156,12 +159,7 @@ def bucket_polygons(catalog: DataFrame, res: int = DEFAULT_PIP_RES) -> DataFrame
     return (
         catalog.withColumn("_cx", F.explode(F.sequence(cx0, cx1)))
         .withColumn("_cy", F.explode(F.sequence(cy0, cy1)))
-        .withColumn(
-            "cell",
-            F.lit(res).cast("long") * F.lit(1 << 58)
-            + F.col("_cy") * F.lit(1 << 29)
-            + F.col("_cx"),
-        )
+        .withColumn("cell", cell_id(res, F.col("_cy"), F.col("_cx")))
         .drop("_cx", "_cy")
     )
 
@@ -173,27 +171,25 @@ def pip_join(
     obs_id: str = "obs_id",
     x: str = "x",
     y: str = "y",
-    exact: bool | str = "auto",
-    broadcast_catalog: bool = True,
+    exact: bool = True,
     expand_granules: bool = True,
 ) -> DataFrame:
     """(obs_id, granule_id) match pairs: observation point within footprint.
 
-    exact selects the refine stage after the cell-bucket + bbox prune:
-      'auto' (default) — probe the (small, dim-side) catalog once: if every
+    The bucketed catalog (dim side) is broadcast to the point scan. exact
+    selects the refine stage after the cell-bucket + bbox prune:
+      True (default) — probe the (small, dim-side) catalog once: if every
           footprint ring is convex — the real-world case; HLS/S2 granule
           footprints are 5-point projected-rectangle rings — refine with the
           pure-JVM convex sign test (no Python worker, no Arrow IPC). If any
           ring is concave, convex footprints still take the JVM path and
-          only concave ones go through the ray-cast UDF (split-union).
-      'convex_sql' — force the JVM convex test (caller asserts convexity);
-      'raycast' or True — general-polygon even-odd ray cast (Arrow pandas
-          UDF; handles concave rings);
+          only concave ones go through the even-odd ray-cast pandas UDF
+          (split-union).
       False — stop at the bbox test (footprints known to be rectangles).
 
-    The probe in 'auto' is one tiny aggregate on the catalog (dim side,
-    ≤ millions of rows) — negligible next to the fact-side join it speeds
-    up ~100× by keeping the refine inside whole-stage codegen.
+    The probe is one tiny aggregate on the catalog (dim side, ≤ millions
+    of rows) — negligible next to the fact-side join it speeds up ~100×
+    by keeping the refine inside whole-stage codegen.
 
     Footprint dedup: catalogs routinely carry MANY granules per identical
     footprint (every revisit of a tile shares its polygon — 240× for a
@@ -214,18 +210,16 @@ def pip_join(
     with_fp = catalog.withColumn("_fp_id", _fp_identity())
     fp_granules = with_fp.select("_fp_id", "granule_id")
     cat = with_fp.select("_fp_id", *geom).distinct()
-    if exact == "auto":
+    any_concave = False
+    if exact:
         cat = cat.withColumn(
             "_convex", ring_is_convex(F.col("fp_xs"), F.col("fp_ys"))
         )
         any_concave = not cat.filter(~F.col("_convex")).isEmpty()
-        exact = "mixed" if any_concave else "convex_sql"
         if not any_concave:
             cat = cat.drop("_convex")
 
-    buckets = bucket_polygons(cat, res)
-    if broadcast_catalog:
-        buckets = F.broadcast(buckets)
+    buckets = F.broadcast(bucket_polygons(cat, res))
     # spread a few-row-group local scan before the broadcast join: the
     # candidate join + convex refine is per-point compute that a 1-6 task
     # scan would serialize (guide §2.5 input skew; no-op when the fact
@@ -242,26 +236,22 @@ def pip_join(
         & (F.col(y) <= F.col("fp_maxy"))
     )
     _sql_test = convex_inside(F.col(x), F.col(y), F.col("fp_xs"), F.col("fp_ys"))
-    _udf_test = pip_udf(
-        F.col("_fp_id.h1"),
-        F.col("_fp_id.h2"),
-        F.col(x),
-        F.col(y),
-        F.col("fp_xs"),
-        F.col("fp_ys"),
-    )
-    if exact == "convex_sql":
+    if exact and not any_concave:
         j = j.filter(_sql_test)
-    elif exact == "raycast" or exact is True:
-        j = j.filter(_udf_test)
-    elif exact == "mixed":
+    elif exact:
         # JVM path for convex footprints; Python refine only for the
         # concave remainder — at scale the concave branch is empty or tiny
+        _udf_test = pip_udf(
+            F.col("_fp_id.h1"),
+            F.col("_fp_id.h2"),
+            F.col(x),
+            F.col(y),
+            F.col("fp_xs"),
+            F.col("fp_ys"),
+        )
         j = j.filter(F.col("_convex")).filter(_sql_test).unionByName(
             j.filter(~F.col("_convex")).filter(_udf_test)
         )
-    elif exact:
-        raise ValueError(exact)
     if not expand_granules:
         return j.select(obs_id, "_fp_id")
     # re-attach the granules sharing each matched footprint (broadcast —

@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.geo import mgrs_udf
-from .knn import haversine_km
 from .split import greedy_split_assign, group_stats
 
 
@@ -82,7 +81,6 @@ def connected_components_haversine(
 def split_by_strategy(
     obs: DataFrame,
     strategy: str = "kmeans",
-    tile_col: str = "mgrs_tile_id",
     year_col: str = "year",
     n_clusters: int = 8,
     threshold_km: float = 400.0,
@@ -94,8 +92,10 @@ def split_by_strategy(
 
     'kmeans' / 'components': cluster the per-tile centroid table (tiny,
     collected + broadcast back); 'year': group by year; 'tile': one group
-    per tile (degenerate case = operators.split.split_dataset).
+    per tile (degenerate case = operators.split.split_dataset). Tiles come
+    from `mgrs_tile_id`, assigned from (x, y) when obs lacks it.
     """
+    tile_col = "mgrs_tile_id"
     if tile_col not in obs.columns:
         obs = obs.withColumn(tile_col, mgrs_udf(F.col("x"), F.col("y")))
 

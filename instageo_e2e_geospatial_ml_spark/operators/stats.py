@@ -558,27 +558,27 @@ def skyline2d(
 
 def skyline2d_sql(
     table_sql: str,
+    group_exprs: str,
     x_expr: str = "x",
     y_expr: str = "y",
-    group_exprs: str = "",
 ) -> str:
-    """The identical one-pass 2-D skyline as DuckDB SQL. NOTE:
-    `group_exprs` is COMMA-PREFIXED (e.g. ", p_brand"), matching
+    """The identical one-pass 2-D skyline per group as DuckDB SQL.
+    NOTE: `group_exprs` is COMMA-PREFIXED (e.g. ", p_brand"), matching
     hll_sql's convention — unlike weighted_percentiles_sql, which
-    takes a bare list; empty string means no grouping."""
-    part = f"PARTITION BY {group_exprs[1:]}" if group_exprs else ""
+    takes a bare list."""
+    groups = group_exprs[1:]
     return f"""
 WITH ipts AS (
-  SELECT DISTINCT{group_exprs[1:] + ',' if group_exprs else ''}
+  SELECT DISTINCT{groups},
          {x_expr}, {y_expr}
   FROM ({table_sql})
 ),
 m AS (
-  SELECT *, min({y_expr}) OVER ({part} ORDER BY {x_expr} ASC, {y_expr} ASC
+  SELECT *, min({y_expr}) OVER (PARTITION BY {groups} ORDER BY {x_expr} ASC, {y_expr} ASC
     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
   FROM ipts
 )
-SELECT {group_exprs[1:] + ',' if group_exprs else ''} {x_expr}, {y_expr}
+SELECT {groups}, {x_expr}, {y_expr}
 FROM m WHERE pm IS NULL OR pm > {y_expr}
 """
 
@@ -2019,9 +2019,7 @@ def ripley_k_counts(
     # max band, so no boundary pair is lost to sqrt/square rounding; the
     # per-band cuts below are exact integer comparisons on d²
     rmax = math.sqrt(max(r_sq_bands) + 0.5)
-    pairs = distance_join(
-        q, p, radius_deg=rmax, metric="sq_euclid"
-    ).filter(F.col("qid") != F.col("pid"))
+    pairs = distance_join(q, p, radius_deg=rmax).filter(F.col("qid") != F.col("pid"))
     counts = pairs.agg(
         *[
             F.sum(

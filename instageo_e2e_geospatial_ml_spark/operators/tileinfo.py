@@ -27,7 +27,6 @@ def tile_info(
     num_steps: int = 3,
     temporal_step: int = 5,
     tolerance_days: int = 5,
-    as_strings: bool = True,
 ) -> DataFrame:
     """obs → (tile_id, min_date, max_date, lon_min, lon_max, lat_min, lat_max).
 
@@ -51,11 +50,7 @@ def tile_info(
         F.min(y).alias("lat_min"),
         F.max(y).alias("lat_max"),
     )
-    agg = widen_tolerance(
-        agg, "min_date", "max_date", tolerance_days=tolerance_days, push_end_of_day=True
+    agg = widen_tolerance(agg, "min_date", "max_date", tolerance_days=tolerance_days)
+    return agg.withColumn("min_date", fmt_iso("min_date")).withColumn(
+        "max_date", fmt_iso("max_date")
     )
-    if as_strings:
-        agg = agg.withColumn("min_date", fmt_iso("min_date")).withColumn(
-            "max_date", fmt_iso("max_date")
-        )
-    return agg

@@ -99,10 +99,10 @@ FROM fg
 
 def time_weighted_avg(
     obs: DataFrame,
+    tiebreak_col: str,
     key_col: str = "key",
     ts_col: str = "ts_us",
     val_col: str = "val",
-    tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Time-weighted average (TWAP/telemetry duty-cycle): each
     observation's value holds until the next one, so the mean weights
@@ -110,17 +110,16 @@ def time_weighted_avg(
     lead() window, both sums exact bigints (num/den emitted alongside
     the one rounded float division). The final observation has no dwell
     interval and contributes nothing (standard last-interval-open
-    convention); single-observation keys return NULL. Pass
-    tiebreak_col when timestamps can repeat within a key: tied rows
-    have zero dwell so they contribute nothing themselves, but WHICH
-    tied row pairs with the following interval must not depend on
-    shuffle order."""
+    convention); single-observation keys return NULL. tiebreak_col
+    orders rows whose timestamps repeat within a key: tied rows have
+    zero dwell so they contribute nothing themselves, but WHICH tied
+    row pairs with the following interval must not depend on shuffle
+    order."""
     from pyspark.sql import Window
 
-    order = [F.col(ts_col).asc()] + (
-        [F.col(tiebreak_col).asc()] if tiebreak_col else []
+    w = Window.partitionBy(key_col).orderBy(
+        F.col(ts_col).asc(), F.col(tiebreak_col).asc()
     )
-    w = Window.partitionBy(key_col).orderBy(*order)
     d = obs.withColumn("_nxt", F.lead(ts_col).over(w)).filter(
         F.col("_nxt").isNotNull()
     )
@@ -142,17 +141,16 @@ def time_weighted_avg(
 
 def time_weighted_avg_sql(
     obs_sql: str,
+    tiebreak_col: str,
     key_col: str = "key",
     ts_col: str = "ts_us",
     val_col: str = "val",
-    tiebreak_col: str | None = None,
 ) -> str:
     """The identical dwell-time weighting as DuckDB SQL."""
     k, t, v = key_col, ts_col, val_col
-    tb = f", {tiebreak_col} ASC" if tiebreak_col else ""
     return f"""
 WITH d AS (
-  SELECT *, lead({t}) OVER (PARTITION BY {k} ORDER BY {t} ASC{tb}) AS nxt
+  SELECT *, lead({t}) OVER (PARTITION BY {k} ORDER BY {t} ASC, {tiebreak_col} ASC) AS nxt
   FROM ({obs_sql})
 ),
 agg AS (
@@ -981,23 +979,18 @@ def seasonal_profile(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    period_expr: str = "hour",
 ) -> DataFrame:
     """Seasonal-means decomposition (STL-lite, the dashboard staple):
     per (key, season-slot) the exact mean of a quantized outcome, plus
     the key's overall mean, published as exact integer ppm — seasonal
-    effect = slot mean − overall mean. Slots are calendar components
-    ('hour' = hour-of-day, 'dow' = ISO day-of-week) computed from the
-    UTC timestamp identically in both engines.
+    effect = slot mean − overall mean. The slot is the hour of day of
+    the UTC timestamp, computed identically in both engines.
 
     Output per (key, slot): (n, slot_mean_ppm, overall_mean_ppm,
     seasonal_ppm). One aggregate + a broadcast join of the per-key
     totals re-aggregated from the slot table — never a second pass."""
     tus = F.col(ts_col).cast("timestamp")
-    slot = (
-        F.hour(tus) if period_expr == "hour"
-        else F.dayofweek(tus)
-    ).cast("long")
+    slot = F.hour(tus).cast("long")
     v = F.floor(F.col(value_col) * 10000 + 0.5).cast("long")
     base = events.select(
         F.col(key_col).alias("k"), slot.alias("slot"), v.alias("v")
@@ -1022,18 +1015,11 @@ def seasonal_profile(
     )
 
 
-def seasonal_profile_sql(
-    events_sql: str, period_expr: str = "hour"
-) -> str:
+def seasonal_profile_sql(events_sql: str) -> str:
     """DuckDB twin of seasonal_profile."""
-    slot = (
-        "CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT)"
-        if period_expr == "hour"
-        else "CAST(dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS BIGINT)"
-    )
     return f"""
 WITH base AS (
-  SELECT event_type AS k, {slot} AS slot,
+  SELECT event_type AS k, CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS slot,
          CAST(floor(value * 10000 + 0.5) AS BIGINT) AS v
   FROM ({events_sql})
 ),

@@ -25,21 +25,21 @@ from pyspark.sql import functions as F
 
 def segment_trips(
     pings: DataFrame,
+    order_tiebreak: str,
     user_col: str = "user_id",
     ts_col: str = "ts",
     x_col: str = "px",
     y_col: str = "py",
-    order_tiebreak: str | None = None,
     vmax: int = 30,
     max_gap_s: int = 1800,
 ) -> DataFrame:
     """pings + (trip_id, hop_d2, hop_dt_s, is_break): trip_id is 1-based
     per user; hop_* are NULL on each user's first ping. Coordinates are
-    integer planar units (meters); vmax in units/second."""
-    order = [F.col(ts_col).asc()] + (
-        [F.col(order_tiebreak).asc()] if order_tiebreak else []
+    integer planar units (meters); vmax in units/second. Pings order by
+    (ts, order_tiebreak)."""
+    w = Window.partitionBy(user_col).orderBy(
+        F.col(ts_col).asc(), F.col(order_tiebreak).asc()
     )
-    w = Window.partitionBy(user_col).orderBy(*order)
     tus = F.unix_micros(F.col(ts_col).cast("timestamp"))
     dx = F.col(x_col) - F.lag(x_col).over(w)
     dy = F.col(y_col) - F.lag(y_col).over(w)

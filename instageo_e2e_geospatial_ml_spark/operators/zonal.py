@@ -37,14 +37,12 @@ from .cleaner import _decode_chip, _decode_seg
 def zonal_stats(
     chips: DataFrame,
     no_data_value: int = 0,
-    include_background: bool = False,
 ) -> DataFrame:
     """Chip table (CHIP_SCHEMA) → (zone, band, n_px, sum_px, sumsq_px,
     min_px, max_px, mean_px, std_px) — exact pixel statistics per
     segmentation class and band across all chips.
 
-    `zone` is the seg-map label; SEG_NDV (unlabeled) pixels are skipped
-    unless include_background=True (they then report as zone SEG_NDV).
+    `zone` is the seg-map label; SEG_NDV (unlabeled) pixels are skipped.
     Chip pixels equal to `no_data_value` are excluded from every
     statistic (the nodata_ratio convention of operators/cleaner.py).
     """
@@ -56,7 +54,7 @@ def zonal_stats(
                 chip = _decode_chip(r).astype(np.int64)  # (bands, cs, cs)
                 seg = _decode_seg(r)
                 for zone in np.unique(seg):
-                    if zone == SEG_NDV and not include_background:
+                    if zone == SEG_NDV:
                         continue
                     zmask = seg == zone
                     for b in range(chip.shape[0]):

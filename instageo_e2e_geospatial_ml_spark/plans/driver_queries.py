@@ -753,7 +753,7 @@ def q26_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.repartition(4).write.mode("overwrite").parquet(src)
     stream = read_event_stream(spark, src, ev.schema)
     agg = windowed_event_counts(stream, window="6 hours", watermark="1 hour")
-    res = run_available_now(agg, "q26_sink", f"{td}/ck", output_mode="complete")
+    res = run_available_now(agg, "q26_sink", f"{td}/ck")
     return res.select(
         F.date_format("window_start", "yyyy-MM-dd'T'HH:mm:ss").alias("window_start"),
         "event_type",
@@ -777,9 +777,7 @@ def q25_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # exact=True: the oracle checks exact all-pairs semantics at oracle
     # scale; the operator's DEFAULT is the LSH-bucketed distributed path
-    return embedding_neardup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.3, exact=True
-    )
+    return embedding_neardup_pairs(_t(spark, sf_dir, "embeddings"), threshold=0.3)
 
 
 Q25_SQL = """
@@ -1750,10 +1748,7 @@ def q50_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("start"),
         (F.col("ts").cast("timestamp") + F.expr("INTERVAL 90 MINUTES")).alias("end"),
     )
-    j = interval_join(
-        ev.select("event_id", "ts", "value"), iv, bucket_minutes=60,
-        broadcast_intervals=True,
-    )
+    j = interval_join(ev.select("event_id", "ts", "value"), iv, bucket_minutes=60)
     return j.groupBy("window_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 6).alias("sum_value"),
@@ -2085,7 +2080,7 @@ def q56_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.web import registrable_domain, synth_urls, url_components
 
     docs = _t(spark, sf_dir, "documents")
-    out = registrable_domain(url_components(synth_urls(docs)), use_psl_table=True)
+    out = registrable_domain(url_components(synth_urls(docs)))
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "url", "scheme", "host", "domain", "path", "query",
@@ -2138,7 +2133,7 @@ def q57_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    parsed = registrable_domain(url_components(synth_urls(docs)), use_psl_table=True)
+    parsed = registrable_domain(url_components(synth_urls(docs)))
     out = cap_per_domain(parsed, max_per_domain=3)
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),

@@ -198,15 +198,16 @@ def _read_ifd(data: bytes, bo: str, off: int) -> dict[int, tuple]:
     return out
 
 
-def _dms_to_e7(dms, ref: str, neg_refs: str = "SW") -> int:
-    """Exact integer 1e-7 degrees from ((d,dd),(m,md),(s_num,s_den))."""
+def _dms_to_e7(dms, ref: str) -> int:
+    """Exact integer 1e-7 degrees from ((d,dd),(m,md),(s_num,s_den)),
+    negative for the S and W hemispheres."""
     (dn, dd), (mn, md), (sn, sd) = dms
     v = (
         (dn * 10_000_000) // max(dd, 1)
         + (mn * 10_000_000) // (60 * max(md, 1))
         + (sn * 10_000_000) // (3600 * max(sd, 1))
     )
-    return -v if ref in neg_refs else v
+    return -v if ref in "SW" else v
 
 
 def parse_exif_tiff(data: bytes) -> dict:

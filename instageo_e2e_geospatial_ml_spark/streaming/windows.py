@@ -8,8 +8,9 @@ their batch twins under `readStream` (registry query q26):
 
   * read_event_stream: the events parquet as a file stream;
   * windowed_event_counts: tumbling event-time windows + watermark;
-  * run_available_now: drains all currently-available input with
-    Trigger.AvailableNow into a memory sink — the batch-parity path.
+  * run_available_now: drains all currently-available input of a
+    windowed aggregation with Trigger.AvailableNow into a memory sink in
+    complete mode — the batch-parity path.
 """
 
 from __future__ import annotations
@@ -53,20 +54,15 @@ def windowed_event_counts(
     )
 
 
-def run_available_now(
-    stream_df: DataFrame, name: str, checkpoint: str, output_mode: str = "append"
-) -> DataFrame:
-    """Drain all available input (Trigger.AvailableNow) into a memory sink;
-    returns the sink table. Used for batch-parity tests.
-
-    output_mode: 'append' for row streams; 'complete' for windowed
-    aggregations (append would hold back windows newer than the final
-    watermark).
+def run_available_now(stream_df: DataFrame, name: str, checkpoint: str) -> DataFrame:
+    """Drain all available input (Trigger.AvailableNow) of a streaming
+    aggregation into a memory sink; returns the sink table. Complete output
+    mode: append would hold back windows newer than the final watermark.
     """
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)
-        .outputMode(output_mode)
+        .outputMode("complete")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

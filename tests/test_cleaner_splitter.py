@@ -197,20 +197,6 @@ def test_consumer_qa_filter(spark):
     assert len(out) == 1
 
 
-def test_knn_haversine(spark):
-    from instageo_e2e_geospatial_ml_spark.operators.knn import knn_join
-
-    pts = pd.DataFrame({"pid": [1, 2, 3], "x": [0.0, 1.0, 10.0], "y": [0.0, 0.0, 0.0]})
-    qs = pd.DataFrame({"qid": [0], "qx": [0.1], "qy": [0.0]})
-    out = knn_join(
-        spark.createDataFrame(qs), spark.createDataFrame(pts),
-        k_neighbors=2, radius_deg=300.0, res=5, metric="haversine",
-    ).toPandas()
-    assert out.sort_values("rank")["pid"].tolist() == [1, 2]
-    # haversine distances in km: 0.1° ≈ 11.1 km at the equator
-    assert abs(out[out["pid"] == 1]["dist"].iloc[0] - 11.12) < 0.5
-
-
 def test_limit_labels_to_observations_r14(spark):
     # R14 (reference data_cleaner.py:203-268): undo the stamped label
     # windows — keep labels only at the exact observation pixels. Since the

@@ -1,6 +1,7 @@
 """Codec round-trip, PSNR, phash determinism, grid index, and tile-bounds tests."""
 
 import numpy as np
+import pytest
 
 from instageo_e2e_geospatial_ml_spark import codecs, grid, synth
 from instageo_e2e_geospatial_ml_spark.mgrs import mgrs_precision0, mgrs_tile_bounds
@@ -76,6 +77,59 @@ def test_k_ring_counts():
     assert len(grid.k_ring(c, 1)) == 9
     assert len(grid.k_ring(c, 2)) == 25
     assert c in set(grid.k_ring(c, 1).tolist())
+
+
+def test_cell_id_paths_agree_at_grid_edges(spark):
+    """cell_of (Spark column), grid.cell_encode (numpy) and sql_cell_expr
+    (run through spark.sql) give bit-identical ids on the clamped edges
+    lon ±180 / lat ±90; knn._ring_cells equals grid.k_ring at the four
+    grid corners."""
+    from pyspark.sql import functions as F
+
+    from instageo_e2e_geospatial_ml_spark.functions.geo import cell_of
+    from instageo_e2e_geospatial_ml_spark.operators.knn import _ring_cells
+
+    lon = np.array([-180.0, 180.0, -180.0, 180.0, 0.0, -180.0, 180.0])
+    lat = np.array([-90.0, -90.0, 90.0, 90.0, 0.0, 0.0, 45.0])
+    df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "i int, lon double, lat double",
+    )
+    df.createOrReplaceTempView("cell_edges")
+    for res in (0, 7, 15):
+        want = grid.cell_encode(lon, lat, res).tolist()
+        col = [r["c"] for r in df.orderBy("i").select(cell_of("lon", "lat", res).alias("c")).collect()]
+        sql = [
+            r["c"]
+            for r in spark.sql(
+                f"SELECT {grid.sql_cell_expr('lon', 'lat', res)} AS c FROM cell_edges ORDER BY i"
+            ).collect()
+        ]
+        assert col == want and sql == want, res
+        corners = grid.cell_encode(lon[:4], lat[:4], res).tolist()
+        rings = df.filter(F.col("i") < 4).orderBy("i").select(
+            _ring_cells(cell_of("lon", "lat", res), 1, res).alias("r")
+        ).collect()
+        for c, r in zip(corners, rings):
+            assert sorted(r["r"]) == sorted(grid.k_ring(c, 1).tolist()), (res, c)
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="ROADMAP carried item: make_tiles returns ids whose footprint "
+    "centre maps to another tile (e.g. 31PCB -> 31QCB); the frozen bench "
+    "generates its data with it",
+)
+def test_make_tiles_footprint_centres_map_back():
+    bad = []
+    for t in synth.make_tiles(90):
+        lon_b, lat_b = mgrs_tile_bounds(t)
+        cx = (lon_b.min() + lon_b.max()) / 2
+        cy = (lat_b.min() + lat_b.max()) / 2
+        got = mgrs_precision0(np.array([cy]), np.array([cx]))[0]
+        if got != t:
+            bad.append((t, got))
+    assert bad == []
 
 
 def test_covering_cells_contains_corners():

@@ -132,7 +132,7 @@ def test_image_pipeline_over_real_jpeg_payloads(spark):
         v = (pooled - pooled.mean()) / pooled.std()
         rows.append({"vec_id": i, "embedding": v.astype(np.float32).tolist()})
     e = spark.createDataFrame(pd.DataFrame(rows))
-    pairs = embedding_neardup_pairs(e, threshold=0.98, exact=True).toPandas()
+    pairs = embedding_neardup_pairs(e, threshold=0.98).toPandas()
     got = set(zip(pairs["vec_a"], pairs["vec_b"]))
     assert (0, 1) in got  # the near-dup pair survives JPEG compression
 

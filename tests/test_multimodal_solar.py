@@ -19,17 +19,35 @@ def images_df(spark):
     return spark.createDataFrame(synth.gen_images_pdf(cat, w=64, h=64, fmt="png"))
 
 
-def test_embedding_neardup_exact_vs_lsh(spark):
+def test_embedding_neardup_matches_numpy_cosine(spark):
+    """Every pair (a < b) whose x100-quantized vectors have cosine >= 0.3
+    (float cosine, pairs within 1e-9 of the threshold skipped), with the
+    exact integer dot product."""
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = embedding_neardup_pairs(e, threshold=0.3, exact=True).toPandas()
-    assert len(exact) > 0
-    assert (exact["vec_a"] < exact["vec_b"]).all()
-    # default (LSH) variant returns a subset (candidate pruning loses
-    # recall, never adds)
-    lsh = embedding_neardup_pairs(e, threshold=0.3).toPandas()
-    exact_pairs = set(zip(exact["vec_a"], exact["vec_b"]))
-    lsh_pairs = set(zip(lsh["vec_a"], lsh["vec_b"]))
-    assert lsh_pairs <= exact_pairs
+    got = embedding_neardup_pairs(e, threshold=0.3).toPandas()
+    assert len(got) > 0
+    pdf = e.select("vec_id", "embedding").toPandas()
+    ids = pdf["vec_id"].to_numpy(np.int64)
+    m = np.stack(pdf["embedding"].map(lambda v: np.asarray(v, dtype=np.float64)))
+    q = (np.sign(m) * np.floor(np.abs(m) * 100.0 + 0.5)).astype(np.int64)
+    dots = q @ q.T
+    norms = np.sqrt(np.diag(dots).astype(np.float64))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = dots / np.outer(norms, norms)
+    i, j = np.triu_indices(len(ids), 1)
+    c = cos[i, j]
+    sure = np.isfinite(c) & (np.abs(c - 0.3) >= 1e-9)
+    keep = sure & (c >= 0.3)
+    lo, hi = np.minimum(ids[i], ids[j]), np.maximum(ids[i], ids[j])
+    want = dict(zip(zip(lo[keep], hi[keep]), dots[i, j][keep]))
+    borderline = set(zip(lo[~sure], hi[~sure]))
+    got_pairs = {
+        (a, b): d
+        for a, b, d in zip(got["vec_a"], got["vec_b"], got["dot"])
+        if (a, b) not in borderline
+    }
+    assert len(want) > 0
+    assert got_pairs == want
 
 
 def test_sunrise_sunset_equator_equinox():
@@ -77,7 +95,7 @@ def test_ngram_jaccard_pairs(spark):
 def test_embedding_exact_guard_raises(spark):
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     with pytest.raises(ValueError, match="capped"):
-        embedding_neardup_pairs(e, threshold=0.3, exact=True, max_exact_rows=3)
+        embedding_neardup_pairs(e, threshold=0.3, max_exact_rows=3)
 
 
 def test_brute_force_topk_query_cap(spark):

@@ -223,10 +223,27 @@ def test_split_dataset_fractions(spark):
     assert (out.groupby("mgrs_tile_id")["split"].nunique() == 1).all()
 
 
+def _numpy_pip_pairs(obs_pdf, cat_pdf):
+    """(obs_id, granule_id) for every pair whose point the numpy ray cast
+    puts inside the footprint ring: the reference the PIP tests compare
+    pip_join against."""
+    px = obs_pdf["x"].to_numpy(np.float64)
+    py = obs_pdf["y"].to_numpy(np.float64)
+    ids = obs_pdf["obs_id"].to_numpy()
+    pairs = set()
+    for g in cat_pdf.itertuples():
+        inside = point_in_polygon(
+            px, py, np.asarray(g.fp_xs, np.float64), np.asarray(g.fp_ys, np.float64)
+        )
+        pairs |= {(int(o), g.granule_id) for o in ids[inside]}
+    return pairs
+
+
 def test_convex_sql_matches_raycast(spark):
-    # the JVM-side convex sign test must agree with the general ray-cast
-    # UDF on convex quads (the only footprint shape in this domain) —
-    # including closed rings ([v1..v4,v1]) and points outside the hull
+    # the JVM-side convex sign test (what pip_join runs on an all-convex
+    # catalog) must agree with the numpy ray cast on convex quads (the
+    # only footprint shape in this domain) — including closed rings
+    # ([v1..v4,v1]) and points outside the hull
     rng = np.random.default_rng(7)
     polys = []
     for g in range(40):
@@ -257,15 +274,10 @@ def test_convex_sql_matches_raycast(spark):
     catalog = spark.createDataFrame(cat_pdf.drop(columns=["_cx", "_cy", "_r"]))
     obs = spark.createDataFrame(pd.DataFrame(pts))
     sql_pairs = {
-        (r["obs_id"], r["granule_id"])
-        for r in pip_join(obs, catalog, exact="convex_sql").collect()
-    }
-    ray_pairs = {
-        (r["obs_id"], r["granule_id"])
-        for r in pip_join(obs, catalog, exact="raycast").collect()
+        (r["obs_id"], r["granule_id"]) for r in pip_join(obs, catalog).collect()
     }
     assert len(sql_pairs) > 50  # non-trivial hit set
-    assert sql_pairs == ray_pairs
+    assert sql_pairs == _numpy_pip_pairs(pd.DataFrame(pts), cat_pdf)
 
 
 def test_auto_pip_plan_is_jvm_only_for_convex_quads(spark):
@@ -295,7 +307,7 @@ def test_auto_pip_plan_is_jvm_only_for_convex_quads(spark):
 
 def test_auto_pip_mixed_catalog_matches_raycast(spark):
     # notched (concave) synth footprints must route through the ray-cast
-    # refine under 'auto' and agree with forcing raycast everywhere
+    # refine and agree with the numpy ray cast over every pair
     cat = synth.gen_granule_catalog_pdf(days=10, every=5, notch=True)
     catalog = spark.createDataFrame(cat)
     rng = np.random.default_rng(3)
@@ -308,14 +320,12 @@ def test_auto_pip_mixed_catalog_matches_raycast(spark):
         }
     )
     obs = spark.createDataFrame(pts)
+    plan = pip_join(obs, catalog)._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" in plan  # the concave footprints' refine
     auto_pairs = {
         (r["obs_id"], r["granule_id"]) for r in pip_join(obs, catalog).collect()
     }
-    ray_pairs = {
-        (r["obs_id"], r["granule_id"])
-        for r in pip_join(obs, catalog, exact="raycast").collect()
-    }
-    assert auto_pairs == ray_pairs
+    assert auto_pairs == _numpy_pip_pairs(pts, cat)
     assert len(auto_pairs) > 0
 
 
@@ -491,17 +501,6 @@ def test_interval_join_matches_theta_join(spark):
         )
     )
     assert got_m == want_m
-    # the pre-round-4 data-filter behavior is an explicit opt-in
-    assert (
-        interval_join(
-            ev,
-            huge,
-            bucket_minutes=45,
-            max_buckets_per_interval=100,
-            oversize_intervals="drop",
-        ).count()
-        == 0
-    )
 
 
 def test_salted_join_row_identical_and_spread(spark):
@@ -520,7 +519,7 @@ def test_salted_join_row_identical_and_spread(spark):
     dim = spark.createDataFrame(
         pd.DataFrame({"cell": list(range(100)), "tile": [f"t{i}" for i in range(100)]})
     )
-    got = salted_join(fact, dim, "cell", n_salt=8).toPandas()
+    got = salted_join(fact, dim, "cell", salt_by="row_id", n_salt=8).toPandas()
     want = fact.join(dim, "cell").toPandas()
     key = ["row_id"]
     got = got.sort_values(key).reset_index(drop=True)[sorted(got.columns)]
@@ -529,9 +528,7 @@ def test_salted_join_row_identical_and_spread(spark):
 
     # the hot key's rows really spread over multiple salt values
     from instageo_e2e_geospatial_ml_spark.operators.skew import F as _F  # noqa: F401
-    salted = fact.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(8))
-    )
+    salted = fact.withColumn("_salt", F.pmod(F.xxhash64("row_id"), F.lit(8)))
     spread = salted.filter(F.col("cell") == 7).select("_salt").distinct().count()
     assert spread == 8
 
@@ -570,24 +567,6 @@ def test_write_clustered_files_prune_by_range(spark, tmp_path):
         .count()
     )
     assert narrow <= 2
-
-
-def test_salted_join_rejects_dim_replicating_outer(spark):
-    import pandas as pd
-
-    from instageo_e2e_geospatial_ml_spark.operators.skew import salted_join
-
-    fact = spark.range(10).select(F.col("id").alias("cell"))
-    dim = spark.createDataFrame(pd.DataFrame({"cell": [1, 2], "tile": ["a", "b"]}))
-    with pytest.raises(ValueError, match="fact-preserving"):
-        salted_join(fact, dim, "cell", how="right")
-    with pytest.raises(ValueError, match="fact-preserving"):
-        salted_join(fact, dim, "cell", how="full_outer")
-    # left_anti is fact-preserving: dim replication covers every salt
-    got = sorted(
-        r["cell"] for r in salted_join(fact, dim, "cell", how="left_anti").collect()
-    )
-    assert got == [0, 3, 4, 5, 6, 7, 8, 9]
 
 
 def test_hamming_neardup_pairs_hash_column(spark):
@@ -853,40 +832,34 @@ def test_semdedup_clusters_and_drops(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_hashed_quality_score_trained_weights(spark):
-    """Quality classifier: default md5 weights are deterministic; a
-    supplied trained weight table overrides them (broadcast dim join)
-    and missing buckets weigh zero."""
-    from pyspark.sql import functions as F
+def test_hashed_quality_score_md5_weights(spark):
+    """Quality classifier: each lowercased token hashes to bucket
+    md5('qlr:' + tok)[:8] % 1024 with weight md5('w:qlr:' + bucket)[:8]
+    % 2001 - 1000; the score is the exact weight sum and keep is
+    score + bias >= 0. Checked against hashlib, twice (deterministic)."""
+    import hashlib
 
     from instageo_e2e_geospatial_ml_spark.functions.text import hashed_quality_score
 
     docs = spark.createDataFrame(
-        [(1, "good good prose"), (2, "spam spam spam spam")],
+        [(1, "good good prose"), (2, "Spam spam SPAM spam"), (3, "  mixed   Case text ")],
         "doc_id long, text string",
     )
-    base = {r["doc_id"]: r for r in hashed_quality_score(docs).collect()}
-    again = {r["doc_id"]: r for r in hashed_quality_score(docs).collect()}
-    assert {d: r["score"] for d, r in base.items()} == {
-        d: r["score"] for d, r in again.items()
-    }
-    # trained table: weight every bucket of "spam"'s hash negative, rest absent
-    bucket = (
-        docs.select(F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok"))
-        .filter(F.col("tok") == "spam")
-        .withColumn(
-            "bucket",
-            F.conv(F.substring(F.md5(F.concat_ws(":", F.lit("qlr"), "tok")), 1, 8), 16, 10)
-            .cast("long") % 1024,
-        )
-        .select("bucket").distinct()
-        .withColumn("w", F.lit(-5))
-    )
-    out = {r["doc_id"]: r for r in
-           hashed_quality_score(docs, weights=bucket).collect()}
-    assert out[2]["score"] == -20 and not out[2]["keep"]
-    assert out[1]["score"] == 0 and out[1]["keep"]   # buckets absent -> 0
 
+    def h8(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+
+    def score(text):
+        buckets = [h8(f"qlr:{t}") % 1024 for t in text.strip().lower().split()]
+        return sum(h8(f"w:qlr:{b}") % 2001 - 1000 for b in buckets)
+
+    want = {d: score(t) for d, t in docs.collect()}
+    for bias in (0, 5000):
+        got = {
+            r["doc_id"]: (r["score"], r["keep"])
+            for r in hashed_quality_score(docs, bias=bias).collect()
+        }
+        assert got == {d: (s, s + bias >= 0) for d, s in want.items()}
 
 def test_heavy_hitter_tokens_share_gate(spark):
     """Heavy hitters: integer cross-multiplied share gate (cnt*k >= total),
@@ -2510,33 +2483,35 @@ def test_sliding_window_distinct_exact(spark):
 
 
 def test_compaction_plan_nfd_bins(spark):
-    """Next-fit-decreasing: sizes [90, 60, 40, 30, 10] at target 100
-    bin as run-prefix cuts {90}, {60, 40}, {30, 10}; a 500-byte file
-    (>= small threshold 50... adjusted: threshold 100) keeps bin -1;
-    bin stats are exact; partitions independent."""
+    """Next-fit-decreasing: sizes [45, 40, 30, 20, 10] at target 100
+    bin as run-prefix cuts {45, 40, 30}, {20, 10}; files at or above
+    the small threshold target/2 = 50 keep bin -1; bin stats are exact;
+    partitions independent."""
     from instageo_e2e_geospatial_ml_spark.operators.pruning import (
         compaction_plan,
     )
 
     rows = [
-        ("p1", "a", 90), ("p1", "b", 60), ("p1", "c", 40),
-        ("p1", "d", 30), ("p1", "e", 10), ("p1", "big", 500),
-        ("p2", "z", 5),
+        ("p1", "a", 45), ("p1", "b", 40), ("p1", "c", 30),
+        ("p1", "d", 20), ("p1", "e", 10), ("p1", "big", 500),
+        ("p1", "half", 50), ("p2", "z", 5),
     ]
     df = spark.createDataFrame(
         rows, "partition_id string, file_id string, size_bytes long"
     )
-    out = compaction_plan(df, target_bytes=100, small_file_bytes=100)
+    out = compaction_plan(df, target_bytes=100)
     got = {(r.partition_id, r.file_id): r for r in out.collect()}
-    # NFD: run-prefix before each file: 0, 90, 150, 190, 220
+    # NFD: run-prefix before each file: 0, 45, 85, 115, 135
     assert got[("p1", "a")].bin_id == 0
-    assert got[("p1", "b")].bin_id == 0   # prefix 90 < 100
-    assert got[("p1", "c")].bin_id == 1   # prefix 150
-    assert got[("p1", "d")].bin_id == 1   # prefix 190
-    assert got[("p1", "e")].bin_id == 2   # prefix 220
+    assert got[("p1", "b")].bin_id == 0   # prefix 45 < 100
+    assert got[("p1", "c")].bin_id == 0   # prefix 85
+    assert got[("p1", "d")].bin_id == 1   # prefix 115
+    assert got[("p1", "e")].bin_id == 1   # prefix 135
     assert got[("p1", "big")].bin_id == -1
+    assert got[("p1", "half")].bin_id == -1   # 50 >= target/2
     b0 = got[("p1", "a")]
-    assert (b0.bin_bytes, b0.n_files_in_bin) == (150, 2)
+    assert (b0.bin_bytes, b0.n_files_in_bin) == (115, 3)
+    assert (got[("p1", "d")].bin_bytes, got[("p1", "d")].n_files_in_bin) == (30, 2)
     assert got[("p1", "big")].bin_bytes == 0
     assert got[("p2", "z")].bin_id == 0 and got[("p2", "z")].bin_bytes == 5
 

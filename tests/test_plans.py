@@ -123,22 +123,6 @@ def test_q38_rarity_no_forced_vocab_broadcast(spark):
     assert "EvalPython" not in plan
 
 
-def test_q38_rarity_broadcast_opt_in(spark):
-    # broadcast_vocab=True plants the hint for known-bounded vocabularies:
-    # it must survive even with auto-broadcast disabled.
-    from instageo_e2e_geospatial_ml_spark.functions.text import token_rarity_scores
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        docs = spark.read.parquet(f"{SF}/documents.parquet")
-        df = token_rarity_scores(docs, broadcast_vocab=True)
-        static = df._jdf.queryExecution().sparkPlan().toString()
-        assert "BroadcastHashJoin" in static
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_q15_minhash_no_explode_single_band_materialization(spark):
     df = dq.QUERIES["q15_minhash_lsh"](spark, SF)
     plan = _plan(df)
@@ -200,46 +184,6 @@ def test_q50_interval_join_equi_not_nested_loop(spark):
     )
     assert plan.count("NestedLoop") <= 1
     assert "EvalPython" not in plan
-
-
-def test_ann_broadcast_queries_opt_out(spark):
-    """With broadcast_queries=False the candidate join must shuffle on the
-    bucket/list key — no BroadcastExchange feeding it from the query side
-    (the corpus-scale kNN-graph contract: queries == corpus would OOM the
-    executors under a forced broadcast). Values must be identical to the
-    broadcast path."""
-    from instageo_e2e_geospatial_ml_spark.operators.similarity import (
-        ivf_topk,
-        label_centroids,
-        lsh_topk,
-    )
-
-    e = spark.read.parquet(SF + "/embeddings.parquet")
-    q = e.filter(F.col("vec_id") % 10 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    p = e.select(F.col("vec_id").alias("pid"), F.col("embedding").alias("pvec"))
-    cen = label_centroids(
-        e.withColumn("label", F.col("vec_id") % 4), assemble=True
-    )
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _plan(lsh_topk(q, p, k=3, n_bits=4, broadcast_queries=False))
-        assert "BroadcastHashJoin" not in plan and "BroadcastNestedLoop" not in plan
-        # ivf: the k-row centroid table is STILL broadcast (two explicit
-        # hints — corpus assign + query rank), but the probe join between
-        # query and corpus lists must shuffle on the list id
-        plan = _plan(ivf_topk(q, p, cen, k=3, nprobe=2, broadcast_queries=False))
-        assert "SortMergeJoin [cid#" in plan or "ShuffledHashJoin [cid#" in plan
-        assert plan.count("BroadcastExchange") <= 2
-        # value parity: the flag changes the physical plan only
-        a = sorted(map(tuple, lsh_topk(q, p, k=3, n_bits=4, broadcast_queries=False).collect()))
-        b = sorted(map(tuple, lsh_topk(q, p, k=3, n_bits=4, broadcast_queries=True).collect()))
-        assert a == b and len(a) > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_registry_gate_invariants():
@@ -447,7 +391,9 @@ def _package_defs_and_names():
     The defs are `(where, name)` for every top-level def or class in the
     package. A name counts as used where some repository .py file names it
     as a Name, an attribute access or an import alias; ast parses
-    f-string expressions, so helpers spliced into oracle_sql text count."""
+    f-string expressions, so helpers spliced into oracle_sql text count.
+    A package __init__.py does not count as a user: its re-exports only
+    re-name what a module defines."""
     import ast
     import pathlib
 
@@ -459,6 +405,8 @@ def _package_defs_and_names():
     for path in sorted(repo.rglob("*.py")):
         parts = path.relative_to(repo).parts
         if any(p.startswith(".") for p in parts):
+            continue
+        if root in path.parents and path.name == "__init__.py":
             continue
         tree = ast.parse(path.read_text())
         names = set()
@@ -499,6 +447,7 @@ def test_every_private_helper_is_referenced():
 REFERENCE_PARITY = {
     "read_observations": "S1/S2 CSV and parquet observation scan",
     "read_geotiff": "S4 multi-file GeoTIFF reader",
+    "reproject_to_4326_udf": "P1 CRS reprojection",
     "lzw_encode": "S4 TIFF LZW, the writer half of lzw_decode",
     "packbits_encode": "S4 TIFF PackBits, the writer half of packbits_decode",
     "parse_jp2_header": "S5 JP2 header parse",
@@ -518,6 +467,8 @@ REFERENCE_PARITY = {
     "register_udtfs": "§2.10 chip-grid UDTF registration",
     "psnr": "north rule: per-row PSNR >= 40 dB invariant",
     "cell_bounds": "north rule: cell index geometry",
+    "cell_encode": "north rule: numpy oracle of the cell id (cell_of, sql_cell_expr)",
+    "k_ring": "north rule: numpy oracle of the kNN ring (knn._ring_cells)",
     "covering_cells": "north rule: cell index cover",
     "write_clustered": "north rule: range-partitioned writes by cell prefix",
     "hilbert_ranges": "north rule: cell-prefix range planning",
@@ -637,12 +588,142 @@ def test_every_parameter_is_read():
     assert not stale, "allowlisted parameters that are gone or now read: " + ", ".join(stale)
 
 
+# Branching options whose one value in use outside tests/ is kept, each with
+# its reason. Only three kinds of reason qualify: a frozen caller passes the
+# value; the other value is a SURVEY-id reference behaviour; or the option
+# builds inputs for tests.
+ONE_VALUE_FORKS = {
+    "operators/asof.py:asof_pick(keep_unmatched)": "perfbench/ (frozen) passes False",
+    "operators/asof.py:asof_pick(align_partitioning)": "perfbench/ (frozen) passes True",
+    "operators/asof.py:asof_pick(order)": "J3 closest-in-time pick (s2_utils.py:508-587)",
+    "operators/chips.py:mask_segmentation_map(masking_strategy)": "R5 'any' masking strategy",
+    "jp2.py:jp2_encode(tile_offset)": "builds JP2 codestream test inputs",
+    "jp2.py:jp2_encode(subsampling)": "builds JP2 codestream test inputs",
+    "jp2.py:jp2_encode(segsym)": "builds JP2 codestream test inputs",
+    "jp2.py:jp2_encode(causal)": "builds JP2 codestream test inputs",
+    "jp2.py:jp2_encode(reset)": "builds JP2 codestream test inputs",
+    "jp2.py:jp2_encode(bypass)": "builds JP2 codestream test inputs",
+    "jp2.py:jp2_encode(termall)": "builds JP2 codestream test inputs",
+    "jp2.py:jp2_encode(eph)": "builds JP2 codestream test inputs",
+    "jp2.py:jp2_encode(sop)": "builds JP2 codestream test inputs",
+    "jp2.py:jp2_encode(quant_style)": "builds JP2 codestream test inputs",
+    "jp2.py:jp2_encode(mct)": "builds JP2 codestream test inputs",
+    "jp2.py:jp2_encode(tile)": "builds JP2 codestream test inputs",
+    "jp2.py:jp2_encode(irreversible)": "builds JP2 codestream test inputs",
+    "jp2.py:jp2_encode(precincts)": "builds JP2 codestream test inputs",
+    "synth.py:gen_granule_catalog_pdf(notch)": "builds concave-footprint test inputs",
+    "synth.py:gen_images_pdf(with_mask)": "builds mask-less image test inputs",
+    "operators/similarity.py:label_centroids(assemble)": "builds ivf_topk centroid test inputs",
+}
+
+
+def _option_calls():
+    """{function name: [ast.Call]} for every call in the package, bench.py,
+    bench_extra.py, scripts/ and the non-test perfbench/ files."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    extra = [
+        repo / "bench.py",
+        repo / "bench_extra.py",
+        *(repo / "scripts").glob("*.py"),
+        *(p for p in (repo / "perfbench").glob("*.py") if not p.name.startswith("test_")),
+    ]
+    trees = [t for _, t in _package_modules()] + [ast.parse(p.read_text()) for p in extra]
+    calls = {}
+    for tree in trees:
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls.setdefault(name, []).append(n)
+    return calls
+
+
+def test_every_branching_option_has_two_values_in_use():
+    """Dead-fork rule: a defaulted option (default True, False, None or a
+    string) that a package function reads in an `if`/`elif`/conditional
+    test must receive at least two distinct values across the calls
+    outside tests/. An option every such call sets the same way selects a
+    branch only tests run: make it a constant and delete the branch.
+    Covered: every package function some call outside tests/ names,
+    except the registry's q* queries and names defined twice. An omitted
+    argument counts as the default; a non-constant argument or `*`/`**`
+    forwarding counts as many values. ONE_VALUE_FORKS entries must still
+    be flagged."""
+    import ast
+    import re
+
+    defs = {}
+    for rel, tree in _package_modules():
+        methods = {
+            id(f)
+            for c in ast.walk(tree)
+            if isinstance(c, ast.ClassDef)
+            for f in c.body
+        }
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.setdefault(fn.name, []).append((rel, fn, id(fn) in methods))
+    calls = _option_calls()
+    flagged = []
+    for name, [(rel, fn, is_method)] in ((k, v) for k, v in defs.items() if len(v) == 1):
+        if name not in calls or re.fullmatch(r"q\d+_\w+", name):
+            continue
+        a = fn.args
+        positional = [*a.posonlyargs, *a.args][1 if is_method else 0 :]
+        defaults = dict(zip((p.arg for p in reversed(a.args)), reversed(a.defaults)))
+        defaults.update(
+            (p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+        )
+        tested = {
+            n.id
+            for t in ast.walk(fn)
+            if isinstance(t, (ast.If, ast.IfExp))
+            for n in ast.walk(t.test)
+            if isinstance(n, ast.Name)
+        }
+        for p, d in defaults.items():
+            option = isinstance(d, ast.Constant) and (
+                d.value is None or isinstance(d.value, (bool, str))
+            )
+            if p not in tested or not option:
+                continue
+            idx = next((i for i, q in enumerate(positional) if q.arg == p), None)
+            values = set()
+            for c in calls[name]:
+                kw = {k.arg: k.value for k in c.keywords}
+                starred = [isinstance(x, ast.Starred) for x in c.args]
+                if p in kw:
+                    v = kw[p]
+                elif idx is not None and idx < len(c.args) and not any(starred[: idx + 1]):
+                    v = c.args[idx]
+                elif any(starred) or None in kw:
+                    break  # forwarded: counts as many values
+                else:
+                    v = d
+                if not isinstance(v, ast.Constant):
+                    break  # computed: counts as many values
+                values.add((type(v.value), v.value))
+            else:
+                if len(values) < 2:
+                    flagged.append(f"{rel}:{name}({p})")
+    dead = [f for f in flagged if f not in ONE_VALUE_FORKS]
+    assert not dead, "options every caller sets the same way: " + ", ".join(dead)
+    stale = sorted(set(ONE_VALUE_FORKS) - set(flagged))
+    assert not stale, "allowlisted options that are gone or now take two values: " + ", ".join(stale)
+
+
 def test_registrable_domain_psl_table_wins(spark):
     """PSL-table mode (VERDICT r6 #4): broadcast longest-match beats the
     heuristic where they disagree (gov.uk, three-part k12.ak.us), agrees
     where both know the suffix, and falls back to the heuristic for
     unlisted TLDs. Fact side must not shuffle (broadcast joins only)."""
-    from instageo_e2e_geospatial_ml_spark.functions.web import registrable_domain
+    from instageo_e2e_geospatial_ml_spark.functions.web import (
+        registrable_domain,
+        registrable_domain_col,
+    )
 
     hosts = [
         ("www.dvla.gov.uk", "dvla.gov.uk", "gov.uk"),       # 2-part: table wins
@@ -652,14 +733,17 @@ def test_registrable_domain_psl_table_wins(spark):
         ("x.example.zz", "example.zz", "example.zz"),             # fallback
     ]
     df = spark.createDataFrame([(h,) for h, _, _ in hosts], "host string")
-    got = {r["host"]: r["domain"] for r in registrable_domain(df, use_psl_table=True).collect()}
-    heur = {r["host"]: r["domain"] for r in registrable_domain(df).collect()}
+    got = {r["host"]: r["domain"] for r in registrable_domain(df).collect()}
+    heur = {
+        r["host"]: r["domain"]
+        for r in df.withColumn("domain", registrable_domain_col(F.col("host"))).collect()
+    }
     for h, want_psl, want_heur in hosts:
         assert got[h] == want_psl, (h, got[h])
         assert heur[h] == want_heur, (h, heur[h])
     # gov.uk: the disagreement the table must win
     assert heur["www.dvla.gov.uk"] == "gov.uk" and got["www.dvla.gov.uk"] == "dvla.gov.uk"
-    plan = registrable_domain(df, use_psl_table=True)._jdf.queryExecution().executedPlan().toString()
+    plan = registrable_domain(df)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan and "Exchange hashpartitioning" not in plan
 

@@ -29,9 +29,7 @@ def test_windowed_counts_batch_parity(spark, events_path, tmp_path):
     path, schema, ev_batch = events_path
     stream = read_event_stream(spark, path, schema)
     agg = windowed_event_counts(stream, window="6 hours", watermark="1 hour")
-    got = run_available_now(
-        agg, "win_counts", str(tmp_path / "ck1"), output_mode="complete"
-    ).toPandas()
+    got = run_available_now(agg, "win_counts", str(tmp_path / "ck1")).toPandas()
     # batch twin: same plan on the static table
     want = (
         ev_batch.groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
