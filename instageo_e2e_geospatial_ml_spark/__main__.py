@@ -125,7 +125,7 @@ def main(argv: list[str] | None = None) -> int:
         p = vecs.select(F.col("vec_id").alias("pid"), F.col("embedding").alias("pvec"))
         if args.strategy in ("ivf", "kmeans"):
             cen = centroids_as_vectors(train_centroids(vecs, k=8, n_iters=3))
-            out = ivf_topk(q, p, cen, k=args.k, nprobe=2)
+            out = ivf_topk(q, p, cen, k=args.k)
         elif args.strategy == "lsh":
             out = lsh_topk(q, p, k=args.k, multi_probe=True)
         else:

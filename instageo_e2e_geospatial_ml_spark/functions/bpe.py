@@ -34,15 +34,11 @@ from pyspark.sql import functions as F
 END = "</w>"
 
 
-def corpus_dictionary(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_dictionary(docs: DataFrame) -> DataFrame:
     """documents -> (word, n) dictionary: lowercase, alpha-run words,
     symbol array = characters + end-of-word marker."""
     words = (
-        docs.select(
-            F.explode(
-                F.split(F.lower(F.col(text_col)), "[^a-z]+")
-            ).alias("word")
-        )
+        docs.select(F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("word"))
         .filter(F.length("word") > 0)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -69,17 +65,13 @@ def _merge_expr(left: str, right: str) -> F.Column:
     )
 
 
-def train_bpe(
-    docs: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-) -> DataFrame:
+def train_bpe(docs: DataFrame, n_merges: int) -> DataFrame:
     """Learn `n_merges` BPE merges from the corpus; returns the ranked
     merge table (rank, left, right, merged, pair_count) as a DataFrame.
     Rounds whose best pair count is 1 still merge (paper behavior); the
     loop stops early only when no adjacent pair remains."""
     spark: SparkSession = docs.sparkSession
-    dic = corpus_dictionary(docs, text_col).cache()
+    dic = corpus_dictionary(docs).cache()
     merges = []
     for rank in range(1, n_merges + 1):
         pairs = (

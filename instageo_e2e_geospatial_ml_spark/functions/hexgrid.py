@@ -128,7 +128,7 @@ FROM agg
 HEX_NEIGHBOR_OFFSETS = ((1, 0), (1, -1), (0, -1), (-1, 0), (-1, 1), (0, 1))
 
 
-def hex_focal_sum(cells: DataFrame, value_col: str = "n_points") -> DataFrame:
+def hex_focal_sum(cells: DataFrame) -> DataFrame:
     """Focal (neighborhood) smoothing on a hex grid: for every occupied
     cell, the sum of its value and its 6 edge-adjacent neighbors'
     values, plus the occupied-neighbor count — the hexagonal focal
@@ -149,7 +149,7 @@ def hex_focal_sum(cells: DataFrame, value_col: str = "n_points") -> DataFrame:
         ]
     )
     scat = cells.select(
-        F.col("hq"), F.col("hr"), F.col(value_col).alias("v"),
+        F.col("hq"), F.col("hr"), F.col("n_points").alias("v"),
         F.explode(offs).alias("o"),
     ).select(
         (F.col("hq") + F.col("o.dq")).alias("tq"),
@@ -167,20 +167,20 @@ def hex_focal_sum(cells: DataFrame, value_col: str = "n_points") -> DataFrame:
             (cells["hq"] == agg["tq"]) & (cells["hr"] == agg["tr"]),
         )
         .select(
-            "hq", "hr", F.col(value_col),
+            "hq", "hr", F.col("n_points"),
             "focal_sum", "n_occupied_neighbors",
         )
     )
 
 
-def hex_focal_sum_sql(cells_sql: str, value_col: str = "n_points") -> str:
-    """DuckDB twin of hex_focal_sum over (hq, hr, value_col)."""
+def hex_focal_sum_sql(cells_sql: str) -> str:
+    """DuckDB twin of hex_focal_sum over (hq, hr, n_points)."""
     offs = ", ".join(f"({dq}, {dr})" for dq, dr in ((0, 0),) + HEX_NEIGHBOR_OFFSETS)
     return f"""
 WITH cells AS MATERIALIZED ({cells_sql}),
 offs AS (SELECT * FROM (VALUES {offs}) AS o(dq, dr)),
 scat AS (
-  SELECT c.hq + o.dq AS tq, c.hr + o.dr AS tr, c.{value_col} AS v,
+  SELECT c.hq + o.dq AS tq, c.hr + o.dr AS tr, c.n_points AS v,
          CASE WHEN o.dq = 0 AND o.dr = 0 THEN 1 ELSE 0 END AS is_self
   FROM cells c CROSS JOIN offs o
 ),
@@ -189,6 +189,6 @@ agg AS (
          CAST(count(*) - sum(is_self) AS BIGINT) AS n_occupied_neighbors
   FROM scat GROUP BY tq, tr
 )
-SELECT c.hq, c.hr, c.{value_col}, a.focal_sum, a.n_occupied_neighbors
+SELECT c.hq, c.hr, c.n_points, a.focal_sum, a.n_occupied_neighbors
 FROM cells c JOIN agg a ON c.hq = a.tq AND c.hr = a.tr
 """

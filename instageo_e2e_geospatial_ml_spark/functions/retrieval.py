@@ -30,14 +30,7 @@ from pyspark.sql import functions as F
 from .text import spread_input, tokens
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, query_terms: list[str]) -> DataFrame:
     """BM25 score of every document against `query_terms` →
     (id, dl, tf_<i>..., bm25).
 
@@ -48,8 +41,8 @@ def bm25_scores(
     float arithmetic order-independent (each contribution is one literal
     expression, summed in term order).
     """
-    tok = spread_input(docs).select(id_col, F.explode(tokens(text_col)).alias("tok"))
-    per = tok.groupBy(id_col).agg(
+    tok = spread_input(docs).select("doc_id", F.explode(tokens("text")).alias("tok"))
+    per = tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("dl"),
         *[
             F.sum(F.when(F.col("tok") == t, 1).otherwise(0)).alias(f"tf_{i}")
@@ -72,26 +65,22 @@ def bm25_scores(
         idf = F.log(
             F.lit(1.0) + (F.col("n_docs") - df + F.lit(0.5)) / (df + F.lit(0.5))
         )
-        denom = tf + F.lit(k1) * (
+        denom = tf + F.lit(1.2) * (
             F.lit(1.0)
-            - F.lit(b)
-            + F.lit(b) * F.col("dl") / (F.col("sum_dl") / F.col("n_docs"))
+            - F.lit(0.75)
+            + F.lit(0.75) * F.col("dl") / (F.col("sum_dl") / F.col("n_docs"))
         )
-        contrib = idf * (tf * F.lit(k1 + 1.0)) / denom
+        contrib = idf * (tf * F.lit(2.2)) / denom
         score = contrib if score is None else score + contrib
     return j.select(
-        id_col,
+        "doc_id",
         "dl",
         *[f"tf_{i}" for i in range(len(query_terms))],
         F.round(score, 6).alias("bm25"),
     )
 
 
-def bigram_surprisal_scores(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bigram_surprisal_scores(docs: DataFrame) -> DataFrame:
     """Count-based bigram surprisal per document →
     (id, n_bigrams, surprisal_sum, surprisal_mean).
 
@@ -108,17 +97,17 @@ def bigram_surprisal_scores(
     then two token-keyed joins back (AQE sizes them) and one doc-keyed
     aggregation.
     """
-    t = tokens(text_col)
+    t = tokens("text")
     big = (
         spread_input(docs).withColumn("_toks", t)
         .filter(F.size("_toks") >= 2)
         .select(
-            id_col,
+            "doc_id",
             F.explode(F.sequence(F.lit(1), F.size("_toks") - 1)).alias("_i"),
             "_toks",
         )
         .select(
-            id_col,
+            "doc_id",
             F.element_at("_toks", F.col("_i")).alias("w1"),
             F.element_at("_toks", F.col("_i") + 1).alias("w2"),
         )
@@ -145,19 +134,14 @@ def bigram_surprisal_scores(
             ).cast("long"),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.sum("bucket").alias("surprisal_sum"),
         F.round(F.sum("bucket") / F.count(F.lit(1)), 6).alias("surprisal_mean"),
     )
 
 
-def top_terms(
-    docs: DataFrame,
-    group_col: str = "source",
-    n: int = 10,
-    text_col: str = "text",
-) -> DataFrame:
+def top_terms(docs: DataFrame, n: int = 10) -> DataFrame:
     """Top-n tokens by frequency per group → (group, tok, cnt, rank).
 
     groupBy + rank window with ties broken by token — Spark turns the
@@ -165,24 +149,19 @@ def top_terms(
     so only n rows per group per partition reach the final exchange.
     """
     cnt = (
-        spread_input(docs).select(group_col, F.explode(tokens(text_col)).alias("tok"))
-        .groupBy(group_col, "tok")
+        spread_input(docs).select("source", F.explode(tokens("text")).alias("tok"))
+        .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    w = Window.partitionBy(group_col).orderBy(F.col("cnt").desc(), F.col("tok").asc())
+    w = Window.partitionBy("source").orderBy(F.col("cnt").desc(), F.col("tok").asc())
     return (
         cnt.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= n)
-        .select(group_col, "tok", "cnt", F.col("rank").cast("long").alias("rank"))
+        .select("source", "tok", "cnt", F.col("rank").cast("long").alias("rank"))
     )
 
 
-def inverted_index(
-    docs,
-    min_df: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def inverted_index(docs):
     """Build the retrieval inverted index: per term, document frequency,
     total term frequency, and an order-canonical digest of the posting
     list ("doc:tf" pairs sorted by doc id) → (term, df, total_tf,
@@ -192,7 +171,7 @@ def inverted_index(
 
     Plan: one explode + two hash aggregations keyed on the term — the
     exact-dedup shuffle shape; df filtering prunes the hapax tail
-    (min_df) BEFORE the posting-list concat so the giant singleton
+    (min_df = 2) BEFORE the posting-list concat so the giant singleton
     vocabulary never reaches the string build. Head terms (stopword-like
     df ~ corpus size) concentrate one group per term — at 100 TB the
     posting digest for those would switch to a chunked tree-merge;
@@ -200,10 +179,10 @@ def inverted_index(
     from pyspark.sql import functions as F
 
     toks = docs.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("term"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("term"),
     )
-    tf = toks.groupBy("term", id_col).agg(F.count(F.lit(1)).alias("tf"))
+    tf = toks.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
     return (
         tf.groupBy("term")
         .agg(
@@ -212,16 +191,14 @@ def inverted_index(
             F.md5(
                 F.array_join(
                     F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct(id_col, "tf"))
-                        ),
-                        lambda s: F.concat_ws(":", s[id_col], s["tf"]),
+                        F.array_sort(F.collect_list(F.struct("doc_id", "tf"))),
+                        lambda s: F.concat_ws(":", s["doc_id"], s["tf"]),
                     ),
                     " ",
                 )
             ).alias("postings_md5"),
         )
-        .filter(F.col("df") >= min_df)
+        .filter(F.col("df") >= 2)
         .select(
             "term",
             F.col("df").cast("long").alias("df"),
@@ -231,13 +208,7 @@ def inverted_index(
     )
 
 
-def skipgram_counts(
-    docs,
-    window: int = 2,
-    min_count: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def skipgram_counts(docs, window: int = 2, min_count: int = 2):
     """Skip-gram (center, context) co-occurrence counts within ±window
     positions — the word2vec / embedding-training corpus statistic.
 
@@ -250,27 +221,25 @@ def skipgram_counts(
     from pyspark.sql import functions as F
 
     toks = docs.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias(
-            "pos", "tok"
-        ),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("pos", "tok"),
     )
     offsets = F.array(
         *[F.lit(k) for k in range(-window, window + 1) if k != 0]
     )
     left = toks.select(
-        id_col,
+        "doc_id",
         F.col("tok").alias("center"),
         "pos",
         F.explode(offsets).alias("off"),
     ).select(
-        id_col,
+        "doc_id",
         "center",
         (F.col("pos") + F.col("off")).alias("pos2"),
     )
     pairs = left.join(
-        toks.select(id_col, F.col("pos").alias("pos2"), F.col("tok").alias("context")),
-        [id_col, "pos2"],
+        toks.select("doc_id", F.col("pos").alias("pos2"), F.col("tok").alias("context")),
+        ["doc_id", "pos2"],
     )
     return (
         pairs.groupBy("center", "context")
@@ -279,22 +248,14 @@ def skipgram_counts(
     )
 
 
-def rrf_fuse(
-    df,
-    group_col: str,
-    id_col: str,
-    score_cols: list[str],
-    k: int = 60,
-    scale: int = 1_000_000,
-    top_n: int = 5,
-):
+def rrf_fuse(df, group_col: str, id_col: str, score_cols: list[str], top_n: int = 5):
     """Reciprocal-rank fusion (Cormack et al. SIGIR'09) — the standard
     way to combine heterogeneous retrieval signals (BM25 + vector
     similarity, or any scored lists) without calibrating their score
-    scales: each signal contributes 1/(k + rank), only the ORDER of
+    scales: each signal contributes 1/(60 + rank), only the ORDER of
     each list matters. Kept exact: the contribution is the integer
-    scale div (k + rank), so fused scores and the final ordering are
-    engine-identical (float 1/(k+r) sums would be association-
+    1e6 div (60 + rank), so fused scores and the final ordering are
+    engine-identical (float 1/(60+r) sums would be association-
     sensitive). Ranks are dense per (group, signal), descending score
     with ascending id tie-break — fully deterministic.
 
@@ -317,7 +278,7 @@ def rrf_fuse(
         )
         rcol = f"rank_{sc}"
         out = out.withColumn(rcol, F.row_number().over(w))
-        term = F.expr(f"{scale} div ({k} + rank_{sc})")
+        term = F.expr(f"1000000 div (60 + rank_{sc})")
         fused = term if fused is None else fused + term
     out = out.withColumn("rrf_score", fused.cast("long"))
     cols = [group_col, id_col] + [f"rank_{sc}" for sc in score_cols] + [
@@ -338,9 +299,6 @@ def rrf_fuse_sql(
     group_col: str,
     id_col: str,
     score_cols: list[str],
-    k: int = 60,
-    scale: int = 1_000_000,
-    top_n: int = 5,
 ) -> str:
     """DuckDB twin of rrf_fuse (identical ranks, integer-div terms)."""
     g, i = group_col, id_col
@@ -349,7 +307,7 @@ def rrf_fuse_sql(
         f" AS rank_{sc}"
         for sc in score_cols
     )
-    fused = " + ".join(f"({scale} // ({k} + rank_{sc}))" for sc in score_cols)
+    fused = " + ".join(f"(1000000 // (60 + rank_{sc}))" for sc in score_cols)
     rank_cols = ", ".join(f"rank_{sc}" for sc in score_cols)
     return f"""
 WITH r AS (
@@ -364,25 +322,18 @@ t AS (
   FROM f
 )
 SELECT {g}, {i}, {rank_cols}, rrf_score, rrf_rank FROM t
-WHERE rrf_rank <= {top_n}
+WHERE rrf_rank <= 5
 """
 
 
-def trending_terms(
-    docs,
-    period_col: str,
-    group_col: str = "source",
-    text_col: str = "text",
-    top_n: int = 5,
-    min_count: int = 3,
-):
+def trending_terms(docs, period_col: str, top_n: int = 5):
     """Trending-term detection between a reference and a current
     window ('ref' / 'cur' in `period_col`): per group, the terms whose
     frequency rose most, ranked by the EXACT cross-multiplied drift
     delta = c_cur·N_ref − c_ref·N_cur (positive = rising; the same
     no-float-ratio rule as the q151 TV gate — ratios of small counts
     are exactly where float rank orders go nondeterministic). Terms
-    below `min_count` current occurrences are pruned before ranking
+    below 3 current occurrences are pruned before ranking
     (rare-term noise control), absent-in-ref terms get c_ref = 0 —
     genuinely new terms rank on their full current mass.
 
@@ -399,9 +350,9 @@ def trending_terms(
     from .text import spread_input, tokens
 
     tok = docs.select(
-        F.col(group_col).alias("g"),
+        F.col("source").alias("g"),
         F.col(period_col).alias("p"),
-        F.explode(tokens(text_col)).alias("term"),
+        F.explode(tokens("text")).alias("term"),
     )
     per = tok.groupBy("g", "term").agg(
         F.sum((F.col("p") == "ref").cast("long")).alias("c_ref"),
@@ -410,7 +361,7 @@ def trending_terms(
     tot = per.groupBy("g").agg(
         F.sum("c_ref").alias("n_ref"), F.sum("c_cur").alias("n_cur")
     )
-    j = per.join(tot, "g").filter(F.col("c_cur") >= min_count)
+    j = per.join(tot, "g").filter(F.col("c_cur") >= 3)
     j = j.withColumn(
         "delta",
         F.col("c_cur") * F.col("n_ref") - F.col("c_ref") * F.col("n_cur"),
@@ -422,20 +373,15 @@ def trending_terms(
         j.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= top_n)
         .select(
-            F.col("g").alias(group_col), "term", "c_ref", "c_cur",
+            F.col("g").alias("source"), "term", "c_ref", "c_cur",
             "n_ref", "n_cur", "delta", F.col("rank").cast("long").alias("rank"),
         )
     )
 
 
-def trending_terms_sql(
-    docs_sql: str,
-    group_col: str = "source",
-    top_n: int = 5,
-    min_count: int = 3,
-) -> str:
+def trending_terms_sql(docs_sql: str) -> str:
     """DuckDB twin of trending_terms over (group, period, text)."""
-    g = group_col
+    g = "source"
     return f"""
 WITH tok AS (
   SELECT {g} AS g, period AS p,
@@ -457,7 +403,7 @@ d AS (
   SELECT per.g, term, c_ref, c_cur, n_ref, n_cur,
          c_cur * n_ref - c_ref * n_cur AS delta
   FROM per JOIN tot ON per.g = tot.g
-  WHERE c_cur >= {min_count}
+  WHERE c_cur >= 3
 )
 SELECT g AS {g}, term, c_ref, c_cur, n_ref, n_cur, delta,
        CAST(rank AS BIGINT) AS rank
@@ -465,43 +411,34 @@ FROM (
   SELECT *, row_number() OVER (PARTITION BY g
     ORDER BY delta DESC, term ASC) AS rank
   FROM d
-) WHERE rank <= {top_n}
+) WHERE rank <= 5
 """
 
 
-def pmi_collocations(
-    docs,
-    window: int = 2,
-    min_count: int = 5,
-    scale: int = 1_000_000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def pmi_collocations(docs):
     """Pointwise-mutual-information collocation scores over skip-gram
     pairs — the classic collocation / phrase-mining statistic (Church &
     Hanks 1990). PMI = log(N·n_xy / (n_x·n_y)) is monotone in the exact
     rational N·n_xy / (n_x·n_y), so the score is emitted as the scaled
-    integer floor(scale·N·n_xy / (n_x·n_y)) — no log, no float, engine-
-    exact. Overflow bound: scale·N·n_xy must stay < 2^63; with scale
-    1e6 that holds up to N·n_xy < 9.2e12 (pair-count marginals are far
+    integer floor(1e6·N·n_xy / (n_x·n_y)) — no log, no float, engine-
+    exact. Overflow bound: 1e6·N·n_xy must stay < 2^63, which holds up
+    to N·n_xy < 9.2e12 (pair-count marginals are far
     below that even at corpus scale because n_xy <= n_x <= N — if N
-    grows past ~3e6 with near-degenerate vocabularies, drop scale).
+    grows past ~3e6 with near-degenerate vocabularies, drop the scale).
 
     Plan: one skip-gram pair aggregation (equi-join on (doc, pos+k) —
     functions/retrieval.skipgram_counts), then center/context marginals
     are two more groupBys of the PAIR table (already aggregated, small),
-    and the corpus total joins in as a broadcast single row. min_count
-    gates output only — marginals always use the full pair table."""
+    and the corpus total joins in as a broadcast single row. The
+    min-count-5 gate applies to the output only — marginals always use the full pair table."""
     from pyspark.sql import functions as F
 
-    pairs = skipgram_counts(
-        docs, window=window, min_count=1, text_col=text_col, id_col=id_col
-    )
+    pairs = skipgram_counts(docs, window=2, min_count=1)
     nx = pairs.groupBy("center").agg(F.sum("n").alias("n_x"))
     ny = pairs.groupBy("context").agg(F.sum("n").alias("n_y"))
     tot = pairs.agg(F.sum("n").alias("n_total"))
     return (
-        pairs.filter(F.col("n") >= min_count)
+        pairs.filter(F.col("n") >= 5)
         .join(F.broadcast(nx), "center")
         .join(F.broadcast(ny), "context")
         .crossJoin(F.broadcast(tot))
@@ -511,23 +448,14 @@ def pmi_collocations(
             F.col("n").alias("n_xy"),
             F.col("n_x"),
             F.col("n_y"),
-            F.expr(f"(n_total * n * {scale}) div (n_x * n_y)").alias(
-                "pmi_q"
-            ),
+            F.expr("(n_total * n * 1000000) div (n_x * n_y)").alias("pmi_q"),
         )
     )
 
 
-def pmi_collocations_sql(
-    docs_sql: str,
-    window: int = 2,
-    min_count: int = 5,
-    scale: int = 1_000_000,
-) -> str:
-    """DuckDB twin of pmi_collocations (window offsets inlined)."""
-    offs = ", ".join(
-        str(k) for k in range(-window, window + 1) if k != 0
-    )
+def pmi_collocations_sql(docs_sql: str) -> str:
+    """DuckDB twin of pmi_collocations (the ±2 window offsets inlined)."""
+    offs = ", ".join(str(k) for k in range(-2, 3) if k != 0)
     return f"""
 WITH toks AS MATERIALIZED (
   SELECT CAST(doc_id AS BIGINT) AS doc_id, i - 1 AS pos, t[i] AS tok
@@ -546,19 +474,14 @@ nx AS (SELECT center, CAST(sum(n) AS BIGINT) AS n_x FROM pairs GROUP BY 1),
 ny AS (SELECT context, CAST(sum(n) AS BIGINT) AS n_y FROM pairs GROUP BY 1),
 tot AS (SELECT CAST(sum(n) AS BIGINT) AS n_total FROM pairs)
 SELECT p.center, p.context, p.n AS n_xy, nx.n_x, ny.n_y,
-       (tot.n_total * p.n * {scale}) // (nx.n_x * ny.n_y) AS pmi_q
+       (tot.n_total * p.n * 1000000) // (nx.n_x * ny.n_y) AS pmi_q
 FROM pairs p
 JOIN nx USING (center) JOIN ny USING (context) CROSS JOIN tot
-WHERE p.n >= {min_count}
+WHERE p.n >= 5
 """
 
 
-def phrase_search(
-    docs,
-    phrase: tuple,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def phrase_search(docs, phrase: tuple):
     """Positional-index phrase query — the `"exact phrase"` operator of
     every search engine, run as relational ops over a positional
     posting list.
@@ -580,10 +503,8 @@ def phrase_search(
     from pyspark.sql import functions as F
 
     toks = docs.select(
-        F.col(id_col).cast("long").alias("d"),
-        F.posexplode(
-            F.split(F.trim(F.col(text_col)), r"\s+")
-        ).alias("pos", "term"),
+        F.col("doc_id").cast("long").alias("d"),
+        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("pos", "term"),
     )
     out = toks.filter(F.col("term") == phrase[0]).select(
         "d", F.col("pos").alias("p0")
@@ -594,17 +515,12 @@ def phrase_search(
         )
         out = out.join(nxt, ["d", "p0"])
     return (
-        out.groupBy(F.col("d").alias(id_col))
+        out.groupBy(F.col("d").alias("doc_id"))
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
     )
 
 
-def phrase_search_sql(
-    docs_sql: str,
-    phrase: tuple,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
+def phrase_search_sql(docs_sql: str, phrase: tuple) -> str:
     """DuckDB twin of phrase_search: the identical positional joins over
     the two-step generate_series tokenization (DuckDB lacks
     WITH ORDINALITY; `t[i]` on the split list recovers positions)."""
@@ -615,27 +531,20 @@ def phrase_search_sql(
             f"AND t{i}.term = '{term}'"
         )
     return f"""
-WITH src AS (SELECT {id_col} AS d,
-             string_split_regex(trim({text_col}), '\\s+') AS ts
+WITH src AS (SELECT doc_id AS d,
+             string_split_regex(trim(text), '\\s+') AS ts
              FROM ({docs_sql})),
 idx AS (SELECT d, ts, unnest(generate_series(1, len(ts))) AS i FROM src),
 toks AS (SELECT d, i - 1 AS pos, ts[i] AS term FROM idx)
-SELECT t0.d AS {id_col}, CAST(count(*) AS BIGINT) AS n_occurrences
+SELECT t0.d AS doc_id, CAST(count(*) AS BIGINT) AS n_occurrences
 FROM toks t0 {' '.join(joins)}
 WHERE t0.term = '{phrase[0]}'
 GROUP BY 1
 """
 
 
-def sparse_cosine_join(
-    docs,
-    n: int = 3,
-    df_cap: int = 50,
-    min_cos2_ppm: int = 250_000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Exact sparse-cosine similarity join over n-gram term-frequency
+def sparse_cosine_join(docs, df_cap: int = 50, min_cos2_ppm: int = 250_000):
+    """Exact sparse-cosine similarity join over 3-gram term-frequency
     vectors — the inverted-index APSS algorithm (Bayardo et al. WWW'07
     without the prefix filter): dot products accumulate ONLY over the
     posting lists both documents share, never over a dense vector.
@@ -658,20 +567,16 @@ def sparse_cosine_join(
     from pyspark.sql import functions as F
 
     pos = docs.select(
-        F.col(id_col).cast("long").alias("d"),
-        F.posexplode(
-            F.split(F.trim(F.col(text_col)), r"\s+")
-        ).alias("i", "w"),
+        F.col("doc_id").cast("long").alias("d"),
+        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("i", "w"),
     )
     grams = pos
-    for k in range(1, n):
+    for k in range(1, 3):
         nxt = pos.select(
             "d", (F.col("i") - k).alias("i"), F.col("w").alias(f"w{k}")
         )
         grams = grams.join(nxt, ["d", "i"])
-    shingle = F.concat_ws(
-        " ", F.col("w"), *[F.col(f"w{k}") for k in range(1, n)]
-    )
+    shingle = F.concat_ws(" ", F.col("w"), *[F.col(f"w{k}") for k in range(1, 3)])
     tf = (
         grams.select("d", shingle.alias("t"))
         .groupBy("d", "t")
@@ -704,22 +609,16 @@ def sparse_cosine_join(
     return scored
 
 
-def sparse_cosine_join_sql(
-    docs_sql: str,
-    n: int = 3,
-    df_cap: int = 50,
-    min_cos2_ppm: int = 250_000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
+def sparse_cosine_join_sql(docs_sql: str, min_cos2_ppm: int = 250_000) -> str:
     """DuckDB twin of sparse_cosine_join (two-step generate_series
-    positional n-grams, same cap and integer score)."""
+    positional 3-grams, same cap and integer score)."""
+    n = 3
     gram_terms = " || ' ' || ".join(
         f"ts[i + {k}]" for k in range(n)
     )
     return f"""
-WITH src AS (SELECT {id_col} AS d,
-             string_split_regex(trim({text_col}), '\\s+') AS ts
+WITH src AS (SELECT doc_id AS d,
+             string_split_regex(trim(text), '\\s+') AS ts
              FROM ({docs_sql})),
 idx AS (SELECT d, ts, unnest(generate_series(1, len(ts) - {n - 1})) AS i
         FROM src WHERE len(ts) >= {n}),
@@ -727,7 +626,7 @@ tf0 AS (
   SELECT d, {gram_terms} AS t, CAST(count(*) AS BIGINT) AS tf
   FROM idx GROUP BY 1, 2
 ),
-rare AS (SELECT t FROM tf0 GROUP BY t HAVING count(*) <= {df_cap}),
+rare AS (SELECT t FROM tf0 GROUP BY t HAVING count(*) <= 50),
 tf AS (SELECT * FROM tf0 WHERE t IN (SELECT t FROM rare)),
 norms AS (SELECT d, CAST(sum(tf * tf) AS BIGINT) AS nrm2 FROM tf GROUP BY 1),
 dots AS (
@@ -753,14 +652,8 @@ NDCG_DISC = (
 )
 
 
-def ndcg_audit(
-    ranked,
-    k: int = 10,
-    q_col: str = "q",
-    rank_col: str = "rank",
-    rel_col: str = "rel",
-):
-    """NDCG@k — the graded ranking metric (Järvelin & Kekäläinen 2002)
+def ndcg_audit(ranked):
+    """NDCG@10 — the graded ranking metric (Järvelin & Kekäläinen 2002)
     as exact integer arithmetic: gain 2^rel − 1 (integer rel, capped
     upstream), discount from the 1e9-scaled table above, so
     DCG_scaled = Σ gain·disc is a plain bigint sum and
@@ -774,20 +667,18 @@ def ndcg_audit(
     Scale: two windows partitioned by q + one agg — evaluation runs
     over millions of queries as one shuffle, not a driver loop.
     """
+    k = 10
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     disc = F.element_at(
         F.array(*[F.lit(d) for d in NDCG_DISC[:k]]),
-        F.col(rank_col).cast("int"),
+        F.col("rank").cast("int"),
     )
-    gain = (
-        F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST({rel_col} AS INT))")
-        - 1
-    ).cast("long")
-    g = ranked.filter(F.col(rank_col) <= k).select(
-        F.col(q_col).alias("q"),
-        F.col(rank_col).alias("rank"),
+    gain = (F.expr("shiftleft(CAST(1 AS BIGINT), CAST(rel AS INT))") - 1).cast("long")
+    g = ranked.filter(F.col("rank") <= k).select(
+        F.col("q"),
+        F.col("rank"),
         gain.alias("gain"),
         disc.cast("long").alias("disc"),
     )
@@ -818,18 +709,14 @@ def ndcg_audit(
     )
 
 
-def ndcg_audit_sql(
-    ranked_sql: str, k: int = 10
-) -> str:
+def ndcg_audit_sql(ranked_sql: str) -> str:
     """DuckDB twin of ndcg_audit (`ranked_sql` yields q, rank, rel)."""
-    disc_vals = ", ".join(
-        f"({i + 1}, {d})" for i, d in enumerate(NDCG_DISC[:k])
-    )
+    disc_vals = ", ".join(f"({i + 1}, {d})" for i, d in enumerate(NDCG_DISC[:10]))
     return f"""
 WITH disc(r, d) AS (VALUES {disc_vals}),
 g AS (
   SELECT q, rank, CAST((1 << CAST(rel AS INT)) - 1 AS BIGINT) AS gain
-  FROM ({ranked_sql}) WHERE rank <= {k}
+  FROM ({ranked_sql}) WHERE rank <= 10
 ),
 gd AS (
   SELECT g.q, g.rank, g.gain, disc.d AS disc,

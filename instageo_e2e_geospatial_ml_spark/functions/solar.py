@@ -10,20 +10,20 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
 
 def sunrise_sunset_utc_minutes(
-    lat: np.ndarray, lon: np.ndarray, day_of_year: np.ndarray, year_days: float = 365.0
+    lat: np.ndarray, lon: np.ndarray, day_of_year: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
     """NOAA closed form → (sunrise, sunset) in minutes after 00:00 UTC.
 
     Polar day/night: NaN where the sun never crosses the horizon.
     """
-    g = 2.0 * np.pi / year_days * (day_of_year - 1 + 0.5)
+    g = 2.0 * np.pi / 365.0 * (day_of_year - 1 + 0.5)
     eqtime = 229.18 * (
         0.000075
         + 0.001868 * np.cos(g)
@@ -67,14 +67,9 @@ def is_daytime_udf(lat: pd.Series, lon: pd.Series, ts: pd.Series) -> pd.Series:
     return pd.Series(day)
 
 
-def daytime_filter(
-    granules: DataFrame,
-    lat_col: Column | str = "fp_cy",
-    lon_col: Column | str = "fp_cx",
-    ts_col: str = "ts",
-) -> DataFrame:
+def daytime_filter(granules: DataFrame) -> DataFrame:
     """Keep granules acquired between local sunrise and sunset at the
     footprint centroid (reference stac_utils.py:72-90)."""
-    lat = F.col(lat_col) if isinstance(lat_col, str) else lat_col
-    lon = F.col(lon_col) if isinstance(lon_col, str) else lon_col
-    return granules.filter(is_daytime_udf(lat, lon, F.col(ts_col).cast("timestamp")))
+    return granules.filter(
+        is_daytime_udf(F.col("fp_cy"), F.col("fp_cx"), F.col("ts").cast("timestamp"))
+    )

@@ -41,17 +41,17 @@ def ranged_prefix(
     out_col: str,
     weight: str | None = None,
     group_cols=(),
-    n_buckets: int | None = None,
 ):
     """Add `out_col`: the inclusive running row count (weight=None) or
     running sum of the integer column `weight`, within `group_cols`, in
     `order_cols` order — `row_number()` / `sum(weight) over (partition by
     group_cols order by order_cols rows unbounded preceding)` WITHOUT a
     single-task sort of a whole group:
-    (1) range-repartition by (group_cols, order_cols) into `n_buckets`
-    contiguous key ranges and tag each row with its bucket; (2) ONE tiny
-    per-(group, bucket) totals job (≤ n_buckets rows per group to the
-    driver); (3) broadcast the cumulative offsets back and run the prefix
+    (1) range-repartition by (group_cols, order_cols) into n_buckets =
+    spark.sql.shuffle.partitions contiguous key ranges and tag each row
+    with its bucket; (2) ONE tiny per-(group, bucket) totals job
+    (≤ n_buckets rows per group to the driver); (3) broadcast the
+    cumulative offsets back and run the prefix
     as a window PARTITIONED by (group_cols, bucket), so every task sorts
     ≤ N/n_buckets rows. The exclusive forms are the result minus the
     row's weight (minus 1 for a 0-based row number).
@@ -63,8 +63,7 @@ def ranged_prefix(
     independently planned range exchanges may sample different bounds)
     and its cache lives exactly as long as the returned frame."""
     sess = df.sparkSession
-    if n_buckets is None:
-        n_buckets = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_buckets = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
     groups = list(group_cols)
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     ranged = (
@@ -187,11 +186,7 @@ def bpe_token_count(text: Column | str) -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(BPE_TOKEN_REGEX), 0))
 
 
-def token_rarity_scores(
-    docs,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def token_rarity_scores(docs):
     """Zipf-bucket commonness score per document (the CCNet-style
     perplexity-filter shape without a language model): every token joins
     the corpus-wide document frequency table, is bucketed by
@@ -211,15 +206,15 @@ def token_rarity_scores(
     # (round 8: spread_input here was MEASURED AND REVERTED — the explode
     # feeds a token-keyed aggregation exchange immediately, so the extra
     # doc shuffle bought nothing; interleaved A/B: 1.7 s vs 2.6 s at sf1.0)
-    tok = docs.select(id_col, F.explode(tokens(text_col)).alias("tok"))
+    tok = docs.select("doc_id", F.explode(tokens("text")).alias("tok"))
     freq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     b = freq.withColumn("bucket", F.floor(F.log2("df")).cast("long"))
     joined = tok.join(b.select("tok", "bucket"), "tok")
-    return joined.groupBy(id_col).agg(
+    return joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum("bucket").alias("bucket_sum"),
     ).select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "bucket_sum",
         F.round(F.col("bucket_sum") / F.col("n_tokens"), 6).alias("rarity_score"),
@@ -232,12 +227,7 @@ def fingerprint(text: Column | str) -> Column:
     return F.md5(F.regexp_replace(F.lower(F.trim(c)), r"\s+", " "))
 
 
-def corpus_profile(
-    docs,
-    group_col: str = "source",
-    text_col: str = "text",
-    len_col: str = "n_chars",
-):
+def corpus_profile(docs):
     """Per-group corpus profile (the first thing anyone runs on a new
     crawl dump): doc counts, char-length min/median/p90/max, and exact
     token totals. percentile() is the exact interpolated form — identical
@@ -245,45 +235,41 @@ def corpus_profile(
     quantile_cont, so even the float artifacts hash-match. One shuffle."""
     from pyspark.sql import functions as F
 
-    return spread_input(docs).groupBy(group_col).agg(
+    return spread_input(docs).groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.min(len_col).alias("min_chars"),
-        F.expr(f"percentile({len_col}, 0.5)").alias("p50_chars"),
-        F.expr(f"percentile({len_col}, 0.9)").alias("p90_chars"),
-        F.max(len_col).alias("max_chars"),
-        F.sum(token_count(text_col)).alias("total_tokens"),
+        F.min("n_chars").alias("min_chars"),
+        F.expr("percentile(n_chars, 0.5)").alias("p50_chars"),
+        F.expr("percentile(n_chars, 0.9)").alias("p90_chars"),
+        F.max("n_chars").alias("max_chars"),
+        F.sum(token_count("text")).alias("total_tokens"),
     )
 
 
-def repetition_scores(
-    docs,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 2,
-):
+def repetition_scores(docs):
     """Gopher-style intra-document repetition signals per doc:
-    (id, n_grams, n_distinct, dup_ratio, top_frac_num) where dup_ratio =
-    1 − distinct/total n-grams and top_frac_num is the count of the most
-    frequent n-gram (tie-broken lexicographically — deterministic).
+    (id, n_grams, n_distinct, dup_ratio, top_frac_num) over word bigrams,
+    where dup_ratio = 1 − distinct/total bigrams and top_frac_num is the
+    count of the most frequent bigram (tie-broken lexicographically — deterministic).
     Repetitive boilerplate scores high on both. Exact integers + one
     fixed-shape division; a single doc-keyed aggregation after the
-    n-gram counts. n-grams are built by index explode (JVM)."""
+    bigram counts. Bigrams are built by index explode (JVM)."""
+    n = 2
     from pyspark.sql import functions as F
 
-    t = tokens(text_col)
+    t = tokens("text")
     parts = [F.element_at(F.col("_toks"), F.col("_i") + i) for i in range(n)]
     grams = (
         spread_input(docs).withColumn("_toks", t)
         .filter(F.size("_toks") >= n)
         .select(
-            id_col,
+            "doc_id",
             F.explode(F.sequence(F.lit(1), F.size("_toks") - (n - 1))).alias("_i"),
             "_toks",
         )
-        .select(id_col, F.concat_ws(" ", *parts).alias("g"))
+        .select("doc_id", F.concat_ws(" ", *parts).alias("g"))
     )
-    per_gram = grams.groupBy(id_col, "g").agg(F.count(F.lit(1)).alias("c"))
-    return per_gram.groupBy(id_col).agg(
+    per_gram = grams.groupBy("doc_id", "g").agg(F.count(F.lit(1)).alias("c"))
+    return per_gram.groupBy("doc_id").agg(
         F.sum("c").alias("n_grams"),
         F.count(F.lit(1)).alias("n_distinct"),
         F.round(F.lit(1.0) - F.count(F.lit(1)) / F.sum("c"), 6).alias("dup_ratio"),
@@ -291,13 +277,7 @@ def repetition_scores(
     )
 
 
-def pack_token_shards(
-    docs,
-    budget_tokens: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int | None = None,
-):
+def pack_token_shards(docs, budget_tokens: int):
     """Assign documents to training shards of ≈ budget_tokens each:
     order by id (deterministic), running token total, shard_id =
     floor((cumsum − tokens) / budget) — the bin a doc STARTS in, so every
@@ -308,9 +288,9 @@ def pack_token_shards(
     window, every task sorts ≤ N/n_buckets rows — with exactly the same
     global semantics as the textbook `sum() over (order by id)` (the q48
     oracle pins the hash)."""
-    out = spread_input(docs).select(id_col, token_count(text_col).alias("n_tokens"))
+    out = spread_input(docs).select("doc_id", token_count("text").alias("n_tokens"))
     cum = ranged_prefix(
-        out, [F.col(id_col).asc()], "_cum", weight="n_tokens", n_buckets=n_buckets
+        out, [F.col("doc_id").asc()], "_cum", weight="n_tokens"
     )
     return cum.withColumn(
         "shard_id",
@@ -320,13 +300,7 @@ def pack_token_shards(
     ).drop("_cum")
 
 
-def chunk_documents(
-    docs,
-    chunk_tokens: int = 128,
-    overlap: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def chunk_documents(docs, chunk_tokens: int = 128, overlap: int = 16):
     """Split documents into fixed-token-budget training chunks with
     overlap → (id, chunk_idx, chunk_text, n_tokens). The pretraining
     chunker: stride = chunk_tokens − overlap; the final partial chunk is
@@ -338,7 +312,7 @@ def chunk_documents(
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("need 0 <= overlap < chunk_tokens")
     stride = chunk_tokens - overlap
-    t = tokens(text_col)
+    t = tokens("text")
     d = spread_input(docs).withColumn("_toks", t).withColumn("_n", F.size("_toks"))
     # chunk starts: 1, 1+stride, ... while start <= max(n - overlap, 1)
     d = d.withColumn(
@@ -350,11 +324,11 @@ def chunk_documents(
         ),
     )
     out = d.select(
-        id_col,
+        "doc_id",
         F.posexplode("_starts").alias("chunk_idx", "_s"),
         "_toks",
     ).select(
-        id_col,
+        "doc_id",
         F.col("chunk_idx").cast("long").alias("chunk_idx"),
         F.array_join(
             F.slice("_toks", F.col("_s"), F.lit(chunk_tokens)), " "
@@ -388,7 +362,7 @@ def scrub_pii(text: "Column | str") -> "Column":
     return c
 
 
-def gopher_gates(df, text_col: str = "text", id_col: str = "doc_id"):
+def gopher_gates(df):
     """Gopher quality rules (Rae et al. 2021, Table A1 — the named
     web-corpus document filter) as ALL-INTEGER columns so the DuckDB
     oracle twin hashes exactly: ratio thresholds are expressed as
@@ -401,12 +375,12 @@ def gopher_gates(df, text_col: str = "text", id_col: str = "doc_id"):
     column ops (split / size / filter / aggregate) — scales as a scan."""
     from pyspark.sql import functions as F
 
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = F.split(F.trim(F.col("text")), r"\s+")
     wc = F.size(words)
     chars = F.aggregate(
         words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
     )
-    alpha = F.size(F.expr(f"filter(split(trim({text_col}), '\\\\s+'), w -> w rlike '[a-zA-Z]')"))
+    alpha = F.size(F.expr("filter(split(trim(text), '\\\\s+'), w -> w rlike '[a-zA-Z]')"))
     stops = F.array(*[F.lit(s) for s in ("the", "be", "to", "of", "and", "that", "have", "with")])
     stop_hits = F.size(F.filter(stops, lambda s: F.array_contains(words, s)))
     r_wc = (wc >= 50) & (wc <= 100000)
@@ -414,7 +388,7 @@ def gopher_gates(df, text_col: str = "text", id_col: str = "doc_id"):
     r_alpha = F.lit(5) * alpha >= F.lit(4) * wc
     r_stop = stop_hits >= 2
     return df.select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col("doc_id").cast("long").alias("doc_id"),
         wc.cast("long").alias("word_count"),
         chars.cast("long").alias("word_chars"),
         alpha.cast("long").alias("alpha_words"),
@@ -427,18 +401,11 @@ def gopher_gates(df, text_col: str = "text", id_col: str = "doc_id"):
     )
 
 
-def hashed_quality_score(
-    docs,
-    n_buckets: int = 1024,
-    bias: int = 0,
-    seed: str = "qlr",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def hashed_quality_score(docs, bias: int = 0):
     """Model-based quality filter: a hashed linear text classifier
     (fastText / logistic-regression style — the GPT-3/CCNet curation
     stage that scores documents against a trained reference model).
-    Each lowercased whitespace token hashes into one of n_buckets
+    Each lowercased whitespace token hashes into one of 1024
     features; the document score is the exact integer sum of per-feature
     weights, and `keep` is score + bias >= 0.
 
@@ -450,18 +417,16 @@ def hashed_quality_score(
     """
     b = (
         docs.select(
-            F.col(id_col).cast("long").alias(id_col),
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("tok"),
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"),
         )
         .withColumn(
             "bucket",
             F.conv(
-                F.substring(F.md5(F.concat_ws(":", F.lit(seed), F.col("tok"))), 1, 8),
+                F.substring(F.md5(F.concat_ws(":", F.lit("qlr"), F.col("tok"))), 1, 8),
                 16, 10,
             ).cast("long")
-            % n_buckets,
+            % 1024,
         )
     )
     b = b.withColumn(
@@ -470,7 +435,7 @@ def hashed_quality_score(
             F.substring(
                 F.md5(
                     F.concat_ws(
-                        ":", F.lit("w"), F.lit(seed), F.col("bucket").cast("string")
+                        ":", F.lit("w"), F.lit("qlr"), F.col("bucket").cast("string")
                     )
                 ),
                 1, 8,
@@ -481,26 +446,24 @@ def hashed_quality_score(
         - 1000,
     )
     return (
-        b.groupBy(id_col)
+        b.groupBy("doc_id")
         .agg(F.sum("w").cast("long").alias("score"))
         .select(
-            id_col,
+            "doc_id",
             "score",
             ((F.col("score") + F.lit(bias)) >= 0).alias("keep"),
         )
     )
 
 
-def heavy_hitter_tokens(docs, k: int = 100, text_col: str = "text"):
+def heavy_hitter_tokens(docs, k: int = 100):
     """Exact heavy hitters over the token stream: tokens whose total
     occurrence count is at least a 1/k share of ALL token occurrences
     (count · k >= total, integer cross-multiplied — no float share).
     One token-keyed count shuffle plus a scalar total broadcast-joined
     as a literal-free cross join of one row. Exact DuckDB twin: q66."""
     toks = docs.select(
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("tok")
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok")
     )
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = toks.agg(F.count(F.lit(1)).alias("_total"))
@@ -511,12 +474,7 @@ def heavy_hitter_tokens(docs, k: int = 100, text_col: str = "text"):
     )
 
 
-def feature_hash(
-    docs: DataFrame,
-    n_bits: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def feature_hash(docs: DataFrame, n_bits: int = 10) -> DataFrame:
     """The hashing trick (Weinberger et al. 2009 / Vowpal Wabbit):
     token -> bucket md5(token) & (2^n_bits - 1), signed by one extra
     hash bit so collisions cancel in expectation; the document vector
@@ -531,8 +489,8 @@ def feature_hash(
     corpora (no vocabulary broadcast, no OOV)."""
     toks = (
         docs.select(
-            F.col(id_col),
-            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
+            F.col("doc_id"),
+            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"),
         )
         .filter(F.col("tok") != "")
     )
@@ -542,48 +500,38 @@ def feature_hash(
     ).otherwise(F.lit(-1))
     return (
         toks.select(
-            F.col(id_col),
+            F.col("doc_id"),
             h.bitwiseAND(F.lit((1 << n_bits) - 1)).alias("idx"),
             sign.alias("s"),
         )
-        .groupBy(id_col, "idx")
+        .groupBy("doc_id", "idx")
         .agg(F.sum("s").alias("val"))
         .filter(F.col("val") != 0)
     )
 
 
-def feature_hash_sql(
-    table_sql: str,
-    n_bits: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
+def feature_hash_sql(table_sql: str) -> str:
     """The identical hashing-trick featurization as DuckDB SQL."""
-    mask = (1 << n_bits) - 1
-    sbit = 1 << n_bits
+    mask = (1 << 10) - 1
+    sbit = 1 << 10
     return f"""
 WITH tok AS (
-  SELECT {id_col}, unnest(string_split_regex(trim({text_col}), '\\s+')) AS tok
+  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
   FROM ({table_sql})
 ),
 h AS (
-  SELECT {id_col},
+  SELECT doc_id,
          CAST('0x' || substring(md5(tok), 1, 15) AS BIGINT) AS hv
   FROM tok WHERE tok <> ''
 )
-SELECT {id_col}, hv & {mask} AS idx,
+SELECT doc_id, hv & {mask} AS idx,
        CAST(sum(CASE WHEN (hv & {sbit}) = 0 THEN 1 ELSE -1 END) AS BIGINT) AS val
 FROM h GROUP BY 1, 2
 HAVING sum(CASE WHEN (hv & {sbit}) = 0 THEN 1 ELSE -1 END) <> 0
 """
 
 
-def build_vocab_encode(
-    docs: DataFrame,
-    min_count: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def build_vocab_encode(docs: DataFrame, min_count: int = 2):
     """Word-level vocabulary build + corpus encode — the classic
     pre-BPE tokenization step: rank tokens by (count desc, token asc)
     into dense ids (1-based; 0 = OOV for tokens under min_count),
@@ -600,10 +548,8 @@ def build_vocab_encode(
     token-keyed join back to the exploded corpus (AQE broadcasts the
     vocab side when it fits)."""
     toks = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias(
-            "pos0", "tok"
-        ),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("pos0", "tok"),
     ).filter(F.col("tok") != "")
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     kept = counts.filter(F.col("cnt") >= min_count)
@@ -613,7 +559,7 @@ def build_vocab_encode(
     encoded = (
         toks.join(vocab.select("tok", "tok_id"), "tok", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             (F.col("pos0") + 1).alias("pos"),
             F.coalesce(F.col("tok_id"), F.lit(0)).alias("tok_id"),
         )
@@ -621,23 +567,18 @@ def build_vocab_encode(
     return vocab, encoded
 
 
-def vocab_encode_sql(
-    table_sql: str,
-    min_count: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
+def vocab_encode_sql(table_sql: str, min_count: int = 2) -> str:
     """The identical vocabulary encode as DuckDB SQL (encoded form)."""
     return f"""
 WITH sp AS (
-  SELECT {id_col}, string_split_regex(trim({text_col}), '\\s+') AS t
+  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
   FROM ({table_sql})
 ),
 px AS (
-  SELECT {id_col}, t, unnest(generate_series(1, len(t))) AS pos FROM sp
+  SELECT doc_id, t, unnest(generate_series(1, len(t))) AS pos FROM sp
 ),
 tok AS (
-  SELECT {id_col}, pos, t[pos] AS tok FROM px WHERE t[pos] <> ''
+  SELECT doc_id, pos, t[pos] AS tok FROM px WHERE t[pos] <> ''
 ),
 counts AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY 1),
 vocab AS (
@@ -645,20 +586,13 @@ vocab AS (
          CAST(row_number() OVER (ORDER BY cnt DESC, tok ASC) AS BIGINT) AS tok_id
   FROM counts WHERE cnt >= {min_count}
 )
-SELECT t.{id_col}, CAST(t.pos AS BIGINT) AS pos,
+SELECT t.doc_id, CAST(t.pos AS BIGINT) AS pos,
        coalesce(v.tok_id, 0) AS tok_id
 FROM tok t LEFT JOIN vocab v ON t.tok = v.tok
 """
 
 
-def mix_by_token_budget(
-    docs,
-    budgets,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    n_buckets: int | None = None,
-):
+def mix_by_token_budget(docs, budgets):
     """Token-budget corpus mixing (the Pile/Dolma recipe step): build a
     training mixture by taking, from each source, a random-but-
     deterministic subset whose token count reaches that source's
@@ -677,14 +611,14 @@ def mix_by_token_budget(
     corpus. The budget spec broadcasts.
     """
     d = docs.select(
-        F.col(source_col).alias("source"),
-        F.col(id_col).alias("doc_id"),
-        token_count(text_col).alias("n_tokens"),
-        F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":mix"))).alias("_r"),
+        F.col("source"),
+        F.col("doc_id"),
+        token_count("text").alias("n_tokens"),
+        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":mix"))).alias("_r"),
     )
     cum = ranged_prefix(
         d, [F.col("_r").asc(), F.col("doc_id").asc()], "_cum",
-        weight="n_tokens", group_cols=["source"], n_buckets=n_buckets,
+        weight="n_tokens", group_cols=["source"],
     )
     return (
         cum.withColumn("cum_before", F.col("_cum") - F.col("n_tokens"))
@@ -694,14 +628,7 @@ def mix_by_token_budget(
     )
 
 
-def length_grouped_batches(
-    docs,
-    batch_size: int,
-    bucket_width: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int | None = None,
-):
+def length_grouped_batches(docs, batch_size: int, bucket_width: int):
     """Length-grouped batch planning (HF Trainer group_by_length): docs
     bucket by token-length band (bucket = n_tokens div bucket_width),
     shuffle deterministically inside each band (md5 rank), and chunk
@@ -717,15 +644,15 @@ def length_grouped_batches(
     map-side-combinable groupBy.
     """
     d = docs.select(
-        F.col(id_col).alias("doc_id"),
-        token_count(text_col).alias("n_tokens"),
-        F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":lgb"))).alias("_r"),
+        F.col("doc_id"),
+        token_count("text").alias("n_tokens"),
+        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":lgb"))).alias("_r"),
     ).withColumn(
         "bucket", F.expr(f"n_tokens div {bucket_width}").cast("long")
     )
     batched = ranged_prefix(
         d, [F.col("_r").asc(), F.col("doc_id").asc()], "_rn",
-        group_cols=["bucket"], n_buckets=n_buckets,
+        group_cols=["bucket"],
     ).withColumn("batch_id", F.expr(f"(_rn - 1) div {batch_size}"))
     return batched.groupBy("bucket", "batch_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -747,7 +674,7 @@ CODE_SIGNAL_PATTERNS = {
 }
 
 
-def code_likeness(docs, text_col: str = "text", id_col: str = "doc_id"):
+def code_likeness(docs):
     """Code-vs-prose line signals (the StarCoder/CodeParrot-style
     routing gate: code belongs in the code pile, not the prose pile):
     per document, the line count and how many lines look like code —
@@ -760,9 +687,9 @@ def code_likeness(docs, text_col: str = "text", id_col: str = "doc_id"):
     over the same line array — no explode, no shuffle; a pure
     map-side projection that runs at scan speed.
     """
-    lines = F.split(F.col(text_col), "\n")
+    lines = F.split(F.col("text"), "\n")
     out = [
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(lines).cast("long").alias("n_lines"),
     ]
     def _matcher(pat):
@@ -779,16 +706,16 @@ def code_likeness(docs, text_col: str = "text", id_col: str = "doc_id"):
     return docs.select(*out)
 
 
-def code_likeness_sql(docs_sql: str, text_expr: str = "text") -> str:
+def code_likeness_sql(docs_sql: str) -> str:
     """DuckDB twin of code_likeness (same regexes via regexp_matches
     over string_split lines)."""
     sigs = ", ".join(
-        f"CAST(len(list_filter(string_split({text_expr}, chr(10)), "
+        "CAST(len(list_filter(string_split(text, chr(10)), "
         f"x -> regexp_matches(x, '{pat}'))) AS BIGINT) AS n_{name}"
         for name, pat in CODE_SIGNAL_PATTERNS.items()
     )
     return (
-        f"SELECT doc_id, CAST(len(string_split({text_expr}, chr(10))) "
+        "SELECT doc_id, CAST(len(string_split(text, chr(10))) "
         f"AS BIGINT) AS n_lines, {sigs} FROM ({docs_sql})"
     )
 

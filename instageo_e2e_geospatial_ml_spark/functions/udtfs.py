@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql.functions import lit, udtf
+from pyspark.sql.functions import udtf
 
 
 @udtf(

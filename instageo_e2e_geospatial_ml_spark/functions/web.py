@@ -27,12 +27,12 @@ from pyspark.sql import functions as F
 TWO_PART_SUFFIXES = ("co.uk", "com.au", "co.jp", "com.br", "ac.uk")
 
 
-def synth_urls(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_urls(docs: DataFrame) -> DataFrame:
     """Deterministic URL column derived from (doc_id, source, lang) — the
     driver/test surface for URL operators (the synthetic corpus carries
     no URLs; derivation follows the q19 derived-column pattern so the
     DuckDB oracle can rebuild the identical values)."""
-    did = F.col(id_col)
+    did = F.col("doc_id")
     scheme = F.when(did % 3 == 0, F.lit("https")).otherwise(F.lit("http"))
     tld = (
         F.when(did % 5 == 0, F.lit("com"))
@@ -60,10 +60,10 @@ def synth_urls(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def url_components(df: DataFrame, url_col: str = "url") -> DataFrame:
+def url_components(df: DataFrame) -> DataFrame:
     """scheme / host / path / query columns via anchored regexps (all
     JVM-side; empty string where a part is absent)."""
-    u = F.col(url_col)
+    u = F.col("url")
     return (
         df.withColumn("scheme", F.regexp_extract(u, r"^([a-z]+)://", 1))
         .withColumn("host", F.regexp_extract(u, r"^[a-z]+://([^/?#]+)", 1))
@@ -130,7 +130,7 @@ def public_suffix_table(spark) -> DataFrame:
     return spark.createDataFrame(rows, "suffix string, n_labels int")
 
 
-def registrable_domain(df: DataFrame, host_col: str = "host") -> DataFrame:
+def registrable_domain(df: DataFrame) -> DataFrame:
     """eTLD+1 column: longest match against the broadcast public-suffix
     dimension table — three broadcast LEFT joins on the host's last
     1/2/3 labels (no shuffle of the fact side; the dim is tiny even for
@@ -140,7 +140,7 @@ def registrable_domain(df: DataFrame, host_col: str = "host") -> DataFrame:
     (e.g. gov.uk, k12.ak.us) the table wins."""
     spark = df.sparkSession
     psl = public_suffix_table(spark)
-    host = F.col(host_col)
+    host = F.col("host")
     parts = F.split(host, r"\.")
     n = F.size(parts)
     out = df.withColumn("_hp", parts)
@@ -198,15 +198,9 @@ def _pre_cap_salted(
     )
 
 
-def cap_per_domain(
-    df: DataFrame,
-    max_per_domain: int,
-    domain_col: str = "domain",
-    order_col: str = "doc_id",
-    n_salt: int = 16,
-) -> DataFrame:
+def cap_per_domain(df: DataFrame, max_per_domain: int, n_salt: int = 16) -> DataFrame:
     """Keep at most `max_per_domain` documents per registrable domain,
-    deterministically (ordered by `order_col`).
+    deterministically (ordered by doc_id).
 
     Salted two-phase plan (VERDICT r6 #2): at 100 TB the domain key is
     zipfian — one window partitioned by domain alone lands the hottest
@@ -220,8 +214,8 @@ def cap_per_domain(
     from pyspark.sql import Window
 
     if n_salt > 1:
-        df = _pre_cap_salted(df, max_per_domain, domain_col, order_col, n_salt)
-    w = Window.partitionBy(domain_col).orderBy(F.col(order_col))
+        df = _pre_cap_salted(df, max_per_domain, "domain", "doc_id", n_salt)
+    w = Window.partitionBy("domain").orderBy(F.col("doc_id"))
     return (
         df.withColumn("rank_in_domain", F.row_number().over(w))
         .filter(F.col("rank_in_domain") <= max_per_domain)
@@ -246,11 +240,7 @@ ROBOTS_RULES = (
 )
 
 
-def robots_filter(
-    df: DataFrame,
-    rules: DataFrame,
-    path_col: str = "path",
-) -> DataFrame:
+def robots_filter(df: DataFrame, rules: DataFrame) -> DataFrame:
     """Crawl-policy admission by robots.txt longest-match semantics
     (RFC 9309 / Google spec, prefix rules only — `*`/`$` wildcards are
     out of scope and documented so): for each row, among the rules
@@ -265,7 +255,7 @@ def robots_filter(
     the q95 portable-fold trick. Adds `allowed` (0/1) and
     `matched_len` (0 when no rule matched).
     """
-    p = F.col(path_col)
+    p = F.col("path")
     matched = (
         df.join(
             F.broadcast(rules),
@@ -287,27 +277,22 @@ def robots_filter(
     )
 
 
-def robots_rules_values_sql(rules=ROBOTS_RULES) -> str:
+def robots_rules_values_sql() -> str:
     """The rule table as a SQL VALUES list (oracle twin input)."""
-    rows = ", ".join(f"('{p}', {a})" for p, a in rules)
+    rows = ", ".join(f"('{p}', {a})" for p, a in ROBOTS_RULES)
     return f"SELECT * FROM (VALUES {rows}) AS r(prefix, allow)"
 
 
-def robots_filter_sql(
-    docs_sql: str,
-    key_cols: str,
-    path_expr: str = "path",
-    rules=ROBOTS_RULES,
-) -> str:
+def robots_filter_sql(docs_sql: str, key_cols: str) -> str:
     """DuckDB twin of robots_filter: same broadcast-shape join on
     starts_with, same 2*len+allow ordered fold. `key_cols` is the
     comma-separated passthrough column list of `docs_sql`."""
     return f"""
 WITH d AS ({docs_sql}),
-r AS ({robots_rules_values_sql(rules)}),
+r AS ({robots_rules_values_sql()}),
 m AS (
   SELECT {key_cols}, max(2 * length(r.prefix) + r.allow) AS score
-  FROM d LEFT JOIN r ON starts_with(d.{path_expr}, r.prefix)
+  FROM d LEFT JOIN r ON starts_with(d.path, r.prefix)
   GROUP BY {key_cols}
 )
 SELECT {key_cols},
@@ -324,13 +309,13 @@ TRACKING_PARAM_KEYS = (
 )
 
 
-def synth_raw_urls(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_raw_urls(docs: DataFrame) -> DataFrame:
     """Deterministic MESSY URL column for the canonicalization surface
     (q129): mixed-case schemes/hosts, default and non-default ports,
     empty paths, tracking + real query params in shuffled order, and
     fragments — every branch the canonicalizer must normalize. Kept
     separate from synth_urls so the q56/q57/q128 oracles stay frozen."""
-    did = F.col(id_col)
+    did = F.col("doc_id")
     scheme = F.when(did % 3 == 0, F.lit("HTTPS")).otherwise(F.lit("http"))
     host = F.concat(
         F.when(did % 2 == 0, F.lit("WWW.Example")).otherwise(F.lit("example")),
@@ -358,7 +343,7 @@ def synth_raw_urls(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def canonicalize_url(df: DataFrame, url_col: str = "raw_url") -> DataFrame:
+def canonicalize_url(df: DataFrame) -> DataFrame:
     """URL canonicalization for crawl dedup (the C4/CCNet/RefinedWeb
     pre-dedup step): lowercase scheme and host, strip the default port
     (http:80 / https:443) but keep others, drop the fragment, drop
@@ -373,7 +358,7 @@ def canonicalize_url(df: DataFrame, url_col: str = "raw_url") -> DataFrame:
     whole-stage codegen and the DuckDB twin (canonicalize_url_sql) is
     the identical expression shape on list_filter/list_sort.
     """
-    u = F.col(url_col)
+    u = F.col("raw_url")
     scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z]+)://", 1))
     hostport = F.regexp_extract(u, r"^[A-Za-z]+://([^/?#]+)", 1)
     host = F.lower(F.regexp_extract(hostport, r"^([^:]*)", 1))
@@ -411,11 +396,11 @@ def canonicalize_url(df: DataFrame, url_col: str = "raw_url") -> DataFrame:
     )
 
 
-def canonicalize_url_sql(url_expr: str = "raw_url") -> str:
+def canonicalize_url_sql() -> str:
     """The identical canonicalization as a DuckDB scalar expression
     (oracle twin); splice into a SELECT as `... AS url_canon`."""
     exact = ", ".join(f"'{k}'" for k in TRACKING_PARAM_KEYS)
-    u = url_expr
+    u = "raw_url"
     scheme = f"lower(regexp_extract({u}, '^([A-Za-z]+)://', 1))"
     hostport = f"regexp_extract({u}, '^[A-Za-z]+://([^/?#]+)', 1)"
     host = f"lower(regexp_extract({hostport}, '^([^:]*)', 1))"
@@ -458,13 +443,7 @@ def ipv4_to_long(col) -> "Column":
     )
 
 
-def cidr_join(
-    ips: DataFrame,
-    blocks: DataFrame,
-    ip_col: str = "ip",
-    cidr_base_col: str = "base_ip",
-    cidr_bits_col: str = "bits",
-) -> DataFrame:
+def cidr_join(ips: DataFrame, blocks: DataFrame) -> DataFrame:
     """IP-in-CIDR containment join — the geo-IP / bot-net / datacenter
     tagging step of crawl curation: an address matches a block when its
     top `bits` bits equal the block's base. Matching uses pure integer
@@ -477,14 +456,14 @@ def cidr_join(
     aggregate; for million-block tables pre-bucket by the top octet
     (the interval_join rewrite) — this operator is the refine."""
     b = blocks.select(
-        ipv4_to_long(F.col(cidr_base_col)).alias("lo"),
-        F.col(cidr_bits_col).cast("long").alias("bits"),
-        F.col(cidr_base_col).alias("block_base"),
+        ipv4_to_long(F.col("base_ip")).alias("lo"),
+        F.col("bits").cast("long").alias("bits"),
+        F.col("base_ip").alias("block_base"),
     ).withColumn(
         "hi",
         F.col("lo") + F.expr("CAST(pow(2, 32 - bits) AS BIGINT)") - 1,
     )
-    ipl = ips.withColumn("_ip_long", ipv4_to_long(F.col(ip_col)))
+    ipl = ips.withColumn("_ip_long", ipv4_to_long(F.col("ip")))
     j = ipl.join(
         F.broadcast(b),
         (F.col("_ip_long") >= F.col("lo"))

@@ -132,15 +132,9 @@ def geohash6_sql(lon_expr: str, lat_expr: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def hilbert_key(
-    df,
-    bits: int,
-    x_col: str = "x",
-    y_col: str = "y",
-    out: str = "hilbert",
-):
+def hilbert_key(df, bits: int, x_col: str = "x", y_col: str = "y"):
     """Append the order-`bits` Hilbert key of integer coords in
-    [0, 2^bits) as column `out` (bigint). One projection per level; the
+    [0, 2^bits) as column `hilbert` (bigint). One projection per level; the
     working coords live in temp columns dropped at the end."""
     n = 1 << bits
     df = df.withColumn("__hx", F.col(x_col).cast("long")).withColumn(
@@ -168,18 +162,17 @@ def hilbert_key(
             (F.col("__hd") + quad * F.lit(s2)).alias("__hd"),
         )
     keep = [c for c in df.columns if c not in ("__hx", "__hy", "__hd")]
-    return df.select(*keep, F.col("__hd").alias(out))
+    return df.select(*keep, F.col("__hd").alias("hilbert"))
 
 
-def hilbert_sql_cte(pts_sql: str, bits: int, cols: str = "") -> str:
+def hilbert_sql_cte(pts_sql: str, bits: int) -> str:
     """The identical per-level fold as a DuckDB CTE chain. `pts_sql`
-    must select integer columns hx, hy (plus any passthrough columns
-    named in `cols`, comma-prefixed e.g. ", doc_id"). Returns a WITH
-    body whose final SELECT yields (hilbert BIGINT{cols})."""
+    must select integer columns hx, hy. Returns a WITH body whose final
+    SELECT yields (hilbert BIGINT)."""
     n = 1 << bits
     parts = [
         f"h{bits} AS (SELECT CAST(hx AS BIGINT) AS hx, "
-        f"CAST(hy AS BIGINT) AS hy, CAST(0 AS BIGINT) AS hd{cols} "
+        "CAST(hy AS BIGINT) AS hy, CAST(0 AS BIGINT) AS hd "
         f"FROM ({pts_sql}))"
     ]
     for k in range(bits - 1, -1, -1):
@@ -193,11 +186,11 @@ def hilbert_sql_cte(pts_sql: str, bits: int, cols: str = "") -> str:
             f"ELSE hy END AS hx, "
             f"CASE WHEN {ry} = 1 THEN hy WHEN {rx} = 1 THEN {n - 1} - hx "
             f"ELSE hx END AS hy, "
-            f"hd + {quad} * CAST({s2} AS BIGINT) AS hd{cols} "
+            f"hd + {quad} * CAST({s2} AS BIGINT) AS hd "
             f"FROM h{k + 1})"
         )
     return (
-        "WITH " + ",\n".join(parts) + f"\nSELECT hd AS hilbert{cols} FROM h0"
+        "WITH " + ",\n".join(parts) + "\nSELECT hd AS hilbert FROM h0"
     )
 
 

@@ -247,13 +247,14 @@ def mgrs_tile_utm_square(tile_id: str) -> tuple[int, bool, float, float]:
     return zone, south, easting, northing
 
 
-def mgrs_tile_bounds(tile_id: str, n_pts_per_edge: int = 3) -> tuple[np.ndarray, np.ndarray]:
+def mgrs_tile_bounds(tile_id: str) -> tuple[np.ndarray, np.ndarray]:
     """Polygon (lon[], lat[]) of a precision-0 MGRS tile's 100 km square.
 
     Used to synthesize granule footprints matching real MGRS tile geometry
     (the reference gets footprints from STAC item geojson,
     stac_utils.py:139-145).
     """
+    n_pts_per_edge = 3
     zone, south, easting, northing = mgrs_tile_utm_square(tile_id)
 
     # boundary points (counter-clockwise), densified for curvature

@@ -18,13 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def arrow_group_profile(
-    pts: DataFrame,
-    key_col: str = "cell",
-    x_col: str = "x",
-    y_col: str = "y",
-    w_col: str = "w",
-) -> DataFrame:
+def arrow_group_profile(pts: DataFrame) -> DataFrame:
     """Per-group weighted centroid numerators + bbox, computed
     Arrow-native: (key, n, sum_w, sum_wx, sum_wy, min_x, max_y).
     All int64 — the division to an actual centroid happens downstream
@@ -34,14 +28,14 @@ def arrow_group_profile(
     import pyarrow.compute as pc
 
     def kernel(table: pa.Table) -> pa.Table:
-        x = table.column(x_col)
-        y = table.column(y_col)
-        w = table.column(w_col)
+        x = table.column("x")
+        y = table.column("y")
+        w = table.column("w")
         wx = pc.multiply(w, x)
         wy = pc.multiply(w, y)
         return pa.table(
             {
-                "k": [table.column(key_col)[0].as_py()],
+                "k": [table.column("cell")[0].as_py()],
                 "n": [table.num_rows],
                 "sum_w": [pc.sum(w).as_py()],
                 "sum_wx": [pc.sum(wx).as_py()],
@@ -51,7 +45,7 @@ def arrow_group_profile(
             }
         )
 
-    return pts.groupBy(key_col).applyInArrow(
+    return pts.groupBy("cell").applyInArrow(
         kernel,
         "k long, n long, sum_w long, sum_wx long, sum_wy long, "
         "min_x long, max_y long",

@@ -29,7 +29,6 @@ def asof_pick(
     candidates: DataFrame,
     granules: DataFrame,
     tolerance_days: int = 5,
-    tolerance_minutes: int = 0,
     obs_id: str = "obs_id",
     order: str = "cloud_cover",
     keep_unmatched: bool = True,
@@ -60,7 +59,7 @@ def asof_pick(
     obs × all-revisits intermediate never crosses an exchange. Set
     broadcast_granules=True when the granule side is the dim table.
     """
-    tol_min = tolerance_days * 24 * 60 + tolerance_minutes
+    tol_min = tolerance_days * 24 * 60
     g = F.broadcast(granules) if broadcast_granules else granules
     cand = steps.join(candidates, obs_id, "inner").join(g, join_key, "inner")
     # microsecond-exact tolerance (events may carry sub-second timestamps)
@@ -100,17 +99,14 @@ def asof_pick_keyed(
     steps: DataFrame,
     granules: DataFrame,
     tolerance_days: int = 5,
-    tolerance_minutes: int = 0,
-    obs_id: str = "obs_id",
-    key: str = "k",
 ) -> DataFrame:
-    """As-of pick where the candidate set is 'every granule sharing `key`'
-    — the J2 semantics of asof_pick(steps, obs ⋈ granules ON key, granules)
+    """As-of pick where the candidate set is 'every granule sharing key `k`'
+    — the J2 semantics of asof_pick(steps, obs ⋈ granules ON k, granules)
     WITHOUT materializing the quadratic (obs × granules-per-key) pair
     table (guide §2.3/§3: shuffle fewer bytes, never build an exploding
     join input the tolerance filter immediately discards).
 
-    steps(obs_id, key, step, query_date) × granules(key, granule_id, ts,
+    steps(obs_id, k, step, query_date) × granules(k, granule_id, ts,
     cloud_cover) → one row per (obs_id, step) with the picked granule
     (null when nothing within tolerance: a null-preserving join back to
     the steps, the reference's [None]*len(dates) shape).
@@ -142,13 +138,13 @@ def asof_pick_keyed(
     lo ≤ ts_us ≤ hi exactly, and each granule reaches a step's candidate
     set exactly once (full and edge bucket ranges are disjoint).
 
-    Scale notes: the rank window partitions by `key` (candidate-key
+    Scale notes: the rank window partitions by `k` (candidate-key
     granularity, the operator's contract); a pathologically hot key can
     be range-split with functions/text.ranged_prefix (range buckets +
     broadcast offsets). The
     summary join is an equi-join on (key, bucket) — AQE broadcasts the
     summary side when it is genuinely small."""
-    tol_us = (tolerance_days * 24 * 60 + tolerance_minutes) * 60 * 1_000_000
+    tol_us = tolerance_days * 24 * 60 * 60 * 1_000_000
     g_us = F.unix_micros(F.col("ts").cast("timestamp"))
     q_us = F.unix_micros(F.col("query_date").cast("timestamp"))
     w_us = max(1, tol_us // FINE_BUCKETS_PER_TOL)
@@ -159,12 +155,12 @@ def asof_pick_keyed(
     ).withColumn(
         "_r",
         F.row_number().over(
-            Window.partitionBy(key).orderBy(
+            Window.partitionBy("k").orderBy(
                 sort_key.asc(), F.col("ts").asc(), F.col("granule_id").asc()
             )
         ),
     )
-    summary = ranked.groupBy(key, "_fb").agg(F.min("_r").alias("_br"))
+    summary = ranked.groupBy("k", "_fb").agg(F.min("_r").alias("_br"))
 
     s = steps.withColumn("_lo", q_us - F.lit(tol_us)).withColumn(
         "_hi", q_us + F.lit(tol_us)
@@ -179,38 +175,38 @@ def asof_pick_keyed(
                 F.sequence(F.col("_fb_lo") + 1, F.col("_fb_hi") - 1),
             ).otherwise(F.array().cast("array<bigint>"))
         ),
-    ).join(summary, [key, "_fb"], "inner").select(
-        obs_id, "step", key, F.col("_br").alias("_cr")
+    ).join(summary, ["k", "_fb"], "inner").select(
+        "obs_id", "step", "k", F.col("_br").alias("_cr")
     )
     edge = s.withColumn(
         "_fb", F.explode(F.array_distinct(F.array("_fb_lo", "_fb_hi")))
     ).join(
-        ranked.select(key, "_fb", "_g_us", "_r"), [key, "_fb"], "inner"
+        ranked.select("k", "_fb", "_g_us", "_r"), ["k", "_fb"], "inner"
     ).filter(
         (F.col("_g_us") >= F.col("_lo")) & (F.col("_g_us") <= F.col("_hi"))
-    ).select(obs_id, "step", key, F.col("_r").alias("_cr"))
+    ).select("obs_id", "step", "k", F.col("_r").alias("_cr"))
 
     best = (
         full.unionByName(edge)
-        .groupBy(obs_id, "step", key)
+        .groupBy("obs_id", "step", "k")
         .agg(F.min("_cr").alias("_r"))
     )
     picked = best.join(
-        ranked.select(key, "_r", "granule_id", "ts", "cloud_cover"),
-        [key, "_r"],
+        ranked.select("k", "_r", "granule_id", "ts", "cloud_cover"),
+        ["k", "_r"],
         "inner",
     ).select(
-        obs_id, "step", F.col("granule_id").alias("picked_granule"),
+        "obs_id", "step", F.col("granule_id").alias("picked_granule"),
         "ts", "cloud_cover",
     )
-    return steps.drop(key).join(picked, [obs_id, "step"], "left")
+    return steps.drop("k").join(picked, ["obs_id", "step"], "left")
 
 
-def granule_sequence(picked: DataFrame, obs_id: str = "obs_id") -> DataFrame:
+def granule_sequence(picked: DataFrame) -> DataFrame:
     """Collapse per-step picks back to one row per observation with the
     step-ordered granule array + the `stac_items_str` grouping key
     (reference stac_utils.py:296-317: '_'.join of granule ids)."""
-    agg = picked.groupBy(obs_id).agg(
+    agg = picked.groupBy("obs_id").agg(
         F.array_sort(
             F.collect_list(F.struct(F.col("step"), F.col("picked_granule")))
         ).alias("_s")

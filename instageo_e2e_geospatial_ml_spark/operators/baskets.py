@@ -28,16 +28,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def frequent_triples(
-    baskets: DataFrame,
-    min_support: int,
-    basket_col: str = "oid",
-    item_col: str = "item",
-) -> DataFrame:
+def frequent_triples(baskets: DataFrame, min_support: int) -> DataFrame:
     """(basket, item) rows → frequent triples (a < b < c, support >=
     min_support): (a, b, c, support)."""
     b = baskets.select(
-        F.col(basket_col).alias("oid"), F.col(item_col).alias("item")
+        F.col("oid"), F.col("item")
     ).distinct()
     f1 = (
         b.groupBy("item")

@@ -26,16 +26,14 @@ from pyspark.sql import functions as F
 BITS = 63
 
 
-def bitmap_words(
-    members: DataFrame, set_col: str = "s", id_col: str = "id"
-) -> DataFrame:
+def bitmap_words(members: DataFrame) -> DataFrame:
     """(set, id) membership rows -> (s, word_idx, word) packed bitmap."""
     return (
         members.select(
-            F.col(set_col).alias("s"),
-            F.expr(f"{id_col} div {BITS}").alias("word_idx"),
+            F.col("s"),
+            F.expr(f"id div {BITS}").alias("word_idx"),
             F.expr(
-                f"shiftleft(CAST(1 AS BIGINT), CAST({id_col} % {BITS} AS INT))"
+                f"shiftleft(CAST(1 AS BIGINT), CAST(id % {BITS} AS INT))"
             ).alias("bit"),
         )
         .groupBy("s", "word_idx")

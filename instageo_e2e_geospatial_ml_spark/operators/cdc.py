@@ -21,26 +21,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def scd2_history(
-    changes: DataFrame,
-    tiebreak_col: str,
-    key_col: str = "key",
-    ts_col: str = "ts",
-    op_col: str = "op",
-    delete_op: str = "delete",
-) -> DataFrame:
-    """changes (+op column: delete_op or any upsert marker) → SCD2 rows:
+def scd2_history(changes: DataFrame, tiebreak_col: str) -> DataFrame:
+    """changes (+op column: 'delete' or any upsert marker) → SCD2 rows:
     input columns + valid_from_us / valid_to_us (NULL = open) +
     is_current. Delete rows close intervals but are not emitted; rows
     order by (ts, tiebreak_col)."""
-    w = Window.partitionBy(key_col).orderBy(
-        F.col(ts_col).asc(), F.col(tiebreak_col).asc()
-    )
-    tus = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    w = Window.partitionBy("key").orderBy(F.col("ts").asc(), F.col(tiebreak_col).asc())
+    tus = F.unix_micros(F.col("ts").cast("timestamp"))
     return (
         changes.withColumn("_tus", tus)
         .withColumn("_next_us", F.lead("_tus").over(w))
-        .filter(F.col(op_col) != delete_op)
+        .filter(F.col("op") != "delete")
         .select(
             "*",
             F.col("_tus").alias("valid_from_us"),
@@ -51,15 +42,7 @@ def scd2_history(
     )
 
 
-def merge_upsert(
-    target: DataFrame,
-    changes: DataFrame,
-    tiebreak_col: str,
-    key_col: str = "key",
-    ts_col: str = "ts",
-    op_col: str = "op",
-    delete_op: str = "delete",
-) -> DataFrame:
+def merge_upsert(target: DataFrame, changes: DataFrame, tiebreak_col: str) -> DataFrame:
     """MERGE INTO apply — one change batch folded into a target table
     (Delta/Iceberg MERGE semantics with whole-row upserts):
 
@@ -82,19 +65,17 @@ def merge_upsert(
     so the big side is one broadcast-hash anti join probed in place —
     zero shuffle of the target — and only the deduped batch moves.
     """
-    w = Window.partitionBy(key_col).orderBy(
-        F.col(ts_col).desc(), F.col(tiebreak_col).desc()
+    w = Window.partitionBy("key").orderBy(
+        F.col("ts").desc(), F.col(tiebreak_col).desc()
     )
     latest = (
         changes.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    touched = latest.select(key_col)
-    untouched = target.join(F.broadcast(touched), key_col, "left_anti")
-    upserts = latest.filter(F.col(op_col) != delete_op).select(
-        *target.columns
-    )
+    touched = latest.select("key")
+    untouched = target.join(F.broadcast(touched), "key", "left_anti")
+    upserts = latest.filter(F.col("op") != "delete").select(*target.columns)
     return untouched.unionByName(upserts)
 
 
@@ -193,10 +174,6 @@ def temporal_dim_join(
     facts: DataFrame,
     dim_history: DataFrame,
     key_col: str,
-    fact_ts_us_col: str = "ts_us",
-    valid_from_col: str = "valid_from_us",
-    valid_to_col: str = "valid_to_us",
-    how: str = "left",
 ) -> DataFrame:
     """Join each fact row to the dimension VERSION that was valid at
     the fact's event time — the point-in-time ("AS OF") dimension join
@@ -216,27 +193,18 @@ def temporal_dim_join(
 
     Facts with no valid version at their timestamp (before the key's
     first change, or a deleted gap) keep NULL dim columns under
-    how='left' — the honest answer, not the latest version.
+    a left join — the honest answer, not the latest version.
     """
-    t = F.col(fact_ts_us_col).cast("long")
+    t = F.col("ts_us").cast("long")
     cond = (
         (facts[key_col] == dim_history[key_col])
-        & (t >= F.col(valid_from_col))
-        & (F.col(valid_to_col).isNull() | (t < F.col(valid_to_col)))
+        & (t >= F.col("valid_from_us"))
+        & (F.col("valid_to_us").isNull() | (t < F.col("valid_to_us")))
     )
-    return facts.join(dim_history, cond, how).drop(dim_history[key_col])
+    return facts.join(dim_history, cond, "left").drop(dim_history[key_col])
 
 
-def bitemporal_snapshot(
-    corrections: DataFrame,
-    tx_as_of_us: int,
-    key_col: str = "key",
-    valid_from_col: str = "valid_from_us",
-    tx_col: str = "tx_us",
-    tx_tiebreak_col: str = "tx_id",
-    op_col: str = "op",
-    retract_op: str = "retract",
-) -> DataFrame:
+def bitemporal_snapshot(corrections: DataFrame, tx_as_of_us: int) -> DataFrame:
     """Bitemporal dimension reconstruction: given a CORRECTION LOG —
     rows (key, valid_from_us, value..., tx_us, op) where each
     transaction restates what is believed about the valid period
@@ -264,21 +232,21 @@ def bitemporal_snapshot(
     """
     from pyspark.sql import Window
 
-    c = corrections.filter(F.col(tx_col).cast("long") <= tx_as_of_us)
-    wb = Window.partitionBy(key_col, valid_from_col).orderBy(
-        F.col(tx_col).cast("long").desc(), F.col(tx_tiebreak_col).desc()
+    c = corrections.filter(F.col("tx_us").cast("long") <= tx_as_of_us)
+    wb = Window.partitionBy("key", "valid_from_us").orderBy(
+        F.col("tx_us").cast("long").desc(), F.col("tx_id").desc()
     )
     latest = (
         c.withColumn("_rn", F.row_number().over(wb))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    alive = latest.filter(F.col(op_col) != retract_op)
-    wv = Window.partitionBy(key_col).orderBy(F.col(valid_from_col).asc())
+    alive = latest.filter(F.col("op") != "retract")
+    wv = Window.partitionBy("key").orderBy(F.col("valid_from_us").asc())
     return (
-        alive.withColumn("valid_to_us", F.lead(valid_from_col).over(wv))
+        alive.withColumn("valid_to_us", F.lead("valid_from_us").over(wv))
         .withColumn("is_current", F.col("valid_to_us").isNull())
-        .drop(op_col)
+        .drop("op")
     )
 
 

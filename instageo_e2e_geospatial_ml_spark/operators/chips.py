@@ -368,7 +368,7 @@ def extract_chips(
         img = (
             images.withColumn("granule_id", F.split("image_id", ":").getItem(0))
             .withColumn("band", F.split("image_id", ":").getItem(1))
-            .filter(F.col("band").isin(list(wanted_bands)))
+            .filter(F.col("band").isin(sorted(wanted_bands)))
             .select("image_id", "bytes", "w", "h", "fmt", "granule_id")
         )
         tasks = img.join(wants, "granule_id")

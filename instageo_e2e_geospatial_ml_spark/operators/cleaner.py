@@ -60,9 +60,7 @@ def dilate_labels(seg: np.ndarray, window: int) -> np.ndarray:
 
 def clean_chip_table(
     chips: DataFrame,
-    no_data_value: float = 0,
     max_nodata_ratio: float | None = 0.5,
-    nodata_strategy: str = "any",
     buffer_window: int = 0,
 ) -> DataFrame:
     """R12 (+ optional R13) over the chip table; returns the table with a
@@ -84,14 +82,14 @@ def clean_chip_table(
             keep_rows = []
             for _, r in pdf.iterrows():
                 chip = _decode_chip(r)
-                ratio = nodata_ratio(chip, no_data_value, nodata_strategy)
+                ratio = nodata_ratio(chip, 0, "any")
                 if max_nodata_ratio is not None and ratio > max_nodata_ratio:
                     continue
                 row = dict(r)
                 if buffer_window > 0:
                     seg = dilate_labels(_decode_seg(r), buffer_window)
                     # re-invalidate where the chip has no data in all bands
-                    all_nd = (chip == no_data_value).all(axis=0)
+                    all_nd = (chip == 0).all(axis=0)
                     seg = np.where(all_nd, SEG_NDV, seg)
                     row["seg"] = seg.astype("<i2").tobytes()
                     row["n_label_px"] = int((seg != SEG_NDV).sum())
@@ -106,7 +104,6 @@ def mask_label_with_chip(
     chip: np.ndarray,
     seg: np.ndarray,
     bands_per_step: int = 6,
-    chip_ndv: int = 0,
 ) -> tuple[np.ndarray, bool]:
     """R15 consumer-side QA (reference model/dataloader.py:753-781):
     take the FIRST band of each timestep (stride bands_per_step), a pixel
@@ -114,16 +111,14 @@ def mask_label_with_chip(
     NaN; returns (masked float label array, all_nan flag)."""
     num_steps = max(1, chip.shape[0] // bands_per_step)
     stacked = chip[[bands_per_step * i for i in range(num_steps)]]
-    valid = (stacked != chip_ndv).all(axis=0)
+    valid = (stacked != 0).all(axis=0)
     label = seg.astype(np.float64)
     label[seg == SEG_NDV] = np.nan
     label[~valid] = np.nan
     return label, bool(np.all(np.isnan(label)))
 
 
-def consumer_qa_filter(
-    chips: DataFrame, bands_per_step: int = 6, chip_ndv: int = 0
-) -> DataFrame:
+def consumer_qa_filter(chips: DataFrame, bands_per_step: int = 6) -> DataFrame:
     """Drop chip rows whose R15-masked label is all-NaN (one Arrow pass)."""
 
     def qa(it):
@@ -132,7 +127,7 @@ def consumer_qa_filter(
             for i, r in pdf.iterrows():
                 chip = _decode_chip(r)
                 seg = _decode_seg(r)
-                _m, all_nan = mask_label_with_chip(chip, seg, bands_per_step, chip_ndv)
+                _m, all_nan = mask_label_with_chip(chip, seg, bands_per_step)
                 if not all_nan:
                     keep.append(i)
             yield pdf.loc[keep]

@@ -128,18 +128,12 @@ def check_constraints_sql(table_sql: str, constraints: list[tuple]) -> str:
     )
 
 
-def embedding_audit(
-    vectors: DataFrame,
-    expected_dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 100,
-) -> DataFrame:
+def embedding_audit(vectors: DataFrame, expected_dim: int) -> DataFrame:
     """Vector-column quality audit — the gate an ANN/retrieval
     pipeline runs before indexing (a handful of zero vectors or NaNs
     silently poison IVF training and cosine ranking): per vector, the
     dimension, NaN/zero-element counts, and the quantized squared
-    norm Σ round(x·scale)² — an exact integer, so degeneracy
+    norm Σ round(x·100)² — an exact integer, so degeneracy
     (norm2_q = 0: the all-~zero vector cosine cannot rank) and dim
     drift (dim_ok) are integer predicates, not float-epsilon ones.
 
@@ -148,27 +142,25 @@ def embedding_audit(
     speed. The quantization matches the engine's ANN family (q17/q25
     x100 rule), so 'degenerate here' == 'invisible to the ANN ops'.
     """
-    v = F.col(vec_col)
+    v = F.col("embedding")
     # NaN guard FIRST: round(NaN)::bigint throws under ANSI; a NaN
     # element contributes 0 to the norm and is counted in n_nan
     # (degenerate flags the vector regardless)
     q = (
         "case when isnan(cast(x as double)) then cast(0 as bigint) "
-        "else cast(round(cast(x as double) * {s}, 0) as bigint) end"
-    ).format(s=scale)
+        "else cast(round(cast(x as double) * 100, 0) as bigint) end"
+    )
     norm2 = F.expr(
-        f"aggregate(transform({vec_col}, x -> {q} * {q}), "
+        f"aggregate(transform(embedding, x -> {q} * {q}), "
         f"cast(0 as bigint), (a, b) -> a + b)"
     )
-    n_nan = F.expr(
-        f"size(filter({vec_col}, x -> isnan(cast(x as double))))"
-    )
+    n_nan = F.expr("size(filter(embedding, x -> isnan(cast(x as double))))")
     n_zero = F.expr(
-        f"size(filter({vec_col}, "
+        "size(filter(embedding, "
         f"x -> NOT isnan(cast(x as double)) AND {q} = 0))"
     )
     out = vectors.select(
-        F.col(id_col).alias("vec_id"),
+        F.col("vec_id"),
         F.size(v).cast("long").alias("dim"),
         n_nan.cast("long").alias("n_nan"),
         n_zero.cast("long").alias("n_zero"),
@@ -180,13 +172,11 @@ def embedding_audit(
     return out.withColumn("dim_ok", (F.col("dim") == expected_dim).cast("int"))
 
 
-def embedding_audit_sql(
-    vectors_sql: str, expected_dim: int, scale: int = 100
-) -> str:
+def embedding_audit_sql(vectors_sql: str, expected_dim: int) -> str:
     """DuckDB twin of embedding_audit over (vec_id, embedding)."""
     q = (
         f"CASE WHEN isnan(CAST(x AS DOUBLE)) THEN CAST(0 AS BIGINT) "
-        f"ELSE CAST(round(CAST(x AS DOUBLE) * {scale}, 0) AS BIGINT) END"
+        "ELSE CAST(round(CAST(x AS DOUBLE) * 100, 0) AS BIGINT) END"
     )
     return f"""
 WITH v AS ({vectors_sql}),
@@ -319,7 +309,6 @@ def k_anonymity_audit_sql(
     rows_sql: str,
     quasi_cols: list[str],
     sensitive_col: str,
-    k: int = 5,
 ) -> str:
     """DuckDB twin of k_anonymity_audit."""
     qi = ", ".join(quasi_cols)
@@ -331,14 +320,14 @@ WITH cls AS (
 ),
 b AS (
   SELECT CASE WHEN sz = 1 THEN '1'
-              WHEN sz < {k} THEN '2..{k - 1}'
-              ELSE '>={k}' END AS bucket,
+              WHEN sz < 5 THEN '2..4'
+              ELSE '>=5' END AS bucket,
          sz, l_div
   FROM cls
 )
 SELECT bucket, CAST(count(*) AS BIGINT) AS n_classes,
        CAST(sum(sz) AS BIGINT) AS n_rows,
-       CAST(sum(CASE WHEN sz < {k} THEN sz ELSE 0 END) AS BIGINT)
+       CAST(sum(CASE WHEN sz < 5 THEN sz ELSE 0 END) AS BIGINT)
          AS n_rows_violating,
        CAST(min(l_div) AS BIGINT) AS min_l
 FROM b GROUP BY bucket

@@ -26,40 +26,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def greedy_coverage(
-    docs: DataFrame,
-    k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle: int = 1,
-) -> DataFrame:
+def greedy_coverage(docs: DataFrame, k: int, shingle: int = 1) -> DataFrame:
     """Select k documents greedily maximizing distinct-token coverage
     (shingle=2 covers word BIGRAMS — a larger, more discriminative
     universe). Returns (round, doc_id, gain, covered_after) — one row
     per selection round, 1-based; rounds stop when nothing new can be
     covered."""
     spark = docs.sparkSession
-    t = F.split(F.trim(F.col(text_col)), r"\s+")
+    t = F.split(F.trim(F.col("text")), r"\s+")
     if shingle == 1:
         units = t
     elif shingle == 2:
         # sequence(1, 0) in Spark is the DESCENDING [1, 0], not empty —
         # guard docs with < 2 tokens to an empty array explicitly
         units = F.expr(
-            f"CASE WHEN size(split(trim({text_col}), '\\\\s+')) >= 2 THEN "
-            f"transform(sequence(1, size(split(trim({text_col}), "
+            "CASE WHEN size(split(trim(text), '\\\\s+')) >= 2 THEN "
+            "transform(sequence(1, size(split(trim(text), "
             f"'\\\\s+')) - 1), "
-            f"j -> concat(element_at(split(trim({text_col}), '\\\\s+'), j), "
-            f"' ', element_at(split(trim({text_col}), '\\\\s+'), j + 1))) "
+            "j -> concat(element_at(split(trim(text), '\\\\s+'), j), "
+            "' ', element_at(split(trim(text), '\\\\s+'), j + 1))) "
             f"ELSE array() END"
         )
     else:
         raise ValueError("shingle must be 1 or 2")
     toks = (
-        docs.select(
-            F.col(id_col),
-            F.explode(F.array_distinct(units)).alias("tok"),
-        )
+        docs.select(F.col("doc_id"), F.explode(F.array_distinct(units)).alias("tok"))
         .filter(~F.col("tok").rlike("^\\s*$"))
         .persist()
     )
@@ -70,16 +61,16 @@ def greedy_coverage(
         cand = toks
         if covered is not None:
             cand = cand.join(F.broadcast(covered), "tok", "left_anti")
-        scored = cand.groupBy(id_col).agg(F.count(F.lit(1)).alias("gain"))
+        scored = cand.groupBy("doc_id").agg(F.count(F.lit(1)).alias("gain"))
         best = scored.orderBy(
-            F.col("gain").desc(), F.col(id_col).asc()
+            F.col("gain").desc(), F.col("doc_id").asc()
         ).limit(1).collect()
         if not best:
             break
         bid, gain = best[0][0], best[0][1]
         n_covered += gain
         out_rows.append((r, int(bid), int(gain), n_covered))
-        win_toks = toks.filter(F.col(id_col) == bid).select("tok")
+        win_toks = toks.filter(F.col("doc_id") == bid).select("tok")
         covered = (
             win_toks
             if covered is None
@@ -92,15 +83,9 @@ def greedy_coverage(
     )
 
 
-def greedy_coverage_sql(
-    table_sql: str,
-    k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle: int = 1,
-) -> str:
+def greedy_coverage_sql(table_sql: str, k: int, shingle: int = 1) -> str:
     """The identical greedy rounds unrolled as DuckDB CTEs."""
-    i = id_col
+    i = "doc_id"
     if shingle == 1:
         unit = "t[p] AS tok"
         rng = "generate_series(1, len(t))"
@@ -112,7 +97,7 @@ def greedy_coverage_sql(
   SELECT DISTINCT {i}, tok FROM (
     SELECT {i}, {unit} FROM (
       SELECT {i}, t, unnest({rng}) AS p FROM (
-        SELECT {i}, string_split_regex(trim({text_col}), '\\s+') AS t
+        SELECT {i}, string_split_regex(trim(text), '\\s+') AS t
         FROM ({table_sql})
       )
     )

@@ -21,13 +21,11 @@ from pyspark.sql import functions as F
 
 def normalize_dates(
     obs: DataFrame,
-    date_col: str = "date",
     time_col: str | None = None,
     shift_to_month_start: bool = False,
-    temporal_step: int = 0,
 ) -> DataFrame:
-    """P5: date/time combine + MonthBegin shift + input_features_date."""
-    d = F.to_timestamp(F.col(date_col))
+    """P5: date/time combine + MonthBegin shift."""
+    d = F.to_timestamp(F.col("date"))
     if time_col is not None and time_col in obs.columns:
         t = F.col(time_col)
         if dict(obs.dtypes).get(time_col) in ("timestamp", "timestamp_ntz"):
@@ -39,19 +37,11 @@ def normalize_dates(
         # month start (reference chip_creator.py:289-293, bug-for-bug)
         trunc = F.date_trunc("month", d)
         d = F.when(F.dayofmonth(d) == 1, F.add_months(trunc, -1)).otherwise(trunc)
-    out = obs.withColumn(date_col, d)
-    if temporal_step > 0:
-        # time-series models predict from data temporal_step days back
-        # (chip_creator.py:294-298)
-        out = out.withColumn(
-            "input_features_date", F.col(date_col) - F.expr(f"INTERVAL {temporal_step} DAYS")
-        )
-    return out
+    return obs.withColumn("date", d)
 
 
 def expand_temporal_steps(
     obs: DataFrame,
-    date_col: str = "date",
     num_steps: int = 3,
     temporal_step: int = 5,
 ) -> DataFrame:
@@ -61,7 +51,7 @@ def expand_temporal_steps(
     """
     steps = F.transform(
         F.sequence(F.lit(0), F.lit(num_steps - 1)),
-        lambda i: F.timestamp_add("DAY", (i * -temporal_step).cast("int"), F.col(date_col)),
+        lambda i: F.timestamp_add("DAY", (i * -temporal_step).cast("int"), F.col("date")),
     )
     return (
         obs.withColumn("query_dates", steps)
@@ -70,20 +60,14 @@ def expand_temporal_steps(
     )
 
 
-def widen_tolerance(
-    df: DataFrame,
-    min_col: str = "min_date",
-    max_col: str = "max_date",
-    tolerance_days: int = 5,
-    tolerance_minutes: int = 0,
-) -> DataFrame:
+def widen_tolerance(df: DataFrame) -> DataFrame:
     """W2: min_date − tol, max_date + tol; max pushed to 23:59:59, as for
     observations with no time-of-day (reference data_pipeline.py:319-326)."""
-    total_min = tolerance_days * 24 * 60 + tolerance_minutes
-    lo = F.timestamp_add("MINUTE", F.lit(-total_min), F.col(min_col))
-    hi = F.timestamp_add("MINUTE", F.lit(total_min), F.col(max_col))
+    total_min = 5 * 24 * 60
+    lo = F.timestamp_add("MINUTE", F.lit(-total_min), F.col("min_date"))
+    hi = F.timestamp_add("MINUTE", F.lit(total_min), F.col("max_date"))
     hi = F.timestamp_add("SECOND", F.lit(24 * 3600 - 1), F.date_trunc("day", hi))
-    return df.withColumn(min_col, lo).withColumn(max_col, hi)
+    return df.withColumn("min_date", lo).withColumn("max_date", hi)
 
 
 def fmt_iso(col: Column | str) -> Column:

@@ -11,8 +11,8 @@ materialized once with lazy localCheckpoints.
 Scale notes: exact dedup is one hash-shuffle on the digest; MinHash-LSH is
 (explode shingles → 2 hash-aggregations → band self-join). The band
 self-join is the classic skew point — a degenerate band key (e.g. empty
-docs) explodes quadratically, so callers should cap bucket sizes with
-`max_bucket` (drops pathological buckets, standard LSH practice).
+docs) explodes quadratically, so lsh_candidate_pairs caps bucket sizes at
+1000 docs (drops pathological buckets, standard LSH practice).
 """
 
 from __future__ import annotations
@@ -25,19 +25,17 @@ from pyspark.sql import functions as F
 from ..functions.text import fingerprint, spread_input, tokens
 
 
-def exact_dedup(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup: one row per distinct text (md5 of the raw
     text) with the keeper (min id) and the duplicate count."""
     return (
-        docs.withColumn("text_hash", F.md5(F.col(text_col)))
+        docs.withColumn("text_hash", F.md5(F.col("text")))
         .groupBy("text_hash")
-        .agg(F.min(id_col).alias("keeper_id"), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min("doc_id").alias("keeper_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
-def keep_min_per_key(df: DataFrame, key_col: str, id_col: str = "doc_id") -> DataFrame:
+def keep_min_per_key(df: DataFrame, key_col: str) -> DataFrame:
     """Keep exactly the row with the minimum id per key value — the shared
     keeper rule for every dedup stage.
 
@@ -47,14 +45,14 @@ def keep_min_per_key(df: DataFrame, key_col: str, id_col: str = "doc_id") -> Dat
     the semi-join back carries no payload columns from the keeper side and
     AQE broadcasts it when the keeper set is small.
     """
-    keepers = df.groupBy(key_col).agg(F.min(id_col).alias(id_col))
-    return df.join(keepers, [key_col, id_col], "left_semi")
+    keepers = df.groupBy(key_col).agg(F.min("doc_id").alias("doc_id"))
+    return df.join(keepers, [key_col, "doc_id"], "left_semi")
 
 
-def shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
+def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """Word n-gram shingles, exploded to (doc, shingle) rows."""
     docs = spread_input(docs)
-    t = tokens(text_col)
+    t = tokens("text")
     parts = [F.element_at(F.col("_toks"), F.col("_i") + i) for i in range(n)]
     return (
         docs.withColumn("_toks", t)
@@ -65,10 +63,8 @@ def shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    sh: DataFrame, id_col: str = "doc_id", num_hashes: int = 8
-) -> DataFrame:
-    """(doc, sig: array<bigint> of length num_hashes): j-th hash = the
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """(doc, sig: array<bigint> of length 8): j-th hash = the
     first 60 bits of md5('<j>:'||shingle) as a BIGINT, elementwise min
     over the doc's shingles.
 
@@ -78,9 +74,9 @@ def minhash_signatures(
     compresses its partition to one row per doc without sorting the
     shingle stream.
 
-    All num_hashes hashes are computed as columns of the SAME shingle row
+    All 8 hashes are computed as columns of the SAME shingle row
     and min-aggregated in ONE doc-keyed aggregation — no j-explode, so the
-    pre-aggregation volume is 1× the shingle stream (not num_hashes×).
+    pre-aggregation volume is 1× the shingle stream (not 8×).
     """
     mins = [
         F.min(
@@ -90,31 +86,25 @@ def minhash_signatures(
                 10,
             ).cast("long")
         ).alias(f"_mh{j}")
-        for j in range(num_hashes)
+        for j in range(8)
     ]
     return (
-        sh.groupBy(id_col)
+        sh.groupBy("doc_id")
         .agg(*mins)
         .select(
-            id_col,
-            F.array(*[f"_mh{j}" for j in range(num_hashes)]).alias("sig"),
+            "doc_id",
+            F.array(*[f"_mh{j}" for j in range(8)]).alias("sig"),
         )
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    rows_per_band: int = 2,
-    max_bucket: int = 1000,
-    num_hashes: int = 8,
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     """Band the signature array, self-join on (band_id, band_key) →
     candidate near-duplicate pairs (doc_a < doc_b), deduplicated.
 
-    Band b's key is the '|'-join of sig[b*rows_per_band : (b+1)*rows_per_band]
+    Band b's key is the '|'-join of sig[2b : 2b+2] (2 rows per band)
     (the same j-ordered key the long-format band groupBy produced, without
-    the per-(doc, band) aggregation). max_bucket guards the quadratic
+    the per-(doc, band) aggregation). A 1000-doc bucket cap guards the quadratic
     blowup of degenerate buckets (skew).
 
     The band table is consumed four times (bucket-size count, skew
@@ -122,7 +112,8 @@ def lsh_candidate_pairs(
     across these subtrees, so it is materialized once with a lazy
     localCheckpoint — otherwise the whole shingle→minhash pipeline
     re-executes 4× (and the source scan 8×)."""
-    n_bands = -(-num_hashes // rows_per_band)  # ceil: last band may be partial
+    rows_per_band = 2
+    n_bands = -(-8 // rows_per_band)  # ceil: last band may be partial
     band_structs = F.array(
         *[
             F.struct(
@@ -133,7 +124,7 @@ def lsh_candidate_pairs(
                         F.col("sig")[j]
                         for j in range(
                             b * rows_per_band,
-                            min((b + 1) * rows_per_band, num_hashes),
+                            min((b + 1) * rows_per_band, 8),
                         )
                     ],
                 ).alias("band_key"),
@@ -141,19 +132,17 @@ def lsh_candidate_pairs(
             for b in range(n_bands)
         ]
     )
-    bands = signatures.select(id_col, F.inline(band_structs)).localCheckpoint(
+    bands = signatures.select("doc_id", F.inline(band_structs)).localCheckpoint(
         eager=False
     )
     sizes = bands.groupBy("band_id", "band_key").agg(F.count(F.lit(1)).alias("_bn"))
     bands = bands.join(
-        F.broadcast(sizes.filter(F.col("_bn") > max_bucket)),
+        F.broadcast(sizes.filter(F.col("_bn") > 1000)),
         ["band_id", "band_key"],
         "left_anti",
     )
-    a = bands.select(
-        F.col(id_col).alias("doc_a"), "band_id", "band_key"
-    )
-    b = bands.select(F.col(id_col).alias("doc_b"), "band_id", "band_key")
+    a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
+    b = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
     return (
         a.join(b, ["band_id", "band_key"])
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -162,39 +151,30 @@ def lsh_candidate_pairs(
     )
 
 
-def minhash_lsh_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-) -> DataFrame:
+def minhash_lsh_dedup(docs: DataFrame) -> DataFrame:
     """Full MinHash+LSH near-dup candidate pipeline → (doc_a, doc_b)."""
-    sh = shingles(docs.select(id_col, text_col), text_col, shingle_n)
-    sig = minhash_signatures(sh, id_col, num_hashes)
-    return lsh_candidate_pairs(sig, id_col, rows_per_band, num_hashes=num_hashes)
+    sh = shingles(docs.select("doc_id", "text"), 3)
+    sig = minhash_signatures(sh)
+    return lsh_candidate_pairs(sig)
 
 
-def simhash(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16
-) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """SimHash over whitespace tokens: per-bit ±1 votes from a 16-bit md5
     prefix per token → (doc_id, simhash)."""
     tok = (
-        spread_input(docs).select(id_col, F.explode(tokens(text_col)).alias("tok"))
+        spread_input(docs).select("doc_id", F.explode(tokens("text")).alias("tok"))
         .withColumn("th", F.conv(F.substring(F.md5("tok"), 1, 4), 16, 10).cast("long"))
     )
     votes = (
-        tok.withColumn("b", F.explode(F.sequence(F.lit(0), F.lit(bits - 1))))
+        tok.withColumn("b", F.explode(F.sequence(F.lit(0), F.lit(15))))
         .withColumn(
             "vote",
             F.when(F.expr("shiftright(th, b) & 1") == 1, 1).otherwise(-1),
         )
-        .groupBy(id_col, "b")
+        .groupBy("doc_id", "b")
         .agg(F.sum("vote").alias("s"))
     )
-    return votes.groupBy(id_col).agg(
+    return votes.groupBy("doc_id").agg(
         F.sum(
             F.when(F.col("s") > 0, F.expr("shiftleft(CAST(1 AS BIGINT), b)")).otherwise(0)
         ).alias("simhash")
@@ -204,8 +184,6 @@ def simhash(
 def embedding_neardup_pairs(
     vecs: DataFrame,
     threshold: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_exact_rows: int = 200_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (vec_a < vec_b, cos ≥ t).
@@ -230,7 +208,7 @@ def embedding_neardup_pairs(
 
     # guard, then broadcast the quantized matrix once
     # (sc.broadcast — NOT closure capture, which re-serializes per task)
-    rows = vecs.select(id_col, vec_col).limit(max_exact_rows + 1).collect()
+    rows = vecs.select("vec_id", "embedding").limit(max_exact_rows + 1).collect()
     if len(rows) > max_exact_rows:
         raise ValueError(
             f"embedding_neardup_pairs capped at {max_exact_rows} rows; "
@@ -249,8 +227,8 @@ def embedding_neardup_pairs(
     def score(it):
         b_ids, b_qm, b_norms = bc.value
         for pdf in it:
-            pids = pdf[id_col].to_numpy(np.int64)
-            pm = _q(np.stack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64))))
+            pids = pdf["vec_id"].to_numpy(np.int64)
+            pm = _q(np.stack(pdf["embedding"].map(lambda v: np.asarray(v, dtype=np.float64))))
             pn = (pm * pm).sum(axis=1)
             dots = pm @ b_qm.T  # (n, N) exact int64
             out_a, out_b, out_d = [], [], []
@@ -263,21 +241,12 @@ def embedding_neardup_pairs(
                 out_d.extend(dots[i][sel])
             yield pd.DataFrame({"vec_a": out_a, "vec_b": out_b, "dot": out_d})
 
-    return vecs.select(id_col, vec_col).mapInPandas(
+    return vecs.select("vec_id", "embedding").mapInPandas(
         score, "vec_a long, vec_b long, dot long"
     )
 
 
-def clean_corpus(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_quality: float = 0.5,
-    lang: str = "en",
-    shingle_n: int = 3,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-) -> DataFrame:
+def clean_corpus(docs: DataFrame, min_quality: float = 0.5) -> DataFrame:
     """The standard corpus-cleaning pipeline as ONE operator: cheap quality
     + language gates → exact dedup (keep min id per normalized text) →
     MinHash-LSH near-dup clustering (keep the min id of each connected
@@ -292,42 +261,33 @@ def clean_corpus(
     from ..functions.text import predict_lang, quality_score
 
     gated = (
-        docs.withColumn("quality", quality_score(text_col))
+        docs.withColumn("quality", quality_score("text"))
         .filter(F.col("quality") >= F.lit(min_quality))
-        .filter(predict_lang(text_col) == F.lit(lang))
+        .filter(predict_lang("text") == F.lit("en"))
     )
 
     # exact: keep min id per normalized fingerprint
-    keyed = gated.withColumn("_fh", fingerprint(text_col))
-    exact_kept = keep_min_per_key(keyed, "_fh", id_col).drop("_fh")
+    keyed = gated.withColumn("_fh", fingerprint("text"))
+    exact_kept = keep_min_per_key(keyed, "_fh").drop("_fh")
 
     # near-dup: cluster candidates, drop every non-minimal member
-    pairs = minhash_lsh_dedup(
-        exact_kept.select(id_col, text_col), text_col, id_col,
-        shingle_n, num_hashes, rows_per_band,
-    )
+    pairs = minhash_lsh_dedup(exact_kept.select("doc_id", "text"))
     clusters = dedup_clusters(pairs, max_iters=20)
     losers = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
+        F.col("doc_id")
     )
-    return exact_kept.join(F.broadcast(losers), id_col, "left_anti").select(
-        id_col, "quality"
+    return exact_kept.join(F.broadcast(losers), "doc_id", "left_anti").select(
+        "doc_id", "quality"
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    window: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (the MOSS scheme): hash every
-    word k-gram, then in every sliding window of `window` consecutive
+    word k-gram, then in every sliding window of 4 consecutive
     hashes select the minimum (ties → rightmost), and keep the distinct
     selected (hash, position) pairs per document.
 
-    Guarantees: any shared run of ≥ window+k−1 tokens between two docs
+    Guarantees: any shared run of ≥ 4+k−1 tokens between two docs
     shares ≥ 1 fingerprint — the standard sublinear-size digest for
     near-dup / plagiarism detection at corpus scale.
 
@@ -339,34 +299,34 @@ def winnow_fingerprints(
     """
     pos = F.col("_i")  # 1-based shingle position from shingles() explode
     sh = (
-        shingles_with_pos(docs.select(id_col, text_col), text_col, shingle_n)
+        shingles_with_pos(docs.select("doc_id", "text"), 3)
         .withColumn(
             "h", F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10).cast("long")
         )
         .withColumn("key", F.col("h") * F.lit(1 << 20) + (F.lit((1 << 20) - 1) - pos))
     )
     w = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy(pos.asc())
-        .rowsBetween(-(window - 1), 0)
+        .rowsBetween(-3, 0)
     )
     sel = (
         sh.withColumn("sel_key", F.min("key").over(w))
-        .filter(pos >= window)  # full windows only
-        .select(id_col, "sel_key")
+        .filter(pos >= 4)  # full windows only
+        .select("doc_id", "sel_key")
         .distinct()
     )
     return sel.select(
-        id_col,
+        "doc_id",
         F.floor(F.col("sel_key") / F.lit(1 << 20)).cast("long").alias("fp_hash"),
         (F.lit((1 << 20) - 1) - F.col("sel_key") % F.lit(1 << 20)).cast("long").alias("fp_pos"),
     )
 
 
-def shingles_with_pos(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
+def shingles_with_pos(docs: DataFrame, n: int = 3) -> DataFrame:
     """Word n-gram shingles keeping the 1-based start position `_i`."""
     docs = spread_input(docs)
-    t = tokens(text_col)
+    t = tokens("text")
     parts = [F.element_at(F.col("_toks"), F.col("_i") + i) for i in range(n)]
     return (
         docs.withColumn("_toks", t)
@@ -377,12 +337,7 @@ def shingles_with_pos(docs: DataFrame, text_col: str = "text", n: int = 3) -> Da
     )
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iters: int = 50,
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     """Connected components over near-duplicate PAIRS → (doc_id, cluster_id)
     with cluster_id = min member id (the canonical keeper).
 
@@ -400,9 +355,7 @@ def dedup_clusters(
     the rest).
     """
     # undirected edge list + self-loops so singleton propagation works
-    e = pairs.select(
-        F.col(a_col).alias("u"), F.col(b_col).alias("v")
-    )
+    e = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     edges = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=True)
@@ -456,18 +409,11 @@ def dedup_clusters(
     return labels.select(F.col("u").alias("doc_id"), F.col("lbl").alias("cluster_id"))
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    max_shingle_freq: int = 1000,
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact n-gram Jaccard similarity join: explode distinct shingles,
     self-join on shingle, |A∩B| / (|A|+|B|−|A∩B|) ≥ threshold.
 
-    max_shingle_freq drops stop-shingles (docs-frequency cap) — the standard
+    A 1000-doc frequency cap drops stop-shingles — the standard
     scale guard: without it a common shingle produces a quadratic join.
 
     The distinct-shingle table feeds five subtrees (stop-shingle counts,
@@ -491,18 +437,18 @@ def ngram_jaccard_pairs(
     the raw 127M-row join output cost more than the narrower sort saved);
     (b) eager instead of lazy localCheckpoints (no steady-state win)."""
     sh = (
-        shingles(docs.select(id_col, text_col), text_col, shingle_n)
-        .select(id_col, "shingle")
+        shingles(docs.select("doc_id", "text"), 3)
+        .select("doc_id", "shingle")
         .distinct()
         .localCheckpoint(eager=False)
     )
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
     sh = sh.join(
-        F.broadcast(freq.filter(F.col("_df") > max_shingle_freq)), "shingle", "left_anti"
+        F.broadcast(freq.filter(F.col("_df") > 1000)), "shingle", "left_anti"
     ).localCheckpoint(eager=False)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("_sz"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_sz"))
+    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
         a.join(b, "shingle")
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -514,8 +460,8 @@ def ngram_jaccard_pairs(
         t_eff = max(0.0, threshold - 1e-6)
         c_min = max(1, math.floor(2 * t_eff * min_sz_row / (1 + t_eff)))
         inter = inter.filter(F.col("n_common") >= F.lit(int(c_min)))
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("_sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("_sz").alias("sz_b"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("_sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("_sz").alias("sz_b"))
     return (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -536,8 +482,6 @@ def contamination_check(
     train: DataFrame,
     benchmark: DataFrame,
     n: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Benchmark decontamination (the GPT-3 rule): flag every TRAIN
     document sharing any n-gram (default 13 tokens) with any BENCHMARK
@@ -548,13 +492,13 @@ def contamination_check(
     cost is train-corpus-linear. Drop or quarantine the flagged ids
     before training."""
     tr = (
-        shingles(train.select(id_col, text_col), text_col, n)
-        .select(F.col(id_col).alias("train_id"), "shingle")
+        shingles(train.select("doc_id", "text"), n)
+        .select(F.col("doc_id").alias("train_id"), "shingle")
         .distinct()
     )
     be = (
-        shingles(benchmark.select(id_col, text_col), text_col, n)
-        .select(F.col(id_col).alias("bench_id"), "shingle")
+        shingles(benchmark.select("doc_id", "text"), n)
+        .select(F.col("doc_id").alias("bench_id"), "shingle")
         .distinct()
     )
     return (
@@ -564,13 +508,7 @@ def contamination_check(
     )
 
 
-def substring_duplicate_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 10,
-    max_shingle_freq: int = 1000,
-) -> DataFrame:
+def substring_duplicate_spans(docs: DataFrame, k: int = 10) -> DataFrame:
     """Exact duplicated-substring spans across (and within) documents —
     the ExactSubstr method of "Deduplicating Training Data Makes Language
     Models Better" (Lee et al., 2022), re-expressed relationally instead
@@ -590,19 +528,15 @@ def substring_duplicate_spans(
 
     Scale: shuffles on shingle then on (doc_a, doc_b, diag) — both
     fine-grained keys; the df cap is the only recall trade (a shingle in
-    > max_shingle_freq docs can split or hide runs, the documented guard).
+    > 1000 docs can split or hide runs, the documented guard).
     """
-    sh = shingles_with_pos(docs.select(id_col, text_col), text_col, k).select(
-        F.col(id_col).alias("_id"), F.col("_i").alias("pos"), "shingle"
+    sh = shingles_with_pos(docs.select("doc_id", "text"), k).select(
+        F.col("doc_id").alias("_id"), F.col("_i").alias("pos"), "shingle"
     ).localCheckpoint(eager=False)
     freq = sh.select("_id", "shingle").distinct().groupBy("shingle").agg(
         F.count(F.lit(1)).alias("_df")
     )
-    sh = sh.join(
-        F.broadcast(freq.filter(F.col("_df") > max_shingle_freq)),
-        "shingle",
-        "left_anti",
-    )
+    sh = sh.join(F.broadcast(freq.filter(F.col("_df") > 1000)), "shingle", "left_anti")
     a = sh.select(F.col("_id").alias("doc_a"), F.col("pos").alias("pos_a"), "shingle")
     b = sh.select(F.col("_id").alias("doc_b"), F.col("pos").alias("pos_b"), "shingle")
     matches = a.join(b, "shingle").filter(
@@ -623,15 +557,10 @@ def substring_duplicate_spans(
     )
 
 
-def dedup_lines(
-    docs: DataFrame,
-    line_words: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dedup_lines(docs: DataFrame) -> DataFrame:
     """C4-style line-level corpus deduplication (Raffel et al. 2020 §2.2
     deduplicate three-sentence spans; RefinedWeb line dedup): chunk each
-    document into fixed `line_words`-word lines, keep the FIRST corpus
+    document into fixed 10-word lines, keep the FIRST corpus
     occurrence of every distinct line (order: doc_id, then position) and
     flag the rest → (doc_id, line_idx, line, keep).
 
@@ -642,11 +571,12 @@ def dedup_lines(
     cap_per_domain salted pre-cap pattern applies verbatim if that
     arises (keep-first = cap 1, so pre-capping per (line, salt) at 1
     bounds the task). Exact DuckDB twin: q59."""
+    line_words = 10
     from pyspark.sql import Window
 
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = F.split(F.trim(F.col("text")), r"\s+")
     d = docs.select(
-        F.col(id_col).cast("long").alias(id_col), words.alias("_w")
+        F.col("doc_id").cast("long").alias("doc_id"), words.alias("_w")
     ).withColumn(
         "_idx",
         F.sequence(
@@ -655,26 +585,21 @@ def dedup_lines(
         ),
     )
     lines = d.select(
-        id_col,
+        "doc_id",
         F.posexplode("_idx").alias("line_idx", "_i"),
         "_w",
     ).select(
-        id_col,
+        "doc_id",
         F.col("line_idx").cast("long").alias("line_idx"),
         F.array_join(
             F.slice("_w", F.col("_i") * line_words + 1, line_words), " "
         ).alias("line"),
     )
-    w = Window.partitionBy("line").orderBy(F.col(id_col), F.col("line_idx"))
+    w = Window.partitionBy("line").orderBy(F.col("doc_id"), F.col("line_idx"))
     return lines.withColumn("keep", F.row_number().over(w) == 1)
 
 
-def apply_line_dedup(
-    docs: DataFrame,
-    line_words: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def apply_line_dedup(docs: DataFrame) -> DataFrame:
     """The C4 cleaner's OUTPUT side: reconstruct each document from its
     kept lines (dedup_lines keep flags), preserving line order →
     (doc_id, clean_text, n_lines_kept, n_lines_dropped). Documents whose
@@ -682,9 +607,9 @@ def apply_line_dedup(
     a length gate). One extra groupBy(doc) over dedup_lines' output —
     the reassembly shuffle is keyed on the doc id, no skew beyond
     document size. Exact DuckDB twin: q61."""
-    lines = dedup_lines(docs, line_words, text_col, id_col)
+    lines = dedup_lines(docs)
     return (
-        lines.groupBy(id_col)
+        lines.groupBy("doc_id")
         .agg(
             F.array_join(
                 F.transform(
@@ -715,8 +640,6 @@ def semdedup(
     k: int = 6,
     n_iters: int = 2,
     threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
     embedding space with distributed k-means, then inside each cluster
@@ -745,12 +668,12 @@ def semdedup(
 
     cents = train_centroids(vecs, k=k, n_iters=n_iters)  # (cid, ×1000 ints)
     v = vecs.select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col("vec_id").cast("long").alias("vec_id"),
         F.transform(
-            vec_col, lambda e: F.round(e.cast("double") * 1000).cast("long")
+            "embedding", lambda e: F.round(e.cast("double") * 1000).cast("long")
         ).alias("_v"),
         F.transform(
-            vec_col, lambda e: F.round(e.cast("double") * 100).cast("long")
+            "embedding", lambda e: F.round(e.cast("double") * 100).cast("long")
         ).alias("_u"),
     )
     scored = v.crossJoin(F.broadcast(cents)).withColumn(
@@ -762,22 +685,22 @@ def semdedup(
         - F.aggregate("c", zero, lambda a, x: a + x * x),
     )
     assigned = (
-        scored.groupBy(id_col)
+        scored.groupBy("vec_id")
         .agg(
             F.max(
                 F.struct(F.col("score"), (-F.col("cid")).alias("_nc"))
             ).alias("_m"),
             F.first("_u").alias("_u"),
         )
-        .select(id_col, (-F.col("_m._nc")).cast("long").alias("cid"), "_u")
+        .select("vec_id", (-F.col("_m._nc")).cast("long").alias("cid"), "_u")
         .withColumn("_n", F.aggregate("_u", zero, lambda a, x: a + x * x))
     )
     a = assigned.select(
-        F.col(id_col).alias("_ida"), "cid",
+        F.col("vec_id").alias("_ida"), "cid",
         F.col("_u").alias("_ua"), F.col("_n").alias("_na"),
     )
     b = assigned.select(
-        F.col(id_col).alias("_idb"), "cid",
+        F.col("vec_id").alias("_idb"), "cid",
         F.col("_u").alias("_ub"), F.col("_n").alias("_nb"),
     )
     dups = (
@@ -798,31 +721,23 @@ def semdedup(
                 >= F.lit(p2) * F.col("_na") * F.col("_nb")
             )
         )
-        .select(F.col("_idb").alias(id_col))
+        .select(F.col("_idb").alias("vec_id"))
         .distinct()
         .withColumn("_dup", F.lit(True))
     )
     return (
-        assigned.join(dups, id_col, "left")
+        assigned.join(dups, "vec_id", "left")
         .select(
-            id_col, "cid",
+            "vec_id", "cid",
             F.coalesce(~F.col("_dup"), F.lit(True)).alias("keep"),
         )
     )
 
 
-def bloom_decontaminate(
-    probe: DataFrame,
-    build: DataFrame,
-    m: int = 65536,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: str = "bloom",
-) -> DataFrame:
+def bloom_decontaminate(probe: DataFrame, build: DataFrame) -> DataFrame:
     """Bloom-filter decontamination: flag probe documents whose text
-    fingerprint MAY be in the build (benchmark) set, using an m-bit /
-    k-hash Bloom filter — the O(m)-byte broadcast alternative to a
+    fingerprint MAY be in the build (benchmark) set, using a 2^16-bit /
+    3-hash Bloom filter — the O(m)-byte broadcast alternative to a
     benchmark join when the benchmark set is large but the filter
     budget is fixed (one-sided error: false positives only, standard
     for contamination screens where flagged docs get a second exact
@@ -830,7 +745,7 @@ def bloom_decontaminate(
 
     Scale shape: the filter is BUILT distributed (position explode →
     64-bit-word bit_or aggregation → at most m/64 rows), then collected
-    — bounded by the parameter m (8 KB words for the default 2^16
+    — bounded by the filter size m (8 KB words for m = 2^16
     bits), NOT by build-set size — and broadcast into a JVM-side
     array-literal bit test on the probe scan: no join, no shuffle on
     the probe side at all. Positions are md5-derived (the
@@ -840,21 +755,21 @@ def bloom_decontaminate(
     """
     from functools import reduce as _reduce
 
-    fp = F.md5(F.col(text_col))
+    fp = F.md5(F.col("text"))
 
     def pos(i: int, fpcol):
         return (
             F.conv(
                 F.substring(
-                    F.md5(F.concat_ws(":", F.lit(seed), F.lit(str(i)), fpcol)), 1, 12
+                    F.md5(F.concat_ws(":", F.lit("bloom"), F.lit(str(i)), fpcol)), 1, 12
                 ),
                 16, 10,
             ).cast("long")
-            % m
+            % 65536
         )
 
     build_pos = build.select(
-        F.explode(F.array(*[pos(i, fp) for i in range(k)])).alias("p")
+        F.explode(F.array(*[pos(i, fp) for i in range(3)])).alias("p")
     )
     words = (
         build_pos.groupBy((F.col("p") / 64).cast("long").alias("w"))
@@ -865,13 +780,13 @@ def bloom_decontaminate(
         )
         .collect()  # bounded by m/64 rows (the filter itself), never by data
     )
-    arr = [0] * (m // 64)
+    arr = [0] * (65536 // 64)
     for r in words:
         arr[int(r["w"])] = int(r["bits"])
 
-    out = probe.select(F.col(id_col).cast("long").alias(id_col), fp.alias("_fp"))
+    out = probe.select(F.col("doc_id").cast("long").alias("doc_id"), fp.alias("_fp"))
     conds = []
-    for i in range(k):
+    for i in range(3):
         out = out.withColumn(f"_p{i}", pos(i, F.col("_fp"))).withColumn(
             f"_w{i}", F.element_at(F.lit(arr), (F.col(f"_p{i}") / 64).cast("int") + 1)
         )
@@ -879,7 +794,7 @@ def bloom_decontaminate(
             F.expr(f"((_w{i} >> CAST(_p{i} % 64 AS INT)) & 1) = 1")
         )
     return out.select(
-        id_col, _reduce(lambda a, b: a & b, conds).alias("maybe_in_benchmark")
+        "doc_id", _reduce(lambda a, b: a & b, conds).alias("maybe_in_benchmark")
     )
 
 
@@ -887,8 +802,6 @@ def setsim_join(
     docs: DataFrame,
     threshold_num: int = 1,
     threshold_den: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """EXACT Jaccard set-similarity self-join with prefix filtering
     (AllPairs/PPJoin, Bayardo et al. WWW'07 / Xiao et al. WWW'08):
@@ -921,10 +834,8 @@ def setsim_join(
     p, q = threshold_num, threshold_den
     toks = (
         docs.select(
-            F.col(id_col).cast("long").alias("doc"),
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("tok"),
+            F.col("doc_id").cast("long").alias("doc"),
+            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"),
         )
         .distinct()
     )
@@ -970,13 +881,7 @@ def setsim_join(
     )
 
 
-def cdc_chunk_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    mask: int = 16,
-) -> DataFrame:
+def cdc_chunk_dedup(docs: DataFrame, mask: int = 16) -> DataFrame:
     """Content-defined chunking (CDC) duplication profile — the
     storage-dedup / large-doc near-dup primitive (LBFS/rsync lineage):
     token streams are cut at CONTENT-dependent boundaries (positions
@@ -999,10 +904,8 @@ def cdc_chunk_dedup(
     doc. Everything keys on doc or fingerprint — no global stage."""
     from ..functions.text import tokens
 
-    sh = shingles_with_pos(
-        docs.select(id_col, text_col), text_col, shingle_n
-    ).select(
-        id_col,
+    sh = shingles_with_pos(docs.select("doc_id", "text"), 3).select(
+        "doc_id",
         F.col("_i").alias("p"),
         (
             F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10)
@@ -1012,14 +915,14 @@ def cdc_chunk_dedup(
         ).cast("int").alias("is_cut"),
     )
     tok = docs.select(
-        id_col, F.posexplode(tokens(text_col)).alias("p0", "tok")
-    ).select(id_col, (F.col("p0") + 1).alias("p"), "tok")
-    marked = tok.join(sh, [id_col, "p"], "left").select(
-        id_col, "p", "tok",
+        "doc_id", F.posexplode(tokens("text")).alias("p0", "tok")
+    ).select("doc_id", (F.col("p0") + 1).alias("p"), "tok")
+    marked = tok.join(sh, ["doc_id", "p"], "left").select(
+        "doc_id", "p", "tok",
         F.coalesce("is_cut", F.lit(0)).alias("is_cut"),
     )
     w = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy(F.col("p").asc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -1027,7 +930,7 @@ def cdc_chunk_dedup(
         "chunk_idx",
         F.coalesce(F.sum("is_cut").over(w), F.lit(0)).cast("long"),
     )
-    chunks = assigned.groupBy(id_col, "chunk_idx").agg(
+    chunks = assigned.groupBy("doc_id", "chunk_idx").agg(
         F.md5(
             F.concat_ws(
                 " ",
@@ -1039,12 +942,10 @@ def cdc_chunk_dedup(
         ).alias("chunk_md5"),
         F.count(F.lit(1)).alias("n_toks"),
     )
-    freq = chunks.groupBy("chunk_md5").agg(
-        F.countDistinct(id_col).alias("nd")
-    )
+    freq = chunks.groupBy("chunk_md5").agg(F.countDistinct("doc_id").alias("nd"))
     j = chunks.join(freq, "chunk_md5")
     return (
-        j.groupBy(id_col)
+        j.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_chunks"),
             F.sum(F.when(F.col("nd") > 1, 1).otherwise(0)).alias(
@@ -1052,7 +953,7 @@ def cdc_chunk_dedup(
             ),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_chunks",
             "n_dup_chunks",
             F.expr("(1000000 * n_dup_chunks) DIV n_chunks").alias(
@@ -1062,12 +963,10 @@ def cdc_chunk_dedup(
     )
 
 
-def cdc_chunk_dedup_sql(
-    docs_sql: str, shingle_n: int = 3, mask: int = 16
-) -> str:
+def cdc_chunk_dedup_sql(docs_sql: str) -> str:
     """DuckDB twin of cdc_chunk_dedup."""
     gram = " || ' ' || ".join(
-        f"t[i + {j}]" for j in range(shingle_n)
+        f"t[i + {j}]" for j in range(3)
     ).replace("t[i + 0]", "t[i]")
     return f"""
 WITH d AS (
@@ -1079,9 +978,9 @@ pos AS (
 ),
 marked AS (
   SELECT doc_id, i AS p, t[i] AS tok,
-    CASE WHEN i <= len(t) - {shingle_n - 1}
+    CASE WHEN i <= len(t) - 2
           AND CAST(('0x' || substr(md5({gram}), 1, 8)) AS BIGINT)
-              % {mask} = 0
+              % 16 = 0
          THEN 1 ELSE 0 END AS is_cut
   FROM pos
 ),
@@ -1110,14 +1009,7 @@ GROUP BY c.doc_id
 """
 
 
-def containment_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    min_containment_ppm: int = 800_000,
-    max_doc_freq: int = 200,
-) -> DataFrame:
+def containment_dedup(docs: DataFrame, min_containment_ppm: int = 800_000) -> DataFrame:
     """ASYMMETRIC near-dup: shingle containment C(A→B) = |S_A ∩ S_B| /
     |S_A| — the doc-inside-doc detector Jaccard misses (a paragraph
     quoted inside a long article has tiny Jaccard but containment ≈ 1;
@@ -1128,21 +1020,18 @@ def containment_dedup(
 
     Exact: distinct-shingle sets, integer intersection counts,
     containment as floor-ppm. The candidate join is doc-frequency
-    capped (shingles in > max_doc_freq docs are dropped from PAIRING
+    capped (shingles in > 200 docs are dropped from PAIRING
     — boilerplate shingles pair everything with everything; the
     docstring caveat is that containment against pure-boilerplate docs
     is then underestimated, the standard LSH-style trade)."""
     sh = (
-        shingles_with_pos(docs.select(id_col, text_col), text_col,
-                          shingle_n)
-        .select(F.col(id_col).alias("doc"), "shingle")
+        shingles_with_pos(docs.select("doc_id", "text"), 3)
+        .select(F.col("doc_id").alias("doc"), "shingle")
         .distinct()
     )
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    rare = sh.join(
-        dfreq.filter(F.col("df") <= max_doc_freq), "shingle"
-    ).select("doc", "shingle")
+    rare = sh.join(dfreq.filter(F.col("df") <= 200), "shingle").select("doc", "shingle")
     inter = (
         rare.alias("x")
         .join(rare.alias("y"), "shingle")
@@ -1172,13 +1061,9 @@ def containment_dedup(
     return out
 
 
-def containment_dedup_sql(
-    docs_sql: str,
-    shingle_n: int = 3,
-    min_containment_ppm: int = 800_000,
-    max_doc_freq: int = 200,
-) -> str:
+def containment_dedup_sql(docs_sql: str, min_containment_ppm: int = 800_000) -> str:
     """DuckDB twin of containment_dedup."""
+    shingle_n = 3
     gram = " || ' ' || ".join(
         f"t[i + {j}]" for j in range(shingle_n)
     ).replace("t[i + 0]", "t[i]")
@@ -1199,7 +1084,7 @@ sizes AS (SELECT doc, CAST(count(*) AS BIGINT) AS sz FROM sh GROUP BY 1),
 dfreq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1),
 rare AS (
   SELECT s.doc, s.shingle FROM sh s
-  JOIN dfreq f ON s.shingle = f.shingle AND f.df <= {max_doc_freq}
+  JOIN dfreq f ON s.shingle = f.shingle AND f.df <= 200
 ),
 inter AS (
   SELECT x.doc AS doc_a, y.doc AS doc_b,

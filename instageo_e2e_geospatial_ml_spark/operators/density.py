@@ -19,12 +19,12 @@ from pyspark.sql import functions as F
 from ..functions.geo import mgrs_udf
 
 
-def assign_tiles(obs: DataFrame, x: str = "x", y: str = "y") -> DataFrame:
+def assign_tiles(obs: DataFrame) -> DataFrame:
     """Add the MGRS precision-0 tile id column `mgrs_tile_id` (vectorized
     UDF), unless obs already carries it."""
     if "mgrs_tile_id" in obs.columns:
         return obs
-    return obs.withColumn("mgrs_tile_id", mgrs_udf(F.col(x), F.col(y)))
+    return obs.withColumn("mgrs_tile_id", mgrs_udf(F.col("x"), F.col("y")))
 
 
 def density_filter(
@@ -55,13 +55,7 @@ _DB_OFF = 1 << 20  # coordinate offset so negative cells stay positive
 _DB_K = 1 << 21    # cell-key stride
 
 
-def grid_dbscan(
-    points: DataFrame,
-    x_col: str = "px",
-    y_col: str = "py",
-    cell_size: int = 64,
-    min_pts: int = 50,
-) -> DataFrame:
+def grid_dbscan(points: DataFrame, cell_size: int = 64, min_pts: int = 50) -> DataFrame:
     """Grid DBSCAN (the GriDBSCAN / CLIQUE cell-density family): cluster
     DENSE CELLS — cells holding >= min_pts points — by 8-neighborhood
     connectivity. Returns one row per dense cell: (cell_x, cell_y,
@@ -81,8 +75,8 @@ def grid_dbscan(
     """
     from .dedup import dedup_clusters
 
-    cx = F.floor(F.col(x_col) / F.lit(cell_size)).cast("long")
-    cy = F.floor(F.col(y_col) / F.lit(cell_size)).cast("long")
+    cx = F.floor(F.col("px") / F.lit(cell_size)).cast("long")
+    cy = F.floor(F.col("py") / F.lit(cell_size)).cast("long")
     cells = (
         points.select(cx.alias("cx"), cy.alias("cy"))
         .groupBy("cx", "cy")

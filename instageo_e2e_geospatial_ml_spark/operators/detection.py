@@ -109,12 +109,7 @@ def _sup_pred(a: str, b: str, iou_num: int, iou_den: int) -> str:
     )
 
 
-def nms_sql(
-    table_sql: str,
-    k_rounds: int,
-    iou_num: int = 3,
-    iou_den: int = 10,
-) -> str:
+def nms_sql(table_sql: str, k_rounds: int) -> str:
     """DuckDB twin: the identical greedy selection unrolled k_rounds
     times (k_rounds >= max boxes per image, so every image converges —
     an exhausted image simply stops contributing picks)."""
@@ -143,7 +138,7 @@ def nms_sql(
         parts.append(
             f"""s{r} AS MATERIALIZED (
   SELECT s.* FROM {prev} s JOIN p{r} p USING (image_id)
-  WHERE s.box_id <> p.box_id AND NOT ({_sup_pred('p', 's', iou_num, iou_den)})
+  WHERE s.box_id <> p.box_id AND NOT ({_sup_pred('p', 's', 3, 10)})
 )"""
         )
         picks.append(

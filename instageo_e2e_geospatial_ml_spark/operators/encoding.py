@@ -34,15 +34,15 @@ from .sampling import _hash_point
 _SCALE = 1_000_000
 
 
-def fold_of(key_col: str, n_folds: int, salt: str = "oof") -> F.Column:
+def fold_of(key_col: str, n_folds: int) -> F.Column:
     """Deterministic fold id in [0, n_folds) from md5 of the row key."""
-    return F.pmod(_hash_point(F.col(key_col), salt), F.lit(n_folds))
+    return F.pmod(_hash_point(F.col(key_col), "oof"), F.lit(n_folds))
 
 
-def fold_of_sql(key_expr: str, n_folds: int, salt: str = "oof") -> str:
+def fold_of_sql(key_expr: str, n_folds: int) -> str:
     """DuckDB twin of fold_of (md5 first-8-hex → mod 1e6 → mod folds)."""
     h = (
-        f"CAST(('0x' || substr(md5(CAST({key_expr} AS VARCHAR) || ':{salt}'"
+        f"CAST(('0x' || substr(md5(CAST({key_expr} AS VARCHAR) || ':oof'"
         f"), 1, 8)) AS BIGINT)"
     )
     return f"(({h} % {_SCALE}) % {n_folds})"
@@ -53,8 +53,6 @@ def target_encode_oof(
     cat_col: str,
     target_int_col: str,
     key_col: str,
-    n_folds: int = 5,
-    salt: str = "oof",
 ) -> DataFrame:
     """Out-of-fold target-encoding table: one row per (category, fold)
     holding the encoding every fold-`fold` row of that category should
@@ -64,7 +62,7 @@ def target_encode_oof(
     base = df.select(
         F.col(cat_col).alias("category"),
         F.col(target_int_col).cast("long").alias("t"),
-        fold_of(key_col, n_folds, salt).alias("fold"),
+        fold_of(key_col, 5).alias("fold"),
     )
     per_fold = base.groupBy("category", "fold").agg(
         F.sum("t").alias("f_sum"), F.count(F.lit(1)).alias("f_cnt")
@@ -83,9 +81,7 @@ def target_encode_oof(
         "category",
         "c_sum",
         "c_cnt",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(n_folds - 1))
-        ).alias("fold"),
+        F.explode(F.sequence(F.lit(0), F.lit(4))).alias("fold"),
     )
     j = (
         cells.join(per_fold, ["category", "fold"], "left")
@@ -121,11 +117,9 @@ def target_encode_oof_sql(
     cat_expr: str,
     target_int_expr: str,
     key_expr: str,
-    n_folds: int = 5,
-    salt: str = "oof",
 ) -> str:
     """DuckDB twin of target_encode_oof."""
-    fold = fold_of_sql(key_expr, n_folds, salt)
+    fold = fold_of_sql(key_expr, 5)
     return f"""
 WITH base AS (
   SELECT {cat_expr} AS category, CAST({target_int_expr} AS BIGINT) AS t,
@@ -150,7 +144,7 @@ prior AS (
 cells AS (
   SELECT c.category, c.c_sum, c.c_cnt, f.fold
   FROM per_cat c
-  CROSS JOIN (SELECT unnest(generate_series(0, {n_folds - 1})) AS fold) f
+  CROSS JOIN (SELECT unnest(generate_series(0, 4)) AS fold) f
 )
 SELECT c.category, CAST(c.fold AS BIGINT) AS fold,
        c.c_sum - coalesce(pf.f_sum, 0) AS oof_sum,

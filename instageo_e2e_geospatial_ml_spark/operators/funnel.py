@@ -25,20 +25,14 @@ from pyspark.sql import functions as F
 WEEK_US = 7 * 86400 * 1_000_000
 
 
-def funnel_stages(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def funnel_stages(events: DataFrame, steps: list[str]) -> DataFrame:
     """events -> one row per (user, reached stage): (user, stage,
     step_name, stage_ts_us). Stage numbering is 1-based; a user appears
     for every stage they reached (stage 1..k)."""
-    tus = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    tus = F.unix_micros(F.col("ts").cast("timestamp"))
     ev = events.select(
-        F.col(user_col).alias("user"),
-        F.col(type_col).alias("etype"),
+        F.col("user_id").alias("user"),
+        F.col("event_type").alias("etype"),
         tus.alias("tus"),
     )
     stages = []
@@ -79,17 +73,13 @@ def funnel_summary(stage_rows: DataFrame) -> DataFrame:
     )
 
 
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """events -> (cohort_week, week_offset, n_users): users grouped by
     first-seen epoch week, counted distinct in every later week they
     were active. Integer week ids = epoch_us div WEEK_US."""
-    tus = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    tus = F.unix_micros(F.col("ts").cast("timestamp"))
     ev = events.select(
-        F.col(user_col).alias("user"), tus.alias("tus")
+        F.col("user_id").alias("user"), tus.alias("tus")
     ).select("user", F.expr(f"tus div {WEEK_US}").alias("week"))
     first = ev.groupBy("user").agg(F.min("week").alias("cohort_week"))
     active = ev.select("user", "week").distinct()
@@ -107,10 +97,6 @@ def multi_touch_attribution(
     touches: DataFrame,
     conversions: DataFrame,
     lookback_s: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts_us",
-    channel_col: str = "channel",
-    conv_id_col: str = "conv_id",
 ) -> DataFrame:
     """Multi-touch attribution: for every conversion, the marketing
     touches inside its lookback window, credited under the three
@@ -134,14 +120,14 @@ def multi_touch_attribution(
     from pyspark.sql import Window
 
     t = touches.select(
-        F.col(user_col).alias("u"),
-        F.col(ts_col).cast("long").alias("touch_ts"),
-        F.col(channel_col).alias("channel"),
+        F.col("user_id").alias("u"),
+        F.col("ts_us").cast("long").alias("touch_ts"),
+        F.col("channel"),
     )
     c = conversions.select(
-        F.col(user_col).alias("u"),
-        F.col(ts_col).cast("long").alias("conv_ts"),
-        F.col(conv_id_col).alias("conv_id"),
+        F.col("user_id").alias("u"),
+        F.col("ts_us").cast("long").alias("conv_ts"),
+        F.col("conv_id"),
     )
     j = c.join(
         t,
@@ -207,14 +193,7 @@ WINDOW w AS (PARTITION BY conv_id)
 """
 
 
-def windowed_funnel(
-    events: DataFrame,
-    steps: list[str],
-    horizon_us: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def windowed_funnel(events: DataFrame, steps: list[str], horizon_us: int) -> DataFrame:
     """ClickHouse-windowFunnel-style conversion: the deepest stage each
     user reaches with every step STRICTLY after the previous one and the
     WHOLE chain within `horizon_us` of the stage-1 anchor. Semantics are
@@ -229,10 +208,10 @@ def windowed_funnel(
     aggregates (k steps = k hash aggs narrowed by the horizon filter),
     then one max(struct) per user — no windows over raw history, so
     cost is bounded by funnel depth, not history length."""
-    tus = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    tus = F.unix_micros(F.col("ts").cast("timestamp"))
     ev = events.select(
-        F.col(user_col).alias("u"),
-        F.col(type_col).alias("etype"),
+        F.col("user_id").alias("u"),
+        F.col("event_type").alias("etype"),
         tus.alias("tus"),
     )
     s1 = (
@@ -320,10 +299,6 @@ def event_pattern_matches(
     events: DataFrame,
     type_chars: dict[str, str],
     patterns: dict[str, str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """MATCH_RECOGNIZE-lite / CEP over batch history: encode each user's
     time-ordered event stream as a string of single-char symbols
@@ -345,15 +320,15 @@ def event_pattern_matches(
     c = None
     for etype, ch in sorted(type_chars.items()):
         c = (
-            F.when(F.col(type_col) == etype, F.lit(ch))
+            F.when(F.col("event_type") == etype, F.lit(ch))
             if c is None
-            else c.when(F.col(type_col) == etype, F.lit(ch))
+            else c.when(F.col("event_type") == etype, F.lit(ch))
         )
-    tus = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    tus = F.unix_micros(F.col("ts").cast("timestamp"))
     ev = events.select(
-        F.col(user_col).alias("u"),
+        F.col("user_id").alias("u"),
         tus.alias("tus"),
-        F.col(id_col).alias("eid"),
+        F.col("event_id").alias("eid"),
         c.alias("c"),
     ).filter(F.col("c").isNotNull())
     seq = ev.groupBy("u").agg(
@@ -411,12 +386,7 @@ FROM seq
 """
 
 
-def sequential_pair_support(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def sequential_pair_support(events: DataFrame) -> DataFrame:
     """Order-sensitive association rules over event histories: for every
     ordered pair of event types (a, b), how many users exhibit "a THEN
     b" — an a-event strictly before (by timestamp) some b-event. The
@@ -433,11 +403,11 @@ def sequential_pair_support(
     Scale: one (user, type) aggregate over the data, then a per-user
     self-join with |types|² fan-out on profiles — bounded by the type
     vocabulary, not history length; the final table is |types|² rows."""
-    tus = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    tus = F.unix_micros(F.col("ts").cast("timestamp"))
     prof = (
         events.select(
-            F.col(user_col).alias("u"),
-            F.col(type_col).alias("t"),
+            F.col("user_id").alias("u"),
+            F.col("event_type").alias("t"),
             tus.alias("tus"),
         )
         .groupBy("u", "t")

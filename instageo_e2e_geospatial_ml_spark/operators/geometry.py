@@ -39,27 +39,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def rect_union_area(
-    rects: DataFrame,
-    group_col: str = "grp",
-    x1: str = "x1",
-    y1: str = "y1",
-    x2: str = "x2",
-    y2: str = "y2",
-    bucket_width: int = 256,
-) -> DataFrame:
+def rect_union_area(rects: DataFrame, bucket_width: int = 256) -> DataFrame:
     """Per-group exact union area of half-open integer rectangles
-    [x1, x2) × [y1, y2). Returns (group_col, n_rects, n_slabs, area)."""
-    g = F.col(group_col)
-    r = rects.filter((F.col(x1) < F.col(x2)) & (F.col(y1) < F.col(y2)))
-    n_rects = r.groupBy(group_col).agg(F.count(F.lit(1)).alias("n_rects"))
+    [x1, x2) × [y1, y2). Returns (grp, n_rects, n_slabs, area)."""
+    g = F.col("grp")
+    r = rects.filter((F.col("x1") < F.col("x2")) & (F.col("y1") < F.col("y2")))
+    n_rects = r.groupBy("grp").agg(F.count(F.lit(1)).alias("n_rects"))
 
     bounds = (
-        r.select(g, F.col(x1).alias("xb"))
-        .unionByName(r.select(g, F.col(x2).alias("xb")))
+        r.select(g, F.col("x1").alias("xb"))
+        .unionByName(r.select(g, F.col("x2").alias("xb")))
         .distinct()
     )
-    w = Window.partitionBy(group_col).orderBy("xb")
+    w = Window.partitionBy("grp").orderBy("xb")
     slabs = (
         bounds.withColumn("xe", F.lead("xb").over(w))
         .filter(F.col("xe").isNotNull())
@@ -70,23 +62,21 @@ def rect_union_area(
     bw = bucket_width
     rb = r.select(
         g,
-        F.col(x1).alias("rx1"),
-        F.col(x2).alias("rx2"),
-        F.col(y1).alias("ry1"),
-        F.col(y2).alias("ry2"),
+        F.col("x1").alias("rx1"),
+        F.col("x2").alias("rx2"),
+        F.col("y1").alias("ry1"),
+        F.col("y2").alias("ry2"),
         F.explode(
-            F.sequence(
-                F.floor(F.col(x1) / bw), F.floor((F.col(x2) - 1) / bw)
-            )
+            F.sequence(F.floor(F.col("x1") / bw), F.floor((F.col("x2") - 1) / bw))
         ).alias("bkt"),
     )
     sb = slabs.withColumn("bkt", F.floor(F.col("xs") / bw))
-    pairs = sb.join(rb, [group_col, "bkt"]).filter(
+    pairs = sb.join(rb, ["grp", "bkt"]).filter(
         (F.col("rx1") <= F.col("xs")) & (F.col("xs") < F.col("rx2"))
     )
 
     # gaps-and-islands y-merge per (group, slab)
-    ws = Window.partitionBy(group_col, "xs").orderBy(
+    ws = Window.partitionBy("grp", "xs").orderBy(
         F.col("ry1").asc(), F.col("ry2").desc()
     )
     run_max = F.max("ry2").over(
@@ -99,16 +89,16 @@ def rect_union_area(
         ).otherwise(F.lit(0)),
     ).withColumn("island", F.sum("new_island").over(ws))
     covered = (
-        flagged.groupBy(group_col, "xs", "xe", "island")
+        flagged.groupBy("grp", "xs", "xe", "island")
         .agg((F.max("ry2") - F.min("ry1")).alias("ylen"))
-        .groupBy(group_col, "xs", "xe")
+        .groupBy("grp", "xs", "xe")
         .agg(F.sum("ylen").alias("ycov"))
     )
-    area = covered.groupBy(group_col).agg(
+    area = covered.groupBy("grp").agg(
         F.count(F.lit(1)).alias("n_slabs"),
         F.sum(F.col("ycov") * (F.col("xe") - F.col("xs"))).alias("area"),
     )
-    return n_rects.join(area, group_col, "left").select(
+    return n_rects.join(area, "grp", "left").select(
         g,
         "n_rects",
         F.coalesce(F.col("n_slabs"), F.lit(0)).cast("long").alias("n_slabs"),
@@ -116,10 +106,10 @@ def rect_union_area(
     )
 
 
-def rect_union_area_sql(rects_sql: str, group_col: str = "grp") -> str:
+def rect_union_area_sql(rects_sql: str) -> str:
     """The identical sweep as DuckDB SQL (oracle twin). `rects_sql` must
-    select (group_col, x1, y1, x2, y2) integer columns."""
-    gc = group_col
+    select (grp, x1, y1, x2, y2) integer columns."""
+    gc = "grp"
     return f"""
 WITH r AS (
   SELECT * FROM ({rects_sql}) WHERE x1 < x2 AND y1 < y2
@@ -175,12 +165,7 @@ FROM nr LEFT JOIN ar ON nr.{gc} = ar.{gc}
 """
 
 
-def convex_hull(
-    points: DataFrame,
-    group_col: str = "grp",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
+def convex_hull(points: DataFrame) -> DataFrame:
     """Per-group convex hull of integer points: Andrew's monotone chain
     (1979), COLLINEAR BOUNDARY POINTS KEPT (pop only on strict clockwise
     turns), one applyInPandas per group — hulls are per-entity
@@ -202,21 +187,19 @@ def convex_hull(
     import pandas as pd
 
     out_schema = (
-        f"{group_col} string, vx long, vy long, n_hull long, area2 long"
+        "grp string, vx long, vy long, n_hull long, area2 long"
     )
 
     def chain(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        grp = pdf[group_col].iloc[0]
+        grp = pdf["grp"].iloc[0]
         pts = np.unique(
-            pdf[[x_col, y_col]].to_numpy(dtype=np.int64), axis=0
+            pdf[["x", "y"]].to_numpy(dtype=np.int64), axis=0
         )  # lexicographic sort + dedup
         n = len(pts)
         if n == 0:
-            return pd.DataFrame(
-                columns=[group_col, "vx", "vy", "n_hull", "area2"]
-            )
+            return pd.DataFrame(columns=["grp", "vx", "vy", "n_hull", "area2"])
 
         def cross(o, a, b):
             return int(
@@ -250,7 +233,7 @@ def convex_hull(
                     verts.append(v)
         return pd.DataFrame(
             {
-                group_col: [grp] * len(verts),
+                "grp": [grp] * len(verts),
                 "vx": [v[0] for v in verts],
                 "vy": [v[1] for v in verts],
                 "n_hull": [len(verts)] * len(verts),
@@ -258,10 +241,10 @@ def convex_hull(
             }
         )
 
-    return points.groupBy(group_col).applyInPandas(chain, out_schema)
+    return points.groupBy("grp").applyInPandas(chain, out_schema)
 
 
-def convex_hull_sql(pts_sql: str, group_col: str = "grp") -> str:
+def convex_hull_sql(pts_sql: str) -> str:
     """Extreme-edge oracle: directed pair (a, b) is a CCW hull edge iff
     every other point c is strictly left (cross > 0) or collinear but
     NOT strictly inside segment [a, b] (dot(c-a, c-b) >= 0). Hull
@@ -270,7 +253,7 @@ def convex_hull_sql(pts_sql: str, group_col: str = "grp") -> str:
     never the order). Degenerate all-collinear groups emit both
     directions of each adjacent pair, whose shoelace terms cancel to
     the same area2 = 0 the chain reports."""
-    gc = group_col
+    gc = "grp"
     return f"""
 WITH p AS (SELECT DISTINCT {gc}, x, y FROM ({pts_sql})),
 e AS (
@@ -309,13 +292,7 @@ SELECT {gc}, vx, vy, n_hull, area2 FROM singletons
 """
 
 
-def polygon_metrics(
-    vertices: DataFrame,
-    poly_col: str = "poly_id",
-    seq_col: str = "seq",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
+def polygon_metrics(vertices: DataFrame) -> DataFrame:
     """Per-polygon shoelace metrics over an ordered integer vertex ring
     (poly_id, seq, x, y): signed twice-area, exact centroid NUMERATORS
     (the centroid is (cx_num, cy_num) / (3 * area2) — kept rational so
@@ -337,8 +314,8 @@ def polygon_metrics(
     """
     from pyspark.sql import Window
 
-    p, s = F.col(poly_col), F.col(seq_col)
-    x, y = F.col(x_col).cast("long"), F.col(y_col).cast("long")
+    p, s = F.col("poly_id"), F.col("seq")
+    x, y = F.col("x").cast("long"), F.col("y").cast("long")
     w = Window.partitionBy(p).orderBy(s)
     wall = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     xn = F.coalesce(F.lead(x).over(w), F.first(x).over(wall))
@@ -396,7 +373,6 @@ def areal_interpolate(
     src: DataFrame,
     dst: DataFrame,
     cell_size: float = 64.0,
-    scale: int = 1000,
 ) -> DataFrame:
     """Area-weighted areal interpolation — redistributing a count from
     one zone system onto another (census tracts → grid cells, admin
@@ -407,10 +383,10 @@ def areal_interpolate(
     Contract: src carries (sid, a_minx, a_miny, a_maxx, a_maxy, val) —
     integer rect corners + integer value; dst carries (tid, b_minx,
     ...). Each overlapping (sid, tid) pair contributes
-    floor(scale · val · overlap_area / src_area); the output is one row
+    floor(1000 · val · overlap_area / src_area); the output is one row
     per target zone: (tid, alloc_scaled, n_src). The floor-per-pair rule
     is the DEFINED semantics (a pure integer function of the input —
-    engine-exact; the un-floored total differs by < n_src/scale).
+    engine-exact; the un-floored total differs by < n_src/1000).
     Overlap areas use HALF-OPEN boxes (max-min edges, touching rects
     share zero area) while candidate pairing uses bbox_join's closed
     test — the zero-area touches drop out of the weighted sum naturally.
@@ -447,10 +423,7 @@ def areal_interpolate(
         "val",
     ).filter(F.col("ov") > 0)
     return (
-        contrib.select(
-            "tid",
-            F.expr(f"({scale} * val * ov) DIV sa").alias("c"),
-        )
+        contrib.select("tid", F.expr("(1000 * val * ov) DIV sa").alias("c"))
         .groupBy("tid")
         .agg(
             F.sum("c").alias("alloc_scaled"),
@@ -459,9 +432,7 @@ def areal_interpolate(
     )
 
 
-def areal_interpolate_sql(
-    src_sql: str, dst_sql: str, scale: int = 1000
-) -> str:
+def areal_interpolate_sql(src_sql: str, dst_sql: str) -> str:
     """DuckDB twin of areal_interpolate (brute-force theta join — the
     oracle also proves the bucketed candidate set is lossless)."""
     return f"""
@@ -478,20 +449,14 @@ pairs AS (
   WHERE (least(s.a_maxx, d.b_maxx) - greatest(s.a_minx, d.b_minx)) > 0
     AND (least(s.a_maxy, d.b_maxy) - greatest(s.a_miny, d.b_miny)) > 0
 )
-SELECT tid, CAST(sum(({scale} * val * ov) // sa) AS BIGINT)
+SELECT tid, CAST(sum((1000 * val * ov) // sa) AS BIGINT)
          AS alloc_scaled,
        CAST(count(*) AS BIGINT) AS n_src
 FROM pairs GROUP BY tid
 """
 
 
-def rings_to_wkt(
-    vertices: DataFrame,
-    poly_col: str = "poly_id",
-    seq_col: str = "seq",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
+def rings_to_wkt(vertices: DataFrame) -> DataFrame:
     """Vertex table → OGC WKT 'POLYGON ((x y, ...))' per polygon — the
     text interchange every GIS tool reads. The ring is emitted in seq
     order and explicitly CLOSED (first vertex re-appended when the
@@ -501,10 +466,10 @@ def rings_to_wkt(
     Plan: one per-polygon sorted collect (the sessionization unit-of-
     parallelism contract) + string concat — no windows, no Python."""
     v = vertices.select(
-        F.col(poly_col).alias("poly_id"),
-        F.col(seq_col).alias("seq"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"),
+        F.col("poly_id"),
+        F.col("seq"),
+        F.col("x").cast("long").alias("x"),
+        F.col("y").cast("long").alias("y"),
     )
     agg = v.groupBy("poly_id").agg(
         F.array_sort(
@@ -560,11 +525,7 @@ FROM agg
 """
 
 
-def wkt_to_metrics(
-    wkts: DataFrame,
-    poly_col: str = "poly_id",
-    wkt_col: str = "wkt",
-) -> DataFrame:
+def wkt_to_metrics(wkts: DataFrame) -> DataFrame:
     """WKT 'POLYGON ((...))' → parsed metrics (poly_id, n_pts, area2,
     min_x, max_y bbox corners) — the ingest direction, all JVM regex +
     higher-order array functions: coordinate pairs come from
@@ -573,11 +534,9 @@ def wkt_to_metrics(
 
     Together with rings_to_wkt this pins the emit/parse round-trip in
     one engine-exact query (q194)."""
-    pairs = F.expr(
-        f"regexp_extract_all({wkt_col}, '(-?\\\\d+) (-?\\\\d+)', 0)"
-    )
+    pairs = F.expr("regexp_extract_all(wkt, '(-?\\\\d+) (-?\\\\d+)', 0)")
     parsed = wkts.select(
-        F.col(poly_col).alias("poly_id"),
+        F.col("poly_id"),
         F.transform(
             pairs,
             lambda s: F.struct(

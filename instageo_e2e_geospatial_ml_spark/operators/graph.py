@@ -35,20 +35,13 @@ PR_SCALE = 1_000_000_000_000  # 1e12 integer mass units
 HITS_SCALE = 1_000_000  # 1e6: raw*SCALE must not overflow int64 (see hits_int)
 
 
-def pagerank_int(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    iters: int = 3,
-    damp_num: int = 85,
-    damp_den: int = 100,
-) -> DataFrame:
+def pagerank_int(edges: DataFrame) -> DataFrame:
     """(src, dst) edge list -> (node, score, in_deg, out_deg) after
-    `iters` exact integer PageRank rounds (see module docstring).
+    3 exact integer PageRank rounds (see module docstring).
     Duplicate edges are collapsed first (a double link is one vote)."""
     e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
+        F.col("src").cast("long").alias("src"),
+        F.col("dst").cast("long").alias("dst"),
     ).distinct()
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -66,18 +59,14 @@ def pagerank_int(
     pr = nodes.crossJoin(F.broadcast(n_nodes)).select(
         "node", F.expr(f"{PR_SCALE} div n").alias("score")
     )
-    teleport = F.expr(
-        f"{PR_SCALE} * {damp_den - damp_num} div {damp_den} div n"
-    )
-    for _ in range(iters):
+    teleport = F.expr(f"{PR_SCALE} * 15 div 100 div n")
+    for _ in range(3):
         contrib = (
             e.join(pr.withColumnRenamed("node", "src"), "src")
             .join(F.broadcast(outdeg.withColumnRenamed("node", "src")), "src")
             .select(
                 F.col("dst").alias("node"),
-                F.expr(
-                    f"score * {damp_num} div {damp_den} div out_deg"
-                ).alias("send"),
+                F.expr("score * 85 div 100 div out_deg").alias("send"),
             )
             .groupBy("node")
             .agg(F.sum("send").alias("recv"))
@@ -101,12 +90,7 @@ def pagerank_int(
     )
 
 
-def pagerank_sql(
-    edges_sql: str,
-    iters: int = 3,
-    damp_num: int = 85,
-    damp_den: int = 100,
-) -> str:
+def pagerank_sql(edges_sql: str) -> str:
     """The identical computation as a DuckDB CTE chain (oracle twin):
     `edges_sql` must select columns src, dst."""
     parts = [
@@ -117,11 +101,11 @@ def pagerank_sql(
         "nn AS (SELECT count(*) AS n FROM nodes)",
         f"pr0 AS (SELECT node, {PR_SCALE} // n AS score FROM nodes CROSS JOIN nn)",
     ]
-    tele = f"{PR_SCALE} * {damp_den - damp_num} // {damp_den} // n"
-    for i in range(iters):
+    tele = f"{PR_SCALE} * 15 // 100 // n"
+    for i in range(3):
         parts.append(
             f"c{i + 1} AS (SELECT e.dst AS node, "
-            f"CAST(sum(p.score * {damp_num} // {damp_den} // o.out_deg) AS BIGINT) AS recv "
+            "CAST(sum(p.score * 85 // 100 // o.out_deg) AS BIGINT) AS recv "
             f"FROM e JOIN pr{i} p ON p.node = e.src "
             f"JOIN outdeg o ON o.node = e.src GROUP BY 1)"
         )
@@ -134,20 +118,13 @@ def pagerank_sql(
         ",\n".join(parts)
         + f"\nSELECT p.node, CAST(p.score AS BIGINT) AS score, "
         f"COALESCE(i.in_deg, 0) AS in_deg, COALESCE(o.out_deg, 0) AS out_deg "
-        f"FROM pr{iters} p "
+        "FROM pr3 p "
         f"LEFT JOIN indeg i ON i.node = p.node "
         f"LEFT JOIN outdeg o ON o.node = p.node"
     )
 
 
-def sssp_int(
-    edges: DataFrame,
-    sources: DataFrame,
-    rounds: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    w_col: str = "w",
-) -> DataFrame:
+def sssp_int(edges: DataFrame, sources: DataFrame, rounds: int) -> DataFrame:
     """Bellman-Ford single-source (multi-source) shortest paths, integer
     weights, FIXED `rounds` relaxations (paths up to `rounds` hops):
 
@@ -162,9 +139,9 @@ def sssp_int(
     round horizon.
     """
     e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-        F.col(w_col).cast("long").alias("w"),
+        F.col("src").cast("long").alias("src"),
+        F.col("dst").cast("long").alias("dst"),
+        F.col("w").cast("long").alias("w"),
     )
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -220,11 +197,7 @@ def sssp_sql(edges_sql: str, sources_sql: str, rounds: int) -> str:
     return ",\n".join(parts) + f"\nSELECT node, dist FROM d{rounds}"
 
 
-def triangle_counts(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Exact per-node triangle counts on the undirected simple graph
     (direction and duplicates collapse; self-loops drop). The classic
     oriented enumeration: canonicalize every edge to (lo < hi), list
@@ -235,8 +208,8 @@ def triangle_counts(
     over the lower-id endpoints).
     """
     raw = edges.select(
-        F.col(src_col).cast("long").alias("u"),
-        F.col(dst_col).cast("long").alias("v"),
+        F.col("src").cast("long").alias("u"),
+        F.col("dst").cast("long").alias("v"),
     ).filter(F.col("u") != F.col("v"))
     und = raw.select(
         F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
@@ -283,12 +256,7 @@ SELECT node, count(*) AS n_triangles FROM corners GROUP BY node
 _LPA_MOD = 1 << 21  # labels must stay below this for the ordered-min fold
 
 
-def label_propagation(
-    edges: DataFrame,
-    rounds: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) community
     detection, deterministic variant: every node starts as its own
     label; each round it adopts the most frequent neighbor label,
@@ -301,8 +269,8 @@ def label_propagation(
     mismatch — callers hash-compact ids first at scale).
     """
     raw = edges.select(
-        F.col(src_col).cast("long").alias("u"),
-        F.col(dst_col).cast("long").alias("v"),
+        F.col("src").cast("long").alias("u"),
+        F.col("dst").cast("long").alias("v"),
     ).filter(F.col("u") != F.col("v"))
     und = (
         raw.select("u", "v")
@@ -352,13 +320,7 @@ def lpa_sql(edges_sql: str, rounds: int) -> str:
     return ",\n".join(parts) + f"\nSELECT node, label FROM l{rounds}"
 
 
-def kcore(
-    edges: DataFrame,
-    k: int,
-    rounds: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """k-core extraction (Seidman 1983) by synchronous peeling: each
     round deletes every node whose count of still-alive neighbors is
     below k, on the undirected simple graph (direction, duplicates,
@@ -381,8 +343,8 @@ def kcore(
     alive flag; hot hubs cost one combine, not a skewed sort.
     """
     raw = edges.select(
-        F.col(src_col).cast("long").alias("u"),
-        F.col(dst_col).cast("long").alias("v"),
+        F.col("src").cast("long").alias("u"),
+        F.col("dst").cast("long").alias("v"),
     ).filter(F.col("u") != F.col("v"))
     und = (
         raw.select("u", "v")
@@ -506,7 +468,7 @@ def link_prediction(
     )
 
 
-def link_prediction_sql(edges_sql: str, top_k: int = 100) -> str:
+def link_prediction_sql(edges_sql: str) -> str:
     """DuckDB twin of link_prediction."""
     return f"""
 WITH raw AS (
@@ -545,7 +507,7 @@ FROM (
     ORDER BY common DESC, jaccard_ppm DESC, a ASC, b ASC) AS rnk
   FROM scored
 )
-WHERE rnk <= {top_k}
+WHERE rnk <= 100
 """
 
 
@@ -631,12 +593,7 @@ def bom_rollup_sql(edges_sql: str, rounds: int) -> str:
     )
 
 
-def hits_int(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    iters: int = 3,
-) -> DataFrame:
+def hits_int(edges: DataFrame) -> DataFrame:
     """Kleinberg HITS (hubs & authorities) in exact integer arithmetic.
 
     The other classic link-importance pair (Kleinberg 1999, the
@@ -669,8 +626,8 @@ def hits_int(
     with no in-links hold authority 0; no out-links, hub 0.
     """
     e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
+        F.col("src").cast("long").alias("src"),
+        F.col("dst").cast("long").alias("dst"),
     ).distinct()
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -679,7 +636,7 @@ def hits_int(
     )
     hub = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("h"))
     auth = None
-    for _ in range(iters):
+    for _ in range(3):
         a_raw = (
             e.join(hub.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
@@ -722,12 +679,13 @@ def hits_int(
     )
 
 
-def hits_sql(edges_sql: str, iters: int = 3) -> str:
+def hits_sql(edges_sql: str) -> str:
     """DuckDB oracle twin of hits_int: the identical max-normalized
     integer recurrence unrolled as MATERIALIZED CTEs (each round's
     score table is referenced twice — once by the next fold, once by
     its own max — so materialization is required to keep the chain
     linear, not exponential)."""
+    iters = 3
     parts = [
         f"e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ({edges_sql}))",
         "nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e)",

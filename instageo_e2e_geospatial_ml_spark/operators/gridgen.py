@@ -14,23 +14,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def grid_polygons(
-    bboxes: DataFrame,
-    chip_deg: float,
-    minx: str = "minx",
-    miny: str = "miny",
-    maxx: str = "maxx",
-    maxy: str = "maxy",
-) -> DataFrame:
+def grid_polygons(bboxes: DataFrame, chip_deg: float) -> DataFrame:
     """bboxes(id, minx, miny, maxx, maxy) → one row per chip cell:
     (… , ix, iy, cell_minx, cell_miny, cell_maxx, cell_maxy)."""
-    nx = F.ceil((F.col(maxx) - F.col(minx)) / F.lit(chip_deg))
-    ny = F.ceil((F.col(maxy) - F.col(miny)) / F.lit(chip_deg))
+    nx = F.ceil((F.col("maxx") - F.col("minx")) / F.lit(chip_deg))
+    ny = F.ceil((F.col("maxy") - F.col("miny")) / F.lit(chip_deg))
     out = (
         bboxes.withColumn("ix", F.explode(F.sequence(F.lit(0), F.greatest(nx - 1, F.lit(0)))))
         .withColumn("iy", F.explode(F.sequence(F.lit(0), F.greatest(ny - 1, F.lit(0)))))
-        .withColumn("cell_minx", F.col(minx) + F.col("ix") * F.lit(chip_deg))
-        .withColumn("cell_miny", F.col(miny) + F.col("iy") * F.lit(chip_deg))
+        .withColumn("cell_minx", F.col("minx") + F.col("ix") * F.lit(chip_deg))
+        .withColumn("cell_miny", F.col("miny") + F.col("iy") * F.lit(chip_deg))
         .withColumn("cell_maxx", F.col("cell_minx") + F.lit(chip_deg))
         .withColumn("cell_maxy", F.col("cell_miny") + F.lit(chip_deg))
     )

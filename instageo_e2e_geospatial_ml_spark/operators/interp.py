@@ -31,25 +31,16 @@ from pyspark.sql import functions as F
 IDW_SCALE = 1_000_000_000  # weight of an exact-hit (d2 clamped to 1)
 
 
-def idw_interpolate(
-    samples: DataFrame,
-    grid: DataFrame,
-    radius: int,
-    x_col: str = "px",
-    y_col: str = "py",
-    val_col: str = "val",
-    gx_col: str = "gx",
-    gy_col: str = "gy",
-) -> DataFrame:
+def idw_interpolate(samples: DataFrame, grid: DataFrame, radius: int) -> DataFrame:
     """samples (int coords + int value) x grid nodes -> per-node IDW
     estimate over the exact <= radius disc: (gx, gy, n_samples, sum_w,
     est). Nodes with no sample in range are omitted (inner semantics).
     """
     r2 = radius * radius
     s = samples.select(
-        F.col(x_col).cast("long").alias("px"),
-        F.col(y_col).cast("long").alias("py"),
-        F.col(val_col).cast("long").alias("val"),
+        F.col("px").cast("long").alias("px"),
+        F.col("py").cast("long").alias("py"),
+        F.col("val").cast("long").alias("val"),
     ).withColumns({
         "cellx": F.floor(F.col("px") / radius),
         "celly": F.floor(F.col("py") / radius),
@@ -62,8 +53,8 @@ def idw_interpolate(
     )
     g = (
         grid.select(
-            F.col(gx_col).cast("long").alias("gx"),
-            F.col(gy_col).cast("long").alias("gy"),
+            F.col("gx").cast("long").alias("gx"),
+            F.col("gy").cast("long").alias("gy"),
         )
         .crossJoin(offs)
         .select(

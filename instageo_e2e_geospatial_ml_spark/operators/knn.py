@@ -51,7 +51,6 @@ def _radius_pairs(
     queries: DataFrame,
     points: DataFrame,
     radius_deg: float,
-    res: int | None,
     qx: str,
     qy: str,
     px: str,
@@ -59,11 +58,11 @@ def _radius_pairs(
 ) -> DataFrame:
     """Shared candidate machinery: ring-covered cell equi-join against the
     broadcast query side + exact radius refine → (qid, pid, dist) pairs
-    within radius, dist the squared euclidean distance in degrees."""
-    if res is None:
-        res = 0
-        while 180.0 / (1 << (res + 1)) >= radius_deg and res < 15:
-            res += 1
+    within radius, dist the squared euclidean distance in degrees. The
+    cell resolution is the finest whose cell size covers the radius."""
+    res = 0
+    while 180.0 / (1 << (res + 1)) >= radius_deg and res < 15:
+        res += 1
     ring = 1  # cell size ≥ radius ⇒ ring-1 covers every point within radius
 
     q = F.broadcast(
@@ -86,13 +85,6 @@ def distance_join(
     queries: DataFrame,
     points: DataFrame,
     radius_deg: float,
-    res: int | None = None,
-    qid: str = "qid",
-    pid: str = "pid",
-    qx: str = "qx",
-    qy: str = "qy",
-    px: str = "x",
-    py: str = "y",
 ) -> DataFrame:
     """Spatial range join (the ST_DWithin shape): ALL (query, point)
     pairs within radius → (qid, pid, dist), dist squared degrees. Exact —
@@ -100,8 +92,8 @@ def distance_join(
     refine is exact arithmetic. No window, so nothing ranks: output size
     is the true match count, and the plan is scan → broadcast/equi-join →
     filter."""
-    return _radius_pairs(queries, points, radius_deg, res, qx, qy, px, py).select(
-        qid, pid, "dist"
+    return _radius_pairs(queries, points, radius_deg, "qx", "qy", "x", "y").select(
+        "qid", "pid", "dist"
     )
 
 
@@ -110,13 +102,7 @@ def knn_join(
     points: DataFrame,
     k_neighbors: int,
     radius_deg: float,
-    res: int | None = None,
-    qid: str = "qid",
     pid: str = "pid",
-    qx: str = "qx",
-    qy: str = "qy",
-    px: str = "x",
-    py: str = "y",
 ) -> DataFrame:
     """Exact k-nearest-within-radius join.
 
@@ -124,12 +110,12 @@ def knn_join(
     (dist asc, pid asc), dist squared degrees. res is auto-picked so one
     ring covers the radius.
     """
-    j = _radius_pairs(queries, points, radius_deg, res, qx, qy, px, py)
-    w = Window.partitionBy(qid).orderBy(F.col("dist").asc(), F.col(pid).asc())
+    j = _radius_pairs(queries, points, radius_deg, "qx", "qy", "x", "y")
+    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col(pid).asc())
     return (
         j.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= F.lit(k_neighbors))
-        .select(qid, pid, "dist", "rank")
+        .select("qid", pid, "dist", "rank")
     )
 
 
@@ -137,11 +123,6 @@ def knn_label_audit(
     points: DataFrame,
     k_neighbors: int,
     radius_deg: float,
-    res: int | None = None,
-    pid: str = "pid",
-    px: str = "x",
-    py: str = "y",
-    label_col: str = "label",
 ) -> DataFrame:
     """Label-noise audit by neighborhood disagreement (the Confident-
     Learning-style screen an ML-data pipeline runs before training):
@@ -158,21 +139,21 @@ def knn_label_audit(
     slot; (dist, pid) ordering makes ranks deterministic.
     """
     q = points.select(
-        F.col(pid).alias("qid"),
-        F.col(px).alias("qx"),
-        F.col(py).alias("qy"),
-        F.col(label_col).alias("qlabel"),
+        F.col("pid").alias("qid"),
+        F.col("x").alias("qx"),
+        F.col("y").alias("qy"),
+        F.col("label").alias("qlabel"),
     )
     p = points.select(
-        F.col(pid).alias("nid"),
-        F.col(px).alias("nx"),
-        F.col(py).alias("ny"),
-        F.col(label_col).alias("nlabel"),
+        F.col("pid").alias("nid"),
+        F.col("x").alias("nx"),
+        F.col("y").alias("ny"),
+        F.col("label").alias("nlabel"),
     )
     # _radius_pairs preserves input columns, so both labels ride along
     # the candidate pairs — no label re-join needed
     pairs = _radius_pairs(
-        q, p, radius_deg, res, "qx", "qy", "nx", "ny"
+        q, p, radius_deg, "qx", "qy", "nx", "ny"
     ).filter(F.col("qid") != F.col("nid"))
     w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nid").asc())
     top = pairs.withColumn("rank", F.row_number().over(w)).filter(
@@ -185,10 +166,10 @@ def knn_label_audit(
         ).alias("n_disagree"),
     )
     out = points.select(
-        F.col(pid).alias("qid"), F.col(label_col).alias("qlabel")
+        F.col("pid").alias("qid"), F.col("label").alias("qlabel")
     ).join(agg.select("qid", "n_nbrs", "n_disagree"), "qid", "left")
     return out.select(
-        F.col("qid").alias(pid),
+        F.col("qid").alias("pid"),
         F.col("qlabel").alias("label"),
         F.coalesce("n_nbrs", F.lit(0)).alias("n_nbrs"),
         F.coalesce("n_disagree", F.lit(0)).alias("n_disagree"),

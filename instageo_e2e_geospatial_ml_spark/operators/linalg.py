@@ -22,14 +22,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def gram_matrix(
-    vectors: DataFrame,
-    vec_col: str = "embedding",
-    scale: int = 100,
-) -> DataFrame:
+def gram_matrix(vectors: DataFrame) -> DataFrame:
     """Exact integer Gram matrix of quantized vectors: one row per
     upper-triangle cell (i, j, g), 1-indexed, g = Σ_rows q_i q_j with
-    q = sign(x)·floor(|x|·scale + 0.5). mapInPandas partial matmuls +
+    q = sign(x)·floor(|x|·100 + 0.5). mapInPandas partial matmuls +
     one (i, j)-keyed sum."""
     import pandas as pd
 
@@ -42,10 +38,8 @@ def gram_matrix(
             # float64 BEFORE quantizing (the similarity.py convention):
             # Arrow array<float> is float32, and abs(x)*scale+0.5 in
             # f32 rounds differently than the oracle's CAST AS DOUBLE
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            q = (np.sign(x) * np.floor(np.abs(x) * scale + 0.5)).astype(
-                np.int64
-            )
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            q = (np.sign(x) * np.floor(np.abs(x) * 100 + 0.5)).astype(np.int64)
             g = q.T @ q
             iu, ju = np.triu_indices(g.shape[0])
             yield pd.DataFrame(
@@ -56,29 +50,25 @@ def gram_matrix(
                 }
             )
 
-    cells = vectors.select(vec_col).mapInPandas(
-        partials, "i int, j int, g long"
-    )
+    cells = vectors.select("embedding").mapInPandas(partials, "i int, j int, g long")
     return cells.groupBy("i", "j").agg(F.sum("g").alias("g"))
 
 
-def gram_matrix_sql(
-    table_sql: str, vec_col: str = "embedding", dim: int = 64, scale: int = 100
-) -> str:
+def gram_matrix_sql(table_sql: str) -> str:
     """The identical exact Gram accumulation as DuckDB SQL (position
     pairs via generate_series; quantization shape matches numpy's
-    sign·floor(|x|·scale+0.5))."""
+    sign·floor(|x|·100+0.5))."""
     return f"""
 WITH pos AS (
   SELECT a.i, b.j
-  FROM (SELECT unnest(generate_series(1, {dim})) AS i) a,
-       (SELECT unnest(generate_series(1, {dim})) AS j) b
+  FROM (SELECT unnest(generate_series(1, 64)) AS i) a,
+       (SELECT unnest(generate_series(1, 64)) AS j) b
   WHERE a.i <= b.j
 ),
 q AS (
   SELECT list_transform(
-           {vec_col},
-           x -> CAST(sign(x) * floor(abs(CAST(x AS DOUBLE)) * {scale} + 0.5)
+           embedding,
+           x -> CAST(sign(x) * floor(abs(CAST(x AS DOUBLE)) * 100 + 0.5)
                      AS BIGINT)
          ) AS qv
   FROM ({table_sql})
@@ -90,16 +80,9 @@ GROUP BY 1, 2
 """
 
 
-def jl_project(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    d_out: int = 16,
-    scale: int = 100,
-    salt: str = "jl",
-) -> DataFrame:
+def jl_project(vectors: DataFrame, d_out: int = 16) -> DataFrame:
     """Johnson-Lindenstrauss sign projection (Achlioptas 2003): y = q R
-    with R[i,k] = ±1 derived from md5(salt:i:k) — a projection matrix
+    with R[i,k] = ±1 derived from md5('jl':i:k) — a projection matrix
     that is a pure FUNCTION, never materialized or broadcast, identical
     on every engine and every rerun (the reproducibility property a
     training pipeline needs: re-projecting a shard months later yields
@@ -120,43 +103,31 @@ def jl_project(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             if r is None:
                 d_in = x.shape[1]
                 r = np.empty((d_in, d_out), dtype=np.int64)
                 for i in range(d_in):
                     for k in range(d_out):
-                        h = hashlib.md5(
-                            f"{salt}:{i + 1}:{k + 1}".encode()
-                        ).hexdigest()
+                        h = hashlib.md5(f"jl:{i + 1}:{k + 1}".encode()).hexdigest()
                         r[i, k] = 1 if int(h[0], 16) < 8 else -1
-            q = (np.sign(x) * np.floor(np.abs(x) * scale + 0.5)).astype(
-                np.int64
-            )
+            q = (np.sign(x) * np.floor(np.abs(x) * 100 + 0.5)).astype(np.int64)
             y = q @ r
             n = len(pdf)
             yield pd.DataFrame(
                 {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), d_out),
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), d_out),
                     "k": np.tile(np.arange(1, d_out + 1), n).astype("int32"),
                     "y": y.reshape(-1),
                 }
             )
 
-    return vectors.select(id_col, vec_col).mapInPandas(
-        project, f"{id_col} long, k int, y long"
+    return vectors.select("vec_id", "embedding").mapInPandas(
+        project, "vec_id long, k int, y long"
     )
 
 
-def jl_project_sql(
-    table_sql: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    d_in: int = 64,
-    d_out: int = 16,
-    scale: int = 100,
-    salt: str = "jl",
-) -> str:
+def jl_project_sql(table_sql: str) -> str:
     """The identical deterministic sign projection as DuckDB SQL: the
     sign matrix regenerates from md5 the same way (first hex nibble
     < 8 -> +1), positions pair via generate_series."""
@@ -164,21 +135,21 @@ def jl_project_sql(
 WITH r AS (
   SELECT i.i, k.k,
          CASE WHEN CAST('0x' || substring(
-                md5('{salt}:' || CAST(i.i AS VARCHAR) || ':' || CAST(k.k AS VARCHAR)),
+                md5('jl:' || CAST(i.i AS VARCHAR) || ':' || CAST(k.k AS VARCHAR)),
                 1, 1) AS BIGINT) < 8
               THEN 1 ELSE -1 END AS s
-  FROM (SELECT unnest(generate_series(1, {d_in})) AS i) i,
-       (SELECT unnest(generate_series(1, {d_out})) AS k) k
+  FROM (SELECT unnest(generate_series(1, 64)) AS i) i,
+       (SELECT unnest(generate_series(1, 16)) AS k) k
 ),
 q AS (
-  SELECT {id_col}, list_transform(
-           {vec_col},
-           x -> CAST(sign(x) * floor(abs(CAST(x AS DOUBLE)) * {scale} + 0.5)
+  SELECT vec_id, list_transform(
+           embedding,
+           x -> CAST(sign(x) * floor(abs(CAST(x AS DOUBLE)) * 100 + 0.5)
                      AS BIGINT)
          ) AS qv
   FROM ({table_sql})
 )
-SELECT q.{id_col}, CAST(r.k AS INTEGER) AS k,
+SELECT q.vec_id, CAST(r.k AS INTEGER) AS k,
        CAST(sum(qv[r.i] * r.s) AS BIGINT) AS y
 FROM q, r
 GROUP BY 1, 2
@@ -188,11 +159,7 @@ GROUP BY 1, 2
 PI_SCALE = 1_000_000  # eigenvector fixed-point scale (see power_iteration)
 
 
-def power_iteration(
-    mat: DataFrame,
-    iters: int = 3,
-    checkpoint_every: int = 6,
-) -> DataFrame:
+def power_iteration(mat: DataFrame, iters: int = 3) -> DataFrame:
     """Dominant eigenvector of a symmetric integer matrix by
     max-normalized power iteration — distributed PCA's first component
     when fed gram_matrix above (the matrix lives as (i, j, g) cell
@@ -213,7 +180,7 @@ def power_iteration(
     quantized at scale 100 over ≤ ~1e8 rows are safe).
 
     Output one row per dimension: (i, v) after `iters` rounds. Deep
-    chains truncate their lineage every `checkpoint_every` rounds
+    chains truncate their lineage every 6 rounds
     (localCheckpoint, the q32 connected-components contract) —
     Catalyst re-optimizes the whole accumulated tree per round
     otherwise, which turns 10+ rounds into minutes of PLANNING on a
@@ -241,12 +208,12 @@ def power_iteration(
         v = w.crossJoin(F.broadcast(mx)).select(
             "i", F.expr(f"w * {PI_SCALE} div mx").alias("v")
         )
-        if (t + 1) % checkpoint_every == 0 and (t + 1) < iters:
+        if (t + 1) % 6 == 0 and (t + 1) < iters:
             v = v.localCheckpoint(eager=True)
     return v
 
 
-def power_iteration_sql(mat_sql: str, iters: int = 3) -> str:
+def power_iteration_sql(mat_sql: str) -> str:
     """DuckDB twin of power_iteration (`mat_sql` yields the upper
     triangle i, j, g)."""
     parts = [
@@ -255,7 +222,7 @@ def power_iteration_sql(mat_sql: str, iters: int = 3) -> str:
         "SELECT j AS i, i AS j, g FROM m0 WHERE i < j)",
         f"v0 AS MATERIALIZED (SELECT DISTINCT i, CAST({PI_SCALE} AS BIGINT) AS v FROM m)",
     ]
-    for t in range(iters):
+    for t in range(3):
         parts.append(
             f"w{t + 1} AS MATERIALIZED (SELECT m.i, "
             f"CAST(sum(m.g * v.v) AS BIGINT) AS w "
@@ -268,5 +235,5 @@ def power_iteration_sql(mat_sql: str, iters: int = 3) -> str:
         )
     return (
         "WITH " + ",\n".join(parts)
-        + f"\nSELECT i, CAST(v AS BIGINT) AS v FROM v{iters}"
+        + "\nSELECT i, CAST(v AS BIGINT) AS v FROM v3"
     )

@@ -61,7 +61,6 @@ def fuzzy_self_join(
     key_col: str,
     str_col: str,
     max_dist: int,
-    q: int = 2,
 ) -> DataFrame:
     """All unordered pairs (a < b by key) with levenshtein <= max_dist.
 
@@ -70,6 +69,7 @@ def fuzzy_self_join(
     math; refine is the built-in JVM `levenshtein` (whole-stage
     codegen, no Python).
     """
+    q = 2
     t, short_max = max_dist, q * (max_dist + 1) - 1
     base = df.select(
         F.col(key_col).alias("k"),

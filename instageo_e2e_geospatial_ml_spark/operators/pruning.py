@@ -103,13 +103,7 @@ FROM d GROUP BY query_id
 """
 
 
-def compaction_plan(
-    files: DataFrame,
-    target_bytes: int,
-    partition_col: str = "partition_id",
-    file_col: str = "file_id",
-    size_col: str = "size_bytes",
-) -> DataFrame:
+def compaction_plan(files: DataFrame, target_bytes: int) -> DataFrame:
     """Small-file compaction planning (the Delta OPTIMIZE / Iceberg
     rewrite_data_files planner): within each table partition, group
     the files needing compaction into merge bins of ≈ target_bytes by
@@ -134,9 +128,9 @@ def compaction_plan(
 
     small_file_bytes = target_bytes // 2
     f = files.select(
-        F.col(partition_col).alias("partition_id"),
-        F.col(file_col).alias("file_id"),
-        F.col(size_col).cast("long").alias("size_bytes"),
+        F.col("partition_id"),
+        F.col("file_id"),
+        F.col("size_bytes").cast("long").alias("size_bytes"),
     )
     small = f.filter(F.col("size_bytes") < small_file_bytes)
     big = f.filter(F.col("size_bytes") >= small_file_bytes).withColumn(
@@ -410,17 +404,12 @@ def bloom_prune_audit(
     )
 
 
-def bloom_prune_audit_sql(
-    build_sql: str,
-    probe_sql: str,
-    m_bits: int = 4096,
-    n_hashes: int = 3,
-) -> str:
+def bloom_prune_audit_sql(build_sql: str, probe_sql: str) -> str:
     """DuckDB twin of bloom_prune_audit: `build_sql` / `probe_sql` each
     yield one column k (BIGINT)."""
     pos_exprs = " UNION ALL ".join(
-        f"SELECT k, CAST(('0x' || substring(md5('{j}:' || CAST(k AS VARCHAR)), 1, 15)) AS BIGINT) % {m_bits} AS pos FROM {{src}}"
-        for j in range(n_hashes)
+        f"SELECT k, CAST(('0x' || substring(md5('{j}:' || CAST(k AS VARCHAR)), 1, 15)) AS BIGINT) % 4096 AS pos FROM {{src}}"
+        for j in range(3)
     )
     return f"""
 WITH bk AS MATERIALIZED (SELECT DISTINCT k FROM ({build_sql})),
@@ -432,7 +421,7 @@ ppos AS ({pos_exprs.format(src='pk')}),
 hits AS (
   SELECT k FROM ppos
   WHERE pos IN (SELECT pos FROM bits)
-  GROUP BY k HAVING count(*) = {n_hashes}
+  GROUP BY k HAVING count(*) = 3
 ),
 members AS (SELECT k FROM pk WHERE k IN (SELECT k FROM bk))
 SELECT

@@ -33,8 +33,6 @@ def adaptive_quadtree(
     extent_bits: int,
     max_depth: int,
     cap: int,
-    x_col: str = "px",
-    y_col: str = "py",
 ) -> DataFrame:
     """points with integer coords in [0, 2^extent_bits) -> adaptive
     leaves (depth, cx, cy, n_points, overflow). Cell coords at depth d
@@ -43,12 +41,8 @@ def adaptive_quadtree(
     counts = [None] * (max_depth + 1)
     counts[max_depth] = (
         points.select(
-            F.shiftrightunsigned(
-                F.col(x_col).cast("long"), leaf_shift
-            ).alias("cx"),
-            F.shiftrightunsigned(
-                F.col(y_col).cast("long"), leaf_shift
-            ).alias("cy"),
+            F.shiftrightunsigned(F.col("px").cast("long"), leaf_shift).alias("cx"),
+            F.shiftrightunsigned(F.col("py").cast("long"), leaf_shift).alias("cy"),
         )
         .groupBy("cx", "cy")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -29,9 +29,6 @@ from pyspark.sql import functions as F
 def interval_join(
     events: DataFrame,
     intervals: DataFrame,
-    ts_col: str = "ts",
-    start_col: str = "start",
-    end_col: str = "end",
     bucket_minutes: int = 60,
     max_buckets_per_interval: int = 1000,
     max_broadcast_intervals: int = 100_000,
@@ -54,12 +51,12 @@ def interval_join(
     OOMing the driver at collect-broadcast time.
     """
     b_us = int(bucket_minutes) * 60 * 1_000_000
-    ev_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    st_us = F.unix_micros(F.col(start_col).cast("timestamp"))
-    en_us = F.unix_micros(F.col(end_col).cast("timestamp"))
+    ev_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    st_us = F.unix_micros(F.col("start").cast("timestamp"))
+    en_us = F.unix_micros(F.col("end").cast("timestamp"))
     refine = (
-        F.col(start_col).cast("timestamp") <= F.col(ts_col).cast("timestamp")
-    ) & (F.col(ts_col).cast("timestamp") < F.col(end_col).cast("timestamp"))
+        F.col("start").cast("timestamp") <= F.col("ts").cast("timestamp")
+    ) & (F.col("ts").cast("timestamp") < F.col("end").cast("timestamp"))
 
     iv = intervals.withColumn("_b0", F.floor(st_us / F.lit(b_us))).withColumn(
         "_b1", F.floor(en_us / F.lit(b_us))
@@ -95,12 +92,7 @@ def interval_join(
     return out.unionByName(theta)
 
 
-def peak_concurrency(
-    intervals: DataFrame,
-    key_cols: list[str],
-    start_col: str = "start_us",
-    end_col: str = "end_us",
-) -> DataFrame:
+def peak_concurrency(intervals: DataFrame, key_cols: list[str]) -> DataFrame:
     """Maximum number of simultaneously-open intervals per key (peak
     concurrent sessions / connections / jobs — the capacity-planning
     aggregate), by the classic sweep line: each interval contributes
@@ -121,7 +113,7 @@ def peak_concurrency(
     (type, day)-grained, so no task sees the whole corpus. The final
     max is a map-side-combinable agg.
     """
-    s, e = F.col(start_col).cast("long"), F.col(end_col).cast("long")
+    s, e = F.col("start_us").cast("long"), F.col("end_us").cast("long")
     pts = intervals.select(
         *key_cols,
         F.explode(
@@ -145,20 +137,15 @@ def peak_concurrency(
     )
 
 
-def peak_concurrency_sql(
-    intervals_sql: str,
-    key_exprs: str,
-    start_expr: str = "start_us",
-    end_expr: str = "end_us",
-) -> str:
+def peak_concurrency_sql(intervals_sql: str, key_exprs: str) -> str:
     """The identical sweep as DuckDB SQL (oracle twin). `key_exprs` is
     the comma-separated key column list."""
     return f"""
 WITH iv AS ({intervals_sql}),
 pts AS (
-  SELECT {key_exprs}, {start_expr} AS t, 1 AS delta FROM iv
+  SELECT {key_exprs}, start_us AS t, 1 AS delta FROM iv
   UNION ALL
-  SELECT {key_exprs}, {end_expr} AS t, -1 AS delta FROM iv
+  SELECT {key_exprs}, end_us AS t, -1 AS delta FROM iv
 ),
 run AS (
   SELECT {key_exprs},
@@ -173,13 +160,7 @@ FROM run GROUP BY {key_exprs}
 """
 
 
-def coalesce_read_ranges(
-    requests: DataFrame,
-    max_gap: int,
-    file_col: str = "file_id",
-    offset_col: str = "offset",
-    length_col: str = "length",
-) -> DataFrame:
+def coalesce_read_ranges(requests: DataFrame, max_gap: int) -> DataFrame:
     """Byte-range fetch planning for cloud-object reads (the COG /
     Parquet reader optimization GDAL ships as CPL_VSIL_CURL merging and
     Spark's Parquet reader as io.file.buffer coalescing): merge each
@@ -204,9 +185,9 @@ def coalesce_read_ranges(
     """
     from pyspark.sql import Window
 
-    fid = F.col(file_col)
-    off = F.col(offset_col).cast("long")
-    ln = F.col(length_col).cast("long")
+    fid = F.col("file_id")
+    off = F.col("offset").cast("long")
+    ln = F.col("length").cast("long")
     d = requests.select(
         fid.alias("file_id"), off.alias("off"), ln.alias("len"),
         (off + ln).alias("end"),

@@ -23,14 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def token_bucket_admit(
-    events: DataFrame,
-    rate_per_s: int,
-    burst: int,
-    key_col: str = "k",
-    ts_col: str = "tus",
-    id_col: str = "eid",
-) -> DataFrame:
+def token_bucket_admit(events: DataFrame, rate_per_s: int, burst: int) -> DataFrame:
     """Batch replay: per key, fold the bucket over (ts, id)-ordered
     arrivals → (k, n_arrivals, n_admitted, n_throttled,
     first_throttled_us or NULL)."""
@@ -40,8 +33,8 @@ def token_bucket_admit(
     cost = 1_000_000
 
     def fold(key, pdf):
-        pdf = pdf.sort_values([ts_col, id_col], kind="mergesort")
-        ts = pdf[ts_col].astype("int64").to_numpy()
+        pdf = pdf.sort_values(["tus", "eid"], kind="mergesort")
+        ts = pdf["tus"].astype("int64").to_numpy()
         tokens = cap
         last = None
         admitted = 0
@@ -65,7 +58,7 @@ def token_bucket_admit(
             }
         )
 
-    return events.groupBy(key_col).applyInPandas(
+    return events.groupBy("k").applyInPandas(
         fold,
         "k string, n_arrivals long, n_admitted long, n_throttled long, "
         "first_throttled_us long",

@@ -34,12 +34,10 @@ def _hash_point(key: Column, salt: str) -> Column:
     return F.pmod(h, F.lit(_DENOM))
 
 
-def hash_sample(
-    df: DataFrame, key_col: str, fraction: float, salt: str = "s"
-) -> DataFrame:
+def hash_sample(df: DataFrame, key_col: str, fraction: float) -> DataFrame:
     """Keep ~fraction of rows, decided by md5(key) — deterministic,
     engine-portable, repartition-stable."""
-    return df.filter(_hash_point(F.col(key_col), salt) < int(fraction * _DENOM))
+    return df.filter(_hash_point(F.col(key_col), "s") < int(fraction * _DENOM))
 
 
 def stratified_sample(
@@ -48,7 +46,6 @@ def stratified_sample(
     strata_col: str,
     fractions: dict[str, float],
     default_fraction: float = 0.0,
-    salt: str = "s",
 ) -> DataFrame:
     """Per-stratum deterministic sampling (e.g. downweight a crawl source,
     keep all of a curated one): fractions maps stratum value → keep rate;
@@ -58,7 +55,7 @@ def stratified_sample(
         thr = F.when(
             F.col(strata_col) == value, F.lit(int(frac * _DENOM))
         ).otherwise(thr)
-    return df.filter(_hash_point(F.col(key_col), salt) < thr)
+    return df.filter(_hash_point(F.col(key_col), "s") < thr)
 
 
 def exact_stratified_split(
@@ -66,7 +63,6 @@ def exact_stratified_split(
     stratum_col: str,
     id_col: str,
     total: int,
-    salt: str = "xsplit",
 ) -> DataFrame:
     """Select EXACTLY `total` rows, allocated across strata
     proportionally by the largest-remainder rule (operators/stats.
@@ -103,7 +99,7 @@ def exact_stratified_split(
         )
         .select(st, "quota")
     )
-    h = F.md5(F.concat(F.col(i).cast("string"), F.lit(":" + salt)))
+    h = F.md5(F.concat(F.col(i).cast("string"), F.lit(":xsplit")))
     wh = Window.partitionBy(st).orderBy(h.asc(), F.col(i).asc())
     ranked = df.select(st, i).withColumn("rk", F.row_number().over(wh))
     return (
@@ -115,7 +111,6 @@ def exact_stratified_split(
 
 def exact_stratified_split_sql(
     table_sql: str, stratum_col: str, id_col: str, total: int,
-    salt: str = "xsplit",
 ) -> str:
     """The identical allocation + hash-rank selection as DuckDB SQL."""
     st, i = stratum_col, id_col
@@ -138,7 +133,7 @@ alloc AS (
 ranked AS (
   SELECT {st}, {i},
     CAST(row_number() OVER (PARTITION BY {st}
-      ORDER BY md5(CAST({i} AS VARCHAR) || ':{salt}') ASC, {i} ASC)
+      ORDER BY md5(CAST({i} AS VARCHAR) || ':xsplit') ASC, {i} ASC)
       AS BIGINT) AS rk
   FROM rows_in
 )
@@ -153,7 +148,6 @@ def weighted_priority_sample(
     key_col: str,
     weight_col: str,
     k: int,
-    salt: str = "wps",
 ) -> DataFrame:
     """Deterministic weighted sampling without replacement: each row
     gets priority = (u · SCALE) div w where u = md5-uniform in [0, 1e6)
@@ -176,7 +170,7 @@ def weighted_priority_sample(
         df.select(
             F.col(key_col).alias("key"),
             F.col(weight_col).cast("long").alias("weight"),
-            _hash_point(F.col(key_col), salt).alias("_u"),
+            _hash_point(F.col(key_col), "wps").alias("_u"),
         )
         .filter(F.col("weight") > 0)
         .withColumn(
@@ -196,12 +190,11 @@ def weighted_priority_sample(
 
 def weighted_priority_sample_sql(
     rows_sql: str, key_expr: str, weight_expr: str, k: int,
-    salt: str = "wps",
 ) -> str:
     """DuckDB twin of weighted_priority_sample."""
     h = (
         f"CAST(('0x' || substr(md5(CAST({key_expr} AS VARCHAR)"
-        f" || ':{salt}'), 1, 8)) AS BIGINT) % {_DENOM}"
+        f" || ':wps'), 1, 8)) AS BIGINT) % {_DENOM}"
     )
     return f"""
 WITH pri AS (

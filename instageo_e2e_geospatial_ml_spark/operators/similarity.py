@@ -100,10 +100,6 @@ def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    qid: str = "qid",
-    pid: str = "pid",
-    qvec: str = "qvec",
-    pvec: str = "pvec",
     max_queries: int = 100_000,
 ) -> DataFrame:
     """Exact top-k by quantized dot product: (qid, pid, dot, rank); a
@@ -129,7 +125,7 @@ def brute_force_topk(
         # numpy's banker's rounding
         return (np.sign(m) * np.floor(np.abs(m) * 1000.0 + 0.5)).astype(np.int64)
 
-    q_rows = queries.select(qid, qvec).limit(max_queries + 1).collect()
+    q_rows = queries.select("qid", "qvec").limit(max_queries + 1).collect()
     if len(q_rows) > max_queries:
         raise ValueError(
             f"brute_force_topk capped at {max_queries} queries; "
@@ -142,8 +138,8 @@ def brute_force_topk(
     def score(it):
         q_ids, qm = bc.value
         for pdf in it:
-            pids = pdf[pid].to_numpy(np.int64)
-            pm = _q(np.stack(pdf[pvec].map(lambda v: np.asarray(v, dtype=np.float64))))
+            pids = pdf["pid"].to_numpy(np.int64)
+            pm = _q(np.stack(pdf["pvec"].map(lambda v: np.asarray(v, dtype=np.float64))))
             dots = pm @ qm.T  # (n, q) exact int64
             out_q, out_p, out_d = [], [], []
             for j in range(qm.shape[0]):
@@ -157,16 +153,16 @@ def brute_force_topk(
                 out_q.extend([q_ids[j]] * len(sel))
                 out_p.extend(pids[sel])
                 out_d.extend(col[sel])
-            yield pd.DataFrame({qid: out_q, pid: out_p, "dot": out_d})
+            yield pd.DataFrame({"qid": out_q, "pid": out_p, "dot": out_d})
 
-    cand = spread_input(corpus.select(pid, pvec)).mapInPandas(
-        score, f"{qid} long, {pid} long, dot long"
+    cand = spread_input(corpus.select("pid", "pvec")).mapInPandas(
+        score, "qid long, pid long, dot long"
     )
-    w = Window.partitionBy(qid).orderBy(F.col("dot").desc(), F.col(pid).asc())
+    w = Window.partitionBy("qid").orderBy(F.col("dot").desc(), F.col("pid").asc())
     return (
         cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(qid, pid, "dot", "rank")
+        .select("qid", "pid", "dot", "rank")
     )
 
 
@@ -200,20 +196,14 @@ def _np_bucket(mat, w):
     return ((proj > 0) * bits).sum(axis=1).astype(np.int64)
 
 
-def lsh_buckets(
-    vecs: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_bits: int = 8,
-    seed: str = "lsh",
-) -> DataFrame:
-    """(id, bucket): sign-random-projection bucket id with n_bits planes.
+def lsh_buckets(vecs: DataFrame) -> DataFrame:
+    """(id, bucket): sign-random-projection bucket id with 8 planes.
 
     All-integer: quantized elements × md5 weights, summed exactly. The
     projection runs as a numpy batch kernel (one (rows × dim) @ (dim ×
-    n_bits) exact matmul per Arrow batch) instead of the posexplode ×
+    8) exact matmul per Arrow batch) instead of the posexplode ×
     bit-explode expression pipeline, which evaluated an md5 PER EXPLODED
-    ROW (rows × dim × n_bits of them) for what is a dim × n_bits constant
+    ROW (rows × dim × 8 of them) for what is a dim × 8 constant
     weight matrix — guide §4.2/§4.5: constants hoisted once per task,
     batch math in native code. Same md5-derived integers, same buckets.
     """
@@ -227,17 +217,17 @@ def lsh_buckets(
             if len(pdf) == 0:
                 continue
             vm = _np_quant(
-                np.stack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)))
+                np.stack(pdf["embedding"].map(lambda v: np.asarray(v, dtype=np.float64)))
             )
             if w is None:
-                w = _np_lsh_weights(vm.shape[1], n_bits, seed)
+                w = _np_lsh_weights(vm.shape[1], 8, "lsh")
             yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "bucket": _np_bucket(vm, w)}
+                {"vec_id": pdf["vec_id"].to_numpy(), "bucket": _np_bucket(vm, w)}
             )
 
-    id_type = dict(vecs.dtypes)[id_col]
-    return spread_input(vecs.select(id_col, vec_col)).mapInPandas(
-        kernel, f"{id_col} {id_type}, bucket long"
+    id_type = dict(vecs.dtypes)["vec_id"]
+    return spread_input(vecs.select("vec_id", "embedding")).mapInPandas(
+        kernel, f"vec_id {id_type}, bucket long"
     )
 
 
@@ -245,13 +235,8 @@ def lsh_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    qid: str = "qid",
-    pid: str = "pid",
-    qvec: str = "qvec",
-    pvec: str = "pvec",
     n_bits: int = 8,
     multi_probe: bool = False,
-    max_queries: int = 100_000,
 ) -> DataFrame:
     """Approximate top-k: only candidates sharing the LSH bucket are scored.
 
@@ -260,7 +245,7 @@ def lsh_topk(
     multi-probe recall knob) — a (query, candidate) pair still matches at
     most once (each corpus row lives in exactly one bucket).
 
-    The query set is small by contract (bounded by max_queries, the
+    The query set is small by contract (bounded by 100,000 queries, the
     brute_force_topk contract), so the scan runs FUSED: the query matrix +
     probe table are computed once on the driver, broadcast, and a single
     numpy pass over the corpus buckets each row, scores it against the
@@ -270,7 +255,7 @@ def lsh_topk(
     before you shuffle', §4.2 batch kernels)."""
     import numpy as np
 
-    q_ids, qm = _collect_id_matrix(queries, qid, qvec, max_queries)
+    q_ids, qm = _collect_id_matrix(queries, "qid", "qvec", 100_000)
     w_mat = _np_lsh_weights(qm.shape[1] if qm.size else 1, n_bits, "lsh")
     qbuckets = _np_bucket(qm, w_mat) if qm.size else np.zeros(0, np.int64)
     probe_map: dict[int, list[int]] = {}
@@ -285,15 +270,15 @@ def lsh_topk(
     def kernel(it):
         q_ids, qm, w_mat, probe_map = bc.value
         acc: dict[int, list] = {}
-        for pdf in _np_bucket_groups(it, pid, pvec, w_mat, probe_map):
+        for pdf in _np_bucket_groups(it, "pid", "pvec", w_mat, probe_map):
             qidx, pids, pm_rows = pdf
             dots = _exact_matmul(qm[qidx], pm_rows.T)
             for row, qi in enumerate(qidx.tolist()):
                 acc.setdefault(qi, []).append((dots[row], pids))
-        yield _emit_topk(acc, q_ids, qid, pid, k)
+        yield _emit_topk(acc, q_ids, "qid", "pid", k)
 
     return _topk_scored_candidates(
-        spread_input(corpus.select(pid, pvec)), kernel, qid, pid, k
+        spread_input(corpus.select("pid", "pvec")), kernel, "qid", "pid", k
     )
 
 
@@ -350,12 +335,7 @@ def _emit_topk(acc, q_ids, qid: str, pid: str, k: int):
     )
 
 
-def label_centroids(
-    vecs: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    assemble: bool = False,
-) -> DataFrame:
+def label_centroids(vecs: DataFrame, assemble: bool = False) -> DataFrame:
     """Per-label centroid of an embedding column — the IVF coarse-quantizer
     builder (feed the assembled form into ivf_topk as `centroids`).
 
@@ -368,7 +348,7 @@ def label_centroids(
     assemble=True → (cid, cvec array<float>) ready for ivf_topk.
     """
     el = vecs.select(
-        F.col(label_col).alias("cid"), F.posexplode(vec_col).alias("i", "e")
+        F.col("label").alias("cid"), F.posexplode("embedding").alias("i", "e")
     ).withColumn("eq", _quant(F.col("e")))
     agg = el.groupBy("cid", "i").agg(
         F.sum("eq").alias("s"), F.count(F.lit(1)).alias("n")
@@ -392,21 +372,13 @@ def ivf_topk(
     corpus: DataFrame,
     centroids: DataFrame,
     k: int = 10,
-    nprobe: int = 2,
-    qid: str = "qid",
-    pid: str = "pid",
-    qvec: str = "qvec",
-    pvec: str = "pvec",
-    cid: str = "cid",
-    cvec: str = "cvec",
-    max_queries: int = 100_000,
 ) -> DataFrame:
     """IVF: assign corpus rows to their nearest centroid (inverted lists),
-    probe the nprobe closest lists per query, exact-score within them.
+    probe the 2 closest lists per query, exact-score within them.
 
     The scan runs FUSED (guide §4.2): centroid and query matrices are
     collected once (both bounded-small by contract — the centroid table is
-    k rows, the query side capped by max_queries like brute_force_topk),
+    k rows, the query side capped at 100,000 like brute_force_topk),
     probe lists computed driver-side by (cdot desc, cid asc), and ONE
     numpy pass over the corpus both assigns each row's list (argmax over
     centroids, ties → smallest cid) and scores it against the queries
@@ -417,16 +389,16 @@ def ivf_topk(
     """
     import numpy as np
 
-    c_ids, cm = _collect_id_matrix(centroids, cid, cvec, None)
+    c_ids, cm = _collect_id_matrix(centroids, "cid", "cvec", None)
     order = np.argsort(c_ids, kind="stable")
     c_ids, cm = c_ids[order], cm[order]  # cid-ascending → argmax ties
-    q_ids, qm = _collect_id_matrix(queries, qid, qvec, max_queries)
+    q_ids, qm = _collect_id_matrix(queries, "qid", "qvec", 100_000)
     qc = _exact_matmul(qm, cm.T)
     probe_map: dict[int, list[int]] = {}
     for i in range(len(q_ids)):
         # top-nprobe centroids by (cdot desc, cid asc); cm is sorted
         # by cid so index order == cid order
-        top = np.lexsort((np.arange(len(c_ids)), -qc[i]))[:nprobe]
+        top = np.lexsort((np.arange(len(c_ids)), -qc[i]))[:2]
         for ci in top.tolist():
             probe_map.setdefault(ci, []).append(i)
     probe_map_np = {
@@ -440,17 +412,15 @@ def ivf_topk(
         q_ids, qm, cm, probe_map = bc.value
         acc: dict[int, list] = {}
         if cm.shape[0] == 0 or not probe_map:
-            yield _emit_topk(acc, q_ids, qid, pid, k)
+            yield _emit_topk(acc, q_ids, "qid", "pid", k)
             return
         for pdf in it:
             if len(pdf) == 0:
                 continue
             pm = _np_quant(
-                np.stack(
-                    pdf[pvec].map(lambda v: np.asarray(v, dtype=np.float64))
-                )
+                np.stack(pdf["pvec"].map(lambda v: np.asarray(v, dtype=np.float64)))
             )
-            pids = pdf[pid].to_numpy(np.int64)
+            pids = pdf["pid"].to_numpy(np.int64)
             assigned = np.argmax(_exact_matmul(pm, cm.T), axis=1)
             row_order = np.argsort(assigned, kind="stable")
             ua, starts = np.unique(assigned[row_order], return_index=True)
@@ -463,20 +433,14 @@ def ivf_topk(
                 dots = _exact_matmul(qm[qidx], pm[sel].T)
                 for row, qi in enumerate(qidx.tolist()):
                     acc.setdefault(qi, []).append((dots[row], pids[sel]))
-        yield _emit_topk(acc, q_ids, qid, pid, k)
+        yield _emit_topk(acc, q_ids, "qid", "pid", k)
 
     return _topk_scored_candidates(
-        spread_input(corpus.select(pid, pvec)), kernel, qid, pid, k
+        spread_input(corpus.select("pid", "pvec")), kernel, "qid", "pid", k
     )
 
 
-def train_centroids(
-    vecs: DataFrame,
-    k: int = 8,
-    n_iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def train_centroids(vecs: DataFrame, k: int = 8, n_iters: int = 3) -> DataFrame:
     """Distributed k-means (Lloyd) over an embedding column → (cid,
     c: array<long>) centroids in the ×1000-quantized integer domain —
     the unsupervised IVF coarse-quantizer builder (label_centroids needs a
@@ -510,19 +474,19 @@ def train_centroids(
     Feed the result through centroids_as_vectors() for ivf_topk.
     """
     q = vecs.select(
-        id_col, F.transform(F.col(vec_col), lambda e: _quant(e)).alias("v")
+        "vec_id", F.transform(F.col("embedding"), lambda e: _quant(e)).alias("v")
     ).localCheckpoint(eager=False)
 
     # deterministic seeding: distributed top-k by hash order
     seeds = (
-        q.withColumn("_h", F.md5(F.col(id_col).cast("string")))
-        .orderBy("_h", id_col)
+        q.withColumn("_h", F.md5(F.col("vec_id").cast("string")))
+        .orderBy("_h", "vec_id")
         .limit(k)
     )
     cents = seeds.withColumn(
         # partition-less window over the limit(k) seed rows only (k
         # centroids, never the corpus) — bounded at any input size
-        "cid", F.row_number().over(Window.orderBy("_h", F.col(id_col)))
+        "cid", F.row_number().over(Window.orderBy("_h", F.col("vec_id")))
     ).select("cid", F.col("v").alias("c"))
 
     import numpy as np
@@ -596,17 +560,7 @@ def centroids_as_vectors(cents: DataFrame) -> DataFrame:
     )
 
 
-def pq_adc_topk(
-    vecs: DataFrame,
-    query_id: int = 0,
-    m: int = 4,
-    k: int = 8,
-    n_iters: int = 2,
-    dim: int = 64,
-    topk: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def pq_adc_topk(vecs: DataFrame) -> DataFrame:
     """Product quantization with asymmetric-distance (ADC) search — the
     FAISS IVF-PQ memory layout that makes billion-vector ANN fit RAM:
     split each vector into `m` subvectors, train an independent `k`-entry
@@ -623,11 +577,11 @@ def pq_adc_topk(
     top-k (TakeOrdered), never a global sort. The stored index is
     m·log2(k) bits per vector instead of dim·32.
 
-    Returns the top-`topk` (pid, adc_score, rank) for `query_id`,
-    deterministic (score desc, id asc). Exact DuckDB twin: q60."""
-    if dim % m:
-        raise ValueError("dim must divide evenly into m subspaces")
-    sub = dim // m
+    Fixed shape: dim 64 in m = 4 subspaces, k = 8 codewords each (2
+    Lloyd iterations); returns the top 10 (pid, adc_score, rank) for
+    vec_id 0, deterministic (score desc, id asc). Exact DuckDB twin: q60."""
+    m = 4
+    sub = 64 // m
     zero = F.lit(0).cast("long")
 
     def _dot(a, b):
@@ -639,17 +593,15 @@ def pq_adc_topk(
         return F.aggregate(a, zero, lambda acc, x: acc + x * x)
 
     qv = vecs.select(
-        id_col, F.transform(F.col(vec_col), lambda e: _quant(e)).alias("v")
+        "vec_id", F.transform(F.col("embedding"), lambda e: _quant(e)).alias("v")
     ).localCheckpoint(eager=False)
 
     books = None
     for mi in range(m):
         sl = vecs.select(
-            id_col, F.slice(F.col(vec_col), mi * sub + 1, sub).alias(vec_col)
+            "vec_id", F.slice(F.col("embedding"), mi * sub + 1, sub).alias("embedding")
         )
-        cb = train_centroids(
-            sl, k=k, n_iters=n_iters, vec_col=vec_col, id_col=id_col
-        ).withColumn("m", F.lit(mi))
+        cb = train_centroids(sl, k=8, n_iters=2).withColumn("m", F.lit(mi))
         books = cb if books is None else books.unionByName(cb)
     books = books.localCheckpoint(eager=False)  # m*k tiny rows
 
@@ -663,20 +615,20 @@ def pq_adc_topk(
             for mi in range(m)
         ]
     )
-    ex = qv.select(id_col, F.explode(parts).alias("p")).select(
-        id_col, F.col("p.m").alias("m"), F.col("p.sv").alias("sv")
+    ex = qv.select("vec_id", F.explode(parts).alias("p")).select(
+        "vec_id", F.col("p.m").alias("m"), F.col("p.sv").alias("sv")
     )
     scored = ex.join(F.broadcast(books), "m").withColumn(
         "score", F.lit(2) * _dot("sv", "c") - _norm("c")
     )
     codes = (
-        scored.groupBy(id_col, "m")
+        scored.groupBy("vec_id", "m")
         .agg(F.max(F.struct(F.col("score"), (-F.col("cid")).alias("_nc"))).alias("_x"))
-        .select(id_col, "m", (-F.col("_x._nc")).alias("code"))
+        .select("vec_id", "m", (-F.col("_x._nc")).alias("code"))
     )
 
     # ADC lookup table for the query: m*k scores, broadcast
-    qrow = qv.filter(F.col(id_col) == query_id).select(F.col("v").alias("qv"))
+    qrow = qv.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
     adc = (
         books.crossJoin(F.broadcast(qrow))
         .withColumn(
@@ -691,15 +643,15 @@ def pq_adc_topk(
             F.broadcast(adc),
             (codes["m"] == adc["m"]) & (codes["code"] == adc["cid"]),
         )
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(F.sum("qs").cast("long").alias("adc_score"))
-        .filter(F.col(id_col) != query_id)
+        .filter(F.col("vec_id") != 0)
     )
-    top = total.orderBy(F.col("adc_score").desc(), F.col(id_col)).limit(topk)
+    top = total.orderBy(F.col("adc_score").desc(), F.col("vec_id")).limit(10)
     # rank over the <= topk surviving rows only (bounded window)
     return top.withColumn(
         "rank",
         F.row_number().over(
-            Window.orderBy(F.col("adc_score").desc(), F.col(id_col))
+            Window.orderBy(F.col("adc_score").desc(), F.col("vec_id"))
         ).cast("long"),
-    ).select(F.col(id_col).alias("pid"), "adc_score", "rank")
+    ).select(F.col("vec_id").alias("pid"), "adc_score", "rank")

@@ -42,20 +42,12 @@ from pyspark.sql import functions as F
 _PACK = "({i} * 16777216 + {x} * 4096 + {y})"
 
 
-def dp_simplify(
-    points: DataFrame,
-    tol2: int,
-    rounds: int = 8,
-    group_col: str = "g",
-    idx_col: str = "i",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
-    """Simplify each group's polyline (points ordered by idx_col,
+def dp_simplify(points: DataFrame, tol2: int, rounds: int = 8) -> DataFrame:
+    """Simplify each group's polyline (points ordered by i,
     0-based contiguous) keeping points whose deviation from the current
     chord exceeds sqrt(tol2). Returns the kept rows (g, i, x, y).
     Coordinates must lie in [0, 4096) and group size ≤ 4096."""
-    g, i, x, y = group_col, idx_col, x_col, y_col
+    g, i, x, y = "g", "i", "x", "y"
     from pyspark.sql import Window
 
     wn = Window.partitionBy(g)
@@ -134,23 +126,18 @@ def dp_simplify(
     return s.filter("k").select(g, i, x, y)
 
 
-def dp_simplify_sql(
-    pts_sql: str,
-    tol2: int,
-    rounds: int = 8,
-    group_col: str = "g",
-) -> str:
+def dp_simplify_sql(pts_sql: str, tol2: int) -> str:
     """The identical bounded-round insertion as a DuckDB CTE chain.
-    `pts_sql` must select (group_col, i, x, y) bigints, i 0-based
+    `pts_sql` must select (g, i, x, y) bigints, i 0-based
     contiguous per group."""
-    g = group_col
+    g = "g"
     pack = "(i * 16777216 + x * 4096 + y)"
     parts = [
         f"s0 AS (SELECT {g}, i, x, y, "
         f"(i = 0 OR i = count(*) OVER (PARTITION BY {g}) - 1) AS k "
         f"FROM ({pts_sql}))"
     ]
-    for r in range(rounds):
+    for r in range(8):
         parts.append(
             f"""a{r} AS (
   SELECT *,
@@ -198,5 +185,5 @@ def dp_simplify_sql(
     return (
         "WITH "
         + ",\n".join(parts)
-        + f"\nSELECT {g}, i, x, y FROM s{rounds} WHERE k"
+        + f"\nSELECT {g}, i, x, y FROM s8 WHERE k"
     )

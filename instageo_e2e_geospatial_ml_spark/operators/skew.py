@@ -24,24 +24,18 @@ from pyspark.sql import functions as F
 from ..functions.text import ranged_prefix
 
 
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt_by: str,
-    n_salt: int = 8,
-) -> DataFrame:
+def salted_join(fact: DataFrame, dim: DataFrame, key: str, salt_by: str) -> DataFrame:
     """fact ⋈ dim (inner) on `key`, with the shuffle spread over (key, salt).
 
-    The dim side explodes ×n_salt (dims are small relative to facts by
+    The dim side explodes ×8 (dims are small relative to facts by
     definition — a big-big skew join wants AQE's skew split instead);
     the fact side derives its salt deterministically from xxhash64 of
     `salt_by`, so re-runs place rows identically. Output rows are exactly
     the unsalted inner join's.
     """
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
+    salts = F.explode(F.sequence(F.lit(0), F.lit(7)))
     d = dim.withColumn("_salt", salts)
-    f = fact.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_by)), F.lit(n_salt)))
+    f = fact.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_by)), F.lit(8)))
     return f.join(d, [key, "_salt"], "inner").drop("_salt")
 
 
@@ -50,7 +44,6 @@ def write_clustered(
     path: str,
     cluster_col: str,
     num_files: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Range-partition on `cluster_col` (+ sort within partitions) and
     write parquet: each file then covers a tight, nearly disjoint value
@@ -60,17 +53,12 @@ def write_clustered(
     (
         df.repartitionByRange(n, F.col(cluster_col))
         .sortWithinPartitions(cluster_col)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
 
-def range_split_points(
-    df: DataFrame,
-    value_col: str,
-    n_parts: int,
-    n_buckets: int | None = None,
-) -> DataFrame:
+def range_split_points(df: DataFrame, value_col: str, n_parts: int) -> DataFrame:
     """EXACT range-partitioner boundaries: split i (1..n_parts-1) is the
     smallest value whose cumulative row count reaches ceil(i*N/n_parts)
     — what Spark's RangePartitioner approximates by reservoir sampling,
@@ -96,9 +84,7 @@ def range_split_points(
     vals = df.groupBy(F.col(value_col).alias("v")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    cum = ranged_prefix(
-        vals, [F.col("v").asc()], "cum", weight="cnt", n_buckets=n_buckets
-    )
+    cum = ranged_prefix(vals, [F.col("v").asc()], "cum", weight="cnt")
     n_total = cum.agg(F.max("cum")).first()[0] or 0
     targets = sess.createDataFrame(
         [

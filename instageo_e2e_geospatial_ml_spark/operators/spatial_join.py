@@ -141,12 +141,12 @@ def ring_is_convex(xs, ys):
     return F.forall(turns, lambda c: c >= 0) | F.forall(turns, lambda c: c <= 0)
 
 
-def bucket_polygons(catalog: DataFrame, res: int = DEFAULT_PIP_RES) -> DataFrame:
+def bucket_polygons(catalog: DataFrame) -> DataFrame:
     """Explode each footprint into the grid cells its bbox covers.
 
     Pure column expressions (sequence × sequence cross) — no Python.
     """
-    n = 1 << res
+    n = 1 << DEFAULT_PIP_RES
 
     def _clamp(c, hi):
         return F.least(F.greatest(c, F.lit(0)), F.lit(hi))
@@ -159,7 +159,7 @@ def bucket_polygons(catalog: DataFrame, res: int = DEFAULT_PIP_RES) -> DataFrame
     return (
         catalog.withColumn("_cx", F.explode(F.sequence(cx0, cx1)))
         .withColumn("_cy", F.explode(F.sequence(cy0, cy1)))
-        .withColumn("cell", cell_id(res, F.col("_cy"), F.col("_cx")))
+        .withColumn("cell", cell_id(DEFAULT_PIP_RES, F.col("_cy"), F.col("_cx")))
         .drop("_cx", "_cy")
     )
 
@@ -167,10 +167,7 @@ def bucket_polygons(catalog: DataFrame, res: int = DEFAULT_PIP_RES) -> DataFrame
 def pip_join(
     obs: DataFrame,
     catalog: DataFrame,
-    res: int = DEFAULT_PIP_RES,
     obs_id: str = "obs_id",
-    x: str = "x",
-    y: str = "y",
     exact: bool = True,
     expand_granules: bool = True,
 ) -> DataFrame:
@@ -219,23 +216,23 @@ def pip_join(
         if not any_concave:
             cat = cat.drop("_convex")
 
-    buckets = F.broadcast(bucket_polygons(cat, res))
+    buckets = F.broadcast(bucket_polygons(cat))
     # spread a few-row-group local scan before the broadcast join: the
     # candidate join + convex refine is per-point compute that a 1-6 task
     # scan would serialize (guide §2.5 input skew; no-op when the fact
     # side is already well-partitioned — the cluster case)
     from ..functions.text import spread_input
 
-    pts = spread_input(obs).withColumn("cell", cell_of(x, y, res))
+    pts = spread_input(obs).withColumn("cell", cell_of("x", "y", DEFAULT_PIP_RES))
     j = pts.join(buckets, "cell", "inner")
     # cheap bbox pre-filter always applies (prunes before the exact refine)
     j = j.filter(
-        (F.col(x) >= F.col("fp_minx"))
-        & (F.col(x) <= F.col("fp_maxx"))
-        & (F.col(y) >= F.col("fp_miny"))
-        & (F.col(y) <= F.col("fp_maxy"))
+        (F.col("x") >= F.col("fp_minx"))
+        & (F.col("x") <= F.col("fp_maxx"))
+        & (F.col("y") >= F.col("fp_miny"))
+        & (F.col("y") <= F.col("fp_maxy"))
     )
-    _sql_test = convex_inside(F.col(x), F.col(y), F.col("fp_xs"), F.col("fp_ys"))
+    _sql_test = convex_inside(F.col("x"), F.col("y"), F.col("fp_xs"), F.col("fp_ys"))
     if exact and not any_concave:
         j = j.filter(_sql_test)
     elif exact:
@@ -244,8 +241,8 @@ def pip_join(
         _udf_test = pip_udf(
             F.col("_fp_id.h1"),
             F.col("_fp_id.h2"),
-            F.col(x),
-            F.col(y),
+            F.col("x"),
+            F.col("y"),
             F.col("fp_xs"),
             F.col("fp_ys"),
         )
@@ -284,15 +281,15 @@ def footprint_key(catalog: DataFrame) -> DataFrame:
     return catalog.withColumn("_fp_id", _fp_identity())
 
 
-def candidate_lists(matches: DataFrame, obs: DataFrame, obs_id: str = "obs_id") -> DataFrame:
+def candidate_lists(matches: DataFrame, obs: DataFrame) -> DataFrame:
     """A3 + reindex-fill: per-observation sorted candidate array; empty array
     for observations with no match (reference stac_utils.py:148-153)."""
-    agg = matches.groupBy(obs_id).agg(
+    agg = matches.groupBy("obs_id").agg(
         F.array_sort(F.collect_list("granule_id")).alias("candidate_items")
     )
     return (
-        obs.select(obs_id)
-        .join(agg, obs_id, "left")
+        obs.select("obs_id")
+        .join(agg, "obs_id", "left")
         .withColumn(
             "candidate_items",
             F.coalesce(F.col("candidate_items"), F.array().cast("array<string>")),
@@ -412,13 +409,7 @@ def _on_segment(px, py, qx, qy, rx, ry) -> Column:
     )
 
 
-def segment_intersect_join(
-    a: DataFrame,
-    b: DataFrame,
-    cell_size: float,
-    max_cells_per_rect: int = 4096,
-    max_broadcast_rects: int = 100_000,
-) -> DataFrame:
+def segment_intersect_join(a: DataFrame, b: DataFrame, cell_size: float) -> DataFrame:
     """Line-segment intersection join: pairs (a, b) whose CLOSED segments
     share at least one point — proper crossings, endpoint touches, and
     collinear overlaps alike (CLRS 33.1's direction/on-segment test, all
@@ -450,8 +441,8 @@ def segment_intersect_join(
     )
     cand = bbox_join(
         aa, bb, cell_size,
-        max_cells_per_rect=max_cells_per_rect,
-        max_broadcast_rects=max_broadcast_rects,
+        max_cells_per_rect=4096,
+        max_broadcast_rects=100_000,
     )
     ax1, ay1 = F.col("a_x1"), F.col("a_y1")
     ax2, ay2 = F.col("a_x2"), F.col("a_y2")

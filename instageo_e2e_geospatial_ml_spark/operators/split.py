@@ -19,10 +19,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def group_stats(obs: DataFrame, group_col: str, year_col: str = "year") -> DataFrame:
+def group_stats(obs: DataFrame, group_col: str) -> DataFrame:
     return obs.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("group_size"),
-        F.avg(year_col).alias("avg_year"),
+        F.avg("year").alias("avg_year"),
     )
 
 
@@ -50,14 +50,12 @@ def greedy_split_assign(
 
 def split_dataset(
     obs: DataFrame,
-    group_col: str = "mgrs_tile_id",
-    year_col: str = "year",
     test_frac: float = 0.1,
     val_frac: float = 0.1,
 ) -> DataFrame:
     """obs + `split` column via geographic group packing (J6: membership
     join back — a broadcast of the tiny group table)."""
     assign = greedy_split_assign(
-        group_stats(obs, group_col, year_col), group_col, test_frac, val_frac
-    ).select(group_col, "split")
-    return obs.join(F.broadcast(assign), group_col, "left")
+        group_stats(obs, "mgrs_tile_id"), "mgrs_tile_id", test_frac, val_frac
+    ).select("mgrs_tile_id", "split")
+    return obs.join(F.broadcast(assign), "mgrs_tile_id", "left")

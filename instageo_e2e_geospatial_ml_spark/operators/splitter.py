@@ -12,7 +12,6 @@ observations.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -27,12 +26,10 @@ def _standardize(m: np.ndarray) -> np.ndarray:
     return (m - mu) / sd
 
 
-def kmeans_lloyd(
-    pts: np.ndarray, n_clusters: int, seed: int = 42, iters: int = 50
-) -> np.ndarray:
+def kmeans_lloyd(pts: np.ndarray, n_clusters: int) -> np.ndarray:
     """Seeded Lloyd iterations (sklearn absent): deterministic k-means++-
     style init from a fixed RNG, L2 assignment, mean update."""
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     n = len(pts)
     k = min(n_clusters, n)
     centers = pts[rng.choice(n, 1)]
@@ -40,7 +37,7 @@ def kmeans_lloyd(
         d2 = ((pts[:, None, :] - centers[None]) ** 2).sum(-1).min(1)
         probs = d2 / d2.sum() if d2.sum() > 0 else np.full(n, 1.0 / n)
         centers = np.vstack([centers, pts[rng.choice(n, p=probs)]])
-    for _ in range(iters):
+    for _ in range(50):
         assign = ((pts[:, None, :] - centers[None]) ** 2).sum(-1).argmin(1)
         new = np.array(
             [pts[assign == j].mean(0) if (assign == j).any() else centers[j] for j in range(k)]
@@ -51,10 +48,8 @@ def kmeans_lloyd(
     return ((pts[:, None, :] - centers[None]) ** 2).sum(-1).argmin(1)
 
 
-def connected_components_haversine(
-    lat: np.ndarray, lon: np.ndarray, threshold_km: float = 400.0
-) -> np.ndarray:
-    """Union-find over the ≤ threshold_km haversine graph (reference
+def connected_components_haversine(lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
+    """Union-find over the ≤ 400 km haversine graph (reference
     data_splitter.py:181-260 BFS components)."""
     n = len(lat)
     parent = np.arange(n)
@@ -71,7 +66,7 @@ def connected_components_haversine(
         dlon = rlon - rlon[i]
         a = np.sin(dlat / 2) ** 2 + np.cos(rlat[i]) * np.cos(rlat) * np.sin(dlon / 2) ** 2
         d = 2 * 6371.0 * np.arcsin(np.sqrt(np.clip(a, 0, 1)))
-        for j in np.nonzero(d <= threshold_km)[0]:
+        for j in np.nonzero(d <= 400.0)[0]:
             ra, rb = find(i), find(int(j))
             if ra != rb:
                 parent[ra] = rb
@@ -81,12 +76,8 @@ def connected_components_haversine(
 def split_by_strategy(
     obs: DataFrame,
     strategy: str = "kmeans",
-    year_col: str = "year",
-    n_clusters: int = 8,
-    threshold_km: float = 400.0,
     test_frac: float = 0.1,
     val_frac: float = 0.1,
-    seed: int = 42,
 ) -> DataFrame:
     """obs + `split` column; groups defined by the chosen strategy.
 
@@ -100,8 +91,8 @@ def split_by_strategy(
         obs = obs.withColumn(tile_col, mgrs_udf(F.col("x"), F.col("y")))
 
     if strategy == "year":
-        group_col = year_col
-        grouped = obs.withColumn("_group", F.col(year_col).cast("string"))
+        group_col = "year"
+        grouped = obs.withColumn("_group", F.col("year").cast("string"))
     elif strategy == "tile":
         grouped = obs.withColumn("_group", F.col(tile_col))
     elif strategy in ("kmeans", "components"):
@@ -114,11 +105,9 @@ def split_by_strategy(
         )
         pts = tiles[["lat", "lon"]].to_numpy(np.float64)
         if strategy == "kmeans":
-            labels = kmeans_lloyd(_standardize(pts), n_clusters, seed=seed)
+            labels = kmeans_lloyd(_standardize(pts), 8)
         else:
-            labels = connected_components_haversine(
-                pts[:, 0], pts[:, 1], threshold_km
-            )
+            labels = connected_components_haversine(pts[:, 0], pts[:, 1])
         tiles["_group"] = [f"{strategy}_{int(g)}" for g in labels]
         lookup = obs.sparkSession.createDataFrame(tiles[[tile_col, "_group"]])
         grouped = obs.join(F.broadcast(lookup), tile_col, "left")
@@ -126,6 +115,6 @@ def split_by_strategy(
         raise ValueError(strategy)
 
     assign = greedy_split_assign(
-        group_stats(grouped, "_group", year_col), "_group", test_frac, val_frac
+        group_stats(grouped, "_group"), "_group", test_frac, val_frac
     ).select("_group", "split")
     return grouped.join(F.broadcast(assign), "_group", "left").drop("_group")

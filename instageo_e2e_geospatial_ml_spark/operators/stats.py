@@ -65,7 +65,6 @@ def kmv_distinct_sketch(
     group_cols: list[str],
     value_col: str,
     k: int = 16,
-    salt: str = "kmv",
 ) -> DataFrame:
     """K-minimum-values distinct-count sketch per group (Bar-Yossef et al.
     2002): keep the k smallest 40-bit md5 hashes of the group's DISTINCT
@@ -86,7 +85,7 @@ def kmv_distinct_sketch(
     gb = [F.col(c) for c in group_cols]
     h = F.conv(
         F.substring(
-            F.md5(F.concat(F.col(value_col).cast("string"), F.lit(":" + salt))),
+            F.md5(F.concat(F.col(value_col).cast("string"), F.lit(":kmv"))),
             1,
             10,
         ),
@@ -117,7 +116,6 @@ def kmv_set_relations(
     group_col: str,
     value_col: str,
     k: int = 32,
-    salt: str = "kmv",
 ) -> DataFrame:
     """Sketch ALGEBRA over per-group KMV sketches (theta-sketch style,
     Beyer et al. SIGMOD'07): for every unordered group pair (g1 < g2),
@@ -138,7 +136,7 @@ def kmv_set_relations(
     gb = F.col(group_col)
     h = F.conv(
         F.substring(
-            F.md5(F.concat(F.col(value_col).cast("string"), F.lit(":" + salt))),
+            F.md5(F.concat(F.col(value_col).cast("string"), F.lit(":kmv"))),
             1,
             10,
         ),
@@ -348,17 +346,11 @@ def group_ols_trend(
     )
 
 
-def mad_outliers(
-    df: DataFrame,
-    group_cols: list,
-    value_col: str,
-    k_num: int = 3,
-    k_den: int = 1,
-) -> DataFrame:
+def mad_outliers(df: DataFrame, group_cols: list, value_col: str) -> DataFrame:
     """Robust per-group outlier detection by median absolute deviation
     (the MAD rule, Hampel 1974): flag y when
 
-        |y - median(y)| * k_den > k_num * MAD,
+        |y - median(y)| * 1 > 3 * MAD,
         MAD = median(|y - median(y)|)
 
     Both medians are the exact LOWER median (rank (n+1) div 2 — the
@@ -397,10 +389,9 @@ def mad_outliers(
             F.count(F.lit(1)).alias("n"),
             F.max("med").alias("med"),
             F.max("mad").alias("mad"),
+            # the k = 3/1 MAD threshold kept as a ratio of integers
             F.sum(
-                (
-                    F.col("adev") * k_den > k_num * F.col("mad")
-                ).cast("long")
+                (F.col("adev") * 1 > 3 * F.col("mad")).cast("long")
             ).alias("n_outliers"),
             F.max("adev").alias("max_adev"),
         )
@@ -441,11 +432,10 @@ def hll_registers(
     )
 
 
-def hll_sql(
-    table_sql: str, key_expr: str, p: int = 9, group_exprs: str = ""
-) -> str:
+def hll_sql(table_sql: str, key_expr: str, group_exprs: str = "") -> str:
     """The identical register computation as DuckDB SQL (oracle twin).
     `group_exprs` is a comma-prefixed passthrough list (e.g. ", grp")."""
+    p = 9
     w = 60 - p
     h = f"CAST('0x' || substring(md5(CAST({key_expr} AS VARCHAR)), 1, 15) AS BIGINT)"
     return (
@@ -458,24 +448,19 @@ def hll_sql(
     )
 
 
-def cms_build(
-    df: DataFrame,
-    key_col: str,
-    depth: int = 4,
-    width: int = 256,
-) -> DataFrame:
-    """Count-min sketch (Cormode & Muthukrishnan 2005): depth
-    independent md5-salted hash rows x width counters, each counter the
+def cms_build(df: DataFrame, key_col: str) -> DataFrame:
+    """Count-min sketch (Cormode & Muthukrishnan 2005): 4
+    independent md5-salted hash rows x 256 counters, each counter the
     exact sum of arrivals hashing to it. Sketch CONTENT is
     deterministic integers — an oracle can pin every (row, bucket,
     count) cell, and the point estimate (min over rows, always >= the
     true count) is integer-exact too.
 
-    Plan: explode each key to its `depth` (row, bucket) cells JVM-side
+    Plan: explode each key to its 4 (row, bucket) cells JVM-side
     (posexplode over an md5-per-salt array — no Python), one groupBy.
     Merge of two sketches = cellwise sum, so partial aggregation
     happens map-side; at 100 TB the shuffle carries at most
-    depth*width*partitions pre-merged cells, not data rows."""
+    4*256*partitions pre-merged cells, not data rows."""
     h = F.array(
         *[
             F.conv(
@@ -488,8 +473,8 @@ def cms_build(
                 10,
             )
             .cast("long")
-            .bitwiseAND(F.lit(width - 1))
-            for d in range(depth)
+            .bitwiseAND(F.lit(255))
+            for d in range(4)
         ]
     )
     return (
@@ -499,13 +484,13 @@ def cms_build(
     )
 
 
-def cms_sql(table_sql: str, key_expr: str, depth: int = 4, width: int = 256) -> str:
+def cms_sql(table_sql: str, key_expr: str) -> str:
     """The identical sketch build as DuckDB SQL (oracle twin)."""
     rows = " UNION ALL ".join(
         f"SELECT {d} AS row, "
         f"CAST('0x' || substring(md5('cms{d}:' || CAST({key_expr} AS VARCHAR)), 1, 15) AS BIGINT) "
-        f"& {width - 1} AS bucket FROM ({table_sql})"
-        for d in range(depth)
+        f"& 255 AS bucket FROM ({table_sql})"
+        for d in range(4)
     )
     return (
         f"SELECT row, bucket, CAST(count(*) AS BIGINT) AS cnt "
@@ -738,14 +723,13 @@ def weighted_percentiles_sql(
     group_exprs: str,
     value_expr: str,
     weight_expr: str,
-    fractions: list[tuple[int, int]] = ((25, 100), (50, 100), (75, 100)),
 ) -> str:
     """The identical weighted percentile_disc as DuckDB SQL.
     `group_exprs` is a comma-separated list (no leading comma)."""
     g = group_exprs
     fr = " UNION ALL ".join(
         f"SELECT CAST({a} AS BIGINT) AS pct_num, CAST({b} AS BIGINT) AS pct_den"
-        for a, b in fractions
+        for a, b in ((25, 100), (50, 100), (75, 100))
     )
     return f"""
 WITH agg AS (
@@ -1379,17 +1363,15 @@ def abc_classification(
     group_cols: list[str],
     item_col: str,
     value_col: str,
-    a_pct: int = 80,
-    b_pct: int = 95,
 ) -> DataFrame:
     """Pareto / ABC contribution analysis per group — the 80/20 revenue
     report: items ranked by value desc (ties by item id), cumulative
-    share classified A (first items reaching a_pct% of the group
-    total), B (through b_pct%), C (tail). Class boundaries are exact
+    share classified A (first items reaching 80% of the group
+    total), B (through 95%), C (tail). Class boundaries are exact
     integer cross-multiplications — cum·100 <= pct·total — never a
     float share (the q58/q151 thresholds rule); an item straddling
     the boundary is A when the cumulative INCLUDING it is still
-    within a_pct (the standard inclusive convention, so the first
+    within 80% (the standard inclusive convention, so the first
     item is always A even at 100% concentration).
 
     One per-group window over value order (the group's item list is
@@ -1421,12 +1403,9 @@ def abc_classification(
         .withColumn("total_value", F.sum("value").over(wall))
     )
     abc = (
-        F.when(
-            F.col("cum_value") * 100 <= F.lit(a_pct) * F.col("total_value"),
-            "A",
-        )
+        F.when(F.col("cum_value") * 100 <= F.lit(80) * F.col("total_value"), "A")
         .when(
-            F.col("cum_value") * 100 <= F.lit(b_pct) * F.col("total_value"),
+            F.col("cum_value") * 100 <= F.lit(95) * F.col("total_value"),
             "B",
         )
         .otherwise("C")
@@ -1436,12 +1415,7 @@ def abc_classification(
     return d.withColumn("abc", abc)
 
 
-def abc_classification_sql(
-    rows_sql: str,
-    group_exprs: str,
-    a_pct: int = 80,
-    b_pct: int = 95,
-) -> str:
+def abc_classification_sql(rows_sql: str, group_exprs: str) -> str:
     """DuckDB twin of abc_classification over (group..., item,
     value)."""
     g = group_exprs
@@ -1461,8 +1435,8 @@ r AS (
 )
 SELECT {g}, item, value, CAST(rank AS BIGINT) AS rank, cum_value, total_value,
        CASE WHEN rank = 1 THEN 'A'
-            WHEN cum_value * 100 <= {a_pct} * total_value THEN 'A'
-            WHEN cum_value * 100 <= {b_pct} * total_value THEN 'B'
+            WHEN cum_value * 100 <= 80 * total_value THEN 'A'
+            WHEN cum_value * 100 <= 95 * total_value THEN 'B'
             ELSE 'C' END AS abc
 FROM r
 """
@@ -1691,9 +1665,7 @@ def trimmed_stats(
     )
 
 
-def trimmed_stats_sql(
-    rows_sql: str, group_exprs: str, trim_pct: int = 5
-) -> str:
+def trimmed_stats_sql(rows_sql: str, group_exprs: str) -> str:
     """DuckDB twin of trimmed_stats over (group..., v, _id)."""
     g = group_exprs
     return f"""
@@ -1704,9 +1676,9 @@ WITH d AS (
   FROM ({rows_sql})
 ),
 m AS (
-  SELECT *, (n * {trim_pct}) // 100 AS k,
-         CASE WHEN rn > (n * {trim_pct}) // 100
-               AND rn <= n - (n * {trim_pct}) // 100
+  SELECT *, (n * 5) // 100 AS k,
+         CASE WHEN rn > (n * 5) // 100
+               AND rn <= n - (n * 5) // 100
          THEN 1 ELSE 0 END AS kept
   FROM d
 ),
@@ -1979,14 +1951,7 @@ FROM mom
 """
 
 
-def ripley_k_counts(
-    points: DataFrame,
-    r_sq_bands: list[int],
-    area: int,
-    id_col: str = "pid",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
+def ripley_k_counts(points: DataFrame, r_sq_bands: list[int], area: int) -> DataFrame:
     """Ripley's K point-pattern statistic (spatial clustering vs CSR —
     the global companion of q85's local Moran): for each distance band
     r, K(r) = area · n_pairs(r) / (n·(n−1)) over ORDERED point pairs
@@ -2006,9 +1971,9 @@ def ripley_k_counts(
     import math
 
     p = points.select(
-        F.col(id_col).alias("pid"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"),
+        F.col("pid"),
+        F.col("x").cast("long").alias("x"),
+        F.col("y").cast("long").alias("y"),
     )
     q = p.select(
         F.col("pid").alias("qid"),
@@ -2083,13 +2048,12 @@ def conformal_threshold(
     df: DataFrame,
     score_col: str,
     alpha_num: int = 10,
-    alpha_den: int = 100,
 ) -> DataFrame:
     """Split-conformal calibration (Vovk/Angelopoulos): from a
     calibration set of nonconformity scores, the prediction-set
     threshold is the k-th SMALLEST score with k = ceil((n+1)·(1−α)) —
     guaranteeing ≥ 1−α coverage on exchangeable data. α is passed as
-    the exact rational alpha_num/alpha_den so k = ceil((n+1)·(den−num)
+    the exact rational alpha_num/100 so k = ceil((n+1)·(100−num)
     / den) stays integer: k = ((n+1)·(den−num) + den − 1) div den.
 
     Output one row: (n, k, q_hat, n_at_or_below) — q_hat the threshold
@@ -2115,10 +2079,7 @@ def conformal_threshold(
         F.broadcast(nn)
     ).withColumn(
         "k",
-        F.expr(
-            f"((n + 1) * ({alpha_den} - {alpha_num}) + {alpha_den} - 1)"
-            f" DIV {alpha_den}"
-        ),
+        F.expr(f"((n + 1) * (100 - {alpha_num}) + 100 - 1) DIV 100"),
     )
     hit = (
         ranked.filter(F.col("cum") >= F.col("k"))
@@ -2137,10 +2098,7 @@ def conformal_threshold(
     return hit.unionByName(empty_guard)
 
 
-def conformal_threshold_sql(
-    rows_sql: str, score_expr: str,
-    alpha_num: int = 10, alpha_den: int = 100,
-) -> str:
+def conformal_threshold_sql(rows_sql: str, score_expr: str) -> str:
     """DuckDB twin of conformal_threshold."""
     return f"""
 WITH s AS (SELECT CAST({score_expr} AS BIGINT) AS v FROM ({rows_sql})),
@@ -2152,8 +2110,8 @@ ranked AS (
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
            AS BIGINT) AS cum,
          nn.n,
-         ((nn.n + 1) * ({alpha_den} - {alpha_num}) + {alpha_den} - 1)
-           // {alpha_den} AS k
+         ((nn.n + 1) * (100 - 10) + 100 - 1)
+           // 100 AS k
   FROM per CROSS JOIN nn
 ),
 hit AS (
@@ -2252,9 +2210,6 @@ def bootstrap_mean_ci(
     value_int_col: str,
     key_col: str,
     n_resamples: int = 50,
-    lo_pct: int = 5,
-    hi_pct: int = 95,
-    salt: str = "boot",
 ) -> DataFrame:
     """Deterministic bootstrap confidence interval for the mean: B
     Poisson(1)-approximated resamples, each DEFINED by an md5 hash of
@@ -2277,12 +2232,7 @@ def bootstrap_mean_ci(
     h = lambda b: F.pmod(
         F.conv(
             F.substring(
-                F.md5(
-                    F.concat(
-                        F.col(key_col).cast("string"),
-                        F.lit(f":{salt}:{b}"),
-                    )
-                ),
+                F.md5(F.concat(F.col(key_col).cast("string"), F.lit(f":boot:{b}"))),
                 1,
                 8,
             ),
@@ -2314,8 +2264,8 @@ def bootstrap_mean_ci(
         for b in range(n_resamples)
     ]
     arr = F.array_sort(F.array(*means))
-    lo_i = max(1, (lo_pct * n_resamples + 99) // 100)
-    hi_i = max(1, (hi_pct * n_resamples + 99) // 100)
+    lo_i = max(1, (5 * n_resamples + 99) // 100)
+    hi_i = max(1, (95 * n_resamples + 99) // 100)
     return one.select(
         "n",
         F.expr("(1000000 * s) DIV n").alias("mean_ppm"),
@@ -2325,20 +2275,13 @@ def bootstrap_mean_ci(
     )
 
 
-def bootstrap_mean_ci_sql(
-    rows_sql: str,
-    value_expr: str,
-    key_expr: str,
-    n_resamples: int = 50,
-    lo_pct: int = 5,
-    hi_pct: int = 95,
-    salt: str = "boot",
-) -> str:
+def bootstrap_mean_ci_sql(rows_sql: str, value_expr: str, key_expr: str) -> str:
     """DuckDB twin of bootstrap_mean_ci."""
+    n_resamples = 50
     def h(b):
         return (
             f"(CAST(('0x' || substr(md5(CAST({key_expr} AS VARCHAR)"
-            f" || ':{salt}:{b}'), 1, 8)) AS BIGINT) % 1000000)"
+            f" || ':boot:{b}'), 1, 8)) AS BIGINT) % 1000000)"
         )
 
     def w(b):
@@ -2360,8 +2303,8 @@ def bootstrap_mean_ci_sql(
         f" ELSE (1000000 * bs_{b}) // bn_{b} END"
         for b in range(n_resamples)
     )
-    lo_i = max(1, (lo_pct * n_resamples + 99) // 100)
-    hi_i = max(1, (hi_pct * n_resamples + 99) // 100)
+    lo_i = max(1, (5 * n_resamples + 99) // 100)
+    hi_i = max(1, (95 * n_resamples + 99) // 100)
     return f"""
 WITH agg AS (SELECT {sel} FROM ({rows_sql})),
 arr AS (SELECT *, list_sort([{means}]) AS ms FROM agg)
@@ -2523,13 +2466,7 @@ FROM tot t CROSS JOIN sv
 """
 
 
-def cuped_adjustment(
-    exposures: DataFrame,
-    arm_col: str = "arm",
-    user_col: str = "u",
-    pre_col: str = "pre",
-    post_col: str = "post",
-) -> DataFrame:
+def cuped_adjustment(exposures: DataFrame) -> DataFrame:
     """CUPED variance reduction (Deng et al. WSDM'13) — the industry
     experiment-analysis adjustment: regress the post-period metric on
     the pre-period covariate, theta = cov(pre, post) / var(pre), and
@@ -2553,9 +2490,9 @@ def cuped_adjustment(
     theta_ppm, adj_scaled). Scale: one user-keyed aggregate feeding
     two scalar broadcasts — the same plan as a grouped mean.
     """
-    g = exposures.groupBy(arm_col, user_col).agg(
-        F.sum(pre_col).cast("long").alias("pre"),
-        F.sum(post_col).cast("long").alias("post"),
+    g = exposures.groupBy("arm", "u").agg(
+        F.sum("pre").cast("long").alias("pre"),
+        F.sum("post").cast("long").alias("post"),
     )
     tot = g.agg(
         F.count(F.lit(1)).alias("n"),
@@ -2576,13 +2513,13 @@ def cuped_adjustment(
             "CASE WHEN sxx > 0 THEN sxy * 1000000 div sxx ELSE 0 END"
         ).alias("theta_ppm"),
     )
-    arm = g.groupBy(arm_col).agg(
+    arm = g.groupBy("arm").agg(
         F.count(F.lit(1)).alias("n_users"),
         F.sum("pre").alias("sum_pre"),
         F.sum("post").alias("sum_post"),
     )
     return arm.crossJoin(F.broadcast(tot)).select(
-        F.col(arm_col).alias("arm"),
+        F.col("arm"),
         "n_users",
         "sum_pre",
         "sum_post",

@@ -38,12 +38,7 @@ from pyspark.sql import functions as F
 _SCALE = 1_000_000
 
 
-def kaplan_meier(
-    subjects: DataFrame,
-    group_col: str = "grp",
-    duration_col: str = "duration",
-    event_col: str = "event",
-) -> DataFrame:
+def kaplan_meier(subjects: DataFrame) -> DataFrame:
     """Per-group KM curve over integer durations and 0/1 event flags.
     Returns one row per distinct EVENT time: (group, t, n_at_risk,
     n_events, n_censored, surv_fp) with surv_fp the 10^6-fixed-point
@@ -51,16 +46,12 @@ def kaplan_meier(
     they affect later steps' n_at_risk only)."""
     import pandas as pd
 
-    g = group_col
+    g = "grp"
     per_t = (
-        subjects.groupBy(g, F.col(duration_col).alias("t"))
+        subjects.groupBy(g, F.col("duration").alias("t"))
         .agg(
-            F.sum(
-                F.when(F.col(event_col) == 1, 1).otherwise(0)
-            ).alias("d"),
-            F.sum(
-                F.when(F.col(event_col) == 0, 1).otherwise(0)
-            ).alias("c"),
+            F.sum(F.when(F.col("event") == 1, 1).otherwise(0)).alias("d"),
+            F.sum(F.when(F.col("event") == 0, 1).otherwise(0)).alias("c"),
         )
     )
     from pyspark.sql import Window
@@ -100,21 +91,16 @@ def kaplan_meier(
     return risky.groupBy(g).applyInPandas(fold, out_schema)
 
 
-def kaplan_meier_sql(
-    table_sql: str,
-    group_col: str = "grp",
-    duration_col: str = "duration",
-    event_col: str = "event",
-) -> str:
+def kaplan_meier_sql(table_sql: str) -> str:
     """The identical fixed-point fold as a DuckDB recursive CTE: event
     times are rank-ordered per group and the recursion carries the
     integer survival through rank k -> k+1."""
-    g = group_col
+    g = "grp"
     return f"""
 WITH RECURSIVE per_t AS (
-  SELECT {g}, {duration_col} AS t,
-         CAST(sum(CASE WHEN {event_col} = 1 THEN 1 ELSE 0 END) AS BIGINT) AS d,
-         CAST(sum(CASE WHEN {event_col} = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c
+  SELECT {g}, duration AS t,
+         CAST(sum(CASE WHEN event = 1 THEN 1 ELSE 0 END) AS BIGINT) AS d,
+         CAST(sum(CASE WHEN event = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c
   FROM ({table_sql}) GROUP BY 1, 2
 ),
 risky AS (

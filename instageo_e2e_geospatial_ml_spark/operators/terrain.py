@@ -77,14 +77,7 @@ OUT_SCHEMA = StructType([
 ])
 
 
-def horn_kernel(
-    padded: np.ndarray,
-    xres: float = 1.0,
-    yres: float = 1.0,
-    z_factor: float = 1.0,
-    azimuth_deg: float = 315.0,
-    altitude_deg: float = 45.0,
-):
+def horn_kernel(padded: np.ndarray, xres: float = 1.0, yres: float = 1.0):
     """(h+2, w+2) float64 padded DEM -> (slope_deg, aspect_deg, shade u8)
     for the h x w interior. Pure numpy; shared verbatim by the operator
     and the whole-mosaic test replica, so the distributed path is
@@ -95,10 +88,11 @@ def horn_kernel(
     g, hh, i = p[2:, :-2], p[2:, 1:-1], p[2:, 2:]
     dzdx = ((c + 2 * f + i) - (a + 2 * d + g)) / (8.0 * xres)
     dzdy = ((g + 2 * hh + i) - (a + 2 * b + c)) / (8.0 * yres)
-    slope = np.arctan(z_factor * np.hypot(dzdx, dzdy))
+    slope = np.arctan(np.hypot(dzdx, dzdy))
     aspect = np.arctan2(dzdy, -dzdx)
-    zen = np.deg2rad(90.0 - altitude_deg)
-    az = np.deg2rad(360.0 - azimuth_deg + 90.0)
+    # sun at altitude 45°, azimuth 315° (the GDAL hillshade defaults)
+    zen = np.deg2rad(90.0 - 45.0)
+    az = np.deg2rad(360.0 - 315.0 + 90.0)
     shade = 255.0 * (
         np.cos(zen) * np.cos(slope)
         + np.sin(zen) * np.sin(slope) * np.cos(az - aspect)
@@ -116,9 +110,6 @@ def terrain_derivatives(
     tiles: DataFrame,
     xres: float = 1.0,
     yres: float = 1.0,
-    z_factor: float = 1.0,
-    azimuth_deg: float = 315.0,
-    altitude_deg: float = 45.0,
 ) -> DataFrame:
     """TILE_SCHEMA mosaic table -> OUT_SCHEMA per-tile terrain summary,
     halo-exchange exact at tile boundaries (see module docstring)."""
@@ -191,9 +182,7 @@ def terrain_derivatives(
         pad[-1, 0] = corner("sw", -1, 1) if s is not None else pad[-2, 0]
         pad[-1, -1] = corner("se", -1, -2) if s is not None else pad[-2, -1]
 
-        slope_deg, compass, shade = horn_kernel(
-            pad, xres, yres, z_factor, azimuth_deg, altitude_deg
-        )
+        slope_deg, compass, shade = horn_kernel(pad, xres, yres)
         slope_q4 = np.round(slope_deg * 1e4).astype(np.int64)
         octs = np.where(
             compass < 0, -1, ((compass + 22.5) % 360.0 / 45.0).astype(np.int64)
@@ -385,14 +374,14 @@ def _d8_grid_ctes(cells_sql: str) -> list[str]:
     ]
 
 
-def d8_flow_sql(cells_sql: str, rounds: int = 8) -> str:
+def d8_flow_sql(cells_sql: str) -> str:
     """DuckDB twin of d8_flow."""
     ctes = _d8_grid_ctes(cells_sql) + [
         """e AS MATERIALIZED (SELECT x AS ux, y AS uy, tox AS x,
   toy AS y FROM grid WHERE flow_dir > 0)""",
         "a0 AS MATERIALIZED (SELECT x, y, CAST(1 AS BIGINT) AS acc FROM c)",
     ]
-    for k in range(1, rounds + 1):
+    for k in range(1, 9):
         ctes.append(
             f"""a{k} AS MATERIALIZED (
   SELECT c.x, c.y, 1 + COALESCE(i.inflow, 0) AS acc
@@ -404,7 +393,7 @@ def d8_flow_sql(cells_sql: str, rounds: int = 8) -> str:
     return (
         "WITH " + ",\n".join(ctes)
         + f"\nSELECT g.x, g.y, CAST(g.flow_dir AS BIGINT) AS flow_dir,"
-        f" a.acc FROM grid g JOIN a{rounds} a"
+        " a.acc FROM grid g JOIN a8 a"
         f" ON g.x = a.x AND g.y = a.y"
     )
 
@@ -455,9 +444,7 @@ def watershed_labels(
     )
 
 
-def watershed_labels_sql(
-    grid_sql: str, doubling_rounds: int = 6
-) -> str:
+def watershed_labels_sql(grid_sql: str) -> str:
     """DuckDB twin of watershed_labels — `grid_sql` must yield
     (x, y, flow_dir, tox, toy) like d8_flow_sql's `grid` CTE."""
     ctes = [
@@ -465,13 +452,13 @@ def watershed_labels_sql(
   SELECT x, y, coalesce(tox, x) AS nx, coalesce(toy, y) AS ny
   FROM ({grid_sql}))"""
     ]
-    for k in range(1, doubling_rounds + 1):
+    for k in range(1, 7):
         ctes.append(
             f"""p{k} AS MATERIALIZED (
   SELECT a.x, a.y, b.nx, b.ny
   FROM p{k-1} a JOIN p{k-1} b ON a.nx = b.x AND a.ny = b.y)"""
         )
-    last = f"p{doubling_rounds}"
+    last = "p6"
     return (
         "WITH " + ",\n".join(ctes)
         + f"\nSELECT x, y, nx AS basin_x, ny AS basin_y,"

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 def gap_fill_locf(
     obs: DataFrame,
     key_col: str = "key",
-    slot_col: str = "slot",
     val_col: str = "val",
 ) -> DataFrame:
     """obs: at most one row per (key, slot), integer slots. Returns the
@@ -43,37 +42,32 @@ def gap_fill_locf(
     in [min_slot, max_slot] per key, `filled` = LOCF value (NULL only
     on leading gaps), `is_gap` = the row was absent from obs."""
     spans = obs.groupBy(key_col).agg(
-        F.min(slot_col).alias("_lo"), F.max(slot_col).alias("_hi")
+        F.min("slot").alias("_lo"), F.max("slot").alias("_hi")
     )
     grid = spans.select(
         key_col,
-        F.explode(F.sequence(F.col("_lo"), F.col("_hi"))).alias(slot_col),
+        F.explode(F.sequence(F.col("_lo"), F.col("_hi"))).alias("slot"),
     )
-    dense = grid.join(obs, [key_col, slot_col], "left")
+    dense = grid.join(obs, [key_col, "slot"], "left")
     w = (
         Window.partitionBy(key_col)
-        .orderBy(slot_col)
+        .orderBy("slot")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     dense = dense.withColumn("_fg", F.count(val_col).over(w))
     wg = Window.partitionBy(key_col, "_fg")
     return dense.select(
         key_col,
-        slot_col,
+        "slot",
         val_col,
         F.max(val_col).over(wg).alias("filled"),
         F.col(val_col).isNull().alias("is_gap"),
     )
 
 
-def gap_fill_locf_sql(
-    obs_sql: str,
-    key_col: str = "key",
-    slot_col: str = "slot",
-    val_col: str = "val",
-) -> str:
+def gap_fill_locf_sql(obs_sql: str, key_col: str = "key", val_col: str = "val") -> str:
     """The identical densify + grouped-fill as DuckDB SQL."""
-    k, s, v = key_col, slot_col, val_col
+    k, s, v = key_col, "slot", val_col
     return f"""
 WITH o AS ({obs_sql}),
 spans AS (SELECT {k}, min({s}) AS lo, max({s}) AS hi FROM o GROUP BY 1),
@@ -143,11 +137,10 @@ def time_weighted_avg_sql(
     obs_sql: str,
     tiebreak_col: str,
     key_col: str = "key",
-    ts_col: str = "ts_us",
     val_col: str = "val",
 ) -> str:
     """The identical dwell-time weighting as DuckDB SQL."""
-    k, t, v = key_col, ts_col, val_col
+    k, t, v = key_col, "ts_us", val_col
     return f"""
 WITH d AS (
   SELECT *, lead({t}) OVER (PARTITION BY {k} ORDER BY {t} ASC, {tiebreak_col} ASC) AS nxt
@@ -170,10 +163,8 @@ FROM agg
 def decayed_counts(
     obs: DataFrame,
     key_col: str = "key",
-    slot_col: str = "slot",
     val_col: str = "val",
     half_life_slots: int = 1,
-    max_age_halflives: int = 62,
 ) -> DataFrame:
     """Exponentially-decayed counters with EXACT integer arithmetic —
     the trending/ranking primitive (decay-weighted activity scores)
@@ -185,7 +176,7 @@ def decayed_counts(
     per-slot state (per-event shifts would not survive aggregation:
     (a+b) >> k != (a >> k) + (b >> k), so the event-level variant is
     not mergeable). Events older than
-    max_age_halflives half-lives contribute exactly 0 (the shift would
+    62 half-lives contribute exactly 0 (the shift would
     underflow anyway) — which also documents the pruning rule a
     100 TB incremental job uses: state never needs events older than
     ~62 half-lives.
@@ -203,11 +194,11 @@ def decayed_counts(
 
     wn = Window.partitionBy(key_col)
     h = int(half_life_slots)
-    slots = obs.groupBy(key_col, slot_col).agg(
+    slots = obs.groupBy(key_col, "slot").agg(
         F.sum(val_col).alias("_sv"), F.count(F.lit(1)).alias("_ne")
     )
-    d = slots.withColumn("_last", F.max(slot_col).over(wn)).withColumn(
-        "_age_h", F.expr(f"(_last - {slot_col}) div {h}")
+    d = slots.withColumn("_last", F.max("slot").over(wn)).withColumn(
+        "_age_h", F.expr(f"(_last - slot) div {h}")
     )
     return (
         d.groupBy(key_col)
@@ -216,7 +207,7 @@ def decayed_counts(
             F.sum("_ne").alias("n_events"),
             F.sum(
                 F.when(
-                    F.col("_age_h") <= max_age_halflives,
+                    F.col("_age_h") <= 62,
                     F.expr("shiftright(_sv, CAST(_age_h AS INT))"),
                 ).otherwise(F.lit(0))
             ).alias("decayed"),
@@ -224,16 +215,9 @@ def decayed_counts(
     )
 
 
-def decayed_counts_sql(
-    obs_sql: str,
-    key_col: str = "key",
-    slot_col: str = "slot",
-    val_col: str = "val",
-    half_life_slots: int = 1,
-    max_age_halflives: int = 62,
-) -> str:
+def decayed_counts_sql(obs_sql: str, key_col: str = "key", val_col: str = "val") -> str:
     """The identical slot-aggregated integer-shift decay as DuckDB SQL."""
-    k, s, v, h = key_col, slot_col, val_col, int(half_life_slots)
+    k, s, v, h = key_col, "slot", val_col, 1
     return f"""
 WITH sl AS (
   SELECT {k}, {s}, CAST(sum({v}) AS BIGINT) AS sv,
@@ -247,7 +231,7 @@ d AS (
 )
 SELECT {k}, CAST(max(last_slot) AS BIGINT) AS last_slot,
        CAST(sum(ne) AS BIGINT) AS n_events,
-       CAST(sum(CASE WHEN age_h <= {max_age_halflives}
+       CAST(sum(CASE WHEN age_h <= 62
                      THEN sv >> age_h ELSE 0 END) AS BIGINT) AS decayed
 FROM d GROUP BY 1
 """
@@ -433,7 +417,6 @@ def cadence_profile(
     key_col: str,
     ts_us_col: str,
     min_events: int = 3,
-    gap_unit_us: int = 1_000_000,
 ) -> DataFrame:
     """Inter-arrival cadence profile per key — the bot/scraper signal
     web curation runs before trusting engagement counts: humans arrive
@@ -448,7 +431,7 @@ def cadence_profile(
     One lag window per key (single sort) then a map-side aggregate.
     Duplicate timestamps yield zero gaps — legitimate (batched client
     flushes) and visible in gap_min = 0 rather than silently dropped.
-    Gaps are quantized to `gap_unit_us` (default 1 s) BEFORE squaring:
+    Gaps are quantized to 1 s BEFORE squaring:
     a month-long gap in raw microseconds squares past bigint, and
     second-level cadence is the signal anyway.
     """
@@ -462,7 +445,7 @@ def cadence_profile(
             "gap",
             F.expr("(t - lag(t) over (partition by key order by t))"),
         )
-        .withColumn("gap", F.expr(f"gap div {gap_unit_us}"))
+        .withColumn("gap", F.expr("gap div 1000000"))
         .filter(F.col("gap").isNotNull())
     )
     agg = d.groupBy("key").agg(
@@ -482,10 +465,7 @@ def cadence_profile(
     )
 
 
-def cadence_profile_sql(
-    events_sql: str, key_expr: str, min_events: int = 3,
-    gap_unit_us: int = 1_000_000,
-) -> str:
+def cadence_profile_sql(events_sql: str, key_expr: str, min_events: int = 3) -> str:
     """DuckDB twin of cadence_profile over (key, ts_us)."""
     return f"""
 WITH e AS (
@@ -493,7 +473,7 @@ WITH e AS (
 ),
 g AS (
   SELECT key, (t - lag(t) OVER (PARTITION BY key ORDER BY t))
-           // {gap_unit_us} AS gap FROM e
+           // 1000000 AS gap FROM e
 ),
 agg AS (
   SELECT key, CAST(count(*) AS BIGINT) AS n_gaps,
@@ -660,10 +640,10 @@ def lag_autocovariance(
     return out.select("key", "lag", "n_pairs", "acov_num", "n", "s")
 
 
-def lag_autocovariance_sql(series_sql: str, lags: tuple = (1, 7)) -> str:
+def lag_autocovariance_sql(series_sql: str) -> str:
     """DuckDB twin of lag_autocovariance over (key, slot, x)."""
     parts = []
-    for k in lags:
+    for k in (1, 7):
         parts.append(f"""
 SELECT b.key, CAST({int(k)} AS BIGINT) AS lag,
        CAST(count(*) AS BIGINT) AS n_pairs,
@@ -745,15 +725,12 @@ def arrival_disorder(
     return d.groupBy("key").agg(*aggs)
 
 
-def arrival_disorder_sql(
-    events_sql: str,
-    late_thresholds_us: tuple = (1_000_000, 60_000_000),
-) -> str:
+def arrival_disorder_sql(events_sql: str) -> str:
     """DuckDB twin of arrival_disorder over (key, arr, t)."""
     ths = ", ".join(
         f"CAST(sum(CASE WHEN disorder > {th} THEN 1 ELSE 0 END) AS BIGINT) "
         f"AS n_late_over_{th}"
-        for th in late_thresholds_us
+        for th in (1_000_000, 60_000_000)
     )
     return f"""
 WITH e AS (
@@ -776,21 +753,17 @@ FROM d GROUP BY key
 """
 
 
-def rolling_origin_folds(
-    df: DataFrame,
-    ts_col: str,
-    n_folds: int = 4,
-) -> DataFrame:
+def rolling_origin_folds(df: DataFrame, ts_col: str) -> DataFrame:
     """Rolling-origin (expanding-window) cross-validation folds — the
     only leakage-safe CV for time series (random K-fold trains on the
-    future): the observed time span is cut into n_folds+1 equal
+    future): the observed time span is cut into 4+1 equal
     intervals; fold k trains on everything before cut_k and tests on
     [cut_k, cut_{k+1}). Returns one row per fold: (fold, train_end_us,
     test_end_us, n_train, n_test) — the assignment plan a training
     pipeline joins back by timestamp range.
 
     Exact: cuts are integer microsecond arithmetic on the (min, max)
-    span — cut_k = tmin + (span·k) div (n_folds+1) — and counts are
+    span — cut_k = tmin + (span·k) div 5 — and counts are
     conditional sums against those integer cuts; the last interval's
     end is max+1 so the newest row always tests in the final fold.
 
@@ -798,6 +771,7 @@ def rolling_origin_folds(
     aggregate over the data per fold set (folds unrolled into one
     aggregate projection — a single pass); nothing is shuffled by
     fold."""
+    n_folds = 4
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     span = df.agg(
         F.min(us).alias("tmin"), F.max(us).alias("tmax")
@@ -840,8 +814,9 @@ def rolling_origin_folds(
     return out
 
 
-def rolling_origin_folds_sql(rows_sql: str, n_folds: int = 4) -> str:
+def rolling_origin_folds_sql(rows_sql: str) -> str:
     """DuckDB twin of rolling_origin_folds (`rows_sql` must yield ts)."""
+    n_folds = 4
     blocks = []
     for k in range(1, n_folds + 1):
         cut = f"(tmin + ((tmax - tmin) * {k}) // {n_folds + 1})"
@@ -871,15 +846,8 @@ FROM ({union})
 """
 
 
-def motif_signatures(
-    events: DataFrame,
-    m: int = 5,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Repeated-shape (motif) mining, matrix-profile-lite: every length-m
+def motif_signatures(events: DataFrame) -> DataFrame:
+    """Repeated-shape (motif) mining, matrix-profile-lite: every length-5
     window of a key's value series is reduced to its DELTA-SIGN
     signature — 'u'p/'d'own/'f'lat per consecutive step — and equal
     signatures are counted. Recurring signatures expose periodic or
@@ -890,16 +858,17 @@ def motif_signatures(
     Output per (key, sig): n occurrences, first_start_us of the
     earliest occurrence, rnk by (n DESC, sig ASC) within key.
 
-    Plan: m−1 LEAD columns over ONE per-key (ts, id) window order (a
+    Plan: 4 LEAD columns over ONE per-key (ts, id) window order (a
     single sort), signature = concat of sign cases, then one aggregate
     — per-key history is the parallelism unit, the sessionization
     contract."""
-    tus = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    m = 5
+    tus = F.unix_micros(F.col("ts").cast("timestamp"))
     base = events.select(
-        F.col(key_col).alias("k"),
+        F.col("event_type").alias("k"),
         tus.alias("tus"),
-        F.col(id_col).alias("eid"),
-        F.col(value_col).alias("v"),
+        F.col("event_id").alias("eid"),
+        F.col("value").alias("v"),
     )
     w = Window.partitionBy("k").orderBy("tus", "eid")
     cols = [F.col("v")] + [
@@ -932,10 +901,9 @@ def motif_signatures(
     )
 
 
-def motif_signatures_sql(
-    events_sql: str, m: int = 5
-) -> str:
+def motif_signatures_sql(events_sql: str) -> str:
     """DuckDB twin of motif_signatures."""
+    m = 5
     leads = ",\n         ".join(
         f"lead(v, {i}) OVER w AS v{i}" for i in range(1, m)
     )
@@ -974,12 +942,7 @@ FROM agg
 """
 
 
-def seasonal_profile(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def seasonal_profile(events: DataFrame) -> DataFrame:
     """Seasonal-means decomposition (STL-lite, the dashboard staple):
     per (key, season-slot) the exact mean of a quantized outcome, plus
     the key's overall mean, published as exact integer ppm — seasonal
@@ -989,11 +952,11 @@ def seasonal_profile(
     Output per (key, slot): (n, slot_mean_ppm, overall_mean_ppm,
     seasonal_ppm). One aggregate + a broadcast join of the per-key
     totals re-aggregated from the slot table — never a second pass."""
-    tus = F.col(ts_col).cast("timestamp")
+    tus = F.col("ts").cast("timestamp")
     slot = F.hour(tus).cast("long")
-    v = F.floor(F.col(value_col) * 10000 + 0.5).cast("long")
+    v = F.floor(F.col("value") * 10000 + 0.5).cast("long")
     base = events.select(
-        F.col(key_col).alias("k"), slot.alias("slot"), v.alias("v")
+        F.col("event_type").alias("k"), slot.alias("slot"), v.alias("v")
     )
     per_slot = base.groupBy("k", "slot").agg(
         F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")
@@ -1041,26 +1004,19 @@ FROM per_slot p JOIN per_key g ON p.k = g.k
 """
 
 
-def ewma_anomaly(
-    series: DataFrame,
-    key_col: str = "k",
-    ts_col: str = "tus",
-    val_col: str = "v",
-    shift_pow: int = 4,
-    band: int = 3,
-) -> DataFrame:
+def ewma_anomaly(series: DataFrame, band: int = 3) -> DataFrame:
     """EWMA smoothing + residual anomaly flags, exact integer recurrence.
 
     The alerting primitive of every metrics pipeline (Holt's level
     equation / the EWMA control chart): smooth a per-key series with
-    alpha = 1/2^shift_pow and flag points whose deviation from the
+    alpha = 1/2^4 and flag points whose deviation from the
     running level exceeds `band` value units. Floats make the fold
     engine-irreproducible, so state is held in SCALE=1024 fixed-point
     and the update is a floor division by a power of two:
 
         s_0 = v_0 * SCALE
         d_t = v_t * SCALE - s_{t-1}
-        s_t = s_{t-1} + trunc(d_t / 2^shift_pow)
+        s_t = s_{t-1} + trunc(d_t / 2^4)
         anomaly_t = |d_t| >= band * SCALE        (t >= 1)
 
     trunc (round-toward-zero) is the one integer division BOTH engines
@@ -1078,12 +1034,12 @@ def ewma_anomaly(
     import pandas as pd
 
     scale = 1024
-    den = float(1 << shift_pow)
+    den = float(1 << 4)
     thresh = band * scale
 
     def fold(key, pdf):
-        pdf = pdf.sort_values([ts_col, val_col], kind="mergesort")
-        vs = pdf[val_col].astype("int64").to_numpy()
+        pdf = pdf.sort_values(["tus", "v"], kind="mergesort")
+        vs = pdf["v"].astype("int64").to_numpy()
         s = int(vs[0]) * scale
         n_anom = 0
         max_dev = 0
@@ -1094,7 +1050,7 @@ def ewma_anomaly(
                 max_dev = ad
             if ad >= thresh:
                 n_anom += 1
-            q = ad // (1 << shift_pow)
+            q = ad // (1 << 4)
             s += q if d >= 0 else -q
         return pd.DataFrame(
             {
@@ -1107,22 +1063,20 @@ def ewma_anomaly(
         )
 
     _ = den
-    return series.groupBy(key_col).applyInPandas(
+    return series.groupBy("k").applyInPandas(
         fold,
         "k string, n long, n_anomalies long, level_final long, "
         "max_abs_dev long",
     )
 
 
-def ewma_anomaly_sql(
-    series_sql: str, shift_pow: int = 4, band: int = 3
-) -> str:
+def ewma_anomaly_sql(series_sql: str, band: int = 3) -> str:
     """DuckDB twin of ewma_anomaly: the identical fixed-point recurrence
     as a RECURSIVE CTE over per-key row numbers (`series_sql` yields
     k, tus, v). DuckDB's // on BIGINT floors like Python's, and the
-    2^shift_pow divisor keeps every step exact."""
+    2^4 divisor keeps every step exact."""
     scale = 1024
-    div = 1 << shift_pow
+    div = 1 << 4
     thresh = band * scale
     return f"""
 WITH RECURSIVE sv AS (

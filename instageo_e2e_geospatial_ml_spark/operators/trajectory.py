@@ -26,10 +26,6 @@ from pyspark.sql import functions as F
 def segment_trips(
     pings: DataFrame,
     order_tiebreak: str,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    x_col: str = "px",
-    y_col: str = "py",
     vmax: int = 30,
     max_gap_s: int = 1800,
 ) -> DataFrame:
@@ -37,12 +33,12 @@ def segment_trips(
     per user; hop_* are NULL on each user's first ping. Coordinates are
     integer planar units (meters); vmax in units/second. Pings order by
     (ts, order_tiebreak)."""
-    w = Window.partitionBy(user_col).orderBy(
-        F.col(ts_col).asc(), F.col(order_tiebreak).asc()
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").asc(), F.col(order_tiebreak).asc()
     )
-    tus = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    dx = F.col(x_col) - F.lag(x_col).over(w)
-    dy = F.col(y_col) - F.lag(y_col).over(w)
+    tus = F.unix_micros(F.col("ts").cast("timestamp"))
+    dx = F.col("px") - F.lag("px").over(w)
+    dy = F.col("py") - F.lag("py").over(w)
     out = (
         pings.withColumn("_tus", tus)
         .withColumn("_ltus", F.lag("_tus").over(w))
@@ -72,15 +68,7 @@ def segment_trips(
     return out
 
 
-def stay_points(
-    pings: DataFrame,
-    cell: int,
-    min_dwell_s: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts_us",
-    x_col: str = "px",
-    y_col: str = "py",
-) -> DataFrame:
+def stay_points(pings: DataFrame, cell: int, min_dwell_s: int) -> DataFrame:
     """Stay-point (dwell) detection, grid-quantized: a stay is a
     maximal run of consecutive pings (per entity, time order) inside
     one `cell`-sized grid square, kept when its dwell time reaches
@@ -100,13 +88,13 @@ def stay_points(
     SAME window for stay ids (one sort, no extra shuffle — the
     segment_trips shape), then a map-side-combinable groupBy.
     """
-    u, t = F.col(user_col), F.col(ts_col).cast("long")
-    cx = F.floor(F.col(x_col).cast("long") / cell).cast("long")
-    cy = F.floor(F.col(y_col).cast("long") / cell).cast("long")
+    u, t = F.col("user_id"), F.col("ts_us").cast("long")
+    cx = F.floor(F.col("px").cast("long") / cell).cast("long")
+    cy = F.floor(F.col("py").cast("long") / cell).cast("long")
     d = pings.select(
         u.alias("user_id"), t.alias("t_us"),
-        F.col(x_col).cast("long").alias("px"),
-        F.col(y_col).cast("long").alias("py"),
+        F.col("px").cast("long").alias("px"),
+        F.col("py").cast("long").alias("py"),
         cx.alias("cx"), cy.alias("cy"),
     )
     w = Window.partitionBy("user_id").orderBy("t_us", "px", "py")
@@ -173,12 +161,7 @@ HAVING max(t_us) - min(t_us) >= {min_dwell_s} * CAST(1000000 AS BIGINT)
 """
 
 
-def od_flows(
-    stays: DataFrame,
-    user_col: str = "user_id",
-    order_col: str = "t_start_us",
-    cell_cols: tuple = ("cell_x", "cell_y"),
-) -> DataFrame:
+def od_flows(stays: DataFrame) -> DataFrame:
     """Origin-destination flow matrix from per-entity stay sequences:
     each consecutive stay pair (in time order) contributes one trip
     from its origin cell to its destination cell; flows aggregate
@@ -197,10 +180,10 @@ def od_flows(
     """
     from pyspark.sql import Window
 
-    cx, cy = cell_cols
-    w = Window.partitionBy(user_col).orderBy(order_col)
+    cx, cy = "cell_x", "cell_y"
+    w = Window.partitionBy("user_id").orderBy("t_start_us")
     nxt = stays.select(
-        F.col(user_col).alias("user_id"),
+        F.col("user_id").alias("user_id"),
         F.col(cx).alias("from_x"),
         F.col(cy).alias("from_y"),
         F.col("t_end_us").alias("leave_us"),
@@ -232,13 +215,7 @@ GROUP BY from_x, from_y, to_x, to_y
 """
 
 
-def hausdorff_join(
-    points: DataFrame,
-    threshold: int,
-    id_col: str = "track_id",
-    x_col: str = "px",
-    y_col: str = "py",
-) -> DataFrame:
+def hausdorff_join(points: DataFrame, threshold: int) -> DataFrame:
     """Trajectory-similarity join: all track pairs whose discrete
     Hausdorff distance is <= threshold, with the exact squared distance.
 
@@ -263,9 +240,9 @@ def hausdorff_join(
     """
     t2 = threshold * threshold
     pts = points.select(
-        F.col(id_col).cast("long").alias("tid"),
-        F.col(x_col).cast("long").alias("px"),
-        F.col(y_col).cast("long").alias("py"),
+        F.col("track_id").cast("long").alias("tid"),
+        F.col("px").cast("long").alias("px"),
+        F.col("py").cast("long").alias("py"),
     )
     bbox = pts.groupBy("tid").agg(
         F.min("px").alias("mnx"),
@@ -342,20 +319,14 @@ def hausdorff_join(
     )
 
 
-def hausdorff_join_sql(
-    points_sql: str,
-    threshold: int,
-    id_col: str = "track_id",
-    x_col: str = "px",
-    y_col: str = "py",
-) -> str:
+def hausdorff_join_sql(points_sql: str, threshold: int) -> str:
     """DuckDB twin: brute force over ALL track pairs (no prefilter) —
     hash equality with the operator proves prefilter losslessness."""
     t2 = threshold * threshold
     return f"""
 WITH p AS MATERIALIZED (
-  SELECT CAST({id_col} AS BIGINT) AS tid, CAST({x_col} AS BIGINT) AS px,
-         CAST({y_col} AS BIGINT) AS py FROM ({points_sql})
+  SELECT CAST(track_id AS BIGINT) AS tid, CAST(px AS BIGINT) AS px,
+         CAST(py AS BIGINT) AS py FROM ({points_sql})
 ),
 ids AS (SELECT DISTINCT tid FROM p),
 pairs AS MATERIALIZED (
@@ -382,19 +353,12 @@ HAVING max(h) <= {t2}
 """
 
 
-def map_match_segments(
-    points: DataFrame,
-    route: list[tuple[int, int]],
-    id_col: str = "pid",
-    x_col: str = "px",
-    y_col: str = "py",
-    scale: int = 1_000_000,
-) -> DataFrame:
+def map_match_segments(points: DataFrame, route: list[tuple[int, int]]) -> DataFrame:
     """Linear referencing / nearest-segment map matching: snap every
     integer-coordinate point to its closest segment of the reference
     polyline `route` — (pid, seg_idx, d2_scaled, t_scaled) where
-    t_scaled = floor(scale·t) is the clamped along-segment parameter
-    (chainage fraction) and d2_scaled = floor(scale·d²) the squared
+    t_scaled = floor(1e6·t) is the clamped along-segment parameter
+    (chainage fraction) and d2_scaled = floor(1e6·d²) the squared
     point-to-segment distance. The matching rule is DEFINED on the
     quantized distance with seg_idx as tie-break, so the assignment is
     a deterministic pure function of the input (engine-exact — both
@@ -404,7 +368,7 @@ def map_match_segments(
     d = b - a, the interior squared distance is cross(w,d)²/|d|² and the
     endpoint cases are decided by the INTEGER comparisons dot ≤ 0 /
     dot ≥ |d|² — no sqrt, no float. Callers keep coordinates small
-    enough that scale·cross² fits int64 (|coord| ≲ 400 at scale 1e6).
+    enough that 1e6·cross² fits int64 (|coord| ≲ 400 at scale 1e6).
 
     Scale: the route is a broadcast literal of |segments| rows — the
     plan is scan → broadcast nested-loop over a constant-size side →
@@ -413,6 +377,7 @@ def map_match_segments(
     Long routes should be pre-bucketed by coarse cell (the
     operators/knn.py cell-ring pattern) before the refine — this
     operator is the exact refine stage."""
+    scale = 1_000_000
     segs = [
         (i, ax, ay, bx, by)
         for i, ((ax, ay), (bx, by)) in enumerate(
@@ -424,9 +389,9 @@ def map_match_segments(
         segs, "seg_idx int, ax long, ay long, bx long, by long"
     )
     p = points.select(
-        F.col(id_col).alias("pid"),
-        F.col(x_col).cast("long").alias("px"),
-        F.col(y_col).cast("long").alias("py"),
+        F.col("pid"),
+        F.col("px").cast("long").alias("px"),
+        F.col("py").cast("long").alias("py"),
     )
     j = p.crossJoin(F.broadcast(seg_df))
     wx = F.col("px") - F.col("ax")
@@ -469,11 +434,7 @@ def map_match_segments(
     )
 
 
-def map_match_segments_sql(
-    points_sql: str,
-    route: list[tuple[int, int]],
-    scale: int = 1_000_000,
-) -> str:
+def map_match_segments_sql(points_sql: str, route: list[tuple[int, int]]) -> str:
     """DuckDB twin of map_match_segments (argmin via row_number over the
     same (d2_scaled, seg_idx) order)."""
     seg_rows = ", ".join(
@@ -492,11 +453,11 @@ scored AS (
   SELECT p.pid, s.seg_idx,
     CASE
       WHEN (p.px-s.ax)*(s.bx-s.ax)+(p.py-s.ay)*(s.by-s.ay) <= 0
-        THEN {scale} * ((p.px-s.ax)*(p.px-s.ax)+(p.py-s.ay)*(p.py-s.ay))
+        THEN 1000000 * ((p.px-s.ax)*(p.px-s.ax)+(p.py-s.ay)*(p.py-s.ay))
       WHEN (p.px-s.ax)*(s.bx-s.ax)+(p.py-s.ay)*(s.by-s.ay)
            >= (s.bx-s.ax)*(s.bx-s.ax)+(s.by-s.ay)*(s.by-s.ay)
-        THEN {scale} * ((p.px-s.bx)*(p.px-s.bx)+(p.py-s.by)*(p.py-s.by))
-      ELSE ({scale} * ((p.py-s.ay)*(s.bx-s.ax)-(p.px-s.ax)*(s.by-s.ay))
+        THEN 1000000 * ((p.px-s.bx)*(p.px-s.bx)+(p.py-s.by)*(p.py-s.by))
+      ELSE (1000000 * ((p.py-s.ay)*(s.bx-s.ax)-(p.px-s.ax)*(s.by-s.ay))
                     * ((p.py-s.ay)*(s.bx-s.ax)-(p.px-s.ax)*(s.by-s.ay)))
            // ((s.bx-s.ax)*(s.bx-s.ax)+(s.by-s.ay)*(s.by-s.ay))
     END AS d2_scaled,
@@ -504,8 +465,8 @@ scored AS (
       WHEN (p.px-s.ax)*(s.bx-s.ax)+(p.py-s.ay)*(s.by-s.ay) <= 0 THEN 0
       WHEN (p.px-s.ax)*(s.bx-s.ax)+(p.py-s.ay)*(s.by-s.ay)
            >= (s.bx-s.ax)*(s.bx-s.ax)+(s.by-s.ay)*(s.by-s.ay)
-        THEN {scale}
-      ELSE ({scale} * ((p.px-s.ax)*(s.bx-s.ax)+(p.py-s.ay)*(s.by-s.ay)))
+        THEN 1000000
+      ELSE (1000000 * ((p.px-s.ax)*(s.bx-s.ax)+(p.py-s.ay)*(s.by-s.ay)))
            // ((s.bx-s.ax)*(s.bx-s.ax)+(s.by-s.ay)*(s.by-s.ay))
     END AS t_scaled
   FROM pts p CROSS JOIN segs s
@@ -523,14 +484,7 @@ FROM rnk WHERE rn = 1
 """
 
 
-def heading_profile(
-    pings: DataFrame,
-    user_col: str = "uid",
-    ts_col: str = "tus",
-    id_col: str = "eid",
-    x_col: str = "px",
-    y_col: str = "py",
-) -> DataFrame:
+def heading_profile(pings: DataFrame) -> DataFrame:
     """Per-entity heading distribution over consecutive integer-grid
     pings — the movement-direction analytic (commute axes, migration
     bearing) WITHOUT atan2: the hop (dx, dy) maps to one of 8 compass
@@ -544,13 +498,11 @@ def heading_profile(
     portable argmax via the greatest-of chain). One lag window per
     entity on (ts) + one aggregate — the segment_trips plan shape."""
     # (ts, id) total order — a ts tie alone would be engine-ambiguous
-    w = Window.partitionBy(user_col).orderBy(
-        F.col(ts_col).asc(), F.col(id_col).asc()
-    )
-    dx = F.col(x_col) - F.lag(x_col).over(w)
-    dy = F.col(y_col) - F.lag(y_col).over(w)
+    w = Window.partitionBy("uid").orderBy(F.col("tus").asc(), F.col("eid").asc())
+    dx = F.col("px") - F.lag("px").over(w)
+    dy = F.col("py") - F.lag("py").over(w)
     hops = pings.select(
-        F.col(user_col).alias("uid"), dx.alias("dx"), dy.alias("dy")
+        F.col("uid").alias("uid"), dx.alias("dx"), dy.alias("dy")
     ).filter(F.col("dx").isNotNull())
     ax, ay = F.abs(F.col("dx")), F.abs(F.col("dy"))
     oct_ = (
@@ -635,14 +587,7 @@ FROM agg
 """
 
 
-def impossible_travel(
-    pings: DataFrame,
-    vmax: int,
-    key_col: str = "u",
-    ts_col: str = "tus",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
+def impossible_travel(pings: DataFrame, vmax: int) -> DataFrame:
     """Impossible-travel detection — the account-security primitive
     (two logins whose implied speed exceeds any real journey): per key,
     consecutive hops ordered by time, flagged when
@@ -660,17 +605,17 @@ def impossible_travel(
     aggregate. Output per key: (u, n_hops, n_impossible,
     max_dist2_flagged or NULL).
     """
-    w = Window.partitionBy(key_col).orderBy(
-        F.col(ts_col).asc(), F.col(x_col).asc(), F.col(y_col).asc()
+    w = Window.partitionBy("u").orderBy(
+        F.col("tus").asc(), F.col("x").asc(), F.col("y").asc()
     )
     hops = pings.select(
-        F.col(key_col).alias("u"),
-        F.col(ts_col).alias("tus"),
-        F.col(x_col).alias("x"),
-        F.col(y_col).alias("y"),
-        F.lag(ts_col).over(w).alias("ptus"),
-        F.lag(x_col).over(w).alias("px"),
-        F.lag(y_col).over(w).alias("py"),
+        F.col("u").alias("u"),
+        F.col("tus").alias("tus"),
+        F.col("x").alias("x"),
+        F.col("y").alias("y"),
+        F.lag("tus").over(w).alias("ptus"),
+        F.lag("x").over(w).alias("px"),
+        F.lag("y").over(w).alias("py"),
     ).filter(F.col("ptus").isNotNull())
     hops = hops.select(
         "u",

@@ -16,10 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def validity_filter(
-    records: DataFrame, granules_col: str = "granules", num_steps: int | None = None
-) -> DataFrame:
-    g = F.col(granules_col)
+def validity_filter(records: DataFrame, num_steps: int | None = None) -> DataFrame:
+    g = F.col("granules")
     no_nulls = ~F.exists(g, lambda x: x.isNull())
     distinct = F.size(F.array_distinct(g)) == F.size(g)
     cond = no_nulls & distinct

@@ -34,16 +34,13 @@ from .chips import SEG_NDV
 from .cleaner import _decode_chip, _decode_seg
 
 
-def zonal_stats(
-    chips: DataFrame,
-    no_data_value: int = 0,
-) -> DataFrame:
+def zonal_stats(chips: DataFrame) -> DataFrame:
     """Chip table (CHIP_SCHEMA) → (zone, band, n_px, sum_px, sumsq_px,
     min_px, max_px, mean_px, std_px) — exact pixel statistics per
     segmentation class and band across all chips.
 
     `zone` is the seg-map label; SEG_NDV (unlabeled) pixels are skipped.
-    Chip pixels equal to `no_data_value` are excluded from every
+    Chip pixels equal to 0 (no data) are excluded from every
     statistic (the nodata_ratio convention of operators/cleaner.py).
     """
 
@@ -59,7 +56,7 @@ def zonal_stats(
                     zmask = seg == zone
                     for b in range(chip.shape[0]):
                         vals = chip[b][zmask]
-                        vals = vals[vals != no_data_value]
+                        vals = vals[vals != 0]
                         if vals.size == 0:
                             continue
                         zs.append(int(zone))
@@ -104,33 +101,29 @@ def zonal_stats(
     )
 
 
-def spectral_index_timeseries(
-    chips: DataFrame,
-    band_a: str = "B8A",
-    band_b: str = "B04",
-    band_order: tuple = ("B02", "B03", "B04", "B8A", "B11", "B12"),
-    no_data_value: int = 0,
-    scale: int = 1_000_000,
-) -> DataFrame:
+def spectral_index_timeseries(chips: DataFrame) -> DataFrame:
     """Normalized-difference index time series over the chip table — the
     raster analytics primitive (NDVI with the defaults: a=NIR B8A,
     b=Red B04): per (tile, date, temporal step), the corpus-wide mean /
     min / max of (a-b)/(a+b) over valid pixels.
 
     Exactness discipline: the per-pixel index is quantized to
-    round(scale·(a-b)/(a+b)) int64 IN THE KERNEL, so partial sums are
+    round(1e6·(a-b)/(a+b)) int64 IN THE KERNEL, so partial sums are
     exact integers and the merged result is independent of partition
     count and agg merge order (float accumulation would drift in the
     last bits and destabilize the driver's rows-only hash). The divide
     happens once, at the end, on exact moments.
 
-    Chips stack num_steps × band_order along the band axis
+    Chips stack num_steps × the 6 HLS bands (B02 B03 B04 B8A B11 B12)
+    along the band axis
     (operators/chips.py assemble step), so step t's band i sits at
-    t·len(band_order)+i. Same map-side-combine shape as zonal_stats:
+    t·6+i. Same map-side-combine shape as zonal_stats:
     pixels reduce to one partial row per (chip, step) before the
     shuffle.
     """
-    ia, ib = band_order.index(band_a), band_order.index(band_b)
+    scale = 1_000_000
+    band_order = ("B02", "B03", "B04", "B8A", "B11", "B12")
+    ia, ib = band_order.index("B8A"), band_order.index("B04")
     nb = len(band_order)
 
     def partials(it):
@@ -142,7 +135,7 @@ def spectral_index_timeseries(
                 for t in range(n_steps):
                     a = chip[t * nb + ia]
                     b = chip[t * nb + ib]
-                    valid = (a != no_data_value) & (b != no_data_value) & (a + b != 0)
+                    valid = (a != 0) & (b != 0) & (a + b != 0)
                     if not valid.any():
                         continue
                     av, bv = a[valid].astype(np.float64), b[valid].astype(np.float64)
@@ -187,11 +180,7 @@ def spectral_index_timeseries(
     )
 
 
-def polygonize_regions(
-    cells: DataFrame,
-    value_col: str = "v",
-    coord_bits: int = 20,
-) -> DataFrame:
+def polygonize_regions(cells: DataFrame) -> DataFrame:
     """Raster polygonization (gdal_polygonize): group 4-connected runs
     of EQUAL-valued cells into regions and report their vector summary —
     (region_id, v, n_cells, min_x, min_y, max_x, max_y, perimeter).
@@ -212,9 +201,9 @@ def polygonize_regions(
     c = cells.select(
         F.col("x").cast("long").alias("x"),
         F.col("y").cast("long").alias("y"),
-        F.col(value_col).cast("long").alias("v"),
+        F.col("v").cast("long").alias("v"),
     )
-    nid = (F.col("x") * F.lit(1 << coord_bits) + F.col("y"))
+    nid = (F.col("x") * F.lit(1 << 20) + F.col("y"))
     cn = c.withColumn("nid", nid)
     edges = None
     for dx, dy in ((1, 0), (0, 1)):
@@ -260,12 +249,10 @@ def polygonize_regions(
     )
 
 
-def polygonize_regions_sql(
-    cells_sql: str, coord_bits: int = 20
-) -> str:
+def polygonize_regions_sql(cells_sql: str) -> str:
     """DuckDB twin of polygonize_regions (recursive-CTE components —
     the q32 oracle pattern)."""
-    m = 1 << coord_bits
+    m = 1 << 20
     return f"""
 WITH RECURSIVE c AS (
   SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,

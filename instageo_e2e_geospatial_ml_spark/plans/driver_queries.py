@@ -139,9 +139,6 @@ def q03_tile_info(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("lat").alias("y"),
             F.col("l_shipdate").alias("date"),
         ),
-        num_steps=3,
-        temporal_step=5,
-        tolerance_days=5,
     )
 
 
@@ -203,7 +200,7 @@ def q05_asof_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.col("value").alias("cloud_cover"),
     )
-    picked = asof_pick_keyed(steps, granules, tolerance_days=2, key="k")
+    picked = asof_pick_keyed(steps, granules, tolerance_days=2)
     return picked.select(
         "obs_id",
         F.col("step").cast("long").alias("step"),
@@ -487,9 +484,7 @@ FROM documents
 
 
 def q15_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_lsh_dedup(
-        _t(spark, sf_dir, "documents"), shingle_n=3, num_hashes=8, rows_per_band=2
-    )
+    return minhash_lsh_dedup(_t(spark, sf_dir, "documents"))
 
 
 Q15_SQL = """
@@ -518,7 +513,7 @@ WHERE a.doc_id < b.doc_id
 
 
 def q16_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash(_t(spark, sf_dir, "documents"), bits=16)
+    return simhash(_t(spark, sf_dir, "documents"))
 
 
 Q16_SQL = """
@@ -571,7 +566,7 @@ SELECT qid, pid, dot, rank FROM (
 
 
 def q51_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return lsh_buckets(_t(spark, sf_dir, "embeddings"), n_bits=8, seed="lsh")
+    return lsh_buckets(_t(spark, sf_dir, "embeddings"))
 
 
 Q51_SQL = """
@@ -887,9 +882,7 @@ def q27_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct 3-shingles, self-join, |A∩B|/|A∪B| ≥ 0.2."""
     from ..operators.dedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), shingle_n=3, threshold=0.2
-    )
+    return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.2)
 
 
 Q27_SQL = """
@@ -939,7 +932,7 @@ def q28_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = e.select(F.col("vec_id").alias("pid"), F.col("embedding").alias("pvec")).repartition(
         spark.sparkContext.defaultParallelism
     )
-    out = ivf_topk(q, p, cen, k=5, nprobe=2)
+    out = ivf_topk(q, p, cen, k=5)
     return out.select("qid", "pid", "dot", F.col("rank").cast("long").alias("rank"))
 
 
@@ -1059,11 +1052,8 @@ def q54_chip_cleaning(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.createDataFrame(obs), spark.createDataFrame(cat),
         spark.createDataFrame(imgs), cfg,
     )
-    cleaned = clean_chip_table(
-        chips, no_data_value=0, max_nodata_ratio=0.9, nodata_strategy="any",
-        buffer_window=1,
-    )
-    qa = consumer_qa_filter(cleaned, bands_per_step=len(cfg.band_order), chip_ndv=0)
+    cleaned = clean_chip_table(chips, max_nodata_ratio=0.9, buffer_window=1)
+    qa = consumer_qa_filter(cleaned, bands_per_step=len(cfg.band_order))
     # payload digests ride the driver's rows-only hash: a silent pixel or
     # buffered-seg regression flips the recorded hash without a DuckDB twin
     return qa.select(
@@ -1079,9 +1069,7 @@ def q31_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/sessions.sessionize_batch): 30-minute gap per event_type."""
     from ..streaming.sessions import sessionize_batch
 
-    return sessionize_batch(
-        _t(spark, sf_dir, "events"), key="event_type", gap_minutes=30
-    )
+    return sessionize_batch(_t(spark, sf_dir, "events"), gap_minutes=30)
 
 
 Q31_SQL = """
@@ -1140,9 +1128,7 @@ def q32_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin is a recursive-CTE reachability min)."""
     from ..operators.dedup import dedup_clusters
 
-    pairs = minhash_lsh_dedup(
-        _t(spark, sf_dir, "documents"), shingle_n=3, num_hashes=8, rows_per_band=2
-    )
+    pairs = minhash_lsh_dedup(_t(spark, sf_dir, "documents"))
     return dedup_clusters(pairs)
 
 
@@ -1172,9 +1158,7 @@ def q34_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-4 minimum selection with rightmost tie-break."""
     from ..operators.dedup import winnow_fingerprints
 
-    return winnow_fingerprints(
-        _t(spark, sf_dir, "documents"), shingle_n=3, window=4
-    )
+    return winnow_fingerprints(_t(spark, sf_dir, "documents"))
 
 
 Q34_SQL = """
@@ -1211,9 +1195,7 @@ def q35_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-min — one operator, one exact oracle."""
     from ..operators.dedup import clean_corpus
 
-    return clean_corpus(
-        _t(spark, sf_dir, "documents"), min_quality=0.5, lang="en"
-    )
+    return clean_corpus(_t(spark, sf_dir, "documents"), min_quality=0.5)
 
 
 def _q35_sql() -> str:
@@ -1391,7 +1373,7 @@ def q41_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_scores(_t(spark, sf_dir, "documents"), _Q41_TERMS)
 
 
-def _bm25_sql(terms: list[str], k1: float = 1.2, b: float = 0.75) -> str:
+def _bm25_sql(terms: list[str]) -> str:
     tf_cols = ",\n         ".join(
         f"CAST(sum(CASE WHEN tok = '{t}' THEN 1 ELSE 0 END) AS BIGINT) AS tf_{i}"
         for i, t in enumerate(terms)
@@ -1402,7 +1384,7 @@ def _bm25_sql(terms: list[str], k1: float = 1.2, b: float = 0.75) -> str:
     )
     contribs = "\n       + ".join(
         f"ln(1.0 + (n_docs - df_{i} + 0.5) / (df_{i} + 0.5))"
-        f" * (tf_{i} * {k1 + 1.0}) / (tf_{i} + {k1} * (1.0 - {b} + {b} * dl / (sum_dl / n_docs)))"
+        f" * (tf_{i} * 2.2) / (tf_{i} + 1.2 * (1.0 - 0.75 + 0.75 * dl / (sum_dl / n_docs)))"
         for i in range(len(terms))
     )
     tf_names = ", ".join(f"tf_{i}" for i in range(len(terms)))
@@ -1504,7 +1486,7 @@ def q44_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     only 5 rows per group per partition ahead of the final exchange."""
     from ..functions.retrieval import top_terms
 
-    return top_terms(_t(spark, sf_dir, "documents"), group_col="source", n=5)
+    return top_terms(_t(spark, sf_dir, "documents"), n=5)
 
 
 Q44_SQL = """
@@ -1771,7 +1753,7 @@ def q47_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram count) per document — exact integers, one division."""
     from ..functions.text import repetition_scores
 
-    return repetition_scores(_t(spark, sf_dir, "documents"), n=2)
+    return repetition_scores(_t(spark, sf_dir, "documents"))
 
 
 Q47_SQL = """
@@ -1850,14 +1832,15 @@ def q46_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = e.select(F.col("vec_id").alias("pid"), F.col("embedding").alias("pvec")).repartition(
         spark.sparkContext.defaultParallelism
     )
-    out = ivf_topk(q, p, cen, k=5, nprobe=2)
+    out = ivf_topk(q, p, cen, k=5)
     return out.select("qid", "pid", "dot", F.col("rank").cast("long").alias("rank"))
 
 
-def _ivf_trained_sql(k: int, n_iters: int, dim: int = 64) -> str:
+def _ivf_trained_sql(k: int, n_iters: int) -> str:
     """Q39's unrolled k-means CTEs + the IVF tail. The trained integer
     centroids pass through the same float32 conversion ivf_topk sees
     (cvec = float4(c/1000.0)), then the standard quantize-×1000 rescore."""
+    dim = 64
     kmeans = _kmeans_sql(k, n_iters, dim)
     head, _, _ = kmeans.rpartition("SELECT cid, i, ce")
     return (
@@ -2340,7 +2323,7 @@ def q59_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry slot, oracle-backed."""
     from ..operators.dedup import dedup_lines
 
-    return dedup_lines(_t(spark, sf_dir, "documents"), line_words=10)
+    return dedup_lines(_t(spark, sf_dir, "documents"))
 
 
 Q59_SQL = """
@@ -2378,18 +2361,14 @@ def q60_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q39/q46)."""
     from ..operators.similarity import pq_adc_topk
 
-    return pq_adc_topk(
-        _t(spark, sf_dir, "embeddings"), query_id=0, m=4, k=8, n_iters=2,
-        dim=64, topk=10,
-    )
+    return pq_adc_topk(_t(spark, sf_dir, "embeddings"))
 
 
-def _pq_sql(m: int, k: int, n_iters: int, dim: int = 64, topk: int = 10,
-            qid: int = 0) -> str:
+def _pq_sql(m: int, k: int, n_iters: int) -> str:
     """Unrolled DuckDB twin of pq_adc_topk: per subspace, the _kmeans_sql
     Lloyd rounds on the sliced vectors, a final code assignment, the
     query's ADC table, then the summed-score top-k."""
-    sub = dim // m
+    sub = 64 // m
     parts = ["""WITH v AS (
   SELECT vec_id,
          list_transform(embedding,
@@ -2451,7 +2430,7 @@ def _pq_sql(m: int, k: int, n_iters: int, dim: int = 64, topk: int = 10,
   SELECT c.cid,
          CAST(2 * sum(q.v[i.i] * c.c[i.i]) - sum(c.c[i.i] * c.c[i.i]) AS BIGINT)
            AS qs
-  FROM (SELECT v FROM {p}_v WHERE vec_id = {qid}) q, {p}_c{n_iters} c,
+  FROM (SELECT v FROM {p}_v WHERE vec_id = 0) q, {p}_c{n_iters} c,
        (SELECT unnest(generate_series(1, {sub})) AS i) i
   GROUP BY 1
 ),
@@ -2467,12 +2446,12 @@ tot AS (
 SELECT CAST(vec_id AS BIGINT) AS pid, adc_score,
        CAST(row_number() OVER (ORDER BY adc_score DESC, vec_id ASC) AS BIGINT)
          AS rank
-FROM tot WHERE vec_id != {qid}
-ORDER BY adc_score DESC, vec_id ASC LIMIT {topk}""")
+FROM tot WHERE vec_id != 0
+ORDER BY adc_score DESC, vec_id ASC LIMIT 10""")
     return "".join(parts)
 
 
-Q60_SQL = _pq_sql(4, 8, 2, 64, 10, 0)
+Q60_SQL = _pq_sql(4, 8, 2)
 
 QUERIES["q60_pq_adc_topk"] = q60_pq_adc_topk
 ORACLES["q60_pq_adc_topk"] = Q60_SQL
@@ -2484,7 +2463,7 @@ def q61_line_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashable parity. Overflow registry slot, oracle-backed."""
     from ..operators.dedup import apply_line_dedup
 
-    out = apply_line_dedup(_t(spark, sf_dir, "documents"), line_words=10)
+    out = apply_line_dedup(_t(spark, sf_dir, "documents"))
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.md5("clean_text").alias("clean_md5"),
@@ -2539,7 +2518,7 @@ def q62_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry slot, oracle-backed."""
     from ..functions.retrieval import inverted_index
 
-    return inverted_index(_t(spark, sf_dir, "documents"), min_df=2)
+    return inverted_index(_t(spark, sf_dir, "documents"))
 
 
 Q62_SQL = """
@@ -2608,9 +2587,10 @@ def q64_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _semdedup_sql(k: int, n_iters: int, p2: int, dim: int = 64) -> str:
+def _semdedup_sql(k: int, n_iters: int, p2: int) -> str:
     """Q39's unrolled k-means CTEs + final integer-centroid assignment +
     the within-cluster quantized cosine dedup tail."""
+    dim = 64
     kmeans = _kmeans_sql(k, n_iters, dim)
     head, _, _ = kmeans.rpartition("SELECT cid, i, ce")
     return (
@@ -2672,7 +2652,7 @@ def q65_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-backed."""
     from ..functions.text import hashed_quality_score
 
-    return hashed_quality_score(_t(spark, sf_dir, "documents"), n_buckets=1024)
+    return hashed_quality_score(_t(spark, sf_dir, "documents"))
 
 
 Q65_SQL = """
@@ -2749,7 +2729,7 @@ def q67_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.createDataFrame(obs), spark.createDataFrame(cat),
         spark.createDataFrame(imgs), cfg,
     )
-    return zonal_stats(chips, no_data_value=0)
+    return zonal_stats(chips)
 
 
 QUERIES["q67_zonal_stats"] = q67_zonal_stats
@@ -2867,9 +2847,7 @@ def q71_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import bloom_decontaminate
 
     docs = _t(spark, sf_dir, "documents")
-    return bloom_decontaminate(
-        docs, docs.filter(F.col("doc_id") % 10 == 0), m=65536, k=3
-    )
+    return bloom_decontaminate(docs, docs.filter(F.col("doc_id") % 10 == 0))
 
 
 Q71_SQL = """
@@ -3464,7 +3442,7 @@ def q83_fuzzy_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .select(F.col("p_name").alias("k"), F.col("p_name").alias("s"))
     )
-    return fuzzy_self_join(names, "k", "s", max_dist=3, q=2).select(
+    return fuzzy_self_join(names, "k", "s", max_dist=3).select(
         F.col("key_a").alias("name_a"),
         F.col("key_b").alias("name_b"),
         "dist",
@@ -3511,7 +3489,7 @@ def q84_terrain_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
         for ty in range(ny) for tx in range(nx)
     ]
     tiles = spark.createDataFrame(rows, TILE_SCHEMA).repartition(16)
-    return terrain_derivatives(tiles, xres=30.0, yres=30.0, z_factor=1.0)
+    return terrain_derivatives(tiles, xres=30.0, yres=30.0)
 
 
 QUERIES["q84_terrain_hillshade"] = q84_terrain_hillshade
@@ -3642,10 +3620,7 @@ def q87_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("upsert"))
         .alias("op"),
     )
-    return merge_upsert(
-        target, changes, key_col="key", ts_col="ts", op_col="op",
-        tiebreak_col="tb",
-    )
+    return merge_upsert(target, changes, tiebreak_col="tb")
 
 
 Q87_SQL = """
@@ -3696,7 +3671,7 @@ def q88_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_suppkey") % 80 + 1000).alias("src"),
         (F.col("l_orderkey") % 120).alias("dst"),
     )
-    return pagerank_int(fwd.unionByName(back), iters=3)
+    return pagerank_int(fwd.unionByName(back))
 
 
 def _q88_sql() -> str:
@@ -3708,7 +3683,7 @@ def _q88_sql() -> str:
         "SELECT l_suppkey % 80 + 1000 AS src, l_orderkey % 120 AS dst "
         "FROM lineitem WHERE l_linenumber % 2 = 0"
     )
-    return pagerank_sql(edges, iters=3)
+    return pagerank_sql(edges)
 
 
 QUERIES["q88_pagerank"] = q88_pagerank
@@ -4052,7 +4027,7 @@ def q98_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("grp"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
     )
-    return mad_outliers(li, ["grp"], "cents", k_num=3, k_den=1)
+    return mad_outliers(li, ["grp"], "cents")
 
 
 Q98_SQL = """
@@ -4235,9 +4210,7 @@ def q101_adaptive_quadtree(spark: SparkSession, sf_dir: str) -> DataFrame:
             12,
         ).alias("py"),
     )
-    return adaptive_quadtree(
-        pts, extent_bits=12, max_depth=7, cap=60, x_col="px", y_col="py"
-    )
+    return adaptive_quadtree(pts, extent_bits=12, max_depth=7, cap=60)
 
 
 def _q101_sql() -> str:
@@ -4331,7 +4304,6 @@ def _q103_sql() -> str:
     return hll_sql(
         "SELECT o_orderpriority, o_custkey FROM orders",
         "o_custkey",
-        p=9,
         group_exprs=", o_orderpriority",
     )
 
@@ -4369,7 +4341,7 @@ def q104_rect_union_area(spark: SparkSession, sf_dir: str) -> DataFrame:
             + (F.col("l_orderkey") % 40)
         ).alias("y2"),
     )
-    return rect_union_area(rects, group_col="grp", bucket_width=64)
+    return rect_union_area(rects, bucket_width=64)
 
 
 def _q104_sql() -> str:
@@ -4383,7 +4355,7 @@ def _q104_sql() -> str:
         "CAST(l_suppkey % 512 + 1 + (l_orderkey % 40) AS BIGINT) AS y2 "
         "FROM lineitem WHERE l_linenumber = 1 AND l_orderkey % 16 = 0"
     )
-    return rect_union_area_sql(rects, group_col="grp")
+    return rect_union_area_sql(rects)
 
 
 Q104_SQL = _q104_sql()
@@ -4406,7 +4378,7 @@ def q105_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("p_partkey") * 13) % 128).alias("x"),
         ((F.col("p_partkey") * 41) % 128).alias("y"),
     )
-    return convex_hull(pts, group_col="grp")
+    return convex_hull(pts)
 
 
 def _q105_sql() -> str:
@@ -4418,7 +4390,7 @@ def _q105_sql() -> str:
         "CAST((p_partkey * 41) % 128 AS BIGINT) AS y "
         "FROM part WHERE p_partkey % 4 = 0"
     )
-    return convex_hull_sql(pts, group_col="grp")
+    return convex_hull_sql(pts)
 
 
 Q105_SQL = _q105_sql()
@@ -4436,15 +4408,13 @@ def q106_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.stats import cms_build
 
     li = _t(spark, sf_dir, "lineitem").select("l_partkey")
-    return cms_build(li, key_col="l_partkey", depth=4, width=256)
+    return cms_build(li, key_col="l_partkey")
 
 
 def _q106_sql() -> str:
     from ..operators.stats import cms_sql
 
-    return cms_sql(
-        "SELECT l_partkey FROM lineitem", "l_partkey", depth=4, width=256
-    )
+    return cms_sql("SELECT l_partkey FROM lineitem", "l_partkey")
 
 
 Q106_SQL = _q106_sql()
@@ -4467,7 +4437,7 @@ def q107_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q107_sql() -> str:
     from ..functions.text import feature_hash_sql
 
-    return feature_hash_sql("SELECT doc_id, text FROM documents", n_bits=10)
+    return feature_hash_sql("SELECT doc_id, text FROM documents")
 
 
 Q107_SQL = _q107_sql()
@@ -4499,9 +4469,7 @@ def q108_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "slot")
         .agg(F.max("vq").alias("vq"))
     )
-    return gap_fill_locf(
-        obs, key_col="user_id", slot_col="slot", val_col="vq"
-    )
+    return gap_fill_locf(obs, key_col="user_id", val_col="vq")
 
 
 def _q108_sql() -> str:
@@ -4513,9 +4481,7 @@ def _q108_sql() -> str:
         "CAST(max(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS vq "
         "FROM events WHERE user_id % 7 = 0 GROUP BY 1, 2"
     )
-    return gap_fill_locf_sql(
-        obs, key_col="user_id", slot_col="slot", val_col="vq"
-    )
+    return gap_fill_locf_sql(obs, key_col="user_id", val_col="vq")
 
 
 Q108_SQL = _q108_sql()
@@ -4563,17 +4529,13 @@ def q110_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind PCA/whitening. Oracle pins all 2080 upper-triangle cells."""
     from ..operators.linalg import gram_matrix
 
-    return gram_matrix(
-        _t(spark, sf_dir, "embeddings"), vec_col="embedding", scale=100
-    )
+    return gram_matrix(_t(spark, sf_dir, "embeddings"))
 
 
 def _q110_sql() -> str:
     from ..operators.linalg import gram_matrix_sql
 
-    return gram_matrix_sql(
-        "SELECT embedding FROM embeddings", dim=64, scale=100
-    )
+    return gram_matrix_sql("SELECT embedding FROM embeddings")
 
 
 Q110_SQL = _q110_sql()
@@ -4589,20 +4551,13 @@ def q111_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     features are exact bigints the oracle pins row by row."""
     from ..operators.linalg import jl_project
 
-    return jl_project(
-        _t(spark, sf_dir, "embeddings"), id_col="vec_id", d_out=16
-    )
+    return jl_project(_t(spark, sf_dir, "embeddings"), d_out=16)
 
 
 def _q111_sql() -> str:
     from ..operators.linalg import jl_project_sql
 
-    return jl_project_sql(
-        "SELECT vec_id, embedding FROM embeddings",
-        id_col="vec_id",
-        d_in=64,
-        d_out=16,
-    )
+    return jl_project_sql("SELECT vec_id, embedding FROM embeddings")
 
 
 Q111_SQL = _q111_sql()
@@ -4633,7 +4588,7 @@ def q112_dp_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("((i * i) div 8 + event_id % 7) % 1024").alias("y"),
         )
     )
-    return dp_simplify(pts, tol2=100, rounds=8, group_col="g")
+    return dp_simplify(pts, tol2=100, rounds=8)
 
 
 def _q112_sql() -> str:
@@ -4649,7 +4604,7 @@ FROM (
   FROM events WHERE user_id % 11 = 0
 ) WHERE i < 512
 """
-    return dp_simplify_sql(pts, tol2=100, rounds=8, group_col="g")
+    return dp_simplify_sql(pts, tol2=100)
 
 
 Q112_SQL = _q112_sql()
@@ -4946,7 +4901,6 @@ def _q120_sql() -> str:
         "SELECT user_id, event_id, epoch_us(ts) AS ts_us, "
         "CAST(floor(value * 100 + 0.5) AS BIGINT) AS vq FROM events",
         key_col="user_id",
-        ts_col="ts_us",
         val_col="vq",
         tiebreak_col="event_id",
     )
@@ -5001,10 +4955,7 @@ def q122_decayed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("slot"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("vq"),
     )
-    return decayed_counts(
-        ev, key_col="user_id", slot_col="slot", val_col="vq",
-        half_life_slots=1,
-    )
+    return decayed_counts(ev, key_col="user_id", val_col="vq", half_life_slots=1)
 
 
 def _q122_sql() -> str:
@@ -5014,9 +4965,7 @@ def _q122_sql() -> str:
         "SELECT user_id, epoch_us(ts) // 21600000000 AS slot, "
         "CAST(floor(value * 100 + 0.5) AS BIGINT) AS vq FROM events",
         key_col="user_id",
-        slot_col="slot",
         val_col="vq",
-        half_life_slots=1,
     )
 
 
@@ -5274,7 +5223,7 @@ def _q129_sql() -> str:
         "WHEN doc_id % 4 = 2 THEN '?utm_medium=cpc&ref=tw' ELSE '' END || "
         "CASE WHEN doc_id % 9 = 0 THEN '#section-2' ELSE '' END"
     )
-    canon = canonicalize_url_sql("raw_url")
+    canon = canonicalize_url_sql()
     return f"""
 WITH r AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id, {raw} AS raw_url FROM documents
@@ -6088,9 +6037,7 @@ def q149_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(tokens("text")).cast("long").alias("s_len"),
         F.size(F.array_distinct(tokens("text"))).cast("long").alias("s_div"),
     )
-    return rrf_fuse(
-        d, "source", "doc_id", ["s_len", "s_div"], k=60, top_n=5
-    )
+    return rrf_fuse(d, "source", "doc_id", ["s_len", "s_div"], top_n=5)
 
 
 def _q149_sql() -> str:
@@ -6104,8 +6051,6 @@ def _q149_sql() -> str:
         "source",
         "doc_id",
         ["s_len", "s_div"],
-        k=60,
-        top_n=5,
     )
 
 
@@ -6214,7 +6159,7 @@ def q152_trending_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "period",
         F.when(F.col("doc_id") % 2 == 0, F.lit("ref")).otherwise(F.lit("cur")),
     )
-    return trending_terms(docs, "period", top_n=5, min_count=3)
+    return trending_terms(docs, "period", top_n=5)
 
 
 def _q152_sql() -> str:
@@ -6223,8 +6168,6 @@ def _q152_sql() -> str:
     return trending_terms_sql(
         "SELECT source, CASE WHEN doc_id % 2 = 0 THEN 'ref' ELSE 'cur' END "
         "AS period, text FROM documents",
-        top_n=5,
-        min_count=3,
     )
 
 
@@ -6520,7 +6463,6 @@ def _q159_sql() -> str:
         "SELECT CAST(user_id AS BIGINT) AS key, "
         "epoch_us(ts) // 86400000000 AS slot, "
         "CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1, 2",
-        lags=(1, 7),
     )
 
 
@@ -6695,7 +6637,6 @@ def _q164_sql() -> str:
         "SELECT p_brand, CAST(round(p_retailprice * 100, 0) AS BIGINT) AS v, "
         "CAST(p_partkey AS BIGINT) AS _id FROM part",
         group_exprs="p_brand",
-        trim_pct=5,
     )
 
 
@@ -6785,8 +6726,6 @@ def _q166_sql() -> str:
         "CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) % 10000 AS score "
         "FROM part",
         k_rounds=8,
-        iou_num=3,
-        iou_den=10,
     )
 
 
@@ -6889,17 +6828,13 @@ def q169_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     — phrase detection scored as floor(1e6·N·n_xy/(n_x·n_y))."""
     from ..functions.retrieval import pmi_collocations
 
-    return pmi_collocations(
-        _t(spark, sf_dir, "documents"), window=2, min_count=5
-    )
+    return pmi_collocations(_t(spark, sf_dir, "documents"))
 
 
 def _q169_sql() -> str:
     from ..functions.retrieval import pmi_collocations_sql
 
-    return pmi_collocations_sql(
-        "SELECT doc_id, text FROM documents", window=2, min_count=5
-    )
+    return pmi_collocations_sql("SELECT doc_id, text FROM documents")
 
 
 Q169_SQL = _q169_sql()
@@ -6952,9 +6887,7 @@ def q171_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cents"
         ),
     )
-    return target_encode_oof(
-        o, "o_orderpriority", "cents", "o_orderkey", n_folds=5
-    )
+    return target_encode_oof(o, "o_orderpriority", "cents", "o_orderkey")
 
 
 def _q171_sql() -> str:
@@ -6967,7 +6900,6 @@ def _q171_sql() -> str:
         "o_orderpriority",
         "cents",
         "o_orderkey",
-        n_folds=5,
     )
 
 
@@ -7135,7 +7067,6 @@ def _q176_sql() -> str:
     return link_prediction_sql(
         "SELECT l_partkey % 150 AS src, l_suppkey * 7 % 150 AS dst "
         "FROM lineitem",
-        top_k=100,
     )
 
 
@@ -7372,7 +7303,7 @@ def q181_d8_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q181_sql() -> str:
     from ..operators.terrain import d8_flow_sql
 
-    return d8_flow_sql(_Q181_GRID, rounds=8)
+    return d8_flow_sql(_Q181_GRID)
 
 
 Q181_SQL = _q181_sql()
@@ -7452,17 +7383,13 @@ def q184_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 chunk fingerprints, cross-doc duplicate-chunk shares."""
     from ..operators.dedup import cdc_chunk_dedup
 
-    return cdc_chunk_dedup(
-        _t(spark, sf_dir, "documents"), shingle_n=3, mask=16
-    )
+    return cdc_chunk_dedup(_t(spark, sf_dir, "documents"), mask=16)
 
 
 def _q184_sql() -> str:
     from ..operators.dedup import cdc_chunk_dedup_sql
 
-    return cdc_chunk_dedup_sql(
-        "SELECT doc_id, text FROM documents", shingle_n=3, mask=16
-    )
+    return cdc_chunk_dedup_sql("SELECT doc_id, text FROM documents")
 
 
 Q184_SQL = _q184_sql()
@@ -7496,9 +7423,7 @@ def q185_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q185_sql() -> str:
     from ..operators.terrain import d8_direction_sql, watershed_labels_sql
 
-    return watershed_labels_sql(
-        d8_direction_sql(_Q181_GRID), doubling_rounds=6
-    )
+    return watershed_labels_sql(d8_direction_sql(_Q181_GRID))
 
 
 Q185_SQL = _q185_sql()
@@ -7546,17 +7471,13 @@ def q187_cv_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     the events span — integer microsecond cuts, one-pass counts."""
     from ..operators.timeseries import rolling_origin_folds
 
-    return rolling_origin_folds(
-        _t(spark, sf_dir, "events"), "ts", n_folds=4
-    )
+    return rolling_origin_folds(_t(spark, sf_dir, "events"), "ts")
 
 
 def _q187_sql() -> str:
     from ..operators.timeseries import rolling_origin_folds_sql
 
-    return rolling_origin_folds_sql(
-        "SELECT ts FROM events", n_folds=4
-    )
+    return rolling_origin_folds_sql("SELECT ts FROM events")
 
 
 Q187_SQL = _q187_sql()
@@ -7638,7 +7559,7 @@ def q190_conformal(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long") % 10000)
         .alias("score")
     )
-    return conformal_threshold(o, "score", alpha_num=10, alpha_den=100)
+    return conformal_threshold(o, "score", alpha_num=10)
 
 
 def _q190_sql() -> str:
@@ -7648,8 +7569,6 @@ def _q190_sql() -> str:
         "SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) % 10000"
         " AS score FROM orders",
         "score",
-        alpha_num=10,
-        alpha_den=100,
     )
 
 
@@ -7665,15 +7584,13 @@ def q191_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted and ranked, one per-key sort."""
     from ..operators.timeseries import motif_signatures
 
-    return motif_signatures(_t(spark, sf_dir, "events"), m=5)
+    return motif_signatures(_t(spark, sf_dir, "events"))
 
 
 def _q191_sql() -> str:
     from ..operators.timeseries import motif_signatures_sql
 
-    return motif_signatures_sql(
-        "SELECT event_type, event_id, ts, value FROM events", m=5
-    )
+    return motif_signatures_sql("SELECT event_type, event_id, ts, value FROM events")
 
 
 Q191_SQL = _q191_sql()
@@ -7965,7 +7882,6 @@ def _q197_sql() -> str:
         " AS BIGINT) AS cents FROM orders",
         "cents",
         "o_orderkey",
-        n_resamples=50,
     )
 
 
@@ -8741,7 +8657,6 @@ def _q213_sql() -> str:
         "o_orderpriority FROM orders",
         ["nation_b", "spend_b"],
         "o_orderpriority",
-        k=5,
     )
 
 
@@ -8792,9 +8707,7 @@ def q215_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return containment_dedup(
         _t(spark, sf_dir, "documents"),
-        shingle_n=3,
         min_containment_ppm=500_000,
-        max_doc_freq=200,
     )
 
 
@@ -8803,9 +8716,7 @@ def _q215_sql() -> str:
 
     return containment_dedup_sql(
         "SELECT doc_id, text FROM documents",
-        shingle_n=3,
         min_containment_ppm=500_000,
-        max_doc_freq=200,
     )
 
 
@@ -8936,7 +8847,7 @@ def q218_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_suppkey") % 80 + 1000).alias("src"),
         (F.col("l_orderkey") % 120).alias("dst"),
     )
-    return hits_int(fwd.unionByName(back), iters=3)
+    return hits_int(fwd.unionByName(back))
 
 
 def _q218_sql() -> str:
@@ -8948,7 +8859,7 @@ def _q218_sql() -> str:
         "SELECT l_suppkey % 80 + 1000 AS src, l_orderkey % 120 AS dst "
         "FROM lineitem WHERE l_linenumber % 2 = 0"
     )
-    return hits_sql(edges, iters=3)
+    return hits_sql(edges)
 
 
 Q218_SQL = _q218_sql()
@@ -9054,7 +8965,7 @@ def q221_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts").cast("timestamp")).alias("tus"),
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v"),
     )
-    return ewma_anomaly(ev, shift_pow=4, band=300)
+    return ewma_anomaly(ev, band=300)
 
 
 def _q221_sql() -> str:
@@ -9064,7 +8975,6 @@ def _q221_sql() -> str:
         "SELECT CAST(user_id % 50 AS VARCHAR) AS k,"
         " epoch_us(CAST(ts AS TIMESTAMP)) AS tus,"
         " CAST(floor(value * 100 + 0.5) AS BIGINT) AS v FROM events",
-        shift_pow=4,
         band=300,
     )
 
@@ -9650,9 +9560,7 @@ def q235_sparse_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.retrieval import sparse_cosine_join
 
     docs = _t(spark, sf_dir, "documents")
-    return sparse_cosine_join(
-        docs, n=3, df_cap=50, min_cos2_ppm=120_000
-    )
+    return sparse_cosine_join(docs, df_cap=50, min_cos2_ppm=120_000)
 
 
 def _q235_sql() -> str:
@@ -9660,8 +9568,6 @@ def _q235_sql() -> str:
 
     return sparse_cosine_join_sql(
         "SELECT doc_id, text FROM documents",
-        n=3,
-        df_cap=50,
         min_cos2_ppm=120_000,
     )
 
@@ -10012,7 +9918,7 @@ def q242_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return ndcg_audit(ranked_a.unionByName(ranked_b), k=10)
+    return ndcg_audit(ranked_a.unionByName(ranked_b))
 
 
 def _q242_sql() -> str:
@@ -10050,7 +9956,7 @@ SELECT q, rank, rel FROM ra WHERE rank <= 10
 UNION ALL
 SELECT q, rank, rel FROM rb
 """
-    return ndcg_audit_sql(ranked, k=10)
+    return ndcg_audit_sql(ranked)
 
 
 Q242_SQL = _q242_sql()
@@ -10078,7 +9984,7 @@ def q243_salted_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("tier", F.concat(F.lit("T"), F.col("sk")))
     )
-    j = salted_join(li, dim, key="sk", n_salt=8, salt_by="qty")
+    j = salted_join(li, dim, key="sk", salt_by="qty")
     return j.groupBy("tier").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("qty").alias("sum_qty"),
@@ -10218,20 +10124,14 @@ def q245_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL."""
     from ..operators.linalg import gram_matrix, power_iteration
 
-    g = gram_matrix(
-        _t(spark, sf_dir, "embeddings"), vec_col="embedding", scale=100
-    )
+    g = gram_matrix(_t(spark, sf_dir, "embeddings"))
     return power_iteration(g, iters=3)
 
 
 def _q245_sql() -> str:
     from ..operators.linalg import gram_matrix_sql, power_iteration_sql
 
-    return power_iteration_sql(
-        gram_matrix_sql("SELECT embedding FROM embeddings", dim=64,
-                        scale=100),
-        iters=3,
-    )
+    return power_iteration_sql(gram_matrix_sql("SELECT embedding FROM embeddings"))
 
 
 Q245_SQL = _q245_sql()
@@ -10819,8 +10719,8 @@ def _q254_sql() -> str:
     from ..operators.stats import hll_sql
 
     per_src = hll_sql("SELECT text, source FROM documents", "text",
-                      p=9, group_exprs=", source")
-    direct = hll_sql("SELECT text FROM documents", "text", p=9)
+                      group_exprs=", source")
+    direct = hll_sql("SELECT text FROM documents", "text")
     return f"""
 WITH per_src AS ({per_src}),
 merged AS (SELECT reg, CAST(max(rho_max) AS BIGINT) AS rho_merged
@@ -10860,7 +10760,7 @@ def q255_dedup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_dedup(docs, shingle_n=3, num_hashes=8, rows_per_band=2)
+    pairs = minhash_lsh_dedup(docs)
     clusters = dedup_clusters(pairs)
     sized = clusters.join(
         docs.select("doc_id", "n_chars"), "doc_id"
@@ -11266,7 +11166,7 @@ def _q262_sql() -> str:
     from ..sources.pydatasource import sensor_oracle_sql
 
     return f"""
-WITH feed AS ({sensor_oracle_sql(8, 100)})
+WITH feed AS ({sensor_oracle_sql()})
 SELECT sensor_id, CAST(count(*) AS BIGINT) AS n_readings,
        CAST(sum(temp_milli) AS BIGINT) AS sum_temp_milli,
        CAST(max(temp_milli) AS BIGINT) AS max_temp_milli,
@@ -13049,12 +12949,8 @@ def q287_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_lsh_dedup, ngram_jaccard_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    truth = ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.7).select(
-        "doc_a", "doc_b"
-    )
-    cand = minhash_lsh_dedup(
-        docs, shingle_n=3, num_hashes=8, rows_per_band=2
-    ).select("doc_a", "doc_b")
+    truth = ngram_jaccard_pairs(docs, threshold=0.7).select("doc_a", "doc_b")
+    cand = minhash_lsh_dedup(docs).select("doc_a", "doc_b")
     hit = truth.join(cand, ["doc_a", "doc_b"], "left_semi")
     return (
         truth.agg(F.count(F.lit(1)).alias("n_true"))

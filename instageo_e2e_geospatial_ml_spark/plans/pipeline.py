@@ -132,7 +132,6 @@ def run_chip_pipeline(
         task_type=cfg.task_type,
         band_order=cfg.band_order,
         payload_source=payload_source,
-        n_salt=cfg.n_salt,
         decode_counter=decode_counter,
     )
     if checkpoint is not None:

@@ -28,17 +28,14 @@ def run_raster_pipeline(
     catalog: DataFrame,
     images: DataFrame,
     cfg: ChipPipelineConfig,
-    chip_deg: float = 0.1,
-    date_col: str = "date",
-    label_band: str = "LABEL",
 ) -> DataFrame:
     """bboxes(id, minx, miny, maxx, maxy, date) × catalog × images →
     chip table with raster-sliced segmentation maps."""
-    cells = grid_polygons(bboxes, chip_deg)
+    cells = grid_polygons(bboxes, 0.1)
     obs = cells.select(
         ((F.col("cell_minx") + F.col("cell_maxx")) / 2).alias("x"),
         ((F.col("cell_miny") + F.col("cell_maxy")) / 2).alias("y"),
-        F.col(date_col).alias("date"),
+        F.col("date"),
         F.lit(0).alias("label"),
     )
     # eager localCheckpoint, as in pipeline.build_records: one obs_id per
@@ -72,5 +69,5 @@ def run_raster_pipeline(
         masking_strategy=cfg.masking_strategy,
         task_type=cfg.task_type,
         band_order=cfg.band_order,
-        label_band=label_band,
+        label_band="LABEL",
     )

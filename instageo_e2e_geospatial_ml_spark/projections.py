@@ -48,10 +48,10 @@ def _t(phi: np.ndarray) -> np.ndarray:
     ) ** (_E / 2.0)
 
 
-def _phi_from_q(q: np.ndarray, iters: int = 8) -> np.ndarray:
+def _phi_from_q(q: np.ndarray) -> np.ndarray:
     """Snyder eq. 3-16 iteration: authalic q → geodetic latitude."""
     phi = np.arcsin(np.clip(q / 2.0, -1.0, 1.0))
-    for _ in range(iters):
+    for _ in range(8):
         s = np.sin(phi)
         c = np.cos(phi)
         c = np.where(np.abs(c) < 1e-12, 1e-12, c)
@@ -76,19 +76,19 @@ def _aea_constants(lat0, lon0, sp1, sp2):
     return n, C, rho0, np.radians(lon0)
 
 
-def aea_forward(lat, lon, lat0, lon0, sp1, sp2, x0=0.0, y0=0.0):
+def aea_forward(lat, lon, lat0, lon0, sp1, sp2):
     n, C, rho0, lam0 = _aea_constants(lat0, lon0, sp1, sp2)
     phi = np.radians(np.asarray(lat, dtype=np.float64))
     lam = np.radians(np.asarray(lon, dtype=np.float64)) - lam0
     rho = _A * np.sqrt(C - n * _q(phi)) / n
     th = n * lam
-    return rho * np.sin(th) + x0, rho0 - rho * np.cos(th) + y0
+    return rho * np.sin(th), rho0 - rho * np.cos(th)
 
 
-def aea_inverse(x, y, lat0, lon0, sp1, sp2, x0=0.0, y0=0.0):
+def aea_inverse(x, y, lat0, lon0, sp1, sp2):
     n, C, rho0, lam0 = _aea_constants(lat0, lon0, sp1, sp2)
-    xp = np.asarray(x, dtype=np.float64) - x0
-    yp = rho0 - (np.asarray(y, dtype=np.float64) - y0)
+    xp = np.asarray(x, dtype=np.float64)
+    yp = rho0 - np.asarray(y, dtype=np.float64)
     rho = np.sqrt(xp * xp + yp * yp)
     th = np.arctan2(np.sign(n) * xp, np.sign(n) * yp)
     q = (C - (rho * n / _A) ** 2) / n
@@ -118,7 +118,7 @@ def lcc_forward(lat, lon, lat0, lon0, sp1, sp2, x0=0.0, y0=0.0):
     return rho * np.sin(th) + x0, rho0 - rho * np.cos(th) + y0
 
 
-def lcc_inverse(x, y, lat0, lon0, sp1, sp2, x0=0.0, y0=0.0, iters: int = 8):
+def lcc_inverse(x, y, lat0, lon0, sp1, sp2, x0=0.0, y0=0.0):
     n, Fc, rho0, lam0 = _lcc_constants(lat0, lon0, sp1, sp2)
     xp = np.asarray(x, dtype=np.float64) - x0
     yp = rho0 - (np.asarray(y, dtype=np.float64) - y0)
@@ -127,7 +127,7 @@ def lcc_inverse(x, y, lat0, lon0, sp1, sp2, x0=0.0, y0=0.0, iters: int = 8):
     th = np.arctan2(sgn * xp, sgn * yp)
     tt = (rho / (_A * Fc)) ** (1.0 / n)
     phi = np.pi / 2.0 - 2.0 * np.arctan(tt)
-    for _ in range(iters):
+    for _ in range(8):
         s = np.sin(phi)
         phi = np.pi / 2.0 - 2.0 * np.arctan(
             tt * ((1.0 - _E * s) / (1.0 + _E * s)) ** (_E / 2.0)

@@ -13,7 +13,6 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(
-    app: str = "instageo_e2e_geospatial_ml_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
@@ -27,7 +26,7 @@ def get_spark(
             pass
     b = (
         SparkSession.builder.master(master)
-        .appName(app)
+        .appName("instageo_e2e_geospatial_ml_spark")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -32,7 +32,6 @@ def search_granules(
     bbox: tuple[float, float, float, float] | None = None,
     max_cloud_cover: float | None = None,
     tile_ids: list[str] | None = None,
-    sort: bool = True,
 ) -> DataFrame:
     """S7: filter the granule catalog like a STAC search.
 
@@ -57,14 +56,14 @@ def search_granules(
             & (F.col("fp_maxy") >= miny)
             & (F.col("fp_miny") <= maxy)
         )
-    return out.orderBy("ts", "granule_id") if sort else out
+    return out.orderBy("ts", "granule_id")
 
 
-def common_band_name(band: Column | str, mapping: dict[str, str] | None = None) -> Column:
-    """P8: collection band id → common name via a literal map expression."""
+def common_band_name(band: Column | str) -> Column:
+    """P8: collection band id → common name (HLS_BAND_RENAME) via a
+    literal map expression."""
     c = F.col(band) if isinstance(band, str) else band
-    mapping = mapping or HLS_BAND_RENAME
     pairs = []
-    for k, v in mapping.items():
+    for k, v in HLS_BAND_RENAME.items():
         pairs.extend([F.lit(k), F.lit(v)])
     return F.coalesce(F.create_map(*pairs)[c], c)

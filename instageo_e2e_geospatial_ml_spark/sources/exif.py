@@ -52,33 +52,33 @@ TAG_GPS_LON_REF = 0x0003
 TAG_GPS_LON = 0x0004
 
 
-def _pack_ifd(entries, data_off, bo="<"):
+def _pack_ifd(entries, data_off):
     """Pack one IFD: entries = [(tag, typ, values)] sorted by tag; values
     larger than 4 bytes spill to a data block starting at data_off.
     Returns (ifd_bytes, data_bytes)."""
     entries = sorted(entries, key=lambda e: e[0])
-    ifd = struct.pack(bo + "H", len(entries))
+    ifd = struct.pack("<H", len(entries))
     blob = b""
     for tag, typ, vals in entries:
         if typ == _T_ASCII:
             raw = vals.encode("ascii") + b"\x00"
             cnt = len(raw)
         elif typ == _T_RATIONAL:
-            raw = b"".join(struct.pack(bo + "II", n, d) for n, d in vals)
+            raw = b"".join(struct.pack("<II", n, d) for n, d in vals)
             cnt = len(vals)
         elif typ == _T_SHORT:
-            raw = struct.pack(bo + f"{len(vals)}H", *vals)
+            raw = struct.pack(f"<{len(vals)}H", *vals)
             cnt = len(vals)
         else:
-            raw = struct.pack(bo + f"{len(vals)}I", *vals)
+            raw = struct.pack(f"<{len(vals)}I", *vals)
             cnt = len(vals)
         if len(raw) <= 4:
             val = raw + b"\x00" * (4 - len(raw))
         else:
-            val = struct.pack(bo + "I", data_off + len(blob))
+            val = struct.pack("<I", data_off + len(blob))
             blob += raw
-        ifd += struct.pack(bo + "HHI", tag, typ, cnt) + val
-    ifd += struct.pack(bo + "I", 0)  # next-IFD pointer: none
+        ifd += struct.pack("<HHI", tag, typ, cnt) + val
+    ifd += struct.pack("<I", 0)  # next-IFD pointer: none
     return ifd, blob
 
 

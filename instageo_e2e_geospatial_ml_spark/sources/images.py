@@ -86,8 +86,6 @@ def hamming_neardup_pairs(
     ph: DataFrame,
     max_hamming: int = 8,
     max_bucket: int = 10_000,
-    id_col: str = "image_id",
-    hash_col: str = "phash",
 ) -> DataFrame:
     """Near-duplicate pairs over a 64-bit hash column — EXACT for the
     given threshold: the hash splits into (max_hamming + 1) blocks, so
@@ -101,7 +99,7 @@ def hamming_neardup_pairs(
     (id_a, id_b, hamming)."""
     from pyspark.sql import functions as F
 
-    ph = ph.select(F.col(id_col).alias("image_id"), F.col(hash_col).alias("phash"))
+    ph = ph.select("image_id", "phash")
     n_blocks = max_hamming + 1
     if n_blocks > 64:
         raise ValueError("max_hamming must be < 64")

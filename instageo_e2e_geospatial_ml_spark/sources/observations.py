@@ -10,7 +10,6 @@ predicate string. Catalyst pushes the translated predicate into the scan
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.filters import filters_to_column, parse_filters
@@ -31,9 +30,6 @@ def read_observations(
     path: str,
     fmt: str = "parquet",
     filter_spec: str = "",
-    time_col: str | None = "time",
-    shift_to_month_start: bool = False,
-    temporal_step: int = 0,
 ) -> DataFrame:
     if fmt == "csv":
         df = spark.read.option("header", True).option("inferSchema", True).csv(path)
@@ -43,9 +39,4 @@ def read_observations(
         raise ValueError(fmt)
     if filter_spec:
         df = df.filter(filters_to_column(parse_filters(filter_spec)))
-    return normalize_dates(
-        df,
-        time_col=time_col,
-        shift_to_month_start=shift_to_month_start,
-        temporal_step=temporal_step,
-    )
+    return normalize_dates(df, time_col="time", shift_to_month_start=False)

@@ -83,13 +83,13 @@ def register(spark) -> None:
     spark.dataSource.register(SensorDataSource)
 
 
-def sensor_oracle_sql(n_sensors: int = 8, n_readings: int = 100) -> str:
+def sensor_oracle_sql() -> str:
     """DuckDB twin of the connector's closed-form payload."""
-    return f"""
+    return """
 WITH grid AS (
   SELECT s.s AS sensor_id, q.q AS seq
-  FROM (SELECT unnest(generate_series(0, {n_sensors - 1})) AS s) s,
-       (SELECT unnest(generate_series(0, {n_readings - 1})) AS q) q
+  FROM (SELECT unnest(generate_series(0, 7)) AS s) s,
+       (SELECT unnest(generate_series(0, 99)) AS q) q
 )
 SELECT sensor_id,
        CAST(1704067200000000 + seq * 60000000 AS BIGINT) AS tus,

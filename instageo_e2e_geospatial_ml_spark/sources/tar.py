@@ -18,8 +18,6 @@ digests for the q201 oracle.
 
 from __future__ import annotations
 
-import struct
-
 
 def _octal(n: int, width: int) -> bytes:
     return (f"%0{width - 1}o" % n).encode("ascii") + b"\x00"

@@ -19,18 +19,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sessionize_batch(
-    events: DataFrame,
-    key: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    gap_minutes: int = 360,
-) -> DataFrame:
-    """(key, session_id, session_start, session_end, n_events, sum_value)
-    — session_id is the per-key ordinal (1-based, by start time)."""
+def sessionize_batch(events: DataFrame, gap_minutes: int = 360) -> DataFrame:
+    """Sessions per event_type: (event_type, session_id, session_start,
+    session_end, n_events, sum_value) — session_id is the per-key ordinal
+    (1-based, by start time)."""
     gap_us = int(gap_minutes) * 60 * 1_000_000
-    w = Window.partitionBy(key).orderBy(F.col(ts_col).asc())
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    w = Window.partitionBy("event_type").orderBy(F.col("ts").asc())
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     flagged = events.withColumn(
         "_new",
         F.when(
@@ -40,12 +35,12 @@ def sessionize_batch(
         "_sid", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0)) + 1
     )
     return (
-        flagged.groupBy(key, "_sid")
+        flagged.groupBy("event_type", "_sid")
         .agg(
-            F.date_format(F.min(ts_col), "yyyy-MM-dd'T'HH:mm:ss").alias("session_start"),
-            F.date_format(F.max(ts_col), "yyyy-MM-dd'T'HH:mm:ss").alias("session_end"),
+            F.date_format(F.min("ts"), "yyyy-MM-dd'T'HH:mm:ss").alias("session_start"),
+            F.date_format(F.max("ts"), "yyyy-MM-dd'T'HH:mm:ss").alias("session_end"),
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(value_col), 6).alias("sum_value"),
+            F.round(F.sum("value"), 6).alias("sum_value"),
         )
         .withColumnRenamed("_sid", "session_id")
     )

@@ -19,12 +19,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_event_stream(
-    spark: SparkSession, path: str, schema, max_files: int = 16
-) -> DataFrame:
+def read_event_stream(spark: SparkSession, path: str, schema) -> DataFrame:
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
+        .option("maxFilesPerTrigger", 16)
         .parquet(path)
     )
 
@@ -33,13 +31,12 @@ def windowed_event_counts(
     events: DataFrame,
     window: str = "1 hour",
     watermark: str = "2 hours",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Tumbling-window per-type counts with late-data watermark."""
     return (
-        events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), F.col("event_type"))
+        events.withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 6).alias("sum_value"),

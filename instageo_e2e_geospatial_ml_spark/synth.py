@@ -209,10 +209,10 @@ def gen_observations_pdf(
 
 def gen_images_pdf(
     catalog: pd.DataFrame, w: int = 224, h: int = 224, fmt: str = "raw",
-    with_mask: bool = True, extra_bands: list[str] | None = None,
+    extra_bands: list[str] | None = None,
 ) -> pd.DataFrame:
     """Driver-side image table for unit tests: rows (granule × band)."""
-    bands = list(BANDS) + ([MASK_BAND] if with_mask else []) + list(extra_bands or [])
+    bands = [*BANDS, MASK_BAND, *(extra_bands or [])]
     rows = [
         _image_row(f"{gid}:{band}", w, h, fmt)
         for gid in catalog["granule_id"].unique()
@@ -231,13 +231,13 @@ IMAGES_SCHEMA = (
 
 
 def gen_images_df(spark, granule_ids: list[str], w: int = 224, h: int = 224, fmt: str = "raw",
-                  bands: list[str] | None = None, num_partitions: int = 32):
+                  num_partitions: int = 32):
     """Distributed image-table generation: spark.range over (granule, band)
     pairs → mapInPandas synthesis. This is the pattern that scales to 10^12
     rows (each task synthesizes+encodes its own batch; no driver loop)."""
     from pyspark.sql import functions as F
 
-    bands = bands or (list(BANDS) + [MASK_BAND])
+    bands = [*BANDS, MASK_BAND]
     gdf = spark.createDataFrame([(g,) for g in granule_ids], "granule_id string")
     pairs = gdf.crossJoin(
         spark.createDataFrame([(b,) for b in bands], "band string")

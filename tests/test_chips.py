@@ -508,6 +508,30 @@ def test_chip_pipeline_jp2_payloads_match_raw(spark):
         assert a.iloc[i]["seg"] == b.iloc[i]["seg"]
 
 
+def test_extract_chips_band_filter_is_sorted(spark):
+    """The band filter's IN list comes in sorted order, so the chip plan
+    does not follow Python's per-process string hashing of a set."""
+    import re
+
+    records = spark.createDataFrame(
+        [("g1", ["g1"], 45.0, 15.0, "2022-06-01", 1)],
+        "stac_items_str string, granules array<string>, x double, y double,"
+        " date string, label int",
+    )
+    imgs = spark.createDataFrame(
+        synth.gen_images_pdf(
+            synth.gen_granule_catalog_pdf(tiles=["38PMB"], days=5, every=5), w=32, h=32
+        )
+    )
+    out = extract_chips(records, imgs, chip_size=32, label_band="LABEL")
+    plan = out._jdf.queryExecution().analyzed().toString()
+    lists = re.findall(r"band#\d+ IN \(([^)]*)\)", plan)
+    assert lists, plan
+    for bands in lists:
+        names = bands.split(",")
+        assert len(names) == 8 and names == sorted(names), bands
+
+
 def test_checkpoint_time_travel_and_rollback(spark, tmp_path):
     import pandas as pd
 
@@ -567,7 +591,7 @@ def test_zonal_stats_vs_numpy_replica(spark):
         spark.createDataFrame(imgs), cfg,
     ).cache()
 
-    got = zonal_stats(chips, no_data_value=0).toPandas()
+    got = zonal_stats(chips).toPandas()
     assert len(got) > 0
 
     # independent replica: single numpy accumulation over every chip

@@ -68,7 +68,7 @@ def test_clean_chip_table(spark):
     seg = np.full((4, 4), -1, dtype=np.int16)
     seg[1, 1] = 2
     df = spark.createDataFrame(pd.DataFrame([_chip_row(good, seg), _chip_row(bad, seg)]))
-    out = clean_chip_table(df, no_data_value=0, max_nodata_ratio=0.5, buffer_window=1).toPandas()
+    out = clean_chip_table(df, max_nodata_ratio=0.5, buffer_window=1).toPandas()
     assert len(out) == 1  # the 15/16-nodata chip dropped
     assert out.iloc[0]["nodata_ratio"] == 0.0
     new_seg = np.frombuffer(out.iloc[0]["seg"], dtype="<i2").reshape(4, 4)
@@ -86,7 +86,7 @@ def test_kmeans_and_components():
     # components: two tight clusters far apart → 2 components at 400 km
     lat = np.array([10.0, 10.1, 10.2, 50.0, 50.1])
     lon = np.array([10.0, 10.1, 10.2, 50.0, 50.1])
-    comp = connected_components_haversine(lat, lon, 400.0)
+    comp = connected_components_haversine(lat, lon)
     assert len(set(comp[:3])) == 1 and len(set(comp[3:])) == 1
     assert comp[0] != comp[3]
 

@@ -84,9 +84,7 @@ def test_ngram_jaccard_pairs(spark):
             ],
         }
     )
-    out = ngram_jaccard_pairs(
-        spark.createDataFrame(docs), shingle_n=3, threshold=0.3
-    ).toPandas()
+    out = ngram_jaccard_pairs(spark.createDataFrame(docs), threshold=0.3).toPandas()
     assert len(out) == 1
     assert (out.iloc[0]["doc_a"], out.iloc[0]["doc_b"]) == (1, 2)
     assert 0.3 <= out.iloc[0]["jaccard"] <= 1.0
@@ -130,7 +128,7 @@ def test_fused_ann_paths_empty_query_side(spark):
     cen = label_centroids(
         e.withColumn("label", F.col("vec_id") % 4), assemble=True
     )
-    assert ivf_topk(q, p, cen, k=3, nprobe=2).count() == 0
+    assert ivf_topk(q, p, cen, k=3).count() == 0
 
 
 def test_dedup_clusters_components(spark):
@@ -191,9 +189,7 @@ def test_winnow_fingerprints_guarantee(spark):
             ],
         }
     )
-    out = winnow_fingerprints(
-        spark.createDataFrame(docs), shingle_n=3, window=4
-    ).toPandas()
+    out = winnow_fingerprints(spark.createDataFrame(docs)).toPandas()
     # winnowing guarantee: a shared run of >= window+k-1 = 6 tokens
     # (we share 8) forces >= 1 common fingerprint hash between docs 1 and 2
     h1 = set(out[out["doc_id"] == 1]["fp_hash"])
@@ -226,9 +222,7 @@ def test_clean_corpus_pipeline(spark):
             ],
         }
     )
-    out = clean_corpus(
-        spark.createDataFrame(docs), min_quality=0.3, lang="en"
-    ).toPandas()
+    out = clean_corpus(spark.createDataFrame(docs), min_quality=0.3).toPandas()
     assert sorted(out["doc_id"]) == [1]  # 2 exact-dup, 3 near-dup, 4 de, 5 junk
     assert (out["quality"] >= 0.3).all()
 
@@ -249,7 +243,7 @@ def test_label_centroids_feed_ivf(spark):
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     p = e.select(F.col("vec_id").alias("pid"), F.col("embedding").alias("pvec"))
-    out = ivf_topk(q, p, cen, k=3, nprobe=2).toPandas()
+    out = ivf_topk(q, p, cen, k=3).toPandas()
     assert len(out) > 0
     assert (out.groupby("qid").size() <= 3).all()
 
@@ -372,7 +366,7 @@ def test_train_centroids_unsupervised_ivf_recall(spark):
     )
     p = e.select(F.col("vec_id").alias("pid"), F.col("embedding").alias("pvec"))
     exact = brute_force_topk(q, p, k=5).toPandas()
-    approx = ivf_topk(q, p, cen, k=5, nprobe=2).toPandas()
+    approx = ivf_topk(q, p, cen, k=5).toPandas()
     exact_pairs = set(zip(exact["qid"], exact["pid"]))
     approx_pairs = set(zip(approx["qid"], approx["pid"]))
     recall = len(exact_pairs & approx_pairs) / len(exact_pairs)
@@ -442,7 +436,7 @@ def test_retrieval_and_sampling_units(spark):
     assert sur.loc[2, "surprisal_mean"] < sur.loc[1, "surprisal_mean"]
     assert (sur["n_bigrams"] == [2, 4, 2]).all()
 
-    tt = top_terms(docs, group_col="source", n=1).toPandas()
+    tt = top_terms(docs, n=1).toPandas()
     top_a = tt[tt["source"] == "a"].iloc[0]
     assert top_a["tok"] == "join" and top_a["cnt"] == 4
 
@@ -622,7 +616,7 @@ def test_pq_adc_recall_and_plan(spark):
     from instageo_e2e_geospatial_ml_spark.operators.similarity import pq_adc_topk
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    pq = pq_adc_topk(e, query_id=0, m=4, k=8, n_iters=2, dim=64, topk=10)
+    pq = pq_adc_topk(e)
     got = [(r["pid"], r["adc_score"]) for r in pq.collect()]
 
     pdf = e.toPandas()
@@ -664,7 +658,7 @@ def test_pq_adc_recall_and_plan(spark):
     ])
     rows = [(int(i), [float(x) for x in pts[i]]) for i in range(200)]
     cdf = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    top = pq_adc_topk(cdf, query_id=0, m=4, k=8, n_iters=2, dim=64, topk=10)
+    top = pq_adc_topk(cdf)
     mates = [r["pid"] for r in top.collect()]
     assert sum(1 for p in mates if p < 25) >= 9, mates
 

@@ -58,7 +58,7 @@ def test_tile_info_golden(golden_obs):
     # 38PMB subset, num_steps=3, temporal_step=5, tolerance=5
     df = assign_tiles(golden_obs)
     df = density_filter(df, 3, keep_counts=False)
-    info = tile_info(df, num_steps=3, temporal_step=5, tolerance_days=5).collect()
+    info = tile_info(df).collect()
     assert len(info) == 1
     r = info[0]
     assert r["tile_id"] == "38PMB"
@@ -519,7 +519,7 @@ def test_salted_join_row_identical_and_spread(spark):
     dim = spark.createDataFrame(
         pd.DataFrame({"cell": list(range(100)), "tile": [f"t{i}" for i in range(100)]})
     )
-    got = salted_join(fact, dim, "cell", salt_by="row_id", n_salt=8).toPandas()
+    got = salted_join(fact, dim, "cell", salt_by="row_id").toPandas()
     want = fact.join(dim, "cell").toPandas()
     key = ["row_id"]
     got = got.sort_values(key).reset_index(drop=True)[sorted(got.columns)]
@@ -707,7 +707,7 @@ def test_dedup_lines_c4_first_occurrence(spark):
         ],
         "doc_id long, text string",
     )
-    out = dedup_lines(docs, line_words=10).collect()
+    out = dedup_lines(docs).collect()
     by = {(r["doc_id"], r["line_idx"]): r for r in out}
     assert len(out) == 2 + 2 + 3
     assert by[(1, 0)]["keep"] and by[(1, 0)]["line"] == boiler
@@ -736,7 +736,7 @@ def test_apply_line_dedup_reconstruction(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in apply_line_dedup(docs, line_words=10).collect()}
+    out = {r["doc_id"]: r for r in apply_line_dedup(docs).collect()}
     assert out[1]["clean_text"] == f"{boiler} {w10} unique tail"
     assert out[1]["n_lines_kept"] == 3 and out[1]["n_lines_dropped"] == 0
     assert out[2]["clean_text"] == "" and out[2]["n_lines_kept"] == 0
@@ -760,7 +760,7 @@ def test_inverted_index_postings(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r["term"]: r for r in inverted_index(docs, min_df=2).collect()}
+    out = {r["term"]: r for r in inverted_index(docs).collect()}
     assert set(out) == {"apple", "banana", "cherry"}  # no hapax here
     a = out["apple"]
     assert a["df"] == 2 and a["total_tf"] == 3
@@ -772,7 +772,7 @@ def test_inverted_index_postings(spark):
     docs2 = spark.createDataFrame(
         [(1, "solo apple"), (2, "apple")], "doc_id long, text string"
     )
-    out2 = {r["term"] for r in inverted_index(docs2, min_df=2).collect()}
+    out2 = {r["term"] for r in inverted_index(docs2).collect()}
     assert out2 == {"apple"}
 
 
@@ -1347,17 +1347,11 @@ def test_merge_upsert_semantics_and_idempotence(spark):
         ],                                      # key 4 latest is ts=100 row
         "key long, v long, tag string, ts long, tb long, op string",
     )
-    out = merge_upsert(
-        target, changes, key_col="key", ts_col="ts", op_col="op",
-        tiebreak_col="tb",
-    )
+    out = merge_upsert(target, changes, tiebreak_col="tb")
     got = sorted((r.key, r.v, r.tag) for r in out.collect())
     assert got == [(1, 10, "a"), (2, 22, "b2"), (4, 40, "d")]
 
-    again = merge_upsert(
-        out, changes, key_col="key", ts_col="ts", op_col="op",
-        tiebreak_col="tb",
-    )
+    again = merge_upsert(out, changes, tiebreak_col="tb")
     assert sorted((r.key, r.v, r.tag) for r in again.collect()) == got
 
 
@@ -1373,7 +1367,7 @@ def test_pagerank_int_replica_and_sink_behavior(spark):
     # since 3 closes the cycle). Duplicate edge 1->2 collapses.
     edges = [(1, 2), (1, 2), (1, 3), (2, 3), (3, 1), (4, 3)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r for r in pagerank_int(df, iters=3).collect()}
+    got = {r.node: r for r in pagerank_int(df).collect()}
 
     ded = sorted(set(edges))
     nodes = sorted({u for e in ded for u in e})
@@ -2315,7 +2309,7 @@ def test_rrf_fuse_designed_rankings(spark):
         ("g", 4, 70, 50),
     ]
     df = spark.createDataFrame(rows, "g string, id long, sA long, sB long")
-    out = rrf_fuse(df, "g", "id", ["sA", "sB"], k=60, top_n=4)
+    out = rrf_fuse(df, "g", "id", ["sA", "sB"], top_n=4)
     got = {r.id: r for r in out.collect()}
 
     def term(rank):
@@ -2408,7 +2402,7 @@ def test_trending_terms_designed_windows(spark):
         [("s", "ref", ref), ("s", "cur", cur)],
         "source string, period string, text string",
     )
-    out = trending_terms(df, "period", top_n=10, min_count=3).collect()
+    out = trending_terms(df, "period", top_n=10).collect()
     by_term = {r.term: r for r in out}
     assert "rare" not in by_term                      # min_count prune
     assert by_term["surge"].c_ref == 0 or by_term["surge"].c_ref is not None
@@ -3166,7 +3160,7 @@ def test_cms_estimate_bounds_and_merge(spark):
     # zipf-ish frequencies: key i appears 1000//(i+1) times
     rows = [(f"k{i}",) for i in range(80) for _ in range(1000 // (i + 1))]
     df = spark.createDataFrame(rows, "k string")
-    sk = cms_build(df, key_col="k", depth=4, width=256)
+    sk = cms_build(df, key_col="k")
 
     # merge = cellwise sum
     half1 = spark.createDataFrame(rows[: len(rows) // 2], "k string")
@@ -3283,7 +3277,7 @@ def test_gram_matrix_numpy_parity_and_pca(spark):
         [(row.astype(float).tolist(),) for row in base],
         "embedding array<float>",
     ).repartition(8)
-    cells = gram_matrix(df, scale=100).collect()
+    cells = gram_matrix(df).collect()
     g = np.zeros((d, d), dtype=np.int64)
     for r in cells:
         g[r.i - 1, r.j - 1] = r.g
@@ -3732,9 +3726,7 @@ def test_decayed_counts_designed(spark):
     df = spark.createDataFrame(rows, "k string, slot long, v long")
     out = {
         r.k: (r.last_slot, r.n_events, r.decayed)
-        for r in decayed_counts(
-            df, key_col="k", slot_col="slot", val_col="v"
-        ).collect()
+        for r in decayed_counts(df, key_col="k", val_col="v").collect()
     }
     assert out["a"] == (10, 4, 13)
     assert out["b"] == (5, 1, 42)
@@ -3744,9 +3736,7 @@ def test_decayed_counts_designed(spark):
         [("c", 4, 8), ("c", 3, 8), ("c", 2, 8), ("c", 1, 8)],
         "k string, slot long, v long",
     )
-    out2 = decayed_counts(
-        df2, key_col="k", slot_col="slot", val_col="v", half_life_slots=2
-    ).collect()[0]
+    out2 = decayed_counts(df2, key_col="k", val_col="v", half_life_slots=2).collect()[0]
     assert out2.decayed == 8 + 8 + 4 + 4
 
 
@@ -3838,9 +3828,7 @@ def test_decayed_counts_slot_aggregated_semantics(spark):
         [("k", 1, 3), ("k", 1, 3), ("k", 2, 0)],
         "k string, slot long, v long",
     )
-    out = decayed_counts(
-        df, key_col="k", slot_col="slot", val_col="v"
-    ).collect()[0]
+    out = decayed_counts(df, key_col="k", val_col="v").collect()[0]
     assert out.decayed == 3 and out.n_events == 3
 
 
@@ -4126,8 +4114,7 @@ def test_target_encode_oof_exact_vs_python_replica(spark):
     rows.append((zid, "z", 50))
     df = spark.createDataFrame(rows, "id long, cat string, t long")
     got = {(r.category, r.fold): (r.oof_sum, r.oof_cnt, r.enc_scaled)
-           for r in target_encode_oof(df, "cat", "t", "id",
-                                      n_folds=5).collect()}
+           for r in target_encode_oof(df, "cat", "t", "id").collect()}
 
     fold = {i: (int(hashlib.md5(f"{i}:oof".encode()).hexdigest()[:8], 16)
                 % 1000000) % 5 for i, _, _ in rows}
@@ -4482,7 +4469,7 @@ def test_cdc_chunk_dedup_shift_invariance(spark):
         "doc_id long, text string",
     )
     got = {r.doc_id: (r.n_chunks, r.n_dup_chunks, r.dup_ppm)
-           for r in cdc_chunk_dedup(docs, shingle_n=3, mask=8).collect()}
+           for r in cdc_chunk_dedup(docs, mask=8).collect()}
     assert got[1][0] >= 5                      # ~120/8 chunks expected
     assert got[1] == got[2]                    # identical docs identical
     assert got[1][2] == 1000000                # every chunk duplicated
@@ -4558,10 +4545,7 @@ def test_rolling_origin_folds_exact_cuts(spark):
         [( (t0 + pd.Timedelta(hours=i)).to_pydatetime(),) for i in range(10)],
         "ts timestamp",
     )
-    got = sorted(
-        rolling_origin_folds(df, "ts", n_folds=4).collect(),
-        key=lambda r: r.fold,
-    )
+    got = sorted(rolling_origin_folds(df, "ts").collect(), key=lambda r: r.fold)
     n_trains = [r.n_train for r in got]
     assert n_trains == sorted(n_trains)
     assert sum(r.n_test for r in got) + got[0].n_train == 10
@@ -4643,17 +4627,17 @@ def test_conformal_threshold_exact_rank(spark):
     df = spark.createDataFrame(
         [(v,) for v in [5, 1, 3, 3, 7, 2, 9, 4, 6]], "s long"
     )
-    r = conformal_threshold(df, "s", 10, 100).collect()
+    r = conformal_threshold(df, "s", 10).collect()
     assert len(r) == 1
     assert (r[0].n, r[0].k, r[0].q_hat, r[0].n_at_or_below) == (9, 9, 9, 9)
 
     # heavy ties: scores all equal -> q_hat is that value, coverage n
     df2 = spark.createDataFrame([(4,)] * 9, "s long")
-    r2 = conformal_threshold(df2, "s", 10, 100).collect()[0]
+    r2 = conformal_threshold(df2, "s", 10).collect()[0]
     assert (r2.q_hat, r2.n_at_or_below) == (4, 9)
 
     # alpha = 1/100 with n=9 -> k = ceil(10*0.99) = 10 > 9 -> guard row
-    r3 = conformal_threshold(df, "s", 1, 100).collect()
+    r3 = conformal_threshold(df, "s", 1).collect()
     assert len(r3) == 1 and r3[0].q_hat is None and r3[0].k == 10
 
 
@@ -4677,7 +4661,7 @@ def test_motif_signatures_hand_series(spark):
         " value double"
     )
     got = {(r.k, r.sig): (r.n, r.rnk)
-           for r in motif_signatures(ev, m=5).collect()}
+           for r in motif_signatures(ev).collect()}
     # 12 points -> 8 windows alternating udud / dudu, 4 each; the
     # (n DESC, sig ASC) tie-break puts 'dudu' first ('d' < 'u')
     assert got[("a", "dudu")] == (4, 1)
@@ -4991,7 +4975,7 @@ def test_hits_star_graph_hub_authority_split(spark):
         [(1, 10), (1, 11), (1, 12), (2, 10)], "src long, dst long"
     )
     got = {r.node: (r.hub_score, r.auth_score)
-           for r in hits_int(edges, iters=3).collect()}
+           for r in hits_int(edges).collect()}
     assert got[1] == (HITS_SCALE, 0)          # best hub, no in-links
     assert got[10][1] == HITS_SCALE           # best authority
     assert got[10][0] == 0                    # ... with no out-links
@@ -5017,7 +5001,7 @@ def test_ewma_anomaly_hand_fold_and_negative_truncation(spark):
     rows = [("a", 1_000_000, 100), ("a", 2_000_000, 116),
             ("a", 3_000_000, 99)]
     df = spark.createDataFrame(rows, "k string, tus long, v long")
-    r = ewma_anomaly(df, shift_pow=4, band=3).collect()[0]
+    r = ewma_anomaly(df, band=3).collect()[0]
     assert (r.n, r.n_anomalies, r.level_final, r.max_abs_dev) == (
         3, 1, 100, 16384
     )
@@ -5028,7 +5012,7 @@ def test_ewma_anomaly_hand_fold_and_negative_truncation(spark):
     # -192) -> s = 103424 - 192 = 103232 -> level 100
     rows2 = [("b", 1, 100), ("b", 2, 116), ("b", 3, 98)]
     df2 = spark.createDataFrame(rows2, "k string, tus long, v long")
-    r2 = ewma_anomaly(df2, shift_pow=4, band=3).collect()[0]
+    r2 = ewma_anomaly(df2, band=3).collect()[0]
     assert (r2.n_anomalies, r2.level_final) == (2, 100)
 
 
@@ -5163,8 +5147,7 @@ def test_sparse_cosine_join_identity_and_df_cap(spark):
         "doc_id long, text string",
     )
     got = {(r.doc_a, r.doc_b): (r.dot, r.cos2_ppm)
-           for r in sparse_cosine_join(
-               docs, n=3, df_cap=50, min_cos2_ppm=0).collect()}
+           for r in sparse_cosine_join(docs, df_cap=50, min_cos2_ppm=0).collect()}
     assert got == {(1, 2): (3, 1_000_000)}   # 3 shared trigrams, cos=1
 
     # df_cap: the trigram "x y z" appears in ALL 3 docs -> df=3 > cap=2
@@ -5173,10 +5156,10 @@ def test_sparse_cosine_join_identity_and_df_cap(spark):
         [(1, "x y z a b"), (2, "x y z c d"), (3, "x y z e f")],
         "doc_id long, text string",
     )
-    pairs = sparse_cosine_join(d2, n=3, df_cap=2, min_cos2_ppm=0).collect()
+    pairs = sparse_cosine_join(d2, df_cap=2, min_cos2_ppm=0).collect()
     assert pairs == []
     # with the cap lifted they all pair through the shared shingle
-    pairs2 = sparse_cosine_join(d2, n=3, df_cap=3, min_cos2_ppm=0).collect()
+    pairs2 = sparse_cosine_join(d2, df_cap=3, min_cos2_ppm=0).collect()
     assert {(r.doc_a, r.doc_b) for r in pairs2} == {(1, 2), (1, 3), (2, 3)}
     # each doc has 3 trigrams, shares exactly "x y z": dot=1, norms 3
     # -> cos2 = 1e6 // 9
@@ -5245,7 +5228,7 @@ def test_ndcg_perfect_and_inverted_rankings(spark):
     df = spark.createDataFrame(
         perfect + inverted + zero, "q string, rank long, rel long"
     )
-    got = {r.q: r for r in ndcg_audit(df, k=10).collect()}
+    got = {r.q: r for r in ndcg_audit(df).collect()}
     assert got["p"].ndcg_ppm == 1_000_000
     assert got["p"].dcg_scaled == got["p"].idcg_scaled
     assert 0 < got["i"].ndcg_ppm < 1_000_000

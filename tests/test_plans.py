@@ -138,7 +138,7 @@ def test_q15_minhash_no_explode_single_band_materialization(spark):
     )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sig = minhash_signatures(shingles(docs, "text", 3))
+    sig = minhash_signatures(shingles(docs, 3))
     splan = sig._jdf.queryExecution().executedPlan().toString()
     assert splan.count("Generate") == 1  # shingle explode only, no j-explode
     assert splan.count("HashAggregate") >= 2  # partial + final min agg
@@ -319,9 +319,7 @@ def test_ranged_row_number_matches_global_window(spark, weight, group_cols, excl
     df = df.repartition(5, "id")  # a shuffle output: row order not fixed
     cache = spark._jsparkSession.sharedState().cacheManager()
     n_cached = cache.numCachedEntries()
-    out = ranged_prefix(
-        df, ["skey", "id"], "pos", weight=weight, group_cols=group_cols, n_buckets=8
-    )
+    out = ranged_prefix(df, ["skey", "id"], "pos", weight=weight, group_cols=group_cols)
     if exclusive:
         out = out.withColumn("pos", F.col("pos") - F.col(weight))
     keys = [*group_cols, "skey", "id"]
@@ -390,10 +388,11 @@ def _package_defs_and_names():
 
     The defs are `(where, name)` for every top-level def or class in the
     package. A name counts as used where some repository .py file names it
-    as a Name, an attribute access or an import alias; ast parses
-    f-string expressions, so helpers spliced into oracle_sql text count.
-    A package __init__.py does not count as a user: its re-exports only
-    re-name what a module defines."""
+    as a Name or an attribute access; ast parses f-string expressions, so
+    helpers spliced into oracle_sql text count. An import alias alone is
+    not a use (an import nothing reads would otherwise keep a dead def
+    alive), and a package __init__.py does not count as a user: its
+    re-exports only re-name what a module defines."""
     import ast
     import pathlib
 
@@ -415,8 +414,6 @@ def _package_defs_and_names():
                 names.add(n.id)
             elif isinstance(n, ast.Attribute):
                 names.add(n.attr)
-            elif isinstance(n, ast.alias):
-                names.add(n.name)
         used |= names
         if parts[0] != "tests":
             used_outside_tests |= names
@@ -439,6 +436,39 @@ def test_every_private_helper_is_referenced():
         if name.startswith("_") and not name.startswith("__") and name not in used
     ]
     assert not dead, "unreferenced private helpers: " + ", ".join(dead)
+
+
+def test_every_import_is_read():
+    """Dead-import rule: every name a package module binds by an import,
+    including the lazy imports inside function bodies, is read somewhere in
+    that module (names inside string annotations count). `from __future__`
+    imports and package __init__.py files, whose imports are re-exports,
+    are exempt."""
+    import ast
+
+    unread = []
+    for rel, tree in _package_modules():
+        if rel.name == "__init__.py":
+            continue
+        read = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                read.add(n.id)
+            elif isinstance(n, (ast.arg, ast.FunctionDef, ast.AsyncFunctionDef)):
+                ann = n.annotation if isinstance(n, ast.arg) else n.returns
+                if isinstance(ann, ast.Constant) and isinstance(ann.value, str):
+                    read |= {
+                        m.id for m in ast.walk(ast.parse(ann.value)) if isinstance(m, ast.Name)
+                    }
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and n.module == "__future__":
+                continue
+            if isinstance(n, (ast.Import, ast.ImportFrom)):
+                for a in n.names:
+                    bound = a.asname or a.name.split(".")[0]
+                    if bound != "*" and bound not in read:
+                        unread.append(f"{rel}:{n.lineno} {bound}")
+    assert not unread, "imports their module never reads: " + ", ".join(unread)
 
 
 # Public names that only tests call, kept because the reference-parity map
@@ -597,6 +627,7 @@ ONE_VALUE_FORKS = {
     "operators/asof.py:asof_pick(align_partitioning)": "perfbench/ (frozen) passes True",
     "operators/asof.py:asof_pick(order)": "J3 closest-in-time pick (s2_utils.py:508-587)",
     "operators/chips.py:mask_segmentation_map(masking_strategy)": "R5 'any' masking strategy",
+    "operators/cleaner.py:nodata_ratio(strategy)": "R12 'all' no-data strategy",
     "jp2.py:jp2_encode(tile_offset)": "builds JP2 codestream test inputs",
     "jp2.py:jp2_encode(subsampling)": "builds JP2 codestream test inputs",
     "jp2.py:jp2_encode(segsym)": "builds JP2 codestream test inputs",
@@ -612,46 +643,44 @@ ONE_VALUE_FORKS = {
     "jp2.py:jp2_encode(irreversible)": "builds JP2 codestream test inputs",
     "jp2.py:jp2_encode(precincts)": "builds JP2 codestream test inputs",
     "synth.py:gen_granule_catalog_pdf(notch)": "builds concave-footprint test inputs",
-    "synth.py:gen_images_pdf(with_mask)": "builds mask-less image test inputs",
     "operators/similarity.py:label_centroids(assemble)": "builds ivf_topk centroid test inputs",
 }
 
 
 def _option_calls():
-    """{function name: [ast.Call]} for every call in the package, bench.py,
-    bench_extra.py, scripts/ and the non-test perfbench/ files."""
+    """{function name: [(ast.Call, in_tests)]} for every call in the
+    package, bench.py, bench_extra.py, scripts/, perfbench/ and tests/: the
+    walk the option lints share. `in_tests` tags a call made from a test
+    file (tests/ or perfbench/test_*.py)."""
     import ast
     import pathlib
 
     repo = pathlib.Path(__file__).resolve().parent.parent
-    extra = [
-        repo / "bench.py",
-        repo / "bench_extra.py",
-        *(repo / "scripts").glob("*.py"),
-        *(p for p in (repo / "perfbench").glob("*.py") if not p.name.startswith("test_")),
+    files = [
+        (repo / "bench.py", False),
+        (repo / "bench_extra.py", False),
+        *((p, False) for p in (repo / "scripts").glob("*.py")),
+        *((p, p.name.startswith("test_")) for p in (repo / "perfbench").glob("*.py")),
+        *((p, True) for p in (repo / "tests").glob("*.py")),
     ]
-    trees = [t for _, t in _package_modules()] + [ast.parse(p.read_text()) for p in extra]
+    trees = [(t, False) for _, t in _package_modules()]
+    trees += [(ast.parse(p.read_text()), in_tests) for p, in_tests in files]
     calls = {}
-    for tree in trees:
+    for tree, in_tests in trees:
         for n in ast.walk(tree):
             if isinstance(n, ast.Call):
                 f = n.func
                 name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-                calls.setdefault(name, []).append(n)
+                calls.setdefault(name, []).append((n, in_tests))
     return calls
 
 
-def test_every_branching_option_has_two_values_in_use():
-    """Dead-fork rule: a defaulted option (default True, False, None or a
-    string) that a package function reads in an `if`/`elif`/conditional
-    test must receive at least two distinct values across the calls
-    outside tests/. An option every such call sets the same way selects a
-    branch only tests run: make it a constant and delete the branch.
-    Covered: every package function some call outside tests/ names,
-    except the registry's q* queries and names defined twice. An omitted
-    argument counts as the default; a non-constant argument or `*`/`**`
-    forwarding counts as many values. ONE_VALUE_FORKS entries must still
-    be flagged."""
+def _defaulted_functions():
+    """(rel, fn, {param: default node}, [positional param names], calls)
+    for every package function or method that is defined once under its
+    name and that some call names, except the registry's q* queries. Calls
+    are matched by name, so a name defined twice is left out: nothing
+    tells which def a call reaches."""
     import ast
     import re
 
@@ -667,16 +696,50 @@ def test_every_branching_option_has_two_values_in_use():
             if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 defs.setdefault(fn.name, []).append((rel, fn, id(fn) in methods))
     calls = _option_calls()
-    flagged = []
     for name, [(rel, fn, is_method)] in ((k, v) for k, v in defs.items() if len(v) == 1):
         if name not in calls or re.fullmatch(r"q\d+_\w+", name):
             continue
         a = fn.args
-        positional = [*a.posonlyargs, *a.args][1 if is_method else 0 :]
+        positional = [p.arg for p in [*a.posonlyargs, *a.args][1 if is_method else 0 :]]
         defaults = dict(zip((p.arg for p in reversed(a.args)), reversed(a.defaults)))
         defaults.update(
             (p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
         )
+        yield rel, fn, defaults, positional, calls[name]
+
+
+def _passed(call, param, positional, default):
+    """The argument node `call` passes for `param`: `default` where the
+    call omits it, None where `*`/`**` forwarding may carry it."""
+    import ast
+
+    kw = {k.arg: k.value for k in call.keywords}
+    if param in kw:
+        return kw[param]
+    idx = positional.index(param) if param in positional else None
+    starred = [isinstance(x, ast.Starred) for x in call.args]
+    if idx is not None and idx < len(call.args) and not any(starred[: idx + 1]):
+        return call.args[idx]
+    if any(starred) or None in kw:
+        return None
+    return default
+
+
+def test_every_branching_option_has_two_values_in_use():
+    """Dead-fork rule: a defaulted option (default True, False, None or a
+    string) that a package function reads in an `if`/`elif`/conditional
+    test must receive at least two distinct values across the calls
+    outside tests/. An option every such call sets the same way selects a
+    branch only tests run: make it a constant and delete the branch.
+    Covered: the functions `_defaulted_functions` yields that some call
+    outside tests/ names. An omitted argument counts as the default; a
+    non-constant argument or `*`/`**`
+    forwarding counts as many values. ONE_VALUE_FORKS entries must still
+    be flagged."""
+    import ast
+
+    flagged = []
+    for rel, fn, defaults, positional, calls in _defaulted_functions():
         tested = {
             n.id
             for t in ast.walk(fn)
@@ -690,29 +753,65 @@ def test_every_branching_option_has_two_values_in_use():
             )
             if p not in tested or not option:
                 continue
-            idx = next((i for i, q in enumerate(positional) if q.arg == p), None)
+            outside = [c for c, in_tests in calls if not in_tests]
+            if not outside:
+                continue
             values = set()
-            for c in calls[name]:
-                kw = {k.arg: k.value for k in c.keywords}
-                starred = [isinstance(x, ast.Starred) for x in c.args]
-                if p in kw:
-                    v = kw[p]
-                elif idx is not None and idx < len(c.args) and not any(starred[: idx + 1]):
-                    v = c.args[idx]
-                elif any(starred) or None in kw:
-                    break  # forwarded: counts as many values
-                else:
-                    v = d
+            for c in outside:
+                v = _passed(c, p, positional, d)
                 if not isinstance(v, ast.Constant):
-                    break  # computed: counts as many values
+                    break  # computed or forwarded: counts as many values
                 values.add((type(v.value), v.value))
             else:
                 if len(values) < 2:
-                    flagged.append(f"{rel}:{name}({p})")
+                    flagged.append(f"{rel}:{fn.name}({p})")
     dead = [f for f in flagged if f not in ONE_VALUE_FORKS]
     assert not dead, "options every caller sets the same way: " + ", ".join(dead)
     stale = sorted(set(ONE_VALUE_FORKS) - set(flagged))
     assert not stale, "allowlisted options that are gone or now take two values: " + ", ".join(stale)
+
+
+# Defaults that every call leaves as they are, kept only because a frozen
+# file passes the default value explicitly (dropping the parameter would
+# break that call).
+FROZEN_DEFAULTS = {
+    "operators/asof.py:asof_pick(obs_id)": "perfbench/ (frozen) passes obs_id='obs_id'",
+    "operators/knn.py:knn_join(pid)": "perfbench/ (frozen) passes pid='pid'",
+}
+
+
+def test_every_default_is_overridden_somewhere():
+    """Dead-option rule: every defaulted parameter of a package function
+    must be given another value by at least one call in the repository,
+    tests included; a default nobody overrides is a constant. Covered: the
+    functions `_defaulted_functions` yields. An omitted argument counts as
+    the default, and so does one equal to it (the same literal value, or
+    the same expression by `ast.dump`, e.g. `res=DEFAULT_PIP_RES`); a
+    computed argument or `*`/`**` forwarding counts as another value.
+    FROZEN_DEFAULTS entries must still be flagged."""
+    import ast
+
+    def same(v, d):
+        if ast.dump(v) == ast.dump(d):
+            return True
+        try:
+            a, b = ast.literal_eval(v), ast.literal_eval(d)
+        except ValueError:
+            return False
+        return type(a) is type(b) and a == b
+
+    flagged = []
+    for rel, fn, defaults, positional, calls in _defaulted_functions():
+        for p, d in defaults.items():
+            if all(
+                (v := _passed(c, p, positional, d)) is not None and same(v, d)
+                for c, _ in calls
+            ):
+                flagged.append(f"{rel}:{fn.name}({p})")
+    dead = [f for f in flagged if f not in FROZEN_DEFAULTS]
+    assert not dead, f"{len(dead)} defaults no call overrides: " + ", ".join(dead)
+    stale = sorted(set(FROZEN_DEFAULTS) - set(flagged))
+    assert not stale, "allowlisted defaults that are gone or now overridden: " + ", ".join(stale)
 
 
 def test_registrable_domain_psl_table_wins(spark):

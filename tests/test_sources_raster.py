@@ -157,7 +157,6 @@ def test_raster_pipeline_label_band(spark):
         spark.createDataFrame(cat_pdf),
         spark.createDataFrame(imgs),
         cfg,
-        chip_deg=0.1,
     ).toPandas()
     assert len(out) > 0
     import numpy as np
