@@ -173,24 +173,18 @@ def registrable_domain(df: DataFrame) -> DataFrame:
     return out.withColumn("domain", reg).drop("_hp", "_s1", "_s2", "_s3")
 
 
-def _pre_cap_salted(
-    df: DataFrame,
-    max_per_domain: int,
-    domain_col: str,
-    order_col: str,
-    n_salt: int,
-) -> DataFrame:
+def _pre_cap_salted(df: DataFrame, max_per_domain: int, n_salt: int) -> DataFrame:
     """Phase 1 of the salted cap: keep each (domain, salt)'s lowest
-    `max_per_domain` order values. Any row in a domain's GLOBAL top-cap
+    `max_per_domain` doc_id values. Any row in a domain's GLOBAL top-cap
     is also in its salt bucket's top-cap (ordering restricted to a
     subset), so phase 1 never drops a final keeper — it only bounds the
     phase-2 input at ≤ n_salt·cap rows per domain."""
     from pyspark.sql import Window
 
-    w1 = Window.partitionBy(domain_col, "_salt").orderBy(F.col(order_col))
+    w1 = Window.partitionBy("domain", "_salt").orderBy(F.col("doc_id"))
     return (
         df.withColumn(
-            "_salt", F.pmod(F.hash(F.col(order_col).cast("string")), F.lit(n_salt))
+            "_salt", F.pmod(F.hash(F.col("doc_id").cast("string")), F.lit(n_salt))
         )
         .withColumn("_r1", F.row_number().over(w1))
         .filter(F.col("_r1") <= max_per_domain)
@@ -214,7 +208,7 @@ def cap_per_domain(df: DataFrame, max_per_domain: int, n_salt: int = 16) -> Data
     from pyspark.sql import Window
 
     if n_salt > 1:
-        df = _pre_cap_salted(df, max_per_domain, "domain", "doc_id", n_salt)
+        df = _pre_cap_salted(df, max_per_domain, n_salt)
     w = Window.partitionBy("domain").orderBy(F.col("doc_id"))
     return (
         df.withColumn("rank_in_domain", F.row_number().over(w))

@@ -3,7 +3,7 @@
 `target_encode_oof`: out-of-fold target encoding — the standard trick
 for turning a high-cardinality categorical column into a numeric
 feature WITHOUT leaking each row's own label into its feature value.
-Rows are assigned to one of `n_folds` folds by md5 of their row key
+Rows are assigned to one of `_N_FOLDS` (5) folds by md5 of their row key
 (deterministic, engine-portable, repartition-stable — the
 operators/sampling.py `_hash_point` rule); the encoding a fold-f row
 receives for category c is the mean target of category c computed over
@@ -17,7 +17,7 @@ so the output is a pure integer function of the input — bit-identical
 in Spark and DuckDB.
 
 Scale: one (category, fold) aggregation over the data — everything
-after runs on the tiny encoding table (|categories| x n_folds rows):
+after runs on the tiny encoding table (|categories| x _N_FOLDS rows):
 per-category totals re-aggregate the FOLD table, not the raw data, and
 the global prior is one scalar re-aggregated the same way. No window
 over raw rows, no second pass, no join back (the published table IS
@@ -32,20 +32,21 @@ from pyspark.sql import functions as F
 from .sampling import _hash_point
 
 _SCALE = 1_000_000
+_N_FOLDS = 5
 
 
-def fold_of(key_col: str, n_folds: int) -> F.Column:
-    """Deterministic fold id in [0, n_folds) from md5 of the row key."""
-    return F.pmod(_hash_point(F.col(key_col), "oof"), F.lit(n_folds))
+def fold_of(key_col: str) -> F.Column:
+    """Deterministic fold id in [0, _N_FOLDS) from md5 of the row key."""
+    return F.pmod(_hash_point(F.col(key_col), "oof"), F.lit(_N_FOLDS))
 
 
-def fold_of_sql(key_expr: str, n_folds: int) -> str:
+def fold_of_sql(key_expr: str) -> str:
     """DuckDB twin of fold_of (md5 first-8-hex → mod 1e6 → mod folds)."""
     h = (
         f"CAST(('0x' || substr(md5(CAST({key_expr} AS VARCHAR) || ':oof'"
         f"), 1, 8)) AS BIGINT)"
     )
-    return f"(({h} % {_SCALE}) % {n_folds})"
+    return f"(({h} % {_SCALE}) % {_N_FOLDS})"
 
 
 def target_encode_oof(
@@ -62,7 +63,7 @@ def target_encode_oof(
     base = df.select(
         F.col(cat_col).alias("category"),
         F.col(target_int_col).cast("long").alias("t"),
-        fold_of(key_col, 5).alias("fold"),
+        fold_of(key_col).alias("fold"),
     )
     per_fold = base.groupBy("category", "fold").agg(
         F.sum("t").alias("f_sum"), F.count(F.lit(1)).alias("f_cnt")
@@ -119,7 +120,7 @@ def target_encode_oof_sql(
     key_expr: str,
 ) -> str:
     """DuckDB twin of target_encode_oof."""
-    fold = fold_of_sql(key_expr, 5)
+    fold = fold_of_sql(key_expr)
     return f"""
 WITH base AS (
   SELECT {cat_expr} AS category, CAST({target_int_expr} AS BIGINT) AS t,

@@ -275,7 +275,7 @@ def lsh_topk(
             dots = _exact_matmul(qm[qidx], pm_rows.T)
             for row, qi in enumerate(qidx.tolist()):
                 acc.setdefault(qi, []).append((dots[row], pids))
-        yield _emit_topk(acc, q_ids, "qid", "pid", k)
+        yield _emit_topk(acc, q_ids, k)
 
     return _topk_scored_candidates(
         spread_input(corpus.select("pid", "pvec")), kernel, "qid", "pid", k
@@ -308,7 +308,7 @@ def _np_bucket_groups(it, pid: str, pvec: str, w_mat, probe_map):
             yield qidx, pids[sel], pm[sel]
 
 
-def _emit_topk(acc, q_ids, qid: str, pid: str, k: int):
+def _emit_topk(acc, q_ids, k: int):
     """Prune accumulated per-query candidate slabs to the partition-local
     top-k by (dot desc, pid asc), excluding self pairs."""
     import numpy as np
@@ -328,8 +328,8 @@ def _emit_topk(acc, q_ids, qid: str, pid: str, k: int):
         out_d.extend(dots[order])
     return pd.DataFrame(
         {
-            qid: np.asarray(out_q, dtype=np.int64),
-            pid: np.asarray(out_p, dtype=np.int64),
+            "qid": np.asarray(out_q, dtype=np.int64),
+            "pid": np.asarray(out_p, dtype=np.int64),
             "dot": np.asarray(out_d, dtype=np.int64),
         }
     )
@@ -412,7 +412,7 @@ def ivf_topk(
         q_ids, qm, cm, probe_map = bc.value
         acc: dict[int, list] = {}
         if cm.shape[0] == 0 or not probe_map:
-            yield _emit_topk(acc, q_ids, "qid", "pid", k)
+            yield _emit_topk(acc, q_ids, k)
             return
         for pdf in it:
             if len(pdf) == 0:
@@ -433,7 +433,7 @@ def ivf_topk(
                 dots = _exact_matmul(qm[qidx], pm[sel].T)
                 for row, qi in enumerate(qidx.tolist()):
                     acc.setdefault(qi, []).append((dots[row], pids[sel]))
-        yield _emit_topk(acc, q_ids, "qid", "pid", k)
+        yield _emit_topk(acc, q_ids, k)
 
     return _topk_scored_candidates(
         spread_input(corpus.select("pid", "pvec")), kernel, "qid", "pid", k

@@ -11,10 +11,10 @@ Spark-first design (replaces geopandas STRtree sjoin):
   2. equi-join observations to the broadcast buckets on cell id — this is
      the coarse index, and the fact table never shuffles; a bbox test
      prunes the candidates;
-  3. exact refine: a pure-JVM convex sign test for convex footprints, and
-     an Arrow-batched ray-cast pandas UDF (numpy per unique polygon within
-     each batch) only for concave ones (pip_join(exact=False) stops at the
-     bbox test);
+  3. exact refine: an even-odd ray cast over the ring's edges, written as
+     one Catalyst higher-order expression (`aggregate` over the vertex
+     indices), so convex and concave footprints alike refine in the JVM
+     with no Python worker (pip_join(exact=False) stops at the bbox test);
   4. group matches back per observation (array_sort for deterministic
      candidate order — J2's tie-break depends on it).
 
@@ -26,119 +26,39 @@ which is keyed by obs_id and benefits from AQE coalescing.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
 from ..functions.geo import cell_id, cell_of
 
 DEFAULT_PIP_RES = 7  # cell size 180/2^7 = 1.40625° ≥ one MGRS tile footprint
 
 
-def point_in_polygon(px: np.ndarray, py: np.ndarray, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
-    """Vectorized ray-casting: points (px,py) inside polygon (xs,ys).
-
-    Standard even-odd rule, half-open edges (matches shapely 'within' for
-    interior points; boundary points are implementation-defined in the
-    reference too).
-    """
-    inside = np.zeros(px.shape[0], dtype=bool)
-    n = len(xs)
-    x1, y1 = xs[n - 1], ys[n - 1]
-    for i in range(n):
-        x2, y2 = xs[i], ys[i]
-        if y1 != y2:
-            cross = ((y1 > py) != (y2 > py)) & (
-                px < (x2 - x1) * (py - y1) / (y2 - y1) + x1
-            )
-            inside ^= cross
-        x1, y1 = x2, y2
-    return inside
-
-
-@pandas_udf(BooleanType())
-def pip_udf(
-    gid1: pd.Series,
-    gid2: pd.Series,
-    px: pd.Series,
-    py: pd.Series,
-    xs: pd.Series,
-    ys: pd.Series,
-) -> pd.Series:
-    """Exact PIP refine (general polygons); batches are grouped by the
-    polygon's 128-bit id (two scalar halves, so the pandas groupby stays
-    1-dimensional) — each unique polygon is tested against all its
-    candidate points in one vectorized pass (grouping on the cheap scalar
-    keys, not on serialized vertex bytes)."""
-    out = np.zeros(len(px), dtype=bool)
-    pxv = px.to_numpy(dtype=np.float64)
-    pyv = py.to_numpy(dtype=np.float64)
-    for _, idx in pd.Series(range(len(px))).groupby([gid1, gid2]).groups.items():
-        ii = np.asarray(idx)
-        poly_x = np.asarray(xs.iloc[ii[0]], dtype=np.float64)
-        poly_y = np.asarray(ys.iloc[ii[0]], dtype=np.float64)
-        out[ii] = point_in_polygon(pxv[ii], pyv[ii], poly_x, poly_y)
-    return pd.Series(out)
-
-
-def convex_inside(px, py, xs, ys):
-    """All-JVM containment test for a CONVEX polygon: the point is inside
-    iff every edge cross product (v[i+1]−v[i]) × (p−v[i]) is sign-consistent
-    (zero crosses — duplicated/collinear vertices from densified rings, or
-    points exactly on an edge line — do not vote; an outside point is
-    always excluded by some other edge's half-plane). Boundary-inclusive,
-    vs the ray-cast's half-open rule — a measure-zero difference on float
-    coordinates. Pure Catalyst column expressions (array higher-order
-    functions) — no Python worker, no Arrow IPC. Handles both open rings
-    [v1..vn] and closed rings [v1..vn,v1].
-
-    This is the scale path for this domain: every granule footprint is a
-    convex quad (reference footprints are projected tile rectangles,
-    stac_utils.py:116-154), so the ray-cast UDF is only needed for general
-    concave polygons.
-    """
+def _ray_cast_inside(px: Column, py: Column, xs: Column, ys: Column) -> Column:
+    """Even-odd ray cast of point (px, py) against ring (xs, ys), as one
+    Catalyst expression (an `aggregate` over the vertex indices; no Python
+    worker, no Arrow IPC). Each edge runs the numpy ray cast's operations
+    in the same order: skip an edge with y1 == y2 (so no division by zero),
+    test (y1 > py) != (y2 > py), then px < (x2 - x1) * (py - y1) / (y2 - y1)
+    + x1. IEEE doubles on the JVM therefore give the numpy answer bit for
+    bit, boundary points included, for open rings [v1..vn], closed rings
+    [v1..vn, v1], convex and concave alike. A null or empty ring contains
+    nothing."""
     n = F.size(xs)
-    closed = (F.element_at(xs, n) == F.element_at(xs, F.lit(1))) & (
-        F.element_at(ys, n) == F.element_at(ys, F.lit(1))
-    )
-    n_eff = F.when(closed, n - 1).otherwise(n)
 
-    def _cross(i):
-        j = F.when(i == n_eff, F.lit(1)).otherwise(i + 1)
-        xi, yi = F.element_at(xs, i), F.element_at(ys, i)
-        xj, yj = F.element_at(xs, j), F.element_at(ys, j)
-        return (xj - xi) * (py - yi) - (yj - yi) * (px - xi)
+    def _flip(inside, i):
+        j = F.when(i == 1, n).otherwise(i - 1)  # edge v[j] -> v[i], v[n] -> v[1] first
+        x1, y1 = F.element_at(xs, j), F.element_at(ys, j)
+        x2, y2 = F.element_at(xs, i), F.element_at(ys, i)
+        cross = F.when(
+            y1 != y2,
+            ((y1 > py) != (y2 > py)) & (px < (x2 - x1) * (py - y1) / (y2 - y1) + x1),
+        ).otherwise(F.lit(False))
+        return inside != cross
 
-    crosses = F.transform(F.sequence(F.lit(1), n_eff), _cross)
-    return F.forall(crosses, lambda c: c >= 0) | F.forall(crosses, lambda c: c <= 0)
-
-
-def ring_is_convex(xs, ys):
-    """Column expression: True iff the ring's consecutive edge turns are
-    sign-consistent (convex). Zero turns (duplicated/collinear vertices)
-    don't vote. pip_join's exact refine uses it to route each footprint
-    to the JVM convex test or the general ray-cast UDF."""
-    n = F.size(xs)
-    closed = (F.element_at(xs, n) == F.element_at(xs, F.lit(1))) & (
-        F.element_at(ys, n) == F.element_at(ys, F.lit(1))
-    )
-    n_eff = F.when(closed, n - 1).otherwise(n)
-
-    def _wrap(i):
-        return F.when(i > n_eff, i - n_eff).otherwise(i)
-
-    def _turn(i):
-        j, k = _wrap(i + 1), _wrap(i + 2)
-        xi, yi = F.element_at(xs, i), F.element_at(ys, i)
-        xj, yj = F.element_at(xs, j), F.element_at(ys, j)
-        xk, yk = F.element_at(xs, k), F.element_at(ys, k)
-        return (xj - xi) * (yk - yj) - (yj - yi) * (xk - xj)
-
-    turns = F.transform(F.sequence(F.lit(1), n_eff), _turn)
-    return F.forall(turns, lambda c: c >= 0) | F.forall(turns, lambda c: c <= 0)
+    return F.when(
+        n > 0, F.aggregate(F.sequence(F.lit(1), n), F.lit(False), _flip)
+    ).otherwise(F.lit(False))
 
 
 def bucket_polygons(catalog: DataFrame) -> DataFrame:
@@ -175,18 +95,12 @@ def pip_join(
 
     The bucketed catalog (dim side) is broadcast to the point scan. exact
     selects the refine stage after the cell-bucket + bbox prune:
-      True (default) — probe the (small, dim-side) catalog once: if every
-          footprint ring is convex — the real-world case; HLS/S2 granule
-          footprints are 5-point projected-rectangle rings — refine with the
-          pure-JVM convex sign test (no Python worker, no Arrow IPC). If any
-          ring is concave, convex footprints still take the JVM path and
-          only concave ones go through the even-odd ray-cast pandas UDF
-          (split-union).
+      True (default) — the even-odd ray cast (_ray_cast_inside), one
+          Catalyst expression for every footprint, convex or concave: no
+          Python worker, no Arrow IPC, and no job while the plan is built.
+          Its answers equal the numpy ray cast's bit for bit, boundary
+          points included.
       False — stop at the bbox test (footprints known to be rectangles).
-
-    The probe is one tiny aggregate on the catalog (dim side, ≤ millions
-    of rows) — negligible next to the fact-side join it speeds up ~100×
-    by keeping the refine inside whole-stage codegen.
 
     Footprint dedup: catalogs routinely carry MANY granules per identical
     footprint (every revisit of a tile shares its polygon — 240× for a
@@ -207,18 +121,10 @@ def pip_join(
     with_fp = catalog.withColumn("_fp_id", _fp_identity())
     fp_granules = with_fp.select("_fp_id", "granule_id")
     cat = with_fp.select("_fp_id", *geom).distinct()
-    any_concave = False
-    if exact:
-        cat = cat.withColumn(
-            "_convex", ring_is_convex(F.col("fp_xs"), F.col("fp_ys"))
-        )
-        any_concave = not cat.filter(~F.col("_convex")).isEmpty()
-        if not any_concave:
-            cat = cat.drop("_convex")
 
     buckets = F.broadcast(bucket_polygons(cat))
     # spread a few-row-group local scan before the broadcast join: the
-    # candidate join + convex refine is per-point compute that a 1-6 task
+    # candidate join + exact refine is per-point compute that a 1-6 task
     # scan would serialize (guide §2.5 input skew; no-op when the fact
     # side is already well-partitioned — the cluster case)
     from ..functions.text import spread_input
@@ -232,22 +138,9 @@ def pip_join(
         & (F.col("y") >= F.col("fp_miny"))
         & (F.col("y") <= F.col("fp_maxy"))
     )
-    _sql_test = convex_inside(F.col("x"), F.col("y"), F.col("fp_xs"), F.col("fp_ys"))
-    if exact and not any_concave:
-        j = j.filter(_sql_test)
-    elif exact:
-        # JVM path for convex footprints; Python refine only for the
-        # concave remainder — at scale the concave branch is empty or tiny
-        _udf_test = pip_udf(
-            F.col("_fp_id.h1"),
-            F.col("_fp_id.h2"),
-            F.col("x"),
-            F.col("y"),
-            F.col("fp_xs"),
-            F.col("fp_ys"),
-        )
-        j = j.filter(F.col("_convex")).filter(_sql_test).unionByName(
-            j.filter(~F.col("_convex")).filter(_udf_test)
+    if exact:
+        j = j.filter(
+            _ray_cast_inside(F.col("x"), F.col("y"), F.col("fp_xs"), F.col("fp_ys"))
         )
     if not expand_granules:
         return j.select(obs_id, "_fp_id")

@@ -276,7 +276,7 @@ SELECT qid, pid, dist, rank FROM (
 
 
 def q07_pip_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1: exact point-in-polygon join (ray-casting UDF) against diamond
+    """J1: exact point-in-polygon join (JVM ray cast) against diamond
     footprints; the SQL twin uses the closed-form manhattan predicate."""
     part = _t(spark, sf_dir, "part")
     cx = (F.col("p_partkey") * 17) % 3400 / 10.0 - 170.0
@@ -2364,10 +2364,12 @@ def q60_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_adc_topk(_t(spark, sf_dir, "embeddings"))
 
 
-def _pq_sql(m: int, k: int, n_iters: int) -> str:
+def _pq_sql() -> str:
     """Unrolled DuckDB twin of pq_adc_topk: per subspace, the _kmeans_sql
     Lloyd rounds on the sliced vectors, a final code assignment, the
-    query's ADC table, then the summed-score top-k."""
+    query's ADC table, then the summed-score top-k. Same fixed shape: m = 4
+    subspaces of a 64-dim vector, k = 8 codewords, 2 Lloyd iterations."""
+    m, k, n_iters = 4, 8, 2
     sub = 64 // m
     parts = ["""WITH v AS (
   SELECT vec_id,
@@ -2451,7 +2453,7 @@ ORDER BY adc_score DESC, vec_id ASC LIMIT 10""")
     return "".join(parts)
 
 
-Q60_SQL = _pq_sql(4, 8, 2)
+Q60_SQL = _pq_sql()
 
 QUERIES["q60_pq_adc_topk"] = q60_pq_adc_topk
 ORACLES["q60_pq_adc_topk"] = Q60_SQL

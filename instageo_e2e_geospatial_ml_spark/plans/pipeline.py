@@ -56,24 +56,30 @@ def build_records(
     """observations × granule catalog → valid records with granule sets.
 
     The prepared obs table feeds three branches (temporal expansion, the
-    PIP join, the final re-join); a localCheckpoint materializes it once
-    instead of re-running the MGRS UDF + density filter per branch. It is
-    eager because the branches' stages run concurrently and would race a
-    lazy checkpoint's lineage truncation. The checkpoint lives exactly as
-    long as the returned frame (no cache entry outlives a micro-batch of
-    run_chip_pipeline_streaming), and its truncated lineage pins obs_id:
-    a monotonically_increasing_id can never be recomputed differently for
+    PIP join, the final re-join), so it is materialized once, in two eager
+    localCheckpoints: the first holds the MGRS tile ids and obs_id, the
+    second the density-filtered rows. One checkpoint over both would
+    evaluate the MGRS UDF four times: the count join makes Catalyst infer
+    isnotnull(mgrs_udf(x, y)) and run the UDF twice in each of its two
+    branches. Leaving the density filter lazy on top of the first
+    checkpoint would plan its count aggregate and broadcast into every
+    branch and into pip_join's partition probe, which runs them once more
+    while the plan is built. The checkpoints are eager because the
+    branches' stages run concurrently and would race a lazy checkpoint's
+    lineage truncation. They live exactly as long as the returned frame
+    (no cache entry outlives a micro-batch of
+    run_chip_pipeline_streaming), and the truncated lineage pins obs_id: a
+    monotonically_increasing_id can never be recomputed differently for
     one branch. The as-of pick runs
     without the null-preserving join-back (validity_filter drops
     incomplete sequences anyway) and with its shuffle aligned on obs_id
     so the rank window and the per-obs regroup share one exchange.
     """
-    o = normalize_dates(obs, shift_to_month_start=cfg.shift_to_month_start)
-    o = assign_tiles(o)
-    o = density_filter(o, cfg.min_count, keep_counts=False)
+    o = assign_tiles(normalize_dates(obs, shift_to_month_start=cfg.shift_to_month_start))
     o = o.withColumn("obs_id", F.monotonically_increasing_id()).localCheckpoint(
         eager=True
     )
+    o = density_filter(o, cfg.min_count, keep_counts=False).localCheckpoint(eager=True)
 
     steps = expand_temporal_steps(
         o, num_steps=cfg.num_steps, temporal_step=cfg.temporal_step

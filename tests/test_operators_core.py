@@ -21,7 +21,6 @@ from instageo_e2e_geospatial_ml_spark.operators.knn import knn_join
 from instageo_e2e_geospatial_ml_spark.operators.spatial_join import (
     candidate_lists,
     pip_join,
-    point_in_polygon,
 )
 from instageo_e2e_geospatial_ml_spark.operators.split import split_dataset
 from instageo_e2e_geospatial_ml_spark.operators.tileinfo import tile_info
@@ -92,6 +91,29 @@ def test_expand_temporal_steps(spark):
         dt.datetime(2022, 6, 3),
         dt.datetime(2022, 5, 29),
     ]
+
+
+def point_in_polygon(px: np.ndarray, py: np.ndarray, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
+    """Vectorized ray-casting: points (px,py) inside polygon (xs,ys).
+
+    Standard even-odd rule, half-open edges (matches shapely 'within' for
+    interior points; boundary points are implementation-defined in the
+    reference too). The numpy oracle of pip_join's exact refine.
+    """
+    inside = np.zeros(px.shape[0], dtype=bool)
+    n = len(xs)
+    if n == 0:
+        return inside
+    x1, y1 = xs[n - 1], ys[n - 1]
+    for i in range(n):
+        x2, y2 = xs[i], ys[i]
+        if y1 != y2:
+            cross = ((y1 > py) != (y2 > py)) & (
+                px < (x2 - x1) * (py - y1) / (y2 - y1) + x1
+            )
+            inside ^= cross
+        x1, y1 = x2, y2
+    return inside
 
 
 def test_point_in_polygon_numpy():
@@ -211,6 +233,83 @@ def test_knn_join_exact_vs_bruteforce(spark):
         assert got["pid"].tolist() == cand["pid"].tolist(), q["qid"]
 
 
+def test_pip_join_boundary_parity_with_numpy(spark):
+    # points on vertices, on horizontal, vertical, sloped and closing
+    # edges and on duplicated vertices: pip_join's pairs equal the numpy
+    # ray cast's bit for bit, for open and closed rings, a notched concave
+    # ring, an empty ring and a null ring (these two match nothing)
+    sq_x, sq_y = [0.0, 2.0, 2.0, 0.0], [0.0, 0.0, 2.0, 2.0]
+    notch_x = [0.0, 4.0, 4.0, 2.0, 2.0, 0.0]  # notch vertex (2, 2) duplicated
+    notch_y = [0.0, 0.0, 4.0, 2.0, 2.0, 4.0]
+    tri_x, tri_y = [0.0, 3.0, 1.0], [0.0, 1.0, 3.0]  # closing edge (1,3)->(0,0)
+    rings = {
+        "sq_open": (sq_x, sq_y),
+        "sq_closed": (sq_x + sq_x[:1], sq_y + sq_y[:1]),
+        "notch_open": (notch_x, notch_y),
+        "notch_closed": (notch_x + notch_x[:1], notch_y + notch_y[:1]),
+        "tri_open": (tri_x, tri_y),
+        "tri_closed": (tri_x + tri_x[:1], tri_y + tri_y[:1]),
+        "empty": ([], []),
+        "null": (None, None),
+    }
+    cat_pdf = pd.DataFrame(
+        [
+            {
+                "granule_id": g, "fp_xs": xs, "fp_ys": ys,
+                "fp_minx": min(xs or [0.0]), "fp_maxx": max(xs or [4.0]),
+                "fp_miny": min(ys or [0.0]), "fp_maxy": max(ys or [4.0]),
+            }
+            for g, (xs, ys) in rings.items()
+        ]
+    )
+    pts = [
+        (0.0, 0.0), (2.0, 0.0), (2.0, 2.0), (0.0, 2.0), (4.0, 4.0), (0.0, 4.0),
+        (4.0, 0.0), (3.0, 1.0), (1.0, 3.0),  # vertices
+        (1.0, 0.0), (3.0, 0.0), (1.0, 2.0), (0.5, 2.0),  # horizontal edges
+        (2.0, 1.0), (0.0, 1.0), (4.0, 2.0), (0.0, 3.0),  # vertical edges
+        (3.0, 3.0), (1.0, 3.0 + 1e-12), (2.0, 2.0 - 1e-12),  # notch edges
+        (1.5, 0.5), (0.5, 1.5), (2.0, 2.0 / 3.0), (2.0, 1.5),  # sloped + closing
+        (1.0, 1.0), (3.0, 2.5), (1.0, 2.5), (2.0, 3.0), (5.0, 1.0), (-1.0, 1.0),
+    ]
+    obs_pdf = pd.DataFrame(
+        {"obs_id": range(len(pts)), "x": [p[0] for p in pts], "y": [p[1] for p in pts]}
+    )
+    catalog = spark.createDataFrame(
+        cat_pdf,
+        "granule_id string, fp_xs array<double>, fp_ys array<double>, "
+        "fp_minx double, fp_maxx double, fp_miny double, fp_maxy double",
+    )
+    got = {
+        (r["obs_id"], r["granule_id"])
+        for r in pip_join(spark.createDataFrame(obs_pdf), catalog).collect()
+    }
+    want = _numpy_pip_pairs(obs_pdf, cat_pdf[cat_pdf["fp_xs"].notna()])
+    assert want and not {g for _, g in want} & {"empty", "null"}
+    assert got == want
+
+
+def test_pip_join_builds_without_a_job(spark, tmp_path):
+    # building the join plans it and nothing more: no probe job runs
+    # until the caller consumes the frame (a file-backed catalog, since
+    # the optimizer folds filters over a local relation without a job)
+    path = str(tmp_path / "catalog")
+    spark.createDataFrame(
+        synth.gen_granule_catalog_pdf(days=10, every=5, notch=True)
+    ).write.parquet(path)
+    catalog = spark.read.parquet(path)
+    obs = spark.createDataFrame(pd.DataFrame({"obs_id": [1], "x": [44.6], "y": [15.1]}))
+    sc = spark.sparkContext
+    group = "pip-join-build"
+    sc.setJobGroup(group, "build pip_join")
+    try:
+        out = pip_join(obs, catalog)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert {r["obs_id"] for r in out.collect()} == {1}
+
+
 def test_split_dataset_fractions(spark):
     obs = synth.gen_observations_pdf(n_extra_per_tile=50)
     df = spark.createDataFrame(obs)
@@ -240,10 +339,9 @@ def _numpy_pip_pairs(obs_pdf, cat_pdf):
 
 
 def test_convex_sql_matches_raycast(spark):
-    # the JVM-side convex sign test (what pip_join runs on an all-convex
-    # catalog) must agree with the numpy ray cast on convex quads (the
-    # only footprint shape in this domain) — including closed rings
-    # ([v1..v4,v1]) and points outside the hull
+    # pip_join's JVM ray cast must agree with the numpy ray cast on convex
+    # quads (the real-world footprint shape), as open rings and as closed
+    # rings ([v1..v4,v1]), and for points outside the hull
     rng = np.random.default_rng(7)
     polys = []
     for g in range(40):
@@ -281,9 +379,9 @@ def test_convex_sql_matches_raycast(spark):
 
 
 def test_auto_pip_plan_is_jvm_only_for_convex_quads(spark):
-    # real-world footprints are 5-point convex rings: 'auto' must detect
-    # that and refine without crossing the Python boundary (no
-    # ArrowEvalPython / BatchEvalPython node in the plan)
+    # real-world footprints are 5-point convex rings: the refine must not
+    # cross the Python boundary (no ArrowEvalPython / BatchEvalPython
+    # node in the plan)
     catalog = spark.createDataFrame(
         pd.DataFrame(
             [
@@ -306,8 +404,8 @@ def test_auto_pip_plan_is_jvm_only_for_convex_quads(spark):
 
 
 def test_auto_pip_mixed_catalog_matches_raycast(spark):
-    # notched (concave) synth footprints must route through the ray-cast
-    # refine and agree with the numpy ray cast over every pair
+    # notched (concave) synth footprints refine in the JVM too, and agree
+    # with the numpy ray cast over every pair
     cat = synth.gen_granule_catalog_pdf(days=10, every=5, notch=True)
     catalog = spark.createDataFrame(cat)
     rng = np.random.default_rng(3)
@@ -321,7 +419,7 @@ def test_auto_pip_mixed_catalog_matches_raycast(spark):
     )
     obs = spark.createDataFrame(pts)
     plan = pip_join(obs, catalog)._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan  # the concave footprints' refine
+    assert "EvalPython" not in plan  # concave footprints stay in the JVM
     auto_pairs = {
         (r["obs_id"], r["granule_id"]) for r in pip_join(obs, catalog).collect()
     }

@@ -4,7 +4,7 @@ around must be visible in the executed plans, not just intended.
 Each test pins one plan property that matters at 100 TB:
   * filter pushdown reaches the parquet scan (PushedFilters);
   * dim-side joins broadcast (BroadcastHashJoin / BroadcastNestedLoop);
-  * the PIP refine stays JVM-side for convex catalogs (no EvalPython);
+  * the PIP refine stays JVM-side for every catalog (no EvalPython);
   * aggregations partial-aggregate map-side (two HashAggregate levels);
   * kNN rank uses the WindowGroupLimit pushdown (Spark 3.5+) rather than
     ranking every candidate row.
@@ -46,7 +46,63 @@ def test_q01_partial_aggregation(spark):
 def test_q07_pip_join_broadcast_and_jvm(spark):
     plan = _plan(dq.QUERIES["q07_pip_polygon"](spark, SF))
     assert "Broadcast" in plan  # dim side broadcast, fact side not shuffled
-    assert "EvalPython" not in plan  # convex refine stays in the JVM
+    assert "EvalPython" not in plan  # the ray-cast refine stays in the JVM
+
+
+def test_build_records_runs_mgrs_udf_once(spark):
+    """build_records' first eager checkpoint evaluates the MGRS UDF in one
+    ArrowEvalPython node (the density filter's join, if checkpointed with
+    it, makes Catalyst infer isnotnull(mgrs_udf(x, y)) and run the UDF
+    twice in each branch), and no later plan evaluates it again. Building
+    the records runs its checkpoints' jobs and nothing else (a density
+    filter left lazy above a checkpoint is run once more by pip_join's
+    partition probe, outside any SQL execution)."""
+    from instageo_e2e_geospatial_ml_spark import synth
+    from instageo_e2e_geospatial_ml_spark.plans.pipeline import (
+        ChipPipelineConfig,
+        build_records,
+    )
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def _jlist(seq):
+        return list(sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(seq))
+
+    before = {e.executionId() for e in _jlist(store.executionsList())}
+    obs = spark.createDataFrame(
+        synth.gen_observations_pdf(n_extra_per_tile=10).drop(columns=["mgrs_tile_id"])
+    )
+    catalog = spark.createDataFrame(synth.gen_granule_catalog_pdf(days=60, every=5))
+    sc.setLocalProperty("spark.jobGroup.id", "build_records")  # keeps the descriptions
+    try:
+        records = build_records(obs, catalog, ChipPipelineConfig(min_count=3))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    checkpoint_jobs = {
+        j
+        for e in _jlist(store.executionsList())
+        if e.executionId() not in before and e.description().startswith("localCheckpoint")
+        for j in _jlist(e.jobs().keys().toSeq())
+    }
+    build_jobs = set(sc.statusTracker().getJobIdsForGroup("build_records"))
+    assert build_jobs and build_jobs <= checkpoint_jobs, (build_jobs, checkpoint_jobs)
+    assert records.count() > 0
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    mgrs_nodes = {}
+    for e in _jlist(store.executionsList()):
+        if e.executionId() in before:
+            continue
+        nodes = _jlist(store.planGraph(e.executionId()).allNodes())
+        mgrs_nodes[e.executionId()] = (
+            e.description(),
+            [n.name() for n in nodes if "mgrs_udf" in n.desc()],
+        )
+    first, *later = sorted(mgrs_nodes)
+    assert mgrs_nodes[first][0].startswith("localCheckpoint")
+    assert mgrs_nodes[first][1] == ["ArrowEvalPython"]
+    assert all(not mgrs_nodes[i][1] for i in later), mgrs_nodes
 
 
 def test_knn_window_group_limit(spark):
@@ -923,7 +979,7 @@ def test_cap_per_domain_salted_skew(spark):
     df = spark.createDataFrame(rows, "doc_id long, domain string")
     cap, n_salt = 5, 8
 
-    pre = _pre_cap_salted(df, cap, "domain", "doc_id", n_salt)
+    pre = _pre_cap_salted(df, cap, n_salt)
     per_dom = pre.groupBy("domain").count().collect()
     assert all(r["count"] <= n_salt * cap for r in per_dom)
     # the hot domain really was pre-capped (2000 rows -> <= 40)
